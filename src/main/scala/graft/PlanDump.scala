@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named bench queries to files —
   * the optimization-round evidence artifact (plans/r09/<q>_<tag>.txt).
@@ -15,14 +14,7 @@ object PlanDump {
     require(args.length == 4,
       "usage: PlanDump <sfDir> <outDir> <tag> <q1,q2,...|all>")
     val Array(sfDir, outDir, tag, qlist) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.registry()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val all = SparkEntry.benchQueries

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Analysis-only preflight over every declared query: constructs each
   * `SparkEntry.queries` thunk against a sf dir and forces schema resolution
   * (Catalyst analysis, no execution). Turns the round-7 failure class —
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Preflight {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.registry()
     spark.sparkContext.setLogLevel("ERROR")
     var failed = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -40,17 +40,23 @@ import org.apache.spark.sql.functions._
   *    and only unreferenced garbage behind; a crash after it leaves the
   *    new snapshot fully committed. Readers always resolve the
   *    highest-numbered manifest, so they never observe a partial commit;
-  *  - garbage (orphaned generations, superseded manifests) is deleted
-  *    AFTER commit and re-collected opportunistically on the next write,
-  *    so a crash mid-GC only wastes space, never data;
+  *  - garbage (superseded manifests and generations) is deleted AFTER
+  *    commit and re-collected opportunistically on the next write, so a
+  *    crash mid-GC only wastes space, never data. Orphans no manifest
+  *    names (a crashed or losing writer's staging) are collected only
+  *    once older than `OrphanGraceMs`: younger ones may be a concurrent
+  *    writer's generation in flight;
   *  - GC retains the last `keepManifests` manifests AND the generations
   *    they reference (grace window), so a concurrent reader that resolved
   *    the previous manifest survives a commit landing mid-scan; long scans
   *    pin explicitly via `manifestVersion` + `readAt`.
   *
-  * Single-writer, like the reference's snapshot lock protocol
+  * Designed single-writer, like the reference's snapshot lock protocol
   * (snapshot_lock.py:13-47); concurrent readers never observe a torn
   * commit, and the retention window above closes the reader-vs-GC race.
+  * Two racing writers are safe but not both served: the one whose
+  * manifest rename lands second fails with an IllegalStateException and
+  * commits nothing.
   *
   * With numBuckets sized so a bucket fits an executor (e.g. 65536 buckets
   * for a 100 TB snapshot → ~1.6 GB/bucket), a 0.1% delta touches ~0.1% of
@@ -71,6 +77,10 @@ class BucketedSnapshotStore(
     s"keyBloomFpp must be in [0,1), got $keyBloomFpp")
 
   private val BucketCol = "__gs_bucket"
+  /** Age after which a generation or staged manifest that no retained
+    * manifest names is garbage rather than a concurrent writer's work in
+    * flight — longer than any one generation write. */
+  private val OrphanGraceMs = 60L * 60 * 1000
 
   def path(name: String): Path = new Path(dir, s"$name.snapshot.bucketed")
   private def fs: FileSystem =
@@ -142,8 +152,10 @@ class BucketedSnapshotStore(
       .map { case (b, g) => s"$b\t$g" }.mkString("\n").getBytes("UTF-8"))
     finally out.close()
     val dest = new Path(root, f"manifest-$version%012d")
-    if (!fs.rename(tmp, dest))
+    if (!fs.rename(tmp, dest)) {
+      fs.delete(tmp, false)
       throw new IllegalStateException(s"manifest commit failed: $dest already exists")
+    }
   }
 
   /** Delete superseded manifests and the generations only they reference,
@@ -155,22 +167,24 @@ class BucketedSnapshotStore(
     * `readAt`/`manifestVersion` and size `keepManifests` to their scan
     * time × write rate). Safe to crash anywhere in here: everything
     * deleted is unreferenced by the retained manifests, and leftovers are
-    * re-collected next write. */
+    * orphans, collected once older than `OrphanGraceMs`. */
   private def gc(root: Path): Unit = {
     val manifests = allManifests(root)
-    if (manifests.isEmpty) return
-    val retained = manifests.sortBy(_._1).takeRight(keepManifests)
-    val keepNames = retained.map { case (v, _) => f"manifest-$v%012d" }.toSet
-    val live = retained.flatMap { case (_, p) =>
-      readManifestAt(p)._2.values
-    }.toSet
+    val (expired, retained) = manifests.splitAt(manifests.size - keepManifests)
+    // a concurrent writer's GC may delete manifests under us: an expired
+    // one gone is its work done; a retained one gone means it has a newer
+    // view, so the collection is left to it
+    def gens(ms: Seq[(Long, Path)]): Option[Set[String]] =
+      scala.util.Try(ms.flatMap { case (_, p) => readManifestAt(p)._2.values }.toSet).toOption
+    val live = gens(retained).getOrElse(return)
+    val superseded = expired.flatMap(m => gens(Seq(m)).getOrElse(Set.empty[String])).toSet -- live
+    val orphanedBefore = System.currentTimeMillis() - OrphanGraceMs
+    expired.foreach { case (_, p) => fs.delete(p, false) }
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
-      val dead =
-        (n.startsWith("gen-") && !live.contains(n)) ||
-        (n.startsWith("manifest-") && !keepNames.contains(n)) ||
-        n.startsWith(".manifest-tmp-")
-      if (dead) fs.delete(st.getPath, true)
+      val orphan = st.getModificationTime < orphanedBefore &&
+        ((n.startsWith("gen-") && !live.contains(n)) || n.startsWith(".manifest-tmp-"))
+      if (superseded.contains(n) || orphan) fs.delete(st.getPath, true)
     }
   }
 

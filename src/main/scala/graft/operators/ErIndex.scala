@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * content?", this answers "which real-world entity is this record?" and
   * hands back a stable cluster id.
   *
-  * ONE table (`recs`) in a prefix-bucketed [[BucketedSnapshotStore]]:
+  * ONE table (`recs`, payload-free postings) in a [[PostingsIndex]]:
   * (pass, bkey, id, attrs…, cluster), pk (pass, bkey, id), bucketed on
   * (pass, bkey). The comparison attributes are DENORMALIZED onto the
   * blocking-key postings: a probe reads only the buckets the batch's
@@ -61,10 +61,9 @@ class ErIndex(
   require(fields.nonEmpty && blockKeys.nonEmpty,
     "fields and blockKeys must be non-empty")
 
-  private val Recs = "recs"
   private val attrCols: Seq[String] = fields.map(_.column).distinct
-  private val store = new BucketedSnapshotStore(spark, dir,
-    numBuckets = numBuckets, bucketPrefixLen = 2)
+  private val ix = new PostingsIndex(spark, dir, numBuckets, postings = "recs",
+    keyCols = Seq("pass", "bkey"), idCol = "id", maxKeySize = maxBlockSize)
 
   /** One row per (pass, blocking key) per record, attrs + extras riding. */
   private def keyed(df: DataFrame, idCol: String, extras: Seq[Column]): DataFrame =
@@ -82,40 +81,36 @@ class ErIndex(
     val own = batch.select(col(idCol).cast("long").as("inc_id"))
       .select(col("inc_id"), col("inc_id").as("cluster"),
         lit(false).as("matched"), lit(null).cast("long").as("score_micro"))
-    if (!store.exists(Recs)) return own.localCheckpoint(true)
-    val bk = keyed(batch, idCol, Nil)
-      .select("pass", "bkey", "id").localCheckpoint(true)
-    val hist = store.readForKeys(Recs, bk.select("pass", "bkey"),
-      Seq("pass", "bkey"))
-    val okHist = hist
-      .withColumn("__m", count(lit(1)).over(Window.partitionBy("pass", "bkey")))
-      .filter(col("__m") <= maxBlockSize)
-    // candidates arrive WITH the history attributes + cluster; a record
-    // reached through both passes collapses (identical attr payload)
-    val cand = bk.join(okHist.withColumnRenamed("id", "hist_id"),
-        Seq("pass", "bkey"))
-      .select((Seq(col("id").as("id_a"), col("hist_id").as("id_b")) ++
-        attrCols.map(col) ++ Seq(col("cluster"))): _*)
-      .distinct()
-      .localCheckpoint(true)
-    val histEnts = cand.select((col("id_b").as("id") +:
-      (attrCols.map(col) :+ col("cluster"))): _*).distinct()
-    val scored = Linkage.matchScoresAcross(
-      batch.select((col(idCol).cast("long").as("id") +: attrCols.map(col)): _*),
-      histEnts, "id", cand.select("id_a", "id_b"), fields,
-      carryRight = Seq("cluster"))
-    val best = scored.filter(col("score_micro") >= scoreThresholdMicro)
-      .withColumn("__rn", row_number().over(Window.partitionBy("id_a")
-        .orderBy(col("score_micro").desc, col("id_b").asc)))
-      .filter(col("__rn") === 1)
-      .select(col("id_a").as("inc_id"), col("b_cluster").as("cluster"),
-        col("score_micro"))
-    own.select("inc_id")
-      .join(best, Seq("inc_id"), "left")
-      .select(col("inc_id"),
-        coalesce(col("cluster"), col("inc_id")).as("cluster"),
-        col("cluster").isNotNull.as("matched"), col("score_micro"))
-      .localCheckpoint(true)
+    ix.whenIndexed {
+      val bk = keyed(batch, idCol, Nil)
+        .select("pass", "bkey", "id").localCheckpoint(true)
+      // candidates arrive WITH the history attributes + cluster; a record
+      // reached through both passes collapses (identical attr payload)
+      val cand = bk.join(ix.postingsFor(bk.select("pass", "bkey"))
+          .withColumnRenamed("id", "hist_id"), Seq("pass", "bkey"))
+        .select((Seq(col("id").as("id_a"), col("hist_id").as("id_b")) ++
+          attrCols.map(col) ++ Seq(col("cluster"))): _*)
+        .distinct()
+        .localCheckpoint(true)
+      val histEnts = cand.select((col("id_b").as("id") +:
+        (attrCols.map(col) :+ col("cluster"))): _*).distinct()
+      val scored = Linkage.matchScoresAcross(
+        batch.select((col(idCol).cast("long").as("id") +: attrCols.map(col)): _*),
+        histEnts, "id", cand.select("id_a", "id_b"), fields,
+        carryRight = Seq("cluster"))
+      val best = scored.filter(col("score_micro") >= scoreThresholdMicro)
+        .withColumn("__rn", row_number().over(Window.partitionBy("id_a")
+          .orderBy(col("score_micro").desc, col("id_b").asc)))
+        .filter(col("__rn") === 1)
+        .select(col("id_a").as("inc_id"), col("b_cluster").as("cluster"),
+          col("score_micro"))
+      own.select("inc_id")
+        .join(best, Seq("inc_id"), "left")
+        .select(col("inc_id"),
+          coalesce(col("cluster"), col("inc_id")).as("cluster"),
+          col("cluster").isNotNull.as("matched"), col("score_micro"))
+        .localCheckpoint(true)
+    }.getOrElse(own.localCheckpoint(true))
   }
 
   /** Resolve the batch, persist every record with its assigned cluster
@@ -134,23 +129,21 @@ class ErIndex(
     val assign = resolve(uniq, "__bid")
     val withCluster = uniq
       .join(assign.select(col("inc_id").as("__bid"), col("cluster")), "__bid")
-    store.upsert(Recs, keyed(withCluster, "__bid", Seq(col("cluster"))),
-      Seq("pass", "bkey", "id"), assumeUniqueKeys = true)
+    ix.add(keyed(withCluster, "__bid", Seq(col("cluster"))))
     assign
   }
 
   /** Current golden-record table: (id, attrs…, cluster) — one row per
     * record (postings deduplicated). */
   def entities(): Option[DataFrame] =
-    store.read(Recs).map(
+    ix.read().map(
       _.select((col("id") +: (attrCols.map(col) :+ col("cluster"))): _*)
         .distinct())
 
   /** Fold generations (bounds read fan-out after deep ingest history;
     * also drops superseded duplicates of changed-attribute re-ingests
     * whose keys collide). */
-  def compact(): Unit =
-    store.compact(Recs, Seq("pass", "bkey", "id")): Unit
+  def compact(): Unit = ix.compact()
 
   /** Right-to-be-forgotten: erase `ids`' denormalized blocking rows (every
     * pass's copy — the id's attributes appear once per blocking pass, all
@@ -158,7 +151,5 @@ class ErIndex(
     * members' rows — that's an assignment, not the forgotten record's
     * data. A forgotten id re-ingests as a brand-new record (it may found
     * a new cluster). Returns rows deleted. */
-  def forget(ids: DataFrame, idCol: String): Long =
-    store.delete(Recs, ids.select(col(idCol).as("id")).distinct(),
-      Seq("id"), Seq("pass", "bkey", "id"))
+  def forget(ids: DataFrame, idCol: String): Long = ix.forget(ids, idCol)
 }

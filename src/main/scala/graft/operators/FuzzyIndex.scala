@@ -13,13 +13,11 @@ import org.apache.spark.sql.functions._
   * probe THIS — the [[Dedup.editDistancePairs]] candidate scheme
   * (FastSS deletion variants, complete recall) turned into a store.
   *
-  * Two tables in one [[BucketedSnapshotStore]] (prefix-bucketed):
+  * Two tables in one [[PostingsIndex]]:
   *  - `variants`: one row per (vkey, id) — the 64-bit hash of every
-  *    ≤maxDist-deletion variant. Bucketed on vkey, so a probe scans ONLY
-  *    the buckets the incoming batch's variant keys hash into: probe I/O
-  *    is proportional to the batch + its collisions, never the history.
-  *  - `strings`: one row per id with the original string, persisted for
-  *    exact `levenshtein` verification.
+  *    ≤maxDist-deletion variant, bucketed on vkey.
+  *  - `strings` (payload): one row per id with the original string,
+  *    persisted for exact `levenshtein` verification.
   *
   * Degenerate variant keys (> `maxBucketSize` history postings — i.e. a
   * deletion variant shared by a huge true-duplicate cluster) are dropped
@@ -40,25 +38,17 @@ class FuzzyIndex(
     maxBucketSize: Int = 1000) {
   require(maxDist >= 1 && maxDist <= 3, s"maxDist must be in [1,3], got $maxDist")
 
-  private val Variants = "variants"
-  private val Strings = "strings"
-  private val store = new BucketedSnapshotStore(spark, dir,
-    numBuckets = numBuckets, bucketPrefixLen = 1)
+  private val ix = new PostingsIndex(spark, dir, numBuckets, postings = "variants",
+    keyCols = Seq("vkey"), idCol = "id", payload = Some("strings"),
+    maxKeySize = maxBucketSize)
 
   /** Index `docs` (id-unique, ids not yet indexed — see class caveats).
     * Two delta-proportional upserts; only the touched buckets rewrite. */
   def add(docs: DataFrame, idCol: String, strCol: String): Unit = {
     val keys = Dedup.deletionVariantKeys(docs, idCol, strCol, maxDist)
       .localCheckpoint(true)
-    // strings commit FIRST (the NearDupIndex crash-ordering convention):
-    // orphan string rows are never probed; postings without their verify
-    // string would break the probe
-    store.upsert(Strings,
-      keys.select(col("__id").as("id"), col("__s").as("s")).distinct(),
-      Seq("id"), assumeUniqueKeys = true)
-    store.upsert(Variants,
-      keys.select(col("__k").as("vkey"), col("__id").as("id")).distinct(),
-      Seq("vkey", "id"), assumeUniqueKeys = true)
+    ix.add(keys.select(col("__k").as("vkey"), col("__id").as("id")).distinct(),
+      payloadRows = Some(keys.select(col("__id").as("id"), col("__s").as("s")).distinct()))
   }
 
   /** Verified fuzzy matches of `docs` against the indexed history:
@@ -66,25 +56,15 @@ class FuzzyIndex(
     * under its indexed id reports itself at dist 0 — what [[ingest]]'s
     * idempotence relies on. Result is eagerly materialized (match-sized),
     * so the batch-sized key frame never outlives the call. */
-  def probe(docs: DataFrame, idCol: String, strCol: String): DataFrame = {
-    val empty = docs.select(col(idCol).as("inc_id"), col(idCol).as("hist_id"),
-      lit(0).as("dist")).limit(0)
-    if (!store.exists(Variants)) return empty
+  def probe(docs: DataFrame, idCol: String, strCol: String): DataFrame = ix.whenIndexed {
     val keys = Dedup.deletionVariantKeys(docs, idCol, strCol, maxDist)
       .localCheckpoint(true)
-    // postings for ONLY this batch's variant keys (bucket-pruned read)
-    val postings = store.readForKeys(Variants,
-      keys.select(col("__k").as("vkey")).distinct(), Seq("vkey"))
-    val okPostings = postings.withColumn("__m", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("vkey")))
-      .filter(col("__m") <= maxBucketSize).drop("__m")
     val cand = keys.select(col("__k").as("vkey"), col("__id").as("inc_id"),
         col("__s").as("sa"))
-      .join(okPostings, Seq("vkey"))
+      .join(ix.postingsFor(keys.select(col("__k").as("vkey")).distinct()), Seq("vkey"))
       .select(col("inc_id"), col("sa"), col("id").as("hist_id")).distinct()
       .localCheckpoint(true)
-    val histStr = store.readForKeys(Strings,
-        cand.select(col("hist_id").as("id")), Seq("id"))
+    val histStr = ix.payloadFor(cand.select(col("hist_id").as("id")))
       .select(col("id").as("hist_id"), col("s").as("sb"))
     cand.join(histStr, Seq("hist_id"))
       // threshold form: banded O(L·τ) DP, exact distance when ≤ maxDist
@@ -93,33 +73,22 @@ class FuzzyIndex(
       .filter(col("dist") >= 0)
       .select(col("inc_id"), col("hist_id"), col("dist"))
       .localCheckpoint(true)
-  }
+  }.getOrElse(docs.select(col(idCol).as("inc_id"), col(idCol).as("hist_id"),
+    lit(0).as("dist")).limit(0))
 
   /** Fuzzy-gated ingest: index and return only the docs with NO history
     * match within `maxDist`. Re-running the same batch is a no-op (each
     * string now matches its own indexed copy at dist 0). */
-  def ingest(docs: DataFrame, idCol: String, strCol: String): DataFrame = {
-    val matchedIds = probe(docs, idCol, strCol)
-      .select(col("inc_id").as(idCol)).distinct()
-    val novel = docs.join(matchedIds, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
-    add(novel, idCol, strCol)
-    novel
-  }
+  def ingest(docs: DataFrame, idCol: String, strCol: String): DataFrame =
+    ix.ingest(docs, idCol, eager = false)(b => Some(probe(b, idCol, strCol)
+      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, strCol))
 
   /** Fold each table's generations back to one. */
-  def compact(): Unit = {
-    store.compact(Variants, Seq("vkey", "id"))
-    store.compact(Strings, Seq("id"))
-  }
+  def compact(): Unit = ix.compact()
 
-  /** Right-to-be-forgotten: erase `ids` — deletion-variant postings first
-    * (the discoverable trace; crash-retry removes any orphan strings),
-    * then the stored strings. After forget, the id and its content probe
-    * as never-seen. Returns rows deleted across both tables. */
-  def forget(ids: DataFrame, idCol: String): Long = {
-    val k = ids.select(col(idCol).as("id")).distinct()
-    store.delete(Variants, k, Seq("id"), Seq("vkey", "id")) +
-      store.delete(Strings, k, Seq("id"), Seq("id"))
-  }
+  /** Right-to-be-forgotten: erase `ids` — deletion-variant postings, then
+    * the stored strings ([[PostingsIndex.forget]]). After forget, the id
+    * and its content probe as never-seen. Returns rows deleted across
+    * both tables. */
+  def forget(ids: DataFrame, idCol: String): Long = ix.forget(ids, idCol)
 }

@@ -20,19 +20,14 @@ import org.apache.spark.sql.functions._
   * more than `maxBucketSize` history postings are dropped from candidate
   * generation, the standard bounded-recall cap).
   *
-  * Layout (one [[BucketedSnapshotStore]]):
-  *  - `sigs`: (id, sig) — what exact verification reads, key-pruned to
-  *    candidate ids only.
+  * Layout (one [[PostingsIndex]]):
+  *  - `sigs` (payload): (id, sig) — what exact verification reads,
+  *    key-pruned to candidate ids only.
   *  - `chunks`: (chunk, chunk_val, id) postings bucketed on
-  *    (chunk, chunk_val), so a probe reads ONLY the buckets the incoming
-  *    batch's chunk keys hash into: probe I/O ∝ batch + collisions,
-  *    never the history.
+  *    (chunk, chunk_val).
   *
-  * `sigs` commits before `chunks` (a crash between leaves orphan sig
-  * rows — never probed, harmless — rather than postings whose
-  * verification sigs don't exist). A probe of an already-indexed id
-  * reports itself at hamming 0 — exactly what [[ingest]]'s restart
-  * contract relies on. */
+  * A probe of an already-indexed id reports itself at hamming 0 —
+  * exactly what [[ingest]]'s restart contract relies on. */
 class HammingIndex(
     spark: SparkSession,
     dir: String,
@@ -42,10 +37,9 @@ class HammingIndex(
   require(maxDist >= 0 && maxDist <= 3,
     s"4-chunk pigeonhole blocking is complete only for maxDist <= 3, got $maxDist")
 
-  private val Sigs = "sigs"
-  private val Chunks = "chunks"
-  private val store = new BucketedSnapshotStore(spark, dir,
-    numBuckets = numBuckets, bucketPrefixLen = 2)
+  private val ix = new PostingsIndex(spark, dir, numBuckets, postings = "chunks",
+    keyCols = Seq("chunk", "chunk_val"), idCol = "id", payload = Some("sigs"),
+    maxKeySize = maxBucketSize)
 
   private def norm(df: DataFrame, idCol: String, sigCol: String): DataFrame =
     df.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
@@ -63,34 +57,21 @@ class HammingIndex(
     * touched chunk/id buckets rewrite. */
   def add(sigs0: DataFrame, idCol: String, sigCol: String): Unit = {
     val s = norm(sigs0, idCol, sigCol).localCheckpoint(true)
-    store.upsert(Sigs, s, Seq("id"), assumeUniqueKeys = true)
-    store.upsert(Chunks, chunked(s), Seq("chunk", "chunk_val", "id"),
-      assumeUniqueKeys = true)
+    ix.add(chunked(s), payloadRows = Some(s))
   }
 
   /** History matches of the incoming signatures:
     * (inc_id, hist_id, hamming) with hamming ≤ `maxDist`. An id probed
     * under its indexed signature reports itself at 0. */
-  def probe(in0: DataFrame, idCol: String, sigCol: String): DataFrame = {
-    val empty = in0.select(col(idCol).as("inc_id"), col(idCol).as("hist_id"),
-      lit(0).as("hamming")).limit(0)
-    if (!store.exists(Chunks)) return empty
+  def probe(in0: DataFrame, idCol: String, sigCol: String): DataFrame = ix.whenIndexed {
     val inc = norm(in0, idCol, sigCol).localCheckpoint(true)
     val incChunks = chunked(inc)
-    val postings = store.readForKeys(Chunks,
-      incChunks.select("chunk", "chunk_val"), Seq("chunk", "chunk_val"))
-    // degenerate-key cap on the HISTORY side (window, not groupBy+join:
-    // one shuffle of the pruned postings)
-    val ok = postings.withColumn("__m", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("chunk", "chunk_val")))
-      .filter(col("__m") <= maxBucketSize)
+    val ok = ix.postingsFor(incChunks.select("chunk", "chunk_val"))
       .select(col("chunk"), col("chunk_val"), col("id").as("hist_id"))
     val cand = incChunks.join(ok, Seq("chunk", "chunk_val"))
       .select(col("id").as("inc_id"), col("hist_id")).distinct()
       .localCheckpoint(true)
-    val histSigs = store.readForKeys(Sigs,
-        cand.select(col("hist_id").as("id")), Seq("id"))
+    val histSigs = ix.payloadFor(cand.select(col("hist_id").as("id")))
       .select(col("id").as("hist_id"), col("sig").as("__hs"))
     cand
       .join(inc.select(col("id").as("inc_id"), col("sig").as("__is")),
@@ -100,28 +81,18 @@ class HammingIndex(
         bit_count(col("__is").bitwiseXOR(col("__hs"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
       .localCheckpoint(true)
-  }
+  }.getOrElse(in0.select(col(idCol).as("inc_id"), col(idCol).as("hist_id"),
+    lit(0).as("hamming")).limit(0))
 
   /** Hamming-gated ingest: index only signatures with NO history match
     * within `maxDist`; returns the novel rows. Restart-safe: a
     * redelivered id matches its own indexed copy at hamming 0. */
-  def ingest(batch: DataFrame, idCol: String, sigCol: String): DataFrame = {
-    val b = batch.localCheckpoint(true)
-    val hits = probe(b, idCol, sigCol).select(col("inc_id").as("__hit"))
-      .distinct()
-    val novel = b.join(hits, col(idCol) === col("__hit"), "left_anti")
-      .localCheckpoint(true)
-    add(novel, idCol, sigCol)
-    novel
-  }
+  def ingest(batch: DataFrame, idCol: String, sigCol: String): DataFrame =
+    ix.ingest(batch, idCol, eager = true)(b => Some(probe(b, idCol, sigCol)
+      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, sigCol))
 
-  /** Right-to-be-forgotten: erase `ids` — chunk postings first (the
-    * discoverable trace; crash-retry removes any orphan signatures),
-    * then the stored signatures. Returns rows deleted across both
-    * tables. */
-  def forget(ids: DataFrame, idCol: String): Long = {
-    val k = ids.select(col(idCol).as("id")).distinct()
-    store.delete(Chunks, k, Seq("id"), Seq("chunk", "chunk_val", "id")) +
-      store.delete(Sigs, k, Seq("id"), Seq("id"))
-  }
+  /** Right-to-be-forgotten: erase `ids` — chunk postings, then the stored
+    * signatures ([[PostingsIndex.forget]]). Returns rows deleted across
+    * both tables. */
+  def forget(ids: DataFrame, idCol: String): Long = ix.forget(ids, idCol)
 }

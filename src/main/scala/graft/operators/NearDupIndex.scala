@@ -14,15 +14,13 @@ import org.apache.spark.sql.functions._
   * this is the near-dup analogue of
   * [[BucketedSnapshotStore.incrementalNew]]'s exact tier.
   *
-  * Two tables in one [[BucketedSnapshotStore]] (prefix-bucketed):
+  * Two tables in one [[PostingsIndex]]:
   *
-  *  - `bands`: one row per (band, band_hash, doc_id) — the LSH postings.
-  *    Bucketed on (band, band_hash) via `bucketPrefixLen = 2`, so a probe
-  *    by band key scans ONLY the buckets the incoming batch's band keys
-  *    hash into: probe I/O is proportional to the batch + its collisions,
-  *    never to the history.
-  *  - `shingles`: one row per doc_id with the xxhash64'd distinct shingle
-  *    array — what exact-Jaccard verification needs, persisted so history
+  *  - `bands`: one row per (band, band_hash, doc_id) — the LSH postings,
+  *    bucketed on (band, band_hash).
+  *  - `shingles` (payload): one row per doc_id with the xxhash64'd
+  *    distinct shingle array — what exact-Jaccard verification needs,
+  *    persisted so history
   *    text is never re-tokenized (8 bytes per distinct shingle, ~the size
   *    of a column-compressed copy of the text).
   *
@@ -32,8 +30,7 @@ import org.apache.spark.sql.functions._
   * up to 64-bit collisions (the [[Dedup.jaccardForPairs]] convention).
   * Degenerate band keys (> `maxBucketSize` HISTORY postings — boilerplate
   * clusters) are dropped from candidate generation, the standard bounded
-  * recall trade ([[Dedup.capBuckets]]); [[oversizedBandStats]] reports
-  * what a probe would skip.
+  * recall trade; [[oversizedBandStats]] reports what a probe would skip.
   *
   * Caveats, by design:
   *  - `add` assumes doc ids are new to the index (the [[ingest]] path
@@ -57,10 +54,9 @@ class NearDupIndex(
   require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be > 0")
   require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
 
-  private val Bands = "bands"
-  private val Shingles = "shingles"
-  private val store = new BucketedSnapshotStore(spark, dir,
-    numBuckets = numBuckets, bucketPrefixLen = 2)
+  private val ix = new PostingsIndex(spark, dir, numBuckets, postings = "bands",
+    keyCols = Seq("band", "band_hash"), idCol = "doc_id",
+    payload = Some("shingles"), maxKeySize = maxBucketSize)
 
   /** (__id, __sharr): distinct word shingles per doc, the shared upstream
     * of both the signature and the verification arrays. */
@@ -80,12 +76,7 @@ class NearDupIndex(
     try {
       val b = Dedup.bandsFromShingleArray(arr, "__id", bands, rowsPerBand)
         .select(col("band"), col("band_hash"), col("__id").as("doc_id"))
-      // shingles commit FIRST: a crash between the two upserts then leaves
-      // orphan shingle rows (never probed — harmless) rather than postings
-      // whose verification arrays don't exist yet
-      store.upsert(Shingles, hashed(arr), Seq("doc_id"), assumeUniqueKeys = true)
-      store.upsert(Bands, b, Seq("band", "band_hash", "doc_id"),
-        assumeUniqueKeys = true)
+      ix.add(b, payloadRows = Some(hashed(arr)))
     } finally arr.unpersist(blocking = false)
   }
 
@@ -95,10 +86,7 @@ class NearDupIndex(
     * [[ingest]]'s idempotence relies on. Result is eagerly materialized
     * (pair-sized), so the batch-sized shingle cache never outlives the
     * call. */
-  def probe(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val empty = docs.select(col(idCol).as("inc_id"), col(idCol).as("hist_id"),
-      lit(0.0).as("jaccard")).limit(0)
-    if (!store.exists(Bands)) return empty
+  def probe(docs: DataFrame, idCol: String, textCol: String): DataFrame = ix.whenIndexed {
     val arr = shingleArr(docs, idCol, textCol).cache()
     try {
       // batch×bands rows, materialized EAGERLY: the signature pass (the
@@ -107,26 +95,16 @@ class NearDupIndex(
       // plan — three times per probe
       val incBands = Dedup.bandsFromShingleArray(arr, "__id", bands, rowsPerBand)
         .localCheckpoint(true)
-      // postings for ONLY the band keys this batch emits (bucket-pruned)
-      val postings = store.readForKeys(Bands,
-        incBands.select("band", "band_hash"), Seq("band", "band_hash"))
-      // degenerate-key cap on the HISTORY side: a band key with m postings
-      // and k incoming hits yields m·k candidate pairs — boilerplate keys
-      // (m > maxBucketSize) are dropped, bounding per-key work. Window, not
-      // groupBy+join: one shuffle of the pruned postings, one scan.
-      val okPostings = postings.withColumn("__m", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "band_hash")))
-        .filter(col("__m") <= maxBucketSize).drop("__m")
       // pair-ids, materialized so the postings read + candidate join run
       // once (the history-shingle key read collects from it, then the
       // verify join consumes it)
-      val cand = incBands.join(okPostings, Seq("band", "band_hash"))
+      val cand = incBands
+        .join(ix.postingsFor(incBands.select("band", "band_hash")), Seq("band", "band_hash"))
         .select(col("__id").as("inc_id"), col("doc_id").as("hist_id")).distinct()
         .localCheckpoint(true)
       // exact verify: incoming arrays from the cache, history arrays via a
       // key-pruned read of only the candidate ids
-      val histArr = store.readForKeys(Shingles,
-          cand.select(col("hist_id").as("doc_id")), Seq("doc_id"))
+      val histArr = ix.payloadFor(cand.select(col("hist_id").as("doc_id")))
         .select(col("doc_id").as("hist_id"), col("sh_hashes").as("__shb"))
       val incArr = hashed(arr).select(col("doc_id").as("inc_id"),
         col("sh_hashes").as("__sha"))
@@ -137,53 +115,28 @@ class NearDupIndex(
         .filter(col("jaccard") >= threshold)
         .localCheckpoint(true)
     } finally arr.unpersist(blocking = false)
-  }
+  }.getOrElse(docs.select(col(idCol).as("inc_id"), col(idCol).as("hist_id"),
+    lit(0.0).as("jaccard")).limit(0))
 
   /** Near-dup-gated ingest: index and return only the docs with NO
     * verified history match. Re-running the same batch is a no-op (each
-    * doc now matches its own indexed copy at jaccard 1.0). The returned
-    * frame is materialized (it outlives the add()'s internal caches). */
-  def ingest(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val matchedIds = probe(docs, idCol, textCol)
-      .select(col("inc_id").as(idCol)).distinct()
-    val novel = docs.join(matchedIds, Seq(idCol), "left_anti")
-      .localCheckpoint(false) // add() runs two jobs over it, then it returns
-    add(novel, idCol, textCol)
-    novel
-  }
+    * doc now matches its own indexed copy at jaccard 1.0). */
+  def ingest(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    ix.ingest(docs, idCol, eager = false)(b => Some(probe(b, idCol, textCol)
+      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, textCol))
 
   /** Per-oversized-band-key postings counts a probe would skip
     * (observability for the `maxBucketSize` recall trade). */
-  def oversizedBandStats(): DataFrame =
-    store.read(Bands).map(
-      _.groupBy("band", "band_hash").agg(count(lit(1)).as("members"))
-        .filter(col("members") > maxBucketSize))
-      .getOrElse(spark.range(0).select(col("id").as("band"),
-        col("id").as("band_hash"), col("id").as("members")))
+  def oversizedBandStats(): DataFrame = ix.oversizedKeys()
 
-  /** Fold each table's generations back to one (bounds read fan-out after
-    * deep ingest history). Stale postings from changed-doc re-adds have
-    * distinct full pks and survive — they stay harmless candidates. */
-  def compact(): Unit = {
-    store.compact(Bands, Seq("band", "band_hash", "doc_id"))
-    store.compact(Shingles, Seq("doc_id"))
-  }
+  /** Fold each table's generations back to one ([[PostingsIndex.compact]]). */
+  def compact(): Unit = ix.compact()
 
   /** Right-to-be-forgotten: erase every trace of `ids` from the index —
-    * band postings AND content-derived shingle hashes — under the store's
-    * crash-safe commit protocol. Postings go FIRST (the discoverable
-    * trace; a crash between the two deletes leaves orphan shingle rows
-    * that the next retry removes — the mirror of add()'s ordering
-    * rationale). After forget, the id probes as a complete stranger:
-    * re-ingesting the same content is treated as brand new, which is the
-    * composition RTBF + incremental dedup requires (the rewritten bucket
-    * bloom sidecars guarantee it). Bands deletes by a non-bucket column
-    * (one column-pruned discovery scan, affected-bucket rewrites);
-    * Shingles deletes prune straight to the ids' buckets. Returns rows
-    * deleted across both tables. */
-  def forget(ids: DataFrame, idCol: String): Long = {
-    val k = ids.select(col(idCol).as("doc_id")).distinct()
-    store.delete(Bands, k, Seq("doc_id"), Seq("band", "band_hash", "doc_id")) +
-      store.delete(Shingles, k, Seq("doc_id"), Seq("doc_id"))
-  }
+    * band postings AND content-derived shingle hashes
+    * ([[PostingsIndex.forget]]). Re-ingesting the same content is then
+    * treated as brand new, which is the composition RTBF + incremental
+    * dedup requires (the rewritten bucket bloom sidecars guarantee it).
+    * Returns rows deleted across both tables. */
+  def forget(ids: DataFrame, idCol: String): Long = ix.forget(ids, idCol)
 }

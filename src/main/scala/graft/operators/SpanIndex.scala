@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent winnowing-fingerprint index over a document HISTORY, probed
@@ -25,13 +24,12 @@ import org.apache.spark.sql.functions._
   * (the fingerprints are positional k-gram hashes; a match IS verbatim
   * k-gram evidence, up to hash collisions).
   *
-  * Two tables in one prefix-bucketed [[BucketedSnapshotStore]]:
+  * Two tables in one [[PostingsIndex]]:
   *  - `fps`: one row per (fp, doc_id) — fingerprint postings, bucketed on
-  *    fp, so a probe reads ONLY the buckets the incoming batch's
-  *    fingerprints hash into: probe I/O ∝ batch + collisions, never the
-  *    history.
-  *  - `meta`: one row per doc_id with its fingerprint count (what the
-  *    containment fraction of a match needs without re-reading postings).
+  *    fp.
+  *  - `meta` (payload): one row per doc_id with its fingerprint count
+  *    (what the containment fraction of a match needs without re-reading
+  *    postings).
   *
   * Degenerate fingerprints (> `maxPostings` history postings —
   * boilerplate spans shared by everything) are dropped from candidate
@@ -62,10 +60,9 @@ class SpanIndex(
   require(k > 0 && window > 0, "k and window must be > 0")
   require(minShared >= 1, s"minShared must be >= 1, got $minShared")
 
-  private val Fps = "fps"
-  private val Meta = "meta"
-  private val store = new BucketedSnapshotStore(spark, dir,
-    numBuckets = numBuckets, bucketPrefixLen = 1)
+  private val ix = new PostingsIndex(spark, dir, numBuckets, postings = "fps",
+    keyCols = Seq("fp"), idCol = "doc_id", payload = Some("meta"),
+    maxKeySize = maxPostings)
 
   /** (doc_id, fps): winnowed fingerprint array per doc — the fused
     * one-pass expression (hashKind "md5_60" for oracle-replayable runs). */
@@ -79,17 +76,12 @@ class SpanIndex(
 
   /** Index `docs` (ids new to the index — the [[ingest]] path guarantees
     * it; re-adding an id with unchanged text is an idempotent same-pk
-    * upsert). Meta commits FIRST: a crash between the two upserts leaves
-    * orphan meta rows (never candidates — harmless) rather than postings
-    * whose containment denominator doesn't exist yet. */
+    * upsert). */
   def add(docs: DataFrame, idCol: String, textCol: String): Unit = {
     val arr = fpArr(docs, idCol, textCol).cache()
-    try {
-      store.upsert(Meta, arr.select(col("doc_id"), size(col("fps")).as("n_fps")),
-        Seq("doc_id"), assumeUniqueKeys = true)
-      store.upsert(Fps, postings(arr), Seq("fp", "doc_id"),
-        assumeUniqueKeys = true)
-    } finally arr.unpersist(blocking = false)
+    try ix.add(postings(arr),
+      payloadRows = Some(arr.select(col("doc_id"), size(col("fps")).as("n_fps"))))
+    finally arr.unpersist(blocking = false)
   }
 
   /** Span matches of `docs` against the indexed history:
@@ -98,20 +90,10 @@ class SpanIndex(
     * the incoming doc says has been said before — the redelivery
     * self-match [[ingest]] relies on). Result is eagerly materialized
     * (match-sized), so the batch-shaped plans never re-run. */
-  def probe(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val empty = docs.select(col(idCol).cast("long").as("inc_id"),
-      col(idCol).cast("long").as("hist_id"), lit(0L).as("n_shared"),
-      lit(0.0).as("containment")).limit(0)
-    if (!store.exists(Fps)) return empty
+  def probe(docs: DataFrame, idCol: String, textCol: String): DataFrame = ix.whenIndexed {
     val arr = fpArr(docs, idCol, textCol).localCheckpoint(true)
     val inc = postings(arr)
-    // postings for ONLY this batch's fingerprints (bucket-pruned read)
-    val hist = store.readForKeys(Fps, inc.select("fp"), Seq("fp"))
-    // boilerplate cap on the HISTORY side — one window pass over the
-    // pruned postings, no extra exchange (the NearDupIndex idiom)
-    val okHist = hist
-      .withColumn("__m", count(lit(1)).over(Window.partitionBy("fp")))
-      .filter(col("__m") <= maxPostings)
+    val okHist = ix.postingsFor(inc.select("fp"))
       .select(col("fp"), col("doc_id").as("hist_id"))
     val shared = inc.join(okHist, "fp")
       .groupBy(col("doc_id").as("inc_id"), col("hist_id"))
@@ -124,45 +106,29 @@ class SpanIndex(
         round(col("n_shared").cast("double") / col("__n").cast("double"), 6)
           .as("containment"))
       .localCheckpoint(true)
-  }
+  }.getOrElse(docs.select(col(idCol).cast("long").as("inc_id"),
+    col(idCol).cast("long").as("hist_id"), lit(0L).as("n_shared"),
+    lit(0.0).as("containment")).limit(0))
 
   /** Quote-gated ingest: index and return only the docs with NO history
     * span match. Re-running a batch is a no-op for every doc with ≥
     * minShared fingerprints (each matches its own indexed copy at
     * containment 1.0); zero-fingerprint docs re-admit idempotently (class
     * caveats). */
-  def ingest(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val matched = probe(docs, idCol, textCol)
-      .select(col("inc_id").as(idCol)).distinct()
-    val novel = docs.join(matched, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
-    add(novel, idCol, textCol)
-    novel
-  }
+  def ingest(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    ix.ingest(docs, idCol, eager = false)(b => Some(probe(b, idCol, textCol)
+      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, textCol))
 
   /** Per-oversized-fingerprint postings counts a probe would skip
     * (observability for the `maxPostings` recall trade). */
-  def oversizedFpStats(): DataFrame =
-    store.read(Fps).map(
-      _.groupBy("fp").agg(count(lit(1)).as("members"))
-        .filter(col("members") > maxPostings))
-      .getOrElse(spark.range(0).select(col("id").as("fp"),
-        col("id").as("members")))
+  def oversizedFpStats(): DataFrame = ix.oversizedKeys()
 
   /** Fold each table's generations back to one (bounds read fan-out
     * after deep ingest history). */
-  def compact(): Unit = {
-    store.compact(Fps, Seq("fp", "doc_id"))
-    store.compact(Meta, Seq("doc_id"))
-  }
+  def compact(): Unit = ix.compact()
 
-  /** Right-to-be-forgotten: erase `ids` — fingerprint postings first (the
-    * discoverable, content-derived trace; crash-retry removes any orphan
-    * meta rows), then the per-doc meta. Returns rows deleted across both
-    * tables. */
-  def forget(ids: DataFrame, idCol: String): Long = {
-    val k = ids.select(col(idCol).as("doc_id")).distinct()
-    store.delete(Fps, k, Seq("doc_id"), Seq("fp", "doc_id")) +
-      store.delete(Meta, k, Seq("doc_id"), Seq("doc_id"))
-  }
+  /** Right-to-be-forgotten: erase `ids` — fingerprint postings, then the
+    * per-doc meta ([[PostingsIndex.forget]]). Returns rows deleted across
+    * both tables. */
+  def forget(ids: DataFrame, idCol: String): Long = ix.forget(ids, idCol)
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * [[NearDupIndex]] LSH postings, character fuzzy → [[FuzzyIndex]]
   * deletion variants, vectors → this.
   *
-  * Layout (one [[BucketedSnapshotStore]]):
+  * Layout (one [[PostingsIndex]]):
   *  - `centroids`: (centroid_id, centroid) — trained ONCE from the
   *    initialization batch ([[Similarity.ivfIndex]]'s deterministic seed +
   *    one Lloyd refinement) and then FROZEN: assignments must stay stable
@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   *    the monitoring view (a ballooning hot cell is the tell), and the
   *    remedy is a rebuild, not in-place mutation.
   *  - `postings`: one row per (centroid_id, vec_id, embedding), bucketed
-  *    by centroid_id prefix — a probe reads ONLY the buckets its
-  *    `nProbe` cells hash into: probe I/O ∝ batch × nProbe cell sizes,
-  *    never the history.
+  *    on centroid_id — a probe reads ONLY its `nProbe` cells' buckets:
+  *    probe I/O ∝ batch × nProbe cell sizes, never the history.
   *
   * Probe = assign each query its `nProbe` nearest cells (centroids are a
   * driver literal — a queries×cells projection, no shuffle), key-pruned
@@ -44,9 +43,9 @@ class VectorIndex(
     numBuckets: Int = 64) {
 
   private val Centroids = "centroids"
-  private val Postings = "postings"
-  private val store = new BucketedSnapshotStore(spark, dir,
-    numBuckets = numBuckets, bucketPrefixLen = 1)
+  private val ix = new PostingsIndex(spark, dir, numBuckets, postings = "postings",
+    keyCols = Seq("centroid_id"), idCol = "vec_id")
+  private val store = ix.store
 
   def isInitialized: Boolean = store.exists(Centroids)
 
@@ -75,14 +74,13 @@ class VectorIndex(
     val assigned = Similarity.assign(vectors, centroidsDf, idCol, vecCol)
       .select(col("centroid_id"), col(idCol).as("vec_id"),
         col(vecCol).as("embedding"))
-    store.upsert(Postings, assigned, Seq("centroid_id", "vec_id"),
-      assumeUniqueKeys = true)
+    ix.add(assigned)
   }
 
   /** Per-cell posting counts — the drift/skew monitoring view (and the
     * direct input to an nProbe/rebuild decision). */
   def cellStats(): DataFrame = {
-    store.read(Postings) match {
+    ix.read() match {
       case Some(p) => p.groupBy("centroid_id").agg(count(lit(1)).as("n"))
       case None =>
         import spark.implicits._
@@ -100,21 +98,11 @@ class VectorIndex(
     * the usual bounded-recall lever (gate-style full-probe for exact
     * gating, small nProbe for cheap gating at scale). */
   def ingest(batch: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nProbe: Int): DataFrame = {
-    val b = batch.localCheckpoint(true)
-    val novel =
-      if (!store.exists(Postings)) b
-      else {
-        val hits = probeImpl(b, idCol, vecCol, k = 1, nProbe,
-            excludeSelf = false)
-          .filter(col("cosine") >= threshold)
-          .select(col("query_id").as("__hit"))
-        b.join(hits, col(idCol) === col("__hit"), "left_anti")
-          .localCheckpoint(true)
-      }
-    add(novel, idCol, vecCol)
-    novel
-  }
+      threshold: Double, nProbe: Int): DataFrame =
+    ix.ingest(batch, idCol, eager = true)(b => ix.whenIndexed(
+      probeImpl(b, idCol, vecCol, k = 1, nProbe, excludeSelf = false)
+        .filter(col("cosine") >= threshold)
+        .select(col("query_id").as("__hit"))))(add(_, idCol, vecCol))
 
   /** Top-`k` indexed neighbors of each query vector, probing the
     * `nProbe` nearest cells: (query_id, rank, neighbor_id, cosine).
@@ -151,8 +139,7 @@ class VectorIndex(
         .as("__top"))
       .select(col("query_id"), explode(col("__top")).as("__sc"))
       .select(col("query_id"), col("__sc.cid").as("centroid_id"))
-    val postings = store.readForKeys(Postings,
-      cells.select("centroid_id").distinct(), Seq("centroid_id"))
+    val postings = ix.postingsFor(cells.select("centroid_id").distinct())
     val scored0 = cells.join(postings, Seq("centroid_id"))
       .join(q, Seq("query_id"))
     val scored = (if (excludeSelf)
@@ -173,7 +160,5 @@ class VectorIndex(
     * non-bucket column: one column-pruned discovery scan, rewrites only
     * the affected cells' buckets. A forgotten id probes as never-seen
     * and can re-ingest as new. Returns posting rows deleted. */
-  def forget(ids: DataFrame, idCol: String): Long =
-    store.delete(Postings, ids.select(col(idCol).as("vec_id")).distinct(),
-      Seq("vec_id"), Seq("centroid_id", "vec_id"))
+  def forget(ids: DataFrame, idCol: String): Long = ix.forget(ids, idCol)
 }

@@ -16,6 +16,8 @@ import org.apache.spark.sql.types.StructType
   *    — each micro-batch merges into the persistent snapshot store exactly
   *    like a batch run, so batch and streaming share one code path (and
   *    one on-disk layout).
+  *  - `streamingIngest`: any persistent similarity index's `ingest`
+  *    inside `foreachBatch` — the same probe-then-index path per batch.
   *  - `windowedCounts` / `windowedAgg`: event-time windows + watermark for
   *    late data.
   *  - `dedupStream`: exact streaming dedup via `dropDuplicates` bounded by
@@ -40,125 +42,25 @@ object Streaming {
           Snapshot.snapshotRecords(store, name, batch, pk): Unit
       }
 
-  /** Micro-batch near-dup-gated ingest: each batch probes the persistent
-    * LSH index ([[graft.operators.NearDupIndex]]) against EVERYTHING ever
-    * ingested, and only verified-novel docs are indexed and handed to
-    * `onNovel` (write to the corpus store, emit downstream, …). The
-    * crawl-pipeline contract — "is this a near-dup of anything we have
-    * ever seen?" — in streaming form; restarts are safe because a
-    * reprocessed batch matches its own indexed copy at jaccard 1.0 and
-    * yields no novel rows. */
-  def streamingNearDupIngest(
-      stream: DataFrame,
-      idx: graft.operators.NearDupIndex,
-      idCol: String,
-      textCol: String)(onNovel: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+  /** Micro-batch ingest into a persistent similarity index: every
+    * non-empty batch goes through `ingest` — e.g.
+    * `idx.ingest(_, "doc_id", "text")` of a [[graft.operators.NearDupIndex]],
+    * [[graft.operators.FuzzyIndex]], [[graft.operators.HammingIndex]],
+    * [[graft.operators.SpanIndex]], [[graft.operators.VectorIndex]] or
+    * [[graft.operators.ErIndex]] — which probes the batch against
+    * EVERYTHING ever ingested and indexes it, and its result (the
+    * verified-novel rows, or ErIndex's cluster assignment) goes to
+    * `onOut`. Restart-safe because every index's ingest is: a reprocessed
+    * batch matches its own indexed copy and yields no novel rows (see
+    * each index's ingest caveats). A [[graft.operators.VectorIndex]] must
+    * be initialized before the stream starts (frozen-centroid contract). */
+  def streamingIngest(stream: DataFrame)(ingest: DataFrame => DataFrame)(
+      onOut: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          onNovel(idx.ingest(batch, idCol, textCol))
-      }
-
-  /** Micro-batch fuzzy-gated ingest: the [[streamingNearDupIngest]]
-    * contract at character level — each batch probes the persistent
-    * deletion-variant index ([[graft.operators.FuzzyIndex]]) against
-    * everything ever ingested; only strings with no history match within
-    * maxDist are indexed and handed to `onNovel`. Restart-safe: a
-    * reprocessed batch matches its own indexed copy at dist 0. */
-  def streamingFuzzyIngest(
-      stream: DataFrame,
-      idx: graft.operators.FuzzyIndex,
-      idCol: String,
-      strCol: String)(onNovel: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          onNovel(idx.ingest(batch, idCol, strCol))
-      }
-
-  /** Micro-batch semantic-novelty ingest: the [[streamingFuzzyIngest]]
-    * contract in embedding space — each batch probes the persistent IVF
-    * index ([[graft.operators.VectorIndex]]) against every vector ever
-    * ingested; only vectors with no history neighbor at cosine ≥
-    * `threshold` are indexed and handed to `onNovel`. Restart-safe: a
-    * redelivered batch's unchanged vectors upsert idempotently and its
-    * near-dups of already-indexed ids are suppressed by their history
-    * match. The index must be [[graft.operators.VectorIndex.initialize]]d
-    * before the stream starts (frozen-centroid contract). */
-  def streamingVectorIngest(
-      stream: DataFrame,
-      idx: graft.operators.VectorIndex,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      nProbe: Int)(onNovel: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          onNovel(idx.ingest(batch, idCol, vecCol, threshold, nProbe))
-      }
-
-  /** Micro-batch Hamming-gated ingest: the signature-level contract —
-    * each batch of 64-bit signatures (text SimHash, image dHash, audio
-    * fingerprints) probes the persistent chunk-pigeonhole index
-    * ([[graft.operators.HammingIndex]]) against everything ever
-    * ingested; only signatures with no history match within the index's
-    * maxDist are indexed and handed to `onNovel`. This is the streaming
-    * multimodal crawl-dedup front door (decode → hash → this).
-    * Restart-safe: a redelivered id matches its own copy at hamming 0. */
-  /** Micro-batch entity-resolution ingest: each batch of records probes
-    * the persistent golden-record index ([[graft.operators.ErIndex]])
-    * through its blocking keys, attaches to the best-scoring history
-    * cluster at or above the index threshold (or founds a new cluster),
-    * is persisted, and the assignment is handed to `onAssign` — the
-    * streaming master-data upsert. Restart-safe: a redelivered record's
-    * all-exact self-match returns its own stored cluster and the same-pk
-    * upserts are no-ops. Within-batch duplicates found separate clusters
-    * (ErIndex class caveats — run batch linkage first if that matters). */
-  def streamingErIngest(
-      stream: DataFrame,
-      idx: graft.operators.ErIndex,
-      idCol: String)(onAssign: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          onAssign(idx.ingest(batch, idCol))
-      }
-
-  /** Micro-batch quote-gated ingest: the span-level contract — each batch
-    * probes the persistent winnowing-fingerprint index
-    * ([[graft.operators.SpanIndex]]) against every document ever ingested;
-    * only docs sharing < minShared fingerprints with all of history are
-    * indexed and handed to `onNovel`. Restart-safe for every doc with ≥
-    * minShared fingerprints (a redelivered id matches its own copy at
-    * containment 1.0); zero-fingerprint docs re-admit idempotently
-    * (SpanIndex class caveats). */
-  def streamingSpanIngest(
-      stream: DataFrame,
-      idx: graft.operators.SpanIndex,
-      idCol: String,
-      textCol: String)(onNovel: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          onNovel(idx.ingest(batch, idCol, textCol))
-      }
-
-  def streamingHammingIngest(
-      stream: DataFrame,
-      idx: graft.operators.HammingIndex,
-      idCol: String,
-      sigCol: String)(onNovel: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          onNovel(idx.ingest(batch, idCol, sigCol))
+          onOut(ingest(batch))
       }
 
   /** Event-time tumbling-window counts with late-data watermark. */

@@ -213,6 +213,33 @@ class BucketedSnapshotSpec extends SparkSpec {
     assert(good.read("t").get.count() === 501)
   }
 
+  test("two writers racing on one store: both upserts land, or exactly one fails loudly") {
+    import scala.util.{Failure, Success, Try}
+    val dir = tmpDir("bsnap_race_")
+    val writers = Seq.fill(2)(new BucketedSnapshotStore(spark, dir, numBuckets = 4))
+    writers.head.write("t", Seq((0, "seed")).toDF("id", "v"), Seq("id"))
+    var expected = Map(0 -> "seed")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 8).foreach { round =>
+      // disjoint keys per writer; both start at the same instant
+      val deltas = Seq(0, 1).map(w => (1 to 3).map(i => (round * 100 + w * 10 + i, s"r$round.w$w")))
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val futures = writers.zip(deltas).map { case (store, rows) =>
+        val df = rows.toDF("id", "v")
+        pool.submit(() => { start.await(); Try(store.upsert("t", df, Seq("id"))) })
+      }
+      val results = futures.map(_.get())
+      expected ++= (results.zip(deltas) match {
+        case Seq((Success(_), a), (Success(_), b)) => a ++ b
+        case Seq((Success(_), a), (Failure(_: IllegalStateException), _)) => a
+        case Seq((Failure(_: IllegalStateException), _), (Success(_), b)) => b
+        case other => fail(s"round $round: expected both to land or one manifest conflict, got $other")
+      })
+      val state = writers.head.read("t").get.as[(Int, String)].collect().toMap
+      assert(state === expected, s"round $round: ${results.mkString(", ")}")
+    } finally pool.shutdown()
+  }
+
   test("empty write leaves a fresh-looking store (exists false, upsert seeds)") {
     val store = new BucketedSnapshotStore(spark, tmpDir("bsnap_empty_"), numBuckets = 8)
     store.write("t", Seq.empty[(Int, String)].toDF("id", "v"), Seq("id"))

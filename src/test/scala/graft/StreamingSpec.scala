@@ -37,8 +37,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
     def run(): Unit =
-      Streaming.streamingNearDupIngest(
-          mem.toDF.toDF("doc_id", "text"), idx, "doc_id", "text") { nv =>
+      Streaming.streamingIngest(mem.toDF.toDF("doc_id", "text"))(
+          idx.ingest(_, "doc_id", "text")) { nv =>
           novel ++= nv.select("doc_id").collect().map(_.getLong(0)): Unit
         }
         .option("checkpointLocation", tmpDir("ckpt_ndix_"))
@@ -63,8 +63,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
     def run(): Unit =
-      Streaming.streamingFuzzyIngest(
-          mem.toDF.toDF("id", "name"), idx, "id", "name") { nv =>
+      Streaming.streamingIngest(mem.toDF.toDF("id", "name"))(
+          idx.ingest(_, "id", "name")) { nv =>
           novel ++= nv.select("id").collect().map(_.getLong(0)): Unit
         }
         .option("checkpointLocation", tmpDir("ckpt_fzix_"))
@@ -99,9 +99,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Float])]
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
     def run(): Unit =
-      Streaming.streamingVectorIngest(
-          mem.toDF.toDF("vec_id", "embedding"), idx, "vec_id", "embedding",
-          threshold = 0.99, nProbe = 2) { nv =>
+      Streaming.streamingIngest(mem.toDF.toDF("vec_id", "embedding"))(
+          idx.ingest(_, "vec_id", "embedding", threshold = 0.99, nProbe = 2)) { nv =>
           novel ++= nv.select("vec_id").collect().map(_.getLong(0)): Unit
         }
         .option("checkpointLocation", tmpDir("ckpt_vix_"))
@@ -130,8 +129,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Long)]
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
     def run(): Unit =
-      Streaming.streamingHammingIngest(
-          mem.toDF.toDF("id", "sig"), idx, "id", "sig") { nv =>
+      Streaming.streamingIngest(mem.toDF.toDF("id", "sig"))(
+          idx.ingest(_, "id", "sig")) { nv =>
           novel ++= nv.select("id").collect().map(_.getLong(0)): Unit
         }
         .option("checkpointLocation", tmpDir("ckpt_hmix_"))
@@ -159,8 +158,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
     def run(): Unit =
-      Streaming.streamingSpanIngest(
-          mem.toDF.toDF("doc_id", "text"), idx, "doc_id", "text") { nv =>
+      Streaming.streamingIngest(mem.toDF.toDF("doc_id", "text"))(
+          idx.ingest(_, "doc_id", "text")) { nv =>
           novel ++= nv.select("doc_id").collect().map(_.getLong(0)): Unit
         }
         .option("checkpointLocation", tmpDir("ckpt_spix_"))
@@ -199,8 +198,8 @@ class StreamingSpec extends SparkSpec {
     // stable checkpoint: each run consumes only NEW offsets
     val ckpt = tmpDir("ckpt_erix_")
     def run(): Unit =
-      Streaming.streamingErIngest(
-          mem.toDF.toDF("id", "name"), idx, "id") { as =>
+      Streaming.streamingIngest(mem.toDF.toDF("id", "name"))(
+          idx.ingest(_, "id")) { as =>
           seen ++= as.select("inc_id", "cluster", "matched").collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))): Unit
         }
