@@ -31,8 +31,10 @@ object Stress {
     // targeted scaling probes without the 20-minute full harness)
     val only = sys.env.get("STRESS_ONLY")
       .map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq)
+    def selected(name: String): Boolean =
+      only.forall(_.exists(name.toLowerCase.contains))
     def time[A](name: String)(f: => A): Unit =
-      if (only.forall(_.exists(name.toLowerCase.contains))) {
+      if (selected(name)) {
         val t0 = System.nanoTime(); f
         println(f"[stress] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
@@ -476,13 +478,43 @@ object Stress {
         .select(concat(col("a"), lit("_"), col("__rep")).as("a"),
           concat(col("b"), lit("_"), col("__rep")).as("b"))
     }
-    time(s"pageRank ${factor}x disjoint graphs (3 rounds, production)") {
-      println("[stress]   nodes=" + Bench.force(Graph.pageRank(
-        Graph.bidirect(graphEdges, "a", "b"), "src", "dst", rounds = 3)))
+    // each graph row prints its deduplicated edge count (counted before
+    // the timed region) and the path that ran: at or under the driver gate
+    // the result is a local frame
+    def graphRow(name: String, dedupEdges: => DataFrame)(run: => DataFrame): Unit =
+      if (selected(name)) {
+        println(s"[stress] $name: edges=${dedupEdges.count()} " +
+          s"gate=${Dedup.adaptiveMaxDriverEdges()}")
+        time(name) {
+          val out = run
+          val path = out.queryExecution.analyzed match {
+            case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => "driver"
+            case _ => "distributed"
+          }
+          println(s"[stress]   rows=${Bench.force(out)} path=$path")
+        }
+      }
+    graphRow(s"pageRank ${factor}x disjoint graphs (3 rounds, production)",
+        Graph.bidirect(graphEdges, "a", "b").distinct()) {
+      Graph.pageRank(Graph.bidirect(graphEdges, "a", "b"), "src", "dst", rounds = 3)
     }
-    time(s"labelPropagation ${factor}x disjoint graphs (4 rounds)") {
-      println("[stress]   nodes=" + Bench.force(Graph.labelPropagation(
-        Graph.bidirect(graphEdges, "a", "b"), "src", "dst", rounds = 4)))
+    graphRow(s"labelPropagation ${factor}x disjoint graphs (4 rounds)",
+        Graph.bidirect(graphEdges, "a", "b").distinct()) {
+      Graph.labelPropagation(Graph.bidirect(graphEdges, "a", "b"), "src", "dst", rounds = 4)
+    }
+    // the q142 co-purchase graph, `factor` disjoint copies; its edge count
+    // is the canonical (x < y) one the triangle gate reads
+    val coPurchase = {
+      val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      Analytics.coOccurrenceEdges(spark.range(factor).toDF("__rep").crossJoin(l)
+        .select((col("l_orderkey") + col("__rep") * 100000000L).as("o"),
+          (col("l_partkey") + col("__rep") * 100000000L).as("p")), "o", "p")
+    }
+    graphRow(s"triangleCounts ${factor}x disjoint co-purchase graphs (top 10)",
+        coPurchase.select(least(col("item_a"), col("item_b")).as("x"),
+          greatest(col("item_a"), col("item_b")).as("y"))
+          .filter(col("x") < col("y")).distinct()) {
+      Graph.triangleCounts(coPurchase, "item_a", "item_b", topK = 10)
     }
     // priority sampling: a projection + TakeOrdered heap — must track the
     // bare scan at any factor

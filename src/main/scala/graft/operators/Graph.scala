@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Iterative graph centrality for corpus curation.
   *
@@ -46,16 +48,25 @@ object Graph {
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
 
-  /** Shared prep: deduped persisted edge frame (materialized once — deg,
-    * nodes, and the degree join all read it; an unmaterialized plan would
-    * re-run the caller's edge derivation up to four times), the
-    * degree-joined edge frame (src-partitioned by the join, persisted for
-    * the rounds), and the checkpointed node frame. */
-  private def prepGraph(edges: DataFrame, srcCol: String, dstCol: String)
-      : (DataFrame, DataFrame, DataFrame, Long) = {
+  /** Deduped (src, dst) edge frame, persisted and counted: materialized
+    * once — deg, nodes, and the degree join all read it (an unmaterialized
+    * plan would re-run the caller's edge derivation up to four times) —
+    * and the count is the driver gate's edge count. */
+  private def dedupEdges(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, Long) = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    (e, rowCount(e))
+  }
+
+  /** Rows of `df` as an RDD count: one job fewer than `Dataset.count`,
+    * whose count aggregate runs its own exchange. */
+  private def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** Shared prep over a [[dedupEdges]] frame: the degree-joined edge frame
+    * (src-partitioned by the join, persisted for the rounds), and the
+    * checkpointed node frame. */
+  private def prepGraph(e: DataFrame): (DataFrame, DataFrame, Long) = {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
@@ -78,7 +89,173 @@ object Graph {
     val eDeg = (if (nNodes <= (1L << 22)) eDegRaw.repartition(col("dst"))
                 else eDegRaw)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    (e, eDeg, nodes, nNodes)
+    (eDeg, nodes, nNodes)
+  }
+
+  // ── size-gated driver rounds ──────────────────────────────────────────
+  // On a small graph every distributed round is fixed job overhead, not
+  // data. pageRank, labelPropagation and
+  // triangleCounts share connectedComponents' driver budget
+  // (Dedup.adaptiveMaxDriverEdges: heap/3200 edges, clamped to [65k, 16M]):
+  // at or under it they collect the deduplicated edge frame once, run the
+  // rounds on primitive arrays, and return a local frame with the
+  // distributed path's columns and types.
+
+  /** A collected edge frame. Node ids map to dense indices in Spark's
+    * ascending order for the id type (UTF-8 byte order for strings), so
+    * "sorted by id" is "sorted by index" in every kernel. A null endpoint
+    * is index -1: the distributed equi-joins never match it, and the
+    * kernels skip it the same way. */
+  private final class LocalGraph(val spark: SparkSession, val node: StructField,
+      val ids: Array[Any], val hasNull: Boolean,
+      val src: Array[Int], val dst: Array[Int]) {
+    def nNodes: Int = ids.length
+
+    /** In-edges grouped by destination, sources ascending, over edges
+      * with both endpoints non-null: (offsets, sources). */
+    def inEdges: (Array[Int], Array[Int]) = {
+      val keys = src.indices.iterator.filter(i => src(i) >= 0 && dst(i) >= 0)
+        .map(i => (dst(i).toLong << 32) | src(i)).toArray
+      java.util.Arrays.sort(keys)
+      val off = new Array[Int](nNodes + 1)
+      keys.foreach(k => off((k >>> 32).toInt + 1) += 1)
+      for (v <- 0 until nNodes) off(v + 1) += off(v)
+      (off, keys.map(_.toInt))
+    }
+
+    def frame(schema: StructType, rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Collects `e` (two id columns, already deduplicated and counted at
+    * `nEdges`) when the count fits `maxDriverEdges` and the id type has a
+    * driver ordering here (integral types; strings under the default
+    * UTF8_BINARY collation), freeing `e`'s cache; otherwise None and the
+    * caller runs its distributed rounds. Both columns are read as `node`'s
+    * type (the distributed path's widened union type). */
+  private def driverGraph(e: DataFrame, node: StructField, nEdges: Long,
+      maxDriverEdges: Long): Option[LocalGraph] = {
+    // keys compare and hash as Spark does: UTF8String is byte-ordered
+    val (key, unkey): (Any => AnyRef, AnyRef => Any) = node.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        (_.asInstanceOf[AnyRef], identity)
+      case s: StringType if s.collationId == StringType.collationId =>
+        (v => UTF8String.fromString(v.asInstanceOf[String]), _.toString)
+      case _ => return None
+    }
+    if (nEdges > maxDriverEdges) return None
+    val rows = e.select(e.columns.toSeq.map(c => col(c).cast(node.dataType)): _*)
+      .collect()
+    e.unpersist(false)
+    val keys = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .filter(_ != null).map(key).toArray.distinct
+    java.util.Arrays.sort(keys)
+    val pos = new java.util.HashMap[AnyRef, Integer](keys.length * 2)
+    keys.indices.foreach(i => pos.put(keys(i), i))
+    def index(v: Any): Int = if (v == null) -1 else pos.get(key(v)).intValue
+    Some(new LocalGraph(e.sparkSession, node, keys.map(unkey),
+      rows.exists(r => r.isNullAt(0) || r.isNullAt(1)),
+      rows.map(r => index(r.get(0))), rows.map(r => index(r.get(1)))))
+  }
+
+  /** The `node` column of the distributed output: both endpoint columns
+    * unioned, so mixed id types widen as they do there (analysis only). */
+  private def nodeField(e: DataFrame): StructField =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .schema("node")
+
+  /** [[pageRank]] rounds on the driver: each node folds its contributions
+    * in src order — the `deterministic = true` fold, bit for bit. An edge
+    * to a null dst still counts in its source's out-degree (its mass
+    * leaks, as through the distributed joins). */
+  private def driverPageRank(g: LocalGraph, rounds: Int,
+      damping: Double): DataFrame = {
+    val n = g.nNodes
+    val deg = new Array[Int](n)
+    g.src.foreach(s => if (s >= 0) deg(s) += 1)
+    val (off, in) = g.inEdges
+    var rank = Array.fill(n)(1.0)
+    for (_ <- 1 to rounds) {
+      val next = new Array[Double](n)
+      for (v <- 0 until n) {
+        var acc = 0.0
+        for (k <- off(v) until off(v + 1)) acc += rank(in(k)) / deg(in(k))
+        next(v) = (1.0 - damping) + damping * acc
+      }
+      rank = next
+    }
+    val nullRank = if (rounds == 0) 1.0 else (1.0 - damping) + damping * 0.0
+    g.frame(StructType(Seq(g.node, StructField("rank", DoubleType, false))),
+      (0 until n).map(v => Row(g.ids(v), rank(v))) ++
+        (if (g.hasNull) Seq(Row(null, nullRank)) else Nil))
+  }
+
+  /** [[labelPropagation]] rounds on the driver: labels are node indices,
+    * so the smallest-label tie-break is the smallest index. */
+  private def driverLabelPropagation(g: LocalGraph, rounds: Int): DataFrame = {
+    val n = g.nNodes
+    val (off, in) = g.inEdges
+    val cnt = new Array[Int](n)
+    var label = Array.range(0, n)
+    for (_ <- 1 to rounds) {
+      val next = new Array[Int](n)
+      for (v <- 0 until n) {
+        var best = v // no in-edges: keeps its own id
+        var bestC = 0
+        for (k <- off(v) until off(v + 1)) {
+          val l = label(in(k))
+          cnt(l) += 1
+          if (cnt(l) > bestC || (cnt(l) == bestC && l < best)) {
+            best = l; bestC = cnt(l)
+          }
+        }
+        for (k <- off(v) until off(v + 1)) cnt(label(in(k))) = 0
+        next(v) = best
+      }
+      label = next
+    }
+    g.frame(StructType(Seq(g.node, g.node.copy(name = "label"))),
+      (0 until n).map(v => Row(g.ids(v), g.ids(label(v)))) ++
+        (if (g.hasNull) Seq(Row(null, null)) else Nil))
+  }
+
+  /** [[triangleCounts]] on the driver over collected canonical edges
+    * (x < y, deduplicated, no nulls): the same degree-ordered
+    * compact-forward enumeration, every triangle found once at its
+    * lowest-(degree, id) corner. */
+  private def driverTriangleCounts(g: LocalGraph, topK: Int): DataFrame = {
+    val n = g.nNodes
+    val deg = new Array[Int](n)
+    g.src.foreach(deg(_) += 1)
+    g.dst.foreach(deg(_) += 1)
+    def before(a: Int, b: Int) = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+    val off = new Array[Int](n + 1)
+    for (i <- g.src.indices)
+      off((if (before(g.src(i), g.dst(i))) g.src(i) else g.dst(i)) + 1) += 1
+    for (v <- 0 until n) off(v + 1) += off(v)
+    val fill = off.clone()
+    val out = new Array[Int](g.src.length)
+    for (i <- g.src.indices) {
+      val (u, v) =
+        if (before(g.src(i), g.dst(i))) (g.src(i), g.dst(i)) else (g.dst(i), g.src(i))
+      out(fill(u)) = v; fill(u) += 1
+    }
+    val tri = new Array[Long](n)
+    val mark = Array.fill(n)(-1)
+    for (u <- 0 until n) {
+      for (k <- off(u) until off(u + 1)) mark(out(k)) = u
+      for (k <- off(u) until off(u + 1); v = out(k); j <- off(v) until off(v + 1)
+           if mark(out(j)) == u) {
+        tri(u) += 1; tri(v) += 1; tri(out(j)) += 1
+      }
+    }
+    val total = tri.sum / 3
+    val top = (0 until n).filter(tri(_) > 0)
+      .sorted(Ordering.by((v: Int) => (-tri(v), v))).take(topK)
+    g.frame(StructType(Seq(StructField("rank", IntegerType, false), g.node,
+        StructField("triangles", LongType, false),
+        StructField("total", LongType, true))),
+      top.zipWithIndex.map { case (v, i) => Row(i + 1, g.ids(v), tri(v), total) })
   }
 
   /** Size-gated broadcast of a per-node state frame: post-checkpoint
@@ -104,16 +281,32 @@ object Graph {
     * Nodes with no out-edges keep receiving rank but pass none on (their
     * mass leaks, as in GraphX); use [[bidirect]] first for undirected
     * graphs, which have no such nodes. Duplicate edges are collapsed.
-    * Returns (node, rank). */
+    * Returns (node, rank).
+    *
+    * A graph whose deduplicated edge count fits the driver budget
+    * ([[Dedup.adaptiveMaxDriverEdges]], shared with connected components)
+    * runs its rounds on the driver with the src-sorted fold, whatever
+    * `deterministic` says: the same bits as the deterministic path. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, damping: Double = 0.85,
       deterministic: Boolean = false,
-      checkpointInterval: Int = 8): DataFrame = {
+      checkpointInterval: Int = 8): DataFrame =
+    pageRankGated(edges, srcCol, dstCol, rounds, damping, deterministic,
+      checkpointInterval, Dedup.adaptiveMaxDriverEdges())
+
+  /** [[pageRank]] with an explicit driver gate; `maxDriverEdges = 0` pins
+    * the distributed rounds for any non-empty graph. */
+  private[graft] def pageRankGated(edges: DataFrame, srcCol: String,
+      dstCol: String, rounds: Int, damping: Double, deterministic: Boolean,
+      checkpointInterval: Int, maxDriverEdges: Long): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0,1], got $damping")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val (e, eDeg, nodes, nNodes) = prepGraph(edges, srcCol, dstCol)
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    val local = driverGraph(e, nodeField(e), nEdges, maxDriverEdges)
+    if (local.nonEmpty) return driverPageRank(local.get, rounds, damping)
+    val (eDeg, nodes, nNodes) = prepGraph(e)
     var ranks = nodes.withColumn("rank", lit(1.0))
     for (r <- 1 to rounds) {
       val contribs = eDeg
@@ -163,7 +356,8 @@ object Graph {
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0,1], got $damping")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val (e, eDeg, nodes, nNodes) = prepGraph(edges, srcCol, dstCol)
+    val (e, _) = dedupEdges(edges, srcCol, dstCol)
+    val (eDeg, nodes, nNodes) = prepGraph(e)
     val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
       .join(nodes, Seq("node"))
     val nSeeds = seedNodes.count()
@@ -212,15 +406,25 @@ object Graph {
     * src-partitioned once; per round, one (dst, label)-keyed count
     * aggregate (map-side combined) and ONE argmax aggregate — implemented
     * as `min(struct(-cnt, label))`, so the winner needs no window and no
-    * per-node list; labels localCheckpoint per round (node-sized). */
+    * per-node list; labels localCheckpoint per round (node-sized). Under
+    * [[pageRank]]'s driver gate the rounds run on the driver. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, checkpointInterval: Int = 8): DataFrame = {
+      rounds: Int, checkpointInterval: Int = 8): DataFrame =
+    labelPropagationGated(edges, srcCol, dstCol, rounds, checkpointInterval,
+      Dedup.adaptiveMaxDriverEdges())
+
+  /** [[labelPropagation]] with an explicit driver gate; `maxDriverEdges =
+    * 0` pins the distributed rounds for any non-empty graph. */
+  private[graft] def labelPropagationGated(edges: DataFrame, srcCol: String,
+      dstCol: String, rounds: Int, checkpointInterval: Int,
+      maxDriverEdges: Long): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     // same up-front materialization rationale as pageRank: nodes and the
     // round joins all read `e`
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (e0, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    val local = driverGraph(e0, nodeField(e0), nEdges, maxDriverEdges)
+    if (local.nonEmpty) return driverLabelPropagation(local.get, rounds)
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
@@ -266,26 +470,6 @@ object Graph {
     labels
   }
 
-  /** Exact triangle counting over an undirected edge list — the local
-    * clustering signal (community density, spam-farm detection: organic
-    * neighborhoods triangulate, link farms star). Returns the top-`k`
-    * nodes by triangle participation plus the exact global triangle
-    * total as a constant column.
-    *
-    * DEGREE-ordered compact-forward shape (the O(m^1.5) form): edges
-    * canonicalize (self-loops dropped, multi-edges collapsed), then
-    * orient from the lower-(degree, id) endpoint to the higher — every
-    * node's OUT-degree is then O(√m)-bounded on any graph (the
-    * degeneracy argument), so the wedge join Σ outdeg(v)² survives the
-    * skewed co-occurrence graphs where id-ordering blows up on hubs.
-    * Wedges join out-edge lists on their shared source, the closing
-    * edge check is one more equi-join, and every triangle is found
-    * EXACTLY once. The triangle SET is ordering-invariant, so per-node
-    * counts and the total match any other enumeration (the SQL oracle
-    * uses plain id-ordering). Per-node participation sums each triangle
-    * into its three corners; the global total derives as Σ/3 from the
-    * node-sized counts frame (no second pass over the triangle
-    * stream). */
   /** Canonicalized undirected edge frame (x < y, self-loops dropped,
     * multi-edges collapsed), lazily checkpointed — the shared input of
     * the triangle/clustering/harmonic family. */
@@ -308,10 +492,10 @@ object Graph {
   /** Per-node triangle participation (node, triangles) over a canonical
     * edge frame — the degree-ordered compact-forward enumeration
     * documented on [[triangleCounts]]. Checkpointed (node-sized). */
-  private[graft] def nodeTriangles(e: DataFrame): DataFrame = {
-    // e is lazily checkpointed by the callers; the count materializes it
-    // (first consumer pays that anyway) and gates the wedge-side broadcast
-    val nE = e.count()
+  private[graft] def nodeTriangles(e: DataFrame, nE: Long): DataFrame = {
+    // e is lazily checkpointed by the callers, and `nE` is its count: the
+    // count materializes it (first consumer pays that anyway) and gates
+    // the wedge-side broadcast
     val deg = nodeDegrees(e)
     // orient low-(degree, id) → high: (u, v) with (du, u) < (dv, v);
     // carry the dst order key for the wedge comparison
@@ -347,10 +531,44 @@ object Graph {
       .localCheckpoint(false)
   }
 
+  /** Exact triangle counting over an undirected edge list — the local
+    * clustering signal (community density, spam-farm detection: organic
+    * neighborhoods triangulate, link farms star). Returns the top-`k`
+    * nodes by triangle participation plus the exact global triangle
+    * total as a constant column.
+    *
+    * DEGREE-ordered compact-forward shape (the O(m^1.5) form): edges
+    * canonicalize (self-loops dropped, multi-edges collapsed), then
+    * orient from the lower-(degree, id) endpoint to the higher — every
+    * node's OUT-degree is then O(√m)-bounded on any graph (the
+    * degeneracy argument), so the wedge join Σ outdeg(v)² survives the
+    * skewed co-occurrence graphs where id-ordering blows up on hubs.
+    * Wedges join out-edge lists on their shared source, the closing
+    * edge check is one more equi-join, and every triangle is found
+    * EXACTLY once. The triangle SET is ordering-invariant, so per-node
+    * counts and the total match any other enumeration (the SQL oracle
+    * uses plain id-ordering). Per-node participation sums each triangle
+    * into its three corners; the global total derives as Σ/3 from the
+    * node-sized counts frame (no second pass over the triangle
+    * stream). Under [[pageRank]]'s driver gate (on the canonical edge
+    * count) the same enumeration runs on the driver. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
-      topK: Int = 10): DataFrame = {
+      topK: Int = 10): DataFrame =
+    triangleCountsGated(edges, srcCol, dstCol, topK,
+      Dedup.adaptiveMaxDriverEdges())
+
+  /** [[triangleCounts]] with an explicit driver gate on the canonical edge
+    * count; `maxDriverEdges = 0` pins the distributed enumeration for any
+    * graph with an edge. */
+  private[graft] def triangleCountsGated(edges: DataFrame, srcCol: String,
+      dstCol: String, topK: Int, maxDriverEdges: Long): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val counts = nodeTriangles(canonicalEdges(edges, srcCol, dstCol))
+    val e = canonicalEdges(edges, srcCol, dstCol)
+    val nEdges = rowCount(e)
+    val local = driverGraph(e, e.schema("x").copy(name = "node"), nEdges,
+      maxDriverEdges)
+    if (local.nonEmpty) return driverTriangleCounts(local.get, topK)
+    val counts = nodeTriangles(e, nEdges)
     val total = counts.agg(
       (coalesce(sum("triangles"), lit(0L)) / lit(3)).cast("long").as("total"))
     counts
@@ -488,7 +706,7 @@ object Graph {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val e = canonicalEdges(edges, srcCol, dstCol)
     val deg = nodeDegrees(e)
-    val tri = nodeTriangles(e)
+    val tri = nodeTriangles(e, e.count())
     val scored = deg.select(col("n").as("node"), col("d"))
       .join(tri, Seq("node"), "left")
       .withColumn("triangles", coalesce(col("triangles"), lit(0L)))

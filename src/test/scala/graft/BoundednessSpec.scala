@@ -69,7 +69,7 @@ class BoundednessSpec extends AnyFunSuite {
     "Dedup.scala#stripFromFlagged" -> (1, "per-row: one doc's own flagged spans/tokens reassembled"),
     "Explode.scala#compressRowsToCol" -> (1, "per-row: inverse-of-explode — one parent's child records (reference compress_rows_to_col semantics)"),
     "Graph.scala#fold" -> (1, "det-gate: HITS per-node contribution fold (in-degree bounded); production plain sums"),
-    "Graph.scala#pageRank" -> (1, "det-gate: per-node in-degree-bounded contribution fold; production plain sums"),
+    "Graph.scala#pageRankGated" -> (1, "det-gate: per-node in-degree-bounded contribution fold; production plain sums"),
     "Graph.scala#personalizedPageRank" -> (1, "det-gate: same shape as pageRank"),
     "Importance.scala#prob" -> (1, "det-gate: sourceDivergence vocabulary-sized word-sorted fold; production plain sums"),
     "Mapping.scala#joinPick" -> (1, "group: is_list mapping-lookup pre-aggregation — lookup table is mapping-sized (reference pick-join semantics)"),

@@ -46,14 +46,18 @@ class GraphSpec extends SparkSpec {
     assert(got("b") === (1.0 - 0.85) + 0.85 * 1.0)
   }
 
+  // the repartitioning / production-sum tests below pin the DISTRIBUTED
+  // rounds (maxDriverEdges = 0): their graphs fit the driver gate, where
+  // the rounds would not see the partitioning at all
   test("pageRank deterministic mode is bit-identical under repartitioning") {
     val edges = (1 to 400).flatMap { i =>
       Seq((s"n${i % 37}", s"n${(i * 7) % 41 + 37}"),
         (s"n${(i * 13) % 41 + 37}", s"n${i % 37}"))
     }
-    def run(parts: Int) = Graph.pageRank(
+    def run(parts: Int) = Graph.pageRankGated(
         Graph.bidirect(edges.toDF("s", "t").repartition(parts), "s", "t"),
-        "src", "dst", rounds = 3, deterministic = true)
+        "src", "dst", rounds = 3, damping = 0.85, deterministic = true,
+        checkpointInterval = 8, maxDriverEdges = 0L)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val a = run(2)
     assert(run(11) === a)
@@ -63,10 +67,11 @@ class GraphSpec extends SparkSpec {
   test("production (plain-sum) path agrees with deterministic to 1e-9") {
     val edges = (1 to 300).map(i => (s"u${i % 23}", s"v${(i * 11) % 29}"))
     val e = Graph.bidirect(edges.toDF("s", "t"), "s", "t")
-    val det = Graph.pageRank(e, "src", "dst", 3, deterministic = true)
+    def run(deterministic: Boolean) = Graph.pageRankGated(e, "src", "dst", 3,
+        0.85, deterministic, checkpointInterval = 8, maxDriverEdges = 0L)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val plain = Graph.pageRank(e, "src", "dst", 3)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val det = run(deterministic = true)
+    val plain = run(deterministic = false)
     assert(det.keySet === plain.keySet)
     det.foreach { case (n, r) => assert(math.abs(r - plain(n)) < 1e-9, s"node $n") }
   }
@@ -158,9 +163,9 @@ class GraphSpec extends SparkSpec {
 
   test("labelPropagation is deterministic under repartitioning") {
     val edges = (1 to 500).map(i => (s"n${i % 43}", s"n${(i * 17) % 47}"))
-    def run(parts: Int) = Graph.labelPropagation(
+    def run(parts: Int) = Graph.labelPropagationGated(
         Graph.bidirect(edges.toDF("s", "t").repartition(parts), "s", "t"),
-        "src", "dst", 3)
+        "src", "dst", 3, checkpointInterval = 8, maxDriverEdges = 0L)
       .collect().map(x => x.getString(0) -> x.getString(1)).toMap
     val a = run(2)
     assert(run(13) === a)
