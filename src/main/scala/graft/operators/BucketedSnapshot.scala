@@ -40,6 +40,13 @@ import org.apache.spark.sql.functions._
   *    and only unreferenced garbage behind; a crash after it leaves the
   *    new snapshot fully committed. Readers always resolve the
   *    highest-numbered manifest, so they never observe a partial commit;
+  *  - every write is a stage, then a commit: the stage discovers the
+  *    touched buckets (one job, no exchange) and writes the generation;
+  *    the commit flips the manifest, collects garbage and, for an upsert,
+  *    runs the auto-compact policy. A caller holding two stages (the two
+  *    tables of a [[PostingsIndex]]) stages them at once and commits them
+  *    in the order its crash rule needs. A generation carries no
+  *    `_SUCCESS` marker: it becomes visible only through the manifest;
   *  - garbage (superseded manifests and generations) is deleted AFTER
   *    commit and re-collected opportunistically on the next write, so a
   *    crash mid-GC only wastes space, never data. Orphans no manifest
@@ -312,6 +319,9 @@ class BucketedSnapshotStore(
       // files — the right trade for a write-amplified merge-on-write
       // store (generations are rewritten on every touched-bucket upsert)
       .option("parquet.compression.codec.zstd.level", "1")
+      // a generation is visible only through the manifest: no reader
+      // looks for the committer's `_SUCCESS` marker
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy(BucketCol)
       .parquet(genPath.toString)
     val written = fs.listStatus(genPath).toIndexedSeq.map(_.getPath.getName)
@@ -399,14 +409,27 @@ class BucketedSnapshotStore(
     * `assumeUniqueKeys = true` skips the dedup shuffle when the input is
     * known key-unique, same contract as [[upsert]]. */
   def write(name: String, df: DataFrame, pk: Seq[String],
-      assumeUniqueKeys: Boolean = false): Unit = {
+      assumeUniqueKeys: Boolean = false): Unit =
+    stageWrite(name, df, pk, assumeUniqueKeys)()
+
+  private def stageWrite(name: String, df: DataFrame, pk: Seq[String],
+      assumeUniqueKeys: Boolean): () => Long = {
     val root = path(name)
     fs.mkdirs(root)
     val ver = latestManifest(root).map(_._1).getOrElse(0L)
     val data = if (assumeUniqueKeys) df else Snapshot.dedupKeepLast(df, pk)
     val (gen, buckets) = writeGeneration(root, data, pk, alreadyBucketed = false)
+    () => {
+      commit(root, ver + 1, buckets.map(_ -> gen).toMap)
+      buckets.length.toLong
+    }
+  }
+
+  /** The commit point shared by every write: flip the manifest to
+    * `version`, then collect garbage. */
+  private def commit(root: Path, version: Long, entries: Map[Int, String]): Unit = {
     beforeCommitHook()
-    writeManifest(root, ver + 1, buckets.map(_ -> gen).toMap)
+    writeManifest(root, version, entries)
     afterCommitHook()
     gc(root)
   }
@@ -420,13 +443,21 @@ class BucketedSnapshotStore(
     * duplicate pks it would commit duplicate rows, like
     * [[Dedup.exactDedup]]'s `assumeUniqueOrder` contract. */
   def upsert(name: String, incoming: DataFrame, pk: Seq[String],
-      assumeUniqueKeys: Boolean = false): Long = {
+      assumeUniqueKeys: Boolean = false): Long =
+    stage(name, incoming, pk, assumeUniqueKeys)()
+
+  /** The write half of [[upsert]]: discover the touched buckets and write
+    * the merged generation, committing nothing. The returned thunk is the
+    * commit half (manifest flip, GC, auto-compact) and returns the count
+    * of rewritten buckets. A stage whose thunk never runs leaves an orphan
+    * generation, collected once older than `OrphanGraceMs`. On a store
+    * with no committed bucket the stage is that of [[write]]. */
+  private[operators] def stage(name: String, incoming: DataFrame, pk: Seq[String],
+      assumeUniqueKeys: Boolean): () => Long = {
     val root = path(name)
     val manifest = readManifest(root)
-    if (manifest.forall(_._2.isEmpty)) {
-      write(name, incoming, pk, assumeUniqueKeys)
-      return numBuckets.toLong
-    }
+    if (manifest.forall(_._2.isEmpty))
+      return stageWrite(name, incoming, pk, assumeUniqueKeys)
     val (ver, m) = manifest.get
     val aligned = alignPkTypes(incoming, pk, root, m, "upsert")
     // the delta drives THREE consumers (touched-bucket discovery, the
@@ -444,9 +475,8 @@ class BucketedSnapshotStore(
       .withColumn(BucketCol, bucketOf(pk))
       .localCheckpoint(false)
     try {
-      val touched = bucketed.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).sorted.toIndexedSeq
-      if (touched.isEmpty) return 0L
+      val (touched, rows) = touchedBuckets(bucketed, col(BucketCol))
+      if (touched.isEmpty) return () => 0L
       // partition pruning: only the touched bucket directories are scanned
       val existing = readBuckets(root, m, Some(touched)).getOrElse(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], bucketed.schema))
@@ -460,26 +490,26 @@ class BucketedSnapshotStore(
       // anti-join instead of paying a full shuffle + sort by pk — the
       // write's bucket repartition is then the only exchange the merged
       // data crosses. Null-safe equality preserves the window's null-pk
-      // grouping.
-      val deltaKeys = bucketed.select(pk.map(col): _*).distinct()
+      // grouping. The delta is pk-unique, so its keys need no dedupe.
+      val deltaKeys = bucketed.select(pk.map(col): _*)
       val cond = pk.map(c => existing(c) <=> deltaKeys(c)).reduce(_ && _)
       val winner = existing
-        .join(Ops.broadcastIfSmall(deltaKeys), cond, "left_anti")
+        .join(Ops.broadcastIfSmall(deltaKeys, Some(rows)), cond, "left_anti")
         .unionByName(bucketed, allowMissingColumns = true)
       // stage the merged touched buckets into a fresh generation — the
       // generations being read stay untouched until the manifest flips
       val (gen, _) = writeGeneration(root, winner, pk, alreadyBucketed = true)
-      beforeCommitHook()
-      writeManifest(root, ver + 1, m ++ touched.map(_ -> gen))
-      afterCommitHook()
-      gc(root)
-      // optional maintenance policy: once the manifest references more than
-      // `autoCompactGenerations` generations, fold them back into one — the
-      // amortized cost of keeping read fan-out bounded without a scheduler
-      if (autoCompactGenerations > 0 &&
-          readManifest(root).exists(_._2.values.toSet.size > autoCompactGenerations))
-        compact(name, pk) // pk → also heals legacy pre-invariant duplicates
-      touched.length.toLong
+      () => {
+        commit(root, ver + 1, m ++ touched.map(_ -> gen))
+        // optional maintenance policy: once the manifest references more
+        // than `autoCompactGenerations` generations, fold them back into
+        // one — the amortized cost of keeping read fan-out bounded
+        // without a scheduler
+        if (autoCompactGenerations > 0 &&
+            readManifest(root).exists(_._2.values.toSet.size > autoCompactGenerations))
+          compact(name, pk) // pk → also heals legacy pre-invariant duplicates
+        touched.length.toLong
+      }
     } finally bucketed.unpersist(blocking = false)
   }
 
@@ -514,10 +544,7 @@ class BucketedSnapshotStore(
     // (a pk-less compact produces a bloomless generation → the
     // incrementalNew fast path falls back until the next pk-ed write)
     val (gen, buckets) = writeGeneration(root, full, pk, alreadyBucketed = true)
-    beforeCommitHook()
-    writeManifest(root, ver + 1, buckets.map(_ -> gen).toMap)
-    afterCommitHook()
-    gc(root)
+    commit(root, ver + 1, buckets.map(_ -> gen).toMap)
     liveGens
   }
 
@@ -555,22 +582,24 @@ class BucketedSnapshotStore(
     val manifest = readManifest(root)
     if (manifest.forall(_._2.isEmpty)) return 0L
     val (ver, m) = manifest.get
-    val keys = alignPkTypes(
-      keys0.select(keyCols.map(col): _*).distinct(), keyCols, root, m,
+    // only semi and anti joins consume the keys: duplicates are harmless
+    val keys = alignPkTypes(keys0.select(keyCols.map(col): _*), keyCols, root, m,
       "delete").localCheckpoint(false)
     val bucketCols = if (bucketPrefixLen <= 0) pk else pk.take(bucketPrefixLen)
     val prunable = bucketCols.nonEmpty && bucketCols.forall(keyCols.contains)
-    val candidate: Option[Seq[Int]] =
-      if (prunable)
-        Some(keys.select(bucketOf(pk).as(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).toIndexedSeq)
-      else None
+    // prunable: the discovery pass also yields the exact key count for
+    // the broadcast gate; otherwise the gate falls back to the estimate
+    val (candidate, rows) =
+      if (prunable) {
+        val (touched, n) = touchedBuckets(keys, bucketOf(pk))
+        (Some(touched), Some(n))
+      } else (None, None)
     val live = readBuckets(root, m, candidate).getOrElse(return 0L)
     def matchCond(l: DataFrame): Column =
       keyCols.map(c => l(c) <=> keys(c)).reduce(_ && _)
     // one discovery pass: per-bucket match counts → touched set + total
     val matches = live
-      .join(Ops.broadcastIfSmall(keys), matchCond(live), "left_semi")
+      .join(Ops.broadcastIfSmall(keys, rows), matchCond(live), "left_semi")
       .groupBy(BucketCol).agg(count(lit(1)).as("__c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1))
     if (matches.isEmpty) return 0L
@@ -578,14 +607,11 @@ class BucketedSnapshotStore(
     val deleted = matches.map(_._2).sum
     val retained = readBuckets(root, m, Some(touched)).get
     val survivors = retained
-      .join(Ops.broadcastIfSmall(keys), matchCond(retained), "left_anti")
+      .join(Ops.broadcastIfSmall(keys, rows), matchCond(retained), "left_anti")
     val (gen, written) = writeGeneration(root, survivors, pk,
       alreadyBucketed = true)
     val emptied = touched.toSet -- written.toSet
-    beforeCommitHook()
-    writeManifest(root, ver + 1, (m -- emptied) ++ written.map(_ -> gen))
-    afterCommitHook()
-    gc(root)
+    commit(root, ver + 1, (m -- emptied) ++ written.map(_ -> gen))
     deleted
   }
 
@@ -602,15 +628,25 @@ class BucketedSnapshotStore(
     val (_, m) = readManifest(root).getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
     val keys = alignPkTypes(keys0.select(pk.map(col): _*), pk, root, m, "readForKeys")
-    val touched = keys.select(bucketOf(pk).as(BucketCol))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
+    val (touched, rows) = touchedBuckets(keys, bucketOf(pk))
     readBuckets(root, m, Some(touched))
       // no touched bucket exists yet → empty frame with snapshot schema
       .orElse(readBuckets(root, m, None).map(_.limit(0)))
-      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        keys.select(pk.map(col): _*).schema))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], keys.schema))
       .drop(BucketCol)
-      .join(keys.select(pk.map(col): _*).distinct(), pk, "left_semi")
+      // a semi join returns the same rows whatever duplicates the keys hold
+      .join(Ops.broadcastIfSmall(keys, Some(rows)), pk, "left_semi")
+  }
+
+  /** Distinct bucket ids (sorted) and row count of `df` under `bucket`, in
+    * ONE job with no exchange: each partition folds to its set of ids and
+    * its row count, and the collected sets are unioned (a `distinct()`
+    * here would be an exchange: two jobs under AQE). */
+  private def touchedBuckets(df: DataFrame, bucket: Column): (IndexedSeq[Int], Long) = {
+    import spark.implicits._
+    val parts = df.select(bucket).as[Int]
+      .mapPartitions(BucketedSnapshotStore.foldBuckets).collect()
+    (parts.flatMap(_._1).distinct.sorted.toIndexedSeq, parts.map(_._2).sum)
   }
 
   // ---- incremental dedup (first-seen ingest) -----------------------------
@@ -664,8 +700,7 @@ class BucketedSnapshotStore(
     val aligned = alignPkTypes(incoming, pk, root, m, "incrementalNew")
 
     def exactNew(cand: DataFrame): DataFrame = {
-      val touched = cand.select(bucketOf(pk).as(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).filter(m.contains).toIndexedSeq
+      val touched = touchedBuckets(cand, bucketOf(pk))._1.filter(m.contains)
       readBuckets(root, m, Some(touched)).fold(cand) { hist =>
         val keys = hist.select(pk.map(col): _*)
         val cond = pk.map(c => cand(c) <=> keys(c)).reduce(_ && _)
@@ -697,5 +732,15 @@ class BucketedSnapshotStore(
       upsert(name, fresh, pk)
       readForKeys(name, fresh.select(pk.map(col): _*), pk)
     } finally fresh.unpersist(blocking = false)
+  }
+}
+
+private object BucketedSnapshotStore {
+  /** One partition's bucket ids and row count (see `touchedBuckets`). */
+  def foldBuckets(rows: Iterator[Int]): Iterator[(Array[Int], Long)] = {
+    val ids = scala.collection.mutable.BitSet.empty
+    var n = 0L
+    rows.foreach { b => ids += b; n += 1 }
+    Iterator.single((ids.toArray, n))
   }
 }

@@ -61,7 +61,7 @@ class FuzzyIndex(
       .localCheckpoint(true)
     val cand = keys.select(col("__k").as("vkey"), col("__id").as("inc_id"),
         col("__s").as("sa"))
-      .join(ix.postingsFor(keys.select(col("__k").as("vkey")).distinct()), Seq("vkey"))
+      .join(ix.postingsFor(keys.select(col("__k").as("vkey"))), Seq("vkey"))
       .select(col("inc_id"), col("sa"), col("id").as("hist_id")).distinct()
       .localCheckpoint(true)
     val histStr = ix.payloadFor(cand.select(col("hist_id").as("id")))
@@ -81,7 +81,7 @@ class FuzzyIndex(
     * string now matches its own indexed copy at dist 0). */
   def ingest(docs: DataFrame, idCol: String, strCol: String): DataFrame =
     ix.ingest(docs, idCol, eager = false)(b => Some(probe(b, idCol, strCol)
-      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, strCol))
+      .select(col("inc_id").as("__hit"))))(add(_, idCol, strCol))
 
   /** Fold each table's generations back to one. */
   def compact(): Unit = ix.compact()

@@ -89,7 +89,7 @@ class HammingIndex(
     * redelivered id matches its own indexed copy at hamming 0. */
   def ingest(batch: DataFrame, idCol: String, sigCol: String): DataFrame =
     ix.ingest(batch, idCol, eager = true)(b => Some(probe(b, idCol, sigCol)
-      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, sigCol))
+      .select(col("inc_id").as("__hit"))))(add(_, idCol, sigCol))
 
   /** Right-to-be-forgotten: erase `ids` — chunk postings, then the stored
     * signatures ([[PostingsIndex.forget]]). Returns rows deleted across

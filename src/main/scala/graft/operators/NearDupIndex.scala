@@ -123,7 +123,7 @@ class NearDupIndex(
     * doc now matches its own indexed copy at jaccard 1.0). */
   def ingest(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     ix.ingest(docs, idCol, eager = false)(b => Some(probe(b, idCol, textCol)
-      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, textCol))
+      .select(col("inc_id").as("__hit"))))(add(_, idCol, textCol))
 
   /** Per-oversized-band-key postings counts a probe would skip
     * (observability for the `maxBucketSize` recall trade). */

@@ -13,11 +13,21 @@ object Ops {
     * when the plan's estimated size fits under the session's
     * `autoBroadcastJoinThreshold`; otherwise return the frame unhinted so
     * AQE picks the strategy from RUNTIME sizes. An unconditional hint on an
-    * unbounded side OOMs the driver once tenant data outgrows memory. */
-  def broadcastIfSmall(df: DataFrame): DataFrame = {
+    * unbounded side OOMs the driver once tenant data outgrows memory.
+    *
+    * A caller that already knows the frame's exact row count passes it as
+    * `rows`: the size is then `rows` × Spark's per-row default size. A
+    * checkpointed or join-derived frame has no usable estimate (a join's
+    * estimate multiplies its children's), so the estimate alone would
+    * plan a sort-merge join that AQE turns into a broadcast only after one
+    * shuffle-map job per side. */
+  def broadcastIfSmall(df: DataFrame, rows: Option[Long] = None): DataFrame = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val estimated = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (threshold > 0 && estimated <= threshold) broadcast(df) else df
+    val size: BigInt = rows match {
+      case Some(n) => BigInt(n) * (8L + df.schema.map(_.dataType.defaultSize.toLong).sum)
+      case None => df.queryExecution.optimizedPlan.stats.sizeInBytes
+    }
+    if (threshold > 0 && size <= threshold) broadcast(df) else df
   }
 
   /** list → column subset; map → select(keys ∩ columns) + rename.

@@ -1,5 +1,9 @@
 package graft.operators
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,8 +23,11 @@ import org.apache.spark.sql.functions._
   *  - `payload` (optional): one row per id, pk `idCol` — what candidate
   *    verification reads, key-pruned to the candidate ids.
   *
-  * Crash ordering, the one rule both tables obey:
-  *  - [[add]] commits the payload FIRST. A crash between the two upserts
+  * Crash ordering, the one rule both tables obey (a rule about commits):
+  *  - [[add]] commits the payload FIRST. It stages both tables' new
+  *    generations at once, then commits payload, then postings. A failed
+  *    payload stage commits nothing (the staged postings generation is an
+  *    orphan the store's GC collects); a crash between the two commits
   *    leaves orphan payload rows, which no probe reaches (probes enter
   *    through postings), rather than postings whose verification rows do
   *    not exist yet. A retried add rewrites the same pks idempotently.
@@ -71,14 +78,21 @@ final class PostingsIndex(
   /** Every committed posting. */
   def read(): Option[DataFrame] = store.read(postings)
 
-  /** Commit one batch (key-unique rows): payload first, then postings —
-    * see the class crash ordering. */
+  /** Commit one batch (key-unique rows): both tables staged at once, then
+    * payload committed first — see the class crash ordering. */
   def add(postingRows: DataFrame, payloadRows: Option[DataFrame] = None): Unit = {
     require(payloadRows.isDefined == payload.isDefined,
       s"payload rows must be given iff the index has a payload table ($payload)")
-    for (t <- payload; rows <- payloadRows)
-      store.upsert(t, rows, idKey, assumeUniqueKeys = true)
-    store.upsert(postings, postingRows, postingsPk, assumeUniqueKeys = true)
+    payload.zip(payloadRows) match {
+      case Some((t, rows)) =>
+        val (commitPayload, commitPostings) = PostingsIndex.concurrently(
+          store.stage(t, rows, idKey, assumeUniqueKeys = true),
+          store.stage(postings, postingRows, postingsPk, assumeUniqueKeys = true))
+        commitPayload.get.apply()
+        commitPostings.get.apply()
+      case None =>
+        store.upsert(postings, postingRows, postingsPk, assumeUniqueKeys = true)
+    }
   }
 
   /** The novelty gate: index and return only the `batch` rows whose
@@ -97,12 +111,15 @@ final class PostingsIndex(
     novel
   }
 
-  /** Fold each table's generations back to one (bounds read fan-out
-    * after deep ingest history). Stale postings from changed-id re-adds
-    * have distinct full pks and survive — they stay harmless candidates. */
+  /** Fold each table's generations back to one, both tables at once
+    * (bounds read fan-out after deep ingest history). Stale postings from
+    * changed-id re-adds have distinct full pks and survive — they stay
+    * harmless candidates. */
   def compact(): Unit = {
-    store.compact(postings, postingsPk)
-    payload.foreach(store.compact(_, idKey))
+    val (p, v) = PostingsIndex.concurrently(store.compact(postings, postingsPk),
+      payload.foreach(store.compact(_, idKey)))
+    p.get
+    v.get
   }
 
   /** Right-to-be-forgotten: erase every row of `ids` (column `byCol`)
@@ -112,7 +129,7 @@ final class PostingsIndex(
     * straight to the ids' buckets. After forget an id probes as a
     * complete stranger. Returns rows deleted across both tables. */
   def forget(ids: DataFrame, byCol: String): Long = {
-    val k = ids.select(col(byCol).as(idCol)).distinct()
+    val k = ids.select(col(byCol).as(idCol))
     store.delete(postings, k, idKey, postingsPk) +
       payload.fold(0L)(store.delete(_, k, idKey, idKey))
   }
@@ -124,4 +141,20 @@ final class PostingsIndex(
       _.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("members"))
         .filter(col("members") > maxKeySize))
       .getOrElse(spark.range(0).select((keyCols :+ "members").map(c => col("id").as(c)): _*))
+}
+
+private object PostingsIndex {
+  /** Runs `a` and `b` at once and returns both outcomes. The two threads
+    * are created for the call, not drawn from a shared pool, so each
+    * inherits the caller's Spark local properties (job group, tags), which
+    * a thread copies when it starts. */
+  def concurrently[A, B](a: => A, b: => B): (Try[A], Try[B]) = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val fa = Future(Try(a))
+      val fb = Future(Try(b))
+      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    } finally pool.shutdown()
+  }
 }

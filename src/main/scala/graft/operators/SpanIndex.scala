@@ -117,7 +117,7 @@ class SpanIndex(
     * caveats). */
   def ingest(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     ix.ingest(docs, idCol, eager = false)(b => Some(probe(b, idCol, textCol)
-      .select(col("inc_id").as("__hit")).distinct()))(add(_, idCol, textCol))
+      .select(col("inc_id").as("__hit"))))(add(_, idCol, textCol))
 
   /** Per-oversized-fingerprint postings counts a probe would skip
     * (observability for the `maxPostings` recall trade). */

@@ -139,7 +139,7 @@ class VectorIndex(
         .as("__top"))
       .select(col("query_id"), explode(col("__top")).as("__sc"))
       .select(col("query_id"), col("__sc.cid").as("centroid_id"))
-    val postings = ix.postingsFor(cells.select("centroid_id").distinct())
+    val postings = ix.postingsFor(cells.select("centroid_id"))
     val scored0 = cells.join(postings, Seq("centroid_id"))
       .join(q, Seq("query_id"))
     val scored = (if (excludeSelf)

@@ -59,6 +59,37 @@ class BucketedSnapshotSpec extends SparkSpec {
     assert(got.toSeq === Seq((3, "v3"), (500, "v500"), (999, "v999")))
   }
 
+  test("upsert into an empty store returns the buckets it wrote") {
+    val dir = tmpDir("bsnap_seed_")
+    val store = new BucketedSnapshotStore(spark, dir, numBuckets = 16)
+    val written = store.upsert("t", Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"), Seq("id"))
+    val root = store.path("t")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifest = fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("manifest-"))
+    assert(manifest.length === 1)
+    val in = fs.open(manifest.head)
+    val entries = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().count(_.nonEmpty)
+      finally in.close()
+    assert(written >= 1 && written <= 3)
+    assert(written === entries)
+  }
+
+  test("touched-bucket discovery runs one job; generations carry no _SUCCESS marker") {
+    val store = new BucketedSnapshotStore(spark, tmpDir("bsnap_disc_"), numBuckets = 16)
+    store.write("t", (1 to 1000).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    val keys = (1 to 40).toDF("id").localCheckpoint(true)
+    var got: org.apache.spark.sql.DataFrame = null
+    // building the read runs discovery, its only job
+    assert(jobsRun { got = store.readForKeys("t", keys, Seq("id")) } === 1)
+    assert(got.count() === 40)
+    // generations carry no `_SUCCESS` marker: only the manifest commits
+    val root = store.path("t")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val gens = fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("gen-"))
+    assert(gens.nonEmpty)
+    assert(gens.forall(g => !fs.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS"))))
+  }
+
   test("readForKeys/upsert enforce pk types: lossless widen, loud reject") {
     val store = new BucketedSnapshotStore(spark, tmpDir("bsnap_types_"), numBuckets = 8)
     // bigint-keyed snapshot

@@ -215,6 +215,43 @@ class PlanSpec extends SparkSpec {
       s"history scan not bucket-pruned:\n$plan")
   }
 
+  test("readForKeys broadcasts a small key set to its semi join; no sort-merge join") {
+    import graft.operators.BucketedSnapshotStore
+    val store = new BucketedSnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("gs_planrfk_").toString, numBuckets = 16)
+    store.write("t", (1 to 1000).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    // a checkpointed key frame built from an RDD: like the indexes' derived
+    // key frames, it carries no usable size estimate, which alone plans a
+    // sort-merge semi join
+    val keys = spark.sparkContext.parallelize(1 to 40).toDF("id").localCheckpoint(true)
+    val got = store.readForKeys("t", keys, Seq("id"))
+    val plan = physical(got)
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"), plan)
+    assert(!plan.contains("SortMergeJoin"), plan)
+    assert(got.count() === 40)
+  }
+
+  test("a warm NearDupIndex.ingest of a small batch stays within its job budget") {
+    import graft.operators.NearDupIndex
+    // 40 docs of 30 words, no word shared between two docs
+    val docs = (0L until 40L)
+      .map(i => (i, (0 until 30).map(j => s"d${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val idx = new NearDupIndex(spark,
+      java.nio.file.Files.createTempDirectory("gs_planndix_").toString, numBuckets = 16)
+    idx.add(docs.filter($"doc_id" < 20), "doc_id", "text")
+    idx.ingest(docs.filter($"doc_id" >= 20 && $"doc_id" < 30), "doc_id", "text")
+    // warm: both tables hold history; 10 novel docs plus 5 exact copies
+    val batch = docs.filter($"doc_id" >= 30 && $"doc_id" < 40)
+      .unionByName(docs.filter($"doc_id" < 5).select(($"doc_id" + 500).as("doc_id"), $"text"))
+    var novel = 0L
+    val jobs = jobsRun { novel = idx.ingest(batch, "doc_id", "text").count() }
+    assert(novel === 10)
+    // measured under AQE on local[4], the count included
+    val budget = 26
+    assert(jobs <= budget, s"ingest ran $jobs jobs, budget $budget")
+  }
+
   test("cmsEstimate broadcasts the sketch; the probe side never sort-merge-joins") {
     import graft.operators.Sketches
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

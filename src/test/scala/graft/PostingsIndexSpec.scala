@@ -1,12 +1,8 @@
 package graft
 
-import graft.operators.PostingsIndex
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import graft.operators.{BucketedSnapshotStore, PostingsIndex}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 class PostingsIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +21,7 @@ class PostingsIndexSpec extends SparkSpec {
     }.getOrElse(Nil)
 
   private val failing = udf((i: Int) => {
-    if (i >= 0) throw new IllegalStateException("injected postings failure")
+    if (i >= 0) throw new IllegalStateException("injected failure")
     i
   })
 
@@ -49,29 +45,66 @@ class PostingsIndexSpec extends SparkSpec {
       (before ++ Seq(("b", 3, "three"), ("c", 3, "three"))).sorted)
   }
 
+  test("a failed payload stage commits neither table; probes are as before; a retried add completes") {
+    val dir = tmpDir("pix_payload_crash_")
+    val ix = newIndex(dir)
+    ix.add(Seq(("a", 1), ("b", 1), ("b", 2)).toDF("k", "id"),
+      Some(Seq((1, "one"), (2, "two")).toDF("id", "s")))
+    val before = probe(ix, "a", "b", "c")
+    // a reader of the same directory, for the committed manifest versions
+    val view = new BucketedSnapshotStore(spark, dir, numBuckets = 4)
+    val versions = Seq("p", "v").map(view.manifestVersion)
+
+    val postings3 = Seq(("b", 3), ("c", 3)).toDF("k", "id")
+    val payload3 = Seq((3, "three")).toDF("id", "s")
+    // the postings stage runs concurrently and succeeds: its generation
+    // is an orphan no manifest names
+    intercept[Exception](ix.add(postings3, Some(payload3.withColumn("id", failing(col("id"))))))
+    assert(Seq("p", "v").map(view.manifestVersion) === versions)
+    assert(probe(ix, "a", "b", "c") === before)
+
+    ix.add(postings3, Some(payload3))
+    assert(probe(ix, "a", "b", "c") ===
+      (before ++ Seq(("b", 3, "three"), ("c", 3, "three"))).sorted)
+  }
+
   test("add commits the payload first and forget deletes the postings first") {
     val ix = newIndex(tmpDir("pix_order_"))
-    // the table of every generation the store writes, in commit order
-    val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
-          c.outputPath.getParent.getName.stripSuffix(".snapshot.bucketed")
-        }.foreach(written.add)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // every manifest commit (the rename into `manifest-<n>`) is recorded,
+    // by table, in commit order
+    conf.set("fs.file.impl", classOf[CommitRecordingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    CommitRecordingFs.commits.clear()
     val deleted =
       try {
+        // the first add seeds both tables, the second merges into them
         ix.add(Seq(("a", 1), ("b", 1), ("b", 2)).toDF("k", "id"),
           Some(Seq((1, "one"), (2, "two")).toDF("id", "s")))
-        val n = ix.forget(Seq(1).toDF("doc"), "doc")
-        eventually(timeout(30.seconds))(assert(written.size === 4))
-        n
-      } finally spark.listenerManager.unregister(listener)
-    assert(written.toArray.toSeq === Seq("v", "p", "p", "v"))
+        ix.add(Seq(("a", 3), ("c", 3)).toDF("k", "id"), Some(Seq((3, "three")).toDF("id", "s")))
+        ix.forget(Seq(1).toDF("doc"), "doc")
+      } finally {
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(CommitRecordingFs.commits.toArray.toSeq === Seq("v", "p", "v", "p", "p", "v"))
     assert(deleted === 3) // two postings + one payload row
-    assert(probe(ix, "a", "b", "c") === Seq(("b", 2, "two")))
+    assert(probe(ix, "a", "b", "c") === Seq(("a", 3, "three"), ("b", 2, "two"), ("c", 3, "three")))
     assert(ix.payloadFor(Seq(1).toDF("id")).count() === 0)
   }
+}
+
+/** The local file system, recording each manifest commit of a
+  * [[BucketedSnapshotStore]] table as the table's name. */
+class CommitRecordingFs extends LocalFileSystem {
+  override def rename(src: Path, dst: Path): Boolean = {
+    val ok = super.rename(src, dst)
+    if (ok && dst.getName.startsWith("manifest-"))
+      CommitRecordingFs.commits.add(dst.getParent.getName.stripSuffix(".snapshot.bucketed"))
+    ok
+  }
+}
+
+object CommitRecordingFs {
+  val commits = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
