@@ -1,309 +1,19 @@
 package graft
 
 import graft.operators._
-import graft.schema.{CatalogReader, SingerSchema}
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the scale extensions), each with a DuckDB-equivalent
-  * `oracleSql` where the semantics are ANSI-SQL-expressible.
-  * Non-SQL-expressible ops (MinHash/SimHash signatures, LSH ANN) get
-  * rows-only checks; their exact semantics are covered by ScalaTest. */
+/** Driver contract. Every implemented operator from SURVEY.md §2 (+ the
+  * scale extensions) is one [[QuerySpec]] in the [[registry]]: its gate,
+  * its bench variant and, where the semantics are ANSI-SQL-expressible,
+  * its DuckDB oracle. The specs live in per-tier files under
+  * `graft/queries/`; `queries`, `benchQueries` and `oracleSql` are views of
+  * the registry. Non-SQL-expressible ops (the seeded recall audits and the
+  * isotonic fit) get rows-only checks; their exact semantics are covered
+  * by ScalaTest. */
 object SparkEntry {
-
-  /** Table loader. `events.ts` is nanosecond-precision parquet, which Spark
-    * only reads as long nanos (spark.sql.legacy.parquet.nanosAsLong, set in
-    * Verify/Bench sessions) — normalize it to a microsecond timestamp here
-    * (integer division: exact, no double rounding). */
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name != "events") df
-    else df.schema("ts").dataType match {
-      // TIMESTAMP(NANOS) parquet read as long nanos (legacy.parquet.nanosAsLong)
-      case LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // TIMESTAMP_MICROS with isAdjustedToUTC=0 reads as TIMESTAMP_NTZ in
-      // Spark 4; normalize to TimestampType (value-preserving under the
-      // UTC session timezone all entrypoints set).
-      case TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => df
-    }
-  }
-
-  /** q185's FK hypotheses: (childLabel, childTable, childCol, parentLabel,
-    * parentTable, parentCol) — the 7 true TPC-H FKs plus two negatives
-    * (p_size→n_nationkey: partial containment; o_orderkey→l_orderkey:
-    * full containment but non-unique parent). Shared by the query and the
-    * generated oracle SQL so both sides test the same hypothesis list. */
-  private val fkPairs: Seq[(String, String, String, String, String, String)] = Seq(
-    ("lineitem.l_orderkey", "lineitem", "l_orderkey",
-      "orders.o_orderkey", "orders", "o_orderkey"),
-    ("lineitem.l_partkey", "lineitem", "l_partkey",
-      "part.p_partkey", "part", "p_partkey"),
-    ("lineitem.l_suppkey", "lineitem", "l_suppkey",
-      "supplier.s_suppkey", "supplier", "s_suppkey"),
-    ("orders.o_custkey", "orders", "o_custkey",
-      "customer.c_custkey", "customer", "c_custkey"),
-    ("customer.c_nationkey", "customer", "c_nationkey",
-      "nation.n_nationkey", "nation", "n_nationkey"),
-    ("supplier.s_nationkey", "supplier", "s_nationkey",
-      "nation.n_nationkey", "nation", "n_nationkey"),
-    ("nation.n_regionkey", "nation", "n_regionkey",
-      "region.r_regionkey", "region", "r_regionkey"),
-    ("part.p_size", "part", "p_size",
-      "nation.n_nationkey", "nation", "n_nationkey"),
-    ("orders.o_orderkey", "orders", "o_orderkey",
-      "lineitem.l_orderkey", "lineitem", "l_orderkey"))
-
-  /** Scratch directories for store-backed queries, deleted recursively at
-    * JVM exit — gate and bench runs construct these queries repeatedly
-    * (each bench repetition re-primes its store), and undeleted
-    * gs_* directories would otherwise accumulate across runs. One static
-    * shutdown hook drains a concurrent queue of paths (bench reps would
-    * otherwise register an unbounded number of hook Threads). */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      var p = scratchDirs.poll()
-      while (p != null) {
-        try {
-          if (Files.exists(p)) {
-            val walk = Files.walk(p)
-            try walk.sorted(Comparator.reverseOrder[Path]())
-              .forEach(f => Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        } catch { case _: Throwable => () }
-        p = scratchDirs.poll()
-      }
-    }))
-
-  private def tmpWorkDir(prefix: String): String = {
-    scratchHook
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    scratchDirs.add(p)
-    p.toString
-  }
-
-  /** Catalog used by q01 to exercise JSON-Schema-driven read typing. */
-  private val eventsCatalogJson =
-    """{"streams": [{"stream": "events", "schema": {"type": "object",
-      |"properties": {
-      |  "event_id": {"type": ["integer", "null"]},
-      |  "ts": {"anyOf": [{"type": "string", "format": "date-time"}, {"type": "null"}]},
-      |  "user_id": {"type": ["string", "null"]},
-      |  "event_type": {"type": ["string", "null"]},
-      |  "value": {"type": ["number", "null"]},
-      |  "props": {"type": ["string", "null"]}}},
-      |"metadata": [{"breadcrumb": [], "metadata": {"table-key-properties": ["event_id"]}}]}]}
-      |""".stripMargin
-
-  /** q269/q270's two dirty feeds: system A = customer attributes verbatim;
-    * system B = the same entities with deterministic md5-driven dirt (a
-    * char deleted from 1/3 of names and 1/5 of phones at an md5-chosen
-    * position, 1/7 of addresses truncated) and 1/11 of rows absent.
-    * id = 2·custkey + side, so cross-system pairs are id-parity pairs.
-    * Every edit is substr-concat arithmetic the oracle replays verbatim. */
-  private def linkageEntities(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Column
-    val c = T(s, dir, "customer")
-    val k = col("c_custkey")
-    def h(salt: String): Column =
-      Dedup.md5Hash60(concat(k.cast("string"), lit(salt)))
-    // the testdata customer table carries no phone/address — synthesize a
-    // deterministic phone-shaped attribute from md5 hex (both engines
-    // construct it identically; the DIRT machinery is what's under test)
-    val phHex = md5(concat(k.cast("string"), lit("ph")))
-    val phone = concat_ws("-", substring(phHex, 1, 4),
-      substring(phHex, 5, 4), substring(phHex, 9, 4))
-    val cents = round(col("c_acctbal") * lit(100.0)).cast("long")
-    val pn = (pmod(h("n"), (length(col("c_name")) - lit(3)).cast("long")) +
-      lit(3L)).cast("int")
-    val dirtyName = when(pmod(k, lit(3)) === 0,
-      concat(col("c_name").substr(lit(1), pn - 1),
-        col("c_name").substr(pn + 1, lit(200))))
-      .otherwise(col("c_name"))
-    val pp = (pmod(h("p"), lit(8L)) + lit(1L)).cast("int")
-    val dirtyPhone = when(pmod(k, lit(5)) === 0,
-      concat(phone.substr(lit(1), pp - 1), phone.substr(pp + 1, lit(200))))
-      .otherwise(phone)
-    val dirtyBal = when(pmod(k, lit(7)) === 0, cents + 1L).otherwise(cents)
-    val a = c.select((k * 2).cast("long").as("id"), k.as("ckey"),
-      col("c_name").as("name"), phone.as("phone"), cents.as("bal"),
-      col("c_mktsegment").as("seg"))
-    val b = c.filter(pmod(k, lit(11)) =!= 0)
-      .select((k * 2 + 1).cast("long").as("id"), k.as("ckey"),
-        dirtyName.as("name"), dirtyPhone.as("phone"), dirtyBal.as("bal"),
-        col("c_mktsegment").as("seg"))
-    a.unionAll(b)
-  }
-
-  /** Two blocking passes: name suffix (breaks when the name was dirtied —
-    * the deletion shifts the suffix) and phone country-code prefix (breaks
-    * when the phone deletion landed in the first 3 chars) — deliberately
-    * imperfect so the q270 completeness numbers are non-trivial. */
-  private def linkageBlockKeys(): Seq[org.apache.spark.sql.Column] = Seq(
-    expr("substring(name, length(name) - 5, 6)"),
-    substring(col("phone"), 1, 3))
-
-  /** Fellegi–Sunter field weights (micro-scaled log2 m/u literals, shared
-    * verbatim with the oracle SQL — the q139/q211 convention). */
-  private val linkageFields: Seq[Linkage.FieldSpec] = Seq(
-    Linkage.FieldSpec("name", "name", Some(0.85),
-      Linkage.fsWeightMicro(0.70, 0.0005), Linkage.fsWeightMicro(0.28, 0.002),
-      Linkage.fsWeightMicro(0.02, 0.9975)),
-    Linkage.FieldSpec("phone", "phone", Some(0.80),
-      Linkage.fsWeightMicro(0.78, 0.0002), Linkage.fsWeightMicro(0.20, 0.001),
-      Linkage.fsWeightMicro(0.02, 0.9988)),
-    Linkage.FieldSpec("bal", "bal", None,
-      Linkage.fsWeightMicro(0.86, 0.00002), 0L,
-      Linkage.fsWeightMicro(0.14, 0.99998)),
-    Linkage.FieldSpec("seg", "seg", None,
-      Linkage.fsWeightMicro(0.98, 0.2), 0L, Linkage.fsWeightMicro(0.02, 0.8)))
-
-  /** q291/q292: ANSI texts shared verbatim between the Spark query (via
-    * spark.sql) and the DuckDB oracle — the window-function and
-    * set-operation surface demonstrated as raw SQL, not DataFrame code.
-    * Every window is fully tiebroken; percent_rank/cume_dist are exact
-    * rank-derived rationals rounded at 6. */
-  private val windowSuiteSql: String =
-    """SELECT o_orderkey,
-      |  ntile(7) OVER w AS tile,
-      |  round(percent_rank() OVER w, 6) AS pct_rank,
-      |  round(cume_dist() OVER w, 6) AS cume,
-      |  lag(o_orderkey, 1) OVER w AS prev_key,
-      |  lead(o_orderkey, 2) OVER w AS next2_key,
-      |  first_value(o_orderkey) OVER w AS first_key,
-      |  nth_value(o_orderkey, 3) OVER w AS third_key
-      |FROM orders
-      |WHERE o_orderkey <= 2000
-      |WINDOW w AS (PARTITION BY o_orderpriority
-      |             ORDER BY o_totalprice, o_orderkey)
-      |ORDER BY o_orderkey""".stripMargin
-
-  private val setOpsSql: String =
-    """WITH a AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 2 = 0
-      |  UNION ALL SELECT o_orderkey FROM orders
-      |  WHERE o_orderkey % 4 = 0),
-      |b AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 0)
-      |SELECT 'intersect' AS op, k FROM (SELECT k FROM a INTERSECT
-      |  SELECT k FROM b)
-      |UNION ALL
-      |SELECT 'intersect_all', k FROM (SELECT k FROM a INTERSECT ALL
-      |  SELECT k FROM b)
-      |UNION ALL
-      |SELECT 'except', k FROM (SELECT k FROM b EXCEPT SELECT k FROM a)
-      |UNION ALL
-      |SELECT 'except_all', k FROM (SELECT k FROM a EXCEPT ALL
-      |  SELECT k FROM b)
-      |ORDER BY op, k""".stripMargin
-
-  /** q297/q302's oriented cross-system scored candidates: blocked pairs
-    * across the id-parity systems, id_a = system A (even ids), id_b =
-    * system B (odd ids), Fellegi–Sunter scored. */
-  private def crossSystemScored(s: SparkSession, dir: String): DataFrame = {
-    val ents = linkageEntities(s, dir)
-    val raw = Linkage.blockedPairs(ents, "id", linkageBlockKeys(), 4096)
-      .filter(pmod(col("id_a"), lit(2L)) =!= pmod(col("id_b"), lit(2L)))
-    val oriented = raw.select(
-      when(pmod(col("id_a"), lit(2L)) === 0, col("id_a"))
-        .otherwise(col("id_b")).as("id_a"),
-      when(pmod(col("id_a"), lit(2L)) === 0, col("id_b"))
-        .otherwise(col("id_a")).as("id_b"))
-    Linkage.matchScores(ents, "id", oriented, linkageFields)
-      .select("id_a", "id_b", "score_micro")
-  }
-
-  /** The q273 resolution: accepted matches (≥ 10 bits) → connected
-    * components → (id, cluster_id) for every entity — shared by the q273
-    * gate and the q290 pairwise-quality evaluation. */
-  private def erResolvedClusters(s: SparkSession, dir: String): DataFrame = {
-    val ents = linkageEntities(s, dir)
-    val pairs = Linkage.blockedPairs(ents, "id", linkageBlockKeys(), 4096)
-      .filter(pmod(col("id_a"), lit(2L)) =!= pmod(col("id_b"), lit(2L)))
-    val matches = Linkage.matchScores(ents, "id", pairs, linkageFields)
-      .filter(col("score_micro") >= 10000000L)
-      .select("id_a", "id_b")
-    val cc = Dedup.connectedComponents(matches)
-    ents.select(col("id")).join(cc, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("cluster_id"))
-  }
-
-  /** Shared oracle CTEs for q269/q270: the dirty-feed construction, both
-    * blocking passes, and the deduplicated pair union — replaying
-    * [[linkageEntities]] / [[linkageBlockKeys]] verbatim (md5-60 position
-    * hashes, substr-concat deletions, id = 2k + side). */
-  private def linkageCtes: String =
-    """c0 AS (SELECT c_custkey AS k, c_name, c_mktsegment,
-      |    CAST(round(c_acctbal * 100.0) AS BIGINT) AS cents,
-      |    md5(c_custkey::VARCHAR || 'ph') AS phhex FROM customer),
-      |c AS (SELECT k, c_name, c_mktsegment, cents,
-      |    substr(phhex, 1, 4) || '-' || substr(phhex, 5, 4) || '-' ||
-      |      substr(phhex, 9, 4) AS ph FROM c0),
-      |d AS (SELECT k,
-      |    CAST(('0x' || substr(md5(k::VARCHAR || 'n'), 1, 15)) AS BIGINT)
-      |      % (length(c_name) - 3) + 3 AS pn,
-      |    CAST(('0x' || substr(md5(k::VARCHAR || 'p'), 1, 15)) AS BIGINT)
-      |      % 8 + 1 AS pp,
-      |    c_name, c_mktsegment, cents, ph FROM c),
-      |u AS (
-      |  SELECT k * 2 AS id, k AS ckey, c_name AS name, ph AS phone,
-      |    cents AS bal, c_mktsegment AS seg FROM c
-      |  UNION ALL
-      |  SELECT k * 2 + 1, k,
-      |    CASE WHEN k % 3 = 0
-      |      THEN substr(c_name, 1, CAST(pn - 1 AS INT)) ||
-      |        substr(c_name, CAST(pn + 1 AS INT), 200)
-      |      ELSE c_name END,
-      |    CASE WHEN k % 5 = 0
-      |      THEN substr(ph, 1, CAST(pp - 1 AS INT)) ||
-      |        substr(ph, CAST(pp + 1 AS INT), 200)
-      |      ELSE ph END,
-      |    CASE WHEN k % 7 = 0 THEN cents + 1 ELSE cents END,
-      |    c_mktsegment
-      |  FROM d WHERE k % 11 <> 0),
-      |bk AS (
-      |  SELECT 0 AS pass, substr(name, length(name) - 5, 6) AS bkey, id
-      |  FROM u
-      |  UNION ALL SELECT 1, substr(phone, 1, 3), id FROM u),
-      |pairs AS (
-      |  SELECT DISTINCT least(x.id, y.id) AS id_a,
-      |    greatest(x.id, y.id) AS id_b
-      |  FROM bk x JOIN bk y
-      |    ON x.pass = y.pass AND x.bkey = y.bkey AND x.id < y.id)""".stripMargin
-
-  /** [[linkageCtes]] extended through the Fellegi–Sunter scoring of every
-    * cross-system candidate pair (`sc`: a_ckey, b_ckey, score_micro) —
-    * shared by the q269 histogram and q277 operating-curve oracles. */
-  private def linkageScoredCtes: String = {
-    def fuzzy(f: Linkage.FieldSpec): String =
-      s"""CASE WHEN a_${f.column} = b_${f.column} THEN ${f.wExactMicro}
-         |      WHEN jaro_winkler_similarity(a_${f.column}, b_${f.column})
-         |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-         |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-    val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-    s"""$linkageCtes,
-       |j AS (SELECT p.id_a, p.id_b, ua.ckey AS a_ckey, ub.ckey AS b_ckey,
-       |    ua.name AS a_name, ub.name AS b_name, ua.bal AS a_bal,
-       |    ub.bal AS b_bal, ua.phone AS a_phone, ub.phone AS b_phone,
-       |    ua.seg AS a_seg, ub.seg AS b_seg
-       |  FROM pairs p JOIN u ua ON ua.id = p.id_a JOIN u ub ON ub.id = p.id_b
-       |  WHERE p.id_a % 2 <> p.id_b % 2),
-       |sc AS (SELECT a_ckey, b_ckey,
-       |    (${fuzzy(fName)}
-       |     + ${fuzzy(fPhone)}
-       |     + CASE WHEN a_bal = b_bal THEN ${fBal.wExactMicro}
-       |         ELSE ${fBal.wDisagreeMicro} END
-       |     + CASE WHEN a_seg = b_seg THEN ${fSeg.wExactMicro}
-       |         ELSE ${fSeg.wDisagreeMicro} END) AS score_micro
-       |  FROM j)""".stripMargin
-  }
 
   /** Flagship pipeline on sf=0.001: synthesize a nested python-literal
     * column → explode to rows → mapping DSL with a lookup pick.
@@ -325,12437 +35,20 @@ object SparkEntry {
       Map("customer" -> spark.read.parquet(s"$dir/customer.parquet")), project = true)
   }
 
-  /** Inputs of the three LSH-verified dedup queries, shared between the
-    * query definitions and the q53 recall-margin probe so the probe can
-    * never drift from what the gated queries actually run on. */
-  /** q58/q59 input: every 5th doc gets the same 12-token boilerplate
-    * prefix — deterministic cross-doc duplicated spans for substring-level
-    * dedup (natural cross-doc 8-grams in the corpus flag too; the oracle
-    * replays the identical computation). */
-  private val boilerplate =
-    "terms of service apply to all content herein and usage governed accordingly"
-  private def plantedBoilerplate(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 5 === 0, concat(lit(boilerplate + " "), col("text")))
-        .otherwise(col("text")).as("text"))
+  /** Every declared query, tier by tier; a repeated name fails here. */
+  lazy val registry: Seq[QuerySpec] = QuerySpec.registry(
+    CoreQueries.specs ++ RelationalQueries.specs ++ DedupQueries.specs ++
+      TextQueries.specs ++ AnalyticsQueries.specs ++ ProfilingQueries.specs ++
+      GraphQueries.specs)
 
-  /** q68/q69 input: every 4th doc gets a shared header line, every
-    * (7k+2)th a shared footer line — deterministic cross-doc duplicated
-    * LINES for the line-dedup tier (any natural cross-doc duplicate
-    * lines in the corpus flag too; the oracle replays identically). */
-  private def plantedLines(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 4 === 0,
-        concat(lit("subscribe to our newsletter for updates\n"), col("text")))
-        .when(col("doc_id") % 7 === 2,
-          concat(col("text"), lit("\nall rights reserved worldwide")))
-        .otherwise(col("text")).as("text"))
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** q60's learned-merge list (rank order), shared with the stress
-    * harness. All pairs keep left ≠ right so the SQL oracle can merge a
-    * round's occurrences independently — occurrences of such a pair
-    * cannot overlap (an overlap at i, i+1 forces syms(i+1) = right =
-    * left). The Spark expression handles left = right too
-    * (left-to-right non-overlap, spec-covered). */
-  private[graft] val bpeMerges = Seq(
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("an", "d"),
-    ("e", "r"), ("o", "u"), ("r", "e"), ("o", "n"), ("e", "n"))
+  /** Bench-protocol variants: name → prepare(spark, dir) → timed thunk
+    * (see [[QuerySpec.bench]]). CORRECTNESS still gates on [[queries]]. */
+  def benchQueries: Map[String, (SparkSession, String) => () => DataFrame] =
+    registry.filter(_.benched).map(q => q.name -> q.prepare).toMap
 
-  /** Inline rank lookup for the q60 oracle: CASE over the merge table. */
-  private def bpeRankCase(arr: String): String =
-    bpeMerges.zipWithIndex.map { case ((a, b), r) =>
-      s"WHEN $arr[i]='$a' AND $arr[i+1]='$b' THEN ${r + 1}"
-    }.mkString("CASE ", " ", " ELSE NULL END")
-
-  /** The q87 oracle: BPE TRAINING replayed in SQL, the `numMerges` rounds
-    * unrolled as chained CTEs. Per round r: `p_r` counts adjacent symbol
-    * pairs over the word table (each position, frequency-weighted), `b_r`
-    * is the argmax with the trainer's tie order (count desc, left, right),
-    * `s_r` re-segments by GREEDY LEFT-TO-RIGHT non-overlapping
-    * replacement — position i merges iff it matches AND the maximal run
-    * of consecutive matches ending at i has odd length (the closed form
-    * of "not consumed by the merge at i−1"), which replays
-    * `TextAnalysis.trainBpeMerges`' scan exactly (and BpeTokenCount's
-    * application convention). */
-  private[graft] def bpeTrainOracleSql(numMerges: Int): String = {
-    val finalSel = (1 to numMerges)
-      .map(r => s"SELECT $r AS rank, l AS merge_left, r AS merge_right FROM b$r")
-      .mkString("\nUNION ALL\n")
-    s"""WITH ${bpeTrainCtes(numMerges, carryWord = false)}
-       |SELECT CAST(rank AS BIGINT) AS rank, merge_left, merge_right FROM (
-       |$finalSel
-       |) ORDER BY rank""".stripMargin
-  }
-
-  /** The q87 training CTE chain (`w`, `s0`, and per round `p_r`/`b_r`/
-    * `s_r`). With `carryWord` the word itself rides through every
-    * re-segmentation, so `s<numMerges>` maps each distinct corpus word to
-    * its FINAL segmentation — which is exactly what `BpeTokenCount`
-    * produces for training-corpus words (training applies merges in rank
-    * order with the same greedy left-to-right scan), giving the q278
-    * fertility oracle its word → piece-count table without unrolling
-    * application separately. */
-  private def bpeTrainCtes(numMerges: Int, carryWord: Boolean): String = {
-    val wc = if (carryWord) "word, " else ""
-    val rounds = (1 to numMerges).map { r =>
-      val prev = s"s${r - 1}"
-      s"""p$r AS (
-         |  SELECT u.p.l AS l, u.p.r AS r, sum(u.f) AS c FROM (
-         |    SELECT unnest(list_transform(range(1, len(syms)), i ->
-         |      struct_pack(l := syms[i], r := syms[i+1]))) AS p, f
-         |    FROM $prev) u
-         |  GROUP BY 1, 2),
-         |b$r AS (SELECT l, r FROM p$r ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-         |s$r AS (
-         |  SELECT ${wc}list_filter(list_transform(range(1, len(syms) + 1), i ->
-         |      CASE WHEN mg[i] THEN syms[i] || syms[i+1]
-         |           WHEN i > 1 AND coalesce(mg[i-1], false) THEN NULL
-         |           ELSE syms[i] END), x -> x IS NOT NULL) AS syms, f
-         |  FROM (
-         |    SELECT ${wc}syms, f,
-         |      list_transform(range(1, len(syms) + 1), i ->
-         |        coalesce(mt[i], false) AND
-         |        ((i - coalesce(list_max(list_filter(range(1, i + 1),
-         |            j -> NOT coalesce(mt[j], true))), 0)) % 2 = 1)) AS mg
-         |    FROM (
-         |      SELECT ${wc}syms, f,
-         |        list_transform(range(1, len(syms)), i ->
-         |          syms[i] = b.l AND syms[i+1] = b.r) AS mt
-         |      FROM $prev CROSS JOIN b$r b) q1) q2)""".stripMargin
-    }
-    s"""w AS (
-       |  SELECT word, count(*) AS f FROM (
-       |    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-       |    FROM documents)
-       |  WHERE word <> '' GROUP BY word),
-       |s0 AS (SELECT ${wc}list_transform(range(1, length(word) + 1),
-       |         i -> word[i:i]) AS syms, f FROM w),
-       |${rounds.mkString(",\n")}""".stripMargin
-  }
-
-  private def lshInputQ25(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents").select("doc_id", "text")
-    val mutated = d.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 100000).as("doc_id"),
-        concat(col("text"), lit(" extra token")).as("text"))
-    d.unionByName(mutated)
-  }
-
-  private def lshInputQ41(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents").select("doc_id", "text")
-    val exactDup = d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-    val nearDup = d.filter(col("doc_id") % 11 === 0)
-      .select((col("doc_id") + 200000).as("doc_id"),
-        concat(col("text"), lit(" tail tokens appended")).as("text"))
-    d.unionByName(exactDup).unionByName(nearDup)
-  }
-
-  private def lshInputQ46(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents").select("doc_id", "text")
-    val m1 = d.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 100000).as("doc_id"),
-        concat(col("text"), lit(" extra token")).as("text"))
-    val m2 = d.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 200000).as("doc_id"),
-        concat(col("text"), lit(" extra token and more extra")).as("text"))
-    d.unionByName(m1).unionByName(m2)
-  }
-
-  /** q74's (history, incoming): history = even docs; incoming = exact
-    * re-crawls of %10==0, near-dup mutations of %10==6 (both history
-    * members), and the odd docs as genuinely-novel arrivals. The q25-style
-    * mutation keeps the pairs far above the 16×2 banding midpoint (the
-    * combined frame is margin-probed in q53). */
-  private def ndixInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val d = T(s, dir, "documents").select("doc_id", "text")
-    val history = d.filter(col("doc_id") % 2 === 0)
-    val incoming = d.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      .unionByName(d.filter(col("doc_id") % 10 === 6)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat(col("text"), lit(" extra token")).as("text")))
-      .unionByName(d.filter(col("doc_id") % 2 === 1))
-    (history, incoming)
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ── §2.1 sources: catalog-typed read ─────────────────────────────
-    "q01_catalog_typed_read" -> ((s, dir) => {
-      val cat = CatalogReader.fromJson(eventsCatalogJson)("events")
-      val reader = new graft.sources.GsReader(s, dir)
-      val typed = reader.castToCatalog(T(s, dir, "events"), cat)
-      typed.select(col("event_id"), col("user_id"), col("value"))
-        .orderBy("event_id")
-    }),
-    // ── §2.3 projections: rename ─────────────────────────────────────
-    "q02_rename_project" -> ((s, dir) => {
-      Ops.rename(T(s, dir, "customer"),
-          Map("c_custkey" -> "id", "c_name" -> "name", "c_acctbal" -> "balance"))
-        .orderBy("id")
-    }),
-    // ── §2.6 explode object → columns ────────────────────────────────
-    "q03_explode_json_to_cols" -> ((s, dir) => {
-      Explode.explodeJsonToCols(T(s, dir, "events"), "props")
-        .select(col("event_id"), col("`props.k`"))
-        .orderBy("event_id")
-    }),
-    // ── §2.6 explode array-of-objects → rows (python-literal input) ──
-    "q04_explode_json_to_rows" -> ((s, dir) => {
-      val withLine = T(s, dir, "events").withColumn("line",
-        concat(lit("[{'n': 1, 'v': '"), col("event_type"),
-          lit("'}, {'n': 2, 'v': '"), col("event_type"), lit("'}]")))
-      // keys are uniform across rows → sampled inference is exact and
-      // skips a full scan (PLANS.md scale note)
-      Explode.explodeJsonToRows(withLine, "line", samplingRatio = 0.2)
-        .select(col("event_id"), col("`line.n`"), col("`line.v`"))
-        .orderBy(col("event_id"), col("`line.n`"))
-    }),
-    // ── §2.6 json tuple → cols ───────────────────────────────────────
-    "q05_json_tuple_to_cols" -> ((s, dir) => {
-      val withAttr = T(s, dir, "events").withColumn("attr",
-        concat(lit("{'Name': '"), col("event_type"),
-          lit("', 'Value': "), col("user_id"), lit("}")))
-      Explode.jsonTupleToCols(withAttr, "attr")
-        .select(col("event_id"), col("`attr.Name`"), col("`attr.Value`"))
-        .orderBy("event_id")
-    }),
-    // ── §2.6/2.7 compress rows → nested col (inverse explode) ────────
-    "q06_compress_rows_to_col" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").filter(col("l_orderkey") < 100)
-        .select(col("l_orderkey"),
-          col("l_linenumber").as("line.l_linenumber"),
-          col("l_quantity").as("line.l_quantity"))
-      Explode.compressRowsToCol(li, "line", Seq("l_orderkey"))
-        .select(col("l_orderkey"), to_json(col("line")).as("line"))
-        .orderBy("l_orderkey")
-    }),
-    // ── §2.7 snapshot upsert (merge-by-pk, keep-last) ────────────────
-    "q07_snapshot_upsert" -> ((s, dir) => {
-      val orders = T(s, dir, "orders")
-      val snap = orders.filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val incoming = orders.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), (col("o_totalprice") + 1.0).as("o_totalprice"))
-      Snapshot.upsert(Some(snap), incoming, Seq("o_orderkey"))
-        .orderBy("o_orderkey")
-    }),
-    // ── §2.7 hash CDC (drop_redundant) ───────────────────────────────
-    "q08_drop_redundant_cdc" -> ((s, dir) => {
-      val tmp = tmpWorkDir("gs_cdc_")
-      val store = new SnapshotStore(s, tmp)
-      val base = T(s, dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-      // prime the hash snapshot with the unmodified table
-      Snapshot.dropRedundant(store, "customer", base, Seq("c_custkey")).count()
-      val changed = base.withColumn("c_mktsegment",
-        when(col("c_mktsegment") === "BUILDING", "BUILDINGX").otherwise(col("c_mktsegment")))
-      Snapshot.dropRedundant(store, "customer", changed, Seq("c_custkey"), updatedFlag = true)
-        .select("c_custkey", "c_mktsegment", "_updated")
-        .orderBy("c_custkey")
-    }),
-    // ── §2.4 id backfill join (merge_id_from_snapshot) ───────────────
-    "q09_merge_id_from_snapshot" -> ((s, dir) => {
-      val df = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast(StringType).as("externalId"))
-      val ids = T(s, dir, "nation")
-        .select(col("n_nationkey").cast(StringType).as("InputId"),
-          (col("n_nationkey") + 1000).as("RemoteId"))
-      Snapshot.mergeIdFromSnapshot(df, ids, targetCol = "Id")
-        .select("c_custkey", "Id").orderBy("c_custkey")
-    }),
-    // ── §2.3 pluck_fields (filter + project) ─────────────────────────
-    "q10_pluck_fields" -> ((s, dir) => {
-      val ids = (1 to 200 by 7).map(_.asInstanceOf[Any])
-      Ops.pluckFields(T(s, dir, "part"), "p_partkey", ids,
-          Seq("p_partkey", "p_name", "p_brand"))
-        .orderBy("p_partkey")
-    }),
-    // ── §2.5 mapping DSL with "pick" lookup join ─────────────────────
-    "q11_map_fields_pick" -> ((s, dir) => {
-      val mapping =
-        """{"id": "c_custkey", "name": "c_name",
-          |"nation_name": {"pick": {"objects": "nation",
-          |  "id_field": "n_nationkey", "filter_ids": "rec.c_nationkey",
-          |  "target_fields": "n_name"}}}""".stripMargin
-      Mapping.mapFields(T(s, dir, "customer"), mapping,
-          Map("nation" -> T(s, dir, "nation")), project = true)
-        .orderBy("id")
-    }),
-    // ── §2.5 process_custom_fields ───────────────────────────────────
-    "q12_custom_fields" -> ((s, dir) => {
-      Ops.processCustomFields(T(s, dir, "part"), Seq("p_brand", "p_type"), "cf")
-        .select(col("p_partkey"), to_json(col("cf")).as("cf"))
-        .orderBy("p_partkey")
-    }),
-    // ── §2.7 row hash (MD5, sorted cols, canonical strings) ──────────
-    "q13_row_hash" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      c.select(col("c_custkey"),
-          Snapshot.rowHash(c, Seq("c_name", "c_mktsegment")).as("hash"))
-        .orderBy("c_custkey")
-    }),
-    // ── §2.9 datetime canonicalization (ISO-8601 micros + Z) ─────────
-    "q14_localize_datetime" -> ((s, dir) => {
-      T(s, dir, "events")
-        .select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("iso"))
-        .orderBy("event_id")
-    }),
-    // ── §1.4 schema inference → Singer types ─────────────────────────
-    "q15_singer_schema_gen" -> ((s, dir) => {
-      val schema = T(s, dir, "lineitem").schema
-      val rows = schema.fields.toSeq.map { f =>
-        val prop = SingerSchema.dataTypeToProperty(f.dataType)
-        val tpe = prop.get("type").get(0).asText()
-        val fmt = Option(prop.get("format")).map(_.asText()).getOrElse("")
-        (f.name, tpe, fmt)
-      }
-      import s.implicits._
-      rows.toDF("column_name", "singer_type", "format").orderBy("column_name")
-    }),
-    // ── analytics: aggregation (TPC-H Q1 shape) ──────────────────────
-    "q16_tpch_q1" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast(TimestampType))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum("l_quantity").as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    // ── analytics: multi-join + agg + deterministic top-k ────────────
-    "q17_join_agg_revenue" -> ((s, dir) => {
-      val c = T(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = T(s, dir, "orders")
-      val l = T(s, dir, "lineitem")
-      c.join(o, col("c_custkey") === col("o_custkey"))
-        .join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderkey")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-    // ── analytics: window top-k per group ────────────────────────────
-    "q18_window_topk" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("l_orderkey")
-        .orderBy(col("l_extendedprice").desc, col("l_linenumber"))
-      T(s, dir, "lineitem").filter(col("l_orderkey") < 1000)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select("l_orderkey", "l_linenumber", "l_extendedprice", "rn")
-        .orderBy("l_orderkey", "rn")
-    }),
-    // ── scale: exact dedup ───────────────────────────────────────────
-    "q20_dedup_exact" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val dupes = d.select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      Dedup.exactDedup(d.unionByName(dupes), Seq("text"), "doc_id",
-          assumeUniqueOrder = true)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // ── scale: token counting ────────────────────────────────────────
-    "q21_token_stats" -> ((s, dir) => {
-      T(s, dir, "documents").select(col("doc_id"),
-          length(col("text")).as("chars"),
-          TextAnalysis.tokenCount(col("text")).as("tokens"),
-          TextAnalysis.bpeishTokenCount(col("text")).as("bpeish_tokens"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: quality scoring ───────────────────────────────────────
-    "q22_quality_score" -> ((s, dir) => {
-      T(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: language id ───────────────────────────────────────────
-    "q23_lang_id" -> ((s, dir) => {
-      T(s, dir, "documents").select(col("doc_id"), col("lang"),
-          TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: document fingerprint ──────────────────────────────────
-    "q24_fingerprint" -> ((s, dir) => {
-      T(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fingerprint"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: MinHash near-dup pairs (oracle: brute-force jaccard; the
-    //    16×2 banding makes candidate recall effectively 1 at the
-    //    threshold, so LSH+verify equals the exact pair set. The verify
-    //    threshold sits at 0.55 — a MARGIN above the banding's 0.5 design
-    //    point — so a pair hugging the boundary, whose banding miss
-    //    probability (1−s²)¹⁶ is the largest, cannot turn expected LSH
-    //    recall into a spurious oracle mismatch) ────────────────────────
-    "q25_minhash_neardup" -> ((s, dir) => {
-      Dedup.minhashNearDupPairs(lshInputQ25(s, dir), "doc_id", "text",
-          shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: SimHash near-dup (oracle: DuckDB recomputes the exact
-    //    signatures via the portable md5-prefix token hash; the 16-bit
-    //    chunk blocking is exact for hamming ≤ 3 by pigeonhole) ────────
-    "q26_simhash_neardup" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val dupes = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      Dedup.simhashNearDupPairs(d.unionByName(dupes), "doc_id", "text", maxDist = 3,
-          tokenHash = Dedup.Md5TokenHash)
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: brute-force ANN (exact top-k cosine) ──────────────────
-    "q27_ann_bruteforce" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      Similarity.bruteForceTopK(e, queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("cosine"), 6).as("cosine"))
-        .orderBy("query_id", "rank")
-    }),
-    // ── scale: LSH-bucketed ANN (oracle: DuckDB replays the sign-LSH
-    //    with the same seeded hyperplanes inlined as literals) ─────────
-    "q28_ann_lsh" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      Similarity.lshTopK(e, queries, "vec_id", "embedding", k = 5, planes = 8)
-        .select(col("query_id"), col("rank"), col("neighbor_id"))
-        .orderBy("query_id", "rank")
-    }),
-    // ── scale: embedding vector math ─────────────────────────────────
-    "q29_embedding_stats" -> ((s, dir) => {
-      T(s, dir, "embeddings").select(col("vec_id"),
-          size(col("embedding")).as("dim"),
-          round(Similarity.norm(col("embedding")), 6).as("l2_norm"))
-        .orderBy("vec_id")
-    }),
-    // ── §2.2 singer sink record serialization ────────────────────────
-    "q30_singer_records" -> ((s, dir) => {
-      val ev = T(s, dir, "events").filter(col("event_id") < 100)
-        .select("event_id", "event_type", "value")
-      ev.select(col("event_id"),
-          graft.singer.SingerWriter.recordLine(ev, "events").as("line"))
-        .orderBy("event_id")
-    }),
-    // ── §2.6 parse_df_cols: catalog-typed object parsing ─────────────
-    "q31_parse_df_cols" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = CatalogReader.StreamCatalog("events",
-        StructType(Seq(StructField("props",
-          StructType(Seq(StructField("k", LongType)))))), Nil, Nil)
-      Explode.parseDfCols(T(s, dir, "events"), cat)
-        .select(col("event_id"), col("props.k").as("k"))
-        .orderBy("event_id")
-    }),
-    // ── §2.5 pickregex through the mapping DSL ───────────────────────
-    "q32_pickregex_cf" -> ((s, dir) => {
-      val mapping =
-        """{"pk": "p_partkey",
-          |"CF": {"pickregex": {"regex_field": "^p_(brand|type)$",
-          |                     "return_as_cf": true}}}""".stripMargin
-      Mapping.mapFields(T(s, dir, "part"), mapping)
-        .select(col("pk"), to_json(col("CF")).as("CF"))
-        .orderBy("pk")
-    }),
-    // ── analytics: batch sessionization (gaps-and-islands) ───────────
-    "q33_sessionize" -> ((s, dir) => {
-      val sess = Analytics.sessionize(T(s, dir, "events"), "user_id", "ts", 600L)
-      Analytics.sessionStats(sess, "user_id", "ts")
-        .select(col("user_id"), col("session_seq"),
-          date_format(col("session_start"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("session_start"),
-          date_format(col("session_end"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("session_end"),
-          col("events"))
-        .orderBy("user_id", "session_seq")
-    }),
-    // ── analytics: tumbling event-time windows (batch) ───────────────
-    "q34_windowed_counts" -> ((s, dir) => {
-      Analytics.windowedCounts(T(s, dir, "events"), "ts", "1 hour", Seq("event_type"))
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n"))
-        .orderBy("window_start", "event_type")
-    }),
-    // ── scale: salted two-phase aggregation (skew handling) ──────────
-    "q35_salted_agg" -> ((s, dir) => {
-      Analytics.saltedCountSum(T(s, dir, "events"), Seq("event_type"), "value")
-        .select(col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
-        .orderBy("event_type")
-    }),
-    // ── scale: IVF ANN (oracle: DuckDB replays the whole index build —
-    //    deterministic md5-hash seeding, one Lloyd step, probe + rank) ──
-    "q36_ann_ivf" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
-          k = 5, numCentroids = 16, nProbe = 3, seedHash = Dedup.md5Hash60)
-        .select(col("query_id"), col("rank"), col("neighbor_id"))
-        .orderBy("query_id", "rank")
-    }),
-    // ── scale: bucketed snapshot upsert (delta-bucket rewrite only) ──
-    "q38_bucketed_upsert" -> ((s, dir) => {
-      val store = new BucketedSnapshotStore(s,
-        tmpWorkDir("gs_bsnap_"), numBuckets = 32)
-      val orders = T(s, dir, "orders")
-      val snap = orders.filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val incoming = orders.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), (col("o_totalprice") + 1.0).as("o_totalprice"))
-      store.write("orders", snap, Seq("o_orderkey"))
-      store.upsert("orders", incoming, Seq("o_orderkey"))
-      store.read("orders").get.orderBy("o_orderkey")
-    }),
-    // ── scale: exact n-gram jaccard (oracle-checked similarity math) ─
-    "q39_ngram_jaccard" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      import s.implicits._
-      val pairs = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      Dedup.jaccardForPairs(d, pairs, "doc_id", "text", shingleSize = 1)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a")
-    }),
-    // ── scale: embedding near-dup pairs (oracle: brute-force cosine —
-    //    planted dups are identical vectors, so sign-LSH recall is 1) ──
-    "q40_embedding_neardup" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = e.filter(col("vec_id") < 25)
-        .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
-      Dedup.embeddingNearDupPairs(e.unionByName(planted), "vec_id", "embedding",
-          threshold = 0.999, planes = 8)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: full dedup pipeline, exact → minhash (oracle: exact
-    //    dedup + brute-force-jaccard near-dup drop, mirrored in SQL) ───
-    "q41_dedup_pipeline" -> ((s, dir) => {
-      Dedup.dedupPipeline(lshInputQ41(s, dir),
-          "doc_id", "text", bands = 16, rowsPerBand = 2, threshold = 0.55,
-          assumeUniqueId = true)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // ── scale: salted join equals plain join (skew fallback) ─────────
-    "q42_salted_join" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-        .select("l_orderkey", "l_linenumber", "l_suppkey")
-      val sup = T(s, dir, "supplier").select("s_suppkey", "s_name")
-      Analytics.saltedJoin(li, sup.withColumnRenamed("s_suppkey", "l_suppkey"),
-          Seq("l_suppkey"), saltBuckets = 8)
-        .select("l_orderkey", "l_linenumber", "s_name")
-        .orderBy("l_orderkey", "l_linenumber", "s_name")
-    }),
-    // ── analytics: as-of join (point-in-time lookup) ─────────────────
-    "q44_asof_join" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      // "profile updates": a sparse subset of events carries a new value
-      val updates = ev.filter(col("event_id") % 37 === 0)
-        .select(col("user_id"), col("ts").as("upd_ts"), col("value").as("upd_value"))
-      val probes = ev.filter(col("event_id") % 5 === 0)
-        .select("event_id", "user_id", "ts")
-      Analytics.asofJoin(probes, updates, Seq("user_id"), "ts", "upd_ts", Seq("upd_value"))
-        .select(col("event_id"), col("user_id"), col("upd_value"))
-        .orderBy("event_id")
-    }),
-    // ── analytics: binned range join ─────────────────────────────────
-    "q45_range_join" -> ((s, dir) => {
-      import s.implicits._
-      val tiers = Seq(
-        ("bronze", 0.0, 50000.0), ("silver", 50000.0, 150000.0),
-        ("gold", 150000.0, 300000.0), ("platinum", 300000.0, 1000000.0))
-        .toDF("tier", "lo", "hi")
-      Analytics.rangeJoinBinned(
-          T(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-          tiers, "o_totalprice", "lo", "hi", binWidth = 50000.0)
-        .select("o_orderkey", "tier")
-        .orderBy("o_orderkey")
-    }),
-    // ── scale: winnowed k-gram fingerprints (oracle: DuckDB recomputes
-    //    the winnow over the portable md5-prefix k-gram hashes) ────────
-    "q43_winnowed_fingerprints" -> ((s, dir) => {
-      // fused winnow pass with the portable md5 hash — same fingerprints
-      // the DuckDB oracle replays (HOF-chain parity is spec-asserted)
-      T(s, dir, "documents")
-        .select(col("doc_id"), Dedup.tokensCol(col("text")).as("__toks"))
-        .select(col("doc_id"),
-          size(TextAnalysis.winnowedHashes(col("__toks"), 5, 4, "md5_60"))
-            .as("n_fingerprints"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: connected-components dedup (oracle: brute-force pairs +
-    //    recursive-CTE transitive closure in DuckDB) ────────────────────
-    "q46_dedup_cc" -> ((s, dir) => {
-      val u = lshInputQ46(s, dir)
-      val pairs = Dedup.minhashNearDupPairs(u, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      Dedup.dedupByComponents(u, "doc_id", pairs)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // ── scale: PII redaction (oracle: the same Java∩RE2 regex chain
-    //    replayed with DuckDB regexp_replace 'g') ───────────────────────
-    "q48_pii_redact" -> ((s, dir) => {
-      // plant deterministic PII on every 5th doc so the chain has real work
-      val planted = T(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" contact user"), col("doc_id"),
-            lit("@example.com at 10.0."), col("doc_id") % 256, lit(".1")))
-          .otherwise(col("text")).as("text"))
-      // fused pass: redaction + counts from ONE Matcher chain (the
-      // separate redactPii/piiCounts selections ran the chain twice)
-      planted.withColumn("__pii", TextAnalysis.piiRedactWithCounts(col("text")))
-        .select(col("doc_id"),
-          col("__pii.redacted").as("redacted"),
-          col("__pii.email").as("n_email"), col("__pii.ipv4").as("n_ip"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: deterministic stratified hash-sampling (oracle: the
-    //    md5-prefix hash threshold replayed per stratum in SQL) ─────────
-    "q47_hash_sample" -> ((s, dir) => {
-      Sampling.stratifiedHashSample(T(s, dir, "documents"), "lang", "doc_id",
-          Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1)
-        .select("doc_id", "lang").orderBy("doc_id")
-    }),
-    // ── scale: multimodal decode + feature plumbing (oracle: the stub
-    //    codec arithmetic — md5-derived payload bytes — replayed in SQL) ─
-    "q37_multimodal" -> ((s, dir) => {
-      val media = Multimodal.synthesize(
-        T(s, dir, "part").filter(col("p_partkey") <= 100), "p_partkey")
-      val decoded = Multimodal.decodeAndFeaturize(media)
-      decoded.select(col("media_id"), col("decoded_meta.mime").as("mime"),
-          col("decoded_meta.width").as("width"), col("decoded_meta.height").as("height"),
-          size(col("features")).as("feat_dim"))
-        .orderBy("media_id")
-    }),
-    // ── singer reference-default nulls (oracle: DuckDB rebuilds the same
-    //    RECORD lines — concat_ws skips null fragments exactly like the
-    //    isNotNull-gated fragment build; nested nulls survive via
-    //    to_json(struct_pack)) ──────────────────────────────────────────
-    "q49_singer_nested_nulls" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      val base = c.select(
-        col("c_custkey"),
-        when(col("c_custkey") % 3 === 0, col("c_name")).as("name"),
-        when(col("c_custkey") % 5 =!= 0,
-          struct(col("c_nationkey").as("nk"),
-            when(col("c_custkey") % 2 === 0, col("c_mktsegment")).as("seg"))).as("obj"))
-      base.select(col("c_custkey"),
-          graft.singer.SingerWriter.recordLine(base, "t",
-            nullMode = Some(graft.singer.SingerWriter.NullMode.DropTopLevel)).as("line"))
-        .orderBy("c_custkey")
-    }),
-    // ── use_csv snapshot lifecycle: prime a CSV snapshot, upsert a delta
-    //    through snapshotRecords(useCsv=true), read the committed CSV back
-    //    (header + inferSchema round-trip ⇒ explicit casts for schema
-    //    parity). Same merge math as q07's oracle. ──────────────────────
-    "q51_csv_snapshot_upsert" -> ((s, dir) => {
-      val store = new SnapshotStore(s,
-        tmpWorkDir("gs_csvsnap_"))
-      val orders = T(s, dir, "orders")
-      val snap = orders.filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      store.write("orders", snap, useCsv = true)
-      val incoming = orders.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), (col("o_totalprice") + 1.0).as("o_totalprice"))
-      Snapshot.snapshotRecords(store, "orders", incoming, Seq("o_orderkey"), useCsv = true)
-        .select(col("o_orderkey").cast("bigint").as("o_orderkey"),
-          col("o_totalprice").cast("double").as("o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-    // ── bucketed store point lookup: readForKeys scans only the probed
-    //    keys' buckets (oracle: plain semi-join over the primed snapshot) ─
-    "q50_bucketed_point_lookup" -> ((s, dir) => {
-      import s.implicits._
-      val store = new BucketedSnapshotStore(s,
-        tmpWorkDir("gs_bpl_"), numBuckets = 32)
-      val snap = T(s, dir, "orders").filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      store.write("orders", snap, Seq("o_orderkey"))
-      val keys = (1L to 2000L).toDF("o_orderkey")
-      store.readForKeys("orders", keys, Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-    // ── §2.2 distributed Singer sink: executor-written RECORD parts,
-    //    round-tripped through a text read-back (oracle: DuckDB rebuilds
-    //    the same record lines — so part-file content, not just counts,
-    //    is gated; the single-file writer shares recordLine, spec'd) ─────
-    "q52_singer_distributed" -> ((s, dir) => {
-      val ev = T(s, dir, "events").filter(col("event_id") < 1000)
-        .select("event_id", "event_type", "value")
-      val out = tmpWorkDir("gs_dsinger_")
-      graft.singer.SingerWriter.writeDistributed(ev.repartition(8), "events", out)
-      s.read.text(s"$out/records")
-        .select(get_json_object(col("value"), "$.record.event_id")
-          .cast("bigint").as("event_id"), col("value").as("line"))
-        .orderBy("event_id")
-    }),
-    // ── scale: sequence packing (concat offsets + context-window ids;
-    //    oracle: DuckDB window cumsum replay — shares the family-wide
-    //    tokenization convention that RE2's \s excludes U+000B, latent
-    //    only because testdata carries no vertical tabs, same as q21) ────
-    "q56_pack_sequences" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("tok_len"),
-        pmod(col("doc_id"), lit(8)).as("stratum"))
-      Analytics.packSequences(d, "doc_id", "tok_len", capacity = 2048,
-          strataCol = "stratum")
-        .select(col("doc_id"), col("stratum"), col("offset"), col("pack_id"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: Gopher-style repetition quality signals (oracle: DuckDB
-    //    replays the line/2-gram/adjacent-repeat fractions) ──────────────
-    "q55_repetition_stats" -> ((s, dir) => {
-      // plant repetition on every 4th doc: a duplicated line + a stutter
-      val planted = T(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit("\n"), col("text"), lit("\nagain again again")))
-          .otherwise(col("text")).as("text"))
-      planted
-        .select(col("doc_id"), TextAnalysis.repetitionStats(col("text")).as("r"))
-        .select(col("doc_id"),
-          col("r.dup_line_frac").as("dup_line_frac"),
-          col("r.dup_2gram_frac").as("dup_2gram_frac"),
-          col("r.adj_repeat_frac").as("adj_repeat_frac"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: benchmark decontamination (GPT-3-style n-gram overlap
-    //    removal; oracle: DuckDB replays the shingle intersection) ───────
-    "q54_decontaminate" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val bench = d.filter(col("doc_id") % 17 === 0)
-        .select(col("text").as("bench_text"))
-      Dedup.decontaminate(d, "doc_id", "text", bench, "bench_text",
-          ngram = 3, minMatches = 5)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // ── scale: REAL image decode via the JDK's javax.imageio (oracle:
-    //    the synthesized PNGs' dims/fill arithmetic — values pass only if
-    //    PNG encode → magic sniff → header probe → pixel decode → bilinear
-    //    resize → re-probe all round-trip through the real codec) ────────
-    "q57_image_decode" -> ((s, dir) => {
-      val media = Multimodal.synthesizeImages(
-        T(s, dir, "part").filter(col("p_partkey") <= 150), "p_partkey")
-      val decoded = Multimodal.decodeMeta(media, codec = Multimodal.ImageCodec)
-        .select(col("media_id"), col("payload"),
-          col("decoded_meta.mime").as("mime"),
-          col("decoded_meta.width").cast("long").as("width"),
-          col("decoded_meta.height").cast("long").as("height"))
-      val resized = Multimodal.resize(decoded, 24, 18, codec = Multimodal.ImageCodec)
-      val reprobed = Multimodal.decodeMeta(resized, codec = Multimodal.ImageCodec)
-      val feat = Multimodal.extractFeatures(reprobed, codec = Multimodal.ImageCodec)
-      feat.select(col("media_id"), col("mime"), col("width"), col("height"),
-          col("decoded_meta.width").cast("long").as("r_width"),
-          col("decoded_meta.height").cast("long").as("r_height"),
-          round(element_at(col("features"), 1) * 255).cast("long").as("avg_r"),
-          round(element_at(col("features"), 2) * 255).cast("long").as("avg_g"),
-          round(element_at(col("features"), 3) * 255).cast("long").as("avg_b"))
-        .orderBy("media_id")
-    }),
-    // ── scale: substring-level exact dedup — cross-doc duplicated token
-    //    spans (oracle: DuckDB replays gram grouping + island merge on the
-    //    gram STRINGS; Spark joins on xxhash64 of the same grams) ─────────
-    "q58_duplicate_spans" -> ((s, dir) => {
-      Dedup.duplicateSpans(plantedBoilerplate(s, dir), "doc_id", "text",
-          minSpanTokens = 8)
-        .orderBy("doc_id", "span_start")
-    }),
-    // ── per-doc duplicated-token budget over the same planted corpus
-    //    (the filter signal: fraction of tokens inside cross-doc spans) ───
-    "q59_dup_span_stats" -> ((s, dir) => {
-      Dedup.duplicateSpanStats(plantedBoilerplate(s, dir), "doc_id", "text",
-          minSpanTokens = 8)
-        .filter(col("dup_tokens") > 0)
-        .orderBy("doc_id")
-    }),
-    // ── scale: REAL BPE token counts — greedy min-rank merge loop over a
-    //    learned merge list (oracle: DuckDB recursive CTE replays the
-    //    merge rounds symbol-by-symbol) ────────────────────────────────────
-    "q60_bpe_tokens" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      d.select(col("doc_id"),
-          TextAnalysis.bpeTokenCount(col("text"), bpeMerges).as("bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: SemDeDup — semantic dedup via IVF clusters + within-cluster
-    //    cosine (oracle: DuckDB replays seeding, refinement, assignment —
-    //    the q36 machinery — then the pairwise drop policy) ───────────────
-    "q61_semantic_dedup" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = e.filter(col("vec_id") < 25)
-        .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
-      Dedup.semanticDedup(e.unionByName(planted), "vec_id", "embedding",
-          numCentroids = 16, tau = 0.95, seedHash = Dedup.md5Hash60)
-        .select("vec_id").orderBy("vec_id")
-    }),
-    // ── scale: CDC chunk-level dedup — the substring-dedup scale path
-    //    (~1 probe per avg-chunk instead of per token position; oracle:
-    //    DuckDB replays boundaries, chunk hashes, and the dup budget) ─────
-    "q62_cdc_chunk_stats" -> ((s, dir) => {
-      Dedup.duplicateChunkStats(plantedBoilerplate(s, dir), "doc_id", "text",
-          avgChunkTokens = 8, hashKind = "md5_60")
-        .orderBy("doc_id")
-    }),
-    // ── scale: duplicated-span REMOVAL — cleaned text for affected docs
-    //    (oracle: DuckDB rebuilds the kept-token join per doc) ────────────
-    "q63_strip_spans" -> ((s, dir) => {
-      Dedup.stripDuplicateSpans(plantedBoilerplate(s, dir), "doc_id", "text",
-          minSpanTokens = 8)
-        .orderBy("doc_id")
-    }),
-    // ── scale: REAL audio decode via the JDK's javax.sound.sampled
-    //    (oracle: synthesized PCM16 square waves — duration and RMS only
-    //    match if WAV header parse + PCM decode + windowed RMS are real;
-    //    amplitude/2^15 is float-exact, so no tolerance needed) ──────────
-    "q64_audio_decode" -> ((s, dir) => {
-      val media = Multimodal.synthesizeAudio(
-        T(s, dir, "part").filter(col("p_partkey") <= 150), "p_partkey")
-      val dec = Multimodal.decodeMeta(media, codec = Multimodal.JdkAvCodec)
-      val feat = Multimodal.extractFeatures(dec, codec = Multimodal.JdkAvCodec)
-      feat.select(col("media_id"),
-          col("decoded_meta.mime").as("mime"),
-          col("decoded_meta.duration_ms").as("duration_ms"),
-          round(element_at(col("features"), 1).cast("double"), 6).as("rms"))
-        .orderBy("media_id")
-    }),
-    // ── scale: REAL video container decode — pure-JDK RIFF/AVI parse,
-    //    time-based frame sampling, exact BI_RGB pixel decode (oracle:
-    //    the synthesized AVIs' dims/fill arithmetic — values pass only if
-    //    container parse → avih probe → movi frame walk → DIB pixel
-    //    decode all round-trip through the real parser) ──────────────────
-    "q65_video_frames" -> ((s, dir) => {
-      val media = Multimodal.synthesizeVideos(
-        T(s, dir, "part").filter(col("p_partkey") <= 150), "p_partkey")
-      val dec = Multimodal.decodeMeta(media, codec = Multimodal.JdkAvCodec)
-      Multimodal.sampleFrameStats(dec, everyMs = 80)
-        .select(col("media_id"),
-          col("decoded_meta.mime").as("mime"),
-          col("decoded_meta.width").cast("long").as("width"),
-          col("decoded_meta.height").cast("long").as("height"),
-          col("decoded_meta.duration_ms").as("duration_ms"),
-          col("frame_idx").cast("long").as("frame_idx"),
-          round(col("mean_r")).cast("long").as("mean_r"),
-          round(col("mean_g")).cast("long").as("mean_g"),
-          round(col("mean_b")).cast("long").as("mean_b"))
-        .orderBy("media_id", "frame_idx")
-    }),
-    // ── scale: bigram LM perplexity (CCNet-style quality filter) — train
-    //    on the corpus, score every doc; add-one smoothing. The per-doc
-    //    NLL folds position-sorted arrays so the doubles are
-    //    order-deterministic (oracle: DuckDB retrains the same counts and
-    //    replays the ordered list fold bit-for-bit) ─────────────────────
-    "q66_lm_perplexity" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val lm = TextAnalysis.trainBigramLm(docs, "text", "doc_id")
-      TextAnalysis.perplexity(docs, lm, "text", "doc_id")
-        .select(col("doc_id"), col("n_bigrams"), col("avg_nll"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: vocabulary / Zipf coverage table (tokenizer-training aid;
-    //    oracle: same counts + rank/cumsum windows — integer-exact until
-    //    one final double division) ─────────────────────────────────────
-    "q67_vocab_coverage" -> ((s, dir) => {
-      TextAnalysis.vocabulary(T(s, dir, "documents"), "text", minCount = 2L)
-        .orderBy("rank")
-    }),
-    // ── scale: quality-aware canonical selection — near-dup components
-    //    keep their best-quality member, not the smallest id (oracle:
-    //    q46's recursive-CTE components + argmax by (quality, id)) ──────
-    "q70_dedup_keep_best" -> ((s, dir) => {
-      val u = lshInputQ46(s, dir)
-        .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-      val pairs = Dedup.minhashNearDupPairs(u, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      Dedup.dedupByComponentsKeepBest(u, "doc_id", pairs, "quality")
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // Bloom-accelerated first-seen ingest: history = two committed
-    // generations (write + upsert → per-bucket bloom sidecars); incoming
-    // mixes already-seen ids with brand-new ones. The result is EXACT
-    // (bloom clears definitely-new rows, an anti-join over only the
-    // candidate buckets confirms the rest), so a plain SQL anti-join is a
-    // faithful oracle no matter which rows the fpp tail routes to the
-    // exact path.
-    // ── scale: right-to-be-forgotten — targeted delete from the bucketed
-    //    store under the same generation+manifest commit protocol as
-    //    upsert: delete by pk (bucket-pruned) AND by a non-bucket column
-    //    (scan discovery, affected-bucket rewrite), then a full read-back;
-    //    a second upsert proves forgotten keys re-ingest as new (oracle:
-    //    DuckDB replays the survivor set + the re-ingest arithmetic) ──────
-    "q312_forget_store" -> ((s, dir) => {
-      val store = new BucketedSnapshotStore(s, tmpWorkDir("gs_forget_"),
-        numBuckets = 16, keyBloomFpp = 0.01)
-      val d = T(s, dir, "documents").select("doc_id", "source", "n_chars")
-      store.write("docs", d, Seq("doc_id"))
-      // RTBF wave 1: ids ≡ 0 (mod 7), by pk → bucket-pruned delete
-      store.delete("docs", d.filter(col("doc_id") % 7 === 0)
-        .select("doc_id"), Seq("doc_id"), Seq("doc_id"))
-      // RTBF wave 2: every doc of one source, by a NON-pk column → the
-      // scan-discovery path (prunable bucket columns absent from keys)
-      val bySource = d.select("source").distinct().orderBy("source").limit(1)
-      store.delete("docs", bySource, Seq("source"), Seq("doc_id"))
-      // forgotten ids re-ingest as brand-new rows (sidecars rebuilt)
-      store.upsert("docs", d.filter(col("doc_id") % 14 === 0)
-        .select(col("doc_id"), col("source"),
-          (col("n_chars") + 1000000L).as("n_chars")), Seq("doc_id"))
-      store.read("docs").get.orderBy("doc_id")
-    }),
-    "q71_incremental_dedup" -> ((s, dir) => {
-      val store = new BucketedSnapshotStore(s, tmpWorkDir("gs_bloom_"),
-        numBuckets = 32, keyBloomFpp = 0.01)
-      val d = T(s, dir, "documents")
-      store.write("docs", d.filter(col("doc_id") % 3 === 0)
-        .select("doc_id", "source", "n_chars"), Seq("doc_id"))
-      store.upsert("docs", d.filter(col("doc_id") % 7 === 0)
-        .select("doc_id", "source", "n_chars"), Seq("doc_id"))
-      val incoming = d.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .unionByName(d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            col("source"), col("n_chars")))
-      store.incrementalNew("docs", incoming, Seq("doc_id"))
-        .orderBy("doc_id")
-    }),
-    // Crawl-ingest front door: synthetic HTML (tags, script/style with
-    // contents, entities, hard whitespace) wrapped around documents.text,
-    // stripped back to clean text by the fused StripMarkup scan. The
-    // oracle replays the stage chain with RE2 regexes + a replace chain
-    // (decode &amp; last ≡ the single-pass decoder on this input).
-    "q73_strip_markup" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><title>t</title><style type=\"text/css\">p { color: #fff; }" +
-          "</style></head><body><h1>"),
-        col("source"),
-        lit("</h1><SCRIPT lang=\"js\">var x = 1; if (x < 2) { x = 3; }</SCRIPT>" +
-          "<p class=\"main\">Tom &amp; Jerry &lt;3 &quot;"),
-        col("text"),
-        lit("&quot;&gt;<br/>end&nbsp;of&nbsp;doc</p></body></html>"))
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.stripMarkup(html).as("clean"))
-        .orderBy("doc_id")
-    }),
-    // Corpus-wide KNN report, IVF-blocked: every vector's top-3 cosine
-    // neighbors within its cluster. md5 seed hash so DuckDB can replay
-    // the index bit-for-bit (same convention as q61/q36).
-    "q72_knn_join" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings").select("vec_id", "embedding")
-      Similarity.knnJoin(e, "vec_id", "embedding", k = 3,
-          numCentroids = 16, seedHash = Dedup.md5Hash60)
-        .select(col("query_id"), col("rank"), col("neighbor_id"))
-        .orderBy("query_id", "rank")
-    }),
-    // Incremental near-dup ingest: history is INDEXED once (persisted LSH
-    // band postings + shingle arrays in a prefix-bucketed store); the
-    // incoming batch probes only the band buckets it collides with and
-    // verifies candidates with exact Jaccard against the stored arrays.
-    // The oracle brute-forces every (incoming, history) pair ≥ 0.55 — the
-    // banding's recall at these parameters is separately REQUIREd by the
-    // q53 margin probe over this exact input.
-    "q74_neardup_ingest" -> ((s, dir) => {
-      val idx = new NearDupIndex(s, tmpWorkDir("gs_ndix_"), shingleSize = 3,
-        bands = 16, rowsPerBand = 2, threshold = 0.55, numBuckets = 32)
-      val (history, incoming) = ndixInputs(s, dir)
-      idx.add(history, "doc_id", "text")
-      idx.probe(incoming, "doc_id", "text")
-        .select(col("inc_id"), col("hist_id"),
-          round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("inc_id", "hist_id")
-    }),
-    // Feature-hashed text embeddings: tokens hash to signed dimensions,
-    // signed counts l2-normalize — model-free vectors for the ANN tier.
-    // Exploded to (doc_id, idx, v) rows; the oracle replays the portable
-    // md5-60 hash arithmetic and the float rounding exactly.
-    "q75_hash_embed" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          posexplode(TextAnalysis.hashEmbedding(col("text"), 64, portable = true)))
-        .select(col("doc_id"), col("pos").as("idx"),
-          round(col("col").cast("double"), 4).as("v"))
-        .orderBy("doc_id", "idx")
-    }),
-    // Linear classifier scoring over hashed features (fastText-style
-    // quality filter inference, shuffle-free): fixed deterministic weight
-    // vector w_i = ((i*37) % 21 - 10)/10, bias 0.25; the oracle rebuilds
-    // the q75 vectors and replays the dot product + sigmoid.
-    "q76_classifier_score" -> ((s, dir) => {
-      val w = (0 until 64).map(i => ((i * 37) % 21 - 10) / 10.0)
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          round(TextAnalysis.hashedLinearScore(col("text"), w, bias = 0.25,
-            portable = true), 4).as("score"))
-        .orderBy("doc_id")
-    }),
-    // Unicode canonicalization: deterministic noise (combining accents +
-    // control chars + DEL) is injected around each document, then
-    // normalizeText must NFC-compose and collapse — the oracle replays
-    // with DuckDB's nfc_normalize + the same [\x00-\x20\x7F]+ regex.
-    "q77_normalize_text" -> ((s, dir) => {
-      val noisy = concat(lit("Cafe\u0301\u0007  "), col("text"),
-        lit("\tno\u0308el\u007f"))
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.normalizeText(noisy).as("clean"))
-        .orderBy("doc_id")
-    }),
-    // Token-budget curation: keep the best-quality docs until 15k
-    // cumulative tokens. Ordering uses the 6-dp-rounded quality —
-    // q22-proven equal across engines, so the cross-engine double
-    // ordering is exact; ties break on doc_id.
-    "q79_token_budget" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        round(TextAnalysis.qualityScore(col("text")), 6).as("quality"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("ntok"))
-      Sampling.selectByTokenBudget(d, "doc_id", "ntok", "quality",
-          budget = 15000L)
-        .orderBy("doc_id")
-    }),
-    // Equal-token shard assignment: shard_id = exclusive-cumsum DIV 2000
-    // under doc_id order — deterministic training-shard packing.
-    "q80_token_shards" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("ntok"))
-      Sampling.assignTokenShards(d, "doc_id", "ntok", targetTokens = 2000L)
-        .orderBy("doc_id")
-    }),
-    // Perceptual image near-dup: 9×8 grayscale gradient PNGs (pixel
-    // formula replayable in SQL), clones of every 10th image perturb one
-    // corner pixel → Hamming ≤ 1 from their base. Passes only if PNG
-    // encode → decode → luma → dHash bit extraction round-trips exactly;
-    // the oracle brute-forces all pairs from the pixel arithmetic.
-    "q81_image_neardup" -> ((s, dir) => {
-      val ids = T(s, dir, "part").filter(col("p_partkey") <= 150)
-        .select(col("p_partkey").cast("long").as("media_id"))
-      val base = ids.select(col("media_id"), col("media_id").as("salt"),
-        lit(0).as("bump"))
-      val clones = ids.filter(col("media_id") % 10 === 0)
-        .select((col("media_id") + 1000L).as("media_id"),
-          col("media_id").as("salt"), lit(8).as("bump"))
-      val media = Multimodal.synthesizeGradientImages(base.unionByName(clones))
-      Multimodal.imageNearDupPairs(media, "media_id", maxDist = 3)
-        .orderBy("id_a", "id_b")
-    }),
-    // Audio near-dup via RMS-delta fingerprints: stepped square-wave WAVs
-    // (per-window amplitude formula replayable in SQL; RMS of a ±A window
-    // is exactly A/32768), clones perturb the first window. Passes only
-    // if WAV encode → javax.sound decode → windowed RMS → bit extraction
-    // round-trips exactly; the oracle brute-forces pairs from the
-    // amplitude arithmetic.
-    "q82_audio_neardup" -> ((s, dir) => {
-      val ids = T(s, dir, "part").filter(col("p_partkey") <= 150)
-        .select(col("p_partkey").cast("long").as("media_id"))
-      val base = ids.select(col("media_id"), col("media_id").as("salt"),
-        lit(0).as("bump"))
-      val clones = ids.filter(col("media_id") % 10 === 0)
-        .select((col("media_id") + 1000L).as("media_id"),
-          col("media_id").as("salt"), lit(5000).as("bump"))
-      val media = Multimodal.synthesizeSteppedWavs(base.unionByName(clones))
-      Multimodal.audioNearDupPairs(media, "media_id", windowSamples = 64,
-          maxDist = 3)
-        .orderBy("id_a", "id_b")
-    }),
-    // Token-window chunking with overlap (sequence prep): 64-token
-    // windows every 48 tokens; one row per chunk with its start offset,
-    // token count, and text.
-    "q78_chunk_tokens" -> ((s, dir) => {
-      TextAnalysis.chunkTokens(T(s, dir, "documents"), "doc_id", "text",
-          window = 64, stride = 48)
-        .select(col("doc_id"), col("start").cast("long").as("start"),
-          col("n_tokens").cast("long").as("n_tokens"), col("chunk_text"))
-        .orderBy("doc_id", "start")
-    }),
-    // ── scale: cross-doc duplicated-LINE stats (Dolma line dedup signal;
-    //    oracle: DuckDB splits the same lines, groups trimmed content
-    //    with the min≠max distinct-doc test, recounts per doc) ──────────
-    "q68_dup_line_stats" -> ((s, dir) => {
-      Dedup.duplicateLineStats(plantedLines(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // ── scale: cross-doc duplicated-LINE removal — only affected docs
-    //    rebuild (oracle: DuckDB rebuilds the kept lines in order) ──────
-    "q69_strip_dup_lines" -> ((s, dir) => {
-      Dedup.stripDuplicateLines(plantedLines(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // ── scale: Count-Min-sketch heavy hitters — bounded-memory term
-    //    frequency estimation (d×w counter grid; est ≥ cnt always);
-    //    threshold = 1/30 of total token mass (oracle: DuckDB replays
-    //    every md5-bucketed cell and the min-over-rows estimate) ─────────
-    "q90_cms_heavy_hitters" -> ((s, dir) => {
-      Sketches.cmsHeavyHittersByTotalFraction(
-          T(s, dir, "documents").select("text"), "text",
-          depth = 4, width = 1024, divisor = 30)
-        .orderBy("term")
-    }),
-    // ── scale: DSIR importance weights — hashed-bigram log-likelihood
-    //    ratio of every doc against the src0 target sample (oracle: DuckDB
-    //    replays bucket hashing, smoothing, and the bucket-sorted fold) ──
-    "q91_importance_weights" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      // md5_60 here so the DuckDB oracle replays every bucket; production
-      // default is xxhash64 (benchQueries measures that path, as q26/q36)
-      Importance.importanceWeights(
-          d.select("doc_id", "text"),
-          d.filter(col("source") === "src0").select("text"),
-          "doc_id", "text", buckets = 4096, alpha = 0.5, hashKind = "md5_60")
-        .select(col("doc_id"), round(col("logw"), 6).as("logw"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: hybrid retrieval — BM25 + embedding-cosine candidates
-    //    fused by reciprocal-rank (oracle: DuckDB replays both rankers
-    //    with the term-sorted bm25 fold and the 1/(60+rank) fusion) ──────
-    "q92_hybrid_rrf" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val e = T(s, dir, "embeddings")
-      val qv = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).map(_.toDouble).toSeq
-      Ranking.hybridSearch(d, "doc_id", "text", e, "vec_id", "embedding",
-          Seq("join", "merge", "filter"), qv,
-          candidates = 50, k0 = 60, topK = 20)
-        .select(col("doc_id"), col("rank_lex"), col("rank_sem"),
-          round(col("rrf"), 6).as("rrf"), col("rank"))
-        .orderBy("rank")
-    }),
-    // ── scale: k-means TRAINING — assignment as one fused argmax-dot
-    //    projection over augmented vectors, (cluster, dim)-keyed mean
-    //    update; deterministic folds make every round replayable (oracle:
-    //    rounds unrolled in SQL — scores, argmin window, id-sorted means) ─
-    "q98_kmeans_train" -> ((s, dir) => {
-      Training.trainKMeans(T(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 4, rounds = 3, deterministic = true)
-        .select(col("cluster"), col("dim"), round(col("value"), 6).as("value"))
-        .orderBy("cluster", "dim")
-    }),
-    // ── scale: corpus version diff — release auditing between corpus
-    //    snapshots: per-source added/removed/changed counts + net token
-    //    drift; the diff join shuffles (id, hash, ntok) only (oracle:
-    //    DuckDB full-outer text compare) ──────────────────────────────────
-    "q97_corpus_diff" -> ((s, dir) => {
-      val v1 = T(s, dir, "documents").select("doc_id", "source", "text")
-      val kept = v1.filter(col("doc_id") % 13 =!= 0)
-        .withColumn("text", when(col("doc_id") % 10 === 0,
-          concat(col("text"), lit(" revised"))).otherwise(col("text")))
-      val added = v1.filter(col("doc_id") < 50)
-        .select((col("doc_id") + 300000).as("doc_id"), col("source"),
-          concat(lit("fresh content for doc "), col("doc_id")).as("text"))
-      Diff.corpusDiffReport(v1, kept.unionByName(added),
-          "doc_id", "source", "text")
-        .orderBy("source")
-    }),
-    // ── scale: quality-classifier TRAINING — full-batch logistic GD over
-    //    hashed bigram features; deterministic folds make the whole run
-    //    replayable (oracle: the training loop unrolled in SQL — per-round
-    //    z fold, sigmoid residuals, doc-sorted gradient fold, update) ────
-    "q96_lr_train" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          (col("source") === "src0").cast("int").as("label"))
-      Training.trainLogistic(d, "doc_id", "text", "label", buckets = 256,
-          rounds = 3, learningRate = 0.5, hashKind = "md5_60",
-          deterministic = true)
-        .select(col("bucket"), round(col("w"), 6).as("w"))
-        .orderBy("bucket")
-    }),
-    // ── scale: HyperLogLog distinct shingles per source — deterministic
-    //    md5-based registers, mergeable m-bounded state (oracle: DuckDB
-    //    replays every register and the α·m²/Z estimate, small-range
-    //    correction included) ───────────────────────────────────────────
-    "q94_hll_distinct" -> ((s, dir) => {
-      // the exploded (source, shingle) frame feeds both the register build
-      // and the exact-count verify column — checkpoint it once
-      val sh = T(s, dir, "documents")
-        .select(col("source"), explode(Dedup.shingles(col("text"), 3)).as("sh"))
-        .localCheckpoint(true)
-      val est = Sketches.hllEstimate(sh, Seq("source"), "sh", m = 256)
-      sh.groupBy("source").agg(countDistinct(col("sh")).as("exact_distinct"))
-        .join(est, Seq("source"))
-        .select(col("source"), col("exact_distinct"), round(col("est"), 6).as("est"))
-        .orderBy("source")
-    }),
-    // ── scale: resample + forward-fill — per-user 6h grid over the event
-    //    stream, last-in-bucket then ffill (oracle: DuckDB rebuilds the
-    //    grid with generate_series-equivalent ranges and an
-    //    ignore-nulls last_value window) ──────────────────────────────────
-    "q95_resample_ffill" -> ((s, dir) => {
-      Analytics.resampleFfill(
-          T(s, dir, "events").filter(col("user_id") < 40),
-          Seq("user_id"), "ts", "value",
-          stepMicros = 6L * 3600 * 1000000, orderCol = "event_id")
-        .select(col("user_id"), col("bucket_ts"),
-          round(col("value"), 6).as("value"), col("has_event"))
-        .orderBy("user_id", "bucket_ts")
-    }),
-    // ── scale: containment dedup — verbatim quotes/subsets whose overlap
-    //    coefficient ≥ 0.9 though their Jaccard is tiny; every 7th doc
-    //    plants a 25-token quote (oracle: DuckDB brute-forces every pair's
-    //    |A∩B|/min(|A|,|B|)) ─────────────────────────────────────────────
-    "q93_containment" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val quotes = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat_ws(" ", slice(Dedup.tokensCol(col("text")), 1, 25)).as("text"))
-      Dedup.containmentPairs(d.unionByName(quotes), "doc_id", "text",
-          shingleSize = 3, threshold = 0.9)
-        .select(col("id_a"), col("id_b"),
-          round(col("containment"), 6).as("containment"))
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: per-group percentile-rank normalization — score → its
-    //    percentile within its source (oracle: DuckDB row_number + count
-    //    windows, (pos−1)/(n−1)) ──────────────────────────────────────────
-    // ── scale: ingest-volume anomaly monitor — daily counts vs trailing
-    //    discrete median, full flagged report (oracle: DuckDB replays the
-    //    count aggregate, the sorted window median, and the flags) ────────
-    "q115_volume_anomalies" -> ((s, dir) => {
-      Analytics.volumeAnomalies(T(s, dir, "events"), "ts", "event_type",
-          windowDays = 7)
-        .orderBy("event_type", "day")
-    }),
-    // ── scale: user-journey transition matrix — consecutive event-type
-    //    pairs per user, row-normalized (oracle: DuckDB replays the keyed
-    //    lag window and the normalization) ─────────────────────────────────
-    "q114_transitions" -> ((s, dir) => {
-      Analytics.transitionMatrix(T(s, dir, "events"), "user_id", "ts",
-          "event_type", "event_id")
-        .orderBy("from_type", "to_type")
-    }),
-    // ── scale: rolling 7-day distinct users via HLL register MERGE —
-    //    daily registers are the only state, window merge is max(M) per
-    //    (day, bucket) (oracle: DuckDB replays registers, fan-out, merge,
-    //    and the α·m²/Z estimate) ─────────────────────────────────────────
-    "q111_hll_rolling" -> ((s, dir) => {
-      Sketches.hllRollingDistinct(T(s, dir, "events"), "ts", "user_id",
-          m = 256, windowDays = 7)
-        .select(col("day"), round(col("est"), 6).as("est"))
-        .orderBy("day")
-    }),
-    // ── scale: cohort retention matrix — first-touch weekly cohorts ×
-    //    week offsets, integer-exact until one final division (oracle:
-    //    DuckDB replays first-touch, distinct activity, and the matrix) ───
-    "q112_cohort_retention" -> ((s, dir) => {
-      Analytics.cohortRetention(T(s, dir, "events"), "user_id", "ts")
-        .orderBy("cohort_week", "week_offset")
-    }),
-    // ── scale: ordered funnel — users reaching each step strictly after
-    //    their earliest prior-step completion (oracle: DuckDB replays the
-    //    chained min-time semantics) ─────────────────────────────────────
-    "q113_funnel" -> ((s, dir) => {
-      Analytics.funnel(T(s, dir, "events"), "user_id", "ts", "event_type",
-          Seq("view", "click", "purchase"))
-        .orderBy("step_idx")
-    }),
-    // ── scale: TrustRank / personalized PageRank — trust propagation from
-    //    a seed whitelist (nation-0 customers) over the same graph; rank =
-    //    proximity to trusted nodes, unreachable components exactly 0
-    //    (oracle: unrolled rounds with the seeded teleport vector) ────────
-    "q110_trustrank" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      val seeds = T(s, dir, "customer")
-        .filter(col("c_nationkey") === 0)
-        .select(concat(lit("c"), col("c_custkey")).as("n"))
-      Graph.personalizedPageRank(Graph.bidirect(el, "a", "b"), "src", "dst",
-          seeds, "n", rounds = 3, damping = 0.85, deterministic = true)
-        .select(col("node"), round(col("rank"), 9).as("rank"))
-        .orderBy("node")
-    }),
-    // ── scale: incremental fuzzy ingest — persistent deletion-variant
-    //    index, batch probes only its colliding buckets (oracle: DuckDB
-    //    brute-forces every incoming×history levenshtein) ─────────────────
-    "q109_fuzzy_ingest" -> ((s, dir) => {
-      val c = T(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-      val ix = new FuzzyIndex(s, tmpWorkDir("gs_fzix_"), maxDist = 1,
-        numBuckets = 32)
-      ix.add(c.filter(col("c_custkey") % 2 === 0), "c_custkey", "c_name")
-      ix.probe(c.filter(col("c_custkey") % 2 === 1), "c_custkey", "c_name")
-        .orderBy("inc_id", "hist_id")
-    }),
-    // ── scale: edit-distance fuzzy pairs — deletion-neighborhood blocking
-    //    + exact levenshtein verify, complete recall at maxDist (oracle:
-    //    DuckDB brute-forces every pair) ──────────────────────────────────
-    "q108_edit_distance" -> ((s, dir) => {
-      // customer names are UNIQUE strings (the operator contract: collapse
-      // exact duplicates first — part names are 64 values x hundreds of
-      // copies, whose quadratic dist-0 output measures nothing)
-      Dedup.editDistancePairs(
-          T(s, dir, "customer").select("c_custkey", "c_name"),
-          "c_custkey", "c_name", maxDist = 1)
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: parent–child totals reconciliation — exact-cents audit of
-    //    o_totalprice vs its line sums (orphans + deviation stats, all
-    //    longs) (oracle: DuckDB replays cents, sums, and deviations) ───────
-    "q164_reconcile_totals" -> ((s, dir) => {
-      Profiling.reconcileTotals(T(s, dir, "orders"), "o_orderkey",
-        "o_totalprice", T(s, dir, "lineitem"), "l_orderkey",
-        col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
-          (lit(1.0) + col("l_tax")))
-    }),
-    // ── scale: DAU/WAU stickiness — exact trailing-window distinct via
-    //    the bounded day fan-out of the (day, user) frame (q111's rolling
-    //    HLL is the sketch twin) (oracle: DuckDB replays days, fan-out,
-    //    and both distincts) ───────────────────────────────────────────────
-    "q165_stickiness" -> ((s, dir) => {
-      Analytics.stickiness(T(s, dir, "events"), "user_id", "ts",
-          windowDays = 7)
-        .select(col("day"), col("dau"), col("wau"),
-          round(col("stickiness"), 6).as("stickiness"))
-        .orderBy("day")
-    }),
-    // ── scale: per-key EWMA smoothing — the monitoring smoother over
-    //    daily volumes, every step emitted from one deterministic fold
-    //    (oracle: DuckDB replays the fold per prefix via list_reduce) ──────
-    "q166_ewma" -> ((s, dir) => {
-      val daily = T(s, dir, "events")
-        .select(col("event_type"),
-          unix_micros(col("ts").cast("timestamp")).as("__us"))
-        .withColumn("day", expr("__us DIV 86400000000"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("cnt"))
-      Analytics.ewmaPerKey(daily, "event_type", "day", "cnt", alpha = 0.3)
-        .select(col("event_type"), col("day"), col("v"),
-          round(col("ewma"), 6).as("ewma"))
-        .orderBy("event_type", "day")
-    }),
-    // ── scale: CUSUM changepoint scores — integer-exact closed form
-    //    (S = Y − min(0, running-min Y)), two window passes, no recursion
-    //    (oracle: DuckDB replays both windows) ──────────────────────────────
-    "q167_cusum" -> ((s, dir) => {
-      val daily = T(s, dir, "events")
-        .select(col("event_type"),
-          unix_micros(col("ts").cast("timestamp")).as("__us"))
-        .withColumn("day", expr("__us DIV 86400000000"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("cnt"))
-      Analytics.cusum(daily, "event_type", "day", "cnt", k = 70L, h = 30L)
-        .orderBy("event_type", "day")
-    }),
-    // ── scale: small-files compaction plan — bin = exclusive-prefix-sum
-    //    DIV target over the file listing, the q80 distributed-cumsum
-    //    idiom + a bin rollup (oracle: DuckDB replays the cumsum) ──────────
-    "q168_compaction_plan" -> ((s, dir) => {
-      Layout.compactionPlan(
-          T(s, dir, "documents").select("doc_id", "n_chars"),
-          "doc_id", "n_chars", targetBytes = 10000L)
-        .orderBy("bin")
-    }),
-    // ── scale: 2-D Pareto frontier — non-dominated rows via the
-    //    distributed running-max sweep, never a one-task global window
-    //    (oracle: DuckDB replays the preceding-max window) ─────────────────
-    "q169_pareto_frontier" -> ((s, dir) => {
-      Analytics.paretoFrontier2D(
-          T(s, dir, "part").select("p_partkey", "p_size", "p_retailprice"),
-          "p_partkey", "p_size", "p_retailprice")
-        .orderBy("p_partkey")
-    }),
-    // ── scale: Cohen's kappa — chance-corrected rater agreement from the
-    //    contingency cells, exact-long statistics + one fixed-paren
-    //    division chain (oracle: DuckDB replays both raters, cells,
-    //    marginals, and the sorted pe fold) ─────────────────────────────────
-    "q170_cohens_kappa" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(
-        (TextAnalysis.tokenCount(col("text")) >= 56).as("rater_a"),
-        (size(array_distinct(split(trim(col("text")), "\\s+"))) >= 25)
-          .as("rater_b"))
-      Profiling.cohensKappa(d, "rater_a", "rater_b")
-        .select(col("n"), round(col("po"), 6).as("po"),
-          round(col("pe"), 6).as("pe"), round(col("kappa"), 6).as("kappa"))
-    }),
-    // ── scale: Kish effective sample size per source — (Σw)²/Σw² on
-    //    exact long token weights, the information-content readout behind
-    //    weighted-mix decisions (oracle: DuckDB replays both sums and the
-    //    divisions) ─────────────────────────────────────────────────────────
-    "q171_effective_sample_size" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("source"),
-        TextAnalysis.tokenCount(col("text")).as("w"))
-      Sampling.effectiveSampleSize(d, "source", "w")
-        .select(col("source"), col("n"), col("sum_w"), col("sum_w2"),
-          round(col("ess"), 6).as("ess"),
-          round(col("ess_ratio"), 6).as("ess_ratio"))
-        .orderBy("source")
-    }),
-    // ── scale: multi-class confusion matrix — per-class TP/FP/FN +
-    //    precision/recall/F1 of the q23 language-ID against truth labels
-    //    (oracle: DuckDB replays the predictor, cells, and the fixed-paren
-    //    ratio chain) ───────────────────────────────────────────────────────
-    "q172_confusion_matrix" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("lang"),
-        TextAnalysis.langId(col("text")).as("pred"))
-      Profiling.confusionMatrix(d, "lang", "pred")
-        .select(col("class"), col("tp"), col("fp"), col("fn"),
-          col("support"), round(col("precision"), 6).as("prec"),
-          round(col("recall"), 6).as("rec"), round(col("f1"), 6).as("f1"))
-        .orderBy("class")
-    }),
-    // ── scale: exact tie-aware ROC-AUC — integer midrank machinery on the
-    //    score-cardinality frame, distributed cumsum, one final division
-    //    (oracle: DuckDB replays the q22 scorer, midranks, and the
-    //    Mann-Whitney identity) ─────────────────────────────────────────────
-    "q173_auc" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(
-        round(TextAnalysis.qualityScore(col("text")), 6).as("score"),
-        (col("lang") === "en").as("label"))
-      Analytics.aucRoc(d, "score", "label")
-        .select(col("n"), col("n_pos"), col("n_neg"),
-          round(col("auc"), 6).as("auc"))
-    }),
-    // ── scale: calibration curve + ECE — per-confidence-bin predicted-vs-
-    //    empirical rates with the n-weighted |gap| rollup (oracle: DuckDB
-    //    replays the scorer, bins, sorted folds, and ECE) ──────────────────
-    "q174_calibration" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        round(TextAnalysis.qualityScore(col("text")), 6).as("score"),
-        (col("lang") === "en").as("label"))
-      Analytics.calibrationCurve(d, "doc_id", "score", "label", bins = 10,
-          deterministic = true)
-        .select(col("bin"), col("n"), col("pos"),
-          round(col("conf"), 6).as("conf"), round(col("acc"), 6).as("acc"),
-          round(col("gap"), 6).as("gap"), round(col("ece"), 6).as("ece"))
-        .orderBy("bin")
-    }),
-    // ── scale: per-group winsorization — clamp into exact order-statistic
-    //    [p05, p95] bounds; comparisons only, no FP arithmetic (oracle:
-    //    DuckDB replays the rank bounds and the clamp) ─────────────────────
-    "q175_winsorize" -> ((s, dir) => {
-      Analytics.winsorizePerGroup(
-          T(s, dir, "events").select(col("event_type"), col("event_id"),
-            col("value")),
-          "event_type", "event_id", "value", lo = 0.05, hi = 0.95)
-        .orderBy("event_type", "event_id")
-    }),
-    // ── scale: chi-square independence + Cramér's V — the significance
-    //    companion to q151's MI; zero cells in closed form, only observed
-    //    cells enumerated (oracle: DuckDB replays cells, marginals, both
-    //    sorted folds, and the closed-form correction) ─────────────────────
-    "q176_chi_square" -> ((s, dir) => {
-      Profiling.chiSquareIndependence(
-          T(s, dir, "orders").select("o_orderpriority", "o_orderstatus"),
-          "o_orderpriority", "o_orderstatus", deterministic = true)
-        .select(col("n"), col("r"), col("c"), col("dof"),
-          round(col("chi2"), 6).as("chi2"),
-          round(col("cramers_v"), 6).as("cramers_v"))
-    }),
-    // ── scale: multiset table fingerprint — order-independent checksum
-    //    for source/target reconciliation; (rowHash, multiplicity) pairs
-    //    XOR'd so value AND count changes both move it (oracle: DuckDB
-    //    replays hashes, multiplicities, and the XOR) ──────────────────────
-    "q177_table_fingerprint" -> ((s, dir) => {
-      val d = T(s, dir, "orders").select(col("o_orderpriority"),
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        round(col("o_totalprice") * lit(100.0)).cast("long").as("cents"))
-      Profiling.tableFingerprint(d, Seq("o_orderpriority"),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "cents"))
-        .orderBy("o_orderpriority")
-    }),
-    // ── scale: KMV bottom-k quantile sketch — the MERGEABLE quantile
-    //    estimator completing the sketch triad (CMS=heavy hitters,
-    //    HLL=distinct); sample is a pure function of (id, seed) (oracle:
-    //    DuckDB replays priorities, the bottom-k cut, and sample ranks) ────
-    "q178_kmv_quantiles" -> ((s, dir) => {
-      val sample = Sketches.kmvSample(
-        T(s, dir, "events").select(col("event_id"), col("value")),
-        "event_id", "value", k = 256, seed = 7L)
-      Sketches.kmvQuantiles(sample, "value", Seq(0.1, 0.5, 0.9, 0.99))
-        .select(col("q"), col("est"), col("sample_size"))
-        .orderBy("q")
-    }),
-    // ── scale: one-way ANOVA — does `value` genuinely differ across event
-    //    types beyond within-group noise; sufficient statistics in one
-    //    scan, sorted folds on the gate path (oracle: DuckDB replays both
-    //    fold levels and the F chain) ──────────────────────────────────────
-    "q179_anova" -> ((s, dir) => {
-      Analytics.anovaOneWay(
-          T(s, dir, "events").select(col("event_type"), col("event_id"),
-            col("value")),
-          "event_type", "event_id", "value", deterministic = true)
-        .select(col("k"), col("n"), round(col("ssb"), 6).as("ssb"),
-          round(col("ssw"), 6).as("ssw"), col("df1"), col("df2"),
-          round(col("f"), 6).as("f"))
-    }),
-    // ── scale: missing-id-range report — ingest-completeness audit via
-    //    the id−rank islands trick on the pruned per-(range, group) rank
-    //    core; the only window runs over the gaps-sized islands frame
-    //    (oracle: DuckDB replays ranks, islands, and the lag) ──────────────
-    "q181_id_gaps" -> ((s, dir) => {
-      // lineitem's order keys have real holes (the q164 orphan orders) —
-      // the audit this report exists to surface
-      Profiling.idGapReport(
-          T(s, dir, "lineitem").select(lit("lineitem").as("tbl"),
-            col("l_orderkey")),
-          "tbl", "l_orderkey")
-        .orderBy("gap_start")
-    }),
-    // ── scale: day-of-week seasonality index — the seasonal denominator a
-    //    volume monitor divides by before alarming (q115's adjusted twin);
-    //    integer epoch-day weekday, two-level sorted folds (oracle: DuckDB
-    //    replays weekday arithmetic and both folds) ─────────────────────────
-    "q182_dow_index" -> ((s, dir) => {
-      Analytics.dayOfWeekIndex(T(s, dir, "events"), "ts", "event_id",
-          "value", deterministic = true)
-        .select(col("dow"), col("n"), round(col("mean"), 6).as("mean"),
-          round(col("idx"), 6).as("idx"))
-        .orderBy("dow")
-    }),
-    // ── scale: interval merge + coverage — per-user busy-time islands over
-    //    [ts, ts + floor(value) minutes] spans; the gaps-and-islands sweep
-    //    in the distributed-cumsum idiom (range exchange + per-(range, key)
-    //    prefix-max/prefix-count offsets, never a corpus-wide per-key
-    //    window). Integer micros end-to-end (oracle: DuckDB running-max
-    //    window replay) ───────────────────────────────────────────────────
-    "q183_interval_coverage" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val sCol = unix_micros(col("ts").cast("timestamp"))
-      val spans = ev.select(col("user_id"), sCol.as("s"),
-        (sCol + greatest(lit(1.0), floor(col("value"))).cast("long") *
-          lit(60000000L)).as("e"))
-      Intervals.coverageReport(spans, "user_id", "s", "e")
-        .orderBy("user_id")
-    }),
-    // ── scale: Poisson(1) bootstrap — B replicate means as ONE projection
-    //    + ONE map-side-combined aggregate (never B resample shuffles);
-    //    weights are integer comparisons of md5-60 hashes against
-    //    floor(CDF·2^60) long thresholds, bit-reproducible on any engine
-    //    (oracle: DuckDB replays hashes, thresholds, and the id-sorted
-    //    fold) ─────────────────────────────────────────────────────────────
-    "q184_bootstrap_means" -> ((s, dir) => {
-      Analytics.poissonBootstrapMeans(T(s, dir, "events"), "event_id",
-          "value", reps = 16, deterministic = true)
-        .select(col("rep"), col("n_eff"), round(col("wmean"), 6).as("wmean"))
-        .orderBy("rep")
-    }),
-    // ── scale: FK-candidate discovery — containment + parent-uniqueness
-    //    over candidate column pairs (undocumented-lake joinability +
-    //    referential-integrity decay); per pair two key-ONLY distincts +
-    //    one broadcast semi-join, report is pairs-sized (oracle: DuckDB
-    //    scalar-subquery replay per pair) ───────────────────────────────────
-    "q185_fk_discovery" -> ((s, dir) => {
-      def t(n: String) = T(s, dir, n)
-      Profiling.fkCandidates(fkPairs.map { case (cl, ct, cc, pl, pt, pc) =>
-        (cl, t(ct), cc, pl, t(pt), pc)
-      }).orderBy("child", "parent")
-    }),
-    // ── scale: seasonal-naive backtest — week-over-week forecast error
-    //    (MAE/bias/MAPE/sMAPE) over daily volumes; the baseline every
-    //    forecaster must beat and the number that calibrates q115's
-    //    anomaly thresholds; ONE corpus scan to the days-sized frame
-    //    (oracle: DuckDB lag-join + day-sorted fold replay) ────────────────
-    "q186_seasonal_naive" -> ((s, dir) => {
-      Analytics.seasonalNaiveBacktest(T(s, dir, "events"), "ts", 7)
-        .select(col("days"), round(col("mae"), 6).as("mae"),
-          round(col("bias"), 6).as("bias"), round(col("mape"), 6).as("mape"),
-          round(col("smape"), 6).as("smape"))
-    }),
-    // ── scale: SymSpell typo detection — rare tokens one edit from a
-    //    frequent term + best correction, via symmetric-delete variant
-    //    blocking (equi-join on {self}∪{1-deletions}, never vocab²);
-    //    deterministic typo injection (drop 2nd char / substitute 3rd on
-    //    sparse part keys) so the operator must RECOVER the corrections
-    //    (oracle: DuckDB replays injection, variants, verify, and argmax) ──
-    "q187_typo_suggest" -> ((s, dir) => {
-      val p = T(s, dir, "part")
-      val name = col("p_name")
-      val corrupted = p.select(
-        when(pmod(col("p_partkey"), lit(499L)) === 0L,
-          concat(name.substr(lit(1), lit(1)),
-            name.substr(lit(3), length(name))))
-        .when(pmod(col("p_partkey"), lit(503L)) === 0L,
-          concat(name.substr(lit(1), lit(2)), lit("x"),
-            name.substr(lit(4), length(name))))
-        .otherwise(name).as("text"))
-      TextAnalysis.typoSuggestions(corrupted, "text",
-          minFreq = 5L, maxRareFreq = 2L, minLen = 4)
-        .orderBy("token")
-    }),
-    // ── scale: Mann–Whitney U — nonparametric "is one group systematically
-    //    larger" (the q141 z-test without normality; KS's location-focused
-    //    complement); ranks never materialize per row — distinct-value
-    //    frame + distributed-cumsum prefix gives exact average ranks under
-    //    ties, tie-corrected σ² (oracle: DuckDB window-rank replay) ─────────
-    "q188_mann_whitney" -> ((s, dir) => {
-      Analytics.mannWhitneyU(T(s, dir, "events"), "event_type", "value",
-          "click", "view", deterministic = true)
-        .select(col("n_a"), col("n_b"), round(col("u_a"), 6).as("u_a"),
-          round(col("u_b"), 6).as("u_b"), round(col("z"), 6).as("z"))
-    }),
-    // ── scale: HITS hubs/authorities — mutually-reinforcing scores on the
-    //    buyer→seller bipartite graph (which customers concentrate buying
-    //    power / which suppliers concentrate demand — what PageRank's one
-    //    score conflates); two shuffles per round, lazy broadcast norms
-    //    (oracle: rounds unrolled as MATERIALIZED CTEs) ─────────────────────
-    "q189_hits" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      Graph.hits(el, "a", "b", rounds = 3, deterministic = true)
-        .select(col("node"), col("kind"), round(col("score"), 6).as("score"))
-        .orderBy("kind", "node")
-    }),
-    // ── scale: contrastive negative sampling — k non-positive, non-self
-    //    corpus items per query as a pure function of (query, slot, salt):
-    //    hash→dense-position draws with bounded over-draw, one equi-join
-    //    to the key-only index, per-query windows over ≤ k·overDraw rows
-    //    (oracle: DuckDB replays index, hashes, rejections, and ranks) ─────
-    "q190_negative_samples" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val positives = docs
-        .filter(pmod(col("doc_id"), lit(10L)) === 0L)
-        .select(col("doc_id").as("q"), (col("doc_id") + lit(1L)).as("p"))
-      Sampling.negativeSamples(docs, "doc_id", positives, "q", "p",
-          k = 5, overDraw = 3)
-        .orderBy("q", "rank")
-    }),
-    // ── scale: kNN label-noise audit — rows whose embedding neighborhood
-    //    votes against their label (cleanlab-style mislabel candidates);
-    //    neighborhoods from the IVF-blocked knnJoin (never all-pairs),
-    //    labels join back key-only (oracle: the q72 IVF replay + label
-    //    aggregation) ───────────────────────────────────────────────────────
-    "q191_label_noise" -> ((s, dir) => {
-      Similarity.labelNoiseReport(T(s, dir, "embeddings"), "vec_id",
-          "embedding", "label", k = 5, numCentroids = 16,
-          seedHash = Dedup.md5Hash60, threshold = 0.6)
-        .select(col("vec_id"), col("label"), col("n_neighbors"),
-          col("disagree"), round(col("disagree_frac"), 6).as("disagree_frac"))
-        .orderBy("vec_id")
-    }),
-    // ── scale: distribution-matching downsample — the LARGEST hash-
-    //    deterministic subset hitting target language proportions (closed-
-    //    form LP: binding stratum keeps all, others downsample); thresholds
-    //    are floor(rate·1e6) longs with fixed parenthesization (oracle:
-    //    DuckDB recomputes counts, c, thresholds, and the hash coin) ───────
-    "q192_match_distribution" -> ((s, dir) => {
-      Sampling.matchDistribution(T(s, dir, "documents"), "lang", "doc_id",
-          Map("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.2))
-        .groupBy("lang").agg(count(lit(1)).as("kept"))
-        .orderBy("lang")
-    }),
-    // ── scale: conversion-latency percentiles — first signup → first
-    //    subsequent purchase, exact long-micros latencies, nearest-rank
-    //    crossings via the weightedQuantiles machinery (q113's timing
-    //    half) (oracle: DuckDB replays firsts, min-after, and crossings) ───
-    "q193_conversion_latency" -> ((s, dir) => {
-      Analytics.conversionLatency(T(s, dir, "events"), "user_id", "ts",
-          "event_type", "signup", "purchase", Seq(0.5, 0.9, 0.99))
-        .orderBy("q")
-    }),
-    // ── scale: k-anonymity / l-diversity audit — re-identification risk of
-    //    quasi-identifier groups before a release (the indirect-identifier
-    //    counterpart to q48's PII redaction); two-level aggregation keeps
-    //    distinct-sensitive a plain count (oracle: DuckDB replay) ───────────
-    "q194_k_anonymity" -> ((s, dir) => {
-      Profiling.kAnonymityReport(T(s, dir, "customer"),
-          Seq("c_nationkey", "c_mktsegment"), "c_acctbal", k = 10L, l = 3L)
-        .select(col("n_rows"), col("n_groups"), col("risky_groups"),
-          col("risky_rows"), round(col("risky_frac"), 6).as("risky_frac"),
-          col("min_ldiversity"), col("low_diversity_groups"))
-    }),
-    // ── scale: ε-DP noisy count release — Laplace(1/ε) noise from the
-    //    group key's hash (deterministic release-once semantics: reruns
-    //    cannot average the noise away); true counts never emitted
-    //    (oracle: DuckDB replays hash → uniform → inverse CDF) ─────────────
-    "q195_dp_counts" -> ((s, dir) => {
-      Profiling.dpNoisyCounts(T(s, dir, "events"), Seq("user_id"),
-          epsilon = 1.0)
-        .select(col("user_id"),
-          round(col("noisy_count"), 6).as("noisy_count"))
-        .orderBy("user_id")
-    }),
-    // ── scale: Good–Turing unseen mass + Chao1 — how much probability
-    //    mass the corpus has never seen and how big the true vocabulary
-    //    is, from one token-count scan (tail injected via unique customer
-    //    names over the frequent doc vocab) (oracle: DuckDB replay) ────────
-    "q196_unseen_mass" -> ((s, dir) => {
-      val corpus = T(s, dir, "documents").select(col("text"))
-        .unionByName(T(s, dir, "customer").select(col("c_name").as("text")))
-      TextAnalysis.unseenMassEstimate(corpus, "text")
-        .select(col("n_tokens"), col("vocab"), col("n1"), col("n2"),
-          round(col("unseen_mass"), 6).as("unseen_mass"),
-          round(col("chao1"), 6).as("chao1"))
-    }),
-    // ── scale: inter-arrival burstiness — Goh–Barabási B per user over
-    //    consecutive-event gaps (heartbeat −1 / Poisson 0 / bursty +1),
-    //    the per-entity refinement of q115; exact long Σgap, (ts, id)-
-    //    sorted Σgap² fold (oracle: DuckDB lag + fold replay) ──────────────
-    "q197_burstiness" -> ((s, dir) => {
-      Analytics.interArrivalStats(T(s, dir, "events"), "user_id", "ts",
-          "event_id", deterministic = true)
-        // mean in SECONDS: round(x, 6) at the raw-micros magnitude (~4e10)
-        // is not engine-portable (scaling by 1e6 exceeds 2^53)
-        .select(col("user_id"), col("n_gaps"),
-          round(col("mean_us") / lit(1000000.0), 6).as("mean_s"),
-          round(col("burstiness"), 6).as("burstiness"))
-        .orderBy("user_id")
-    }),
-    // ── scale: per-group OLS trend lines — slope/intercept/R² of value
-    //    over day for EVERY event type in one sufficient-stats pass (the
-    //    grouped q96; "is the metric drifting per segment") (oracle:
-    //    DuckDB replays the id-sorted folds and the closed form) ───────────
-    "q198_group_trends" -> ((s, dir) => {
-      val m = unix_micros(col("ts").cast("timestamp"))
-      val d = lit(86400000000L)
-      val ev = T(s, dir, "events").withColumn("day",
-        ((m - pmod(m, d)) / d).cast("long"))
-      Analytics.groupTrends(ev, "event_type", "event_id", "day", "value",
-          deterministic = true)
-        .select(col("event_type"), col("n"),
-          round(col("slope"), 6).as("slope"),
-          round(col("intercept"), 6).as("intercept"),
-          round(col("r2"), 6).as("r2"))
-        .orderBy("event_type")
-    }),
-    // ── scale: consecutive-day activity streaks — longest run / run count
-    //    per user via the rank-anchor island identity over the pruned
-    //    per-(range, key) rank core (the q181 idiom — never a corpus-wide
-    //    per-key window) (oracle: DuckDB row_number islands replay) ────────
-    "q201_activity_streaks" -> ((s, dir) => {
-      Analytics.activityStreaks(T(s, dir, "events"), "user_id", "ts")
-        .orderBy("user_id")
-    }),
-    // ── scale: HHI concentration — Σ share² of the source mix per
-    //    language (1/HHI = effective source count; the diversification
-    //    twin of q138's Gini); cells-frame arithmetic, category-sorted
-    //    fold at gate (oracle: DuckDB shares + fold replay) ────────────────
-    "q202_concentration" -> ((s, dir) => {
-      Analytics.concentrationIndex(T(s, dir, "documents"), "lang", "source",
-          deterministic = true)
-        .select(col("lang"), col("n"), col("n_cats"),
-          round(col("top_share"), 6).as("top_share"),
-          round(col("hhi"), 6).as("hhi"))
-        .orderBy("lang")
-    }),
-    // ── scale: prefix-cache savings — tokens a KV-cache-reusing server
-    //    skips at probe depths 4/8/16 over shared document prefixes (the
-    //    batch-by-prefix scheduler decision number); one tokenization
-    //    pass, key-width prefix groupBys (oracle: DuckDB slice replay) ─────
-    "q203_prefix_cache" -> ((s, dir) => {
-      TextAnalysis.prefixCacheReport(T(s, dir, "documents"), "text",
-          Seq(4, 8, 16))
-        .orderBy("depth")
-    }),
-    // ── scale: horizon conversion rates — fraction converting within
-    //    1/7/30 days (q193's other axis: fix the time, read the rate);
-    //    horizons-sized aggregate over the latency frame (oracle: DuckDB
-    //    replays firsts, latencies, horizon sums) ───────────────────────────
-    "q204_conversion_rates" -> ((s, dir) => {
-      Analytics.conversionRates(T(s, dir, "events"), "user_id", "ts",
-          "event_type", "signup", "purchase",
-          Seq(86400000000L, 604800000000L, 2592000000000L))
-        .select(col("horizon_us"), col("converted_within"),
-          col("n_started"), round(col("rate"), 6).as("rate"))
-        .orderBy("horizon_us")
-    }),
-    // ── scale: matryoshka truncation QA — cosine error of dim-8/16/32
-    //    prefixes vs the full vector over ALL consecutive id pairs
-    //    (corpus-linear, never quadratic); the serve-the-prefix decision
-    //    (oracle: DuckDB list-slice dot products + id-sorted folds) ────────
-    "q205_truncation_quality" -> ((s, dir) => {
-      Similarity.truncationQuality(T(s, dir, "embeddings"), "vec_id",
-          "embedding", Seq(8, 16, 32), deterministic = true)
-        .select(col("dim"), col("n_pairs"),
-          round(col("mean_abs_err"), 6).as("mean_abs_err"),
-          round(col("max_abs_err"), 6).as("max_abs_err"))
-        .orderBy("dim")
-    }),
-    // ── scale: freshness report — per-segment last-write age vs the
-    //    stream's own frontier + recent-volume counts (dead-upstream
-    //    detection, deterministic: no wall clock) (oracle: DuckDB replay) ──
-    "q206_freshness" -> ((s, dir) => {
-      Profiling.freshnessReport(T(s, dir, "events"), "event_type", "ts",
-          Seq(7, 30))
-        .orderBy("event_type")
-    }),
-    // ── scale: peak sliding-window rate — max events in any 1h window per
-    //    user (what a rate limiter is sized against; q197 says bursts
-    //    exist, this says how tall); RANGE window per key (oracle: DuckDB
-    //    RANGE window replay) ──────────────────────────────────────────────
-    "q207_peak_rate" -> ((s, dir) => {
-      Analytics.peakRate(T(s, dir, "events"), "user_id", "ts",
-          3600000000L)
-        .orderBy("user_id")
-    }),
-    // ── scale: exact-count stratified sample — exactly k rows per
-    //    stratum by hash rank (an eval set wants 100 per language, not
-    //    100 ± binomial noise); the pruned per-(range, group) rank core
-    //    (oracle: DuckDB window-rank replay of the hash permutation) ───────
-    "q208_exact_stratified" -> ((s, dir) => {
-      Sampling.exactStratifiedSample(T(s, dir, "documents"), "lang",
-          "doc_id", k = 30L)
-        .orderBy("lang", "rank")
-    }),
-    // ── scale: vocabulary growth curve — per ingest batch: distinct
-    //    tokens, NEW tokens, cumulative vocab (the empirical Heaps
-    //    trajectory; a new-token spike = domain shift or encoding bug);
-    //    key-width first-seen aggregate (oracle: DuckDB replay) ────────────
-    "q209_vocab_growth" -> ((s, dir) => {
-      val corpus = T(s, dir, "documents")
-        .select(expr("doc_id div 50").as("batch"), col("text"))
-        .unionByName(T(s, dir, "customer")
-          .select(expr("c_custkey div 150").as("batch"),
-            col("c_name").as("text")))
-      TextAnalysis.vocabGrowth(corpus, "text", "batch")
-        .orderBy("batch")
-    }),
-    // ── scale: top session paths — most common event-type sequences per
-    //    session (order matters; q113's funnel can't see it); per-session
-    //    bounded sorted collect, TakeOrderedAndProject top-k (oracle:
-    //    DuckDB sessionize + ordered-list replay) ───────────────────────────
-    "q210_top_paths" -> ((s, dir) => {
-      Analytics.topSessionPaths(T(s, dir, "events"), "user_id", "ts",
-          "event_id", "event_type", gapSeconds = 600L, maxLen = 4, k = 20)
-    }),
-    // ── scale: LSH parameter planner — p(s) = 1 − (1 − s^r)^b per config
-    //    (the table that justifies q25's (16, 2)); powers as left-assoc
-    //    multiplication chains, bit-identical cross-engine (oracle: DuckDB
-    //    evaluates the same chains) ─────────────────────────────────────────
-    "q211_lsh_planner" -> ((s, dir) => {
-      Dedup.lshDetectionCurve(s, Seq((16, 2), (8, 4)))
-        .select(round(col("s"), 6).as("s"),
-          round(col("p_b16_r2"), 6).as("p_b16_r2"),
-          round(col("p_b8_r4"), 6).as("p_b8_r4"))
-        .orderBy("s")
-    }),
-    // ── scale: cast-quarantine audit — per column→type, non-null values a
-    //    lossless cast would drop (the silent coerce-to-null made visible
-    //    BEFORE the type flip); one scan, one multi-aggregate (oracle:
-    //    DuckDB TRY_CAST replay incl. the deterministic mixed column) ──────
-    "q212_cast_quarantine" -> ((s, dir) => {
-      val ev = T(s, dir, "events").withColumn("mixed",
-        when(pmod(col("event_id"), lit(3L)) === 0L, col("event_type"))
-          .otherwise(col("event_id").cast("string")))
-      Profiling.castQuarantineReport(ev, Seq(
-          "mixed" -> "BIGINT", "event_type" -> "BIGINT", "value" -> "INT"))
-        .select(col("column_name"), col("target_type"), col("n_rows"),
-          col("n_nonnull"), col("n_cast_fail"),
-          round(col("fail_frac"), 6).as("fail_frac"))
-        .orderBy("column_name")
-    }),
-    // ── scale: offline changepoint — first binary-segmentation split per
-    //    stream (WHEN did the level shift; q167 says THAT it drifted);
-    //    key×days frame windows, exact counts (oracle: DuckDB replay) ──────
-    "q213_changepoint" -> ((s, dir) => {
-      Analytics.changepointSplit(T(s, dir, "events"), "event_type", "ts")
-        .select(col("event_type"), col("split_day"),
-          round(col("deviation"), 6).as("deviation"),
-          round(col("mean_before"), 6).as("mean_before"),
-          round(col("mean_after"), 6).as("mean_after"))
-        .orderBy("event_type")
-    }),
-    // ── scale: eval-canary scan — verbatim benchmark-canary hits per
-    //    source BEFORE training (one corpus pass, one codegen'd contains
-    //    per canary, melted at the end) (oracle: DuckDB contains replay) ───
-    "q214_canary_scan" -> ((s, dir) => {
-      TextAnalysis.canaryScan(T(s, dir, "documents"), "text", "source",
-          Seq("slow fast table", "customer query", "canary-absent-guid"))
-        .orderBy("canary", "source")
-    }),
-    // ── scale: Simpson's-paradox audit — do within-group trends oppose
-    //    the pooled trend (aggregation bias before acting on a rollup);
-    //    rides q198's sufficient-stats passes (oracle: DuckDB sign replay) ─
-    "q215_simpson_check" -> ((s, dir) => {
-      val m = unix_micros(col("ts").cast("timestamp"))
-      val d = lit(86400000000L)
-      val ev = T(s, dir, "events").withColumn("day",
-        ((m - pmod(m, d)) / d).cast("long"))
-      Analytics.simpsonCheck(ev, "event_type", "event_id", "day", "value",
-          deterministic = true)
-        .select(col("n_groups"), round(col("pooled_slope"), 6)
-          .as("pooled_slope"), col("groups_opposing"),
-          round(col("opposing_weight"), 6).as("opposing_weight"),
-          col("paradox"))
-    }),
-    // ── scale: per-dim embedding stats — coordinate means/stds, the
-    //    anisotropy check before trusting cosine (a dominant dim measures
-    //    the artifact, not the content); one posexplode, per-dim
-    //    sufficient stats (oracle: DuckDB ordinality + fold replay) ────────
-    "q218_dimension_stats" -> ((s, dir) => {
-      Similarity.dimensionStats(T(s, dir, "embeddings"), "vec_id",
-          "embedding", deterministic = true)
-        .select(col("dim"), col("n"), round(col("mean"), 6).as("mean"),
-          round(col("std"), 6).as("std"))
-        .orderBy("dim")
-    }),
-    // ── scale: context-truncation loss — docs/tokens lost at candidate
-    //    context limits (the training context-budget table); one lengths-
-    //    only scan, limits-sized output (oracle: DuckDB replay) ────────────
-    "q219_truncation_loss" -> ((s, dir) => {
-      TextAnalysis.truncationLossReport(T(s, dir, "documents"), "text",
-          Seq(32, 64, 128))
-        .select(col("limit").as("ctx_limit"), col("n_docs"),
-          col("docs_over"), col("tokens_total"), col("tokens_lost"),
-          round(col("loss_frac"), 6).as("loss_frac"))
-        .orderBy("ctx_limit")
-    }),
-    // ── scale: dataset-mixture plan — per-source token targets, epoch
-    //    repeats, and repeat-budget caps for a target mixture (the
-    //    books/web/code planning table, shortfalls caught BEFORE
-    //    training); one token-count scan + source-frame arithmetic
-    //    (oracle: DuckDB replays counts and the closed form) ───────────────
-    "q220_mixture_plan" -> ((s, dir) => {
-      Sampling.mixturePlan(T(s, dir, "documents"), "source", "text",
-          Map("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.1),
-          budgetTokens = 10000L, maxRepeat = 2.0)
-        .select(col("source"), col("tokens_have"),
-          round(col("weight"), 6).as("weight"),
-          round(col("tokens_target"), 6).as("tokens_target"),
-          round(col("repeats"), 6).as("repeats"), col("capped"),
-          round(col("tokens_planned"), 6).as("tokens_planned"))
-        .orderBy("source")
-    }),
-    // ── scale: degree power-law fit — "is this graph scale-free": ln-ln
-    //    OLS on the degree histogram (justifies the family's hub caps);
-    //    key-only degree shuffles, histogram-sized fit (oracle: DuckDB
-    //    degree + fold replay) ─────────────────────────────────────────────
-    "q221_degree_powerlaw" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      Graph.degreePowerLaw(el, "a", "b", deterministic = true)
-        .select(col("n_nodes"), col("n_degrees"), col("max_degree"),
-          round(col("slope"), 6).as("slope"), round(col("r2"), 6).as("r2"))
-    }),
-    // ── scale: seasonally-adjusted anomalies — daily volumes scored
-    //    against their weekday's own mean (q115 flags raw outliers, q182
-    //    measures the seasonality, this divides it out before alarming);
-    //    days-sized frames throughout (oracle: DuckDB replay) ──────────────
-    "q222_seasonal_anomalies" -> ((s, dir) => {
-      Analytics.seasonalAnomalies(T(s, dir, "events"), "ts", 2.0)
-        .select(col("day"), col("dow"), col("n"),
-          round(col("expected"), 6).as("expected"),
-          round(col("z"), 6).as("z"))
-        .orderBy("day")
-    }),
-    // ── scale: numeric mutual information — equal-frequency bins (the
-    //    q140 integer formula) feeding the exact categorical MI: catches
-    //    the nonlinear dependence q133's correlation reads as zero
-    //    (oracle: DuckDB rank + bin replay into the shared MI tail) ────────
-    "q223_numeric_mi" -> ((s, dir) => {
-      val m = unix_micros(col("ts").cast("timestamp"))
-      val d = lit(86400000000L)
-      val ev = T(s, dir, "events").withColumn("day",
-        ((m - pmod(m, d)) / d).cast("long"))
-      Profiling.numericMI(ev, "event_id", "value", "day", bins = 8,
-          deterministic = true)
-        .select(col("n"), round(col("mi"), 6).as("mi"),
-          round(col("h_x"), 6).as("h_x"), round(col("h_y"), 6).as("h_y"),
-          round(col("nmi"), 6).as("nmi"))
-    }),
-    // ── scale: monthly ship-lag percentiles — order→ship latency p50/p90
-    //    per month via the per-group exact-crossing quantile machinery
-    //    (operational BI on the TPC-H shape) (oracle: DuckDB rank
-    //    crossings per month) ──────────────────────────────────────────────
-    "q224_ship_lag" -> ((s, dir) => {
-      def dayOf(c: org.apache.spark.sql.Column) = {
-        val m = unix_micros(c.cast("timestamp"))
-        ((m - pmod(m, lit(86400000000L))) / lit(86400000000L)).cast("long")
-      }
-      val j = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-          concat(col("l_orderkey").cast("string"), lit(":"),
-            col("l_linenumber").cast("string")).as("rid"),
-          (dayOf(col("l_shipdate")) - dayOf(col("o_orderdate")))
-            .as("lag_days"))
-        .withColumn("__w", lit(1L))
-        .localCheckpoint(false)
-      val stats = j.groupBy("month").agg(count(lit(1)).as("n"))
-      Sampling.weightedQuantilesPerGroup(j, "month", "rid", "lag_days",
-          "__w", Seq(0.5, 0.9))
-        .join(stats, Seq("month"))
-        .select(col("month"), col("q"), col("value").as("lag_days"),
-          col("n"))
-        .orderBy("month", "q")
-    }),
-    // ── scale: snapshot diff report — added/removed/changed/unchanged
-    //    between two pk-unique generations ("what did this load DO";
-    //    full-reload-as-increment tell: removed ≈ n_old); key+hash-width
-    //    full-outer join (oracle: DuckDB direct column comparison) ─────────
-    "q225_snapshot_diff" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val oldGen = o.filter(pmod(col("o_orderkey"), lit(101L)) =!= 0L)
-      val newGen = o
-        .filter(pmod(col("o_orderkey"), lit(97L)) =!= 0L)
-        .withColumn("o_totalprice",
-          when(pmod(col("o_orderkey"), lit(89L)) === 0L,
-            col("o_totalprice") + lit(1.0)).otherwise(col("o_totalprice")))
-      Snapshot.diffReport(oldGen, newGen, Seq("o_orderkey"))
-    }),
-    // ── scale: session association rules — market-basket over sessionized
-    //    event types (support/confidence/lift); distinct (session, type)
-    //    rows, type²-sized tail (oracle: DuckDB sessionize + pair replay) ──
-    "q226_association_rules" -> ((s, dir) => {
-      Analytics.sessionAssociationRules(T(s, dir, "events"), "user_id",
-          "ts", "event_type", gapSeconds = 600L)
-        .select(col("antecedent"), col("consequent"), col("n_sessions"),
-          col("n_both"), round(col("confidence"), 6).as("confidence"),
-          round(col("lift"), 6).as("lift"))
-        .orderBy("antecedent", "consequent")
-    }),
-    // ── scale: Markov next-event self-eval — the predictability baseline
-    //    any sequence model must beat, per state (oracle: DuckDB lag +
-    //    argmax replay) ────────────────────────────────────────────────────
-    "q227_markov_eval" -> ((s, dir) => {
-      Analytics.markovSelfEval(T(s, dir, "events"), "user_id", "ts",
-          "event_id", "event_type")
-        .select(col("state"), col("n_transitions"), col("predicted"),
-          col("hits"), round(col("accuracy"), 6).as("accuracy"))
-        .orderBy("state")
-    }),
-    // ── scale: nearest-centroid label confusion — one centroid per label
-    //    (float-rounded means, the q72 parity convention), cosine assign
-    //    via the fused NearestCentroid expression, labels²-sized cells
-    //    ("are these labels separable at all") (oracle: DuckDB centroid +
-    //    cosine-rank replay) ───────────────────────────────────────────────
-    "q228_centroid_confusion" -> ((s, dir) => {
-      Similarity.labelCentroidConfusion(T(s, dir, "embeddings"), "vec_id",
-          "embedding", "label")
-        .orderBy("label", "predicted")
-    }),
-    // ── scale: Spearman rank-correlation matrix — tie-aware exact
-    //    midranks via the distributed-cumsum idiom, DECIMAL(38,0) rank
-    //    sums (≡ DuckDB HUGEINT), one fixed-paren double formula
-    //    (oracle: DuckDB replays ranks, sums, and the formula) ───────────
-    "q229_spearman" -> ((s, dir) => {
-      Profiling.spearmanMatrix(
-          T(s, dir, "lineitem").select("l_quantity", "l_extendedprice",
-            "l_discount", "l_tax"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .select(col("col_a"), col("col_b"), col("n"),
-          round(col("spearman"), 6).as("spearman"))
-        .orderBy("col_a", "col_b")
-    }),
-    // ── scale: multi-source BFS hop levels — crawl depth from a trusted
-    //    seed frontier over the bidirected customer–supplier graph;
-    //    frontier-only joins, integer-exact (oracle: DuckDB replays the
-    //    rounds as unrolled MATERIALIZED CTEs) ────────────────────────────
-    "q230_bfs_levels" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      val seeds = T(s, dir, "supplier")
-        .filter(col("s_suppkey") % 10 === 0)
-        .select(concat(lit("s"), col("s_suppkey")).as("node"))
-      Graph.bfsLevels(Graph.bidirect(el, "a", "b"), "src", "dst",
-          seeds, "node", maxHops = 3)
-        .groupBy("dist")
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(when(col("node").startsWith("c"), 1L).otherwise(0L))
-            .as("n_cust"),
-          sum(when(col("node").startsWith("s"), 1L).otherwise(0L))
-            .as("n_supp"))
-        .orderBy("dist")
-    }),
-    // ── scale: TPC-H Q4 shape (order-priority checking) — EXISTS becomes
-    //    a left-semi join whose condition spans both tables (late ship:
-    //    l_shipdate > o_orderdate + 30 days; this schema has no
-    //    commitdate/receiptdate); integer counts (oracle: DuckDB runs the
-    //    same SQL with a real EXISTS) ─────────────────────────────────────
-    "q231_tpch_q4" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01") &&
-          col("o_orderdate") < lit("1997-01-01"))
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_shipdate")
-      o.join(li, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"),
-          "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-    // ── scale: TPC-H Q13 shape (customer order-count distribution) — the
-    //    LEFT JOIN with the filter in the ON clause (zero-order customers
-    //    must survive), then a distribution over the per-customer counts;
-    //    integer-exact (oracle: DuckDB same SQL) ──────────────────────────
-    "q232_tpch_q13" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select("o_custkey", "o_orderkey",
-        "o_orderstatus")
-      T(s, dir, "customer")
-        .join(o, col("c_custkey") === col("o_custkey") &&
-          col("o_orderstatus") =!= "F", "left")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-    // ── scale: TPC-H Q17 shape (small-quantity revenue) — the correlated
-    //    per-part AVG subquery becomes one per-part aggregate broadcast
-    //    back; the threshold l_quantity < 0.5·avg compares EXACTLY as
-    //    2·qty·cnt < sum (quantities are integer-valued — no cross-engine
-    //    double-avg boundary risk); exact cents (oracle: DuckDB same
-    //    integer form) ─────────────────────────────────────────────────────
-    "q233_tpch_q17" -> ((s, dir) => {
-      val parts = T(s, dir, "part")
-        .filter(col("p_brand") === "Brand#4" && col("p_size") <= 10)
-        .select("p_partkey")
-      val li = T(s, dir, "lineitem")
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-          round(col("l_extendedprice") * lit(100.0)).cast("long")
-            .as("price_cents"))
-      val stats = li.groupBy(col("l_partkey").as("sp_partkey"))
-        .agg(count(lit(1)).as("p_cnt"), sum("qty").as("p_sum_qty"))
-      li.join(Ops.broadcastIfSmall(stats),
-          col("l_partkey") === col("sp_partkey"))
-        .filter(lit(2L) * col("qty") * col("p_cnt") < col("p_sum_qty"))
-        .agg(sum("price_cents").as("total_cents"),
-          count(lit(1)).as("n_rows"))
-    }),
-    // ── scale: TPC-H Q21 shape (suppliers who kept orders waiting) — the
-    //    EXISTS(other supplier) / NOT EXISTS(other LATE supplier) pair
-    //    becomes a semi-join + an anti-join on (orderkey, suppkey≠), both
-    //    key-width; late = shipped >30 days after order (this schema's
-    //    receiptdate stand-in); integer counts, top-20 via
-    //    TakeOrderedAndProject (oracle: DuckDB real EXISTS forms) ──────────
-    "q234_tpch_q21" -> ((s, dir) => {
-      val oF = T(s, dir, "orders").filter(col("o_orderstatus") === "F")
-        .select("o_orderkey", "o_orderdate")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey",
-        "l_shipdate")
-      val late = li.join(oF, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") +
-          expr("INTERVAL 30 DAYS"))
-        .select("l_orderkey", "l_suppkey")
-      late
-        .join(li.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2")),
-          col("l_orderkey") === col("k2") && col("l_suppkey") =!= col("s2"),
-          "left_semi")
-        .join(late.select(col("l_orderkey").as("k3"), col("l_suppkey").as("s3")),
-          col("l_orderkey") === col("k3") && col("l_suppkey") =!= col("s3"),
-          "left_anti")
-        .join(broadcast(T(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    }),
-    // ── scale: TPC-H Q22 shape (global-sales opportunity) — the scalar
-    //    AVG-of-positive-balances subquery becomes a broadcast 1-row cross
-    //    join compared EXACTLY as cents·cnt > sum_cents (no double-avg
-    //    boundary risk); lapsed customers (no order since 2000) via
-    //    left-anti — every synthetic customer HAS orders, so the classic
-    //    never-ordered form is degenerate here; mktsegment stands in for
-    //    the phone country code (oracle: DuckDB same integer form) ─────────
-    "q235_tpch_q22" -> ((s, dir) => {
-      val cust = T(s, dir, "customer")
-        .withColumn("cents", round(col("c_acctbal") * lit(100.0)).cast("long"))
-      val posAvg = cust.filter(col("c_acctbal") > 0.0)
-        .agg(sum("cents").as("pos_sum"), count(lit(1)).as("pos_cnt"))
-      cust.crossJoin(broadcast(posAvg))
-        .filter(col("cents") * col("pos_cnt") > col("pos_sum"))
-        .join(T(s, dir, "orders")
-            .filter(col("o_orderdate") >= lit("2000-01-01"))
-            .select(col("o_custkey")),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("numcust"), sum("cents").as("totacctbal_cents"))
-        .orderBy("c_mktsegment")
-    }),
-    // ── scale: sparse TF-IDF cosine similarity join — the WEIGHTED
-    //    near-dup complement (MinHash scores shingle-SET overlap; this
-    //    scores shared distinctive mass, so rare-phrase overlap outranks
-    //    boilerplate overlap); df-pruned vectors, ONE term self-join
-    //    (Σ df² ≤ maxDf·nnz — linear at fixed maxDf), term-sorted folds
-    //    (oracle: DuckDB replays weights, norms, and the folds) ───────────
-    "q236_sparse_cosine" -> ((s, dir) => {
-      Ranking.tfidfCosinePairs(T(s, dir, "documents"), "doc_id", "text",
-          shingleSize = 3, threshold = 0.3, maxDf = 50L)
-        .select(col("id_a"), col("id_b"), col("n_shared"),
-          round(col("cosine"), 6).as("cosine"))
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: pivot cross-tab — event-type × day-of-week counts through
-    //    Spark's RelationalGroupedDataset.pivot with EXPLICIT values (no
-    //    extra domain-discovery pass — at 100 TB the silent two-pass
-    //    default is the trap); integer-exact, q182's timezone-free dow
-    //    (oracle: DuckDB CASE sums) ────────────────────────────────────────
-    "q237_pivot_crosstab" -> ((s, dir) => {
-      val m = unix_micros(col("ts").cast("timestamp"))
-      val d = lit(86400000000L)
-      val day = ((m - pmod(m, d)) / d).cast("long")
-      val dow = (pmod(day + lit(3L), lit(7L)) + lit(1L)).cast("int")
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      T(s, dir, "events")
-        .select(dow.as("dow"), col("event_type"))
-        .groupBy("dow")
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .na.fill(0L, types)
-        .withColumn("total",
-          types.map(col).reduceLeft(_ + _))
-        .orderBy("dow")
-    }),
-    // ── scale: bounded weighted shortest paths (Bellman–Ford rounds) —
-    //    min ship-lag-days edge weights over the customer–supplier graph,
-    //    cheapest reach from the seed suppliers within 3 relaxations;
-    //    node-sized state, integer-exact (oracle: DuckDB unrolled
-    //    MATERIALIZED min-plus CTEs) ───────────────────────────────────────
-    "q238_shortest_paths" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"),
-          datediff(col("l_shipdate").cast("date"),
-            col("o_orderdate").cast("date")).cast("long").as("lag_days"))
-      val edges = el.unionByName(el.select(col("b").as("a"),
-        col("a").as("b"), col("lag_days")))
-      val seeds = T(s, dir, "supplier")
-        .filter(col("s_suppkey") % 10 === 0)
-        .select(concat(lit("s"), col("s_suppkey")).as("node"))
-      Graph.boundedShortestPaths(edges, "a", "b", "lag_days",
-          seeds, "node", rounds = 3)
-        .groupBy("dist")
-        .agg(count(lit(1)).as("n_nodes"))
-        .orderBy("dist")
-    }),
-    // ── scale: unpivot/melt report — wide→long through Dataset.unpivot
-    //    (one streamed Expand, never a per-column UNION of corpus scans);
-    //    exact integer cents per melted measure (oracle: DuckDB UNION ALL
-    //    replay) ──────────────────────────────────────────────────────────
-    "q239_unpivot_melt" -> ((s, dir) => {
-      val measures = Seq("l_quantity", "l_extendedprice", "l_discount",
-        "l_tax")
-      T(s, dir, "lineitem")
-        .select(col("l_orderkey") +: measures.map(c =>
-          round(col(c) * lit(100.0)).cast("long").as(c)): _*)
-        .unpivot(Array(col("l_orderkey")), measures.map(col).toArray,
-          "variable", "cents")
-        .groupBy("variable")
-        .agg(count(lit(1)).as("n"), min("cents").as("min_cents"),
-          max("cents").as("max_cents"), sum("cents").as("sum_cents"))
-        .orderBy("variable")
-    }),
-    // ── scale: rank-biased overlap between the two q92 rankers — the
-    //    "is the hybrid fusion doing real work" diagnostic; after the two
-    //    top-50 rankings everything is one ≤50-row join + a literal-table
-    //    fold (oracle: DuckDB replays both rankers and the shared weight
-    //    literals) ─────────────────────────────────────────────────────────
-    "q240_rbo" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val e = T(s, dir, "embeddings")
-      val qv = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).map(_.toDouble).toSeq
-      val lex = Ranking.topNRanks(
-        Ranking.bm25(d, "doc_id", "text", Seq("join", "merge", "filter")),
-        "doc_id", "bm25", 50, "rank_lex")
-      val sem = Ranking.topNRanks(
-        e.select(col("vec_id").as("doc_id"),
-          Similarity.cosine(col("embedding"),
-            array(qv.map(lit): _*)).as("__cos")),
-        "doc_id", "__cos", 50, "rank_sem")
-      Ranking.rankBiasedOverlap(lex, sem, "doc_id", "rank_lex", "rank_sem",
-          p = 0.9, k = 50)
-        .select(col("n_shared"), round(col("rbo"), 6).as("rbo"))
-    }),
-    // ── scale: CUBE report — all four grouping sets over
-    //    (returnflag, linestatus) in ONE Expand pass (q107 ROLLUP's
-    //    completion; the naive alternative is 4 scans + UNION), with
-    //    GROUPING() markers so subtotal-null is distinguishable from
-    //    data-null; exact cents (oracle: DuckDB GROUP BY CUBE) ────────────
-    "q241_cube_report" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"),
-          round(col("l_extendedprice") * lit(100.0)).cast("long").as("cents"))
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_items"), sum("cents").as("revenue_cents"),
-          grouping(col("l_returnflag")).cast("int").as("g_flag"),
-          grouping(col("l_linestatus")).cast("int").as("g_status"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-    // ── scale: leakage-free grouped split — every doc of a SOURCE lands
-    //    in the same fold (row-keyed q122 can put near-identical docs from
-    //    one domain on both sides of train/test; group-keyed assignment
-    //    makes that structurally impossible); one pure-projection pass,
-    //    exact per-fold report (oracle: DuckDB md5-bucket + CASE replay) ──
-    "q242_grouped_split" -> ((s, dir) => {
-      Sampling.groupedSplitAssign(
-          T(s, dir, "documents").select(col("source"), col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).as("w")),
-          "source", Seq(0.8, 0.1, 0.1))
-        .groupBy("fold")
-        .agg(countDistinct(col("source")).as("n_sources"),
-          count(lit(1)).as("n_docs"), sum("w").as("n_tokens"))
-        .orderBy("fold")
-    }),
-    // ── scale: multi-phrase hit join — token-boundary phrase counts per
-    //    source via ONE shingle explode + a hash-set membership (InSet),
-    //    O(tokens) at ANY phrase-list size where q214's per-pattern
-    //    contains is O(patterns·chars); only hit rows shuffle (oracle:
-    //    DuckDB shingle + IN replay) ───────────────────────────────────────
-    "q243_phrase_hits" -> ((s, dir) => {
-      TextAnalysis.phraseHits(T(s, dir, "documents"), "text", "source",
-          Seq("window fast query", "stream table hash", "big data merge",
-            "definitely absent phrase"))
-        .orderBy("phrase", "source")
-    }),
-    // ── scale: watermark-lateness audit — events dropped per candidate
-    //    withWatermark delay (the measured buffer-vs-loss trade); arrival
-    //    modeled as event time + deterministic 0–10 min md5 jitter (the
-    //    synthetic stream arrives perfectly ordered — zero lateness
-    //    everywhere — so the jitter is the probe, the operator the
-    //    artifact); running max in the distributed prefix-MAX idiom
-    //    (oracle: DuckDB window + jitter replay) ──────────────────────────
-    "q244_watermark_audit" -> ((s, dir) => {
-      val ev = T(s, dir, "events").select(col("event_id"), col("ts"),
-        (unix_micros(col("ts").cast("timestamp")) +
-          pmod(Dedup.md5Hash60(col("event_id")), lit(600000000L))).as("arr"))
-      Analytics.watermarkAudit(ev, "ts", "arr", "event_id",
-          Seq(0L, 60000000L, 300000000L, 480000000L, 600000000L))
-        .select(col("delay_us"), col("n_dropped"),
-          round(col("frac_dropped"), 6).as("frac_dropped"))
-        .orderBy("delay_us")
-    }),
-    // ── scale: embedding-space source divergence — pairwise cosine/L2
-    //    between per-source mean-embedding centroids (q106's embedding
-    //    twin: same vocabulary can hide drifted semantics); one posexplode
-    //    pass to groups×dims cells, float-rounded centroids (q72/q228
-    //    parity), driver dim-ascending folds (oracle: DuckDB replays
-    //    cells, REAL rounding, and the folds) ─────────────────────────────
-    "q245_centroid_divergence" -> ((s, dir) => {
-      val joined = T(s, dir, "embeddings")
-        .join(T(s, dir, "documents").select("doc_id", "source"),
-          col("vec_id") === col("doc_id"))
-      Similarity.centroidDivergence(joined, "embedding", "source")
-        .select(col("source_a"), col("source_b"),
-          round(col("cosine"), 6).as("cosine"), round(col("l2"), 6).as("l2"))
-        .orderBy("source_a", "source_b")
-    }),
-    // ── scale: clustering-quality report — simplified silhouette per
-    //    q98-trained cluster (the evaluation half of the clustering tier;
-    //    centroid form, no point×point work); ONE posexplode join against
-    //    the broadcast centroid cells, per-id sorted k-array (oracle:
-    //    DuckDB replays the kmeans chain + dist folds + means) ────────────
-    "q246_silhouette" -> ((s, dir) => {
-      Training.clusteringQualityReport(T(s, dir, "embeddings"), "vec_id",
-          "embedding", k = 4, rounds = 3, deterministic = true)
-        .select(col("cluster"), col("n"),
-          round(col("mean_dist"), 6).as("mean_dist"),
-          round(col("mean_silhouette"), 6).as("mean_silhouette"))
-        .orderBy("cluster")
-    }),
-    // ── scale: functional-dependency audit — which within-table
-    //    "X determines Y" contracts actually hold (q185's single-table
-    //    sibling; an almost-holding FD is the classic dirty-data tell);
-    //    one det-keyed exact aggregate per hypothesis over a shared
-    //    projection, NULL dependents count as a value (oracle: DuckDB
-    //    per-hypothesis replay) ───────────────────────────────────────────
-    "q247_fd_audit" -> ((s, dir) => {
-      Profiling.fdAudit(T(s, dir, "orders"), Seq(
-          "o_orderkey" -> "o_custkey",
-          "o_orderkey" -> "o_totalprice",
-          "o_custkey" -> "o_orderpriority",
-          "o_orderstatus" -> "o_orderpriority"))
-        .select(col("determinant"), col("dependent"), col("n_keys"),
-          col("n_violating_keys"),
-          round(col("violation_frac"), 6).as("violation_frac"), col("holds"))
-        .orderBy("determinant", "dependent")
-    }),
-    // ── scale: period-over-period growth — weekly counts per event type
-    //    with previous-period deltas (the trend view next to q115's
-    //    anomaly flags and q182's seasonality); timezone-free integer
-    //    period arithmetic, lag over the periods-sized frame only, first
-    //    period honestly NULL (oracle: DuckDB window replay) ──────────────
-    "q248_period_growth" -> ((s, dir) => {
-      Profiling.periodGrowth(T(s, dir, "events"), "ts", "event_type",
-          periodUs = 604800000000L)
-        .select(col("grp"), col("period_start_us"), col("n"), col("prev_n"),
-          round(col("growth"), 6).as("growth"))
-        .orderBy("grp", "period_start_us")
-    }),
-    // ── scale: dataset card — the one-table corpus summary (size, source
-    //    breadth, token mass, quality level, exact-dup rate, length
-    //    percentiles) composed from individually-gated machinery
-    //    (q20/q21/q22/q103); one checkpointed scan + one wide aggregate +
-    //    the range-pruned rank pass (oracle: DuckDB replays every metric) ─
-    "q249_dataset_card" -> ((s, dir) => {
-      Profiling.datasetCard(T(s, dir, "documents"), "doc_id", "text",
-          "source")
-        .select(col("metric"), round(col("value"), 6).as("value"))
-        .orderBy("metric")
-    }),
-    // ── scale: weighted per-group sampling — "5 docs per source ∝ token
-    //    mass" with the DLT unbiased ŵ = max(w, τ_g) estimator (the last
-    //    cell of the sampling matrix: q47 uniform global, q100 uniform
-    //    per group, q99 weighted global); range-pruned per-group ranks,
-    //    estimator on the (groups·(k+1))-bounded frame (oracle: DuckDB
-    //    replays hash → priority → per-group rank → τ) ────────────────────
-    "q250_group_weighted_sample" -> ((s, dir) => {
-      Sampling.weightedSamplePerGroup(
-          T(s, dir, "documents").select(col("source"), col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).as("w0")),
-          "source", "doc_id", "w0", k = 5, seed = 7L)
-        .select(col("source"), col("doc_id"), col("w"), col("pick"),
-          round(col("est_w"), 6).as("est_w"))
-        .orderBy("source", "pick")
-    }),
-    // ── scale: burst collapse — retry storms / double-submits collapsed
-    //    to one representative event per (user, type) burst before any
-    //    count metric (islands semantics, explicit (ts, id) tie order);
-    //    integer micros (oracle: DuckDB lag replay) ───────────────────────
-    "q251_burst_collapse" -> ((s, dir) => {
-      Analytics.collapseBursts(T(s, dir, "events"),
-          Seq("user_id", "event_type"), "ts", "event_id",
-          gapUs = 600000000L)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("is_first"), 1L).otherwise(0L)).as("n_bursts"))
-        .withColumn("drop_frac",
-          round((col("n_events") - col("n_bursts")).cast("double") /
-            col("n_events").cast("double"), 6))
-        .orderBy("event_type")
-    }),
-    // ── scale: user growth curve — per-day actives, first-seen news, and
-    //    the cumulative user count (q112's corpus-level trajectory);
-    //    exact integers, cumsum over the DAYS-sized frame only (oracle:
-    //    DuckDB replay) ────────────────────────────────────────────────────
-    "q252_user_growth" -> ((s, dir) => {
-      Analytics.userGrowthCurve(T(s, dir, "events"), "ts", "user_id")
-        .orderBy("day")
-    }),
-    // ── scale: per-slice accuracy with Wilson intervals — the
-    //    disaggregated-eval report (aggregate accuracy hides a small
-    //    badly-served slice; Wilson says which gaps are signal at tiny
-    //    per-slice n); langId vs true lang, sliced by source; one integer
-    //    aggregate + fixed-paren formulas (oracle: DuckDB replays scorer,
-    //    counts, and the shared z literals) ────────────────────────────────
-    "q253_slice_accuracy" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("source"), col("lang"),
-        TextAnalysis.langId(col("text")).as("pred"))
-      Profiling.sliceAccuracy(d, "source", "lang", "pred")
-        .select(col("slice"), col("n"), col("n_correct"),
-          round(col("acc"), 6).as("acc"),
-          round(col("wilson_lo"), 6).as("wilson_lo"),
-          round(col("wilson_hi"), 6).as("wilson_hi"))
-        .orderBy("slice")
-    }),
-    // ── scale: transition dwell-time matrix — q114 gives the transition
-    //    PROBABILITIES, this gives the DURATIONS (where a funnel
-    //    intervention goes); exact micros totals (longs — no fold
-    //    discipline), types²-sized output, the only doubles are the final
-    //    divisions (oracle: DuckDB lag replay) ────────────────────────────
-    "q254_dwell_matrix" -> ((s, dir) => {
-      Analytics.dwellMatrix(T(s, dir, "events"), "user_id", "ts",
-          "event_id", "event_type")
-        .select(col("from_type"), col("to_type"), col("n"),
-          round(col("mean_gap_s"), 6).as("mean_gap_s"),
-          round(col("min_gap_s"), 6).as("min_gap_s"),
-          round(col("max_gap_s"), 6).as("max_gap_s"))
-        .orderBy("from_type", "to_type")
-    }),
-    // ── scale: coherent star-schema sample — sample by the JOIN KEY
-    //    (hash of orderkey on BOTH tables), so the 10% slice keeps
-    //    referential integrity (row-keyed sampling orphans ~90% of
-    //    lineitems); the report proves zero orphans and shows the
-    //    scaled-up revenue estimate against truth (oracle: DuckDB
-    //    md5-bucket replay) ────────────────────────────────────────────────
-    "q255_coherent_sample" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val so = Sampling.hashSample(T(s, dir, "orders")
-        .select("o_orderkey"), "o_orderkey", 0.1)
-      val sl = Sampling.hashSample(li, "l_orderkey", 0.1)
-      val cents = round(col("l_extendedprice") * lit(100.0)).cast("long")
-      val sampled = sl.agg(count(lit(1)).as("n_items_sampled"),
-        sum(cents).as("rev_sampled_cents"))
-      val orphans = sl
-        .join(so, col("l_orderkey") === col("o_orderkey"), "left_anti")
-        .agg(count(lit(1)).as("n_orphans"))
-      val totals = li.agg(count(lit(1)).as("n_items_total"),
-        sum(cents).as("rev_total_cents"))
-      val nOrders = so.agg(count(lit(1)).as("n_orders_sampled"))
-      nOrders.crossJoin(sampled).crossJoin(orphans).crossJoin(totals)
-        .withColumn("est_ratio",
-          round((col("rev_sampled_cents").cast("double") * lit(10.0)) /
-            col("rev_total_cents").cast("double"), 6))
-    }),
-    // ── scale: persistent IVF vector index — the incremental-similarity
-    //    tier's vector cell (exact→Bloom, token→LSH postings, char→FastSS
-    //    variants, vectors→THIS): frozen centroids, cell-bucketed
-    //    postings, two incremental adds, probe I/O ∝ batch × probed
-    //    cells; gate probes nProbe = all cells (complete recall), so the
-    //    oracle is plain brute force (oracle: DuckDB q27-style scan) ──────
-    "q256_vector_index" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val idx = new VectorIndex(s, tmpWorkDir("gs_vecidx_"), numBuckets = 16)
-      val first = e.filter(col("vec_id") % 2 === 0)
-      idx.initialize(first, "vec_id", "embedding", numCentroids = 8)
-      idx.add(first, "vec_id", "embedding")
-      idx.add(e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
-      idx.probe(e.filter(col("vec_id") < 10), "vec_id", "embedding",
-          k = 5, nProbe = 8)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("cosine"), 6).as("cosine"))
-        .orderBy("query_id", "rank")
-    }),
-    // ── scale: TPC-H Q7 shape (volume shipping) — two nation-dim joins
-    //    on DIFFERENT sides of the fact with a symmetric OR pair filter;
-    //    year from the shipdate; exact cents (oracle: DuckDB same SQL) ────
-    "q257_tpch_q7" -> ((s, dir) => {
-      val n1 = broadcast(T(s, dir, "nation")
-        .select(col("n_nationkey").as("nk1"), col("n_name").as("supp_nation")))
-      val n2 = broadcast(T(s, dir, "nation")
-        .select(col("n_nationkey").as("nk2"), col("n_name").as("cust_nation")))
-      T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1998-01-01"))
-        .join(T(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(n1, col("s_nationkey") === col("nk1"))
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(n2, col("c_nationkey") === col("nk2"))
-        .filter((col("supp_nation") === "NATION_1" &&
-            col("cust_nation") === "NATION_2") ||
-          (col("supp_nation") === "NATION_2" &&
-            col("cust_nation") === "NATION_1"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("revenue_cents"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-    // ── scale: TPC-H Q8 shape (national market share) — region-filtered
-    //    market, the share as a conditional-sum / total-sum division over
-    //    exact cents (oracle: DuckDB same SQL) ─────────────────────────────
-    "q258_tpch_q8" -> ((s, dir) => {
-      val rk = broadcast(T(s, dir, "nation")
-        .join(T(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .select(col("n_nationkey").as("crk")))
-      val sn = broadcast(T(s, dir, "nation")
-        .select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation")))
-      val cents = round((col("l_extendedprice") * (lit(1.0) -
-        col("l_discount"))) * lit(100.0)).cast("long")
-      T(s, dir, "lineitem")
-        .join(broadcast(T(s, dir, "part").filter(col("p_type") === "PROMO")
-          .select("p_partkey")), col("l_partkey") === col("p_partkey"))
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("o_orderdate") >= lit("1996-01-01") &&
-          col("o_orderdate") < lit("1998-01-01"))
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(rk, col("c_nationkey") === col("crk"))
-        .join(T(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(sn, col("s_nationkey") === col("snk"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(sum(when(col("supp_nation") === "NATION_5", cents)
-            .otherwise(0L)).as("nation_cents"),
-          sum(cents).as("total_cents"))
-        .withColumn("mkt_share",
-          round(col("nation_cents").cast("double") /
-            col("total_cents").cast("double"), 6))
-        .orderBy("o_year")
-    }),
-    // ── scale: TPC-H Q15 shape (top supplier) — the revenue view + scalar
-    //    max becomes one aggregate re-joined through a broadcast 1-row
-    //    frame; exact cents make the max tie-exact (oracle: DuckDB same
-    //    SQL) ───────────────────────────────────────────────────────────────
-    "q259_tpch_q15" -> ((s, dir) => {
-      val rev = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01") &&
-          col("l_shipdate") < lit("1997-04-01"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("total_revenue_cents"))
-      val mx = rev.agg(max("total_revenue_cents").as("__mx"))
-      rev.crossJoin(broadcast(mx))
-        .filter(col("total_revenue_cents") === col("__mx"))
-        .join(broadcast(T(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue_cents"))
-        .orderBy("s_suppkey")
-    }),
-    // ── scale: TPC-H Q19 shape (disjunctive predicate revenue) — three
-    //    OR'd brand/size/quantity branches in ONE scan-side filter (the
-    //    optimizer must not expand to three scans); exact cents (oracle:
-    //    DuckDB same SQL) ──────────────────────────────────────────────────
-    "q260_tpch_q19" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-        .join(broadcast(T(s, dir, "part")),
-          col("l_partkey") === col("p_partkey"))
-      val branch = (col("p_brand") === "Brand#1" &&
-          col("p_size").between(1, 5) && col("l_quantity").between(1, 11)) ||
-        (col("p_brand") === "Brand#2" &&
-          col("p_size").between(1, 10) && col("l_quantity").between(10, 20)) ||
-        (col("p_brand") === "Brand#3" &&
-          col("p_size").between(1, 15) && col("l_quantity").between(20, 30))
-      li.filter(branch)
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("revenue_cents"),
-          count(lit(1)).as("n_rows"))
-    }),
-    // ── scale: persistent Hamming index — the signature-source-agnostic
-    //    incremental cell (text SimHash / image dHash / audio fingerprints
-    //    all route here): 16-bit-chunk pigeonhole postings, probe I/O ∝
-    //    batch + collisions, complete recall at maxDist ≤ 3 with the cap
-    //    unbound at gate; two incremental adds, incoming = exact-copy
-    //    variants (oracle: DuckDB replays the md5 simhash and brute-forces
-    //    incoming × history hamming) ──────────────────────────────────────
-    "q261_hamming_index" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val sig = Dedup.simhash(d, "doc_id", "text",
-        tokenHash = Dedup.Md5TokenHash).localCheckpoint(true)
-      val idx = new HammingIndex(s, tmpWorkDir("gs_hamix_"), maxDist = 3,
-        numBuckets = 16, maxBucketSize = 100000)
-      idx.add(sig.filter(col("doc_id") % 2 === 0), "doc_id", "simhash")
-      idx.add(sig.filter(col("doc_id") % 2 =!= 0), "doc_id", "simhash")
-      val incoming = sig.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("simhash"))
-      idx.probe(incoming, "doc_id", "simhash")
-        .orderBy("inc_id", "hist_id")
-    }),
-    // ── scale: explicit GROUPING SETS through the spark.sql entry point
-    //    — the four report granularities (type×dow, type, dow, grand) in
-    //    ONE Expand pass where the naive form is four scans; q237/q241's
-    //    completion on the SQL surface; integer-exact, q182's dow
-    //    (oracle: DuckDB same GROUPING SETS) ───────────────────────────────
-    "q262_grouping_sets" -> ((s, dir) => {
-      T(s, dir, "events").createOrReplaceTempView("events_gs")
-      s.sql("""
-        WITH b AS (SELECT event_type,
-            CAST((unix_micros(ts) div 86400000000 + 3) % 7 + 1 AS INT)
-              AS dow
-          FROM events_gs)
-        SELECT event_type, dow, CAST(count(*) AS BIGINT) AS n,
-          CAST(grouping(event_type) AS INT) AS g_type,
-          CAST(grouping(dow) AS INT) AS g_dow
-        FROM b GROUP BY GROUPING SETS ((event_type, dow), (event_type),
-          (dow), ())
-        ORDER BY g_type, g_dow, event_type NULLS FIRST, dow NULLS FIRST""")
-    }),
-    // ── scale: contribution (percent-of-parent) report — each nation-year
-    //    revenue with its share of the nation's total: the rollup-ratio
-    //    view q107's subtotals feed; exact cents both levels, one division
-    //    (oracle: DuckDB window replay) ────────────────────────────────────
-    "q263_contribution" -> ((s, dir) => {
-      val rev = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(T(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("cents"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("n_name")
-      rev.withColumn("nation_cents", sum("cents").over(w))
-        .withColumn("share", round(col("cents").cast("double") /
-          col("nation_cents").cast("double"), 6))
-        .orderBy("n_name", "o_year")
-    }),
-    // ── scale: lang-ID confidence margins — per source: docs whose top
-    //    two language scores are ≤ 1 marker apart (the "don't trust this
-    //    label" slice q253's accuracy can't see) plus the mean margin;
-    //    marker scores are INTEGER counts so everything but the final
-    //    mean is exact (oracle: DuckDB replays the marker scorer and the
-    //    top-2 arithmetic) ─────────────────────────────────────────────────
-    "q264_langid_margin" -> ((s, dir) => {
-      val langs = TextAnalysis.markerLexicon.keys.toSeq.sorted
-      val scores = langs.map(l => TextAnalysis.langScore(col("text"), l))
-      val arr = sort_array(array(scores: _*), asc = false)
-      val margin = (arr.getItem(0) - arr.getItem(1)).cast("long")
-      T(s, dir, "documents")
-        .select(col("source"), margin.as("__m"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("__m") <= 1L, 1L).otherwise(0L)).as("n_low_margin"),
-          round(sum(col("__m")).cast("double") /
-            count(lit(1)).cast("double"), 6).as("mean_margin"))
-        .orderBy("source")
-    }),
-    // ── scale: snapshot time travel — read the store AS OF the first
-    //    committed version after a second-generation upsert changed and
-    //    added rows (the audit/debug read every incremental pipeline
-    //    eventually needs); versioned manifests make it one pinned read
-    //    (oracle: DuckDB reconstructs generation 1 directly) ──────────────
-    "q265_time_travel" -> ((s, dir) => {
-      val store = new BucketedSnapshotStore(s, tmpWorkDir("gs_tt_"),
-        numBuckets = 16)
-      val d = T(s, dir, "documents").select("doc_id", "source", "n_chars")
-      store.write("docs", d.filter(col("doc_id") % 2 === 0), Seq("doc_id"))
-      val v1 = store.manifestVersion("docs").get
-      store.upsert("docs",
-        d.filter(col("doc_id") % 3 === 0)
-          .withColumn("n_chars", col("n_chars") + 1000000L),
-        Seq("doc_id"))
-      store.readAt("docs", v1).get.orderBy("doc_id")
-    }),
-    // ── scale: decile lift curve — per score-decile positive rate vs the
-    //    overall rate (q173's AUC says the ordering works; this says what
-    //    acting on the top slice BUYS); exact ranks + integer-product
-    //    lift, one division (oracle: DuckDB replays scorer, ranks, the
-    //    integer-div buckets, and the products) ───────────────────────────
-    "q266_lift_curve" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        round(TextAnalysis.qualityScore(col("text")), 6).as("score"),
-        (col("lang") === "en").as("label"))
-      Analytics.liftCurve(d, "doc_id", "score", "label", bins = 10)
-        .select(col("bucket"), col("cnt"), col("n_pos"),
-          round(col("rate"), 6).as("rate"), round(col("lift"), 6).as("lift"))
-        .orderBy("bucket")
-    }),
-    // ── scale: duplicate token mass — how many training tokens are
-    //    exact-duplicate re-reads (the compute-waste number a dedup run
-    //    is justified by, per source): one tokenize scan, text-keyed
-    //    exact grouping, integer-exact masses (oracle: DuckDB replay) ─────
-    "q267_dup_token_mass" -> ((s, dir) => {
-      val perText = T(s, dir, "documents")
-        .select(col("source"), col("text"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("w"))
-        .groupBy("source", "text")
-        .agg(count(lit(1)).as("copies"), first(col("w")).as("w"))
-      perText.groupBy("source")
-        .agg(sum(col("copies")).as("n_docs"),
-          count(lit(1)).as("n_unique"),
-          sum(col("copies") * col("w")).as("tokens_total"),
-          sum(col("w")).as("tokens_unique"))
-        .withColumn("dup_token_frac",
-          round((col("tokens_total") - col("tokens_unique")).cast("double") /
-            col("tokens_total").cast("double"), 6))
-        .orderBy("source")
-    }),
-    // ── scale: cohort cumulative value — purchase cents per (signup
-    //    cohort week, age week) with the running cumulative (the LTV
-    //    table; q112's retention counts say who came back, this says what
-    //    they were worth); exact cents, first-seen from a user-keyed min,
-    //    cumsum over the cohorts×ages-sized frame only (oracle: DuckDB
-    //    replay) ───────────────────────────────────────────────────────────
-    "q268_cohort_value" -> ((s, dir) => {
-      val wk = lit(604800000000L)
-      val m = unix_micros(col("ts").cast("timestamp"))
-      val ev = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"), col("value"),
-          ((m - pmod(m, wk)) / wk).cast("long").as("week"))
-      val cohort = ev.groupBy("user_id").agg(min("week").as("cohort_week"))
-      val cents = round(col("value") * lit(100.0)).cast("long")
-      val cells = ev.filter(col("event_type") === "purchase")
-        .join(Ops.broadcastIfSmall(cohort), Seq("user_id"))
-        .groupBy(col("cohort_week"), (col("week") - col("cohort_week"))
-          .as("age_weeks"))
-        .agg(sum(cents).as("purchase_cents"),
-          countDistinct(col("user_id")).as("n_buyers"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("cohort_week").orderBy(col("age_weeks").asc)
-        .rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, 0)
-      cells.withColumn("cum_cents", sum(col("purchase_cents")).over(w))
-        .orderBy("cohort_week", "age_weeks")
-    }),
-    // ── scale: record linkage — Fellegi–Sunter match-score histogram over
-    //    blocked candidate pairs between a clean feed and a deterministic
-    //    dirty re-key of it (md5-driven char deletions / truncations);
-    //    fuzzy agreement via the codegen'd JaroWinkler expression (bit-
-    //    exact vs DuckDB's jaro_winkler_similarity), weights as shared
-    //    micro-integer literals → exact long score sums (oracle: DuckDB
-    //    replays the dirt, both blocking passes, JW levels and the
-    //    histogram) ──────────────────────────────────────────────────────
-    "q269_er_match_scores" -> ((s, dir) => {
-      val ents = linkageEntities(s, dir)
-      val pairs = Linkage.blockedPairs(ents, "id", linkageBlockKeys(), 4096)
-        .filter(pmod(col("id_a"), lit(2L)) =!= pmod(col("id_b"), lit(2L)))
-      Linkage.scoreHistogram(
-        Linkage.matchScores(ents, "id", pairs, linkageFields, carry = Seq("ckey")),
-        col("a_ckey") === col("b_ckey"), bucketMicro = 2000000L)
-    }),
-    // ── scale: blocking-quality report — per blocking pass (and the
-    //    deduplicated union) candidate-pair count, true pairs found, pair
-    //    completeness vs the exact Σ C(g,2) truth total, and reduction
-    //    ratio vs C(n,2) — the measured input to the "which blocking keys"
-    //    decision (oracle: DuckDB replays passes and totals) ──────────────
-    "q270_blocking_quality" -> ((s, dir) =>
-      Linkage.blockingQualityReport(linkageEntities(s, dir), "id", "ckey",
-        linkageBlockKeys())),
-    // ── scale: golden-record survivorship — after resolution (q273),
-    //    each cluster's canonical field values under the system-of-record
-    //    rule (lowest id supplies the value — one struct-min aggregate,
-    //    no window) plus per-field variant counts exposing conflicts;
-    //    the last step of the MDM pipeline (oracle: DuckDB replays the
-    //    resolution + arg_min/COUNT DISTINCT) ──────────────────────────────
-    "q293_er_survivorship" -> ((s, dir) => {
-      erResolvedClusters(s, dir)
-        .join(linkageEntities(s, dir), "id")
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_members"),
-          min(struct(col("id"), col("name"))).getField("name")
-            .as("canonical_name"),
-          countDistinct(col("name")).as("name_variants"),
-          min(struct(col("id"), col("bal"))).getField("bal")
-            .as("canonical_bal"),
-          countDistinct(col("bal")).as("bal_variants"))
-        .orderBy("cluster_id")
-    }),
-    // ── scale: CAPPED link prediction — the maxMiddleDegree=100
-    //    bounded-recall path users actually run at scale (q144 gates the
-    //    exact path; this gates the production lever: wedges only through
-    //    middles of degree ≤ cap, jaccard denominators stay UNcapped)
-    //    (oracle: DuckDB replays the same cap arithmetic) ─────────────────
-    "q294_link_prediction_capped" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.linkPrediction(edges, "item_a", "item_b", topK = 20,
-          maxMiddleDegree = 100)
-        .select(col("a").as("item_a"), col("b").as("item_b"), col("common"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("item_a", "item_b")
-    }),
-    // ── scale: CAPPED 2-hop harmonic centrality — same bounded-recall
-    //    convention for q154's production path (N₂ reached only through
-    //    degree-≤-cap middles; the degree term stays exact) ───────────────
-    "q295_harmonic2_capped" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.harmonicCentrality2(edges, "item_a", "item_b", topK = 20,
-          maxMiddleDegree = 100)
-        .select(col("rank"), col("node"), col("degree"), col("n2"),
-          round(col("harmonic"), 6).as("harmonic"))
-        .orderBy("rank")
-    }),
-    // ── scale: jackknife ratio variance — delete-one-bucket standard
-    //    error for a ratio-of-sums metric (revenue per event): exact-cents
-    //    per-bucket sufficient statistics, bucket-ORDERED deterministic
-    //    fold over the H-row frame (oracle: DuckDB replays the hash
-    //    bucketing, leave-one-out ratios, and both ordered folds) ─────────
-    "q314_jackknife_ratio" -> ((s, dir) => {
-      val ev = T(s, dir, "events").select(col("user_id"),
-        round(col("value") * lit(100.0)).cast("long").as("cents"),
-        lit(1L).as("one"))
-      Analytics.jackknifeRatio(ev, "user_id", "cents", "one", buckets = 32)
-        .select(col("n_rows"), col("h"), round(col("ratio"), 6).as("ratio"),
-          round(col("se"), 6).as("se"), round(col("ci_lo"), 6).as("ci_lo"),
-          round(col("ci_hi"), 6).as("ci_hi"))
-    }),
-    // ── scale: isotonic (PAV) calibration — monotone regression of a
-    //    quality score against a binary outcome on score bins; exact long
-    //    pooling on the driver over the ≤bins frame. Spec-gated (PAV's
-    //    data-dependent pooling depth has no fixed SQL unrolling — the
-    //    q313 rationale); rows-only here, hand goldens + invariants in
-    //    TrainingSpec pin exactness. ──────────────────────────────────────
-    "q315_isotonic_calibration" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val scored = d.select(
-        TextAnalysis.qualityScore(col("text")).as("score"),
-        (col("n_chars") > 400).as("label"))
-      Training.isotonicCalibration(scored, "score", col("label"), bins = 10)
-        .select(col("bin"), round(col("bin_lo"), 1).as("bin_lo"), col("n"),
-          col("positives"), round(col("raw_rate"), 6).as("raw_rate"),
-          round(col("calibrated_rate"), 6).as("calibrated_rate"))
-        .orderBy("bin")
-    }),
-    // ── scale: Wilson score intervals — the per-slice proportion CI that
-    //    stays inside [0,1] and honest at small n (report companion to the
-    //    q286 quality rules / q302 match disposition); one group aggregate
-    //    of exact longs (oracle: DuckDB replays the closed form) ──────────
-    "q316_wilson_intervals" -> ((s, dir) => {
-      Profiling.wilsonIntervals(T(s, dir, "documents"), "source",
-          col("n_chars") > 400, z = 1.96)
-        .select(col("group"), col("n"), col("successes"),
-          round(col("rate"), 6).as("rate"), round(col("lo"), 6).as("lo"),
-          round(col("hi"), 6).as("hi"))
-        .orderBy("group")
-    }),
-    // ── scale: Chapman capture–recapture — estimate the population BOTH
-    //    samples missed (two crawl seeds / two days' actives): exact
-    //    distinct counts + one key-width semi-join, closed-form estimate
-    //    (oracle: DuckDB replays counts and the arithmetic) ────────────────
-    "q317_capture_recapture" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      Sampling.chapmanEstimate(
-          ev.filter(pmod(col("event_id"), lit(3L)) === 0).select("user_id"),
-          ev.filter(pmod(col("event_id"), lit(5L)) === 0).select("user_id"),
-          "user_id")
-        .select(col("n1"), col("n2"), col("m"),
-          round(col("n_hat"), 6).as("n_hat"), round(col("se"), 6).as("se"),
-          round(col("ci_lo"), 6).as("ci_lo"),
-          round(col("ci_hi"), 6).as("ci_hi"))
-    }),
-    // ── scale: exact PR curve + average precision — the imbalanced-class
-    //    companion to q173's AUC (scores binned to 3dp bound the det-gated
-    //    AP fold; tp/fp ride the distributed-cumsum idiom on the
-    //    score-cardinality frame; oracle: DuckDB replays the scorer, the
-    //    desc cumulative windows, and the threshold-ordered AP fold) ──────
-    "q318_pr_curve" -> ((s, dir) => {
-      // round(round(·,6),3) mirrors the oracle's round($qualitySql, 3)
-      // exactly (qualitySql bakes in the 6dp round; single-rounding to 3
-      // could disagree at 6dp-tie boundaries)
-      val d = T(s, dir, "documents").select(
-        round(round(TextAnalysis.qualityScore(col("text")), 6), 3).as("score"),
-        (col("lang") === "en").as("label"))
-      Analytics.prCurve(d, "score", "label", deterministic = true)
-        .select(round(col("threshold"), 3).as("threshold"), col("tp"),
-          col("fp"), round(col("precision"), 6).as("precision"),
-          round(col("recall"), 6).as("recall"), round(col("ap"), 6).as("ap"))
-        .orderBy(col("threshold").desc)
-    }),
-    // ── scale: Brier score + Murphy decomposition — raw Brier from exact
-    //    micro-integer (s−y)² sums (DECIMAL(38,0), order-independent);
-    //    REL/RES/UNC fold bin-ascending on the driver over the ≤bins frame
-    //    (oracle: DuckDB replays the HUGEINT sums and the bin folds) ──────
-    "q319_brier_decomposition" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(
-        round(TextAnalysis.qualityScore(col("text")), 6).as("score"),
-        (col("lang") === "en").as("label"))
-      Training.brierDecomposition(d, "score", col("label"), bins = 10)
-        .select(col("bin"), col("n"), col("positives"),
-          round(col("conf"), 6).as("conf"), round(col("acc"), 6).as("acc"),
-          round(col("brier"), 6).as("brier"),
-          round(col("reliability"), 6).as("reliability"),
-          round(col("resolution"), 6).as("resolution"),
-          round(col("uncertainty"), 6).as("uncertainty"),
-          round(col("within_bin_var"), 6).as("within_bin_var"))
-        .orderBy("bin")
-    }),
-    // ── scale: split-conformal prediction interval — distribution-free
-    //    coverage from an exact order-statistic of calibration residuals
-    //    (per-source median predictor fit on the cal split only; the rank
-    //    machinery is the pruned q103 core; oracle: DuckDB replays the
-    //    md5 split, the medians, rank k, and the test coverage) ───────────
-    "q320_conformal_interval" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("n_chars").cast("double").as("actual"))
-        .withColumn("__split",
-          pmod(Dedup.md5Hash60(col("doc_id")), lit(5L)))
-      val cal = d.filter(col("__split") =!= 0L)
-      val test = d.filter(col("__split") === 0L)
-      val med = Analytics.discreteQuantilesPerGroup(cal, "source", "doc_id",
-          "actual", Seq(0.5))
-        .select(col("source"), col("value").as("pred"))
-      Training.conformalInterval(
-          cal.join(broadcast(med), Seq("source")),
-          test.join(broadcast(med), Seq("source")),
-          "doc_id", "pred", "actual", alpha = 0.1)
-        .select(col("n_cal"), round(col("alpha"), 6).as("alpha"), col("k"),
-          round(col("qhat"), 6).as("qhat"), col("n_test"), col("covered"),
-          round(col("coverage"), 6).as("coverage"))
-    }),
-    // ── scale: Q–Q quantile pairs — WHERE two slices' distributions
-    //    diverge (the drift tier's shape readout beside KS/PSI); exact
-    //    order statistics at 20 probes over one pruned range exchange
-    //    (oracle: DuckDB replays the rank targets per slice) ──────────────
-    "q321_qq_pairs" -> ((s, dir) => {
-      Profiling.qqPairs(T(s, dir, "events"), "event_type", "event_id",
-          "value", "click", "view", k = 20)
-        .select(round(col("q"), 6).as("q"), round(col("v_a"), 6).as("v_a"),
-          round(col("v_b"), 6).as("v_b"), round(col("diff"), 6).as("diff"))
-        .orderBy("q")
-    }),
-    // ── scale: Welch two-sample t-test — exact micro-integer sufficient
-    //    statistics (Σv long, Σv² DECIMAL(38,0) — the q229 convention);
-    //    t and Welch–Satterthwaite df in fixed-parenthesization doubles on
-    //    the 2-row frame (oracle: DuckDB replays via HUGEINT) ─────────────
-    "q322_welch_ttest" -> ((s, dir) => {
-      Analytics.welchTTest(T(s, dir, "events"), "event_type", "value",
-          "click", "view")
-        .select(col("n_a"), col("n_b"), round(col("mean_a"), 6).as("mean_a"),
-          round(col("mean_b"), 6).as("mean_b"),
-          round(col("var_a"), 6).as("var_a"),
-          round(col("var_b"), 6).as("var_b"),
-          round(col("t"), 6).as("t"), round(col("df"), 6).as("df"))
-    }),
-    // ── scale: sample-ratio-mismatch check — χ² goodness-of-fit of a
-    //    hash-assigned 4-arm split against the 25% design, with a planted
-    //    off-design arm exercising the n_unexpected flag (oracle: DuckDB
-    //    replays the md5 assignment, counts, and the arm-ordered fold) ────
-    "q323_srm_check" -> ((s, dir) => {
-      val u = T(s, dir, "events").select("user_id").distinct()
-      val arm = when(col("user_id") % 97 === 0, lit("zz"))
-        .otherwise(element_at(
-          typedLit(Map(0L -> "a", 1L -> "b", 2L -> "c", 3L -> "d")),
-          pmod(Dedup.md5Hash60(col("user_id")), lit(4L))))
-      Analytics.srmCheck(u.select(arm.as("arm")), "arm",
-          Map("a" -> 0.25, "b" -> 0.25, "c" -> 0.25, "d" -> 0.25))
-        .select(col("arm"), col("n_obs"),
-          round(col("expected_n"), 6).as("expected_n"),
-          round(col("contrib"), 6).as("contrib"), col("n"),
-          col("n_unexpected"), round(col("chi2"), 6).as("chi2"), col("dof"))
-        .orderBy("arm")
-    }),
-    // ── scale: log-rank test — censoring-aware A/B on the q152 KM
-    //    subjects (time-to-first-error in hours) split by user-hash
-    //    parity; exact long O₁, time-ascending E₁/V folds over the
-    //    duration-cardinality frame (oracle: DuckDB replays the suffix
-    //    sums and both folds) ─────────────────────────────────────────────
-    "q324_log_rank" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val subj = ev.groupBy("user_id").agg(
-        min(unix_micros(col("ts"))).as("__first"),
-        min(when(col("event_type") === "error", unix_micros(col("ts"))))
-          .as("__ferr"))
-      val g = ev.agg(max(unix_micros(col("ts"))).as("__gmx"))
-      val d = subj.crossJoin(broadcast(g)).select(
-        col("user_id"),
-        expr("coalesce(__ferr - __first, __gmx - __first) div 3600000000")
-          .as("t_hours"),
-        col("__ferr").isNotNull.as("observed"))
-        .withColumn("grp",
-          when(pmod(Dedup.md5Hash60(col("user_id")), lit(2L)) === 0L,
-            lit("g0")).otherwise(lit("g1")))
-      Analytics.logRankTest(d, "t_hours", "observed", "grp", "g0", "g1")
-        .select(col("n_times"), col("o1"), round(col("e1"), 6).as("e1"),
-          round(col("v"), 6).as("v"), round(col("chi2"), 6).as("chi2"))
-    }),
-    // ── scale: categorical value drift — per-category ref/cur counts,
-    //    shares, log-ratio, new/vanished/shared status (planted 'qq' in
-    //    ref and 'zz' in cur exercise both flags); two category-sized
-    //    aggregates + one key-width full-outer join (oracle: trivial) ─────
-    "q325_category_drift" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val ref = docs.filter(col("doc_id") % 2 === 0)
-        .select(when(col("doc_id") % 41 === 0, lit("qq"))
-          .otherwise(col("lang")).as("lang"))
-      val cur = docs.filter(col("doc_id") % 2 === 1)
-        .select(when(col("doc_id") % 31 === 0, lit("zz"))
-          .otherwise(col("lang")).as("lang"))
-      Profiling.categoryDrift(ref, cur, "lang")
-        .select(col("category"), col("n_ref"), col("n_cur"),
-          round(col("p_ref"), 6).as("p_ref"),
-          round(col("p_cur"), 6).as("p_cur"),
-          round(col("log_ratio"), 6).as("log_ratio"), col("status"))
-        .orderBy("category")
-    }),
-    // ── scale: Poisson spike bound — per (event_type, day) count vs the
-    //    key's leave-one-out daily baseline, Chernoff tail bound in
-    //    replayable closed form (the principled twin of q115's z-flag
-    //    monitor) (oracle: DuckDB replays counts, λ, and the bound) ────────
-    "q326_poisson_spike" -> ((s, dir) => {
-      Analytics.poissonSpikeBound(T(s, dir, "events"), "event_type", "ts",
-          alpha = 0.001)
-        .select(col("key"), col("day"), col("n"),
-          round(col("lambda"), 6).as("lambda"),
-          round(col("bound"), 6).as("bound"), col("flagged"))
-        .orderBy("key", "day")
-    }),
-    // ── scale: Bradley–Terry preference strengths — MM fit over
-    //    "engagement duels" (per user, consecutive event pairs; the
-    //    higher-value event's type wins); 3 driver-sequenced rounds,
-    //    opponent-sorted folds on the gate path (oracle: DuckDB unrolls
-    //    the duel window, the pair counts, and all 3 MM rounds) ───────────
-    "q327_bradley_terry" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = T(s, dir, "events")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-      val duels = ev
-        .withColumn("__pt", lag(col("event_type"), 1).over(w))
-        .withColumn("__pv", lag(col("value"), 1).over(w))
-        .filter(col("__pt").isNotNull &&
-          col("__pt") =!= col("event_type") && col("value") =!= col("__pv"))
-        .select(
-          when(col("value") > col("__pv"), col("event_type"))
-            .otherwise(col("__pt")).as("winner"),
-          when(col("value") > col("__pv"), col("__pt"))
-            .otherwise(col("event_type")).as("loser"))
-      Training.bradleyTerry(duels, "winner", "loser", rounds = 3,
-          deterministic = true)
-        .select(col("item"), col("wins"), round(col("theta"), 6).as("theta"))
-        .orderBy("item")
-    }),
-    // ── scale: Fleiss' kappa — multi-rater chance-corrected agreement
-    //    (3 "annotators" = the langs of 3 consecutive docs per item);
-    //    exact long agreement sums, category-sorted P̄e fold (oracle:
-    //    DuckDB replays cells, marginals, and the folds) ──────────────────
-    "q328_fleiss_kappa" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .select((col("doc_id") - pmod(col("doc_id"), lit(3L))).as("item"),
-          col("lang"))
-      val complete = docs.groupBy("item").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") === 3L).select("item")
-      Profiling.fleissKappa(docs.join(complete, Seq("item"), "left_semi"),
-          "item", "lang")
-        .select(col("n_items"), col("n_raters"),
-          round(col("p_bar"), 6).as("p_bar"), round(col("p_e"), 6).as("p_e"),
-          round(col("kappa"), 6).as("kappa"))
-    }),
-    // ── scale: HyperBall harmonic centrality — full-radius centrality on
-    //    q154's co-occurrence graph via HLL ball sketches (O(|E|·m) per
-    //    round vs the wedge family's Σ deg^d); md5 registers make every
-    //    round SQL-replayable (oracle: DuckDB unrolls all 3 register-merge
-    //    rounds + the HLL estimates + the harmonic accumulation) ──────────
-    "q337_hyperball_harmonic" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.harmonicCentralityHyperBall(edges, "item_a", "item_b",
-          rounds = 3, m = 16, topK = 20)
-        .select(col("rank"), col("node"),
-          round(col("ball_est"), 6).as("ball_est"),
-          round(col("harmonic"), 6).as("harmonic"))
-        .orderBy("rank")
-    }),
-    // ── scale: Markov removal-effect attribution — the principled
-    //    multi-touch credit model: per-user paths truncated at first
-    //    purchase collapse to the channel-cardinality transition matrix;
-    //    K absorption rounds per removal scenario run on the driver with
-    //    to-sorted folds (oracle: DuckDB replays the paths, the matrix,
-    //    and every round of every scenario) ────────────────────────────────
-    "q339_markov_attribution" -> ((s, dir) => {
-      Analytics.markovAttribution(T(s, dir, "events"), "user_id", "ts",
-          "event_type", "event_id", convType = "purchase", rounds = 6)
-        .select(col("channel"), col("touches"),
-          round(col("p_conv_full"), 6).as("p_conv_full"),
-          round(col("p_conv_removed"), 6).as("p_conv_removed"),
-          round(col("removal_effect"), 6).as("removal_effect"),
-          round(col("share"), 6).as("share"))
-        .orderBy("channel")
-    }),
-    // ── scale: HyperANF neighborhood function — N(d) pairs-within-d +
-    //    effective-diameter readout on the same O(|E|·m) HyperBall loop;
-    //    node-sorted Σ-est folds on the gate path (oracle: DuckDB replays
-    //    the rounds and the node-ordered sums) ─────────────────────────────
-    "q338_hyperanf" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.neighborhoodFunction(edges, "item_a", "item_b",
-          rounds = 3, m = 16, deterministic = true)
-        .select(col("d"), col("n_nodes"),
-          round(col("n_pairs_est"), 6).as("n_pairs_est"),
-          round(col("frac_of_max"), 6).as("frac_of_max"))
-        .orderBy("d")
-    }),
-    // ── scale: anytime-valid confidence sequence — the peeking-safe
-    //    per-(arm, day) cumulative-mean monitor (Hoeffding + union bound
-    //    over looks); exact micro-int cumulative sums, per-arm windows
-    //    over the day frame, closed form after (oracle: DuckDB replays
-    //    the md5 arms, the cumsum windows, and the boundary) ──────────────
-    "q334_confidence_sequence" -> ((s, dir) => {
-      val ev = T(s, dir, "events").withColumn("arm",
-        when(pmod(Dedup.md5Hash60(col("user_id")), lit(2L)) === 0L,
-          lit("g0")).otherwise(lit("g1")))
-      // hi = 1000: value's support bound across ALL test SFs (sf0.1 max is
-      // 560.21 — the original 500 only held at sf0.01 and threw at bench
-      // scale; the operator throws on out-of-range BY DESIGN)
-      Analytics.confidenceSequence(ev, "arm", "ts", "value",
-          lo = 0.0, hi = 1000.0, alpha = 0.05)
-        .select(col("arm"), col("day"), col("n_cum"),
-          round(col("mean_cum"), 6).as("mean_cum"),
-          round(col("half"), 6).as("half"),
-          round(col("ci_lo"), 6).as("ci_lo"),
-          round(col("ci_hi"), 6).as("ci_hi"))
-        .orderBy("arm", "day")
-    }),
-    // ── scale: post-stratified mean — reweight per-lang sample means to
-    //    known population shares; exact micro-int sufficient statistics,
-    //    stratum-sorted driver fold over the ≤|shares| frame (oracle:
-    //    DuckDB replays the VALUES shares and both folds) ──────────────────
-    "q335_post_stratified_mean" -> ((s, dir) => {
-      Sampling.postStratifiedMean(T(s, dir, "documents"), "lang",
-          "n_chars", Map("en" -> 0.4, "zh" -> 0.2, "es" -> 0.15,
-            "de" -> 0.15, "fr" -> 0.1))
-        .select(col("n"), col("n_strata"), col("missing_strata"),
-          col("n_excluded"), round(col("mean_ps"), 6).as("mean_ps"),
-          round(col("se"), 6).as("se"))
-    }),
-    // ── scale: exact-matching ATT — treated-vs-control value gap within
-    //    event_type strata holding both arms, treated-weighted; det-gated
-    //    stratum-sorted fold on the gate path (oracle: DuckDB replays the
-    //    pivot and the key-ordered fold) ───────────────────────────────────
-    "q336_exact_matched_att" -> ((s, dir) => {
-      val ev = T(s, dir, "events").withColumn("treat",
-        pmod(Dedup.md5Hash60(col("user_id")), lit(2L)) === 0L)
-      Analytics.exactMatchedATT(ev, Seq("event_type"), "treat", "value",
-          deterministic = true)
-        .select(col("n_strata_matched"), col("n_treated_matched"),
-          col("n_treated_unmatched"), round(col("att"), 6).as("att"))
-    }),
-    // ── scale: MEASURED IVF recall calibration — recall@k of the
-    //    PRODUCTION ivfTopK path per nProbe vs exact brute-force truth on
-    //    a deterministic ≤64-query sample (the q313 twin for the vector
-    //    tier). Rows-only: the IVF path's xxhash64 seeding has no DuckDB
-    //    twin (the q313 rationale); exactness is pinned by the
-    //    probe-all-centroids ≡ brute-force equality spec. ──────────────────
-    "q330_ivf_recall_audit" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfRecallAudit(emb, "vec_id", "embedding", k = 10,
-          numCentroids = 16, nProbes = Seq(1, 2, 4, 16), maxQueries = 64)
-        .select(col("n_probe"), col("n_queries"), col("n_truth_pairs"),
-          col("n_hit"), round(col("recall"), 6).as("recall"))
-        .orderBy("n_probe")
-    }),
-    // ── scale: int8 scalar-quantization report — per-dim max-abs scales
-    //    from ONE posexplode aggregate, per-vector round-trip MSE /
-    //    max-abs-err / self-cosine as a pure projection (the "can the
-    //    embedding tier ship at 1/4 width?" decision table) (oracle:
-    //    DuckDB replays scales, the int8 round-trip, and the per-row
-    //    folds) ─────────────────────────────────────────────────────────────
-    "q332_scalar_quantize" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.scalarQuantizeReport(emb.filter(col("vec_id") < 100),
-          "vec_id", "embedding")
-        .select(col("id"), round(col("mse") * lit(1e6), 6).as("mse_ppm"),
-          round(col("max_abs_err"), 6).as("max_abs_err"),
-          round(col("cosine_self"), 6).as("cosine_self"))
-        .orderBy("id")
-    }),
-    // ── scale: quantization recall audit — recall@10 of brute-force
-    //    search over the int8-dequantized vectors vs full-precision truth
-    //    on the deterministic ≤64-query sample (oracle: DuckDB replays
-    //    the scales, round-trip, both QUALIFY top-k's, and the hit
-    //    count) ─────────────────────────────────────────────────────────────
-    "q333_quantization_recall" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.quantizationRecallAudit(emb, "vec_id", "embedding",
-          k = 10, maxQueries = 64)
-        .select(col("n_queries"), col("n_truth_pairs"), col("n_hit"),
-          round(col("recall"), 6).as("recall"))
-    }),
-    // ── scale: hard-negative mining — per query the top-k corpus rows in
-    //    a cosine band [0.3, 0.8): similar enough to teach, below the
-    //    near-duplicate false-negative zone; band filters BEFORE the
-    //    top-k window (oracle: DuckDB list_cosine_similarity + QUALIFY) ───
-    "q331_hard_negatives" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5, lo = 0.3, hi = 0.8)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("cosine"), 6).as("cosine"))
-        .orderBy("query_id", "rank")
-    }),
-    // ── scale: funnel step timings — exact p50/p90 of each hop's
-    //    per-user transition delay on q113's min-time funnel path; no FP
-    //    anywhere (oracle: DuckDB replays the step mins, delays, and the
-    //    rank targets) ──────────────────────────────────────────────────────
-    "q329_funnel_timings" -> ((s, dir) => {
-      Analytics.funnelTimings(T(s, dir, "events"), "user_id", "ts",
-          "event_type", Seq("view", "click", "purchase"),
-          qs = Seq(0.5, 0.9))
-        .select(col("step_idx"), col("step"), col("n_users"),
-          round(col("q"), 6).as("q"), col("delay_us"))
-        .orderBy("step_idx", "q")
-    }),
-    // ── scale: MEASURED LSH recall calibration — per exact-Jaccard bin
-    //    over a deterministic ≤256-doc sample, the fraction of pairs the
-    //    PRODUCTION banding surfaced as candidates, beside the theoretical
-    //    S-curve (q211 says what the parameters should do; this says what
-    //    they did on this corpus). Spec-gated, not SQL-oracle-gated: the
-    //    candidate path is the fused xxhash64 MinHash, which has no DuckDB
-    //    twin (the q25 lesson) — auditing a replayable lookalike hash
-    //    would measure the wrong banding. Rows-only check here; exactness
-    //    is pinned by CurationSpec's independent-path equality test. ──────
-    "q313_lsh_recall_audit" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val dupes = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(col("text"), lit(" extra token")).as("text"))
-      Dedup.lshRecallAudit(d.unionByName(dupes), "doc_id", "text",
-          shingleSize = 3, bands = 16, rowsPerBand = 2,
-          maxSample = 256, bins = 10)
-        .select(col("bin"), round(col("bin_lo"), 1).as("bin_lo"),
-          col("n_pairs"), col("n_candidates"),
-          round(col("recall"), 6).as("recall"),
-          round(col("theory_recall"), 6).as("theory_recall"))
-        .orderBy("bin")
-    }),
-    // ── scale: Benjamini–Hochberg FDR — turn a frame of per-slice test
-    //    p-values into q-values + an αFDR decision (the correction layer
-    //    every multi-slice drift/test sweep needs before anyone acts on
-    //    "significant"); globalRowNumber ranks + per-partition suffix-min
-    //    with a driver suffix over the partitions-sized min table — no
-    //    single-partition rank exchange (oracle: DuckDB replays the hash
-    //    p-values, the rank window, and the reverse running min) ──────────
-    "q308_bh_fdr" -> ((s, dir) => {
-      // deterministic pseudo p-values (md5-fraction per slice; slices with
-      // nationkey < 5 get planted 1000× smaller p's so both decision
-      // branches are exercised) — the operator under test is the
-      // ADJUSTMENT, not the upstream test statistic
-      val tests = T(s, dir, "customer")
-        .select(concat(col("c_nationkey").cast("string"), lit("|"),
-          col("c_mktsegment")).as("test_id"), col("c_nationkey").as("nk"))
-        .distinct()
-        .withColumn("__p0", Dedup.md5Hash60(col("test_id")).cast("double") /
-          lit(1.152921504606846976e18))
-        .withColumn("p", when(col("nk") < 5, col("__p0") / lit(1000.0))
-          .otherwise(col("__p0")))
-      Analytics.bhAdjust(tests, "test_id", "p", alpha = 0.25)
-        .select(col("test_id"), round(col("p"), 9).as("p"), col("rank"),
-          round(col("q_value"), 9).as("q_value"), col("reject"))
-        .orderBy("rank")
-    }),
-    // ── scale: CUPED variance reduction — per-variant adjusted means
-    //    Y − θ·(X − mean X) from pre-period covariates (the standard
-    //    experimentation trick); θ from exact DECIMAL(38,0) sufficient
-    //    statistics, doubles only at the end with fixed parenthesization
-    //    (oracle: DuckDB HUGEINT sums + the same arithmetic tree) ─────────
-    "q309_cuped" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val units = ev.select(col("user_id"),
-          round(col("value") * lit(100.0)).cast("long").as("__cents"),
-          (col("ts") < lit("2024-01-16").cast("timestamp")).as("__pre"))
-        .groupBy("user_id")
-        .agg(sum(when(col("__pre"), col("__cents")).otherwise(0L)).as("x"),
-          sum(when(!col("__pre"), col("__cents")).otherwise(0L)).as("y"))
-        .withColumn("variant", pmod(col("user_id"), lit(2L)).cast("string"))
-      Analytics.cupedAdjust(units, "user_id", "variant", "x", "y")
-        .select(col("variant"), col("n_units"),
-          round(col("mean_pre"), 6).as("mean_pre"),
-          round(col("mean_post"), 6).as("mean_post"),
-          round(col("mean_post_adj"), 6).as("mean_post_adj"),
-          round(col("var_post"), 2).as("var_post"),
-          round(col("var_post_adj"), 2).as("var_post_adj"),
-          round(col("theta"), 6).as("theta"))
-        .orderBy("variant")
-    }),
-    // ── scale: Misra–Gries exact heavy hitters — the two-pass MG:
-    //    ≤ k candidates per partition (superset guarantee), then an exact
-    //    recount of candidates only — the output is EXACTLY the true
-    //    count > n/k set at bounded memory, never a vocab-wide shuffle
-    //    (oracle: plain GROUP BY/HAVING — the exactness claim itself) ─────
-    "q310_mg_heavy_hitters" -> ((s, dir) => {
-      val toks = T(s, dir, "documents")
-        .select(explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
-      Sketches.mgHeavyHitters(toks, "tok", k = 30)
-        .orderBy(col("cnt").desc, col("item"))
-    }),
-    // ── scale: modularity — is a community assignment real structure?
-    //    Q-contribution per community of the nation partition over the
-    //    customer–supplier co-purchase graph; exact DECIMAL(38,0) integer
-    //    numerators, induced-subgraph semantics (m/degrees AFTER the
-    //    assignment join) (oracle: DuckDB replays canonicalization,
-    //    induced degrees, and the HUGEINT arithmetic) ─────────────────────
-    "q311_modularity" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      val cust = T(s, dir, "customer")
-        .select(concat(lit("c"), col("c_custkey")).as("node"),
-          concat(lit("n"), col("c_nationkey")).as("comm"))
-      val supp = T(s, dir, "supplier")
-        .select(concat(lit("s"), col("s_suppkey")).as("node"),
-          concat(lit("n"), col("s_nationkey")).as("comm"))
-      Graph.modularity(el, "a", "b", cust.unionByName(supp), "node", "comm")
-        .select(col("community"), col("n_nodes"), col("in_edges"),
-          col("deg_sum"), round(col("contrib"), 9).as("contrib"))
-        .orderBy("community")
-    }),
-    // ── scale: top movers — the keys whose REVENUE RANK moved most
-    //    between two periods (rank deltas survive level shifts raw deltas
-    //    can't); exact-cents per-(part, period) sums, distributed global
-    //    ranks over the key-cardinality aggregate, TakeOrdered top-k
-    //    (oracle: DuckDB replays sums, both rank windows, and the cut) ────
-    "q307_top_movers" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").withColumn("period",
-        when(col("l_shipdate") < lit("1998-01-01").cast("timestamp"),
-          lit("a")).otherwise(lit("b")))
-        .withColumn("cents",
-          round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * lit(100.0)).cast("long"))
-      Analytics.topMovers(li, "l_partkey", "cents", "period", "a", "b",
-          k = 25)
-        .orderBy(abs(col("delta")).desc, col("l_partkey"))
-    }),
-    // ── scale: pair forensics — every detector's verdict for given pairs
-    //    in one row (shingles, Jaccard, containment, SimHash Hamming,
-    //    exact): "why did the dedup merge these two?"; corpus semi-joins
-    //    to the pair ids first, all metrics in-row (oracle: DuckDB replays
-    //    shingles, list_intersect, the md5-token simhash, and md5 text
-    //    equality) ──────────────────────────────────────────────────────────
-    "q306_pair_forensics" -> ((s, dir) => {
-      import s.implicits._
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      val dupes = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      val corpus = d.unionByName(dupes)
-      val probePairs = Seq((10L, 100010L), (20L, 100020L), (33L, 77L),
-        (40L, 100050L)).toDF("id_a", "id_b")
-      Dedup.pairForensics(corpus, probePairs, "doc_id", "text",
-          shingleSize = 3, tokenHash = Dedup.Md5TokenHash)
-        .orderBy("id_a", "id_b")
-    }),
-    // ── scale: sketch-error audit — q304's HLL overlap NEXT TO the exact
-    //    overlap (distinct frames + one key-width semi-join), with
-    //    relative errors: the calibration run a domain does once before
-    //    trusting sketch numbers everywhere (oracle: DuckDB computes the
-    //    exact side and replays the q304 register arithmetic) ──────────────
-    "q305_overlap_audit" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      Sketches.hllOverlapAudit(
-          ev.filter(pmod(col("user_id"), lit(2L)) === 0).select("user_id"),
-          ev.filter(pmod(col("user_id"), lit(3L)) === 0).select("user_id"),
-          "user_id", m = 256)
-        .select(col("exact_a"), col("exact_b"), col("exact_intersection"),
-          round(col("est_a"), 6).as("est_a"),
-          round(col("est_b"), 6).as("est_b"),
-          round(col("est_intersection"), 6).as("est_intersection"),
-          round(col("rel_err_a"), 6).as("rel_err_a"),
-          round(col("rel_err_b"), 6).as("rel_err_b"))
-    }),
-    // ── scale: HLL audience overlap — |A|, |B|, |A∪B| (register max-merge)
-    //    and the inclusion–exclusion intersection + Jaccard, at sketch
-    //    cost with NO join between the raw sets (the compounding-error
-    //    caveat documented; negative reads clamp to 0) (oracle: DuckDB
-    //    replays registers for a/b/union and the same arithmetic) ──────────
-    "q304_hll_overlap" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      Sketches.hllOverlap(
-          ev.filter(pmod(col("user_id"), lit(2L)) === 0).select("user_id"),
-          ev.filter(pmod(col("user_id"), lit(3L)) === 0).select("user_id"),
-          "user_id", m = 256)
-        .select(round(col("est_a"), 6).as("est_a"),
-          round(col("est_b"), 6).as("est_b"),
-          round(col("est_union"), 6).as("est_union"),
-          round(col("est_intersection"), 6).as("est_intersection"),
-          round(col("jaccard"), 6).as("jaccard"))
-    }),
-    // ── scale: per-group KMV quantiles — k-row mergeable bottom-k sample
-    //    of EVERY source in one pass (the per-group cell of the sketch
-    //    matrix: q90 CMS counts, q94/q111 HLL distinct, q178 global KMV),
-    //    then order-statistic estimates on the groups×k frame (oracle:
-    //    DuckDB replays hash, per-group bottom-k, and the rank selection) ──
-    "q303_group_kmv_quantiles" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("source"), col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("ntok"))
-      val sample = Sketches.kmvSamplePerGroup(d, "source", "doc_id", "ntok",
-        k = 64, seed = 7L)
-      Sketches.kmvQuantilesPerGroup(sample, Seq(0.5, 0.9))
-        .orderBy("group", "q")
-    }),
-    // ── scale: null co-missingness matrix — per column pair, the 2×2
-    //    missing/present contingency + φ ("do these columns go missing
-    //    TOGETHER?" — the upstream-join fingerprint per-column null
-    //    counts can't see); one scan, one single-row aggregate of exact
-    //    long cells, driver pivot; nulls planted deterministically (the
-    //    q55 convention — the synthetic feed has none) (oracle: DuckDB
-    //    replays indicators, cells, and φ) ─────────────────────────────────
-    "q300_null_comiss" -> ((s, dir) => {
-      val ev = T(s, dir, "events").select(col("event_id"),
-        when(pmod(col("event_id"), lit(7L)) === 0, lit(null).cast("string"))
-          .otherwise(col("props")).as("props"),
-        when(pmod(col("event_id"), lit(14L)) === 0 ||
-            pmod(col("event_id"), lit(5L)) === 0, lit(null).cast("double"))
-          .otherwise(col("value")).as("value"),
-        when(pmod(col("event_id"), lit(11L)) === 0, lit(null).cast("string"))
-          .otherwise(col("event_type")).as("event_type"))
-      Profiling.nullCoMissingness(ev, Seq("props", "value", "event_type"))
-        .orderBy("col_a", "col_b")
-    }),
-    // ── scale: Neyman allocation — per-stratum sample budget n_h ∝
-    //    N_h·σ_h (the sampling-design report q100/q250's samplers
-    //    consume); exact long/DECIMAL(38,0) sufficient statistics, double
-    //    arithmetic only on the strata-sized frame (oracle: DuckDB
-    //    HUGEINT sums + the same fixed parenthesization) ───────────────────
-    "q301_neyman_alloc" -> ((s, dir) => {
-      Sampling.neymanAllocation(
-          T(s, dir, "events").select("event_type", "value"),
-          "event_type", "value", totalN = 1000L)
-        .select(col("stratum"), col("n_rows"),
-          round(col("std"), 6).as("std"),
-          round(col("weight"), 4).as("weight"),
-          round(col("alloc"), 6).as("alloc"))
-        .orderBy("stratum")
-    }),
-    // ── scale: robust per-group trend (sampled Theil–Sen) — the median
-    //    slope a bad ingest day cannot drag (q198 OLS's outlier-proof
-    //    sibling); deterministic md5 pairing, exact order-statistic
-    //    medians, no fold-order surface anywhere (oracle: DuckDB replays
-    //    hash, ranks, pairing, slopes, and both medians) ──────────────────
-    "q299_robust_trend" -> ((s, dir) => {
-      val m = unix_micros(col("ts").cast("timestamp"))
-      val d = lit(86400000000L)
-      val ev = T(s, dir, "events").withColumn("day",
-        ((m - pmod(m, d)) / d).cast("long"))
-      Analytics.robustTrendPerGroup(ev, "event_type", "event_id", "day",
-          "value")
-        .select(col("event_type"), col("n_pairs"),
-          round(col("slope"), 6).as("slope"),
-          round(col("intercept"), 6).as("intercept"))
-        .orderBy("event_type")
-    }),
-    // ── scale: data-skipping pruning report — BEFORE paying for the
-    //    re-layout, measure per-probe skippable-partition fractions under
-    //    the candidate zorder layout vs the natural linear sort (exact
-    //    rank-bucket partitions stand in for files; per-partition min/max
-    //    stand in for footer stats) (oracle: DuckDB replays the Morton
-    //    key, ranks, buckets, stats, and the overlap counting) ────────────
-    "q298_pruning_report" -> ((s, dir) => {
-      import s.implicits._
-      val li = T(s, dir, "lineitem")
-        .withColumn("rid", col("l_orderkey") * 10 + col("l_linenumber"))
-      val probes = Seq(
-        (0L, "l_partkey", 100L, 120L),
-        (1L, "l_suppkey", 50L, 55L),
-        (2L, "l_partkey", 1L, 400L),
-        (3L, "l_suppkey", 300L, 310L))
-        .toDF("probe_id", "col_name", "lo", "hi")
-      Layout.pruningReport(li, "rid", Seq("l_partkey", "l_suppkey"),
-          partitions = 32, probes = probes)
-        .orderBy("layout", "probe_id")
-    }),
-    // ── scale: reciprocal best match — one-to-one catalog reconciliation
-    //    between the two dirty feeds (mutual argmax over the ≥-threshold
-    //    blocked candidates; max score, ties to smallest partner id):
-    //    each record matches AT MOST one partner, the assignment every
-    //    two-system migration needs where q273's clusters allow fan-in
-    //    (oracle: DuckDB replays scoring + both argmax windows + the
-    //    agreement join) ───────────────────────────────────────────────────
-    "q297_reciprocal_match" -> ((s, dir) => {
-      Linkage.reciprocalBestMatch(crossSystemScored(s, dir),
-          minScoreMicro = 3000000L)
-        .orderBy("id_a")
-    }),
-    // ── scale: match-disposition report — WHY each left record did or
-    //    didn't match after the q297 reconciliation (matched / lost_tie /
-    //    below_threshold / no_candidate): the unmatched tail localizes
-    //    whether blocking keys or the threshold need fixing (oracle:
-    //    DuckDB replays the q297 pipeline + the CASE classification) ──────
-    "q302_match_disposition" -> ((s, dir) => {
-      val scored = crossSystemScored(s, dir)
-      val matches = Linkage.reciprocalBestMatch(scored,
-        minScoreMicro = 3000000L)
-      val leftIds = linkageEntities(s, dir)
-        .filter(pmod(col("id"), lit(2L)) === 0)
-      Linkage.matchDisposition(leftIds, "id", scored, matches,
-          minScoreMicro = 3000000L)
-        .groupBy("disposition").agg(count(lit(1)).as("n"))
-        .orderBy("disposition")
-    }),
-    // ── scale: Markov stationary distribution — where the user journey
-    //    settles: 3 power-iteration rounds over q114's transition matrix
-    //    (ONE corpus pass; every round is TYPE-cardinality arithmetic);
-    //    dangling types self-loop so mass stays exactly 1 (oracle: DuckDB
-    //    replays counts + 3 unrolled MATERIALIZED rounds, from-sorted
-    //    folds) ────────────────────────────────────────────────────────────
-    "q296_stationary_dist" -> ((s, dir) => {
-      Analytics.stationaryDistribution(T(s, dir, "events"), "user_id",
-          "ts", "event_type", "event_id", rounds = 3, deterministic = true)
-        .select(col("t"), round(col("pi"), 6).as("pi"))
-        .orderBy("t")
-    }),
-    // ── SQL surface: ranking/navigation window suite through the
-    //    spark.sql entry point — ntile, percent_rank, cume_dist (exact
-    //    rank-derived rationals), lag/lead, first_value and nth_value
-    //    over one fully-tiebroken frame; the same ANSI text runs on both
-    //    engines (oracle: verbatim) ────────────────────────────────────────
-    "q291_window_suite" -> ((s, dir) => {
-      T(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(windowSuiteSql)
-    }),
-    // ── SQL surface: set operations — INTERSECT / EXCEPT with DISTINCT
-    //    and ALL multiplicities over deliberately-overlapping multisets
-    //    (duplicated even keys vs %3 keys); the same ANSI text runs on
-    //    both engines (oracle: verbatim) ───────────────────────────────────
-    "q292_set_ops" -> ((s, dir) => {
-      T(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(setOpsSql)
-    }),
-    // ── scale: dedup-aware token budget — the curation flow end-to-end:
-    //    near-dup pairs → components → keep-best representative per
-    //    cluster → THEN budget-select by quality, so a duplicated
-    //    document charges the budget once (budgeting before dedup
-    //    overfills the budget with copies of whatever scores well)
-    //    (oracle: q70's closure + keep-best replay feeding q79's cumsum) ───
-    "q289_dedup_budget" -> ((s, dir) => {
-      val u = lshInputQ46(s, dir)
-        .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-        .withColumn("ntok", TextAnalysis.tokenCount(col("text")).cast("long"))
-      val pairs = Dedup.minhashNearDupPairs(u, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      val winners = Dedup.dedupByComponentsKeepBest(u, "doc_id", pairs,
-        "quality")
-      Sampling.selectByTokenBudget(
-          winners.select(col("doc_id"), round(col("quality"), 6).as("quality"),
-            col("ntok")),
-          "doc_id", "ntok", "quality", budget = 40000L)
-        .orderBy("doc_id")
-    }),
-    // ── scale: incremental connected components — fold pair batches into
-    //    a persistent (id, component) map via the COMPONENT-level graph
-    //    (bounded by the batch's labels, never the corpus; edge history
-    //    never stored): the gate feeds the near-dup pairs in two arbitrary
-    //    halves and the oracle computes the FULL transitive closure —
-    //    passing means merged ≡ full recompute, the operator's defining
-    //    invariant (oracle: q46 recursive-CTE closure) ─────────────────────
-    "q288_cc_merge" -> ((s, dir) => {
-      val u = lshInputQ46(s, dir)
-      val pairs = Dedup.minhashNearDupPairs(u, "doc_id", "text",
-          shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-        .select("id_a", "id_b").localCheckpoint(true)
-      val p1 = pairs.filter(pmod(col("id_a") + col("id_b"), lit(2)) === 0)
-      val p2 = pairs.filter(pmod(col("id_a") + col("id_b"), lit(2)) === 1)
-      val empty = s.range(0).select(col("id"), col("id").as("component"))
-      Dedup.mergeComponents(Dedup.mergeComponents(empty, p1), p2)
-        .orderBy("id")
-    }),
-    // ── scale: dedup cascade — the cost-ordered detector stack as ONE
-    //    gated report: exact (hash semi-join) → Hamming ≤ 3 (pigeonhole)
-    //    → verified Jaccard ≥ 0.55 (banded LSH), each stage seeing only
-    //    the previous stage's survivors; batch = exact copies ∪
-    //    extra-token near-copies ∪ 60%-prefix truncations ∪ 10-token
-    //    quotes of the history (oracle: DuckDB replays all three stages
-    //    with the staged survivor semantics) ──────────────────────────────
-    "q287_dedup_cascade" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val toks = Dedup.tokensCol(col("text"))
-      val k = col("doc_id")
-      val batch = d.filter(pmod(k, lit(10)) === 0)
-        .select((k + 100000).as("doc_id"), col("text"))
-        .unionAll(d.filter(pmod(k, lit(7)) === 0)
-          .select((k + 200000).as("doc_id"),
-            concat(col("text"), lit(" extra token")).as("text")))
-        .unionAll(d.filter(pmod(k, lit(13)) === 0)
-          .select((k + 300000).as("doc_id"),
-            concat_ws(" ", slice(toks, lit(1),
-              greatest(floor(size(toks) * 3 / 5).cast("int"), lit(1))))
-              .as("text")))
-        .unionAll(d.filter(pmod(k, lit(11)) === 0)
-          .select((k + 400000).as("doc_id"),
-            concat_ws(" ", slice(toks, lit(1), least(lit(10), size(toks))))
-              .as("text")))
-      Dedup.cascadeNoveltyReport(d, batch, "doc_id", "text",
-          maxDist = 3, threshold = 0.55, bands = 16, rowsPerBand = 2,
-          tokenHash = Dedup.Md5TokenHash)
-        .orderBy("stage")
-    }),
-    // ── scale: quality-rules filter report — the Gopher-style heuristic
-    //    rule table (length band, alpha ratio, stopword floor, punctuation
-    //    ceiling) as per-source pass/fail counts with per-rule failure
-    //    attribution; every ratio test is a CROSS-MULTIPLIED INTEGER
-    //    comparison (letters·10 ≥ chars·6), so there is no double-boundary
-    //    parity risk anywhere (oracle: DuckDB replays the q22-parity
-    //    component expressions + the same integer rules) ───────────────────
-    "q286_quality_rules" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("source", "text")
-      val chars = length(col("text")).cast("long")
-      val letters = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
-        .cast("long")
-      val puncts = length(regexp_replace(col("text"), "[^.,;:!?]", ""))
-        .cast("long")
-      val stops = regexp_count(col("text"),
-        lit("(?i)\\b(the|and|of|to|a|in|is|it)\\b")).cast("long")
-      val toks = TextAnalysis.tokenCount(col("text")).cast("long")
-      val r1 = toks.between(20L, 2000L)
-      val r2 = letters * 10 >= chars * 6
-      val r3 = stops >= 2L
-      val r4 = puncts * 10 <= chars
-      def fails(r: org.apache.spark.sql.Column) =
-        sum(when(!r, 1L).otherwise(0L))
-      d.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(r1 && r2 && r3 && r4, 1L).otherwise(0L)).as("n_pass"),
-          fails(r1).as("fail_len"), fails(r2).as("fail_alpha"),
-          fails(r3).as("fail_stop"), fails(r4).as("fail_punct"))
-        .orderBy("source")
-    }),
-    // ── scale: split-leakage audit — near-dup pairs CROSSING a train/
-    //    val/test hash split (a near-copy of a training doc sitting in
-    //    test silently inflates eval; the q242 grouped split prevents it
-    //    by construction, this MEASURES it for any split): leak matrix
-    //    (fold_lo, fold_hi, n_pairs), off-diagonal = contamination
-    //    (oracle: DuckDB brute-forces the pairs + replays the fold CASE) ───
-    "q285_split_leakage" -> ((s, dir) => {
-      val corpus = lshInputQ25(s, dir)
-      val folds = Sampling.groupedSplitAssign(corpus.select("doc_id"),
-        "doc_id", Seq(0.8, 0.1, 0.1))
-      val pairs = Dedup.minhashNearDupPairs(corpus, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      pairs
-        .join(folds.select(col("doc_id").as("id_a"), col("fold").as("__fa")),
-          "id_a")
-        .join(folds.select(col("doc_id").as("id_b"), col("fold").as("__fb")),
-          "id_b")
-        .groupBy(least(col("__fa"), col("__fb")).as("fold_lo"),
-          greatest(col("__fa"), col("__fb")).as("fold_hi"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("fold_lo", "fold_hi")
-    }),
-    // ── scale: corrupt-media decode audit — the error path of the real
-    //    codec plumbing, end-to-end: deliberately truncated (valid magic,
-    //    dead header) and magic-wiped payloads must degrade to
-    //    "not decodable" / octet-stream, never fail the task; report =
-    //    (sniffed mime, decodable, n). The oracle derives the expected
-    //    classes from the corruption arithmetic — Spark matches only if
-    //    the JDK codec actually survives and classifies the damage ────────
-    "q283_media_audit" -> ((s, dir) => {
-      val media = Multimodal.synthesizeImages(
-        T(s, dir, "part").filter(col("p_partkey") <= 600), "p_partkey")
-      val k = col("media_id")
-      val corrupted = media.withColumn("payload",
-        when(pmod(k, lit(13)) === 0, expr("substring(payload, 1, 10)"))
-          .when(pmod(k, lit(17)) === 0, concat(lit(Array.fill[Byte](8)(0)),
-            expr("substring(payload, 9, 1000000)")))
-          .otherwise(col("payload")))
-      Multimodal.decodeMeta(corrupted, codec = Multimodal.ImageCodec)
-        .groupBy(col("decoded_meta.mime").as("mime"),
-          col("decoded_meta.width").isNotNull.as("decodable"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("mime", "decodable")
-    }),
-    // ── scale: deterministic token-dropout augmentation — drop token i of
-    //    doc d iff md5(id:pos:seed) ≡ 0 (mod 10): augmentation as a pure
-    //    function of (id, position, seed) — reproducible per epoch,
-    //    shardable anywhere; the per-source report carries an exact
-    //    md5-checksum of every augmented text, so the oracle verifies the
-    //    RECONSTRUCTED strings, not just counts ────────────────────────────
-    "q284_token_dropout" -> ((s, dir) => {
-      val aug = TextAnalysis.tokenDropout(
-        T(s, dir, "documents").select("doc_id", "source", "text"),
-        "doc_id", "text", dropOneIn = 10, seed = 7L)
-      aug.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("tokens_before"),
-          sum(col("n_kept")).as("tokens_after"),
-          sum(pmod(Dedup.md5Hash60(col("aug_text")), lit(1000000000000L)))
-            .cast("long").as("checksum"))
-        .withColumn("drop_frac",
-          round((col("tokens_before") - col("tokens_after")).cast("double") /
-            col("tokens_before").cast("double"), 6))
-        .orderBy("source")
-    }),
-    // ── scale: trigram substring search — raw `contains` over the corpus
-    //    through a character-trigram pre-filter (grep-over-100-TB; the
-    //    q243 phrase join can't see substrings crossing token boundaries
-    //    or punctuation): candidates must hold EVERY needle trigram, then
-    //    exact contains verifies — pruning is result-invisible, which is
-    //    exactly what the oracle checks (brute-force contains) ─────────────
-    "q282_substring_search" -> ((s, dir) => {
-      TextAnalysis.substringSearch(
-          T(s, dir, "documents").select("doc_id", "text"), "doc_id", "text",
-          Seq("merge batch", "scan slow", "tab", "zzqx"))
-        .orderBy("needle", "doc_id")
-    }),
-    // ── scale: SCD2 MERGE — apply a fresh batch to the dimension table
-    //    q145's scd2Intervals derives (the incremental half of the SCD2
-    //    story: close changed versions, open new ones, no-op repeats,
-    //    ignore late-vs-open observations under the monotone-load
-    //    contract); key-width joins against current rows only, closed
-    //    history rides through untouched (oracle: DuckDB replays intervals
-    //    on the first 20 days + the merge CASEs for the rest) ──────────────
-    "q281_scd2_apply" -> ((s, dir) => {
-      val ev = T(s, dir, "events").select(col("user_id"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        col("event_type"))
-      val cut = lit("2024-01-21 00:00:00").cast("timestamp")
-      val dim = Snapshot.scd2Intervals(ev.filter(col("ts") < cut),
-        "user_id", "ts", "event_id", "event_type")
-      Snapshot.scd2Apply(dim, ev.filter(col("ts") >= cut),
-          "user_id", "event_type", "ts", "event_id")
-        .select(col("user_id"), col("event_type"),
-          col("valid_from").cast("string").as("valid_from"),
-          col("valid_to").cast("string").as("valid_to"), col("is_current"))
-        .orderBy("user_id", "valid_from", "event_type")
-    }),
-    // ── scale: Bloom-pruned fact⋈dim join — a 1%-fpp filter built from
-    //    the filtered dim's keys kills non-matching fact rows BEFORE the
-    //    exchange (at 100 TB the shuffle is the cost, and the filter is
-    //    ~1.2 MB per million build keys); result-identical to the plain
-    //    join for inner/semi semantics — which is exactly what the oracle
-    //    checks (the bloom is invisible in the result) ─────────────────────
-    "q280_bloom_join" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey").as("okey"),
-        col("l_extendedprice"), col("l_discount"))
-      val ords = T(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_totalprice") > 150000.0)
-        .select(col("o_orderkey").as("okey"))
-      val cents = round((col("l_extendedprice") *
-        (lit(1.0) - col("l_discount"))) * lit(100.0)).cast("long")
-      Ops.bloomPrunedJoin(li, ords, Seq("okey"))
-        .groupBy("okey")
-        .agg(sum(cents).as("rev_cents"), count(lit(1)).as("n_lines"))
-        .orderBy("okey")
-    }),
-    // ── scale: persistent ER index — system A seeds the golden-record
-    //    store, system B ingests against it: blocking-key postings probe
-    //    (I/O ∝ batch), Fellegi–Sunter scoring vs candidates only,
-    //    attach-to-best-cluster at ≥ 10 bits or found a new one; the
-    //    SEVENTH incremental cell (entity/golden-record modality)
-    //    (oracle: DuckDB replays B-vs-A blocking, scoring, and the
-    //    max-score/min-id argmax) ──────────────────────────────────────────
-    "q279_er_index" -> ((s, dir) => {
-      val ents = linkageEntities(s, dir)
-      val idx = new ErIndex(s, tmpWorkDir("gs_erix_"), linkageFields,
-        linkageBlockKeys(), scoreThresholdMicro = 10000000L, numBuckets = 16)
-      idx.ingest(ents.filter(col("id") % 2 === 0), "id")
-      idx.ingest(ents.filter(col("id") % 2 === 1), "id")
-        .select(col("inc_id"), col("cluster"), col("matched"))
-        .orderBy("inc_id")
-    }),
-    // ── scale: tokenizer fertility per source — train the BPE merge table
-    //    ON the corpus (q87's trainer), apply it with q60's counter, and
-    //    report BPE-tokens-per-word per source: the tokenizer-efficiency
-    //    number a vocab decision is judged by (high fertility = the
-    //    tokenizer fragments that source's words). Training cost is
-    //    vocabulary-sized after one corpus pass; application is a pure
-    //    projection (oracle: DuckDB replays TRAINING with the word carried
-    //    through re-segmentation — the final seg table IS application for
-    //    corpus words, no separate unroll) ─────────────────────────────────
-    "q278_bpe_fertility" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("source", "text")
-      val merges = TextAnalysis.trainBpeMerges(d, "text", numMerges = 8,
-        minPairCount = 1L)
-      d.select(col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("w"),
-          TextAnalysis.bpeTokenCount(col("text"), merges).cast("long").as("b"))
-        .groupBy("source")
-        .agg(sum(col("w")).as("n_words"), sum(col("b")).as("n_bpe_tokens"))
-        .withColumn("fertility", round(col("n_bpe_tokens").cast("double") /
-          col("n_words").cast("double"), 6))
-        .orderBy("source")
-    }),
-    // ── scale: sorted-neighborhood blocking — candidate pairs = records
-    //    within 10 positions of each other in global name order; the
-    //    classic complement to key blocking (bounds every record's
-    //    candidates; dirty sort keys are the honest recall trade). Global
-    //    rank via the distributed-cumsum idiom, rank-band self-join —
-    //    never all-pairs (oracle: DuckDB row_number + distance join) ───────
-    "q276_sorted_neighborhood" -> ((s, dir) => {
-      val ents = linkageEntities(s, dir)
-      val truth = ents.select(col("id").as("__tid"), col("ckey"))
-      Linkage.sortedNeighborhoodPairs(ents, "id", col("name"), window = 10)
-        .join(truth.select(col("__tid").as("id_a"), col("ckey").as("__ta")),
-          "id_a")
-        .join(truth.select(col("__tid").as("id_b"), col("ckey").as("__tb")),
-          "id_b")
-        .groupBy("dist").agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("__ta") === col("__tb"), 1L).otherwise(0L))
-            .as("n_true"))
-        .orderBy("dist")
-    }),
-    // ── scale: ER threshold operating curve — per score bucket
-    //    (descending), cumulative pairs/true-matches/precision of "accept
-    //    at or above": the table the q273 threshold was chosen from
-    //    (oracle: DuckDB replays scoring + suffix-sum windows) ─────────────
-    "q277_er_curve" -> ((s, dir) => {
-      val ents = linkageEntities(s, dir)
-      val pairs = Linkage.blockedPairs(ents, "id", linkageBlockKeys(), 4096)
-        .filter(pmod(col("id_a"), lit(2L)) =!= pmod(col("id_b"), lit(2L)))
-      Linkage.scoreCurve(
-        Linkage.matchScores(ents, "id", pairs, linkageFields,
-          carry = Seq("ckey")),
-        col("a_ckey") === col("b_ckey"), bucketMicro = 2000000L)
-    }),
-    // ── scale: windowed skip-gram collocations — q102's window-±3
-    //    generalization (word2vec-style co-occurrence statistics; adjacent
-    //    bigrams miss "neural … network" with an intervening token);
-    //    in-row pair generation from the token array (no positional
-    //    self-join), q102's log-free monotone lift with fixed
-    //    parenthesization (oracle: DuckDB positional self-join replay) ─────
-    "q275_skipgram_collocations" -> ((s, dir) => {
-      TextAnalysis.skipgramCollocations(
-          T(s, dir, "documents").select("text"), "text",
-          window = 3, minCount = 5L, topN = 100)
-        .select(col("term_a"), col("term_b"), col("pair_count"),
-          round(col("lift"), 6).as("lift"))
-    }),
-    // ── scale: time-respecting reachability — earliest-arrival contagion
-    //    over the customer↔supplier interaction graph (an edge is an order
-    //    line dated o_orderdate; a hop is traversable only at ts ≥ the
-    //    arrival time, which static reachability ignores). Delta-frontier
-    //    rounds, node-sized state, integer epoch days (oracle: DuckDB
-    //    replays 3 unrolled full-state rounds — provably round-identical
-    //    to the delta form) ────────────────────────────────────────────────
-    "q274_temporal_reach" -> ((s, dir) => {
-      val e0 = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .join(T(s, dir, "orders").select("o_orderkey", "o_custkey",
-          "o_orderdate"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).as("d"))
-        .distinct()
-      val edges = e0.select(col("c").as("src"), col("s").as("dst"), col("d"))
-        .unionAll(e0.select(col("s").as("src"), col("c").as("dst"), col("d")))
-      val seeds = T(s, dir, "supplier").filter(col("s_suppkey") <= 2)
-        .select((col("s_suppkey") * 2 + 1).as("node"))
-      Graph.temporalReachability(edges, "src", "dst", "d", seeds, "node",
-          seedT = 0L, rounds = 3)
-        .select(col("node").cast("long").as("node"),
-          col("reach_t").as("reach_day"))
-        .orderBy("node")
-    }),
-    // ── scale: entity resolution end-to-end — accepted matches (score ≥
-    //    10 bits, the q269 histogram's clean separating band) → connected
-    //    components → one golden-record cluster id per entity (singletons
-    //    map to themselves): the full Fellegi–Sunter → CC pipeline a
-    //    master-data system runs (oracle: DuckDB replays scoring + a
-    //    recursive-CTE min-id component closure) ──────────────────────────
-    "q273_er_resolution" -> ((s, dir) =>
-      erResolvedClusters(s, dir).orderBy("id")),
-    // ── scale: ER pairwise quality — precision/recall/F1 of the q273
-    //    resolution against ground truth, computed ENTIRELY from
-    //    contingency counts (Σ C(m,2) over clusters, truth groups, and
-    //    cluster×truth cells — no pair enumeration at any corpus size);
-    //    the standard pair-counting clustering evaluation (oracle: DuckDB
-    //    replays the resolution + the three C(·,2) sums) ───────────────────
-    "q290_er_pair_metrics" -> ((s, dir) => {
-      val withTruth = erResolvedClusters(s, dir)
-        .join(linkageEntities(s, dir).select(col("id"), col("ckey")), "id")
-      val pred = withTruth.groupBy("cluster_id")
-        .agg(count(lit(1)).as("m"))
-        .agg(sum(col("m") * (col("m") - 1) / 2).cast("long").as("pred_pairs"))
-      val truth = withTruth.groupBy("ckey")
-        .agg(count(lit(1)).as("m"))
-        .agg(sum(col("m") * (col("m") - 1) / 2).cast("long").as("true_pairs"))
-      val tp = withTruth.groupBy("cluster_id", "ckey")
-        .agg(count(lit(1)).as("m"))
-        .agg(sum(col("m") * (col("m") - 1) / 2).cast("long").as("tp_pairs"))
-      pred.crossJoin(truth).crossJoin(tp)
-        .select(col("pred_pairs"), col("true_pairs"), col("tp_pairs"),
-          round(col("tp_pairs").cast("double") /
-            col("pred_pairs").cast("double"), 6).as("precision"),
-          round(col("tp_pairs").cast("double") /
-            col("true_pairs").cast("double"), 6).as("recall"),
-          round(lit(2.0) * col("tp_pairs").cast("double") /
-            (col("pred_pairs") + col("true_pairs")).cast("double"), 6)
-            .as("f1"))
-    }),
-    // ── scale: detector-ensemble agreement — the four near-dup detectors
-    //    (exact / minhash-Jaccard / simhash-Hamming / containment) over
-    //    ONE shared corpus (base ∪ near-copies ∪ 25-token quotes), as a
-    //    pair-set agreement matrix: diagonal = per-detector pair counts,
-    //    off-diagonal = set intersections. The "which detector catches
-    //    what" report behind choosing a dedup stack — exact⊂all, quotes
-    //    visible ONLY to containment, the extra-token copies to
-    //    jaccard/hamming but not exact (oracle: DuckDB brute-forces all
-    //    four detectors and replays the matrix) ───────────────────────────
-    "q272_detector_agreement" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val near = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(col("text"), lit(" extra token")).as("text"))
-      val quotes = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat_ws(" ", slice(Dedup.tokensCol(col("text")), 1, 25)).as("text"))
-      val u = d.unionByName(near).unionByName(quotes).localCheckpoint(true)
-      def norm(p: DataFrame): DataFrame =
-        p.select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"))
-      // the four detector families are INDEPENDENT and each materializes
-      // eager internal checkpoints: build them from a driver thread pool
-      // (guide §2.6 — concurrent jobs schedule FIFO, so one detector's
-      // straggler tail is back-filled by the next; u is checkpointed
-      // above, so no shared lazy upstream recomputes). Deterministic:
-      // each detector is a pure function of u, union order is fixed.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      import scala.concurrent.Future
-      val fExact = Future(Linkage.blockedPairs(u, "doc_id",
-        Seq(md5(col("text"))), maxBlockSize = 1000000))
-      val fJac = Future(norm(Dedup.minhashNearDupPairs(u, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)))
-      val fHam = Future(norm(Dedup.simhashNearDupPairs(u, "doc_id", "text",
-        maxDist = 3, tokenHash = Dedup.Md5TokenHash)))
-      val fCont = Future(norm(Dedup.containmentPairs(u, "doc_id", "text",
-        shingleSize = 3, threshold = 0.9)))
-      val Seq(exact, jac, ham, cont) = try {
-        scala.concurrent.Await.result(
-          Future.sequence(Seq(fExact, fJac, fHam, fCont)),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-      val tagged = exact
-        .select(lit("exact").as("det"), col("id_a"), col("id_b"))
-        .unionAll(jac.select(lit("jaccard").as("det"), col("id_a"), col("id_b")))
-        .unionAll(ham.select(lit("hamming").as("det"), col("id_a"), col("id_b")))
-        .unionAll(cont.select(lit("containment").as("det"), col("id_a"),
-          col("id_b")))
-        .localCheckpoint(true)
-      tagged.withColumnRenamed("det", "det_a")
-        .join(tagged.withColumnRenamed("det", "det_b"), Seq("id_a", "id_b"))
-        .filter(col("det_a") <= col("det_b"))
-        .groupBy("det_a", "det_b").agg(count(lit(1)).as("n_pairs"))
-        .orderBy("det_a", "det_b")
-    }),
-    // ── scale: persistent winnowing span index — "does this doc QUOTE
-    //    anything ever crawled?" against a fingerprint-bucketed postings
-    //    store (probe I/O ∝ batch, history never rescanned); the sixth
-    //    cell of the incremental-similarity matrix (exact/token/char/
-    //    vector/signature/SPAN). History = odd doc_ids, probe = even;
-    //    md5-60 fingerprints so the oracle replays the whole winnow
-    //    (oracle: DuckDB replays the q43 machinery + postings join) ───────
-    "q271_span_index" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val idx = new SpanIndex(s, tmpWorkDir("gs_spanix_"), k = 5, window = 4,
-        minShared = 3, numBuckets = 16, maxPostings = 500,
-        hashKind = "md5_60")
-      idx.add(d.filter(col("doc_id") % 2 === 1), "doc_id", "text")
-      idx.probe(d.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-        .orderBy("inc_id", "hist_id")
-    }),
-    // ── scale: dedup threshold-calibration curve — verified-Jaccard
-    //    histogram + pairs-surviving-at-≥t over the candidate pairs (the
-    //    landscape q53's single-threshold margin probe sits inside);
-    //    probe at the q25-proven banding config so candidate recall is
-    //    complete on this corpus (oracle: DuckDB brute-forces the pairs
-    //    and replays buckets + suffix sums) ─────────────────────────────────
-    "q163_threshold_curve" -> ((s, dir) => {
-      Dedup.thresholdCurve(lshInputQ25(s, dir), "doc_id", "text",
-          probeThreshold = 0.55, bins = 20, shingleSize = 3,
-          bands = 16, rowsPerBand = 2)
-        .select(col("bucket"), round(col("t_lo"), 6).as("t_lo"),
-          col("n_pairs"), col("n_at_or_above"))
-        .orderBy("bucket")
-    }),
-    // ── scale: per-group min-max scaling — the linear feature-scaling
-    //    companion to q161's rank-based normalization (oracle: DuckDB
-    //    replays stats and the fixed-paren projection) ─────────────────────
-    "q162_minmax_scale" -> ((s, dir) => {
-      Analytics.minMaxScalePerGroup(
-          T(s, dir, "orders").select("o_orderpriority", "o_orderkey",
-            "o_totalprice"),
-          "o_orderpriority", "o_orderkey", "o_totalprice")
-        .select(col("o_orderpriority"), col("o_orderkey"),
-          round(col("scaled"), 6).as("scaled"))
-        .orderBy("o_orderkey")
-    }),
-    // ── scale: cross-source quantile normalization — each row mapped to
-    //    the POOLED value at its within-source percentile (batch-effect
-    //    correction, exact order statistics) (oracle: DuckDB replays both
-    //    rank machines and the target-rank arithmetic) ─────────────────────
-    "q161_quantile_normalize" -> ((s, dir) => {
-      Analytics.quantileNormalize(
-          T(s, dir, "orders").select("o_orderpriority", "o_orderkey",
-            "o_totalprice"),
-          "o_orderpriority", "o_orderkey", "o_totalprice")
-        .select(col("o_orderpriority"), col("o_orderkey"),
-          round(col("normalized"), 6).as("normalized"))
-        .orderBy("o_orderkey")
-    }),
-    // ── scale: dedup provenance — the (loser → winner) redirect map
-    //    behind keep-best ("why is my document gone, and who won?")
-    //    (oracle: the q70 component + quality-argmax replay emitting the
-    //    loser rows) ────────────────────────────────────────────────────────
-    "q160_dedup_provenance" -> ((s, dir) => {
-      val u = lshInputQ46(s, dir)
-        .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-      val pairs = Dedup.minhashNearDupPairs(u, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      Dedup.dedupProvenance(u, "doc_id", pairs, "quality")
-        .select(col("loser"), col("winner"),
-          round(col("loser_score"), 6).as("loser_score"),
-          round(col("winner_score"), 6).as("winner_score"))
-        .orderBy("loser")
-    }),
-    // ── scale: Zipf-slope fit — least-squares ln(freq) vs ln(rank) over
-    //    the vocabulary head, the one-number corpus-health metric (oracle:
-    //    DuckDB replays ranks, logs, and the rank-sorted regression sums) ──
-    "q159_zipf_slope" -> ((s, dir) => {
-      TextAnalysis.zipfSlope(T(s, dir, "documents").select("text"), "text",
-          fitTerms = 1000, deterministic = true)
-        .select(col("n_terms"), round(col("slope"), 6).as("slope"),
-          round(col("intercept"), 6).as("intercept"))
-    }),
-    // ── scale: embedding-isolation outliers — lowest k-th-neighbor
-    //    cosine (noise/contamination candidates; SemDeDup's sparse-side
-    //    complement) (oracle: DuckDB replays the exact kNN ranking and
-    //    the min-of-top-k) ─────────────────────────────────────────────────
-    "q158_embedding_outliers" -> ((s, dir) => {
-      Similarity.embeddingOutliers(T(s, dir, "embeddings"), "vec_id",
-          "embedding", k = 5, topK = 20, numCentroids = 1)
-        .select(col("rank"), col("id"),
-          round(col("kth_cosine"), 6).as("kth_cosine"))
-        .orderBy("rank")
-    }),
-    // ── scale: dup-cluster size report — (size, n_clusters) incl. the
-    //    singleton clean fraction, the report a dedup run is judged by
-    //    (oracle: the q46 recursive-CTE components + size histogram) ───────
-    "q157_dup_cluster_sizes" -> ((s, dir) => {
-      val u = lshInputQ46(s, dir)
-      val pairs = Dedup.minhashNearDupPairs(u, "doc_id", "text",
-        shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      Dedup.dupClusterSizeReport(u, "doc_id", pairs)
-    }),
-    // ── scale: linear multi-touch attribution — each purchase splits one
-    //    credit unit across the trailing-window touches (Σ credit =
-    //    conversions exactly; zero-touch → "(direct)") (oracle: DuckDB
-    //    replays the window join, counts, and the sorted credit fold) ──────
-    "q156_attribution" -> ((s, dir) => {
-      Analytics.linearAttribution(T(s, dir, "events"), "user_id", "ts",
-          "event_id", "event_type", conversionType = "purchase",
-          windowSeconds = 600L, deterministic = true)
-        .select(col("channel"), col("touched_conversions"),
-          round(col("credit"), 6).as("credit"))
-        .orderBy("channel")
-    }),
-    // ── scale: 2-hop harmonic centrality — deg + ½·|N₂| via distinct
-    //    wedge endpoints minus neighbors (the crawl-prior in its cheapest
-    //    faithful form) (oracle: DuckDB replays wedges, anti-joins, and
-    //    the ranking) ──────────────────────────────────────────────────────
-    "q154_harmonic2" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.harmonicCentrality2(edges, "item_a", "item_b", topK = 20)
-        .select(col("rank"), col("node"), col("degree"), col("n2"),
-          round(col("harmonic"), 6).as("harmonic"))
-        .orderBy("rank")
-    }),
-    // ── scale: local clustering coefficients — 2·tri/(d·(d−1)) per node
-    //    on the shared degree-ordered triangle machinery (hubs vs tight
-    //    communities) (oracle: DuckDB replays triangles, degrees, cc) ──────
-    "q155_clustering_coeff" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.clusteringCoefficients(edges, "item_a", "item_b", topK = 20)
-        .select(col("rank"), col("node"), col("degree"), col("triangles"),
-          round(col("cc"), 6).as("cc"))
-        .orderBy("rank")
-    }),
-    // ── scale: PSI drift score — reference-decile binned
-    //    (p_ref−p_cur)·ln(p_ref/p_cur), the model-monitoring standard;
-    //    edges from distributed reference ranks as plan literals (oracle:
-    //    DuckDB replays edges, bins, smoothing, and the fold) ──────────────
-    "q153_psi" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val cutoff = lit("1995-06-01").cast("timestamp")
-      Profiling.psi(
-          o.filter(col("o_orderdate") < cutoff),
-          o.filter(col("o_orderdate") >= cutoff),
-          "o_totalprice", bins = 10)
-        .select(col("bin"), col("ref_cnt"), col("cur_cnt"),
-          round(col("p_ref"), 6).as("p_ref"),
-          round(col("p_cur"), 6).as("p_cur"),
-          round(col("psi"), 6).as("psi"))
-        .orderBy("bin")
-    }),
-    // ── scale: Kaplan–Meier survival — time-to-first-error curve in
-    //    hours (product-limit estimator with censoring support) (oracle:
-    //    DuckDB replays at-risk suffix sums and the ascending product) ─────
-    "q152_kaplan_meier" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val subj = ev.groupBy("user_id").agg(
-        min(unix_micros(col("ts"))).as("__first"),
-        min(when(col("event_type") === "error", unix_micros(col("ts"))))
-          .as("__ferr"))
-      val g = ev.agg(max(unix_micros(col("ts"))).as("__gmx"))
-      val d = subj.crossJoin(broadcast(g))
-        .select(
-          expr("coalesce(__ferr - __first, __gmx - __first) div 3600000000")
-            .as("t_hours"),
-          col("__ferr").isNotNull.as("ev"))
-      Analytics.kaplanMeier(d, "t_hours", "ev")
-        .select(col("t"), col("n_risk"), col("events"),
-          round(col("survival"), 6).as("survival"))
-        .orderBy("t")
-    }),
-    // ── scale: categorical mutual information — MI/NMI + marginal
-    //    entropies over the contingency cells ("is this column that one
-    //    in disguise?") (oracle: DuckDB replays cells, marginals, and the
-    //    key-sorted folds) ─────────────────────────────────────────────────
-    "q151_mutual_information" -> ((s, dir) => {
-      Profiling.mutualInformation(T(s, dir, "lineitem"),
-          "l_returnflag", "l_linestatus", deterministic = true)
-        .select(col("n"), round(col("mi"), 6).as("mi"),
-          round(col("h_x"), 6).as("h_x"), round(col("h_y"), 6).as("h_y"),
-          round(col("nmi"), 6).as("nmi"))
-    }),
-    // ── scale: join-cardinality forecast — exact Σ cA·cB over common
-    //    keys BEFORE the join runs (self-join blowup detector; hot key →
-    //    saltedJoin input) (oracle: DuckDB replays counts and products) ────
-    "q148_join_cardinality" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      Profiling.joinCardinality(li, "l_partkey", li, "l_partkey")
-    }),
-    // ── scale: weighted draws WITH replacement — multinomial corpus
-    //    mixing as a pure function of (seed, draw): inverse-CDF crossing
-    //    rows on the id-ordered cumulative weight (oracle: DuckDB replays
-    //    hashes, cumsums, and crossings) ───────────────────────────────────
-    "q149_weighted_draws" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("w"))
-      Sampling.weightedDraws(d, "doc_id", "w", k = 20, seed = 7L)
-        .select(col("draw"), col("id"), col("w"), round(col("u"), 6).as("u"))
-        .orderBy("draw")
-    }),
-    // ── scale: time-weighted average per key — duration-weighted mean for
-    //    irregularly-sampled state; exact micros durations, ts-sorted fold
-    //    on the gate path (oracle: DuckDB replays gaps and the fold) ───────
-    "q150_twap" -> ((s, dir) => {
-      Analytics.timeWeightedAverage(T(s, dir, "events"), "user_id", "ts",
-          "event_id", "value", deterministic = true)
-        .select(col("user_id"), col("n_intervals"), col("total_micros"),
-          round(col("twap"), 6).as("twap"))
-        .orderBy("user_id")
-    }),
-    // ── scale: per-source lexical diversity — token/type counts, TTR,
-    //    Shannon entropy (word-sorted fold; q106's single-source twin)
-    //    (oracle: DuckDB replays counts, entropy terms, and the fold) ──────
-    "q146_lexical_diversity" -> ((s, dir) => {
-      TextAnalysis.lexicalDiversity(
-          T(s, dir, "documents").select("source", "text"), "source", "text",
-          deterministic = true)
-        .select(col("group"), col("n_tokens"), col("n_types"),
-          round(col("ttr"), 6).as("ttr"),
-          round(col("entropy"), 6).as("entropy"),
-          round(col("norm_entropy"), 6).as("norm_entropy"))
-        .orderBy("group")
-    }),
-    // ── scale: exact trimmed mean per group — robust central tendency on
-    //    exact cents (kept-sum is an order-free long); ranks ride the
-    //    pruned per-(range, group) machinery (oracle: DuckDB replays
-    //    ranks, cuts, and the one division) ────────────────────────────────
-    "q147_trimmed_mean" -> ((s, dir) => {
-      Analytics.trimmedMeanPerGroup(T(s, dir, "orders"),
-          "o_orderpriority", "o_orderkey",
-          round(col("o_totalprice") * 100), frac = 0.1)
-        .select(col("group"), col("n_total"), col("n_kept"),
-          round(col("mean"), 6).as("mean"))
-        .orderBy("group")
-    }),
-    // ── scale: SCD2 interval builder — gaps-and-islands collapse of the
-    //    per-user event stream into validity intervals, the dimension-
-    //    history shape asofJoin consumes (oracle: DuckDB replays lag
-    //    flags, run numbering, and lead closure) ───────────────────────────
-    "q145_scd2" -> ((s, dir) => {
-      Snapshot.scd2Intervals(T(s, dir, "events"), "user_id", "ts",
-          "event_id", "event_type")
-        .select(col("user_id"), col("event_type"),
-          col("valid_from").cast("string").as("valid_from"),
-          col("valid_to").cast("string").as("valid_to"), col("is_current"))
-        .orderBy("user_id", "valid_from", "event_type")
-    }),
-    // ── scale: k-core peeling — fixed-round dense-kernel extraction
-    //    (per-round semi-join vs the broadcast alive set; the fixed-round
-    //    replay contract) (oracle: DuckDB unrolls the rounds) ──────────────
-    "q143_kcore" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.kCore(edges, "item_a", "item_b", k = 120, rounds = 6)
-    }),
-    // ── scale: neighborhood-overlap link prediction — Jaccard of
-    //    neighbor sets for NOT-yet-connected pairs via the wedge join;
-    //    exact-long ratio (oracle: DuckDB replays wedges, anti-join,
-    //    degrees, and the top-k cut) ───────────────────────────────────────
-    "q144_link_prediction" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.linkPrediction(edges, "item_a", "item_b", topK = 20)
-        .select(col("a").as("item_a"), col("b").as("item_b"), col("common"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("item_a", "item_b")
-    }),
-    // ── scale: exact triangle counting — compact-forward x<y<z
-    //    enumeration over the co-purchase projection (clustering signal:
-    //    organic neighborhoods triangulate, link farms star) (oracle:
-    //    DuckDB replays the triple join, corners, and Σ/3 total) ──────────
-    "q142_triangles" -> ((s, dir) => {
-      val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey")
-      Graph.triangleCounts(edges, "item_a", "item_b", topK = 10)
-    }),
-    // ── scale: two-proportion z-test — A/B experiment readout over
-    //    per-user conversion; sufficient statistics are exact longs in one
-    //    single-row aggregate (oracle: DuckDB replays counts and the
-    //    fixed-paren z) ─────────────────────────────────────────────────────
-    "q141_ab_test" -> ((s, dir) => {
-      // conversion = a heavy purchaser (>= 14 purchase events; nearly every
-      // user has >= 1, which would make the test degenerate)
-      val users = T(s, dir, "events").groupBy("user_id")
-        .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("np"))
-      Analytics.proportionZTest(users,
-          col("user_id") % 2 === 0, col("np") >= 14L)
-        .select(col("n1"), col("x1"), col("n2"), col("x2"),
-          round(col("p1"), 6).as("p1"), round(col("p2"), 6).as("p2"),
-          round(col("z"), 6).as("z"))
-    }),
-    // ── scale: equal-frequency binning — every row's global-rank decile
-    //    via integer div (equal-POPULATION buckets where q137's equal-
-    //    width bins skew); per-bucket count + value edges (oracle: DuckDB
-    //    replays ranks, buckets, and edges) ────────────────────────────────
-    "q140_quantile_bins" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-        .select(concat(col("l_orderkey").cast("string"), lit(":"),
-          col("l_linenumber").cast("string")).as("rid"),
-          col("l_extendedprice"))
-      Sampling.quantileBins(li, "rid", "l_extendedprice", bins = 10)
-        .select(col("bucket"), col("cnt"), round(col("lo"), 6).as("lo"),
-          round(col("hi"), 6).as("hi"))
-        .orderBy("bucket")
-    }),
-    // ── scale: ranking evaluation — recall@k + NDCG@k of the exact
-    //    cosine ranking against label relevance (the measurement half of
-    //    the retrieval tier); gains/ideal sums are shared driver literals
-    //    (oracle: DuckDB replays the ranking and both metrics) ────────────
-    "q139_ranking_eval" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val ranked = Similarity.bruteForceTopK(e, queries, "vec_id",
-          "embedding", 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val rel = queries.select(col("vec_id").as("query_id"), col("label"))
-        .join(e.select(col("vec_id").as("doc_id"), col("label")), Seq("label"))
-        .filter(col("query_id") =!= col("doc_id"))
-        .select("query_id", "doc_id")
-      Ranking.evalRanking(ranked, rel, k = 10)
-        .select(col("query_id"), col("n_rel"), col("hits"),
-          round(col("recall"), 6).as("recall"),
-          round(col("ndcg"), 6).as("ndcg"))
-        .orderBy("query_id")
-    }),
-    // ── scale: MRR + MAP@k — the order-sensitive retrieval-eval pair on
-    //    the q139 ranked/relevant construction; AP folds rank-sorted
-    //    (oracle: DuckDB replays the ranking, hit indices, and the fold) ───
-    "q180_mrr_map" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val ranked = Similarity.bruteForceTopK(e, queries, "vec_id",
-          "embedding", 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val rel = queries.select(col("vec_id").as("query_id"), col("label"))
-        .join(e.select(col("vec_id").as("doc_id"), col("label")), Seq("label"))
-        .filter(col("query_id") =!= col("doc_id"))
-        .select("query_id", "doc_id")
-      Ranking.evalMrrMap(ranked, rel, k = 10)
-        .select(col("query_id"), col("n_rel"), col("hits"),
-          round(col("rr"), 6).as("rr"), round(col("ap"), 6).as("ap"))
-        .orderBy("query_id")
-    }),
-    // ── scale: Lorenz curve + Gini — token-mass concentration across
-    //    docs on the distributed-cumsum idiom; Σ rank·w is an exact long
-    //    (oracle: DuckDB replays ranks, cumsums, targets, and the
-    //    fixed-paren Gini) ─────────────────────────────────────────────────
-    "q138_lorenz_gini" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("w"))
-      Sampling.lorenzGini(d, "doc_id", "w", deciles = 10)
-        .select(col("decile"), col("target_rank"),
-          round(col("cum_share"), 6).as("cum_share"),
-          round(col("gini"), 6).as("gini"))
-        .orderBy("decile")
-    }),
-    // ── scale: equi-width histogram — bins over broadcast min/max, bin id
-    //    a pure fixed-paren projection, spine keeps empty bins (oracle:
-    //    DuckDB replays stats, bins, edges, and counts) ────────────────────
-    "q137_histogram" -> ((s, dir) => {
-      Profiling.histogram(T(s, dir, "lineitem"), "l_extendedprice", bins = 20)
-        .select(col("bin"), round(col("lo"), 6).as("lo"),
-          round(col("hi"), 6).as("hi"), col("cnt"))
-        .orderBy("bin")
-    }),
-    // ── scale: snapshot profile diff — full-outer join of two table
-    //    profiles classifying every column added/removed/changed/
-    //    unchanged: the silent-upstream-drift audit (oracle: DuckDB
-    //    replays both profiles and the null-safe classification) ──────────
-    "q136_profile_diff" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val cutoff = lit("1995-06-01").cast("timestamp")
-      Profiling.profileDiff(
-          o.filter(col("o_orderdate") < cutoff),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
-          o,
-          Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"),
-          exactDistinct = true)
-    }),
-    // ── scale: co-occurrence mining — support/lift of parts sharing an
-    //    order, pairs generated IN-ROW from each basket's sorted item
-    //    array (no self-join); top-k by exact pair count (oracle: DuckDB
-    //    replays via the relational self-join formulation) ────────────────
-    "q135_co_occurrence" -> ((s, dir) => {
-      Analytics.coOccurrencePairs(T(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", topK = 20)
-        .select(col("item_a"), col("item_b"), col("cnt"),
-          round(col("support"), 6).as("support"),
-          round(col("lift"), 6).as("lift"))
-        .orderBy(col("cnt").desc, col("item_a"), col("item_b"))
-    }),
-    // ── scale: Benford first-digit audit — leading-digit distribution vs
-    //    log₁₀(1+1/d) with χ² drift score; digit extraction is integer-
-    //    exact, expectations embed as shared literals (oracle: DuckDB
-    //    replays digits, fractions, and the digit-sorted χ² fold) ─────────
-    "q134_benford" -> ((s, dir) => {
-      Profiling.benfordCheck(T(s, dir, "orders"), "o_totalprice")
-        .select(col("digit"), col("cnt"),
-          round(col("obs_frac"), 6).as("obs_frac"),
-          round(col("exp_frac"), 6).as("exp_frac"),
-          round(col("chi2"), 6).as("chi2"))
-        .orderBy("digit")
-    }),
-    // ── scale: two-sample KS drift — exact sup|F̂₁−F̂₂| between column
-    //    slices via per-distinct-value counts + distributed cumsum;
-    //    argmax is TakeOrdered(1) (oracle: DuckDB replays counts,
-    //    cumulative fractions, and the tie-broken argmax) ─────────────────
-    "q132_ks_drift" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val cutoff = lit("1995-06-01").cast("timestamp")
-      Profiling.ksDrift(
-          o.filter(col("o_orderdate") < cutoff),
-          o.filter(col("o_orderdate") >= cutoff),
-          "o_totalprice")
-        .select(round(col("d_stat"), 6).as("d_stat"), col("at_value"),
-          col("n1"), col("n2"))
-    }),
-    // ── scale: exact Pearson correlation matrix — integer-unit inputs
-    //    make all five sufficient statistics EXACT long sums (no fold
-    //    order anywhere); one scan, one row, pivoted to pairs (oracle:
-    //    DuckDB replays the sums and the fixed-paren r) ───────────────────
-    "q133_corr_matrix" -> ((s, dir) => {
-      Profiling.integerCorrelationMatrix(T(s, dir, "lineitem"), Seq(
-          "quantity" -> col("l_quantity").cast("long"),
-          "discount_bp" -> round(col("l_discount") * 100).cast("long"),
-          "price" -> round(col("l_extendedprice")).cast("long"),
-          "tax_bp" -> round(col("l_tax") * 100).cast("long")))
-        .select(col("col_a"), col("col_b"), round(col("corr"), 6).as("corr"))
-        .orderBy("col_a", "col_b")
-    }),
-    // ── scale: MMR diverse top-k — relevant-but-not-redundant greedy
-    //    selection over the TakeOrdered candidate set (driver-small
-    //    greedy, the centroid contract); oracle: DuckDB replays candidate
-    //    pruning, pairwise cosines, and 10 unrolled greedy rounds ─────────
-    "q131_mmr_select" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val qv = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).map(_.toDouble).toSeq
-      val withRel = e.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          Similarity.cosine(col("embedding"), array(qv.map(lit): _*))
-            .as("rel"))
-      Ranking.mmrSelect(withRel, "vec_id", "embedding", "rel",
-          k = 10, lambda = 0.7, candidates = 50)
-        .select(col("rank"), col("id"), round(col("rel"), 6).as("rel"),
-          round(col("mmr"), 6).as("mmr"))
-        .orderBy("rank")
-    }),
-    // ── scale: per-source keyness — Dunning log-likelihood G² picks the
-    //    WORDS that make each source distinctive (divergence q106 says how
-    //    far; this says why); top-k rides the pruned per-group rank core
-    //    (oracle: DuckDB replays counts, expectations, ln terms, ranks) ───
-    "q130_source_keyness" -> ((s, dir) => {
-      Importance.sourceKeyness(T(s, dir, "documents").select("source", "text"),
-          "source", "text", topK = 5)
-        .select(col("source"), col("term"), round(col("g2"), 6).as("g2"),
-          col("rank"))
-        .orderBy("source", "rank")
-    }),
-    // ── scale: top principal component — power iteration over the
-    //    distributed covariance grid (chained generators, no self-join);
-    //    the d×d eigen-rounds are driver arithmetic in fixed index order
-    //    (oracle: DuckDB replays means, covariance, and 3 unrolled
-    //    matvec/normalize rounds bit-for-bit) ─────────────────────────────
-    "q129_top_pc" -> ((s, dir) => {
-      Training.topPrincipalComponent(T(s, dir, "embeddings"), "vec_id",
-          "embedding", rounds = 3, deterministic = true)
-        .select(col("dim"), round(col("pc1"), 6).as("pc1"),
-          round(col("eigenvalue"), 6).as("eigenvalue"))
-        .orderBy("dim")
-    }),
-    // ── scale: int8 embedding quantization — per-dim min-max codes (4×
-    //    ANN index memory cut) + reconstruction-MSE audit; stats are plan
-    //    literals, quantization is a pure projection (oracle: DuckDB
-    //    replays codes, dequantization, and the in-order error fold) ──────
-    "q128_embed_quantize" -> ((s, dir) => {
-      Similarity.quantizeInt8Report(T(s, dir, "embeddings"), "vec_id",
-          "embedding")
-        .orderBy("vec_id")
-    }),
-    // ── scale: Z-order (Morton) layout keys — interleaved-bit sort key
-    //    for multi-dimensional parquet min-max skipping (the OPTIMIZE
-    //    ZORDER idea); stats broadcast, key is a pure integer projection
-    //    (oracle: DuckDB replays buckets and the bit interleave) ──────────
-    "q127_zorder_key" -> ((s, dir) => {
-      Layout.zorderKey(T(s, dir, "lineitem")
-            .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-          Seq("l_partkey", "l_suppkey"), "zkey", bits = 16)
-        .select(col("l_orderkey"), col("l_linenumber"), col("zkey"),
-          shiftright(col("zkey"), 24).as("zbucket"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    // ── scale: per-column table profile — null/distinct/min/max/avg-len
-    //    in ONE scan + single-row aggregate; exact distinct is the oracle
-    //    path, production folds HLL++ into the same pass (oracle: DuckDB
-    //    runs the per-column aggregates) ──────────────────────────────────
-    "q124_profile" -> ((s, dir) => {
-      Profiling.profileTable(T(s, dir, "orders"),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "o_orderdate", "o_orderpriority"), exactDistinct = true)
-        .orderBy("column")
-    }),
-    // ── scale: data-contract constraint suite — pk uniqueness, fk
-    //    coverage (key-only anti-joins, dim side broadcast), fused
-    //    same-scan range checks (oracle: DuckDB replays each check) ───────
-    "q125_quality_checks" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem"); val o = T(s, dir, "orders")
-      val ev = T(s, dir, "events")
-      Profiling.checkConstraints(Seq(
-        Profiling.pkUniqueCheck("pk_orders_unique", o, Seq("o_orderkey")),
-        Profiling.pkUniqueCheck("pk_lineitem_unique", li,
-          Seq("l_orderkey", "l_linenumber")),
-        Profiling.fkCoveredCheck("fk_orders_custkey", o, "o_custkey",
-          T(s, dir, "customer"), "c_custkey"),
-        Profiling.fkCoveredCheck("fk_lineitem_orderkey", li, "l_orderkey",
-          o, "o_orderkey"),
-        Profiling.fkCoveredCheck("fk_lineitem_partkey", li, "l_partkey",
-          T(s, dir, "part"), "p_partkey")) ++
-        Profiling.predicateChecks(li, Seq(
-          "range_lineitem_quantity" ->
-            (col("l_quantity") >= 1.0 && col("l_quantity") <= 50.0),
-          "range_lineitem_discount" ->
-            (col("l_discount") >= 0.0 && col("l_discount") <= 0.1))) ++
-        Profiling.predicateChecks(ev, Seq(
-          // deliberately tight SLA bound — exercises a FAILING check
-          "range_events_value" ->
-            (col("value") >= 0.0 && col("value") <= 400.0))))
-    }),
-    // ── scale: shuffle-key skew diagnostic — top-k heaviest keys +
-    //    max/mean ratio, the input to the salt-or-broadcast decision
-    //    (oracle: DuckDB replays counts, ranks, and ratios) ───────────────
-    "q126_key_skew" -> ((s, dir) => {
-      Profiling.keySkewReport(T(s, dir, "lineitem"), "l_suppkey", k = 10)
-    }),
-    // ── scale: corpus-level MinHash similarity matrix — estimated shingle
-    //    Jaccard of every source pair from lane-wise min agreement, the
-    //    sketch twin of q106 (oracle: DuckDB replays every lane min) ──────
-    "q123_source_minhash" -> ((s, dir) => {
-      Dedup.sourceMinhashSimilarity(
-          T(s, dir, "documents").select("source", "text"),
-          "source", "text", shingleSize = 3, lanes = 64,
-          hashKind = "md5_60")
-        .orderBy("source_a", "source_b")
-    }),
-    // ── scale: deterministic train/eval/test split — fold membership is a
-    //    pure function of the key hash, disjoint and exhaustive (oracle:
-    //    DuckDB replays the bucket thresholds) ─────────────────────────────
-    "q122_hash_split" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select("doc_id")
-      Sampling.hashSplit(d, "doc_id", Seq(0.8, 0.1, 0.1)).zipWithIndex
-        .map { case (f, i) => f.withColumn("fold", lit(i)) }
-        .reduce(_ unionByName _)
-        .orderBy("doc_id")
-    }),
-    // ── scale: per-source weighted quantiles — each source's own
-    //    token-mass crossing rows (oracle: DuckDB replays the per-source
-    //    cumsum windows and crossing conditions) ──────────────────────────
-    "q121_group_weighted_quantiles" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("source"), col("doc_id"),
-        col("n_chars").cast("double").as("score"),
-        TextAnalysis.tokenCount(col("text")).as("w"))
-      Sampling.weightedQuantilesPerGroup(d, "source", "doc_id", "score", "w",
-          Seq(0.25, 0.5, 0.75))
-        .orderBy("source", "q")
-    }),
-    // ── scale: novelty scoring vs a reference corpus — fraction of each
-    //    doc's shingles unseen in the reference, decontaminate's scoring
-    //    twin (oracle: DuckDB replays shingles and the overlap ratio) ─────
-    "q120_novelty" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      Dedup.noveltyScore(d.select("doc_id", "text"), "doc_id", "text",
-          d.filter(col("source") === "src0").select("text"), "text", ngram = 3)
-        .orderBy("doc_id")
-    }),
-    // ── scale: exact weighted quantiles — "median document length BY
-    //    TOKEN MASS": the crossing row of the cumulative weight, range-
-    //    pruned (oracle: DuckDB replays the global cumsum and the
-    //    crossing condition) ─────────────────────────────────────────────
-    "q119_weighted_quantiles" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        col("n_chars").cast("double").as("score"),
-        TextAnalysis.tokenCount(col("text")).as("w"))
-      Sampling.weightedQuantiles(d, "doc_id", "score", "w",
-          Seq(0.1, 0.25, 0.5, 0.75, 0.9, 1.0))
-        .orderBy("q")
-    }),
-    // ── scale: pure-SQL pipeline through the registered native functions
-    //    (GraftExtensions) — the spark.sql entrypoint IS the product
-    //    surface too (oracle: DuckDB replays counts, shingles, and the
-    //    canonicalization) ────────────────────────────────────────────────
-    "q118_sql_pipeline" -> ((s, dir) => {
-      GraftExtensions.register(s)
-      T(s, dir, "documents").createOrReplaceTempView("docs_v")
-      s.sql("""
-        SELECT doc_id,
-          text_counts(text).tokens AS n_tokens,
-          size(word_shingles(split(trim(lower(text)), '\\s+'), 3, true))
-            AS n_shingles,
-          md5(canonical_text(text)) AS fingerprint
-        FROM docs_v ORDER BY doc_id""")
-    }),
-    // ── scale: TPC-H Q3 shape (shipping priority) — selective dim filter
-    //    pushed to the scan, star join, top-10 by exact cents revenue
-    //    (oracle: DuckDB runs the same SQL) ────────────────────────────────
-    "q116_tpch_q3" -> ((s, dir) => {
-      val cutoff = "1998-06-01"
-      T(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .join(T(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") < lit(cutoff))
-        .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") > lit(cutoff))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("revenue_cents"))
-        .orderBy(col("revenue_cents").desc, col("o_orderdate"), col("l_orderkey"))
-        .limit(10)
-        .select(col("l_orderkey"), col("revenue_cents"),
-          col("o_orderdate"), col("o_orderpriority"))
-    }),
-    // ── scale: TPC-H Q10 shape (returned-item revenue) — who cost us the
-    //    most in returns last quarter: 4-way join, broadcast nation dim,
-    //    exact cents, top-20 via TakeOrderedAndProject (oracle: DuckDB
-    //    runs the same SQL) ─────────────────────────────────────────────────
-    "q199_tpch_q10" -> ((s, dir) => {
-      T(s, dir, "customer")
-        .join(T(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") >= lit("1998-01-01") &&
-          col("o_orderdate") < lit("1998-04-01"))
-        .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_returnflag") === "R")
-        .join(broadcast(T(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("n_name"))
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("revenue_cents"))
-        .orderBy(col("revenue_cents").desc, col("c_custkey"))
-        .limit(20)
-        .select("c_custkey", "c_name", "revenue_cents", "c_acctbal", "n_name")
-    }),
-    // ── scale: TPC-H Q18 shape (large-volume customers) — orders whose
-    //    line quantities exceed a threshold, with their customers; the
-    //    HAVING subquery becomes an aggregate + semi-shaped join (oracle:
-    //    DuckDB runs the same SQL) ──────────────────────────────────────────
-    "q200_tpch_q18" -> ((s, dir) => {
-      val big = T(s, dir, "lineitem").groupBy("l_orderkey")
-        .agg(sum("l_quantity").cast("long").as("total_qty"))
-        .filter(col("total_qty") > 300L)
-      T(s, dir, "orders")
-        .join(Ops.broadcastIfSmall(big), col("o_orderkey") === col("l_orderkey"))
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          col("o_orderdate"),
-          round(col("o_totalprice") * lit(100.0)).cast("long")
-            .as("totalprice_cents"),
-          col("total_qty"))
-        .orderBy(col("totalprice_cents").desc, col("o_orderkey"))
-        .limit(100)
-    }),
-    // ── scale: TPC-H Q6 (forecast-revenue filter) — the pure scan-side
-    //    query: every predicate pushes to the parquet reader, one
-    //    map-side-combined cents sum (oracle: DuckDB same SQL) ─────────────
-    "q216_tpch_q6" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1998-01-01") &&
-          col("l_shipdate") < lit("1999-01-01") &&
-          col("l_discount").between(0.05, 0.07) &&
-          col("l_quantity") < 24.0)
-        .agg(sum(round((col("l_extendedprice") * col("l_discount"))
-          * lit(100.0)).cast("long")).as("revenue_cents"))
-    }),
-    // ── scale: TPC-H Q14 (promo revenue share) — join to the part dim,
-    //    conditional cents sums, exact-cents numerator/denominator
-    //    (oracle: DuckDB same SQL) ──────────────────────────────────────────
-    "q217_tpch_q14" -> ((s, dir) => {
-      val rev = round((col("l_extendedprice") *
-        (lit(1.0) - col("l_discount"))) * lit(100.0)).cast("long")
-      T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1998-03-01") &&
-          col("l_shipdate") < lit("1998-04-01"))
-        .join(T(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .agg(sum(when(col("p_type") === "PROMO", rev).otherwise(0L))
-          .as("promo_cents"), sum(rev).as("total_cents"))
-        .select(col("promo_cents"), col("total_cents"),
-          round(col("promo_cents").cast("double") /
-            col("total_cents").cast("double"), 6).as("promo_share"))
-    }),
-    // ── scale: TPC-H Q5 shape (local supplier volume) — six-way star join
-    //    where customer and supplier share a nation, revenue per nation in
-    //    exact cents (oracle: DuckDB runs the same SQL) ───────────────────
-    "q117_tpch_q5" -> ((s, dir) => {
-      T(s, dir, "customer")
-        .join(T(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") >= lit("1998-01-01") &&
-          col("o_orderdate") < lit("2000-01-01"))
-        .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(T(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(T(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(T(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(sum(round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          * lit(100.0)).cast("long")).as("revenue_cents"))
-        .orderBy(col("revenue_cents").desc, col("n_name"))
-    }),
-    // ── scale: ROLLUP revenue report — hierarchical grouping sets over a
-    //    broadcast-dim star join; revenue in exact integer cents so the
-    //    subtotal doubles are engine-independent (oracle: DuckDB GROUP BY
-    //    ROLLUP over the same fixed-order cents arithmetic) ───────────────
-    "q107_rollup" -> ((s, dir) => {
-      val rev = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(T(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), year(col("o_orderdate")).as("o_year"),
-          round((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            * lit(100.0)).cast("long").as("cents"))
-      rev.rollup(col("n_name"), col("o_year"))
-        .agg(sum("cents").as("revenue_cents"), count(lit(1)).as("n_items"))
-        .orderBy(col("n_name").asc_nulls_first, col("o_year").asc_nulls_first)
-    }),
-    // ── scale: pairwise source divergence — smoothed Jensen–Shannon over
-    //    unigram distributions, the "how different are my corpora" report
-    //    (oracle: DuckDB replays counts, grid, smoothing, and the
-    //    word-sorted fold bit-for-bit) ────────────────────────────────────
-    "q106_source_divergence" -> ((s, dir) => {
-      Importance.sourceDivergence(
-          T(s, dir, "documents").select("source", "text"),
-          "source", "text", alpha = 0.5, deterministic = true)
-        .select(col("source_a"), col("source_b"),
-          round(col("js"), 6).as("js"))
-        .orderBy("source_a", "source_b")
-    }),
-    // ── scale: label-propagation communities over the customer–supplier
-    //    graph — deterministic LPA (most frequent neighbor label, ties
-    //    smallest; integer/string-exact, oracle replays unrolled rounds) ──
-    "q105_label_prop" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      Graph.labelPropagation(Graph.bidirect(el, "a", "b"), "src", "dst",
-          rounds = 4)
-        .orderBy("node")
-    }),
-    // ── scale: exact order-statistic quantiles per group — distributed
-    //    rank machinery, no percentile_approx (oracle: DuckDB row_number
-    //    windows pick the same values) ────────────────────────────────────
-    "q103_group_quantiles" -> ((s, dir) => {
-      Analytics.discreteQuantilesPerGroup(
-          T(s, dir, "events").select(col("event_type"), col("event_id"),
-            col("value")),
-          "event_type", "event_id", "value",
-          Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99))
-        .orderBy("event_type", "q")
-    }),
-    // ── scale: robust per-group outliers — modified z-score over discrete
-    //    median/MAD (oracle: DuckDB replays both order statistics and the
-    //    fixed-order z arithmetic) ────────────────────────────────────────
-    "q104_robust_outliers" -> ((s, dir) => {
-      Analytics.robustOutliers(
-          T(s, dir, "events").select(col("event_type"), col("event_id"),
-            col("value")),
-          "event_type", "event_id", "value", cutoff = 3.5)
-        .select(col("event_type"), col("event_id"), col("value"),
-          col("med"), col("mad"), round(col("z"), 6).as("z"))
-        .orderBy("event_type", "event_id")
-    }),
-    // ── scale: collocation extraction — adjacent-token pairs ranked by
-    //    lift = p(ab)/(p(a)p(b)), the log-free monotone form of PMI
-    //    (oracle: DuckDB replays both count scans and the fixed-order
-    //    double arithmetic bit-for-bit) ───────────────────────────────────
-    "q102_collocations" -> ((s, dir) => {
-      TextAnalysis.collocations(T(s, dir, "documents").select("text"),
-          "text", minCount = 5L, topN = 100)
-        .select(col("term_a"), col("term_b"), col("pair_count"),
-          round(col("lift"), 6).as("lift"))
-        .orderBy(col("lift").desc, col("term_a"), col("term_b"))
-    }),
-    // ── scale: PageRank centrality over the customer–supplier graph —
-    //    the link-graph quality prior of web-corpus curation (bidirected
-    //    orders⋈lineitem edges, 3 rounds, GraphX staticPageRank
-    //    semantics; gate runs the deterministic src-sorted fold so the
-    //    oracle replays every round as unrolled CTEs) ────────────────────
-    "q101_pagerank" -> ((s, dir) => {
-      val el = T(s, dir, "orders")
-        .join(T(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("a"),
-          concat(lit("s"), col("l_suppkey")).as("b"))
-      Graph.pageRank(Graph.bidirect(el, "a", "b"), "src", "dst",
-          rounds = 3, damping = 0.85, deterministic = true)
-        .select(col("node"), round(col("rank"), 6).as("rank"))
-        .orderBy("node")
-    }),
-    // ── scale: weighted sample without replacement — priority sampling
-    //    (Duffield–Lund–Thorup): u from the md5-60 hash, priority w/u,
-    //    top-k via TakeOrderedAndProject, τ = (k+1)-th priority calibrates
-    //    the unbiased estimator weight est_w = max(w, τ) (oracle: DuckDB
-    //    replays the hash, the two divisions, the rank, and τ) ───────────
-    "q99_priority_sample" -> ((s, dir) => {
-      Sampling.prioritySampleK(
-          T(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-          "doc_id", "n_chars", k = 50, seed = 11L)
-        .orderBy(col("priority").desc, col("doc_id").asc)
-    }),
-    // ── scale: exact-k uniform sample per source — hash-ranked draw, a
-    //    pure function of (id, seed) (oracle: DuckDB replays the hash and
-    //    the per-source rank window) ─────────────────────────────────────
-    "q100_group_sample_k" -> ((s, dir) => {
-      Sampling.sampleKPerGroup(
-          T(s, dir, "documents").select("source", "doc_id"),
-          "source", "doc_id", k = 20L, seed = 5L)
-        .orderBy("source", "pick")
-    }),
-    "q89_group_pct_rank" -> ((s, dir) => {
-      Sampling.percentRankPerGroup(
-          T(s, dir, "documents").select(col("source"), col("doc_id"),
-            col("n_chars").cast("double").as("score")),
-          "source", "doc_id", "score")
-        .select(col("source"), col("doc_id"), col("score"), col("rank"),
-          round(col("pct"), 6).as("pct"))
-        .orderBy("source", "rank")
-    }),
-    // ── scale: cross-source contamination matrix — which sources share
-    //    near-duplicate content (q25's pair machinery + source rollup;
-    //    oracle: brute-force true pairs joined to sources) ───────────────
-    "q88_cross_source_dups" -> ((s, dir) => {
-      val pairs = Dedup.minhashNearDupPairs(lshInputQ25(s, dir), "doc_id",
-        "text", shingleSize = 3, bands = 16, rowsPerBand = 2, threshold = 0.55)
-      // planted ids (+100000) inherit their original doc's source
-      val src = T(s, dir, "documents")
-        .select(col("doc_id").as("__key"), col("source"))
-      def side(out: String) =
-        Ops.broadcastIfSmall(src.select(col("__key"), col("source").as(out)))
-      pairs
-        .join(side("src_a"), col("id_a") % 100000 === col("__key"))
-        .drop("__key")
-        .join(side("src_b"), col("id_b") % 100000 === col("__key"))
-        .drop("__key")
-        .groupBy(least(col("src_a"), col("src_b")).as("source_a"),
-          greatest(col("src_a"), col("src_b")).as("source_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("source_a", "source_b")
-    }),
-    // ── scale: BPE merge TRAINING — learn the tokenizer's merge table
-    //    from the corpus (oracle: the full training loop replayed in SQL,
-    //    rounds unrolled — pair counts, argmax, greedy re-segmentation) ──
-    "q87_bpe_train" -> ((s, dir) => {
-      // minPairCount = 1: the SQL oracle keeps merging while ANY pair
-      // exists, so the Scala side must not stop early at the default
-      // floor of 2 (irrelevant on this corpus, but the two sides must
-      // share the stopping rule by construction, not by data)
-      TextAnalysis.trainBpeMergesDF(
-          T(s, dir, "documents").select("text"), "text", numMerges = 8,
-          minPairCount = 1L)
-        .select(col("rank"), col("left").as("merge_left"),
-          col("right").as("merge_right"))
-        .orderBy("rank")
-    }),
-    // ── scale: deterministic training-order shuffle — position is a pure
-    //    function of (key, seed) via the SQL-replayable md5-60 hash
-    //    (oracle: DuckDB recomputes the hash and the global row_number) ──
-    "q86_shuffle_order" -> ((s, dir) => {
-      Sampling.deterministicShuffle(
-          T(s, dir, "documents").select("doc_id", "source"), "doc_id", seed = 7L)
-        .select(col("doc_id"), col("source"), col("shuffle_idx"))
-        .orderBy("doc_id")
-    }),
-    // ── scale: per-group percentile filter — keep the best 30% of every
-    //    source (oracle: DuckDB rank + count windows per source) ─────────
-    "q85_group_top_fraction" -> ((s, dir) => {
-      Sampling.topFractionPerGroup(
-          T(s, dir, "documents").select(col("source"), col("doc_id"),
-            col("n_chars").cast("double").as("score")),
-          "source", "doc_id", "score", frac = 0.3)
-        .orderBy("source", "rank")
-    }),
-    // ── scale: TF-IDF keyword extraction — top-3 terms per doc (oracle:
-    //    DuckDB replays tokenization, smoothed idf, and the rank window) ─
-    "q83_tfidf_keywords" -> ((s, dir) => {
-      Ranking.topKeywords(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", k = 3)
-        .select(col("doc_id"), col("term"), col("rank").cast("long").as("rank"),
-          col("tfidf"))
-        .orderBy("doc_id", "rank")
-    }),
-    // ── scale: BM25 query-relevance scoring — corpus slice by relevance
-    //    to a fixed term set (oracle: DuckDB replays idf/tf/length
-    //    normalization; per-doc sum folds term-sorted, ±1e-6 rounded) ────
-    "q84_bm25_score" -> ((s, dir) => {
-      Ranking.bm25(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", Seq("join", "merge", "filter"))
-        .select(col("doc_id"), round(col("bm25"), 6).as("bm25"))
-        .orderBy("doc_id")
-    }),
-    // ── LSH recall-margin probe (data-quality gate for q25/q41/q46): the
-    //    oracles verify at jaccard ≥ 0.55, a MARGIN above the 16×2
-    //    banding's 0.5 S-curve midpoint. This query recomputes, brute
-    //    force, every true pair of each gated input and (a) REQUIREs the
-    //    aggregate band-miss mass of oracle pairs stays negligible,
-    //    (b) emits the per-probe stats as a gated row — so a testdata
-    //    regen that grows pairs near the midpoint fails loudly here
-    //    instead of surfacing as an unexplained q25/q41/q46 mismatch. ────
-    "q53_lsh_margin" -> ((s, dir) => {
-      import s.implicits._
-      val probes = Seq(
-        "q25" -> lshInputQ25(s, dir),
-        "q41" -> lshInputQ41(s, dir),
-        "q46" -> lshInputQ46(s, dir),
-        // q74 verifies (incoming × history) pairs only; margin over the
-        // combined frame upper-bounds the miss mass of that subset
-        "q74" -> { val (h, i) = ndixInputs(s, dir); h.unionByName(i) })
-      val rows = probes.map { case (p, in) =>
-        val r = Dedup.lshMarginStats(in, "doc_id", "text", shingleSize = 3,
-          bands = 16, rowsPerBand = 2, threshold = 0.55, hazardFloor = 0.5).first()
-        val misses = if (r.isNullAt(3)) 0.0 else r.getDouble(3)
-        System.err.println(f"[verify] lsh-margin $p: oracle_pairs=${r.getLong(0)} " +
-          f"hazard_pairs=${r.getLong(1)} min_jaccard=${r.get(2)} " +
-          f"expected_band_misses=$misses%.3e")
-        require(r.getLong(0) > 0, s"LSH margin probe $p found no true pairs — gated input is broken")
-        require(misses <= 0.05,
-          f"LSH margin violated for $p: expected band misses $misses%.4f > 0.05 — " +
-            "testdata pairs hug the 0.5 banding midpoint; the q25/q41/q46/q74 LSH gates are no longer reliable")
-        (p, r.getLong(0), r.getLong(1), r.getDouble(2))
-      }
-      rows.toDF("probe", "oracle_pairs", "hazard_pairs", "min_jaccard")
-        .orderBy("probe")
-    }))
-
-  /** Bench-protocol variants (graft.Bench uses these; CORRECTNESS still
-    * gates on [[queries]], which are unchanged). Two adjustments, both from
-    * the round-2 review:
-    *  - q26/q36 bench the PRODUCTION token/seed hash (xxhash64) instead of
-    *    the md5-prefix hash, which exists only so an external SQL oracle
-    *    can replay signatures/seeding bit-for-bit — md5 is ~5× slower and
-    *    is a verification artifact, not the shipped default. The md5
-    *    variants stay oracle-checked at sf0.01 via `queries`.
-    *  - q08/q38 measure a store lifecycle: the priming write that creates
-    *    the "previous state" is test setup, not the operator under
-    *    measurement, so it is hoisted into the untimed prepare stage (the
-    *    timed region is exactly one CDC pass / one bucketed upsert+read).
-    * Shape: name → prepare(spark, dir) → timed thunk. Names without an
-    * override run the `queries` entry entirely inside the timed region. */
-  def benchQueries: Map[String, (SparkSession, String) => () => DataFrame] = {
-    val overrides: Map[String, (SparkSession, String) => () => DataFrame] = Map(
-      // q182/q184/q188/q189/q197/q198 bench the PRODUCTION path: plain
-      // map-side-combined sums (the sorted folds exist so the SQL oracle
-      // can replay the gate run bit-exactly)
-      "q182_dow_index" -> ((s, dir) => {
-        val ev = T(s, dir, "events")
-        () => Analytics.dayOfWeekIndex(ev, "ts", "event_id", "value")
-          .select(col("dow"), col("n"), round(col("mean"), 6).as("mean"),
-            round(col("idx"), 6).as("idx"))
-          .orderBy("dow")
-      }),
-      // q296 benches the PRODUCTION path (plain sums over the types-sized
-      // matrix; the from-sorted fold exists for the SQL replay)
-      "q296_stationary_dist" -> ((s, dir) => {
-        val ev = T(s, dir, "events")
-        () => Analytics.stationaryDistribution(ev, "user_id", "ts",
-            "event_type", "event_id", rounds = 3)
-          .select(col("t"), round(col("pi"), 6).as("pi"))
-          .orderBy("t")
-      }),
-      // q236 benches the PRODUCTION path (plain map-side-combined sums);
-      // the term-sorted folds exist so the SQL oracle replays the gate
-      // run bit-exactly
-      "q236_sparse_cosine" -> ((s, dir) => {
-        () => Ranking.tfidfCosinePairs(T(s, dir, "documents"), "doc_id",
-            "text", shingleSize = 3, threshold = 0.3, maxDf = 50L,
-            deterministic = false)
-          .select(col("id_a"), col("id_b"), col("n_shared"),
-            round(col("cosine"), 6).as("cosine"))
-          .orderBy("id_a", "id_b")
-      }),
-      // q271 measures a store lifecycle: history indexing is test setup
-      // (the q08/q38/q256 convention) — the timed region is exactly one
-      // probe against the persisted fingerprint postings, on the
-      // PRODUCTION hash (xxhash64; md5-60 exists for the oracle replay)
-      "q271_span_index" -> ((s, dir) => {
-        val d = T(s, dir, "documents")
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val idx = new SpanIndex(s, tmpWorkDir("gs_spanix_"), k = 5,
-          window = 4, minShared = 3, numBuckets = 16, maxPostings = 500)
-        idx.add(d.filter(col("doc_id") % 2 === 1), "doc_id", "text")
-        val probeDocs = d.filter(col("doc_id") % 2 === 0)
-        () => idx.probe(probeDocs, "doc_id", "text")
-      }),
-      // q279 measures a store lifecycle: seeding system A is test setup
-      // (the q08/q38/q256 convention) — the timed region is one resolve
-      // of the B batch against the persisted golden records
-      "q279_er_index" -> ((s, dir) => {
-        val ents = linkageEntities(s, dir)
-        val idx = new ErIndex(s, tmpWorkDir("gs_erix_"), linkageFields,
-          linkageBlockKeys(), scoreThresholdMicro = 10000000L,
-          numBuckets = 16)
-        idx.ingest(ents.filter(col("id") % 2 === 0), "id")
-        val b = ents.filter(col("id") % 2 === 1)
-        () => idx.resolve(b, "id")
-      }),
-      // q256 measures a store lifecycle: initialization + the two adds
-      // are test setup (the q08/q38 convention) — the timed region is
-      // exactly one probe against the persisted index
-      "q256_vector_index" -> ((s, dir) => {
-        val e = T(s, dir, "embeddings")
-        val idx = new VectorIndex(s, tmpWorkDir("gs_vecidx_"), numBuckets = 16)
-        val first = e.filter(col("vec_id") % 2 === 0)
-        idx.initialize(first, "vec_id", "embedding", numCentroids = 8)
-        idx.add(first, "vec_id", "embedding")
-        idx.add(e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
-        () => idx.probe(e.filter(col("vec_id") < 10), "vec_id", "embedding",
-            k = 5, nProbe = 8)
-          .select(col("query_id"), col("rank"), col("neighbor_id"),
-            round(col("cosine"), 6).as("cosine"))
-          .orderBy("query_id", "rank")
-      }),
-      // q261 measures a store lifecycle: signature computation + the two
-      // adds are setup — the timed region is one probe
-      "q261_hamming_index" -> ((s, dir) => {
-        val d = T(s, dir, "documents").select("doc_id", "text")
-        val sig = Dedup.simhash(d, "doc_id", "text",
-          tokenHash = Dedup.Md5TokenHash).localCheckpoint(true)
-        val idx = new HammingIndex(s, tmpWorkDir("gs_hamix_"), maxDist = 3,
-          numBuckets = 16, maxBucketSize = 100000)
-        idx.add(sig.filter(col("doc_id") % 2 === 0), "doc_id", "simhash")
-        idx.add(sig.filter(col("doc_id") % 2 =!= 0), "doc_id", "simhash")
-        val incoming = sig.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"), col("simhash"))
-          .localCheckpoint(true)
-        () => idx.probe(incoming, "doc_id", "simhash")
-          .orderBy("inc_id", "hist_id")
-      }),
-      "q184_bootstrap_means" -> ((s, dir) => {
-        val ev = T(s, dir, "events")
-        () => Analytics.poissonBootstrapMeans(ev, "event_id", "value",
-            reps = 16)
-          .select(col("rep"), col("n_eff"), round(col("wmean"), 6).as("wmean"))
-          .orderBy("rep")
-      }),
-      "q188_mann_whitney" -> ((s, dir) => {
-        val ev = T(s, dir, "events")
-        () => Analytics.mannWhitneyU(ev, "event_type", "value",
-            "click", "view")
-          .select(col("n_a"), col("n_b"), round(col("u_a"), 6).as("u_a"),
-            round(col("u_b"), 6).as("u_b"), round(col("z"), 6).as("z"))
-      }),
-      "q189_hits" -> ((s, dir) => {
-        val el = T(s, dir, "orders")
-          .join(T(s, dir, "lineitem"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(concat(lit("c"), col("o_custkey")).as("a"),
-            concat(lit("s"), col("l_suppkey")).as("b"))
-        () => Graph.hits(el, "a", "b", rounds = 3)
-          .select(col("node"), col("kind"), round(col("score"), 6).as("score"))
-          .orderBy("kind", "node")
-      }),
-      "q197_burstiness" -> ((s, dir) => {
-        val ev = T(s, dir, "events")
-        () => Analytics.interArrivalStats(ev, "user_id", "ts", "event_id")
-          .select(col("user_id"), col("n_gaps"),
-            round(col("mean_us") / lit(1000000.0), 6).as("mean_s"),
-            round(col("burstiness"), 6).as("burstiness"))
-          .orderBy("user_id")
-      }),
-      "q198_group_trends" -> ((s, dir) => {
-        val m = unix_micros(col("ts").cast("timestamp"))
-        val d = lit(86400000000L)
-        val ev = T(s, dir, "events").withColumn("day",
-          ((m - pmod(m, d)) / d).cast("long"))
-        () => Analytics.groupTrends(ev, "event_type", "event_id", "day",
-            "value")
-          .select(col("event_type"), col("n"),
-            round(col("slope"), 6).as("slope"),
-            round(col("intercept"), 6).as("intercept"),
-            round(col("r2"), 6).as("r2"))
-          .orderBy("event_type")
-      }),
-      "q215_simpson_check" -> ((s, dir) => {
-        val m = unix_micros(col("ts").cast("timestamp"))
-        val d = lit(86400000000L)
-        val ev = T(s, dir, "events").withColumn("day",
-          ((m - pmod(m, d)) / d).cast("long"))
-        () => Analytics.simpsonCheck(ev, "event_type", "event_id", "day",
-            "value")
-          .select(col("n_groups"), round(col("pooled_slope"), 6)
-            .as("pooled_slope"), col("groups_opposing"),
-            round(col("opposing_weight"), 6).as("opposing_weight"),
-            col("paradox"))
-      }),
-      // q106 benches the PRODUCTION path: plain map-side-combined sums
-      // (the word-sorted fold exists so the SQL oracle can replay it)
-      "q106_source_divergence" -> ((s, dir) => {
-        val d = T(s, dir, "documents").select("source", "text")
-        () => Importance.sourceDivergence(d, "source", "text", alpha = 0.5)
-          .select(col("source_a"), col("source_b"),
-            round(col("js"), 6).as("js"))
-          .orderBy("source_a", "source_b")
-      }),
-      // q150 benches the PRODUCTION fold (plain sums; ts-sorted folds are
-      // the oracle-replay artifact)
-      "q150_twap" -> ((s, dir) => {
-        val ev = T(s, dir, "events")
-        () => Analytics.timeWeightedAverage(ev, "user_id", "ts",
-            "event_id", "value")
-          .select(col("user_id"), col("n_intervals"), col("total_micros"),
-            round(col("twap"), 6).as("twap"))
-          .orderBy("user_id")
-      }),
-      // q146 benches the PRODUCTION entropy path (plain sums; word-sorted
-      // folds are the oracle-replay artifact — the q106 convention)
-      "q146_lexical_diversity" -> ((s, dir) => {
-        val d = T(s, dir, "documents").select("source", "text")
-        () => TextAnalysis.lexicalDiversity(d, "source", "text")
-          .select(col("group"), col("n_tokens"), col("n_types"),
-            round(col("ttr"), 6).as("ttr"),
-            round(col("entropy"), 6).as("entropy"),
-            round(col("norm_entropy"), 6).as("norm_entropy"))
-          .orderBy("group")
-      }),
-      // q158 benches the PRODUCTION IVF-blocked kNN (auto centroids; the
-      // numCentroids=1 exact path is the oracle gate)
-      "q158_embedding_outliers" -> ((s, dir) => {
-        val e = T(s, dir, "embeddings")
-        () => Similarity.embeddingOutliers(e, "vec_id", "embedding",
-            k = 5, topK = 20)
-          .select(col("rank"), col("id"),
-            round(col("kth_cosine"), 6).as("kth_cosine"))
-          .orderBy("rank")
-      }),
-      // q154 benches the PRODUCTION capped path (middle-degree cap 100 —
-      // the q144 convention; the exact 2-hop set is the oracle gate)
-      "q154_harmonic2" -> ((s, dir) => {
-        val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey")
-        () => Graph.harmonicCentrality2(edges, "item_a", "item_b",
-            topK = 20, maxMiddleDegree = 100)
-          .select(col("rank"), col("node"), col("degree"), col("n2"),
-            round(col("harmonic"), 6).as("harmonic"))
-          .orderBy("rank")
-      }),
-      // q144 benches the PRODUCTION capped path (middle-degree cap 100 —
-      // the bounded-recall scale lever; the exact path is the oracle gate)
-      "q144_link_prediction" -> ((s, dir) => {
-        val edges = Analytics.coOccurrenceEdges(T(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey")
-        () => Graph.linkPrediction(edges, "item_a", "item_b", topK = 20,
-            maxMiddleDegree = 100)
-          .select(col("a").as("item_a"), col("b").as("item_b"), col("common"),
-            round(col("jaccard"), 6).as("jaccard"))
-          .orderBy("item_a", "item_b")
-      }),
-      // q129 benches the PRODUCTION covariance path (plain sums; the
-      // id-sorted folds are the oracle-replay artifact — q96/q98 convention)
-      "q129_top_pc" -> ((s, dir) => {
-        val e = T(s, dir, "embeddings")
-        () => Training.topPrincipalComponent(e, "vec_id", "embedding",
-            rounds = 3)
-          .select(col("dim"), round(col("pc1"), 6).as("pc1"),
-            round(col("eigenvalue"), 6).as("eigenvalue"))
-          .orderBy("dim")
-      }),
-      // q124 benches the PRODUCTION profile (HLL++ distinct folded into
-      // the single scan — no Expand; exact distinct is the oracle path)
-      "q124_profile" -> ((s, dir) => {
-        val o = T(s, dir, "orders")
-        () => Profiling.profileTable(o,
-            Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-              "o_orderdate", "o_orderpriority"), exactDistinct = false)
-          .orderBy("column")
-      }),
-      // q123 benches the PRODUCTION lane hash (xxhash64; md5 is the
-      // oracle-replay artifact — the q26/q36/q91 convention)
-      "q123_source_minhash" -> ((s, dir) => {
-        val d = T(s, dir, "documents").select("source", "text")
-        () => Dedup.sourceMinhashSimilarity(d, "source", "text",
-            shingleSize = 3, lanes = 64)
-          .orderBy("source_a", "source_b")
-      }),
-      // q110 benches the PRODUCTION path (plain sums, like q101)
-      "q110_trustrank" -> ((s, dir) => {
-        val el = T(s, dir, "orders")
-          .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select(concat(lit("c"), col("o_custkey")).as("a"),
-            concat(lit("s"), col("l_suppkey")).as("b"))
-        val seeds = T(s, dir, "customer")
-          .filter(col("c_nationkey") === 0)
-          .select(concat(lit("c"), col("c_custkey")).as("n"))
-        () => Graph.personalizedPageRank(Graph.bidirect(el, "a", "b"),
-            "src", "dst", seeds, "n", rounds = 3, damping = 0.85)
-          .select(col("node"), round(col("rank"), 9).as("rank"))
-          .orderBy("node")
-      }),
-      // q101 benches the PRODUCTION path: plain map-side-combined sums
-      // (the src-sorted fold exists so the SQL oracle can replay rounds)
-      "q101_pagerank" -> ((s, dir) => {
-        val el = T(s, dir, "orders")
-          .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select(concat(lit("c"), col("o_custkey")).as("a"),
-            concat(lit("s"), col("l_suppkey")).as("b"))
-        () => Graph.pageRank(Graph.bidirect(el, "a", "b"), "src", "dst",
-            rounds = 3, damping = 0.85)
-          .select(col("node"), round(col("rank"), 6).as("rank"))
-          .orderBy("node")
-      }),
-      // q98 benches the PRODUCTION path: plain-avg means (deterministic
-      // id-sorted folds exist so the SQL oracle can replay the run)
-      "q98_kmeans_train" -> ((s, dir) => {
-        val e = T(s, dir, "embeddings")
-        () => Training.trainKMeans(e, "vec_id", "embedding", k = 4, rounds = 3)
-          .select(col("cluster"), col("dim"), round(col("value"), 6).as("value"))
-          .orderBy("cluster", "dim")
-      }),
-      // q96 benches the PRODUCTION path: xxhash64 features + plain-sum
-      // gradients (the md5/deterministic-fold combination exists so the
-      // SQL oracle can replay the training run bit-for-bit)
-      "q96_lr_train" -> ((s, dir) => {
-        val d = T(s, dir, "documents")
-          .select(col("doc_id"), col("text"),
-            (col("source") === "src0").cast("int").as("label"))
-        () => Training.trainLogistic(d, "doc_id", "text", "label",
-            buckets = 256, rounds = 3, learningRate = 0.5)
-          .select(col("bucket"), round(col("w"), 6).as("w"))
-          .orderBy("bucket")
-      }),
-      // q91 benches the PRODUCTION xxhash64 feature hash (md5 is the
-      // oracle-replay artifact — same convention as q26/q36 below)
-      "q91_importance_weights" -> ((s, dir) => {
-        val d = T(s, dir, "documents")
-        val raw = d.select("doc_id", "text")
-        val target = d.filter(col("source") === "src0").select("text")
-        () => Importance.importanceWeights(raw, target, "doc_id", "text",
-            buckets = 4096, alpha = 0.5)
-          .select(col("doc_id"), round(col("logw"), 6).as("logw"))
-          .orderBy("doc_id")
-      }),
-      "q26_simhash_neardup" -> ((s, dir) => {
-        val d = T(s, dir, "documents").select("doc_id", "text")
-        val dupes = d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-        val u = d.unionByName(dupes)
-        () => Dedup.simhashNearDupPairs(u, "doc_id", "text", maxDist = 3)
-          .orderBy("id_a", "id_b")
-      }),
-      "q36_ann_ivf" -> ((s, dir) => {
-        val e = T(s, dir, "embeddings")
-        () => Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
-            k = 5, numCentroids = 16, nProbe = 3)
-          .select(col("query_id"), col("rank"), col("neighbor_id"))
-          .orderBy("query_id", "rank")
-      }),
-      "q08_drop_redundant_cdc" -> ((s, dir) => {
-        val tmp = tmpWorkDir("gs_cdc_")
-        val store = new SnapshotStore(s, tmp)
-        val base = T(s, dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-        Snapshot.dropRedundant(store, "customer", base, Seq("c_custkey")).count()
-        val changed = base.withColumn("c_mktsegment",
-          when(col("c_mktsegment") === "BUILDING", "BUILDINGX").otherwise(col("c_mktsegment")))
-        () => Snapshot.dropRedundant(store, "customer", changed, Seq("c_custkey"),
-            updatedFlag = true)
-          .select("c_custkey", "c_mktsegment", "_updated")
-          .orderBy("c_custkey")
-      }),
-      "q38_bucketed_upsert" -> ((s, dir) => {
-        val store = new BucketedSnapshotStore(s,
-          tmpWorkDir("gs_bsnap_"), numBuckets = 32)
-        val orders = T(s, dir, "orders")
-        val snap = orders.filter(col("o_orderkey") % 3 =!= 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-        val incoming = orders.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), (col("o_totalprice") + 1.0).as("o_totalprice"))
-        store.write("orders", snap, Seq("o_orderkey"))
-        () => {
-          // the extract is key-unique (a filter over a pk column), so the
-          // bench takes the production fast path; the sf0.01 CORRECTNESS
-          // gate keeps exercising the general dedup path via `queries`
-          store.upsert("orders", incoming, Seq("o_orderkey"),
-            assumeUniqueKeys = true)
-          store.read("orders").get.orderBy("o_orderkey")
-        }
-      }),
-      "q50_bucketed_point_lookup" -> ((s, dir) => {
-        import s.implicits._
-        val store = new BucketedSnapshotStore(s,
-          tmpWorkDir("gs_bpl_"), numBuckets = 32)
-        val snap = T(s, dir, "orders").filter(col("o_orderkey") % 3 =!= 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-        store.write("orders", snap, Seq("o_orderkey"))
-        val keys = (1L to 2000L).toDF("o_orderkey")
-        () => store.readForKeys("orders", keys, Seq("o_orderkey"))
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .orderBy("o_orderkey")
-      }),
-      // q74: the history indexing is test setup; the operator under
-      // measurement is the band-bucket-pruned probe of the mixed batch.
-      "q74_neardup_ingest" -> ((s, dir) => {
-        val idx = new NearDupIndex(s, tmpWorkDir("gs_ndix_"), shingleSize = 3,
-          bands = 16, rowsPerBand = 2, threshold = 0.55, numBuckets = 32)
-        val (history, incoming) = ndixInputs(s, dir)
-        idx.add(history, "doc_id", "text")
-        () => idx.probe(incoming, "doc_id", "text")
-          .select(col("inc_id"), col("hist_id"),
-            round(col("jaccard"), 4).as("jaccard"))
-          .orderBy("inc_id", "hist_id")
-      }),
-      // q71: the history build (write + upsert + bloom sidecars) is test
-      // setup; the operator under measurement is the bloom-prefiltered
-      // incremental ingest of a mixed dup/new batch.
-      "q71_incremental_dedup" -> ((s, dir) => {
-        val store = new BucketedSnapshotStore(s, tmpWorkDir("gs_bloom_"),
-          numBuckets = 32, keyBloomFpp = 0.01)
-        val d = T(s, dir, "documents")
-        store.write("docs", d.filter(col("doc_id") % 3 === 0)
-          .select("doc_id", "source", "n_chars"), Seq("doc_id"))
-        store.upsert("docs", d.filter(col("doc_id") % 7 === 0)
-          .select("doc_id", "source", "n_chars"), Seq("doc_id"))
-        val incoming = d.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000L).as("doc_id"),
-              col("source"), col("n_chars")))
-        () => store.incrementalNew("docs", incoming, Seq("doc_id"))
-          .orderBy("doc_id")
-      }),
-      "q51_csv_snapshot_upsert" -> ((s, dir) => {
-        val store = new SnapshotStore(s,
-          tmpWorkDir("gs_csvsnap_"))
-        val orders = T(s, dir, "orders")
-        val snap = orders.filter(col("o_orderkey") % 3 =!= 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-        store.write("orders", snap, useCsv = true)
-        val incoming = orders.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), (col("o_totalprice") + 1.0).as("o_totalprice"))
-        () => Snapshot.snapshotRecords(store, "orders", incoming,
-            Seq("o_orderkey"), useCsv = true)
-          .select(col("o_orderkey").cast("bigint").as("o_orderkey"),
-            col("o_totalprice").cast("double").as("o_totalprice"))
-          .orderBy("o_orderkey")
-      }))
-    // q53 is a verify-time data-quality probe that deliberately
-    // brute-forces ALL O(n²) doc pairs (that's what the banding it guards
-    // exists to avoid) — it is not an operator and must not enter the bench.
-    (queries - "q53_lsh_margin").map { case (n, fn) =>
-      n -> overrides.getOrElse(n, (s: SparkSession, d: String) => () => fn(s, d))
-    }
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_catalog_typed_read" ->
-      """SELECT event_id, CAST(user_id AS VARCHAR) AS user_id, value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q02_rename_project" ->
-      """SELECT c_custkey AS id, c_name AS name, c_acctbal AS balance
-        |FROM customer ORDER BY id""".stripMargin,
-    "q03_explode_json_to_cols" ->
-      """SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS "props.k"
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q04_explode_json_to_rows" ->
-      """SELECT event_id, n AS "line.n", event_type AS "line.v"
-        |FROM events CROSS JOIN (VALUES (CAST(1 AS BIGINT)), (CAST(2 AS BIGINT))) t(n)
-        |ORDER BY event_id, n""".stripMargin,
-    "q05_json_tuple_to_cols" ->
-      """SELECT event_id, event_type AS "attr.Name",
-        |CAST(user_id AS VARCHAR) AS "attr.Value"
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q06_compress_rows_to_col" ->
-      """SELECT l_orderkey, '[' || string_agg(
-        |  CAST(json_object('l_linenumber', l_linenumber,
-        |                   'l_quantity', l_quantity) AS VARCHAR),
-        |  ',' ORDER BY l_linenumber, l_quantity) || ']' AS line
-        |FROM lineitem WHERE l_orderkey < 100
-        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    "q07_snapshot_upsert" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0),
-        |inc AS (
-        |  SELECT o_orderkey, o_totalprice + 1.0 AS o_totalprice FROM orders
-        |  WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM inc
-        |UNION ALL
-        |SELECT * FROM snap WHERE o_orderkey NOT IN (SELECT o_orderkey FROM inc)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q08_drop_redundant_cdc" ->
-      """SELECT c_custkey, 'BUILDINGX' AS c_mktsegment, true AS _updated
-        |FROM customer WHERE c_mktsegment = 'BUILDING' ORDER BY c_custkey""".stripMargin,
-    "q09_merge_id_from_snapshot" ->
-      """SELECT c_custkey, n_nationkey + 1000 AS "Id"
-        |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY c_custkey""".stripMargin,
-    "q10_pluck_fields" ->
-      ("""SELECT p_partkey, p_name, p_brand FROM part WHERE p_partkey IN (""" +
-        (1 to 200 by 7).mkString(", ") + ") ORDER BY p_partkey"),
-    "q11_map_fields_pick" ->
-      """SELECT c_custkey AS id, c_name AS name, n_name AS nation_name
-        |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY id""".stripMargin,
-    "q12_custom_fields" ->
-      """SELECT p_partkey, CAST(json_array(
-        |  json_object('name', 'p_brand', 'value', p_brand),
-        |  json_object('name', 'p_type', 'value', p_type)) AS VARCHAR) AS cf
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q13_row_hash" ->
-      """SELECT c_custkey, md5(c_mktsegment || c_name) AS hash
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q14_localize_datetime" ->
-      """SELECT event_id,
-        |strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%dT%H:%M:%S.%f') || 'Z' AS iso
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q15_singer_schema_gen" -> {
-      val rows = Seq(
-        ("l_orderkey", "integer", ""), ("l_partkey", "integer", ""),
-        ("l_suppkey", "integer", ""), ("l_linenumber", "integer", ""),
-        ("l_quantity", "number", ""), ("l_extendedprice", "number", ""),
-        ("l_discount", "number", ""), ("l_tax", "number", ""),
-        ("l_returnflag", "string", ""), ("l_linestatus", "string", ""),
-        ("l_shipdate", "string", "date-time"))
-      rows.map { case (c, t, f) =>
-        s"SELECT '$c' AS column_name, '$t' AS singer_type, '$f' AS format"
-      }.mkString("", " UNION ALL ", " ORDER BY column_name")
-    },
-    "q16_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q17_join_agg_revenue" ->
-      """SELECT o_orderkey,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |  AND o_orderkey = l_orderkey
-        |GROUP BY o_orderkey
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q18_window_topk" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-        |  row_number() OVER (PARTITION BY l_orderkey
-        |    ORDER BY l_extendedprice DESC, l_linenumber) AS rn
-        |FROM lineitem WHERE l_orderkey < 1000
-        |QUALIFY rn <= 2 ORDER BY l_orderkey, rn""".stripMargin,
-    "q20_dedup_exact" ->
-      """WITH u AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 100000, text FROM documents)
-        |SELECT min(doc_id) AS doc_id FROM u GROUP BY text ORDER BY doc_id""".stripMargin,
-    "q21_token_stats" ->
-      """SELECT doc_id, length(text) AS chars,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
-        |    AS bpeish_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q22_quality_score" ->
-      """SELECT doc_id, round(
-        |  least(length(text) / 500.0, 1.0) * 0.25 +
-        |  (CASE WHEN length(text) > 0 THEN
-        |     length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
-        |   ELSE 0.0 END) * 0.25 +
-        |  (1.0 - least((CASE WHEN length(text) > 0 THEN
-        |     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)
-        |   ELSE 0.0 END) * 10.0, 1.0)) * 0.25 +
-        |  least((CASE WHEN len(string_split_regex(trim(text), '\s+')) > 0 THEN
-        |     len(regexp_extract_all(text, '(?i)\b(the|and|of|to|a|in|is|it)\b')) * 1.0
-        |       / len(string_split_regex(trim(text), '\s+'))
-        |   ELSE 0.0 END) * 4.0, 1.0) * 0.25, 6) AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q23_lang_id" -> {
-      val langs = TextAnalysis.markerLexicon.keys.toSeq.sorted
-      val scores = langs.map { l =>
-        val pat = "(?i)\\b(" + TextAnalysis.markerLexicon(l).mkString("|") + ")\\b"
-        s"len(regexp_extract_all(text, '$pat')) AS s_$l"
-      }.mkString(", ")
-      val greatest = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
-      val caseChain = langs.map(l => s"WHEN s_$l = $greatest THEN '$l'")
-        .mkString("CASE ", " ", " END")
-      s"""WITH scored AS (SELECT doc_id, lang, $scores FROM documents)
-         |SELECT doc_id, lang, $caseChain AS lang_pred
-         |FROM scored ORDER BY doc_id""".stripMargin
-    },
-    "q24_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(trim(
-        |  regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')),
-        |  '\s+', ' ', 'g')) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q27_ann_bruteforce" ->
-      """SELECT q.vec_id AS query_id,
-        |  row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |      CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS rank,
-        |  c.vec_id AS neighbor_id,
-        |  round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])), 6) AS cosine
-        |FROM embeddings q, embeddings c
-        |WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id
-        |QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q29_embedding_stats" ->
-      """SELECT vec_id, len(embedding) AS dim,
-        |  round(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |    CAST(embedding AS DOUBLE[]))), 6) AS l2_norm
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q30_singer_records" ->
-      """SELECT event_id,
-        |  '{"type": "RECORD", "stream": "events", "record": ' ||
-        |  CAST(json_object('event_id', event_id, 'event_type', event_type,
-        |    'value', value) AS VARCHAR) || '}' AS line
-        |FROM events WHERE event_id < 100 ORDER BY event_id""".stripMargin,
-    "q31_parse_df_cols" ->
-      """SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q32_pickregex_cf" ->
-      """SELECT p_partkey AS pk, CAST(json_array(
-        |  json_object('name', 'p_brand', 'value', p_brand),
-        |  json_object('name', 'p_type', 'value', p_type)) AS VARCHAR) AS CF
-        |FROM part ORDER BY pk""".stripMargin,
-    "q33_sessionize" ->
-      """WITH marked AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |    CASE WHEN date_diff('second',
-        |        lag(CAST(ts AS TIMESTAMP)) OVER w, CAST(ts AS TIMESTAMP)) > 600
-        |      THEN 1 ELSE 0 END AS new_session
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM marked)
-        |SELECT user_id, session_seq,
-        |  strftime(min(ts), '%Y-%m-%dT%H:%M:%S.%f') || 'Z' AS session_start,
-        |  strftime(max(ts), '%Y-%m-%dT%H:%M:%S.%f') || 'Z' AS session_end,
-        |  count(*) AS events
-        |FROM sessions GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-    "q34_windowed_counts" ->
-      """SELECT strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)),
-        |    '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "q35_salted_agg" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // same merge semantics as q07, exercised through the bucketed store
-    "q38_bucketed_upsert" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0),
-        |inc AS (
-        |  SELECT o_orderkey, o_totalprice + 1.0 AS o_totalprice FROM orders
-        |  WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM inc
-        |UNION ALL
-        |SELECT * FROM snap WHERE o_orderkey NOT IN (SELECT o_orderkey FROM inc)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q42_salted_join" ->
-      """SELECT l_orderkey, l_linenumber, s_name
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE l_orderkey < 2000
-        |ORDER BY l_orderkey, l_linenumber, s_name""".stripMargin,
-    "q45_range_join" ->
-      """SELECT o_orderkey, t.tier
-        |FROM orders JOIN (VALUES
-        |  ('bronze', 0.0, 50000.0), ('silver', 50000.0, 150000.0),
-        |  ('gold', 150000.0, 300000.0), ('platinum', 300000.0, 1000000.0))
-        |  t(tier, lo, hi)
-        |ON o_totalprice >= t.lo AND o_totalprice < t.hi
-        |ORDER BY o_orderkey""".stripMargin,
-    "q44_asof_join" ->
-      """WITH updates AS (
-        |  SELECT user_id, ts AS upd_ts, value AS upd_value
-        |  FROM events WHERE event_id % 37 = 0),
-        |probes AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_id % 5 = 0)
-        |SELECT p.event_id, p.user_id, u.upd_value
-        |FROM probes p
-        |ASOF LEFT JOIN updates u
-        |  ON p.user_id = u.user_id AND p.ts >= u.upd_ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q39_ngram_jaccard" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct(string_split_regex(trim(lower(text)), '\s+')) AS toks
-        |  FROM documents)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(len(list_intersect(a.toks, b.toks)) * 1.0 /
-        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))), 6)
-        |    AS jaccard
-        |FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
-        |WHERE a.doc_id < 50 ORDER BY id_a""".stripMargin,
-    "q25_minhash_neardup" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u)),
-         |p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b, round(j, 4) AS jaccard FROM p
-         |WHERE j >= 0.55 ORDER BY id_a, id_b""".stripMargin,
-    "q26_simhash_neardup" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0),
-         |tok AS (
-         |  SELECT doc_id, ${h60Sql("t")}::BIGINT AS h
-         |  FROM (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t FROM u)),
-         |sig AS (SELECT doc_id, $simhashBitsSql AS s FROM tok GROUP BY doc_id)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, bit_count(xor(a.s, b.s)) AS hamming
-         |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.s, b.s)) <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q28_ann_lsh" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |s AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $lshSigSql AS sig FROM e),
-         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([sig, $lshProbeXorsSql]) AS b
-         |      FROM s WHERE vec_id < 10),
-         |cand AS (
-         |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id,
-         |    list_dot_product(q.qv, c.v) / (q.qn * c.nrm) AS cosine
-         |  FROM q JOIN s c ON c.sig = q.b WHERE q.query_id <> c.vec_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rank, neighbor_id
-         |FROM cand QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q36_ann_ivf" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cvec
-         |  FROM (SELECT vec_id, v FROM e
-         |        QUALIFY row_number()
-         |          OVER (ORDER BY ${h60Sql("vec_id::VARCHAR")}, vec_id) <= 16)),
-         |a0 AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, seeds.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.v, seeds.cvec) /
-         |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(seeds.cvec, seeds.cvec)))
-         |        DESC, seeds.cid) AS rn
-         |    FROM e, seeds) WHERE rn = 1),
-         |m AS (
-         |  SELECT a0.cid, t.i, CAST(avg(e.v[t.i]) AS FLOAT) AS mv
-         |  FROM a0 JOIN e USING (vec_id), range(1, 65) AS t(i) GROUP BY a0.cid, t.i),
-         |cents AS (SELECT cid, CAST(list(mv ORDER BY i) AS DOUBLE[]) AS cvec FROM m GROUP BY cid),
-         |a2 AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, cents.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.v, cents.cvec) /
-         |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.cvec, cents.cvec)))
-         |        DESC, cents.cid) AS rn
-         |    FROM e, cents) WHERE rn = 1),
-         |probes AS (
-         |  SELECT query_id, cid FROM (
-         |    SELECT e.vec_id AS query_id, cents.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.v, cents.cvec) /
-         |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.cvec, cents.cvec)))
-         |        DESC, cents.cid) AS rn
-         |    FROM e, cents WHERE e.vec_id < 10) WHERE rn <= 3),
-         |cand AS (
-         |  SELECT p.query_id, c.vec_id AS neighbor_id,
-         |    list_dot_product(q.v, c.v) /
-         |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine
-         |  FROM probes p JOIN a2 ON a2.cid = p.cid
-         |  JOIN e c ON c.vec_id = a2.vec_id
-         |  JOIN e q ON q.vec_id = p.query_id
-         |  WHERE c.vec_id <> p.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rank, neighbor_id
-         |FROM cand QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q37_multimodal" ->
-      """SELECT CAST(p_partkey AS BIGINT) AS media_id,
-        |  CASE ('0x' || substr(md5(p_partkey::VARCHAR), 1, 2))::INTEGER % 4
-        |    WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png'
-        |    WHEN 2 THEN 'audio/wav' ELSE 'video/mp4' END AS mime,
-        |  64 + ('0x' || substr(md5(p_partkey::VARCHAR), 1, 8))::UBIGINT % 1024 AS width,
-        |  64 + ('0x' || substr(md5(p_partkey::VARCHAR), 9, 8))::UBIGINT % 1024 AS height,
-        |  16 AS feat_dim
-        |FROM part WHERE p_partkey <= 100 ORDER BY media_id""".stripMargin,
-    "q61_semantic_dedup" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings WHERE vec_id < 25),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cvec
-         |  FROM (SELECT vec_id, v FROM e
-         |        QUALIFY row_number()
-         |          OVER (ORDER BY ${h60Sql("vec_id::VARCHAR")}, vec_id) <= 16)),
-         |a0 AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, seeds.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.v, seeds.cvec) /
-         |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(seeds.cvec, seeds.cvec)))
-         |        DESC, seeds.cid) AS rn
-         |    FROM e, seeds) WHERE rn = 1),
-         |m AS (
-         |  SELECT a0.cid, t.i, CAST(avg(e.v[t.i]) AS FLOAT) AS mv
-         |  FROM a0 JOIN e USING (vec_id), range(1, 65) AS t(i) GROUP BY a0.cid, t.i),
-         |cents AS (SELECT cid, CAST(list(mv ORDER BY i) AS DOUBLE[]) AS cvec FROM m GROUP BY cid),
-         |a2 AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, cents.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.v, cents.cvec) /
-         |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.cvec, cents.cvec)))
-         |        DESC, cents.cid) AS rn
-         |    FROM e, cents) WHERE rn = 1),
-         |p AS (
-         |  SELECT b.vec_id AS id_b
-         |  FROM a2 a JOIN a2 b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  JOIN e ea ON ea.vec_id = a.vec_id
-         |  JOIN e eb ON eb.vec_id = b.vec_id
-         |  WHERE list_dot_product(ea.v, eb.v) /
-         |    (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) >= 0.95)
-         |SELECT vec_id FROM e WHERE vec_id NOT IN (SELECT id_b FROM p)
-         |ORDER BY vec_id""".stripMargin,
-    "q64_audio_decode" ->
-      """SELECT CAST(p_partkey AS BIGINT) AS media_id, 'audio/wav' AS mime,
-        |  ((1000 + (p_partkey % 5) * 500) * 1000) // 8000 AS duration_ms,
-        |  round((1000 + (p_partkey % 20) * 1000) / 32768.0, 6) AS rms
-        |FROM part WHERE p_partkey <= 150 ORDER BY media_id""".stripMargin,
-    "q65_video_frames" ->
-      """WITH p AS (
-        |  SELECT CAST(p_partkey AS BIGINT) AS media_id,
-        |    CAST(3 + p_partkey % 5 AS BIGINT) AS n_frames,
-        |    CAST(8 + (p_partkey % 5) * 4 AS BIGINT) AS width,
-        |    CAST(6 + (p_partkey // 3) % 8 AS BIGINT) AS height
-        |  FROM part WHERE p_partkey <= 150),
-        |f AS (SELECT media_id, width, height, n_frames,
-        |        CAST(unnest(range(0, n_frames, 2)) AS BIGINT) AS frame_idx
-        |      FROM p)
-        |SELECT media_id, 'video/x-msvideo' AS mime, width, height,
-        |  CAST(n_frames * 40 AS BIGINT) AS duration_ms, frame_idx,
-        |  CAST((media_id * 37 + frame_idx * 11) % 256 AS BIGINT) AS mean_r,
-        |  CAST((media_id * 59 + frame_idx * 17) % 256 AS BIGINT) AS mean_g,
-        |  CAST((media_id * 83 + frame_idx * 23) % 256 AS BIGINT) AS mean_b
-        |FROM f ORDER BY media_id, frame_idx""".stripMargin,
-    "q70_dedup_keep_best" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' extra token and more extra' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u)),
-         |e0 AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.55),
-         |edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s),
-         |q AS (SELECT doc_id, ${qualitySql("text")} AS quality FROM u),
-         |win AS (SELECT comp.id, row_number() OVER (PARTITION BY comp.c
-         |          ORDER BY q.quality DESC, comp.id) AS rk
-         |        FROM comp JOIN q ON q.doc_id = comp.id)
-         |SELECT doc_id FROM u
-         |WHERE doc_id NOT IN (SELECT id FROM comp)
-         |   OR doc_id IN (SELECT id FROM win WHERE rk = 1)
-         |ORDER BY doc_id""".stripMargin,
-    "q312_forget_store" ->
-      """WITH ms AS (SELECT min(source) AS s FROM documents),
-        |keep AS (SELECT doc_id, source, n_chars FROM documents
-        |  WHERE doc_id % 7 <> 0 AND source <> (SELECT s FROM ms)),
-        |re AS (SELECT doc_id, source,
-        |    CAST(n_chars + 1000000 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 14 = 0)
-        |SELECT * FROM keep UNION ALL SELECT * FROM re
-        |ORDER BY doc_id""".stripMargin,
-    "q71_incremental_dedup" ->
-      """WITH hist AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 3 = 0 OR doc_id % 7 = 0),
-        |inc AS (
-        |  SELECT doc_id, source, n_chars FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, source, n_chars
-        |  FROM documents WHERE doc_id % 5 = 0)
-        |SELECT i.doc_id, i.source, i.n_chars
-        |FROM inc i WHERE i.doc_id NOT IN (SELECT doc_id FROM hist)
-        |ORDER BY i.doc_id""".stripMargin,
-    "q73_strip_markup" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><title>t</title><style type="text/css">p { color: #fff; }' ||
-        |  '</style></head><body><h1>' || source ||
-        |  '</h1><SCRIPT lang="js">var x = 1; if (x < 2) { x = 3; }</SCRIPT>' ||
-        |  '<p class="main">Tom &amp; Jerry &lt;3 &quot;' || text ||
-        |  '&quot;&gt;<br/>end&nbsp;of&nbsp;doc</p></body></html>' AS x
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(regexp_replace(x,
-        |         '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |         '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS x FROM h),
-        |s2 AS (SELECT doc_id, regexp_replace(x, '<[^>]*>', ' ', 'g') AS x FROM s1),
-        |s3 AS (SELECT doc_id,
-        |  replace(replace(replace(replace(replace(replace(x,
-        |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''),
-        |    '&nbsp;', ' '), '&amp;', '&') AS x FROM s2)
-        |SELECT doc_id, trim(regexp_replace(x, '[\x00-\x20]+', ' ', 'g')) AS clean
-        |FROM s3 ORDER BY doc_id""".stripMargin,
-    "q72_knn_join" ->
-      s"""$ivfKnnOracleCtes
-         |SELECT query_id, rank, neighbor_id FROM r WHERE rank <= 3
-         |ORDER BY query_id, rank""".stripMargin,
-    "q191_label_noise" ->
-      s"""$ivfKnnOracleCtes,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |j AS (SELECT r.query_id, ql.label AS ql, nl.label AS nl
-         |  FROM r JOIN lab ql ON ql.vec_id = r.query_id
-         |  JOIN lab nl ON nl.vec_id = r.neighbor_id
-         |  WHERE r.rank <= 5),
-         |a AS (SELECT query_id AS vec_id, ql AS label,
-         |    CAST(count(*) AS BIGINT) AS n_neighbors,
-         |    CAST(sum(CASE WHEN nl <> ql THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS disagree
-         |  FROM j GROUP BY 1, 2)
-         |SELECT vec_id, label, n_neighbors, disagree,
-         |  round(CAST(disagree AS DOUBLE) / CAST(n_neighbors AS DOUBLE), 6)
-         |    AS disagree_frac
-         |FROM a
-         |WHERE CAST(disagree AS DOUBLE) / CAST(n_neighbors AS DOUBLE) >= 0.6
-         |ORDER BY vec_id""".stripMargin,
-    "q74_neardup_ingest" ->
-      s"""WITH docs AS (SELECT doc_id, text FROM documents),
-         |hist AS (SELECT doc_id, text FROM docs WHERE doc_id % 2 = 0),
-         |inc AS (
-         |  SELECT doc_id + 100000 AS doc_id, text FROM docs WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' extra token' AS text
-         |  FROM docs WHERE doc_id % 10 = 6
-         |  UNION ALL
-         |  SELECT doc_id, text FROM docs WHERE doc_id % 2 = 1),
-         |th AS (SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM hist)),
-         |ti AS (SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM inc)),
-         |p AS (
-         |  SELECT i.doc_id AS inc_id, h.doc_id AS hist_id,
-         |    len(list_intersect(i.sh, h.sh)) * 1.0 /
-         |      (len(i.sh) + len(h.sh) - len(list_intersect(i.sh, h.sh))) AS j
-         |  FROM ti i CROSS JOIN th h)
-         |SELECT inc_id, hist_id, round(j, 4) AS jaccard FROM p
-         |WHERE j >= 0.55 ORDER BY inc_id, hist_id""".stripMargin,
-    "q75_hash_embed" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |  FROM documents),
-        |h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::UBIGINT AS h FROM toks),
-        |c AS (SELECT doc_id, CAST((h // 2) % 64 AS BIGINT) AS idx,
-        |        CASE WHEN h % 2 = 1 THEN 1 ELSE -1 END AS s FROM h),
-        |agg AS (SELECT doc_id, idx, CAST(sum(s) AS DOUBLE) AS v
-        |        FROM c GROUP BY doc_id, idx),
-        |dims AS (SELECT d.doc_id, t.i AS idx
-        |         FROM (SELECT DISTINCT doc_id FROM documents) d, range(0, 64) t(i)),
-        |f AS (SELECT dims.doc_id, dims.idx, coalesce(agg.v, 0) AS v
-        |      FROM dims LEFT JOIN agg ON dims.doc_id = agg.doc_id AND dims.idx = agg.idx),
-        |n AS (SELECT doc_id, sqrt(sum(v * v)) AS norm FROM f GROUP BY doc_id)
-        |SELECT f.doc_id, f.idx,
-        |  round(CAST(CAST(CASE WHEN n.norm = 0 THEN 0 ELSE f.v / n.norm END
-        |    AS FLOAT) AS DOUBLE), 4) AS v
-        |FROM f JOIN n ON f.doc_id = n.doc_id
-        |ORDER BY f.doc_id, f.idx""".stripMargin,
-    "q76_classifier_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |  FROM documents),
-        |h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::UBIGINT AS h FROM toks),
-        |c AS (SELECT doc_id, CAST((h // 2) % 64 AS BIGINT) AS idx,
-        |        CASE WHEN h % 2 = 1 THEN 1 ELSE -1 END AS s FROM h),
-        |agg AS (SELECT doc_id, idx, CAST(sum(s) AS DOUBLE) AS v
-        |        FROM c GROUP BY doc_id, idx),
-        |dims AS (SELECT d.doc_id, t.i AS idx
-        |         FROM (SELECT DISTINCT doc_id FROM documents) d, range(0, 64) t(i)),
-        |f AS (SELECT dims.doc_id, dims.idx, coalesce(agg.v, 0) AS v
-        |      FROM dims LEFT JOIN agg ON dims.doc_id = agg.doc_id AND dims.idx = agg.idx),
-        |n AS (SELECT doc_id, sqrt(sum(v * v)) AS norm FROM f GROUP BY doc_id),
-        |vec AS (SELECT f.doc_id, f.idx,
-        |  CAST(CAST(CASE WHEN n.norm = 0 THEN 0 ELSE f.v / n.norm END
-        |    AS FLOAT) AS DOUBLE) AS v
-        |  FROM f JOIN n ON f.doc_id = n.doc_id),
-        |w AS (SELECT i AS idx, ((i * 37) % 21 - 10) / 10.0 AS w FROM range(0, 64) t(i)),
-        |dot AS (SELECT vec.doc_id, sum(vec.v * w.w) AS d
-        |        FROM vec JOIN w ON vec.idx = w.idx GROUP BY vec.doc_id)
-        |SELECT doc_id, round(1 / (1 + exp(-(d + 0.25))), 4) AS score
-        |FROM dot ORDER BY doc_id""".stripMargin,
-    "q77_normalize_text" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(
-        |    nfc_normalize('Cafe' || chr(769) || chr(7) || '  ' || text
-        |      || chr(9) || 'no' || chr(776) || 'el' || chr(127)),
-        |    '[\x00-\x20\x7F]+', ' ', 'g')) AS clean
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q79_token_budget" ->
-      """WITH q AS (SELECT doc_id,
-        |  round(
-        |    least(length(text) / 500.0, 1.0) * 0.25 +
-        |    (CASE WHEN length(text) > 0 THEN
-        |       length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
-        |     ELSE 0.0 END) * 0.25 +
-        |    (1.0 - least((CASE WHEN length(text) > 0 THEN
-        |       length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)
-        |     ELSE 0.0 END) * 10.0, 1.0)) * 0.25 +
-        |    least((CASE WHEN len(string_split_regex(trim(text), '\s+')) > 0 THEN
-        |       len(regexp_extract_all(text, '(?i)\b(the|and|of|to|a|in|is|it)\b')) * 1.0
-        |         / len(string_split_regex(trim(text), '\s+'))
-        |     ELSE 0.0 END) * 4.0, 1.0) * 0.25, 6) AS quality,
-        |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS ntok
-        |  FROM documents),
-        |c AS (SELECT doc_id, quality, ntok,
-        |        sum(ntok) OVER (ORDER BY quality DESC, doc_id) AS cum_tok FROM q)
-        |SELECT doc_id, quality, ntok, CAST(cum_tok AS BIGINT) AS cum_tok
-        |FROM c WHERE cum_tok <= 15000 ORDER BY doc_id""".stripMargin,
-    "q82_audio_neardup" ->
-      """WITH ids AS (
-        |  SELECT CAST(p_partkey AS BIGINT) AS media_id,
-        |         CAST(p_partkey AS BIGINT) AS salt, 0 AS bump
-        |  FROM part WHERE p_partkey <= 150
-        |  UNION ALL
-        |  SELECT CAST(p_partkey + 1000 AS BIGINT), CAST(p_partkey AS BIGINT), 5000
-        |  FROM part WHERE p_partkey <= 150 AND p_partkey % 10 = 0),
-        |amp AS (SELECT media_id, w.i AS w,
-        |  ((salt + 1) * (w.i * w.i + 1) * 7919 +
-        |   CASE WHEN w.i = 0 THEN bump ELSE 0 END) % 25000 AS a
-        |  FROM ids, range(0, 65) w(i)),
-        |bits AS (SELECT lo.media_id, lo.w AS i,
-        |    CASE WHEN hi.a > lo.a THEN 1 ELSE 0 END AS bit
-        |  FROM amp lo JOIN amp hi
-        |    ON lo.media_id = hi.media_id AND hi.w = lo.w + 1
-        |  WHERE lo.w < 64),
-        |pairs AS (SELECT a.media_id AS id_a, b.media_id AS id_b,
-        |    CAST(sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) AS INT) AS hamming
-        |  FROM bits a JOIN bits b
-        |    ON a.i = b.i AND a.media_id < b.media_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, hamming FROM pairs
-        |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-    "q81_image_neardup" ->
-      """WITH ids AS (
-        |  SELECT CAST(p_partkey AS BIGINT) AS media_id,
-        |         CAST(p_partkey AS BIGINT) AS salt, 0 AS bump
-        |  FROM part WHERE p_partkey <= 150
-        |  UNION ALL
-        |  SELECT CAST(p_partkey + 1000 AS BIGINT), CAST(p_partkey AS BIGINT), 8
-        |  FROM part WHERE p_partkey <= 150 AND p_partkey % 10 = 0),
-        |px AS (SELECT media_id, x.i AS x, y.j AS y,
-        |  (x.i * 31 + y.j * 53 +
-        |   (salt % 97) * (x.i * x.i + 3 * y.j * y.j + 7 * x.i * y.j + 1) * 11 +
-        |   CASE WHEN x.i = 0 AND y.j = 0 THEN bump ELSE 0 END) % 256 AS v
-        |  FROM ids, range(0, 9) x(i), range(0, 8) y(j)),
-        |bits AS (SELECT a.media_id, a.y, a.x,
-        |    CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS bit
-        |  FROM px a JOIN px b
-        |    ON a.media_id = b.media_id AND b.y = a.y AND b.x = a.x + 1
-        |  WHERE a.x < 8),
-        |pairs AS (SELECT a.media_id AS id_a, b.media_id AS id_b,
-        |    CAST(sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) AS INT) AS hamming
-        |  FROM bits a JOIN bits b
-        |    ON a.y = b.y AND a.x = b.x AND a.media_id < b.media_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, hamming FROM pairs
-        |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-    "q80_token_shards" ->
-      """WITH q AS (SELECT doc_id,
-        |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS ntok
-        |  FROM documents),
-        |c AS (SELECT doc_id, ntok,
-        |        CAST(sum(ntok) OVER (ORDER BY doc_id) - ntok AS BIGINT) AS excl FROM q)
-        |SELECT doc_id, ntok, CAST(excl // 2000 AS BIGINT) AS shard_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q78_chunk_tokens" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |s AS (SELECT doc_id, tk, len(tk) AS n FROM t),
-        |c AS (SELECT doc_id, tk, n, unnest(range(0, n, 48)) AS start FROM s),
-        |o AS (SELECT doc_id, start,
-        |        list_slice(tk, start + 1, least(start + 64, n)) AS ck FROM c)
-        |SELECT doc_id, CAST(start AS BIGINT) AS start,
-        |  CAST(len(ck) AS BIGINT) AS n_tokens,
-        |  array_to_string(ck, ' ') AS chunk_text
-        |FROM o ORDER BY doc_id, start""".stripMargin,
-    "q68_dup_line_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE
-        |    WHEN doc_id % 4 = 0
-        |      THEN 'subscribe to our newsletter for updates' || chr(10) || text
-        |    WHEN doc_id % 7 = 2
-        |      THEN text || chr(10) || 'all rights reserved worldwide'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM d),
-        |l AS (SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-        |        i -> {'pos': i, 'line': ls[i]})) AS e
-        |      FROM l0),
-        |ln AS (SELECT doc_id, e.pos AS pos, trim(e.line) AS tl FROM l),
-        |dup AS (SELECT tl FROM ln WHERE length(tl) >= 1
-        |        GROUP BY tl HAVING min(doc_id) <> max(doc_id)),
-        |per AS (SELECT doc_id, count(*) AS dup_lines
-        |        FROM ln JOIN dup USING (tl) GROUP BY doc_id)
-        |SELECT l0.doc_id, CAST(len(l0.ls) AS BIGINT) AS n_lines,
-        |  CAST(coalesce(per.dup_lines, 0) AS BIGINT) AS dup_lines,
-        |  round(coalesce(per.dup_lines, 0) / len(l0.ls), 6) AS dup_line_frac
-        |FROM l0 LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q69_strip_dup_lines" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE
-        |    WHEN doc_id % 4 = 0
-        |      THEN 'subscribe to our newsletter for updates' || chr(10) || text
-        |    WHEN doc_id % 7 = 2
-        |      THEN text || chr(10) || 'all rights reserved worldwide'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM d),
-        |l AS (SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-        |        i -> {'pos': i, 'line': ls[i]})) AS e
-        |      FROM l0),
-        |ln AS (SELECT doc_id, e.pos AS pos, e.line AS line, trim(e.line) AS tl FROM l),
-        |dup AS (SELECT tl FROM ln WHERE length(tl) >= 1
-        |        GROUP BY tl HAVING min(doc_id) <> max(doc_id)),
-        |aff AS (SELECT DISTINCT doc_id FROM ln JOIN dup USING (tl)),
-        |kept AS (SELECT doc_id, pos, line FROM ln
-        |         WHERE doc_id IN (SELECT doc_id FROM aff)
-        |           AND tl NOT IN (SELECT tl FROM dup)),
-        |reb AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-        |          count(*) AS kept FROM kept GROUP BY doc_id)
-        |SELECT l0.doc_id, coalesce(reb.clean_text, '') AS clean_text,
-        |  CAST(len(l0.ls) - coalesce(reb.kept, 0) AS BIGINT) AS removed_lines
-        |FROM l0 JOIN aff USING (doc_id) LEFT JOIN reb USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q87_bpe_train" -> bpeTrainOracleSql(8),
-    "q90_cms_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM toks
-        |       WHERE term <> '' GROUP BY 1),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) // 30 AS mc FROM tf),
-        |hrow AS (SELECT unnest(range(4)) AS r),
-        |cells AS (
-        |  SELECT r, ('0x' || substr(md5(r::VARCHAR || ':' || term), 1, 15))::UBIGINT
-        |      % 1024 AS bucket,
-        |    CAST(sum(cnt) AS BIGINT) AS c
-        |  FROM tf CROSS JOIN hrow GROUP BY 1, 2),
-        |est AS (
-        |  SELECT tf.term, tf.cnt, min(c.c) AS est
-        |  FROM tf CROSS JOIN hrow r
-        |  JOIN cells c ON c.r = r.r
-        |    AND c.bucket = ('0x' || substr(md5(r.r::VARCHAR || ':' || tf.term), 1, 15))::UBIGINT % 1024
-        |  GROUP BY 1, 2)
-        |SELECT term, cnt, CAST(est AS BIGINT) AS est
-        |FROM est, tot WHERE est >= tot.mc ORDER BY term""".stripMargin,
-    "q91_importance_weights" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents),
-        |bg AS (
-        |  SELECT doc_id, source,
-        |    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS f
-        |  FROM toks WHERE len(t) >= 2),
-        |fb AS (SELECT doc_id, source,
-        |    ('0x' || substr(md5(f), 1, 15))::UBIGINT % 4096 AS bucket FROM bg),
-        |rc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS cr FROM fb GROUP BY 1),
-        |tc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS ct FROM fb
-        |       WHERE source = 'src0' GROUP BY 1),
-        |j AS (SELECT coalesce(rc.bucket, tc.bucket) AS bucket,
-        |        coalesce(cr, 0) AS cr, coalesce(ct, 0) AS ct
-        |      FROM rc FULL OUTER JOIN tc ON rc.bucket = tc.bucket),
-        |tots AS (SELECT CAST(sum(ct) AS BIGINT) AS st, CAST(sum(cr) AS BIGINT) AS sr
-        |         FROM j),
-        |w AS (SELECT bucket,
-        |        ln(ct + 0.5) - ln(st + 2048.0) - ln(cr + 0.5) + ln(sr + 2048.0) AS w
-        |      FROM j, tots),
-        |db AS (SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS cnt
-        |       FROM fb GROUP BY 1, 2),
-        |sc AS (SELECT db.doc_id, db.bucket, db.cnt * w.w AS c
-        |       FROM db JOIN w USING (bucket))
-        |SELECT doc_id,
-        |  round(list_reduce(list(c ORDER BY bucket), (a, b) -> a + b), 6) AS logw
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q92_hybrid_rrf" ->
-      """WITH t0 AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents),
-        |st AS (SELECT count(*) AS n, avg(len(toks)) AS avgdl FROM t0),
-        |t AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t0),
-        |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t
-        |       WHERE term IN ('join', 'merge', 'filter') GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |c AS (SELECT tf.doc_id, tf.term,
-        |        ln(1.0 + (st.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-        |          * tf.tf * 2.2
-        |          / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl)) AS c
-        |      FROM tf JOIN dfreq USING (term) CROSS JOIN st),
-        |bm AS (SELECT doc_id,
-        |         list_reduce(list(c ORDER BY term), (a, b) -> a + b) AS bm
-        |       FROM c GROUP BY doc_id),
-        |lex AS (SELECT doc_id, CAST(row_number()
-        |          OVER (ORDER BY bm DESC, doc_id) AS INTEGER) AS rank_lex
-        |        FROM bm QUALIFY rank_lex <= 50),
-        |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |       WHERE vec_id = 0),
-        |sem0 AS (SELECT vec_id AS doc_id,
-        |           list_cosine_similarity(CAST(embedding AS DOUBLE[]), qv.v) AS cs
-        |         FROM embeddings, qv),
-        |sem AS (SELECT doc_id, CAST(row_number()
-        |          OVER (ORDER BY cs DESC, doc_id) AS INTEGER) AS rank_sem
-        |        FROM sem0 QUALIFY rank_sem <= 50),
-        |f AS (SELECT coalesce(lex.doc_id, sem.doc_id) AS doc_id, rank_lex, rank_sem,
-        |        coalesce(1.0 / (60 + rank_lex), 0) + coalesce(1.0 / (60 + rank_sem), 0)
-        |          AS rrf
-        |      FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id)
-        |SELECT doc_id, rank_lex, rank_sem, round(rrf, 6) AS rrf,
-        |  CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INTEGER) AS rank
-        |FROM f QUALIFY rank <= 20 ORDER BY rank""".stripMargin,
-    "q96_lr_train" -> lrTrainOracleSql(rounds = 3, buckets = 256, lr = 0.5),
-    "q98_kmeans_train" -> kmeansOracleSql(k = 4, rounds = 3, dims = 64),
-    "q101_pagerank" -> pageRankOracleSql(rounds = 3, damping = 0.85),
-    "q189_hits" -> hitsOracleSql(rounds = 3),
-    "q105_label_prop" -> lpaOracleSql(rounds = 4),
-    "q110_trustrank" -> pprOracleSql(rounds = 3, damping = 0.85),
-    "q115_volume_anomalies" ->
-      """WITH d AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        |             event_type, count(*) AS n
-        |           FROM events GROUP BY 1, 2),
-        |w AS (SELECT day, event_type, n,
-        |        list_sort(list(n) OVER (PARTITION BY event_type ORDER BY day
-        |                  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)) AS arr
-        |      FROM d),
-        |m AS (SELECT day, event_type, n, arr[(len(arr) + 1) // 2] AS med FROM w)
-        |SELECT day, event_type, CAST(n AS BIGINT) AS n,
-        |  CAST(med AS BIGINT) AS med,
-        |  round(CAST(n AS DOUBLE) / med, 6) AS ratio,
-        |  (n > 2.0 * med OR n < 0.5 * med) AS is_anomaly
-        |FROM m ORDER BY event_type, day""".stripMargin,
-    "q114_transitions" ->
-      """WITH p AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |c AS (SELECT prev AS from_type, event_type AS to_type, count(*) AS n
-        |      FROM p WHERE prev IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, sum(n) AS tot FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, CAST(n AS BIGINT) AS n,
-        |  round(CAST(n AS DOUBLE) / tot, 6) AS p
-        |FROM c JOIN t USING (from_type)
-        |ORDER BY from_type, to_type""".stripMargin,
-    "q111_hll_rolling" ->
-      s"""WITH e AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
-         |           FROM events),
-         |h AS (SELECT day,
-         |        ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT AS hv
-         |      FROM e),
-         |hb AS (SELECT day, hv & 255 AS bucket, hv >> 8 AS v FROM h),
-         |r AS (SELECT day, bucket, max(${hllRhoSql("v", 52)}) AS M
-         |      FROM hb GROUP BY 1, 2),
-         |c AS (SELECT day + CAST(i AS INTEGER) AS day, bucket, M
-         |      FROM r CROSS JOIN (SELECT unnest(range(0, 7)) AS i)),
-         |mg AS (SELECT day, bucket, max(M) AS M FROM c GROUP BY 1, 2),
-         |pd AS (SELECT DISTINCT day FROM r),
-         |z AS (SELECT mg.day,
-         |        list_reduce(list(power(2.0, -M) ORDER BY bucket), (a, b) -> a + b)
-         |          + (256.0 - count(*)) AS z,
-         |        256.0 - count(*) AS v0
-         |      FROM mg JOIN pd ON mg.day = pd.day GROUP BY 1),
-         |x AS (SELECT day,
-         |        CASE WHEN (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z <= 640.0
-         |               AND v0 > 0.0
-         |          THEN 256.0 * ln(256.0 / v0)
-         |          ELSE (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z END AS est
-         |      FROM z)
-         |SELECT day, round(est, 6) AS est FROM x ORDER BY day""".stripMargin,
-    "q112_cohort_retention" ->
-      """WITH fs AS (SELECT user_id, date_trunc('week', min(ts)) AS cohort
-        |           FROM events GROUP BY 1),
-        |act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events),
-        |j AS (SELECT a.user_id, fs.cohort, a.week,
-        |        CAST(date_diff('day', fs.cohort, a.week) // 7 AS BIGINT) AS off
-        |      FROM act a JOIN fs USING (user_id)),
-        |cnt AS (SELECT cohort, off, count(*) AS n_active FROM j GROUP BY 1, 2),
-        |sz AS (SELECT cohort, count(*) AS n_cohort FROM fs GROUP BY 1)
-        |SELECT CAST(cohort AS DATE) AS cohort_week, off AS week_offset,
-        |  CAST(n_active AS BIGINT) AS n_active,
-        |  CAST(n_cohort AS BIGINT) AS n_cohort,
-        |  round(CAST(n_active AS DOUBLE) / n_cohort, 6) AS pct
-        |FROM cnt JOIN sz USING (cohort)
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-    "q113_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-        |            WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-        |       JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-        |       JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1)
-        |SELECT * FROM (VALUES
-        |  (0, 'view', (SELECT count(*) FROM s1)),
-        |  (1, 'click', (SELECT count(*) FROM s2)),
-        |  (2, 'purchase', (SELECT count(*) FROM s3))) AS t(step_idx, step, n_users)
-        |ORDER BY step_idx""".stripMargin,
-    "q109_fuzzy_ingest" ->
-      """WITH hist AS (SELECT c_custkey, c_name FROM customer WHERE c_custkey % 2 = 0),
-        |inc AS (SELECT c_custkey, c_name FROM customer WHERE c_custkey % 2 = 1)
-        |SELECT i.c_custkey AS inc_id, h.c_custkey AS hist_id,
-        |  levenshtein(i.c_name, h.c_name) AS dist
-        |FROM inc i CROSS JOIN hist h
-        |WHERE levenshtein(i.c_name, h.c_name) <= 1
-        |ORDER BY inc_id, hist_id""".stripMargin,
-    "q108_edit_distance" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |  levenshtein(a.c_name, b.c_name) AS dist
-        |FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q164_reconcile_totals" ->
-      """WITH p AS (SELECT o_orderkey AS pk,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS pc FROM orders),
-        |c AS (SELECT l_orderkey AS pk,
-        |        CAST(sum(CAST(round(((l_extendedprice *
-        |          (CAST(1.0 AS DOUBLE) - l_discount)) *
-        |          (CAST(1.0 AS DOUBLE) + l_tax)) * 100) AS BIGINT))
-        |          AS BIGINT) AS s
-        |      FROM lineitem GROUP BY 1),
-        |j AS (SELECT p.pk, c.s IS NULL AS orph,
-        |        CASE WHEN c.s IS NULL THEN 0 ELSE abs(p.pc - c.s) END AS dev
-        |      FROM p LEFT JOIN c USING (pk))
-        |SELECT CAST(count(*) AS BIGINT) AS n_parents,
-        |  CAST(sum(CASE WHEN orph THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_orphans,
-        |  CAST(sum(CASE WHEN NOT orph AND dev > 1 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_mismatched,
-        |  CAST(coalesce(max(dev), 0) AS BIGINT) AS max_dev_cents,
-        |  CAST(coalesce(sum(dev), 0) AS BIGINT) AS total_dev_cents
-        |FROM j""".stripMargin,
-    "q165_stickiness" ->
-      """WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
-        |    user_id AS u FROM events),
-        |dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau
-        |        FROM du GROUP BY 1),
-        |f AS (SELECT DISTINCT day + i AS target, u FROM du
-        |      CROSS JOIN (SELECT unnest(range(0, 7)) AS i)),
-        |wau AS (SELECT target, CAST(count(*) AS BIGINT) AS wau
-        |        FROM f GROUP BY 1)
-        |SELECT dau.day AS day, dau.dau, wau.wau,
-        |  round(CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE), 6)
-        |    AS stickiness
-        |FROM dau JOIN wau ON dau.day = wau.target ORDER BY day""".stripMargin,
-    "q166_ewma" ->
-      """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1, 2),
-        |l AS (SELECT event_type, list(day ORDER BY day) AS ds,
-        |    list(CAST(cnt AS DOUBLE) ORDER BY day) AS xs FROM d GROUP BY 1)
-        |SELECT event_type, unnest(ds) AS day, unnest(xs) AS v,
-        |  unnest(list_transform(generate_series(1, len(xs)),
-        |    i -> round(list_reduce(xs[1:i],
-        |      (a, b) -> CAST(0.3 AS DOUBLE) * b + CAST(0.7 AS DOUBLE) * a),
-        |      6))) AS ewma
-        |FROM l ORDER BY event_type, day""".stripMargin,
-    "q167_cusum" ->
-      """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1, 2),
-        |y AS (SELECT event_type, day, cnt,
-        |    CAST(sum(cnt - 70) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS yy
-        |  FROM d)
-        |SELECT event_type, day, cnt,
-        |  CAST(yy - least(min(yy) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-        |    AS BIGINT) AS cusum,
-        |  (yy - least(min(yy) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)) > 30
-        |    AS flagged
-        |FROM y ORDER BY event_type, day""".stripMargin,
-    "q168_compaction_plan" ->
-      """WITH c AS (SELECT doc_id, n_chars,
-        |    CAST(sum(n_chars) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      - n_chars AS excl
-        |  FROM documents)
-        |SELECT excl // 10000 AS bin, CAST(count(*) AS BIGINT) AS n_files,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_bytes,
-        |  min(doc_id) AS first_file, max(doc_id) AS last_file
-        |FROM c GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q169_pareto_frontier" ->
-      """WITH r AS (SELECT p_partkey, CAST(p_size AS DOUBLE) AS p_size,
-        |    p_retailprice FROM part),
-        |m AS (SELECT p_partkey, p_size, p_retailprice,
-        |    max(p_retailprice) OVER (ORDER BY p_size DESC,
-        |      p_retailprice DESC, p_partkey ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM r)
-        |SELECT p_partkey, p_size, p_retailprice FROM m
-        |WHERE pm IS NULL OR p_retailprice > pm ORDER BY p_partkey""".stripMargin,
-    "q170_cohens_kappa" ->
-      """WITH r AS (SELECT
-        |    ((CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END) >= 56)
-        |      AS a,
-        |    (len(list_distinct(string_split_regex(trim(text), '\s+'))) >= 25)
-        |      AS b
-        |  FROM documents),
-        |cells AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c
-        |          FROM r GROUP BY 1, 2),
-        |ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ca FROM cells GROUP BY 1),
-        |mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb FROM cells GROUP BY 1),
-        |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
-        |dg AS (SELECT coalesce(CAST(sum(c) AS BIGINT), 0) AS diag
-        |       FROM cells WHERE a = b),
-        |pe AS (SELECT list_reduce(
-        |    list(CAST(ca AS DOUBLE) * CAST(cb AS DOUBLE)
-        |      ORDER BY CAST(ma.a AS VARCHAR)), (x, y) -> x + y) AS pn
-        |  FROM ma JOIN mb ON ma.a = mb.b)
-        |SELECT n, round(CAST(diag AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-        |  round(pn / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pe,
-        |  round(CASE WHEN pn / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) = 1.0
-        |    THEN NULL
-        |    ELSE (CAST(diag AS DOUBLE) / CAST(n AS DOUBLE)
-        |        - pn / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-        |      / (CAST(1.0 AS DOUBLE)
-        |        - pn / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) END, 6)
-        |    AS kappa
-        |FROM nn, dg, pe""".stripMargin,
-    "q171_effective_sample_size" ->
-      """WITH w AS (SELECT source,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
-        |      AS w
-        |  FROM documents),
-        |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(w) AS BIGINT) AS sum_w,
-        |    CAST(sum(w * w) AS BIGINT) AS sum_w2
-        |  FROM w GROUP BY 1)
-        |SELECT source, n, sum_w, sum_w2,
-        |  round((CAST(sum_w AS DOUBLE) * CAST(sum_w AS DOUBLE))
-        |    / CAST(sum_w2 AS DOUBLE), 6) AS ess,
-        |  round(((CAST(sum_w AS DOUBLE) * CAST(sum_w AS DOUBLE))
-        |    / CAST(sum_w2 AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS ess_ratio
-        |FROM g ORDER BY source""".stripMargin,
-    "q172_confusion_matrix" ->
-      s"""WITH $langPredSelectSql,
-         |cells AS (SELECT l, p, CAST(count(*) AS BIGINT) AS c
-         |          FROM pr GROUP BY 1, 2),
-         |cls AS (SELECT l AS class FROM cells
-         |        UNION SELECT p AS class FROM cells),
-         |tpx AS (SELECT l AS class, CAST(sum(c) AS BIGINT) AS tp
-         |        FROM cells WHERE l = p GROUP BY 1),
-         |pt AS (SELECT p AS class, CAST(sum(c) AS BIGINT) AS pt
-         |       FROM cells GROUP BY 1),
-         |lt AS (SELECT l AS class, CAST(sum(c) AS BIGINT) AS lt
-         |       FROM cells GROUP BY 1),
-         |j AS (SELECT cls.class AS class, coalesce(tpx.tp, 0) AS tp,
-         |        coalesce(pt.pt, 0) - coalesce(tpx.tp, 0) AS fp,
-         |        coalesce(lt.lt, 0) - coalesce(tpx.tp, 0) AS fn
-         |      FROM cls LEFT JOIN tpx USING (class)
-         |        LEFT JOIN pt USING (class) LEFT JOIN lt USING (class)),
-         |f AS (SELECT class, tp, fp, fn, tp + fn AS support,
-         |    CASE WHEN tp + fp = 0 THEN NULL
-         |      ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS p,
-         |    CASE WHEN tp + fn = 0 THEN NULL
-         |      ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS r
-         |  FROM j)
-         |SELECT class, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-         |  CAST(fn AS BIGINT) AS fn, CAST(support AS BIGINT) AS support,
-         |  round(p, 6) AS prec, round(r, 6) AS rec,
-         |  round(CASE WHEN p IS NULL OR r IS NULL OR p + r = 0 THEN NULL
-         |    ELSE (CAST(2.0 AS DOUBLE) * p * r) / (p + r) END, 6) AS f1
-         |FROM f ORDER BY class""".stripMargin,
-    "q173_auc" ->
-      s"""WITH q AS (SELECT $qualitySql AS s, (lang = 'en') AS lbl
-         |  FROM documents),
-         |g AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt,
-         |    CAST(sum(CASE WHEN lbl THEN 1 ELSE 0 END) AS BIGINT) AS pos
-         |  FROM q GROUP BY 1),
-         |c AS (SELECT s, cnt, pos,
-         |    CAST(coalesce(sum(cnt) OVER (ORDER BY s ASC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS cb
-         |  FROM g),
-         |t AS (SELECT CAST(sum(pos * (2 * cb + cnt + 1)) AS BIGINT) AS s2,
-         |    CAST(sum(pos) AS BIGINT) AS np,
-         |    CAST(sum(cnt - pos) AS BIGINT) AS nn
-         |  FROM c)
-         |SELECT np + nn AS n, np AS n_pos, nn AS n_neg,
-         |  round(CASE WHEN np = 0 OR nn = 0 THEN NULL ELSE
-         |    (CAST(s2 AS DOUBLE) - CAST(np * (np + 1) AS DOUBLE))
-         |    / CAST(2 * np * nn AS DOUBLE) END, 6) AS auc
-         |FROM t""".stripMargin,
-    "q174_calibration" ->
-      s"""WITH q AS (SELECT doc_id, $qualitySql AS s, (lang = 'en') AS lbl
-         |  FROM documents),
-         |b AS (SELECT doc_id, s, lbl,
-         |    least(CAST(floor(s * CAST(10.0 AS DOUBLE)) AS BIGINT), 9) AS bin
-         |  FROM q),
-         |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN lbl THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-         |    list_reduce(list(s ORDER BY doc_id), (a, c) -> a + c) AS ssum
-         |  FROM b GROUP BY 1),
-         |nt AS (SELECT CAST(sum(n) AS BIGINT) AS ntot FROM g),
-         |cur AS (SELECT bin, n, pos, ssum / CAST(n AS DOUBLE) AS conf,
-         |    CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) AS acc FROM g),
-         |e AS (SELECT list_reduce(
-         |    list((CAST(n AS DOUBLE) / CAST(ntot AS DOUBLE)) * abs(acc - conf)
-         |      ORDER BY bin), (a, c) -> a + c) AS ece
-         |  FROM cur, nt)
-         |SELECT bin, n, pos, round(conf, 6) AS conf, round(acc, 6) AS acc,
-         |  round(abs(acc - conf), 6) AS gap, round(e.ece, 6) AS ece
-         |FROM cur, e ORDER BY bin""".stripMargin,
-    "q182_dow_index" ->
-      """WITH b AS (SELECT
-        |    CAST(((epoch_us(ts) // 86400000000 + 3) % 7 + 1) AS INT)
-        |      AS dow,
-        |    event_id AS id, value AS v FROM events),
-        |pd AS (SELECT dow, CAST(count(*) AS BIGINT) AS n,
-        |    list_reduce(list(v ORDER BY id), (a, c) -> a + c) AS s
-        |  FROM b GROUP BY 1),
-        |tot AS (SELECT list_reduce(list(s ORDER BY dow), (a, c) -> a + c)
-        |      AS st,
-        |    CAST(sum(n) AS BIGINT) AS nt FROM pd),
-        |gm AS (SELECT st / CAST(nt AS DOUBLE) AS grand FROM tot)
-        |SELECT dow, n, round(s / CAST(n AS DOUBLE), 6) AS mean,
-        |  round((s / CAST(n AS DOUBLE)) / grand, 6) AS idx
-        |FROM pd, gm ORDER BY dow""".stripMargin,
-    "q228_centroid_confusion" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-        |  FROM embeddings),
-        |m AS (SELECT label, t.i, CAST(avg(e.v[t.i]) AS FLOAT) AS mv
-        |  FROM e, range(1, 65) AS t(i) GROUP BY label, t.i),
-        |cents AS (SELECT label AS cl,
-        |    CAST(list(mv ORDER BY i) AS DOUBLE[]) AS cvec
-        |  FROM m GROUP BY label),
-        |a AS (SELECT vec_id, label, cl FROM (
-        |  SELECT e.vec_id, e.label, cents.cl,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_dot_product(e.v, cents.cvec) /
-        |        sqrt(list_dot_product(cents.cvec, cents.cvec))
-        |        DESC, cents.cl) AS rn
-        |  FROM e, cents) WHERE rn = 1)
-        |SELECT CAST(label AS BIGINT) AS label, CAST(cl AS BIGINT)
-        |    AS predicted,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM a GROUP BY 1, 2 ORDER BY label, predicted""".stripMargin,
-    "q229_spearman" -> spearmanOracleSql,
-    "q230_bfs_levels" -> bfsLevelsOracleSql(maxHops = 3),
-    "q231_tpch_q4" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q232_tpch_q13" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM (SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderstatus <> 'F'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q233_tpch_q17" ->
-      """WITH li AS (
-        |  SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-        |    CAST(round(l_extendedprice * 100.0) AS BIGINT) AS price_cents
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_brand = 'Brand#4' AND p_size <= 10),
-        |stats AS (
-        |  SELECT l_partkey AS sp_partkey, CAST(count(*) AS BIGINT) AS p_cnt,
-        |    sum(qty) AS p_sum_qty
-        |  FROM li GROUP BY 1)
-        |SELECT CAST(sum(price_cents) AS BIGINT) AS total_cents,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM li JOIN stats ON l_partkey = sp_partkey
-        |WHERE 2 * qty * p_cnt < p_sum_qty""".stripMargin,
-    "q234_tpch_q21" ->
-      """WITH late AS (
-        |  SELECT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey
-        |      AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM late l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey
-        |      AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 20""".stripMargin,
-    "q235_tpch_q22" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_mktsegment, c_acctbal,
-        |    CAST(round(c_acctbal * 100.0) AS BIGINT) AS cents
-        |  FROM customer),
-        |pos AS (
-        |  SELECT CAST(sum(cents) AS BIGINT) AS pos_sum,
-        |    CAST(count(*) AS BIGINT) AS pos_cnt
-        |  FROM cust WHERE c_acctbal > 0.0)
-        |SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS numcust,
-        |  CAST(sum(cents) AS BIGINT) AS totacctbal_cents
-        |FROM cust CROSS JOIN pos
-        |WHERE cents * pos_cnt > pos_sum
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q237_pivot_crosstab" ->
-      """SELECT CAST(((epoch_us(ts) // 86400000000 + 3) % 7 + 1) AS INT)
-        |    AS dow,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS click,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS error,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS purchase,
-        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS signup,
-        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS view,
-        |  CAST(sum(CASE WHEN event_type IN ('click', 'error', 'purchase',
-        |    'signup', 'view') THEN 1 ELSE 0 END) AS BIGINT) AS total
-        |FROM events GROUP BY 1 ORDER BY dow""".stripMargin,
-    "q238_shortest_paths" -> shortestPathsOracleSql(rounds = 3),
-    "q239_unpivot_melt" ->
-      """WITH m AS (
-        |  SELECT 'l_quantity' AS variable,
-        |    CAST(round(l_quantity * 100.0) AS BIGINT) AS cents FROM lineitem
-        |  UNION ALL SELECT 'l_extendedprice',
-        |    CAST(round(l_extendedprice * 100.0) AS BIGINT) FROM lineitem
-        |  UNION ALL SELECT 'l_discount',
-        |    CAST(round(l_discount * 100.0) AS BIGINT) FROM lineitem
-        |  UNION ALL SELECT 'l_tax',
-        |    CAST(round(l_tax * 100.0) AS BIGINT) FROM lineitem)
-        |SELECT variable, CAST(count(*) AS BIGINT) AS n,
-        |  min(cents) AS min_cents, max(cents) AS max_cents,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM m GROUP BY variable ORDER BY variable""".stripMargin,
-    "q240_rbo" -> rboOracleSql(p = 0.9, k = 50),
-    "q246_silhouette" -> silhouetteOracleSql(k = 4, rounds = 3, dims = 64),
-    "q253_slice_accuracy" -> sliceAccuracyOracleSql(z = 1.96),
-    "q264_langid_margin" -> langidMarginOracleSql,
-    "q269_er_match_scores" ->
-      s"""WITH $linkageScoredCtes
-         |SELECT CAST(floor(score_micro / 2000000.0) AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN a_ckey = b_ckey THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_true
-         |FROM sc GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q289_dedup_budget" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id,
-         |    text || ' extra token and more extra' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)),
-         |    '\\s+') AS toks FROM u)),
-         |e0 AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-         |    >= 0.55),
-         |edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s),
-         |q AS (SELECT doc_id, ${qualitySql.replace("\n", "\n  ")} AS quality,
-         |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-         |      ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT)
-         |      AS ntok
-         |  FROM u),
-         |win AS (SELECT comp.id, row_number() OVER (PARTITION BY comp.c
-         |          ORDER BY q.quality DESC, comp.id) AS rk
-         |        FROM comp JOIN q ON q.doc_id = comp.id),
-         |keep AS (SELECT doc_id FROM u
-         |  WHERE doc_id NOT IN (SELECT id FROM comp)
-         |     OR doc_id IN (SELECT id FROM win WHERE rk = 1)),
-         |c AS (SELECT q.doc_id, q.quality, q.ntok,
-         |    sum(q.ntok) OVER (ORDER BY q.quality DESC, q.doc_id) AS cum_tok
-         |  FROM q JOIN keep ON keep.doc_id = q.doc_id)
-         |SELECT doc_id, quality, ntok, CAST(cum_tok AS BIGINT) AS cum_tok
-         |FROM c WHERE cum_tok <= 40000 ORDER BY doc_id""".stripMargin,
-    "q288_cc_merge" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id,
-         |    text || ' extra token and more extra' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)),
-         |    '\\s+') AS toks FROM u)),
-         |e0 AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-         |    >= 0.55),
-         |edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s)
-         |SELECT id, c AS component FROM comp ORDER BY id""".stripMargin,
-    "q287_dedup_cascade" ->
-      s"""WITH base AS (SELECT doc_id, text,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |  FROM documents),
-         |b0 AS (
-         |  SELECT doc_id + 100000 AS id, text FROM documents
-         |  WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text || ' extra token' FROM documents
-         |  WHERE doc_id % 7 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 300000,
-         |    array_to_string(toks[1:greatest(len(toks) * 3 // 5, 1)], ' ')
-         |  FROM base WHERE doc_id % 13 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 400000,
-         |    array_to_string(toks[1:least(10, len(toks))], ' ')
-         |  FROM base WHERE doc_id % 11 = 0),
-         |s1 AS (SELECT id, text FROM b0
-         |  WHERE text NOT IN (SELECT text FROM documents)),
-         |th AS (SELECT doc_id AS id, text FROM documents
-         |  UNION ALL SELECT id, text FROM s1),
-         |tok AS (SELECT id, ${h60Sql("t")}::BIGINT AS h
-         |  FROM (SELECT id, unnest(string_split_regex(trim(lower(text)),
-         |    '\\s+')) AS t FROM th)),
-         |sig AS (SELECT id, $simhashBitsSql AS s FROM tok GROUP BY id),
-         |hd AS (SELECT a.id FROM sig a JOIN sig h
-         |  ON h.id < 100000 AND a.id >= 100000
-         |    AND bit_count(xor(a.s, h.s)) <= 3
-         |  GROUP BY a.id),
-         |s2 AS (SELECT * FROM s1 WHERE id NOT IN (SELECT id FROM hd)),
-         |tj AS (SELECT doc_id AS id, toks FROM base
-         |  UNION ALL SELECT id,
-         |    string_split_regex(trim(lower(text)), '\\s+') FROM s2),
-         |sh AS (SELECT id, $shingle3Sql AS sh FROM
-         |  (SELECT id, toks FROM tj)),
-         |jd AS (SELECT a.id FROM sh a JOIN sh h
-         |  ON h.id < 100000 AND a.id >= 100000
-         |    AND len(list_intersect(a.sh, h.sh)) * 1.0 /
-         |      (len(a.sh) + len(h.sh) - len(list_intersect(a.sh, h.sh)))
-         |      >= 0.55
-         |  GROUP BY a.id),
-         |s3 AS (SELECT * FROM s2 WHERE id NOT IN (SELECT id FROM jd)),
-         |n AS (SELECT (SELECT count(*) FROM b0) AS n0,
-         |    (SELECT count(*) FROM s1) AS n1,
-         |    (SELECT count(*) FROM s2) AS n2,
-         |    (SELECT count(*) FROM s3) AS n3)
-         |SELECT stage, CAST(n_in AS BIGINT) AS n_in,
-         |  CAST(n_dropped AS BIGINT) AS n_dropped,
-         |  CAST(n_out AS BIGINT) AS n_out
-         |FROM (
-         |  SELECT '1_exact' AS stage, n0 AS n_in, n0 - n1 AS n_dropped,
-         |    n1 AS n_out FROM n
-         |  UNION ALL SELECT '2_hamming', n1, n1 - n2, n2 FROM n
-         |  UNION ALL SELECT '3_minhash', n2, n2 - n3, n3 FROM n)
-         |ORDER BY stage""".stripMargin,
-    "q286_quality_rules" ->
-      """WITH c AS (SELECT source,
-        |    length(text) AS chars,
-        |    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS letters,
-        |    length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS puncts,
-        |    len(regexp_extract_all(text,
-        |      '(?i)\b(the|and|of|to|a|in|is|it)\b')) AS stops,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS toks
-        |  FROM documents),
-        |r AS (SELECT source,
-        |    (toks BETWEEN 20 AND 2000) AS r1,
-        |    (letters * 10 >= chars * 6) AS r2,
-        |    (stops >= 2) AS r3,
-        |    (puncts * 10 <= chars) AS r4
-        |  FROM c)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN r1 AND r2 AND r3 AND r4 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_pass,
-        |  CAST(sum(CASE WHEN NOT r1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS fail_len,
-        |  CAST(sum(CASE WHEN NOT r2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS fail_alpha,
-        |  CAST(sum(CASE WHEN NOT r3 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS fail_stop,
-        |  CAST(sum(CASE WHEN NOT r4 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS fail_punct
-        |FROM r GROUP BY source ORDER BY source""".stripMargin,
-    "q285_split_leakage" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)),
-         |    '\\s+') AS toks FROM u)),
-         |p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-         |    >= 0.55),
-         |f AS (SELECT doc_id,
-         |    CASE WHEN b < 800000 THEN 0 WHEN b < 900000 THEN 1 ELSE 2 END
-         |      AS fold
-         |  FROM (SELECT doc_id,
-         |      ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT
-         |        % 1000000 AS b
-         |    FROM u))
-         |SELECT least(fa.fold, fb.fold) AS fold_lo,
-         |  greatest(fa.fold, fb.fold) AS fold_hi,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM p JOIN f fa ON fa.doc_id = p.id_a
-         |JOIN f fb ON fb.doc_id = p.id_b
-         |GROUP BY 1, 2 ORDER BY fold_lo, fold_hi""".stripMargin,
-    "q283_media_audit" ->
-      """WITH c AS (SELECT
-        |    CASE WHEN p_partkey % 13 = 0 THEN 'image/png'
-        |         WHEN p_partkey % 17 = 0 THEN 'application/octet-stream'
-        |         ELSE 'image/png' END AS mime,
-        |    CASE WHEN p_partkey % 13 = 0 OR p_partkey % 17 = 0
-        |         THEN false ELSE true END AS decodable
-        |  FROM part WHERE p_partkey <= 600)
-        |SELECT mime, decodable, CAST(count(*) AS BIGINT) AS n
-        |FROM c GROUP BY 1, 2 ORDER BY mime, decodable""".stripMargin,
-    "q284_token_dropout" ->
-      """WITH t AS (SELECT doc_id, source,
-        |    string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents),
-        |p AS (SELECT doc_id, source, unnest(toks) AS w,
-        |    generate_subscripts(toks, 1) AS i FROM t),
-        |kept AS (SELECT doc_id, source, w, i FROM p
-        |  WHERE ('0x' || substr(md5(doc_id::VARCHAR || ':' || i::VARCHAR
-        |    || ':7'), 1, 15))::BIGINT % 10 <> 0),
-        |agg AS (SELECT t.doc_id, t.source, len(t.toks) AS n_tokens,
-        |    coalesce(k.n_kept, 0) AS n_kept, coalesce(k.aug, '') AS aug
-        |  FROM t LEFT JOIN (
-        |    SELECT doc_id, count(*) AS n_kept,
-        |      string_agg(w, ' ' ORDER BY i) AS aug
-        |    FROM kept GROUP BY doc_id) k ON k.doc_id = t.doc_id)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS tokens_before,
-        |  CAST(sum(n_kept) AS BIGINT) AS tokens_after,
-        |  CAST(sum(('0x' || substr(md5(aug), 1, 15))::BIGINT
-        |    % 1000000000000) AS BIGINT) AS checksum,
-        |  round(CAST(sum(n_tokens) - sum(n_kept) AS DOUBLE)
-        |    / CAST(sum(n_tokens) AS DOUBLE), 6) AS drop_frac
-        |FROM agg GROUP BY source ORDER BY source""".stripMargin,
-    "q282_substring_search" ->
-      """SELECT d.doc_id, n.needle
-        |FROM documents d CROSS JOIN (VALUES ('merge batch'), ('scan slow'),
-        |  ('tab'), ('zzqx')) n(needle)
-        |WHERE contains(d.text, n.needle)
-        |ORDER BY n.needle, d.doc_id""".stripMargin,
-    "q281_scd2_apply" ->
-      """WITH f AS (SELECT user_id, ts, event_id, event_type,
-        |        CASE WHEN lag(event_type) OVER w IS NULL
-        |               OR lag(event_type) OVER w <> event_type
-        |             THEN 1 ELSE 0 END AS chg
-        |      FROM events WHERE ts < TIMESTAMP '2024-01-21 00:00:00'
-        |      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |r AS (SELECT user_id, ts, event_type,
-        |        sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-        |      FROM f),
-        |g AS (SELECT user_id, run, min(ts) AS valid_from,
-        |        min(event_type) AS event_type
-        |      FROM r GROUP BY 1, 2),
-        |dim AS (SELECT user_id, event_type, valid_from,
-        |        lead(valid_from) OVER (PARTITION BY user_id
-        |          ORDER BY valid_from, run) AS valid_to
-        |      FROM g),
-        |bb AS (SELECT user_id, event_type AS nv, ts AS nt FROM (
-        |    SELECT user_id, event_type, ts, row_number() OVER (
-        |        PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM events WHERE ts >= TIMESTAMP '2024-01-21 00:00:00')
-        |  WHERE rn = 1),
-        |cur AS (SELECT * FROM dim WHERE valid_to IS NULL),
-        |hist AS (SELECT user_id, event_type, valid_from, valid_to,
-        |    false AS is_current FROM dim WHERE valid_to IS NOT NULL),
-        |j AS (SELECT coalesce(c.user_id, b.user_id) AS user_id,
-        |    c.event_type, c.valid_from, b.nv, b.nt
-        |  FROM cur c FULL OUTER JOIN bb b ON c.user_id = b.user_id),
-        |keepc AS (SELECT user_id, event_type, valid_from,
-        |    CAST(NULL AS TIMESTAMP) AS valid_to, true AS is_current
-        |  FROM j WHERE event_type IS NOT NULL AND (nt IS NULL
-        |    OR nv IS NOT DISTINCT FROM event_type OR nt <= valid_from)),
-        |chg2 AS (SELECT * FROM j WHERE nt IS NOT NULL
-        |  AND (event_type IS NULL
-        |       OR (nv IS DISTINCT FROM event_type AND nt > valid_from))),
-        |closed AS (SELECT user_id, event_type, valid_from, nt AS valid_to,
-        |    false AS is_current FROM chg2 WHERE event_type IS NOT NULL),
-        |opened AS (SELECT user_id, nv AS event_type, nt AS valid_from,
-        |    CAST(NULL AS TIMESTAMP) AS valid_to, true AS is_current
-        |  FROM chg2),
-        |allr AS (SELECT * FROM hist UNION ALL SELECT * FROM keepc
-        |  UNION ALL SELECT * FROM closed UNION ALL SELECT * FROM opened)
-        |SELECT user_id, event_type,
-        |  CAST(valid_from AS VARCHAR) AS valid_from,
-        |  CAST(valid_to AS VARCHAR) AS valid_to, is_current
-        |FROM allr ORDER BY user_id, valid_from, event_type""".stripMargin,
-    "q280_bloom_join" ->
-      """SELECT l_orderkey AS okey,
-        |  CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount))
-        |    * 100.0) AS BIGINT)) AS BIGINT) AS rev_cents,
-        |  CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
-        |GROUP BY 1 ORDER BY okey""".stripMargin,
-    "q279_er_index" -> {
-      def fz(f: Linkage.FieldSpec): String =
-        s"""CASE WHEN ui.${f.column} = uh.${f.column} THEN ${f.wExactMicro}
-           |      WHEN jaro_winkler_similarity(ui.${f.column}, uh.${f.column})
-           |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-           |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-      val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-      s"""WITH $linkageCtes,
-         |cand AS (SELECT DISTINCT b.id AS inc_id, a.id AS hist_id
-         |  FROM bk b JOIN bk a ON b.pass = a.pass AND b.bkey = a.bkey
-         |  WHERE b.id % 2 = 1 AND a.id % 2 = 0),
-         |sc AS (SELECT c.inc_id, c.hist_id,
-         |    (${fz(fName)}
-         |     + ${fz(fPhone)}
-         |     + CASE WHEN ui.bal = uh.bal THEN ${fBal.wExactMicro}
-         |         ELSE ${fBal.wDisagreeMicro} END
-         |     + CASE WHEN ui.seg = uh.seg THEN ${fSeg.wExactMicro}
-         |         ELSE ${fSeg.wDisagreeMicro} END) AS score
-         |  FROM cand c JOIN u ui ON ui.id = c.inc_id
-         |  JOIN u uh ON uh.id = c.hist_id),
-         |best AS (SELECT inc_id, hist_id,
-         |    row_number() OVER (PARTITION BY inc_id
-         |      ORDER BY score DESC, hist_id ASC) AS rn
-         |  FROM sc WHERE score >= 10000000)
-         |SELECT u.id AS inc_id, coalesce(b.hist_id, u.id) AS cluster,
-         |  b.hist_id IS NOT NULL AS matched
-         |FROM u LEFT JOIN (SELECT inc_id, hist_id FROM best WHERE rn = 1) b
-         |  ON b.inc_id = u.id
-         |WHERE u.id % 2 = 1 ORDER BY inc_id""".stripMargin
-    },
-    "q278_bpe_fertility" ->
-      s"""WITH ${bpeTrainCtes(8, carryWord = true)},
-         |seg AS (SELECT word, CAST(len(syms) AS BIGINT) AS np FROM s8),
-         |occ AS (SELECT source,
-         |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-         |  FROM documents),
-         |o2 AS (SELECT source, word FROM occ WHERE word <> '')
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(np) AS BIGINT) AS n_bpe_tokens,
-         |  round(CAST(sum(np) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         |    AS fertility
-         |FROM o2 JOIN seg USING (word)
-         |GROUP BY source ORDER BY source""".stripMargin,
-    "q277_er_curve" ->
-      s"""WITH $linkageScoredCtes,
-         |h AS (SELECT CAST(floor(score_micro / 2000000.0) AS BIGINT)
-         |      AS bucket,
-         |    CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(sum(CASE WHEN a_ckey = b_ckey THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_true
-         |  FROM sc GROUP BY 1),
-         |cm AS (SELECT bucket, n_pairs, n_true,
-         |    CAST(sum(n_pairs) OVER (ORDER BY bucket DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |      AS cum_pairs,
-         |    CAST(sum(n_true) OVER (ORDER BY bucket DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |      AS cum_true
-         |  FROM h)
-         |SELECT bucket, n_pairs, n_true, cum_pairs, cum_true,
-         |  round(CAST(cum_true AS DOUBLE) / CAST(cum_pairs AS DOUBLE), 6)
-         |    AS precision
-         |FROM cm ORDER BY bucket DESC""".stripMargin,
-    "q276_sorted_neighborhood" ->
-      s"""WITH $linkageCtes,
-         |r AS (SELECT id, ckey,
-         |    row_number() OVER (ORDER BY name, id) AS rn FROM u)
-         |SELECT b.rn - a.rn AS dist, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN a.ckey = b.ckey THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_true
-         |FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 10
-         |GROUP BY 1 ORDER BY dist""".stripMargin,
-    "q275_skipgram_collocations" ->
-      """WITH t AS (SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents),
-        |pos AS (SELECT doc_id, unnest(toks) AS w,
-        |    generate_subscripts(toks, 1) AS i FROM t),
-        |pp AS (SELECT least(a.w, b.w) AS wa, greatest(a.w, b.w) AS wb
-        |  FROM pos a JOIN pos b
-        |    ON a.doc_id = b.doc_id AND b.i - a.i BETWEEN 1 AND 3
-        |  WHERE a.w <> '' AND b.w <> ''),
-        |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM pos
-        |  WHERE w <> '' GROUP BY w),
-        |co AS (SELECT wa, wb, CAST(count(*) AS BIGINT) AS c_ab FROM pp
-        |  GROUP BY wa, wb),
-        |tot AS (SELECT CAST((SELECT sum(c) FROM uni) AS DOUBLE) AS t,
-        |    CAST((SELECT sum(c_ab) FROM co) AS DOUBLE) AS p)
-        |SELECT wa AS term_a, wb AS term_b, c_ab AS pair_count,
-        |  round(((CAST(c_ab AS DOUBLE) * t) * t) /
-        |    ((p * ua.c) * ub.c), 6) AS lift
-        |FROM co
-        |JOIN uni ua ON ua.w = wa
-        |JOIN uni ub ON ub.w = wb
-        |CROSS JOIN tot
-        |WHERE c_ab >= 5
-        |ORDER BY ((CAST(c_ab AS DOUBLE) * t) * t) / ((p * ua.c) * ub.c)
-        |  DESC, term_a, term_b
-        |LIMIT 100""".stripMargin,
-    "q274_temporal_reach" -> {
-      def round(k: Int): String =
-        s"""r$k AS MATERIALIZED (
-           |  SELECT node, min(t) AS t FROM (
-           |    SELECT node, t FROM r${k - 1}
-           |    UNION ALL
-           |    SELECT ed.dst AS node, CAST(ed.d AS BIGINT) AS t
-           |    FROM r${k - 1} JOIN ed ON ed.src = r${k - 1}.node
-           |      AND ed.d >= r${k - 1}.t)
-           |  GROUP BY node)""".stripMargin
-      s"""WITH e AS (SELECT DISTINCT o_custkey * 2 AS c,
-         |    l_suppkey * 2 + 1 AS s,
-         |    date_diff('day', DATE '1970-01-01', o_orderdate::DATE) AS d
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |ed AS (SELECT c AS src, s AS dst, d FROM e
-         |  UNION ALL SELECT s, c, d FROM e),
-         |r0 AS (SELECT s_suppkey * 2 + 1 AS node, CAST(0 AS BIGINT) AS t
-         |  FROM supplier WHERE s_suppkey <= 2),
-         |${round(1)},
-         |${round(2)},
-         |${round(3)}
-         |SELECT CAST(node AS BIGINT) AS node, t AS reach_day
-         |FROM r3 ORDER BY node""".stripMargin
-    },
-    "q293_er_survivorship" -> {
-      def fz(f: Linkage.FieldSpec): String =
-        s"""CASE WHEN ua.${f.column} = ub.${f.column} THEN ${f.wExactMicro}
-           |      WHEN jaro_winkler_similarity(ua.${f.column}, ub.${f.column})
-           |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-           |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-      val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-      s"""WITH RECURSIVE $linkageCtes,
-         |m AS (SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN u ua ON ua.id = p.id_a JOIN u ub ON ub.id = p.id_b
-         |  WHERE p.id_a % 2 <> p.id_b % 2
-         |    AND (${fz(fName)}
-         |     + ${fz(fPhone)}
-         |     + CASE WHEN ua.bal = ub.bal THEN ${fBal.wExactMicro}
-         |         ELSE ${fBal.wDisagreeMicro} END
-         |     + CASE WHEN ua.seg = ub.seg THEN ${fSeg.wExactMicro}
-         |         ELSE ${fSeg.wDisagreeMicro} END) >= 10000000),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM m
-         |  UNION SELECT id_b, id_a FROM m),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s),
-         |res AS (SELECT u.id, coalesce(comp.c, u.id) AS cluster_id,
-         |    u.name, u.bal
-         |  FROM u LEFT JOIN comp ON comp.id = u.id)
-         |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-         |  arg_min(name, id) AS canonical_name,
-         |  CAST(count(DISTINCT name) AS BIGINT) AS name_variants,
-         |  arg_min(bal, id) AS canonical_bal,
-         |  CAST(count(DISTINCT bal) AS BIGINT) AS bal_variants
-         |FROM res GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
-    },
-    "q314_jackknife_ratio" ->
-      s"""WITH ev AS (SELECT user_id,
-         |    CAST(round(value * 100.0) AS BIGINT) AS cents FROM events),
-         |b AS (SELECT CAST((${h60Sql("user_id::VARCHAR")}) % 32 AS BIGINT)
-         |      AS bk,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(cents) AS BIGINT) AS sy,
-         |    CAST(count(*) AS BIGINT) AS sx
-         |  FROM ev GROUP BY 1),
-         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-         |    CAST(sum(sy) AS BIGINT) AS syt,
-         |    CAST(sum(sx) AS BIGINT) AS sxt,
-         |    CAST(count(*) AS BIGINT) AS h FROM b),
-         |loo AS (SELECT bk,
-         |    CAST(t.syt - b.sy AS DOUBLE) / CAST(t.sxt - b.sx AS DOUBLE)
-         |      AS r
-         |  FROM b CROSS JOIN tot t),
-         |s1 AS (SELECT list_reduce(list(r ORDER BY bk), (a, v) -> a + v)
-         |      AS sr FROM loo),
-         |rb AS (SELECT sr / CAST(t.h AS DOUBLE) AS rbar FROM s1
-         |  CROSS JOIN tot t),
-         |s2 AS (SELECT list_reduce(
-         |      list((r - rbar) * (r - rbar) ORDER BY bk), (a, v) -> a + v)
-         |      AS ssq FROM loo CROSS JOIN rb),
-         |f AS (SELECT t.n_rows, t.h,
-         |    CAST(t.syt AS DOUBLE) / CAST(t.sxt AS DOUBLE) AS ratio,
-         |    sqrt((CAST(t.h - 1 AS DOUBLE) / CAST(t.h AS DOUBLE)) * ssq)
-         |      AS se
-         |  FROM tot t CROSS JOIN s2)
-         |SELECT n_rows, h, round(ratio, 6) AS ratio, round(se, 6) AS se,
-         |  round(ratio - (1.96 * se), 6) AS ci_lo,
-         |  round(ratio + (1.96 * se), 6) AS ci_hi FROM f""".stripMargin,
-    "q316_wilson_intervals" ->
-      """WITH g AS (SELECT source AS "group",
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN n_chars > 400 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS successes
-        |  FROM documents GROUP BY 1),
-        |e AS (SELECT "group", n, successes,
-        |    CAST(successes AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |    CAST(n AS DOUBLE) AS nd, (1.96 * 1.96) AS z2 FROM g)
-        |SELECT "group", n, successes, round(p, 6) AS rate,
-        |  round(((p + (z2 / (2.0 * nd))) / (1.0 + (z2 / nd)))
-        |    - ((1.96 * sqrt(((p * (1.0 - p)) / nd)
-        |        + (z2 / ((4.0 * nd) * nd)))) / (1.0 + (z2 / nd))), 6)
-        |    AS lo,
-        |  round(((p + (z2 / (2.0 * nd))) / (1.0 + (z2 / nd)))
-        |    + ((1.96 * sqrt(((p * (1.0 - p)) / nd)
-        |        + (z2 / ((4.0 * nd) * nd)))) / (1.0 + (z2 / nd))), 6)
-        |    AS hi
-        |FROM e ORDER BY "group"""".stripMargin,
-    "q317_capture_recapture" ->
-      """WITH a AS (SELECT DISTINCT user_id FROM events
-        |    WHERE event_id % 3 = 0),
-        |bq AS (SELECT DISTINCT user_id FROM events WHERE event_id % 5 = 0),
-        |c AS (SELECT
-        |    (SELECT CAST(count(*) AS BIGINT) FROM a) AS n1,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM bq) AS n2,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM a
-        |     WHERE user_id IN (SELECT user_id FROM bq)) AS m),
-        |e AS (SELECT n1, n2, m,
-        |    CAST(n1 + 1 AS DOUBLE) AS n1d, CAST(n2 + 1 AS DOUBLE) AS n2d,
-        |    CAST(m + 1 AS DOUBLE) AS md FROM c),
-        |f AS (SELECT n1, n2, m,
-        |    ((n1d * n2d) / md) - 1.0 AS n_hat,
-        |    sqrt(((n1d * n2d)
-        |        * (CAST(n1 - m AS DOUBLE) * CAST(n2 - m AS DOUBLE)))
-        |      / ((md * md) * CAST(m + 2 AS DOUBLE))) AS se
-        |  FROM e)
-        |SELECT n1, n2, m, round(n_hat, 6) AS n_hat, round(se, 6) AS se,
-        |  round(n_hat - (1.96 * se), 6) AS ci_lo,
-        |  round(n_hat + (1.96 * se), 6) AS ci_hi FROM f""".stripMargin,
-    "q318_pr_curve" ->
-      s"""WITH q AS (SELECT round($qualitySql, 3) AS s, (lang = 'en') AS lbl
-         |  FROM documents),
-         |g AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt,
-         |    CAST(sum(CASE WHEN lbl THEN 1 ELSE 0 END) AS BIGINT) AS pos
-         |  FROM q GROUP BY 1),
-         |np AS (SELECT CAST(sum(pos) AS BIGINT) AS npos FROM g),
-         |c AS (SELECT s, pos AS dp,
-         |    CAST(sum(pos) OVER (ORDER BY s DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS tp,
-         |    CAST(sum(cnt) OVER (ORDER BY s DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS seen
-         |  FROM g),
-         |pr AS (SELECT s, dp, tp, seen - tp AS fp,
-         |    CAST(tp AS DOUBLE) / CAST(seen AS DOUBLE) AS prec,
-         |    CAST(tp AS DOUBLE) / CAST(npos AS DOUBLE) AS rec
-         |  FROM c, np),
-         |ap AS (SELECT list_reduce(
-         |    list((CAST(dp AS DOUBLE) * prec) / CAST(npos AS DOUBLE)
-         |      ORDER BY s ASC), (a, v) -> a + v) AS ap FROM pr, np)
-         |SELECT round(s, 3) AS threshold, tp, fp, round(prec, 6) AS precision,
-         |  round(rec, 6) AS recall, round(ap.ap, 6) AS ap
-         |FROM pr, ap ORDER BY threshold DESC""".stripMargin,
-    "q319_brier_decomposition" ->
-      s"""WITH q AS (SELECT round($qualitySql, 6) AS s, (lang = 'en') AS lbl
-         |  FROM documents),
-         |m AS (SELECT CAST(round(s * 1000000.0) AS BIGINT) AS si,
-         |    CASE WHEN lbl THEN 1000000 ELSE 0 END AS yi,
-         |    least(CAST(floor(s * 10.0) AS BIGINT), 9) AS bin FROM q),
-         |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN yi = 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS positives,
-         |    sum(CAST(si AS HUGEINT)) AS ssum,
-         |    sum(CAST(si - yi AS HUGEINT) * CAST(si - yi AS HUGEINT)) AS sqe
-         |  FROM m GROUP BY 1),
-         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
-         |    CAST(sum(positives) AS BIGINT) AS pt, sum(sqe) AS st FROM g),
-         |k AS (SELECT CAST(st AS DOUBLE)
-         |      / ((1000000.0 * 1000000.0) * CAST(nt AS DOUBLE)) AS brier,
-         |    CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE) AS ybar FROM tot),
-         |cb AS (SELECT bin, n, positives,
-         |    CAST(ssum AS DOUBLE) / (1000000.0 * CAST(n AS DOUBLE)) AS conf,
-         |    CAST(positives AS DOUBLE) / CAST(n AS DOUBLE) AS acc FROM g),
-         |rr AS (SELECT
-         |    list_reduce(list((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * ((conf - acc) * (conf - acc)) ORDER BY bin),
-         |      (a, v) -> a + v) AS rel,
-         |    list_reduce(list((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * ((acc - ybar) * (acc - ybar)) ORDER BY bin),
-         |      (a, v) -> a + v) AS res
-         |  FROM cb, k, tot)
-         |SELECT bin, n, positives, round(conf, 6) AS conf,
-         |  round(acc, 6) AS acc, round(brier, 6) AS brier,
-         |  round(rel, 6) AS reliability, round(res, 6) AS resolution,
-         |  round(ybar * (1.0 - ybar), 6) AS uncertainty,
-         |  round(brier - ((rel - res) + (ybar * (1.0 - ybar))), 6)
-         |    AS within_bin_var
-         |FROM cb, k, rr ORDER BY bin""".stripMargin,
-    "q320_conformal_interval" ->
-      s"""WITH d AS (SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS actual,
-         |    (${h60Sql("doc_id::VARCHAR")}) % 5 AS split FROM documents),
-         |cal AS (SELECT * FROM d WHERE split <> 0),
-         |tst AS (SELECT * FROM d WHERE split = 0),
-         |r AS (SELECT source, doc_id, actual,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY actual ASC, doc_id ASC) AS rk,
-         |    count(*) OVER (PARTITION BY source) AS n FROM cal),
-         |med AS (SELECT source, actual AS pred FROM r
-         |    WHERE rk = greatest(1, CAST(ceil(0.5 * n) AS BIGINT))),
-         |calr AS (SELECT cal.doc_id, abs(actual - pred) AS res
-         |  FROM cal JOIN med USING (source)),
-         |tstr AS (SELECT tst.doc_id, abs(actual - pred) AS res
-         |  FROM tst JOIN med USING (source)),
-         |nc AS (SELECT CAST(count(*) AS BIGINT) AS n_cal FROM calr),
-         |kk AS (SELECT n_cal, least(n_cal,
-         |    CAST(ceil(CAST(n_cal + 1 AS DOUBLE) * (1.0 - 0.1)) AS BIGINT))
-         |    AS k FROM nc),
-         |rr AS (SELECT res,
-         |    row_number() OVER (ORDER BY res ASC, doc_id ASC) AS rk
-         |  FROM calr),
-         |qh AS (SELECT res AS qhat FROM rr, kk WHERE rr.rk = kk.k),
-         |tv AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
-         |    CAST(sum(CASE WHEN res <= qhat THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS covered
-         |  FROM tstr, qh)
-         |SELECT n_cal, round(CAST(0.1 AS DOUBLE), 6) AS alpha, k,
-         |  round(qhat, 6) AS qhat, n_test, covered,
-         |  round(CAST(covered AS DOUBLE) / CAST(n_test AS DOUBLE), 6)
-         |    AS coverage
-         |FROM kk, qh, tv""".stripMargin,
-    "q321_qq_pairs" ->
-      s"""WITH r AS (SELECT event_type, value,
-         |    row_number() OVER (PARTITION BY event_type
-         |      ORDER BY value ASC, event_id ASC) AS rk,
-         |    count(*) OVER (PARTITION BY event_type) AS n
-         |  FROM events WHERE event_type IN ('click', 'view')),
-         |qs AS (SELECT unnest(CAST([${(1 to 20).map(_ / 20.0).mkString(", ")}]
-         |    AS DOUBLE[])) AS q),
-         |a AS (SELECT q, value AS v_a FROM r JOIN qs
-         |  ON event_type = 'click'
-         |    AND rk = greatest(1, CAST(ceil(q * n) AS BIGINT))),
-         |b AS (SELECT q, value AS v_b FROM r JOIN qs
-         |  ON event_type = 'view'
-         |    AND rk = greatest(1, CAST(ceil(q * n) AS BIGINT)))
-         |SELECT round(q, 6) AS q, round(v_a, 6) AS v_a,
-         |  round(v_b, 6) AS v_b, round(v_b - v_a, 6) AS diff
-         |FROM a JOIN b USING (q) ORDER BY q""".stripMargin,
-    "q322_welch_ttest" ->
-      """WITH m AS (SELECT event_type AS g,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS v
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |s AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(v) AS BIGINT) AS sv,
-        |    sum(CAST(v AS HUGEINT) * CAST(v AS HUGEINT)) AS ss
-        |  FROM m GROUP BY 1),
-        |e AS (SELECT g, n, CAST(n AS DOUBLE) AS nd,
-        |    (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) / 1000000.0 AS mean,
-        |    (CAST(CAST(n AS HUGEINT) * ss
-        |        - CAST(sv AS HUGEINT) * CAST(sv AS HUGEINT) AS DOUBLE)
-        |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))
-        |      / (1000000.0 * 1000000.0) AS var FROM s),
-        |a AS (SELECT n AS n_a, mean AS mean_a, var AS var_a, nd AS nda
-        |  FROM e WHERE g = 'click'),
-        |b AS (SELECT n AS n_b, mean AS mean_b, var AS var_b, nd AS ndb
-        |  FROM e WHERE g = 'view'),
-        |f AS (SELECT n_a, n_b, mean_a, mean_b, var_a, var_b,
-        |    (var_a / nda) AS sa, (var_b / ndb) AS sb, nda, ndb FROM a, b)
-        |SELECT n_a, n_b, round(mean_a, 6) AS mean_a,
-        |  round(mean_b, 6) AS mean_b, round(var_a, 6) AS var_a,
-        |  round(var_b, 6) AS var_b,
-        |  round((mean_a - mean_b) / sqrt(sa + sb), 6) AS t,
-        |  round(((sa + sb) * (sa + sb))
-        |    / (((sa * sa) / (nda - 1.0)) + ((sb * sb) / (ndb - 1.0))), 6)
-        |    AS df
-        |FROM f""".stripMargin,
-    "q323_srm_check" ->
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-         |asg AS (SELECT CASE WHEN user_id % 97 = 0 THEN 'zz'
-         |    ELSE CASE CAST((${h60Sql("user_id::VARCHAR")}) % 4 AS BIGINT)
-         |      WHEN 0 THEN 'a' WHEN 1 THEN 'b' WHEN 2 THEN 'c'
-         |      ELSE 'd' END END AS arm FROM u),
-         |cnt AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_obs
-         |  FROM asg GROUP BY 1),
-         |des AS (SELECT unnest(['a', 'b', 'c', 'd']) AS arm,
-         |    unnest(CAST([0.25, 0.25, 0.25, 0.25] AS DOUBLE[])) AS ratio),
-         |tot AS (SELECT
-         |    CAST(coalesce(sum(CASE WHEN arm IN ('a','b','c','d')
-         |      THEN n_obs END), 0) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CASE WHEN arm NOT IN ('a','b','c','d')
-         |      THEN n_obs END), 0) AS BIGINT) AS n_unexpected FROM cnt),
-         |rows_ AS (SELECT d.arm, CAST(coalesce(c.n_obs, 0) AS BIGINT)
-         |      AS n_obs,
-         |    CAST(t.n AS DOUBLE) * d.ratio AS expected_n, t.n, t.n_unexpected
-         |  FROM des d LEFT JOIN cnt c ON d.arm = c.arm CROSS JOIN tot t),
-         |ct AS (SELECT arm, n_obs, expected_n, n, n_unexpected,
-         |    CASE WHEN expected_n > 0.0 THEN
-         |      ((CAST(n_obs AS DOUBLE) - expected_n)
-         |        * (CAST(n_obs AS DOUBLE) - expected_n)) / expected_n
-         |    ELSE CAST(0.0 AS DOUBLE) END AS contrib FROM rows_),
-         |x2 AS (SELECT list_reduce(list(contrib ORDER BY arm),
-         |    (a, v) -> a + v) AS chi2 FROM ct)
-         |SELECT arm, n_obs, round(expected_n, 6) AS expected_n,
-         |  round(contrib, 6) AS contrib, n, n_unexpected,
-         |  round(x2.chi2, 6) AS chi2, CAST(3 AS BIGINT) AS dof
-         |FROM ct, x2 ORDER BY arm""".stripMargin,
-    "q324_log_rank" ->
-      s"""WITH s AS (SELECT user_id,
-         |    CAST(min(epoch_us(ts)) AS BIGINT) AS fst,
-         |    CAST(min(CASE WHEN event_type = 'error' THEN epoch_us(ts) END)
-         |      AS BIGINT) AS ferr
-         |  FROM events GROUP BY 1),
-         |g AS (SELECT CAST(max(epoch_us(ts)) AS BIGINT) AS gmx FROM events),
-         |subj AS (SELECT
-         |    coalesce(ferr - fst, (SELECT gmx FROM g) - fst) // 3600000000
-         |      AS t,
-         |    ferr IS NOT NULL AS e,
-         |    (${h60Sql("user_id::VARCHAR")}) % 2 = 0 AS a
-         |  FROM s),
-         |byt AS (SELECT t,
-         |    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS w1,
-         |    CAST(sum(CASE WHEN NOT a THEN 1 ELSE 0 END) AS BIGINT) AS w2,
-         |    CAST(sum(CASE WHEN a AND e THEN 1 ELSE 0 END) AS BIGINT) AS d1,
-         |    CAST(sum(CASE WHEN (NOT a) AND e THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS d2
-         |  FROM subj GROUP BY 1),
-         |risk AS (SELECT t, d1, d2,
-         |    CAST(sum(w1) OVER (ORDER BY t DESC ROWS BETWEEN UNBOUNDED
-         |      PRECEDING AND CURRENT ROW) AS BIGINT) AS n1,
-         |    CAST(sum(w2) OVER (ORDER BY t DESC ROWS BETWEEN UNBOUNDED
-         |      PRECEDING AND CURRENT ROW) AS BIGINT) AS n2
-         |  FROM byt),
-         |ev AS (SELECT t, d1,
-         |    (CAST(d1 + d2 AS DOUBLE) * CAST(n1 AS DOUBLE))
-         |      / CAST(n1 + n2 AS DOUBLE) AS e1t,
-         |    CASE WHEN n1 + n2 > 1 THEN
-         |      (((CAST(d1 + d2 AS DOUBLE) * CAST(n1 AS DOUBLE))
-         |          * CAST(n2 AS DOUBLE))
-         |        * (CAST(n1 + n2 AS DOUBLE) - CAST(d1 + d2 AS DOUBLE)))
-         |      / ((CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE))
-         |        * (CAST(n1 + n2 AS DOUBLE) - 1.0))
-         |    ELSE CAST(0.0 AS DOUBLE) END AS vt
-         |  FROM risk WHERE d1 + d2 > 0),
-         |f AS (SELECT CAST(count(*) AS BIGINT) AS n_times,
-         |    CAST(sum(d1) AS BIGINT) AS o1,
-         |    list_reduce(list(e1t ORDER BY t), (a, v) -> a + v) AS e1,
-         |    list_reduce(list(vt ORDER BY t), (a, v) -> a + v) AS v
-         |  FROM ev)
-         |SELECT n_times, o1, round(e1, 6) AS e1, round(v, 6) AS v,
-         |  round(CASE WHEN v > 0.0 THEN
-         |    ((CAST(o1 AS DOUBLE) - e1) * (CAST(o1 AS DOUBLE) - e1)) / v
-         |  END, 6) AS chi2
-         |FROM f""".stripMargin,
-    "q325_category_drift" ->
-      """WITH ref AS (SELECT CASE WHEN doc_id % 41 = 0 THEN 'qq'
-        |    ELSE lang END AS lang FROM documents WHERE doc_id % 2 = 0),
-        |cur AS (SELECT CASE WHEN doc_id % 31 = 0 THEN 'zz'
-        |    ELSE lang END AS lang FROM documents WHERE doc_id % 2 = 1),
-        |rc AS (SELECT lang AS category, CAST(count(*) AS BIGINT) AS n_ref
-        |  FROM ref GROUP BY 1),
-        |cc AS (SELECT lang AS category, CAST(count(*) AS BIGINT) AS n_cur
-        |  FROM cur GROUP BY 1),
-        |nt AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM ref) AS nr,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM cur) AS nc),
-        |j AS (SELECT coalesce(rc.category, cc.category) AS category,
-        |    CAST(coalesce(n_ref, 0) AS BIGINT) AS n_ref,
-        |    CAST(coalesce(n_cur, 0) AS BIGINT) AS n_cur
-        |  FROM rc FULL OUTER JOIN cc ON rc.category = cc.category)
-        |SELECT category, n_ref, n_cur,
-        |  round(CAST(n_ref AS DOUBLE) / CAST(nr AS DOUBLE), 6) AS p_ref,
-        |  round(CAST(n_cur AS DOUBLE) / CAST(nc AS DOUBLE), 6) AS p_cur,
-        |  round(CASE WHEN n_ref > 0 AND n_cur > 0 THEN
-        |    ln((CAST(n_cur AS DOUBLE) / CAST(nc AS DOUBLE))
-        |      / (CAST(n_ref AS DOUBLE) / CAST(nr AS DOUBLE))) END, 6)
-        |    AS log_ratio,
-        |  CASE WHEN n_ref = 0 THEN 'new' WHEN n_cur = 0 THEN 'vanished'
-        |    ELSE 'shared' END AS status
-        |FROM j, nt ORDER BY category""".stripMargin,
-    "q326_poisson_spike" ->
-      """WITH d AS (SELECT event_type AS key,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-        |t AS (SELECT key, CAST(sum(n) AS BIGINT) AS tot,
-        |    CAST(count(*) AS BIGINT) AS days FROM d GROUP BY 1),
-        |j AS (SELECT d.key, day, n,
-        |    CASE WHEN days >= 2 THEN
-        |      CAST(tot - n AS DOUBLE) / CAST(days - 1 AS DOUBLE) END
-        |      AS lambda
-        |  FROM d JOIN t ON d.key = t.key),
-        |b AS (SELECT key, day, n, lambda,
-        |    CASE WHEN lambda IS NULL THEN NULL
-        |      WHEN CAST(n AS DOUBLE) <= lambda THEN CAST(1.0 AS DOUBLE)
-        |      WHEN lambda = 0.0 THEN CAST(0.0 AS DOUBLE)
-        |      ELSE exp((CAST(n AS DOUBLE) - lambda)
-        |        + (CAST(n AS DOUBLE) * ln(lambda / CAST(n AS DOUBLE))))
-        |    END AS bound
-        |  FROM j)
-        |SELECT key, day, n, round(lambda, 6) AS lambda,
-        |  round(bound, 6) AS bound,
-        |  CASE WHEN bound IS NULL THEN NULL
-        |    ELSE bound <= 0.001 END AS flagged
-        |FROM b ORDER BY key, day""".stripMargin,
-    "q327_bradley_terry" -> btOracleSql(3),
-    "q337_hyperball_harmonic" -> hyperballOracleSql(rounds = 3, m = 16,
-      topK = 20),
-    "q338_hyperanf" -> hyperanfOracleSql(rounds = 3, m = 16),
-    "q339_markov_attribution" -> markovOracleSql(
-      Seq("click", "error", "signup", "view"), "purchase", rounds = 6),
-    "q334_confidence_sequence" ->
-      s"""WITH a AS (SELECT
-         |    CASE WHEN (${h60Sql("user_id::VARCHAR")}) % 2 = 0
-         |      THEN 'g0' ELSE 'g1' END AS arm,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(round(value * 1000000.0) AS BIGINT) AS v FROM events),
-         |d AS (SELECT arm, day, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(v) AS BIGINT) AS s FROM a GROUP BY 1, 2),
-         |c AS (SELECT arm, day,
-         |    CAST(sum(n) OVER w AS BIGINT) AS t,
-         |    CAST(sum(s) OVER w AS BIGINT) AS st
-         |  FROM d WINDOW w AS (PARTITION BY arm ORDER BY day ASC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |f AS (SELECT arm, day, t,
-         |    (CAST(st AS DOUBLE) / CAST(t AS DOUBLE)) / 1000000.0 AS mean,
-         |    (1000.0 - 0.0) * sqrt(
-         |      ln((((CAST(2.0 AS DOUBLE) * (pi() * pi()))
-         |          * (CAST(t AS DOUBLE) * CAST(t AS DOUBLE)))
-         |        / (CAST(6.0 AS DOUBLE) * CAST(0.05 AS DOUBLE))))
-         |      / (CAST(2.0 AS DOUBLE) * CAST(t AS DOUBLE))) AS half
-         |  FROM c)
-         |SELECT arm, day, t AS n_cum, round(mean, 6) AS mean_cum,
-         |  round(half, 6) AS half, round(mean - half, 6) AS ci_lo,
-         |  round(mean + half, 6) AS ci_hi
-         |FROM f ORDER BY arm, day""".stripMargin,
-    "q335_post_stratified_mean" ->
-      """WITH sh AS (SELECT * FROM (VALUES ('de', 0.15), ('en', 0.4),
-        |    ('es', 0.15), ('fr', 0.1), ('zh', 0.2)) AS t(h, w)),
-        |mv AS (SELECT lang AS h,
-        |    CAST(round(CAST(n_chars AS DOUBLE) * 1000000.0) AS BIGINT) AS v
-        |  FROM documents),
-        |st AS (SELECT h, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(v) AS BIGINT) AS sv,
-        |    sum(CAST(v AS HUGEINT) * CAST(v AS HUGEINT)) AS ss
-        |  FROM mv GROUP BY 1),
-        |j AS (SELECT sh.h, CAST(sh.w AS DOUBLE) AS w, n, sv, ss
-        |  FROM sh JOIN st USING (h)),
-        |f AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
-        |    CAST(count(*) AS BIGINT) AS n_strata,
-        |    list_reduce(list(
-        |      (w * ((CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) / 1000000.0))
-        |      ORDER BY h), (a, x) -> a + x) AS mean_ps,
-        |    list_reduce(list(
-        |      (((w * w) * ((CAST(CAST(n AS HUGEINT) * ss
-        |            - CAST(sv AS HUGEINT) * CAST(sv AS HUGEINT) AS DOUBLE)
-        |          / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))
-        |          / (1000000.0 * 1000000.0))) / CAST(n AS DOUBLE))
-        |      ORDER BY h), (a, x) -> a + x) AS vs
-        |  FROM j)
-        |SELECT n_tot AS n, n_strata, CAST(0 AS BIGINT) AS missing_strata,
-        |  CAST(0 AS BIGINT) AS n_excluded,
-        |  round(mean_ps, 6) AS mean_ps, round(sqrt(vs), 6) AS se
-        |FROM f""".stripMargin,
-    "q336_exact_matched_att" ->
-      s"""WITH e AS (SELECT event_type AS k,
-         |    ((${h60Sql("user_id::VARCHAR")}) % 2 = 0) AS t,
-         |    CAST(round(value * 1000000.0) AS BIGINT) AS v FROM events),
-         |pa AS (SELECT k, t, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(v) AS BIGINT) AS s FROM e GROUP BY 1, 2),
-         |st AS (SELECT k,
-         |    CAST(sum(CASE WHEN t THEN n END) AS BIGINT) AS nt,
-         |    CAST(sum(CASE WHEN t THEN s END) AS BIGINT) AS stt,
-         |    CAST(sum(CASE WHEN NOT t THEN n END) AS BIGINT) AS nc,
-         |    CAST(sum(CASE WHEN NOT t THEN s END) AS BIGINT) AS sc
-         |  FROM pa GROUP BY 1),
-         |ma AS (SELECT * FROM st WHERE nt IS NOT NULL AND nc IS NOT NULL),
-         |f AS (SELECT CAST(count(*) AS BIGINT) AS n_strata,
-         |    CAST(coalesce(sum(nt), 0) AS BIGINT) AS n_treated,
-         |    coalesce(list_reduce(list((CAST(nt AS DOUBLE) *
-         |      (((CAST(stt AS DOUBLE) / CAST(nt AS DOUBLE)) / 1000000.0)
-         |       - ((CAST(sc AS DOUBLE) / CAST(nc AS DOUBLE)) / 1000000.0)))
-         |      ORDER BY k), (a, x) -> a + x), CAST(0.0 AS DOUBLE)) AS num
-         |  FROM ma),
-         |u AS (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) AS unmatched
-         |  FROM st WHERE nc IS NULL)
-         |SELECT n_strata AS n_strata_matched, n_treated AS n_treated_matched,
-         |  unmatched AS n_treated_unmatched,
-         |  round(CASE WHEN n_treated = 0 THEN NULL
-         |    ELSE num / CAST(n_treated AS DOUBLE) END, 6) AS att
-         |FROM f, u""".stripMargin,
-    "q332_scalar_quantize" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id < 100),
-        |sc AS (SELECT u.i AS pos, max(abs(CAST(embedding[u.i] AS DOUBLE)))
-        |    AS s
-        |  FROM e, (SELECT unnest(generate_series(1, 64)) AS i) u
-        |  GROUP BY 1),
-        |sa AS (SELECT list(s ORDER BY pos) AS sv FROM sc),
-        |d AS (SELECT vec_id,
-        |    list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE))
-        |      AS v,
-        |    list_transform(range(1, 65), i ->
-        |      CASE WHEN sv[i] = 0.0 THEN CAST(0.0 AS DOUBLE)
-        |      ELSE ((round((CAST(embedding[i] AS DOUBLE) / sv[i]) * 127.0)
-        |        / 127.0) * sv[i]) END) AS r
-        |  FROM e, sa),
-        |m AS (SELECT vec_id,
-        |    list_reduce(list_transform(range(1, 65),
-        |      i -> (v[i] - r[i]) * (v[i] - r[i])), (a, b) -> a + b) / 64.0
-        |      AS mse,
-        |    list_aggregate(list_transform(range(1, 65),
-        |      i -> abs(v[i] - r[i])), 'max') AS mae,
-        |    list_reduce(list_transform(range(1, 65), i -> v[i] * r[i]),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_transform(range(1, 65),
-        |        i -> v[i] * v[i]), (a, b) -> a + b))
-        |      * sqrt(list_reduce(list_transform(range(1, 65),
-        |        i -> r[i] * r[i]), (a, b) -> a + b))) AS cs
-        |  FROM d)
-        |SELECT vec_id AS id, round(mse * 1000000.0, 6) AS mse_ppm,
-        |  round(mae, 6) AS max_abs_err, round(cs, 6) AS cosine_self
-        |FROM m ORDER BY id""".stripMargin,
-    "q333_quantization_recall" ->
-      s"""WITH sc AS (SELECT u.i AS pos,
-         |    max(abs(CAST(embedding[u.i] AS DOUBLE))) AS s
-         |  FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) u
-         |  GROUP BY 1),
-         |sa AS (SELECT list(s ORDER BY pos) AS sv FROM sc),
-         |deq AS (SELECT vec_id, list_transform(range(1, 65), i ->
-         |    CAST(CAST(CASE WHEN sv[i] = 0.0 THEN 0.0
-         |      ELSE ((round((CAST(embedding[i] AS DOUBLE) / sv[i]) * 127.0)
-         |        / 127.0) * sv[i]) END AS REAL) AS DOUBLE)) AS emb
-         |  FROM embeddings, sa),
-         |qs AS (SELECT vec_id FROM embeddings
-         |  ORDER BY (${h60Sql("vec_id::VARCHAR")}) ASC, vec_id ASC
-         |  LIMIT 64),
-         |truth AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM embeddings q JOIN qs USING (vec_id), embeddings c
-         |  WHERE q.vec_id <> c.vec_id
-         |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-         |      CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) <= 10),
-         |got AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM deq q JOIN qs USING (vec_id), deq c
-         |  WHERE q.vec_id <> c.vec_id
-         |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY list_cosine_similarity(q.emb, c.emb) DESC,
-         |      c.vec_id) <= 10),
-         |t AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth),
-         |h AS (SELECT CAST(count(*) AS BIGINT) AS n_hit
-         |  FROM truth JOIN got USING (query_id, neighbor_id))
-         |SELECT CAST(64 AS BIGINT) AS n_queries, n_truth AS n_truth_pairs,
-         |  n_hit,
-         |  round(CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE), 6)
-         |    AS recall
-         |FROM t, h""".stripMargin,
-    "q331_hard_negatives" ->
-      """SELECT q.vec_id AS query_id,
-        |  row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |      CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS rank,
-        |  c.vec_id AS neighbor_id,
-        |  round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])), 6) AS cosine
-        |FROM embeddings q, embeddings c
-        |WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id
-        |  AND list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])) >= 0.3
-        |  AND list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])) < 0.8
-        |QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q328_fleiss_kappa" ->
-      """WITH d AS (SELECT doc_id - (doc_id % 3) AS item, lang
-        |  FROM documents),
-        |comp AS (SELECT item FROM d GROUP BY item HAVING count(*) = 3),
-        |dd AS (SELECT d.item, d.lang FROM d JOIN comp USING (item)),
-        |cells AS (SELECT item, lang AS r, CAST(count(*) AS BIGINT) AS c
-        |  FROM dd GROUP BY 1, 2),
-        |pi AS (SELECT item, CAST(sum(c) AS BIGINT) AS n,
-        |    CAST(sum(c * c) AS BIGINT) AS sq FROM cells GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS items,
-        |    CAST(min(n) AS BIGINT) AS raters,
-        |    CAST(sum(sq) AS BIGINT) AS ssq FROM pi),
-        |pb AS (SELECT items, raters,
-        |    CAST(ssq - (items * raters) AS DOUBLE)
-        |      / (CAST(items * raters AS DOUBLE)
-        |        * CAST(raters - 1 AS DOUBLE)) AS p_bar FROM tot),
-        |pe AS (SELECT list_reduce(list(
-        |    (CAST(m AS DOUBLE)
-        |      / CAST((SELECT items * raters FROM tot) AS DOUBLE))
-        |    * (CAST(m AS DOUBLE)
-        |      / CAST((SELECT items * raters FROM tot) AS DOUBLE))
-        |    ORDER BY r), (a, v) -> a + v) AS p_e
-        |  FROM (SELECT r, CAST(sum(c) AS BIGINT) AS m FROM cells
-        |    GROUP BY 1))
-        |SELECT items AS n_items, raters AS n_raters,
-        |  round(p_bar, 6) AS p_bar, round(p_e, 6) AS p_e,
-        |  round(CASE WHEN p_e = 1.0 THEN NULL
-        |    ELSE (p_bar - p_e) / (1.0 - p_e) END, 6) AS kappa
-        |FROM pb, pe""".stripMargin,
-    "q329_funnel_timings" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t, min(s1.t) AS p
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t, min(s2.t) AS p
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1),
-        |d AS (SELECT 1 AS step_idx, 'click' AS step, user_id,
-        |    CAST(epoch_us(t) - epoch_us(p) AS BIGINT) AS delay FROM s2
-        |  UNION ALL SELECT 2, 'purchase', user_id,
-        |    CAST(epoch_us(t) - epoch_us(p) AS BIGINT) FROM s3),
-        |r AS (SELECT step_idx, step, user_id, delay,
-        |    row_number() OVER (PARTITION BY step_idx
-        |      ORDER BY delay ASC, user_id ASC) AS rk,
-        |    CAST(count(*) OVER (PARTITION BY step_idx) AS BIGINT) AS n
-        |  FROM d),
-        |qs AS (SELECT unnest(CAST([0.5, 0.9] AS DOUBLE[])) AS q)
-        |SELECT step_idx, step, n AS n_users, round(q, 6) AS q,
-        |  delay AS delay_us
-        |FROM r JOIN qs ON rk = greatest(1, CAST(ceil(q * n) AS BIGINT))
-        |ORDER BY step_idx, q""".stripMargin,
-    "q308_bh_fdr" ->
-      s"""WITH t AS (SELECT DISTINCT c_nationkey::VARCHAR || '|' ||
-         |    c_mktsegment AS test_id, c_nationkey AS nk FROM customer),
-         |p0 AS (SELECT test_id,
-         |    CAST(${h60Sql("test_id")} AS DOUBLE)
-         |      / 1152921504606846976.0 AS p0, nk FROM t),
-         |p1 AS (SELECT test_id,
-         |    CASE WHEN nk < 5 THEN p0 / 1000.0 ELSE p0 END AS p FROM p0),
-         |r AS (SELECT test_id, p,
-         |    row_number() OVER (ORDER BY p ASC, test_id ASC) AS rank,
-         |    count(*) OVER () AS n FROM p1),
-         |q AS (SELECT test_id, p, rank,
-         |    least(1.0, min((p * CAST(n AS DOUBLE)) / CAST(rank AS DOUBLE))
-         |      OVER (ORDER BY rank DESC
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         |      AS q_value
-         |  FROM r)
-         |SELECT test_id, round(p, 9) AS p, CAST(rank AS BIGINT) AS rank,
-         |  round(q_value, 9) AS q_value, q_value <= 0.25 AS reject
-         |FROM q ORDER BY rank""".stripMargin,
-    "q309_cuped" ->
-      """WITH u AS (SELECT user_id,
-        |    CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-        |      THEN CAST(round(value * 100.0) AS BIGINT) ELSE 0 END)
-        |      AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-        |      THEN CAST(round(value * 100.0) AS BIGINT) ELSE 0 END)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
-        |g AS (SELECT CAST(user_id % 2 AS VARCHAR) AS variant, x, y FROM u),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS nd,
-        |    CAST(sum(x) AS DOUBLE) AS sxd, CAST(sum(y) AS DOUBLE) AS syd,
-        |    CAST(sum(x*x) AS DOUBLE) AS sxxd,
-        |    CAST(sum(x*y) AS DOUBLE) AS sxyd FROM g),
-        |th AS (SELECT
-        |    CASE WHEN ((nd*sxxd) - (sxd*sxd)) = 0.0 THEN 0.0
-        |      ELSE ((nd*sxyd) - (sxd*syd)) / ((nd*sxxd) - (sxd*sxd))
-        |    END AS theta, sxd / nd AS meanx FROM tot),
-        |v AS (SELECT variant, count(*) AS n,
-        |    CAST(count(*) AS DOUBLE) AS nd,
-        |    CAST(sum(x) AS DOUBLE) AS sxd, CAST(sum(y) AS DOUBLE) AS syd,
-        |    CAST(sum(x*x) AS DOUBLE) AS sxxd,
-        |    CAST(sum(x*y) AS DOUBLE) AS sxyd,
-        |    CAST(sum(y*y) AS DOUBLE) AS syyd FROM g GROUP BY 1),
-        |e AS (SELECT variant, n, nd, sxd / nd AS mean_pre,
-        |    syd / nd AS mean_post,
-        |    CASE WHEN n > 1 THEN ((nd*syyd) - (syd*syd))
-        |      / (nd * CAST(n - 1 AS DOUBLE)) ELSE 0.0 END AS var_post,
-        |    CASE WHEN n > 1 THEN ((nd*sxxd) - (sxd*sxd))
-        |      / (nd * CAST(n - 1 AS DOUBLE)) ELSE 0.0 END AS var_x,
-        |    CASE WHEN n > 1 THEN ((nd*sxyd) - (sxd*syd))
-        |      / (nd * CAST(n - 1 AS DOUBLE)) ELSE 0.0 END AS cov
-        |  FROM v)
-        |SELECT variant, CAST(n AS BIGINT) AS n_units,
-        |  round(mean_pre, 6) AS mean_pre, round(mean_post, 6) AS mean_post,
-        |  round(mean_post - ((SELECT theta FROM th)
-        |    * (mean_pre - (SELECT meanx FROM th))), 6) AS mean_post_adj,
-        |  round(var_post, 2) AS var_post,
-        |  round((var_post - ((2.0 * (SELECT theta FROM th)) * cov))
-        |    + (((SELECT theta FROM th) * (SELECT theta FROM th)) * var_x),
-        |    2) AS var_post_adj,
-        |  round((SELECT theta FROM th), 6) AS theta
-        |FROM e ORDER BY variant""".stripMargin,
-    "q310_mg_heavy_hitters" ->
-      """WITH tok AS (SELECT unnest(string_split_regex(trim(lower(text)),
-        |    '\s+')) AS item FROM documents),
-        |tot AS (SELECT count(*) AS n FROM tok)
-        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
-        |FROM tok CROSS JOIN tot GROUP BY item, n
-        |HAVING count(*) * 30 > n
-        |ORDER BY cnt DESC, item""".stripMargin,
-    "q311_modularity" ->
-      """WITH el AS (SELECT DISTINCT
-        |    least('c' || o_custkey, 's' || l_suppkey) AS a,
-        |    greatest('c' || o_custkey, 's' || l_suppkey) AS b
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  WHERE ('c' || o_custkey) <> ('s' || l_suppkey)),
-        |asg AS (SELECT 'c' || c_custkey AS node, 'n' || c_nationkey AS comm
-        |    FROM customer
-        |  UNION ALL
-        |  SELECT 's' || s_suppkey, 'n' || s_nationkey FROM supplier),
-        |t AS (SELECT el.a, el.b, ca.comm AS ca, cb.comm AS cb
-        |  FROM el JOIN asg ca ON el.a = ca.node
-        |    JOIN asg cb ON el.b = cb.node),
-        |mm AS (SELECT count(*) AS m FROM t),
-        |deg AS (SELECT node, comm, count(*) AS d FROM
-        |    (SELECT a AS node, ca AS comm FROM t
-        |     UNION ALL SELECT b, cb FROM t) GROUP BY 1, 2),
-        |pc AS (SELECT comm, CAST(count(*) AS BIGINT) AS n_nodes,
-        |    CAST(sum(d) AS BIGINT) AS deg_sum FROM deg GROUP BY 1),
-        |ie AS (SELECT ca AS comm, CAST(count(*) AS BIGINT) AS in_edges
-        |  FROM t WHERE ca = cb GROUP BY 1)
-        |SELECT pc.comm AS community, n_nodes,
-        |  coalesce(in_edges, CAST(0 AS BIGINT)) AS in_edges, deg_sum,
-        |  round((CAST(4 * mm.m * coalesce(in_edges, 0) AS DOUBLE)
-        |      - CAST(deg_sum * deg_sum AS DOUBLE))
-        |    / (4.0 * (CAST(mm.m AS DOUBLE) * CAST(mm.m AS DOUBLE))), 9)
-        |    AS contrib
-        |FROM pc LEFT JOIN ie ON pc.comm = ie.comm CROSS JOIN mm
-        |ORDER BY community""".stripMargin,
-    "q307_top_movers" ->
-      """WITH li AS (SELECT l_partkey AS k,
-        |    CASE WHEN l_shipdate < TIMESTAMP '1998-01-01'
-        |      THEN 'a' ELSE 'b' END AS p,
-        |    CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-        |      AS BIGINT) AS cents
-        |  FROM lineitem),
-        |a AS (SELECT k, CAST(sum(cents) AS BIGINT) AS v_a FROM li
-        |      WHERE p = 'a' GROUP BY 1),
-        |b AS (SELECT k, CAST(sum(cents) AS BIGINT) AS v_b FROM li
-        |      WHERE p = 'b' GROUP BY 1),
-        |ra AS (SELECT k, v_a,
-        |       row_number() OVER (ORDER BY v_a DESC, k ASC) AS rank_a
-        |       FROM a),
-        |rb AS (SELECT k, v_b,
-        |       row_number() OVER (ORDER BY v_b DESC, k ASC) AS rank_b
-        |       FROM b),
-        |j AS (SELECT ra.k, v_a, v_b, rank_a, rank_b,
-        |        rank_a - rank_b AS delta
-        |      FROM ra JOIN rb ON ra.k = rb.k)
-        |SELECT k AS l_partkey, v_a, v_b,
-        |  CAST(rank_a AS BIGINT) AS rank_a,
-        |  CAST(rank_b AS BIGINT) AS rank_b, CAST(delta AS BIGINT) AS delta
-        |FROM j ORDER BY abs(delta) DESC, l_partkey LIMIT 25""".stripMargin,
-    "q306_pair_forensics" ->
-      s"""WITH u AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 100000, text FROM documents
-         |  WHERE doc_id % 10 = 0),
-         |pr AS (SELECT * FROM (VALUES (10, 100010), (20, 100020),
-         |    (33, 77), (40, 100050)) AS t(id_a, id_b)),
-         |ids AS (SELECT id_a AS id FROM pr UNION SELECT id_b FROM pr),
-         |nd AS (SELECT u.* FROM u WHERE u.doc_id IN (SELECT id FROM ids)),
-         |t AS (SELECT doc_id, $shingle3Sql AS sh, md5(text) AS th
-         |      FROM (SELECT doc_id, text,
-         |        string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |        FROM nd)),
-         |tok AS (SELECT doc_id, ${h60Sql("t")}::BIGINT AS h
-         |  FROM (SELECT doc_id,
-         |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
-         |    FROM nd)),
-         |sig AS (SELECT doc_id, $simhashBitsSql AS s FROM tok
-         |        GROUP BY doc_id),
-         |f AS (SELECT t.doc_id, sh, th, s FROM t
-         |      JOIN sig ON t.doc_id = sig.doc_id)
-         |SELECT CAST(pr.id_a AS BIGINT) AS id_a,
-         |  CAST(pr.id_b AS BIGINT) AS id_b,
-         |  CAST(len(a.sh) AS BIGINT) AS n_sh_a,
-         |  CAST(len(b.sh) AS BIGINT) AS n_sh_b,
-         |  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_shared,
-         |  CASE WHEN (len(a.sh) + len(b.sh)
-         |        - len(list_intersect(a.sh, b.sh))) > 0
-         |    THEN round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |      / CAST(len(a.sh) + len(b.sh)
-         |             - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 6)
-         |  END AS jaccard,
-         |  CASE WHEN least(len(a.sh), len(b.sh)) > 0
-         |    THEN round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |      / CAST(least(len(a.sh), len(b.sh)) AS DOUBLE), 6)
-         |  END AS containment,
-         |  CAST(bit_count(xor(a.s, b.s)) AS BIGINT) AS hamming,
-         |  a.th = b.th AS exact
-         |FROM pr JOIN f a ON pr.id_a = a.doc_id
-         |  JOIN f b ON pr.id_b = b.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q305_overlap_audit" ->
-      s"""WITH au AS (SELECT DISTINCT user_id FROM events
-         |    WHERE user_id % 2 = 0),
-         |bu AS (SELECT DISTINCT user_id FROM events
-         |    WHERE user_id % 3 = 0),
-         |ex AS (SELECT
-         |    (SELECT CAST(count(*) AS BIGINT) FROM au) AS exact_a,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM bu) AS exact_b,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM au
-         |     WHERE user_id IN (SELECT user_id FROM bu))
-         |      AS exact_intersection),
-         |ha AS (SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))
-         |    ::UBIGINT AS hv FROM events WHERE user_id % 2 = 0),
-         |hb AS (SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))
-         |    ::UBIGINT AS hv FROM events WHERE user_id % 3 = 0),
-         |ra AS (SELECT hv & 255 AS bucket, max(${hllRhoSql("hv >> 8", 52)})
-         |       AS M FROM ha GROUP BY 1),
-         |rb AS (SELECT hv & 255 AS bucket, max(${hllRhoSql("hv >> 8", 52)})
-         |       AS M FROM hb GROUP BY 1),
-         |ru AS (SELECT bucket, max(M) AS M FROM
-         |       (SELECT * FROM ra UNION ALL SELECT * FROM rb) GROUP BY 1),
-         |regs AS (SELECT 'a' AS s, bucket, M FROM ra
-         |  UNION ALL SELECT 'b', bucket, M FROM rb
-         |  UNION ALL SELECT 'u', bucket, M FROM ru),
-         |e AS (SELECT s,
-         |        list_reduce(list(power(2.0, -M) ORDER BY bucket),
-         |          (a, b) -> a + b) + (256.0 - count(*)) AS z,
-         |        256.0 - count(*) AS v0
-         |      FROM regs GROUP BY 1),
-         |x AS (SELECT s,
-         |        CASE WHEN (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z
-         |               <= 640.0 AND v0 > 0.0
-         |          THEN 256.0 * ln(256.0 / v0)
-         |          ELSE (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z
-         |        END AS est
-         |      FROM e),
-         |f AS (SELECT
-         |    (SELECT est FROM x WHERE s = 'a') AS ea,
-         |    (SELECT est FROM x WHERE s = 'b') AS eb,
-         |    (SELECT est FROM x WHERE s = 'u') AS eu)
-         |SELECT exact_a, exact_b, exact_intersection,
-         |  round(ea, 6) AS est_a, round(eb, 6) AS est_b,
-         |  round(greatest(0.0, (ea + eb) - eu), 6) AS est_intersection,
-         |  round((ea - CAST(exact_a AS DOUBLE)) / CAST(exact_a AS DOUBLE),
-         |    6) AS rel_err_a,
-         |  round((eb - CAST(exact_b AS DOUBLE)) / CAST(exact_b AS DOUBLE),
-         |    6) AS rel_err_b
-         |FROM ex CROSS JOIN f""".stripMargin,
-    "q304_hll_overlap" ->
-      s"""WITH ha AS (SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))
-         |    ::UBIGINT AS hv FROM events WHERE user_id % 2 = 0),
-         |hb AS (SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))
-         |    ::UBIGINT AS hv FROM events WHERE user_id % 3 = 0),
-         |ra AS (SELECT hv & 255 AS bucket, max(${hllRhoSql("hv >> 8", 52)})
-         |       AS M FROM ha GROUP BY 1),
-         |rb AS (SELECT hv & 255 AS bucket, max(${hllRhoSql("hv >> 8", 52)})
-         |       AS M FROM hb GROUP BY 1),
-         |ru AS (SELECT bucket, max(M) AS M FROM
-         |       (SELECT * FROM ra UNION ALL SELECT * FROM rb) GROUP BY 1),
-         |regs AS (SELECT 'a' AS s, bucket, M FROM ra
-         |  UNION ALL SELECT 'b', bucket, M FROM rb
-         |  UNION ALL SELECT 'u', bucket, M FROM ru),
-         |e AS (SELECT s,
-         |        list_reduce(list(power(2.0, -M) ORDER BY bucket),
-         |          (a, b) -> a + b) + (256.0 - count(*)) AS z,
-         |        256.0 - count(*) AS v0
-         |      FROM regs GROUP BY 1),
-         |x AS (SELECT s,
-         |        CASE WHEN (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z
-         |               <= 640.0 AND v0 > 0.0
-         |          THEN 256.0 * ln(256.0 / v0)
-         |          ELSE (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z
-         |        END AS est
-         |      FROM e),
-         |f AS (SELECT
-         |    (SELECT est FROM x WHERE s = 'a') AS ea,
-         |    (SELECT est FROM x WHERE s = 'b') AS eb,
-         |    (SELECT est FROM x WHERE s = 'u') AS eu)
-         |SELECT round(ea, 6) AS est_a, round(eb, 6) AS est_b,
-         |  round(eu, 6) AS est_union,
-         |  round(greatest(0.0, (ea + eb) - eu), 6) AS est_intersection,
-         |  round(CASE WHEN eu > 0.0
-         |    THEN greatest(0.0, (ea + eb) - eu) / eu ELSE 0.0 END, 6)
-         |    AS jaccard
-         |FROM f""".stripMargin,
-    "q303_group_kmv_quantiles" ->
-      """WITH b AS (SELECT source AS grp, doc_id AS id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END
-        |      AS DOUBLE) AS value,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':7'),
-        |      1, 15)) AS BIGINT) AS pr
-        |  FROM documents),
-        |r AS (SELECT grp, id, value,
-        |    row_number() OVER (PARTITION BY grp ORDER BY pr ASC, id ASC)
-        |      AS rk
-        |  FROM b),
-        |s AS (SELECT grp, id, value FROM r WHERE rk <= 64),
-        |r2 AS (SELECT grp, id, value,
-        |    row_number() OVER (PARTITION BY grp
-        |                       ORDER BY value ASC, id ASC) AS rk,
-        |    count(*) OVER (PARTITION BY grp) AS m
-        |  FROM s),
-        |qs AS (SELECT unnest(CAST([0.5, 0.9] AS DOUBLE[])) AS q)
-        |SELECT grp AS "group", q, value AS est,
-        |  CAST(m AS BIGINT) AS sample_size
-        |FROM r2 JOIN qs ON rk = greatest(1, CAST(ceil(q * m) AS BIGINT))
-        |ORDER BY "group", q""".stripMargin,
-    "q300_null_comiss" ->
-      """WITH b AS (SELECT
-        |    CASE WHEN event_id % 7 = 0 THEN 1 ELSE 0 END AS np,
-        |    CASE WHEN event_id % 14 = 0 OR event_id % 5 = 0
-        |      THEN 1 ELSE 0 END AS nv,
-        |    CASE WHEN event_id % 11 = 0 THEN 1 ELSE 0 END AS nt
-        |  FROM events),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(np * nv) AS BIGINT) AS b1,
-        |    CAST(sum(np * (1 - nv)) AS BIGINT) AS oa1,
-        |    CAST(sum((1 - np) * nv) AS BIGINT) AS ob1,
-        |    CAST(sum(np * nt) AS BIGINT) AS b2,
-        |    CAST(sum(np * (1 - nt)) AS BIGINT) AS oa2,
-        |    CAST(sum((1 - np) * nt) AS BIGINT) AS ob2,
-        |    CAST(sum(nv * nt) AS BIGINT) AS b3,
-        |    CAST(sum(nv * (1 - nt)) AS BIGINT) AS oa3,
-        |    CAST(sum((1 - nv) * nt) AS BIGINT) AS ob3
-        |  FROM b),
-        |p AS (
-        |  SELECT 'props' AS col_a, 'value' AS col_b, n,
-        |    b1 AS bn, oa1 AS oa, ob1 AS ob FROM s
-        |  UNION ALL SELECT 'props', 'event_type', n, b2, oa2, ob2 FROM s
-        |  UNION ALL SELECT 'value', 'event_type', n, b3, oa3, ob3 FROM s),
-        |f AS (SELECT col_a, col_b, n, bn, oa, ob,
-        |        n - bn - oa - ob AS neither FROM p)
-        |SELECT col_a, col_b, n, bn AS both_null, oa AS only_a,
-        |  ob AS only_b, neither,
-        |  CASE WHEN sqrt(CAST(bn + oa AS DOUBLE) * CAST(ob + neither AS
-        |      DOUBLE) * CAST(bn + ob AS DOUBLE) * CAST(oa + neither AS
-        |      DOUBLE)) = 0 THEN NULL
-        |    ELSE round((CAST(bn AS DOUBLE) * CAST(neither AS DOUBLE)
-        |      - CAST(oa AS DOUBLE) * CAST(ob AS DOUBLE))
-        |      / sqrt(CAST(bn + oa AS DOUBLE) * CAST(ob + neither AS
-        |        DOUBLE) * CAST(bn + ob AS DOUBLE) * CAST(oa + neither AS
-        |        DOUBLE)), 6) END AS phi
-        |FROM f ORDER BY col_a, col_b""".stripMargin,
-    "q301_neyman_alloc" ->
-      """WITH b AS (SELECT event_type AS stratum,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS v FROM events),
-        |s AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_rows,
-        |        CAST(sum(v) AS BIGINT) AS sv,
-        |        sum(CAST(v AS HUGEINT) * v) AS ss
-        |      FROM b GROUP BY 1),
-        |d AS (SELECT stratum, n_rows,
-        |        CASE WHEN n_rows > 1 THEN
-        |          sqrt((CAST(n_rows AS DOUBLE) * CAST(ss AS DOUBLE)
-        |            - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))
-        |            / (CAST(n_rows AS DOUBLE)
-        |               * CAST(n_rows - 1 AS DOUBLE))) / 1000000.0
-        |        ELSE 0.0 END AS std
-        |      FROM s),
-        |w AS (SELECT stratum, n_rows, std,
-        |        CAST(n_rows AS DOUBLE) * std AS weight FROM d),
-        |t AS (SELECT sum(weight) AS ws FROM w)
-        |SELECT stratum, n_rows, round(std, 6) AS std,
-        |  round(weight, 4) AS weight,
-        |  round(CASE WHEN (SELECT ws FROM t) > 0.0
-        |    THEN (1000.0 * weight) / (SELECT ws FROM t)
-        |    ELSE 0.0 END, 6) AS alloc
-        |FROM w ORDER BY stratum""".stripMargin,
-    "q302_match_disposition" -> {
-      def fuzzy(f: Linkage.FieldSpec): String =
-        s"""CASE WHEN ua.${f.column} = ub.${f.column} THEN ${f.wExactMicro}
-           |      WHEN jaro_winkler_similarity(ua.${f.column}, ub.${f.column})
-           |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-           |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-      val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-      s"""WITH $linkageCtes,
-         |o AS (SELECT CASE WHEN id_a % 2 = 0 THEN id_a ELSE id_b END AS ida,
-         |             CASE WHEN id_a % 2 = 0 THEN id_b ELSE id_a END AS idb
-         |      FROM pairs WHERE id_a % 2 <> id_b % 2),
-         |s AS (SELECT o.ida, o.idb,
-         |    (${fuzzy(fName)}
-         |     + ${fuzzy(fPhone)}
-         |     + CASE WHEN ua.bal = ub.bal THEN ${fBal.wExactMicro}
-         |         ELSE ${fBal.wDisagreeMicro} END
-         |     + CASE WHEN ua.seg = ub.seg THEN ${fSeg.wExactMicro}
-         |         ELSE ${fSeg.wDisagreeMicro} END) AS sc
-         |  FROM o JOIN u ua ON ua.id = o.ida JOIN u ub ON ub.id = o.idb),
-         |f AS (SELECT * FROM s WHERE sc >= 3000000),
-         |ra AS (SELECT ida, idb, sc, row_number() OVER (PARTITION BY ida
-         |         ORDER BY sc DESC, idb ASC) AS r FROM f),
-         |rb AS (SELECT ida, idb, row_number() OVER (PARTITION BY idb
-         |         ORDER BY sc DESC, ida ASC) AS r FROM f),
-         |mm AS (SELECT ra.ida FROM ra JOIN rb ON ra.ida = rb.ida
-         |         AND ra.idb = rb.idb AND rb.r = 1 WHERE ra.r = 1),
-         |cl AS (SELECT u.id AS ida,
-         |    CASE WHEN u.id IN (SELECT ida FROM mm) THEN 'matched'
-         |         WHEN u.id IN (SELECT ida FROM f) THEN 'lost_tie'
-         |         WHEN u.id IN (SELECT ida FROM s) THEN 'below_threshold'
-         |         ELSE 'no_candidate' END AS disposition
-         |  FROM u WHERE u.id % 2 = 0)
-         |SELECT disposition, CAST(count(*) AS BIGINT) AS n
-         |FROM cl GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q299_robust_trend" ->
-      """WITH b AS (SELECT event_type AS g, event_id AS id,
-        |    CAST((epoch_us(ts) - epoch_us(ts) % 86400000000)
-        |      // 86400000000 AS DOUBLE) AS x,
-        |    value AS y
-        |  FROM events),
-        |h AS (SELECT g, id, x, y,
-        |    CAST(('0x' || substr(md5(g || ':' || CAST(id AS VARCHAR)
-        |      || ':rt'), 1, 15)) AS BIGINT) AS hv
-        |  FROM b),
-        |r AS (SELECT g, id, x, y,
-        |    row_number() OVER (PARTITION BY g ORDER BY hv DESC, id ASC)
-        |      AS rk
-        |  FROM h),
-        |p AS (SELECT g, (rk - 1) // 2 AS pair, x, y, rk FROM r),
-        |e AS (SELECT g, pair, count(*) AS n,
-        |    arg_min(x, rk) AS x1, arg_min(y, rk) AS y1,
-        |    arg_max(x, rk) AS x2, arg_max(y, rk) AS y2
-        |  FROM p GROUP BY 1, 2 HAVING count(*) = 2),
-        |s AS (SELECT g, pair, (y2 - y1) / (x2 - x1) AS sl
-        |      FROM e WHERE x2 <> x1),
-        |np AS (SELECT g, CAST(count(*) AS BIGINT) AS n_pairs
-        |       FROM s GROUP BY 1),
-        |rs AS (SELECT g, sl,
-        |    row_number() OVER (PARTITION BY g ORDER BY sl ASC, pair ASC)
-        |      AS rk,
-        |    count(*) OVER (PARTITION BY g) AS n FROM s),
-        |sm AS (SELECT g, sl AS slope FROM rs
-        |       WHERE rk = greatest(1, CAST(ceil(0.5 * n) AS BIGINT))),
-        |res AS (SELECT b.g, b.id, b.y - (sm.slope * b.x) AS r
-        |        FROM b JOIN sm ON b.g = sm.g),
-        |rr AS (SELECT g, r,
-        |    row_number() OVER (PARTITION BY g ORDER BY r ASC, id ASC)
-        |      AS rk,
-        |    count(*) OVER (PARTITION BY g) AS n FROM res),
-        |im AS (SELECT g, r AS intercept FROM rr
-        |       WHERE rk = greatest(1, CAST(ceil(0.5 * n) AS BIGINT)))
-        |SELECT np.g AS event_type, n_pairs, round(sm.slope, 6) AS slope,
-        |  round(im.intercept, 6) AS intercept
-        |FROM np JOIN sm ON np.g = sm.g JOIN im ON np.g = im.g
-        |ORDER BY event_type""".stripMargin,
-    "q298_pruning_report" ->
-      s"""WITH s AS (SELECT min(l_partkey) AS mn0, max(l_partkey) AS mx0,
-         |             min(l_suppkey) AS mn1, max(l_suppkey) AS mx1
-         |           FROM lineitem),
-         |base AS (SELECT l_orderkey * 10 + l_linenumber AS rid,
-         |           l_partkey, l_suppkey FROM lineitem),
-         |b AS (SELECT rid, l_partkey, l_suppkey,
-         |        ((l_partkey - mn0) * 65536) // (mx0 - mn0 + 1) AS b0,
-         |        ((l_suppkey - mn1) * 65536) // (mx1 - mn1 + 1) AS b1
-         |      FROM base CROSS JOIN s),
-         |z AS (SELECT rid, l_partkey, l_suppkey,
-         |        CAST(${zInterleaveSql(2, 16)} AS BIGINT) AS k FROM b),
-         |rz AS (SELECT l_partkey, l_suppkey,
-         |         row_number() OVER (ORDER BY k, rid) AS rk,
-         |         count(*) OVER () AS n FROM z),
-         |pz AS (SELECT ((rk - 1) * 32) // n AS p, l_partkey, l_suppkey
-         |       FROM rz),
-         |rl AS (SELECT l_partkey, l_suppkey,
-         |         row_number() OVER (ORDER BY l_partkey, rid) AS rk,
-         |         count(*) OVER () AS n FROM base),
-         |pl AS (SELECT ((rk - 1) * 32) // n AS p, l_partkey, l_suppkey
-         |       FROM rl),
-         |st AS (
-         |  SELECT 'zorder' AS layout, p, 'l_partkey' AS col_name,
-         |    min(l_partkey) AS mn, max(l_partkey) AS mx FROM pz GROUP BY p
-         |  UNION ALL SELECT 'zorder', p, 'l_suppkey',
-         |    min(l_suppkey), max(l_suppkey) FROM pz GROUP BY p
-         |  UNION ALL SELECT 'linear', p, 'l_partkey',
-         |    min(l_partkey), max(l_partkey) FROM pl GROUP BY p
-         |  UNION ALL SELECT 'linear', p, 'l_suppkey',
-         |    min(l_suppkey), max(l_suppkey) FROM pl GROUP BY p),
-         |pr AS (SELECT * FROM (VALUES
-         |    (0, 'l_partkey', 100, 120), (1, 'l_suppkey', 50, 55),
-         |    (2, 'l_partkey', 1, 400), (3, 'l_suppkey', 300, 310))
-         |  AS t(probe_id, col_name, lo, hi))
-         |SELECT layout, CAST(probe_id AS BIGINT) AS probe_id,
-         |  st.col_name, CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi,
-         |  CAST(count(*) AS BIGINT) AS n_partitions,
-         |  CAST(sum(CASE WHEN mx < lo OR mn > hi THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_skipped,
-         |  round(CAST(sum(CASE WHEN mx < lo OR mn > hi THEN 1 ELSE 0 END)
-         |      AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS skip_frac
-         |FROM st JOIN pr ON st.col_name = pr.col_name
-         |GROUP BY layout, probe_id, st.col_name, lo, hi
-         |ORDER BY layout, probe_id""".stripMargin,
-    "q297_reciprocal_match" -> {
-      def fuzzy(f: Linkage.FieldSpec): String =
-        s"""CASE WHEN ua.${f.column} = ub.${f.column} THEN ${f.wExactMicro}
-           |      WHEN jaro_winkler_similarity(ua.${f.column}, ub.${f.column})
-           |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-           |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-      val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-      s"""WITH $linkageCtes,
-         |o AS (SELECT CASE WHEN id_a % 2 = 0 THEN id_a ELSE id_b END AS ida,
-         |             CASE WHEN id_a % 2 = 0 THEN id_b ELSE id_a END AS idb
-         |      FROM pairs WHERE id_a % 2 <> id_b % 2),
-         |s AS (SELECT o.ida, o.idb,
-         |    (${fuzzy(fName)}
-         |     + ${fuzzy(fPhone)}
-         |     + CASE WHEN ua.bal = ub.bal THEN ${fBal.wExactMicro}
-         |         ELSE ${fBal.wDisagreeMicro} END
-         |     + CASE WHEN ua.seg = ub.seg THEN ${fSeg.wExactMicro}
-         |         ELSE ${fSeg.wDisagreeMicro} END) AS sc
-         |  FROM o JOIN u ua ON ua.id = o.ida JOIN u ub ON ub.id = o.idb),
-         |f AS (SELECT * FROM s WHERE sc >= 3000000),
-         |ra AS (SELECT ida, idb, sc, row_number() OVER (PARTITION BY ida
-         |         ORDER BY sc DESC, idb ASC) AS r FROM f),
-         |rb AS (SELECT ida, idb, row_number() OVER (PARTITION BY idb
-         |         ORDER BY sc DESC, ida ASC) AS r FROM f)
-         |SELECT ra.ida AS id_a, ra.idb AS id_b,
-         |  CAST(ra.sc AS BIGINT) AS score_micro
-         |FROM ra JOIN rb ON ra.ida = rb.ida AND ra.idb = rb.idb
-         |  AND rb.r = 1
-         |WHERE ra.r = 1 ORDER BY id_a""".stripMargin
-    },
-    "q296_stationary_dist" -> {
-      def rnd(k: Int): String =
-        s"""r$k AS MATERIALIZED (
-           |  SELECT ty.t,
-           |    coalesce(inf.v, 0.0) + coalesce(slf.v, 0.0) AS pi
-           |  FROM ty
-           |  LEFT JOIN (SELECT m.t2 AS t,
-           |      list_reduce(
-           |        list((p.pi * CAST(m.n AS DOUBLE)) / CAST(m.tot AS DOUBLE)
-           |             ORDER BY m.f),
-           |        (a, b) -> a + b) AS v
-           |    FROM m JOIN r${k - 1} p ON p.t = m.f GROUP BY m.t2) inf
-           |    ON inf.t = ty.t
-           |  LEFT JOIN (SELECT p.t, p.pi AS v FROM r${k - 1} p
-           |    WHERE p.t NOT IN (SELECT f FROM m)) slf
-           |    ON slf.t = ty.t)""".stripMargin
-      s"""WITH p0 AS (SELECT user_id, event_type,
-         |    lag(event_type) OVER (PARTITION BY user_id
-         |                          ORDER BY ts, event_id) AS prev
-         |  FROM events),
-         |c AS (SELECT prev AS f, event_type AS t2,
-         |        CAST(count(*) AS BIGINT) AS n
-         |      FROM p0 WHERE prev IS NOT NULL GROUP BY 1, 2),
-         |tt AS (SELECT f, CAST(sum(n) AS BIGINT) AS tot FROM c GROUP BY 1),
-         |m AS MATERIALIZED (SELECT c.f, c.t2, c.n, tt.tot
-         |     FROM c JOIN tt USING (f)),
-         |ty AS MATERIALIZED (SELECT DISTINCT t FROM
-         |     (SELECT f AS t FROM m UNION ALL SELECT t2 FROM m)),
-         |nt AS (SELECT CAST(count(*) AS DOUBLE) AS nt FROM ty),
-         |r0 AS MATERIALIZED (SELECT t, 1.0 / (SELECT nt FROM nt) AS pi
-         |     FROM ty),
-         |${rnd(1)},
-         |${rnd(2)},
-         |${rnd(3)}
-         |SELECT t, round(pi, 6) AS pi FROM r3 ORDER BY t""".stripMargin
-    },
-    "q294_link_prediction_capped" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-        |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-        |adj AS MATERIALIZED (SELECT x AS m, y AS n FROM e
-        |      UNION ALL SELECT y AS m, x AS n FROM e),
-        |deg AS MATERIALIZED (SELECT n, CAST(count(*) AS BIGINT) AS d
-        |      FROM adj GROUP BY 1),
-        |mids AS MATERIALIZED (SELECT adj.m, adj.n FROM adj
-        |      JOIN deg dm ON adj.m = dm.n WHERE dm.d <= 100),
-        |cm AS (SELECT a1.n AS a, a2.n AS b, CAST(count(*) AS BIGINT) AS common
-        |       FROM mids a1 JOIN mids a2 ON a1.m = a2.m AND a1.n < a2.n
-        |       GROUP BY 1, 2),
-        |cand AS (SELECT cm.a, cm.b, cm.common FROM cm
-        |         LEFT JOIN e ON cm.a = e.x AND cm.b = e.y
-        |         WHERE e.x IS NULL),
-        |sc AS (SELECT a, b, common,
-        |         CAST(common AS DOUBLE) /
-        |           CAST((da.d + db.d) - common AS DOUBLE) AS j
-        |       FROM cand JOIN deg da ON cand.a = da.n
-        |              JOIN deg db ON cand.b = db.n),
-        |top AS (SELECT a, b, common, j FROM sc
-        |        QUALIFY row_number() OVER (ORDER BY j DESC, a, b) <= 20)
-        |SELECT a AS item_a, b AS item_b, common, round(j, 6) AS jaccard
-        |FROM top ORDER BY item_a, item_b""".stripMargin,
-    "q295_harmonic2_capped" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-        |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-        |adj AS MATERIALIZED (SELECT x AS m, y AS n FROM e
-        |      UNION ALL SELECT y AS m, x AS n FROM e),
-        |deg AS MATERIALIZED (SELECT n, CAST(count(*) AS BIGINT) AS d
-        |      FROM adj GROUP BY 1),
-        |mids AS MATERIALIZED (SELECT adj.m, adj.n FROM adj
-        |      JOIN deg dm ON adj.m = dm.n WHERE dm.d <= 100),
-        |th AS MATERIALIZED (SELECT DISTINCT a1.n AS a, a2.n AS z
-        |      FROM mids a1 JOIN mids a2 ON a1.m = a2.m AND a1.n <> a2.n),
-        |n2 AS (SELECT a AS node, CAST(count(*) AS BIGINT) AS n2
-        |       FROM th
-        |       LEFT JOIN e e1 ON th.a = e1.x AND th.z = e1.y
-        |       LEFT JOIN e e2 ON th.a = e2.y AND th.z = e2.x
-        |       WHERE e1.x IS NULL AND e2.x IS NULL
-        |       GROUP BY 1),
-        |h AS (SELECT deg.n AS node, deg.d AS degree,
-        |        coalesce(n2.n2, 0) AS n2,
-        |        CAST(deg.d AS DOUBLE) + (CAST(0.5 AS DOUBLE) *
-        |          CAST(coalesce(n2.n2, 0) AS DOUBLE)) AS harmonic
-        |      FROM deg LEFT JOIN n2 ON deg.n = n2.node)
-        |SELECT CAST(row_number() OVER (ORDER BY harmonic DESC, node) AS INT)
-        |    AS rank,
-        |  node, degree, n2, round(harmonic, 6) AS harmonic
-        |FROM h QUALIFY rank <= 20 ORDER BY rank""".stripMargin,
-    "q291_window_suite" -> windowSuiteSql,
-    "q292_set_ops" -> setOpsSql,
-    "q290_er_pair_metrics" -> {
-      def fz(f: Linkage.FieldSpec): String =
-        s"""CASE WHEN ua.${f.column} = ub.${f.column} THEN ${f.wExactMicro}
-           |      WHEN jaro_winkler_similarity(ua.${f.column}, ub.${f.column})
-           |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-           |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-      val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-      s"""WITH RECURSIVE $linkageCtes,
-         |m AS (SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN u ua ON ua.id = p.id_a JOIN u ub ON ub.id = p.id_b
-         |  WHERE p.id_a % 2 <> p.id_b % 2
-         |    AND (${fz(fName)}
-         |     + ${fz(fPhone)}
-         |     + CASE WHEN ua.bal = ub.bal THEN ${fBal.wExactMicro}
-         |         ELSE ${fBal.wDisagreeMicro} END
-         |     + CASE WHEN ua.seg = ub.seg THEN ${fSeg.wExactMicro}
-         |         ELSE ${fSeg.wDisagreeMicro} END) >= 10000000),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM m
-         |  UNION SELECT id_b, id_a FROM m),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s),
-         |res AS (SELECT u.id, coalesce(comp.c, u.id) AS cl, u.id // 2 AS ck
-         |  FROM u LEFT JOIN comp ON comp.id = u.id),
-         |p1 AS (SELECT CAST(sum(m * (m - 1) // 2) AS BIGINT) AS pred_pairs
-         |  FROM (SELECT count(*) AS m FROM res GROUP BY cl)),
-         |p2 AS (SELECT CAST(sum(m * (m - 1) // 2) AS BIGINT) AS true_pairs
-         |  FROM (SELECT count(*) AS m FROM res GROUP BY ck)),
-         |p3 AS (SELECT CAST(sum(m * (m - 1) // 2) AS BIGINT) AS tp_pairs
-         |  FROM (SELECT count(*) AS m FROM res GROUP BY cl, ck))
-         |SELECT pred_pairs, true_pairs, tp_pairs,
-         |  round(CAST(tp_pairs AS DOUBLE) / CAST(pred_pairs AS DOUBLE), 6)
-         |    AS precision,
-         |  round(CAST(tp_pairs AS DOUBLE) / CAST(true_pairs AS DOUBLE), 6)
-         |    AS recall,
-         |  round(2.0 * CAST(tp_pairs AS DOUBLE)
-         |    / CAST(pred_pairs + true_pairs AS DOUBLE), 6) AS f1
-         |FROM p1 CROSS JOIN p2 CROSS JOIN p3""".stripMargin
-    },
-    "q273_er_resolution" -> {
-      def fz(f: Linkage.FieldSpec): String =
-        s"""CASE WHEN ua.${f.column} = ub.${f.column} THEN ${f.wExactMicro}
-           |      WHEN jaro_winkler_similarity(ua.${f.column}, ub.${f.column})
-           |        >= ${f.fuzzyThreshold.get} THEN ${f.wFuzzyMicro}
-           |      ELSE ${f.wDisagreeMicro} END""".stripMargin
-      val Seq(fName, fPhone, fBal, fSeg) = linkageFields
-      s"""WITH RECURSIVE $linkageCtes,
-         |m AS (SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN u ua ON ua.id = p.id_a JOIN u ub ON ub.id = p.id_b
-         |  WHERE p.id_a % 2 <> p.id_b % 2
-         |    AND (${fz(fName)}
-         |     + ${fz(fPhone)}
-         |     + CASE WHEN ua.bal = ub.bal THEN ${fBal.wExactMicro}
-         |         ELSE ${fBal.wDisagreeMicro} END
-         |     + CASE WHEN ua.seg = ub.seg THEN ${fSeg.wExactMicro}
-         |         ELSE ${fSeg.wDisagreeMicro} END) >= 10000000),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM m
-         |  UNION SELECT id_b, id_a FROM m),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s)
-         |SELECT u.id, coalesce(comp.c, u.id) AS cluster_id
-         |FROM u LEFT JOIN comp ON comp.id = u.id
-         |ORDER BY u.id""".stripMargin
-    },
-    "q272_detector_agreement" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id,
-         |    array_to_string(string_split_regex(trim(lower(text)),
-         |      '\\s+')[1:25], ' ') AS text
-         |  FROM documents WHERE doc_id % 7 = 0),
-         |tk AS (SELECT doc_id, text,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u),
-         |sh AS (SELECT doc_id, $shingle3Sql AS sh FROM tk),
-         |ex AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM u a JOIN u b ON a.doc_id < b.doc_id AND a.text = b.text),
-         |sp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    len(a.sh) AS na, len(b.sh) AS nb,
-         |    len(list_intersect(a.sh, b.sh)) AS inter
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-         |jp AS (SELECT id_a, id_b FROM sp
-         |  WHERE inter * 1.0 / (na + nb - inter) >= 0.55),
-         |cp AS (SELECT id_a, id_b FROM sp
-         |  WHERE inter * 1.0 / least(na, nb) >= 0.9),
-         |tok AS (SELECT doc_id, ${h60Sql("t")}::BIGINT AS h
-         |  FROM (SELECT doc_id, unnest(toks) AS t FROM tk)),
-         |sig AS (SELECT doc_id, $simhashBitsSql AS s FROM tok
-         |  GROUP BY doc_id),
-         |hp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.s, b.s)) <= 3),
-         |tg AS (
-         |  SELECT 'exact' AS det, id_a, id_b FROM ex
-         |  UNION ALL SELECT 'jaccard', id_a, id_b FROM jp
-         |  UNION ALL SELECT 'hamming', id_a, id_b FROM hp
-         |  UNION ALL SELECT 'containment', id_a, id_b FROM cp)
-         |SELECT x.det AS det_a, y.det AS det_b,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM tg x JOIN tg y ON x.id_a = y.id_a AND x.id_b = y.id_b
-         |  AND x.det <= y.det
-         |GROUP BY 1, 2 ORDER BY det_a, det_b""".stripMargin,
-    "q271_span_index" ->
-      """WITH t AS (SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 5
-        |    THEN list_transform(range(1, len(toks) - 3),
-        |      i -> array_to_string(toks[i:i+4], ' '))
-        |    ELSE [array_to_string(toks, ' ')] END AS grams FROM t),
-        |h AS (SELECT doc_id, list_transform(grams,
-        |    x -> ('0x' || substr(md5(x), 1, 15))::UBIGINT::BIGINT) AS hs
-        |  FROM g),
-        |fp AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, greatest(len(hs) - 3, 1) + 1),
-        |      j -> list_min(hs[j:j+3]))) AS fps FROM h),
-        |e AS (SELECT doc_id, unnest(fps) AS f FROM fp),
-        |hist AS (SELECT f, doc_id AS hist_id FROM e WHERE doc_id % 2 = 1),
-        |okh AS (SELECT f, hist_id FROM (
-        |    SELECT f, hist_id, count(*) OVER (PARTITION BY f) AS m FROM hist)
-        |  WHERE m <= 500),
-        |inc AS (SELECT f, doc_id AS inc_id FROM e WHERE doc_id % 2 = 0),
-        |sh AS (SELECT inc_id, hist_id, CAST(count(*) AS BIGINT) AS n_shared
-        |  FROM inc JOIN okh USING (f) GROUP BY 1, 2 HAVING count(*) >= 3),
-        |n AS (SELECT doc_id AS inc_id, len(fps) AS nf FROM fp)
-        |SELECT inc_id, hist_id, n_shared,
-        |  round(CAST(n_shared AS DOUBLE) / CAST(nf AS DOUBLE), 6)
-        |    AS containment
-        |FROM sh JOIN n USING (inc_id)
-        |ORDER BY inc_id, hist_id""".stripMargin,
-    "q270_blocking_quality" ->
-      s"""WITH $linkageCtes,
-         |pb AS (
-         |  SELECT 'block_0' AS pass, x.id AS ia, y.id AS ib
-         |  FROM bk x JOIN bk y ON x.pass = 0 AND y.pass = 0
-         |    AND x.bkey = y.bkey AND x.id < y.id
-         |  UNION ALL
-         |  SELECT 'block_1', x.id, y.id
-         |  FROM bk x JOIN bk y ON x.pass = 1 AND y.pass = 1
-         |    AND x.bkey = y.bkey AND x.id < y.id
-         |  UNION ALL SELECT 'union', id_a, id_b FROM pairs),
-         |jt AS (SELECT pb.pass, ua.ckey AS ta, ub.ckey AS tb
-         |  FROM pb JOIN u ua ON ua.id = pb.ia JOIN u ub ON ub.id = pb.ib),
-         |cnt AS (SELECT pass, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(sum(CASE WHEN ta = tb THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_true
-         |  FROM jt GROUP BY pass),
-         |tot AS (SELECT CAST(sum(g) AS BIGINT) AS n,
-         |    CAST(sum(g * (g - 1) // 2) AS BIGINT) AS total_true
-         |  FROM (SELECT count(*) AS g FROM u GROUP BY ckey))
-         |SELECT pass, n_pairs, n_true, total_true,
-         |  round(CAST(n_true AS DOUBLE) / CAST(total_true AS DOUBLE), 6)
-         |    AS completeness,
-         |  round(1.0 - CAST(n_pairs AS DOUBLE)
-         |    / CAST(n * (n - 1) // 2 AS DOUBLE), 6) AS reduction
-         |FROM cnt CROSS JOIN tot ORDER BY pass""".stripMargin,
-    "q268_cohort_value" ->
-      """WITH ev AS (SELECT user_id, event_type, value,
-        |    CAST((epoch_us(ts) - epoch_us(ts) % 604800000000)
-        |      // 604800000000 AS BIGINT) AS week
-        |  FROM events),
-        |c AS (SELECT user_id, min(week) AS cohort_week FROM ev GROUP BY 1),
-        |cells AS (SELECT cohort_week, week - cohort_week AS age_weeks,
-        |    CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS BIGINT)
-        |      AS purchase_cents,
-        |    CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_buyers
-        |  FROM ev JOIN c USING (user_id)
-        |  WHERE event_type = 'purchase'
-        |  GROUP BY 1, 2)
-        |SELECT cohort_week, age_weeks, purchase_cents, n_buyers,
-        |  CAST(sum(purchase_cents) OVER (PARTITION BY cohort_week
-        |    ORDER BY age_weeks
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_cents
-        |FROM cells ORDER BY cohort_week, age_weeks""".stripMargin,
-    "q267_dup_token_mass" ->
-      """WITH pt AS (SELECT source, text,
-        |    CAST(count(*) AS BIGINT) AS copies,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
-        |      AS w
-        |  FROM documents GROUP BY source, text)
-        |SELECT source, CAST(sum(copies) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_unique,
-        |  CAST(sum(copies * w) AS BIGINT) AS tokens_total,
-        |  CAST(sum(w) AS BIGINT) AS tokens_unique,
-        |  round(CAST(sum(copies * w) - sum(w) AS DOUBLE)
-        |    / CAST(sum(copies * w) AS DOUBLE), 6) AS dup_token_frac
-        |FROM pt GROUP BY source ORDER BY source""".stripMargin,
-    "q266_lift_curve" ->
-      s"""WITH d AS (SELECT doc_id, $qualitySql AS score,
-         |    (lang = 'en') AS label FROM documents),
-         |r AS (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id ASC)
-         |      AS rk,
-         |    count(*) OVER () AS n
-         |  FROM d),
-         |b AS (SELECT ((rk - 1) * 10) // n AS bucket,
-         |    CAST(count(*) AS BIGINT) AS cnt,
-         |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-         |  FROM r GROUP BY 1),
-         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS tn,
-         |    CAST(sum(n_pos) AS BIGINT) AS tp FROM b)
-         |SELECT CAST(bucket AS BIGINT) AS bucket, cnt, n_pos,
-         |  round(CAST(n_pos AS DOUBLE) / CAST(cnt AS DOUBLE), 6) AS rate,
-         |  round(CAST(n_pos * tn AS DOUBLE) / CAST(cnt * tp AS DOUBLE), 6)
-         |    AS lift
-         |FROM b CROSS JOIN t ORDER BY bucket""".stripMargin,
-    "q265_time_travel" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id % 2 = 0 ORDER BY doc_id""".stripMargin,
-    "q262_grouping_sets" ->
-      """WITH b AS (SELECT event_type,
-        |    CAST((epoch_us(ts) // 86400000000 + 3) % 7 + 1 AS INT) AS dow
-        |  FROM events)
-        |SELECT event_type, dow, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(GROUPING(event_type) AS INT) AS g_type,
-        |  CAST(GROUPING(dow) AS INT) AS g_dow
-        |FROM b GROUP BY GROUPING SETS ((event_type, dow), (event_type),
-        |  (dow), ())
-        |ORDER BY g_type, g_dow, event_type NULLS FIRST,
-        |  dow NULLS FIRST""".stripMargin,
-    "q263_contribution" ->
-      """WITH rev AS (
-        |  SELECT n_name, year(o_orderdate) AS o_year,
-        |    CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount))
-        |      * 100.0) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1, 2)
-        |SELECT n_name, o_year, cents,
-        |  CAST(sum(cents) OVER (PARTITION BY n_name) AS BIGINT)
-        |    AS nation_cents,
-        |  round(CAST(cents AS DOUBLE) /
-        |    CAST(sum(cents) OVER (PARTITION BY n_name) AS DOUBLE), 6)
-        |    AS share
-        |FROM rev ORDER BY n_name, o_year""".stripMargin,
-    "q261_hamming_index" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${h60Sql("t")}::BIGINT AS h
-         |  FROM (SELECT doc_id,
-         |      unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
-         |    FROM documents)),
-         |sigh AS (SELECT doc_id, $simhashBitsSql AS s FROM tok
-         |  GROUP BY doc_id),
-         |sigi AS (SELECT doc_id + 100000 AS inc_id, s FROM sigh
-         |  WHERE doc_id % 10 = 0)
-         |SELECT i.inc_id, h.doc_id AS hist_id,
-         |  bit_count(xor(i.s, h.s)) AS hamming
-         |FROM sigi i JOIN sigh h ON bit_count(xor(i.s, h.s)) <= 3
-         |ORDER BY inc_id, hist_id""".stripMargin,
-    "q257_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  year(l_shipdate) AS l_year,
-        |  CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q258_tpch_q8" ->
-      """WITH base AS (
-        |  SELECT year(o_orderdate) AS o_year, n1.n_name AS supp_nation,
-        |    CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |      AS BIGINT) AS cents
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  JOIN region ON n2.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |  WHERE p_type = 'PROMO' AND r_name = 'ASIA'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01')
-        |SELECT o_year,
-        |  CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN cents ELSE 0 END)
-        |    AS BIGINT) AS nation_cents,
-        |  CAST(sum(cents) AS BIGINT) AS total_cents,
-        |  round(CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN cents
-        |      ELSE 0 END) AS DOUBLE) / CAST(sum(cents) AS DOUBLE), 6)
-        |    AS mkt_share
-        |FROM base GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q259_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount))
-        |      * 100.0) AS BIGINT)) AS BIGINT) AS total_revenue_cents
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY l_suppkey),
-        |mx AS (SELECT max(total_revenue_cents) AS m FROM rev)
-        |SELECT s_suppkey, s_name, total_revenue_cents
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey CROSS JOIN mx
-        |WHERE total_revenue_cents = mx.m
-        |ORDER BY s_suppkey""".stripMargin,
-    "q260_tpch_q19" ->
-      """SELECT
-        |  CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-        |    AND l_quantity BETWEEN 1 AND 11)
-        |  OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-        |    AND l_quantity BETWEEN 10 AND 20)
-        |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-        |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q256_vector_index" ->
-      """SELECT q.vec_id AS query_id,
-        |  row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |      CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS rank,
-        |  c.vec_id AS neighbor_id,
-        |  round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])), 6) AS cosine
-        |FROM embeddings q, embeddings c
-        |WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id
-        |QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q255_coherent_sample" ->
-      """WITH so AS (SELECT o_orderkey FROM orders
-        |  WHERE ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::UBIGINT
-        |    % 1000000 < 100000),
-        |sl AS (SELECT l_orderkey,
-        |    CAST(round(l_extendedprice * 100.0) AS BIGINT) AS cents
-        |  FROM lineitem
-        |  WHERE ('0x' || substr(md5(l_orderkey::VARCHAR), 1, 15))::UBIGINT
-        |    % 1000000 < 100000),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n_items_sampled,
-        |    CAST(sum(cents) AS BIGINT) AS rev_sampled_cents FROM sl),
-        |orph AS (SELECT CAST(count(*) AS BIGINT) AS n_orphans FROM sl
-        |  WHERE l_orderkey NOT IN (SELECT o_orderkey FROM so)),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_items_total,
-        |    CAST(sum(CAST(round(l_extendedprice * 100.0) AS BIGINT))
-        |      AS BIGINT) AS rev_total_cents
-        |  FROM lineitem),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_orders_sampled FROM so)
-        |SELECT n_orders_sampled, n_items_sampled, rev_sampled_cents,
-        |  n_orphans, n_items_total, rev_total_cents,
-        |  round((CAST(rev_sampled_cents AS DOUBLE) * 10.0)
-        |    / CAST(rev_total_cents AS DOUBLE), 6) AS est_ratio
-        |FROM n CROSS JOIN s CROSS JOIN orph CROSS JOIN t""".stripMargin,
-    "q254_dwell_matrix" ->
-      """WITH a AS (SELECT user_id, event_id, event_type AS to_type,
-        |    epoch_us(ts) AS us
-        |  FROM events),
-        |t AS (SELECT
-        |    lag(to_type) OVER (PARTITION BY user_id ORDER BY us, event_id)
-        |      AS from_type,
-        |    to_type,
-        |    us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
-        |      AS gap
-        |  FROM a),
-        |g AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(gap) AS BIGINT) AS total,
-        |    CAST(min(gap) AS BIGINT) AS mn, CAST(max(gap) AS BIGINT) AS mx
-        |  FROM t WHERE from_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |  round((CAST(total AS DOUBLE) / CAST(n AS DOUBLE)) / 1000000.0, 6)
-        |    AS mean_gap_s,
-        |  round(CAST(mn AS DOUBLE) / 1000000.0, 6) AS min_gap_s,
-        |  round(CAST(mx AS DOUBLE) / 1000000.0, 6) AS max_gap_s
-        |FROM g ORDER BY from_type, to_type""".stripMargin,
-    "q251_burst_collapse" ->
-      """WITH a AS (SELECT user_id, event_type, event_id,
-        |    epoch_us(ts) AS us
-        |  FROM events),
-        |f AS (SELECT event_type,
-        |    CASE WHEN lag(us) OVER (PARTITION BY user_id, event_type
-        |        ORDER BY us, event_id) IS NULL
-        |      OR us - lag(us) OVER (PARTITION BY user_id, event_type
-        |        ORDER BY us, event_id) > 600000000
-        |      THEN 1 ELSE 0 END AS first
-        |  FROM a)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(first) AS BIGINT) AS n_bursts,
-        |  round(CAST(count(*) - sum(first) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 6) AS drop_frac
-        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q252_user_growth" ->
-      """WITH b AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    user_id AS u
-        |  FROM events),
-        |act AS (SELECT day, CAST(count(*) AS BIGINT) AS n_active
-        |  FROM (SELECT DISTINCT day, u FROM b) GROUP BY day),
-        |fs AS (SELECT u, min(day) AS day FROM b GROUP BY u),
-        |nw AS (SELECT day, CAST(count(*) AS BIGINT) AS n_new
-        |  FROM fs GROUP BY day)
-        |SELECT act.day, n_active, coalesce(n_new, 0) AS n_new,
-        |  CAST(sum(coalesce(n_new, 0)) OVER (ORDER BY act.day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_users
-        |FROM act LEFT JOIN nw USING (day)
-        |ORDER BY act.day""".stripMargin,
-    "q250_group_weighted_sample" ->
-      """WITH d AS (SELECT source, doc_id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE)
-        |      AS w
-        |  FROM documents),
-        |p AS (SELECT source, doc_id, w,
-        |    w / ((('0x' || substr(md5(doc_id::VARCHAR || ':7'), 1, 15))
-        |      ::UBIGINT + 1)::DOUBLE / 1152921504606846976.0) AS priority
-        |  FROM d),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY source
-        |      ORDER BY priority DESC, doc_id ASC) AS rk
-        |  FROM p),
-        |tau AS (SELECT source,
-        |    coalesce(max(CASE WHEN rk = 6 THEN priority END), 0.0) AS tau
-        |  FROM r GROUP BY source)
-        |SELECT r.source, doc_id, w, CAST(rk AS BIGINT) AS pick,
-        |  round(greatest(w, tau), 6) AS est_w
-        |FROM r JOIN tau USING (source)
-        |WHERE rk <= 5 ORDER BY source, pick""".stripMargin,
-    "q249_dataset_card" ->
-      s"""WITH b AS (SELECT doc_id, text, source,
-         |    CASE WHEN length(trim(text)) = 0 THEN 0
-         |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS w,
-         |    $qualitySql AS q
-         |  FROM documents),
-         |s AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(w) AS BIGINT) AS n_tokens,
-         |    CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-         |    CAST(count(DISTINCT text) AS BIGINT) AS n_texts,
-         |    CAST(sum(CAST(round(q * 1000000.0) AS BIGINT)) AS DOUBLE)
-         |      / 1000000.0 AS qsum
-         |  FROM b),
-         |r AS (SELECT w, row_number() OVER (ORDER BY w ASC, doc_id ASC)
-         |      AS rk,
-         |    count(*) OVER () AS n
-         |  FROM b),
-         |p AS (SELECT q, w FROM r
-         |  JOIN (SELECT unnest(CAST([0.5, 0.9] AS DOUBLE[])) AS q) qs
-         |    ON rk = greatest(1, CAST(ceil(q * n) AS BIGINT)))
-         |SELECT 'exact_dup_frac' AS metric,
-         |  round(1.0 - CAST(n_texts AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         |    AS value FROM s
-         |UNION ALL SELECT 'mean_quality',
-         |  round(qsum / CAST(n_docs AS DOUBLE), 6) FROM s
-         |UNION ALL SELECT 'n_docs', CAST(n_docs AS DOUBLE) FROM s
-         |UNION ALL SELECT 'n_sources', CAST(n_sources AS DOUBLE) FROM s
-         |UNION ALL SELECT 'n_tokens', CAST(n_tokens AS DOUBLE) FROM s
-         |UNION ALL SELECT 'token_p50',
-         |  CAST((SELECT w FROM p WHERE q = 0.5) AS DOUBLE)
-         |UNION ALL SELECT 'token_p90',
-         |  CAST((SELECT w FROM p WHERE q = 0.9) AS DOUBLE)
-         |ORDER BY metric""".stripMargin,
-    "q247_fd_audit" -> fdAuditOracleSql(Seq(
-      "o_orderkey" -> "o_custkey",
-      "o_orderkey" -> "o_totalprice",
-      "o_custkey" -> "o_orderpriority",
-      "o_orderstatus" -> "o_orderpriority")),
-    "q248_period_growth" ->
-      """WITH c AS (SELECT event_type AS grp,
-        |    CAST(epoch_us(ts) - epoch_us(ts) % 604800000000 AS BIGINT)
-        |      AS period_start_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |g AS (SELECT grp, period_start_us, n,
-        |    lag(n) OVER (PARTITION BY grp ORDER BY period_start_us)
-        |      AS prev_n
-        |  FROM c)
-        |SELECT grp, period_start_us, n, prev_n,
-        |  round(CAST(n - prev_n AS DOUBLE) / CAST(prev_n AS DOUBLE), 6)
-        |    AS growth
-        |FROM g ORDER BY grp, period_start_us""".stripMargin,
-    "q245_centroid_divergence" ->
-      """WITH j AS (SELECT d.source AS g, CAST(e.embedding AS DOUBLE[]) AS v
-        |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id),
-        |cell AS (SELECT g, CAST(t.i AS INT) AS dim,
-        |    CAST(CAST(avg(v[t.i]) AS REAL) AS DOUBLE) AS cv
-        |  FROM j, range(1, 65) AS t(i) GROUP BY 1, 2),
-        |p AS (SELECT a.g AS source_a, b.g AS source_b, a.dim AS dim,
-        |    a.cv * b.cv AS ab, a.cv * a.cv AS aa, b.cv * b.cv AS bb,
-        |    (a.cv - b.cv) * (a.cv - b.cv) AS d2
-        |  FROM cell a JOIN cell b ON a.dim = b.dim AND a.g < b.g),
-        |s AS (SELECT source_a, source_b,
-        |    list_reduce(list(ab ORDER BY dim), (x, y) -> x + y) AS dot,
-        |    list_reduce(list(aa ORDER BY dim), (x, y) -> x + y) AS na2,
-        |    list_reduce(list(bb ORDER BY dim), (x, y) -> x + y) AS nb2,
-        |    list_reduce(list(d2 ORDER BY dim), (x, y) -> x + y) AS dd
-        |  FROM p GROUP BY 1, 2)
-        |SELECT source_a, source_b,
-        |  round(dot / (sqrt(na2) * sqrt(nb2)), 6) AS cosine,
-        |  round(sqrt(dd), 6) AS l2
-        |FROM s ORDER BY source_a, source_b""".stripMargin,
-    "q244_watermark_audit" ->
-      """WITH a AS (SELECT event_id, epoch_us(ts) AS tsu,
-        |    epoch_us(ts) + CAST(('0x' || substr(md5(event_id::VARCHAR), 1,
-        |      15))::UBIGINT % 600000000 AS BIGINT) AS arr
-        |  FROM events),
-        |r AS (SELECT tsu, max(tsu) OVER (ORDER BY arr, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rm
-        |  FROM a),
-        |l AS (SELECT rm - tsu AS late FROM r),
-        |d AS (SELECT unnest(CAST([0, 60000000, 300000000, 480000000,
-        |    600000000] AS BIGINT[])) AS delay_us),
-        |s AS (SELECT delay_us,
-        |    CAST(sum(CASE WHEN late > delay_us THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_dropped,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM l CROSS JOIN d GROUP BY delay_us)
-        |SELECT delay_us, n_dropped,
-        |  round(CAST(n_dropped AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS frac_dropped
-        |FROM s ORDER BY delay_us""".stripMargin,
-    "q243_phrase_hits" ->
-      s"""WITH t AS (SELECT source,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |  FROM documents),
-         |g AS (SELECT source, unnest($shingle3Sql) AS phrase FROM t)
-         |SELECT phrase, source, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM g
-         |WHERE phrase IN ('window fast query', 'stream table hash',
-         |  'big data merge', 'definitely absent phrase')
-         |GROUP BY 1, 2 ORDER BY phrase, source""".stripMargin,
-    "q242_grouped_split" ->
-      """WITH a AS (SELECT source,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS w,
-        |    ('0x' || substr(md5(source), 1, 15))::UBIGINT % 1000000 AS b
-        |  FROM documents),
-        |f AS (SELECT CASE WHEN b < 800000 THEN 0 WHEN b < 900000 THEN 1
-        |    ELSE 2 END AS fold, source, w FROM a)
-        |SELECT fold, CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(w) AS BIGINT) AS n_tokens
-        |FROM f GROUP BY fold ORDER BY fold""".stripMargin,
-    "q241_cube_report" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(round(l_extendedprice * 100.0) AS BIGINT)) AS BIGINT)
-        |    AS revenue_cents,
-        |  CAST(GROUPING(l_returnflag) AS INT) AS g_flag,
-        |  CAST(GROUPING(l_linestatus) AS INT) AS g_status
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q236_sparse_cosine" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |g AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))
-        |    ELSE [array_to_string(toks, ' ')] END) AS term FROM t),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM g GROUP BY 1, 2),
-        |n AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS nd FROM tf),
-        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-        |  FROM tf GROUP BY 1 HAVING count(*) <= 50),
-        |w AS (SELECT doc_id, term, tf * ln(n.nd / CAST(df AS DOUBLE)) AS w, df
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n),
-        |norms AS (SELECT doc_id,
-        |    sqrt(list_reduce(list(w * w ORDER BY term), (a, b) -> a + b)) AS nrm
-        |  FROM w GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.term AS term,
-        |    a.w * b.w AS p
-        |  FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id
-        |  WHERE a.df >= 2),
-        |d AS (SELECT id_a, id_b,
-        |    list_reduce(list(p ORDER BY term), (a, b) -> a + b) AS dot,
-        |    CAST(count(*) AS BIGINT) AS n_shared
-        |  FROM p GROUP BY 1, 2)
-        |SELECT id_a, id_b, n_shared,
-        |  round(dot / (na.nrm * nb.nrm), 6) AS cosine
-        |FROM d JOIN norms na ON na.doc_id = id_a
-        |JOIN norms nb ON nb.doc_id = id_b
-        |WHERE dot / (na.nrm * nb.nrm) >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q226_association_rules" ->
-      """WITH marked AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
-        |    CASE WHEN date_diff('second',
-        |        lag(CAST(ts AS TIMESTAMP)) OVER w, CAST(ts AS TIMESTAMP)) > 600
-        |      THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sessions AS (
-        |  SELECT user_id, event_type,
-        |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS seq
-        |  FROM marked),
-        |st AS (SELECT DISTINCT user_id, seq, event_type FROM sessions),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n
-        |  FROM (SELECT DISTINCT user_id, seq FROM st)),
-        |singles AS (SELECT event_type AS t, CAST(count(*) AS BIGINT) AS c
-        |  FROM st GROUP BY 1),
-        |pairs AS (SELECT a.event_type AS antecedent,
-        |    b.event_type AS consequent, CAST(count(*) AS BIGINT) AS n_both
-        |  FROM st a JOIN st b
-        |    ON a.user_id = b.user_id AND a.seq = b.seq
-        |    AND a.event_type <> b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT antecedent, consequent, (SELECT n FROM nn) AS n_sessions,
-        |  n_both,
-        |  round(CAST(n_both AS DOUBLE) / CAST(ca.c AS DOUBLE), 6)
-        |    AS confidence,
-        |  round((CAST(n_both AS DOUBLE) * CAST((SELECT n FROM nn) AS DOUBLE))
-        |    / (CAST(ca.c AS DOUBLE) * CAST(cb.c AS DOUBLE)), 6) AS lift
-        |FROM pairs
-        |JOIN singles ca ON ca.t = antecedent
-        |JOIN singles cb ON cb.t = consequent
-        |ORDER BY antecedent, consequent""".stripMargin,
-    "q227_markov_eval" ->
-      """WITH seqd AS (SELECT user_id, epoch_us(ts) AS m, event_id,
-        |    event_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS nxt
-        |  FROM events),
-        |trans AS (SELECT event_type AS state, nxt,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM seqd WHERE nxt IS NOT NULL GROUP BY 1, 2),
-        |pred AS (SELECT state, nxt AS predicted FROM (
-        |  SELECT state, nxt,
-        |    row_number() OVER (PARTITION BY state ORDER BY c DESC, nxt)
-        |      AS r
-        |  FROM trans) WHERE r = 1)
-        |SELECT t.state, CAST(sum(c) AS BIGINT) AS n_transitions,
-        |  max(p.predicted) AS predicted,
-        |  CAST(sum(CASE WHEN t.nxt = p.predicted THEN c ELSE 0 END)
-        |    AS BIGINT) AS hits,
-        |  round(CAST(sum(CASE WHEN t.nxt = p.predicted THEN c ELSE 0 END)
-        |      AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6) AS accuracy
-        |FROM trans t JOIN pred p ON t.state = p.state
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q224_ship_lag" ->
-      """WITH j AS (SELECT strftime(o_orderdate, '%Y-%m') AS month,
-        |    CAST(l_orderkey AS VARCHAR) || ':' ||
-        |      CAST(l_linenumber AS VARCHAR) AS rid,
-        |    ((epoch_us(l_shipdate) - epoch_us(l_shipdate) % 86400000000)
-        |      // 86400000000) -
-        |    ((epoch_us(o_orderdate) - epoch_us(o_orderdate) % 86400000000)
-        |      // 86400000000) AS lag
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |r AS (SELECT month, lag, rid,
-        |    CAST(row_number() OVER (PARTITION BY month ORDER BY lag, rid)
-        |      AS BIGINT) AS cum
-        |  FROM j),
-        |w AS (SELECT month, CAST(count(*) AS BIGINT) AS wt
-        |  FROM j GROUP BY 1),
-        |qs(q) AS (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)))
-        |SELECT r.month, q, lag AS lag_days, wt AS n
-        |FROM r JOIN w USING (month), qs
-        |WHERE cum >= q * CAST(wt AS DOUBLE)
-        |  AND cum - 1 < q * CAST(wt AS DOUBLE)
-        |ORDER BY month, q""".stripMargin,
-    "q225_snapshot_diff" ->
-      """WITH oldg AS (SELECT * FROM orders WHERE o_orderkey % 101 <> 0),
-        |newg AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    CASE WHEN o_orderkey % 89 = 0 THEN o_totalprice + 1.0
-        |      ELSE o_totalprice END AS o_totalprice,
-        |    o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 97 <> 0),
-        |j AS (SELECT o.o_orderkey AS ko, n.o_orderkey AS kn,
-        |    CASE WHEN o.o_custkey IS DISTINCT FROM n.o_custkey
-        |      OR o.o_orderstatus IS DISTINCT FROM n.o_orderstatus
-        |      OR o.o_totalprice IS DISTINCT FROM n.o_totalprice
-        |      OR o.o_orderdate IS DISTINCT FROM n.o_orderdate
-        |      OR o.o_orderpriority IS DISTINCT FROM n.o_orderpriority
-        |    THEN 1 ELSE 0 END AS diff
-        |  FROM oldg o FULL OUTER JOIN newg n
-        |    ON o.o_orderkey = n.o_orderkey)
-        |SELECT
-        |  CAST(sum(CASE WHEN ko IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_old,
-        |  CAST(sum(CASE WHEN kn IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_new,
-        |  CAST(sum(CASE WHEN ko IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS added,
-        |  CAST(sum(CASE WHEN kn IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS removed,
-        |  CAST(sum(CASE WHEN ko IS NOT NULL AND kn IS NOT NULL
-        |    AND diff = 1 THEN 1 ELSE 0 END) AS BIGINT) AS changed,
-        |  CAST(sum(CASE WHEN ko IS NOT NULL AND kn IS NOT NULL
-        |    AND diff = 0 THEN 1 ELSE 0 END) AS BIGINT) AS unchanged
-        |FROM j""".stripMargin,
-    "q221_degree_powerlaw" ->
-      """WITH el AS (
-        |  SELECT DISTINCT 'c' || o_custkey::VARCHAR AS a,
-        |    's' || l_suppkey::VARCHAR AS b
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |edges AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT a AS src, b AS dst FROM el
-        |  UNION ALL SELECT b, a FROM el)),
-        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d
-        |  FROM edges GROUP BY 1),
-        |hist AS (SELECT d, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM deg GROUP BY 1),
-        |b AS (SELECT d AS id, ln(CAST(d AS DOUBLE)) AS x,
-        |    ln(CAST(cnt AS DOUBLE)) AS y
-        |  FROM hist),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    list_reduce(list(x ORDER BY id), (p, q) -> p + q) AS sx,
-        |    list_reduce(list(y ORDER BY id), (p, q) -> p + q) AS sy,
-        |    list_reduce(list(x * y ORDER BY id), (p, q) -> p + q) AS sxy,
-        |    list_reduce(list(x * x ORDER BY id), (p, q) -> p + q) AS sxx,
-        |    list_reduce(list(y * y ORDER BY id), (p, q) -> p + q) AS syy
-        |  FROM b),
-        |d2 AS (SELECT n,
-        |    CAST(n AS DOUBLE) * sxx - sx * sx AS dx,
-        |    CAST(n AS DOUBLE) * syy - sy * sy AS dy,
-        |    CAST(n AS DOUBLE) * sxy - sx * sy AS num
-        |  FROM a)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM hist) AS n_degrees,
-        |  (SELECT CAST(max(d) AS BIGINT) FROM deg) AS max_degree,
-        |  round(CASE WHEN dx > 0 THEN num / dx END, 6) AS slope,
-        |  round(CASE WHEN dx > 0 AND dy > 0
-        |    THEN (num * num) / (dx * dy) END, 6) AS r2
-        |FROM d2""".stripMargin,
-    "q222_seasonal_anomalies" ->
-      """WITH daily AS (SELECT
-        |    (epoch_us(ts) - epoch_us(ts) % 86400000000) // 86400000000
-        |      AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1),
-        |d2 AS (SELECT day, n, CAST((day + 3) % 7 + 1 AS INT) AS dow
-        |  FROM daily),
-        |dm AS (SELECT dow,
-        |    list_reduce(list(CAST(n AS DOUBLE) ORDER BY day),
-        |      (x, y) -> x + y) / CAST(count(*) AS DOUBLE) AS expected
-        |  FROM d2 GROUP BY 1),
-        |r AS (SELECT day, dow, n, expected,
-        |    CAST(n AS DOUBLE) - expected AS res
-        |  FROM d2 JOIN dm USING (dow)),
-        |st AS (SELECT CAST(count(*) AS BIGINT) AS c,
-        |    list_reduce(list(res ORDER BY day), (x, y) -> x + y) AS s,
-        |    list_reduce(list(res * res ORDER BY day), (x, y) -> x + y)
-        |      AS s2
-        |  FROM r),
-        |g AS (SELECT day, dow, n, expected, res,
-        |    s / CAST(c AS DOUBLE) AS mu,
-        |    sqrt(greatest(s2 / CAST(c AS DOUBLE) -
-        |      (s / CAST(c AS DOUBLE)) * (s / CAST(c AS DOUBLE)),
-        |      CAST(0.0 AS DOUBLE))) AS sd
-        |  FROM r, st)
-        |SELECT day, dow, n, round(expected, 6) AS expected,
-        |  round((res - mu) / sd, 6) AS z
-        |FROM g WHERE sd > 0 AND abs((res - mu) / sd) > 2.0
-        |ORDER BY day""".stripMargin,
-    "q223_numeric_mi" ->
-      s"""WITH base AS (SELECT event_id AS id, value AS xv,
-         |    (epoch_us(ts) - epoch_us(ts) % 86400000000) // 86400000000
-         |      AS yv
-         |  FROM events),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n0 FROM base),
-         |rx AS (SELECT id, CAST(row_number() OVER (ORDER BY xv, id)
-         |    AS BIGINT) AS r FROM base),
-         |ry AS (SELECT id, CAST(row_number() OVER (ORDER BY yv, id)
-         |    AS BIGINT) AS r FROM base),
-         |lab AS (SELECT
-         |    CAST(((rx.r - 1) * 8) // (SELECT n0 FROM nn) AS VARCHAR) AS x,
-         |    CAST(((ry.r - 1) * 8) // (SELECT n0 FROM nn) AS VARCHAR) AS y
-         |  FROM rx JOIN ry USING (id)),
-         |cells AS (SELECT x, y, count(*) AS c FROM lab GROUP BY 1, 2),
-         |$miOracleTail""".stripMargin,
-    "q219_truncation_loss" -> {
-      val blocks = Seq(32, 64, 128).map { l =>
-        s"""SELECT $l AS ctx_limit,
-           |  (SELECT n_docs FROM t) AS n_docs,
-           |  CAST(sum(CASE WHEN n > $l THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS docs_over,
-           |  (SELECT tokens_total FROM t) AS tokens_total,
-           |  CAST(sum(CASE WHEN n > $l THEN n - $l ELSE 0 END) AS BIGINT)
-           |    AS tokens_lost,
-           |  round(CAST(sum(CASE WHEN n > $l THEN n - $l ELSE 0 END)
-           |      AS DOUBLE) /
-           |    CAST((SELECT tokens_total FROM t) AS DOUBLE), 6)
-           |    AS loss_frac
-           |FROM lens""".stripMargin
-      }
-      s"""WITH lens AS (SELECT
-         |    CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-         |      AS BIGINT) AS n
-         |  FROM documents WHERE length(trim(text)) > 0),
-         |t AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n) AS BIGINT) AS tokens_total FROM lens)
-         |${blocks.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-          "\n) ORDER BY ctx_limit")}""".stripMargin
-    },
-    "q220_mixture_plan" ->
-      """WITH t(source, w) AS (VALUES
-        |    ('src0', CAST(0.4 AS DOUBLE)), ('src1', CAST(0.3 AS DOUBLE)),
-        |    ('src2', CAST(0.2 AS DOUBLE)), ('src3', CAST(0.1 AS DOUBLE))),
-        |have AS (SELECT source,
-        |    CAST(sum(CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS BIGINT)) AS BIGINT) AS tokens_have
-        |  FROM documents
-        |  WHERE source IN (SELECT source FROM t)
-        |    AND length(trim(text)) > 0
-        |  GROUP BY 1),
-        |p AS (SELECT h.source, h.tokens_have, t.w AS weight,
-        |    t.w * CAST(10000 AS DOUBLE) AS tokens_target,
-        |    (t.w * CAST(10000 AS DOUBLE)) /
-        |      CAST(h.tokens_have AS DOUBLE) AS raw
-        |  FROM have h JOIN t ON h.source = t.source)
-        |SELECT source, tokens_have, round(weight, 6) AS weight,
-        |  round(tokens_target, 6) AS tokens_target,
-        |  round(CASE WHEN raw > 2.0 THEN CAST(2.0 AS DOUBLE) ELSE raw END,
-        |    6) AS repeats,
-        |  raw > 2.0 AS capped,
-        |  round((CASE WHEN raw > 2.0 THEN CAST(2.0 AS DOUBLE) ELSE raw END)
-        |    * CAST(tokens_have AS DOUBLE), 6) AS tokens_planned
-        |FROM p ORDER BY source""".stripMargin,
-    "q216_tpch_q6" ->
-      """SELECT CAST(sum(CAST(round((l_extendedprice * l_discount) * 100.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem
-        |WHERE l_shipdate >= '1998-01-01' AND l_shipdate < '1999-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q217_tpch_q14" ->
-      """WITH j AS (SELECT p_type,
-        |    CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |      AS BIGINT) AS rev
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= '1998-03-01' AND l_shipdate < '1998-04-01'),
-        |a AS (SELECT
-        |    CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END)
-        |      AS BIGINT) AS promo_cents,
-        |    CAST(sum(rev) AS BIGINT) AS total_cents
-        |  FROM j)
-        |SELECT promo_cents, total_cents,
-        |  round(CAST(promo_cents AS DOUBLE) / CAST(total_cents AS DOUBLE), 6)
-        |    AS promo_share
-        |FROM a""".stripMargin,
-    "q218_dimension_stats" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |d AS (SELECT vec_id, CAST(t.i AS INT) AS dim, v[t.i] AS val
-        |  FROM e, range(1, 65) AS t(i)),
-        |a AS (SELECT dim, CAST(count(*) AS BIGINT) AS n,
-        |    list_reduce(list(val ORDER BY vec_id), (x, y) -> x + y) AS s,
-        |    list_reduce(list(val * val ORDER BY vec_id), (x, y) -> x + y)
-        |      AS s2
-        |  FROM d GROUP BY 1)
-        |SELECT dim, n, round(s / CAST(n AS DOUBLE), 6) AS mean,
-        |  round(sqrt(greatest(s2 / CAST(n AS DOUBLE) -
-        |    (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)),
-        |    CAST(0.0 AS DOUBLE))), 6) AS std
-        |FROM a ORDER BY dim""".stripMargin,
-    "q213_changepoint" ->
-      """WITH daily AS (SELECT event_type AS k,
-        |    (epoch_us(ts) - epoch_us(ts) % 86400000000) // 86400000000
-        |      AS day,
-        |    CAST(count(*) AS BIGINT) AS v
-        |  FROM events GROUP BY 1, 2),
-        |c AS (SELECT k, day, v,
-        |    CAST(row_number() OVER (PARTITION BY k ORDER BY day)
-        |      AS BIGINT) AS i,
-        |    CAST(sum(v) OVER (PARTITION BY k ORDER BY day
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |    CAST(count(*) OVER (PARTITION BY k) AS BIGINT) AS n,
-        |    CAST(sum(v) OVER (PARTITION BY k) AS BIGINT) AS tot
-        |  FROM daily),
-        |s AS (SELECT *, abs(CAST(cum AS DOUBLE) - CAST(tot AS DOUBLE) *
-        |    (CAST(i AS DOUBLE) / CAST(n AS DOUBLE))) AS dev
-        |  FROM c WHERE n >= 2 AND i < n),
-        |b AS (SELECT *, row_number() OVER (PARTITION BY k
-        |    ORDER BY dev DESC, day) AS r FROM s)
-        |SELECT k AS event_type, day AS split_day,
-        |  round(dev, 6) AS deviation,
-        |  round(CAST(cum AS DOUBLE) / CAST(i AS DOUBLE), 6) AS mean_before,
-        |  round(CAST(tot - cum AS DOUBLE) / CAST(n - i AS DOUBLE), 6)
-        |    AS mean_after
-        |FROM b WHERE r = 1 ORDER BY event_type""".stripMargin,
-    "q214_canary_scan" ->
-      """WITH w AS (SELECT source,
-        |    CAST(sum(CASE WHEN contains(text, 'slow fast table')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN contains(text, 'customer query')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |    CAST(sum(CASE WHEN contains(text, 'canary-absent-guid')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |  FROM documents GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT 'slow fast table' AS canary, source, c0 AS n_docs FROM w
-        |  UNION ALL
-        |  SELECT 'customer query', source, c1 FROM w
-        |  UNION ALL
-        |  SELECT 'canary-absent-guid', source, c2 FROM w)
-        |WHERE n_docs > 0 ORDER BY canary, source""".stripMargin,
-    "q215_simpson_check" ->
-      """WITH b AS (SELECT event_type AS g, event_id AS id,
-        |    CAST((epoch_us(ts) - epoch_us(ts) % 86400000000)
-        |      // 86400000000 AS DOUBLE) AS x,
-        |    value AS y
-        |  FROM events),
-        |a AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    list_reduce(list(x ORDER BY id), (p, q) -> p + q) AS sx,
-        |    list_reduce(list(y ORDER BY id), (p, q) -> p + q) AS sy,
-        |    list_reduce(list(x * y ORDER BY id), (p, q) -> p + q) AS sxy,
-        |    list_reduce(list(x * x ORDER BY id), (p, q) -> p + q) AS sxx
-        |  FROM b GROUP BY 1),
-        |per AS (SELECT g, n,
-        |    (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |      (CAST(n AS DOUBLE) * sxx - sx * sx) AS slope
-        |  FROM a WHERE CAST(n AS DOUBLE) * sxx - sx * sx > 0),
-        |ap AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    list_reduce(list(x ORDER BY id), (p, q) -> p + q) AS sx,
-        |    list_reduce(list(y ORDER BY id), (p, q) -> p + q) AS sy,
-        |    list_reduce(list(x * y ORDER BY id), (p, q) -> p + q) AS sxy,
-        |    list_reduce(list(x * x ORDER BY id), (p, q) -> p + q) AS sxx
-        |  FROM b),
-        |pooled AS (SELECT
-        |    (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |      (CAST(n AS DOUBLE) * sxx - sx * sx) AS ps
-        |  FROM ap)
-        |SELECT CAST(count(*) AS BIGINT) AS n_groups,
-        |  round(max(ps), 6) AS pooled_slope,
-        |  CAST(sum(CASE WHEN slope * ps < 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS groups_opposing,
-        |  round(CAST(sum(CASE WHEN slope * ps < 0 THEN n ELSE 0 END)
-        |      AS DOUBLE) / CAST(sum(n) AS DOUBLE), 6) AS opposing_weight,
-        |  CAST(sum(CASE WHEN slope * ps < 0 THEN n ELSE 0 END) AS DOUBLE)
-        |    / CAST(sum(n) AS DOUBLE) > 0.5 AS paradox
-        |FROM per, pooled""".stripMargin,
-    "q210_top_paths" ->
-      """WITH marked AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type,
-        |    CASE WHEN date_diff('second',
-        |        lag(CAST(ts AS TIMESTAMP)) OVER w, CAST(ts AS TIMESTAMP)) > 600
-        |      THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sessions AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS seq
-        |  FROM marked),
-        |paths AS (SELECT user_id, seq,
-        |    array_to_string(list(event_type ORDER BY ts, event_id)[1:4], '>')
-        |      AS path
-        |  FROM sessions GROUP BY 1, 2)
-        |SELECT path, CAST(count(*) AS BIGINT) AS sessions
-        |FROM paths GROUP BY 1
-        |ORDER BY sessions DESC, path LIMIT 20""".stripMargin,
-    "q211_lsh_planner" -> {
-      def chain(x: String, n: Int) = Seq.fill(n)(x).mkString(" * ")
-      def p(b: Int, r: Int) = {
-        val base = s"(1.0 - (${chain("s", r)}))"
-        s"round(1.0 - (${chain(base, b)}), 6)"
-      }
-      s"""WITH g AS (SELECT unnest(range(1, 20)) AS i),
-         |b AS (SELECT CAST(i AS DOUBLE) / CAST(20.0 AS DOUBLE) AS s FROM g)
-         |SELECT round(s, 6) AS s,
-         |  ${p(16, 2)} AS p_b16_r2,
-         |  ${p(8, 4)} AS p_b8_r4
-         |FROM b ORDER BY s""".stripMargin
-    },
-    "q212_cast_quarantine" ->
-      """WITH ev AS (SELECT *, CASE WHEN event_id % 3 = 0 THEN event_type
-        |    ELSE CAST(event_id AS VARCHAR) END AS mixed FROM events),
-        |w AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN mixed IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS nn_m,
-        |    CAST(sum(CASE WHEN mixed IS NOT NULL
-        |      AND TRY_CAST(mixed AS BIGINT) IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS f_m,
-        |    CAST(sum(CASE WHEN event_type IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS nn_e,
-        |    CAST(sum(CASE WHEN event_type IS NOT NULL
-        |      AND TRY_CAST(event_type AS BIGINT) IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS f_e,
-        |    CAST(sum(CASE WHEN value IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS nn_v,
-        |    CAST(sum(CASE WHEN value IS NOT NULL
-        |      AND TRY_CAST(value AS INT) IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS f_v
-        |  FROM ev)
-        |SELECT * FROM (
-        |  SELECT 'event_type' AS column_name, 'BIGINT' AS target_type,
-        |    n AS n_rows, nn_e AS n_nonnull, f_e AS n_cast_fail,
-        |    round(CAST(f_e AS DOUBLE) / CAST(nn_e AS DOUBLE), 6) AS fail_frac
-        |  FROM w
-        |  UNION ALL
-        |  SELECT 'mixed', 'BIGINT', n, nn_m, f_m,
-        |    round(CAST(f_m AS DOUBLE) / CAST(nn_m AS DOUBLE), 6) FROM w
-        |  UNION ALL
-        |  SELECT 'value', 'INT', n, nn_v, f_v,
-        |    round(CAST(f_v AS DOUBLE) / CAST(nn_v AS DOUBLE), 6) FROM w
-        |) ORDER BY column_name""".stripMargin,
-    "q208_exact_stratified" ->
-      s"""WITH h AS (SELECT lang, doc_id,
-         |    ${h60Sql("doc_id::VARCHAR")} % 1000000 AS hb
-         |  FROM documents),
-         |r AS (SELECT lang, doc_id,
-         |    CAST(row_number() OVER (PARTITION BY lang
-         |      ORDER BY hb DESC, doc_id) AS BIGINT) AS rank
-         |  FROM h)
-         |SELECT lang, doc_id, rank FROM r WHERE rank <= 30
-         |ORDER BY lang, rank""".stripMargin,
-    "q209_vocab_growth" ->
-      """WITH corpus AS (
-        |  SELECT doc_id // 50 AS b, text FROM documents
-        |  UNION ALL
-        |  SELECT c_custkey // 150 AS b, c_name AS text FROM customer),
-        |pairs AS (SELECT DISTINCT b, t FROM (
-        |  SELECT b, unnest(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS t
-        |  FROM corpus WHERE length(trim(text)) > 0)),
-        |pb AS (SELECT b, CAST(count(*) AS BIGINT) AS batch_vocab
-        |  FROM pairs GROUP BY 1),
-        |fs AS (SELECT min(b) AS b FROM pairs GROUP BY t),
-        |nw AS (SELECT b, CAST(count(*) AS BIGINT) AS new_tokens
-        |  FROM fs GROUP BY 1)
-        |SELECT pb.b AS batch, pb.batch_vocab,
-        |  CAST(coalesce(nw.new_tokens, 0) AS BIGINT) AS new_tokens,
-        |  CAST(sum(coalesce(nw.new_tokens, 0)) OVER (ORDER BY pb.b
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_vocab
-        |FROM pb LEFT JOIN nw ON pb.b = nw.b ORDER BY batch""".stripMargin,
-    "q204_conversion_rates" ->
-      """WITH ev AS (SELECT user_id AS u, epoch_us(ts) AS m, event_type
-        |  FROM events),
-        |f AS (SELECT u, min(m) AS f FROM ev WHERE event_type = 'signup'
-        |  GROUP BY 1),
-        |lat AS (SELECT e.u, min(e.m - f.f) AS lat
-        |  FROM ev e JOIN f ON e.u = f.u
-        |  WHERE e.event_type = 'purchase' AND e.m > f.f GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS BIGINT) AS n_started FROM f),
-        |h(hus) AS (VALUES (86400000000), (604800000000), (2592000000000))
-        |SELECT h.hus AS horizon_us,
-        |  CAST(sum(CASE WHEN l.lat <= h.hus THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS converted_within,
-        |  (SELECT n_started FROM st) AS n_started,
-        |  round(CAST(sum(CASE WHEN l.lat <= h.hus THEN 1 ELSE 0 END)
-        |      AS DOUBLE) /
-        |    CAST((SELECT n_started FROM st) AS DOUBLE), 6) AS rate
-        |FROM h, lat l GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q205_truncation_quality" -> {
-      def cosSql(a: String, b: String) =
-        s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * " +
-          s"sqrt(list_dot_product($b, $b)))"
-      val blocks = Seq(8, 16, 32).map { d =>
-        val (va, vb) = (s"va[1:$d]", s"vb[1:$d]")
-        s"""SELECT $d AS dim, CAST(count(*) AS BIGINT) AS n_pairs,
-           |  round(list_reduce(list(abs(cf - ${cosSql(va, vb)})
-           |      ORDER BY ida), (x, y) -> x + y) /
-           |    CAST(count(*) AS DOUBLE), 6) AS mean_abs_err,
-           |  round(max(abs(cf - ${cosSql(va, vb)})), 6) AS max_abs_err
-           |FROM c
-           |WHERE list_dot_product($va, $va) > 0
-           |  AND list_dot_product($vb, $vb) > 0""".stripMargin
-      }
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings),
-         |idx AS (SELECT vec_id, v,
-         |    CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS rn
-         |  FROM e),
-         |p AS (SELECT a.vec_id AS ida, a.v AS va, b.v AS vb
-         |  FROM idx a JOIN idx b ON b.rn = a.rn + 1),
-         |c AS MATERIALIZED (SELECT ida, va, vb,
-         |    ${cosSql("va", "vb")} AS cf
-         |  FROM p)
-         |${blocks.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-            "\n) ORDER BY dim")}""".stripMargin
-    },
-    "q206_freshness" ->
-      """WITH b AS (SELECT event_type AS g, epoch_us(ts) AS m FROM events),
-        |f AS (SELECT max(m) AS gmax FROM b)
-        |SELECT g AS event_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(max(m) AS BIGINT) AS last_ts_us,
-        |  CAST((SELECT gmax FROM f) - max(m) AS BIGINT) AS age_us,
-        |  CAST(sum(CASE WHEN m > (SELECT gmax FROM f) - 604800000000
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fresh_7d,
-        |  CAST(sum(CASE WHEN m > (SELECT gmax FROM f) - 2592000000000
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fresh_30d
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q207_peak_rate" ->
-      """WITH b AS (SELECT user_id AS k, epoch_us(ts) AS m FROM events),
-        |c AS (SELECT k, count(*) OVER (PARTITION BY k ORDER BY m
-        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS c
-        |  FROM b)
-        |SELECT k AS user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(max(c) AS BIGINT) AS peak
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q201_activity_streaks" ->
-      """WITH days AS (SELECT DISTINCT user_id AS k,
-        |    (epoch_us(ts) - epoch_us(ts) % 86400000000) // 86400000000
-        |      AS day
-        |  FROM events),
-        |r AS (SELECT k, day,
-        |    day - row_number() OVER (PARTITION BY k ORDER BY day) AS a
-        |  FROM days),
-        |i AS (SELECT k, a, CAST(count(*) AS BIGINT) AS len
-        |  FROM r GROUP BY 1, 2)
-        |SELECT k AS user_id, CAST(sum(len) AS BIGINT) AS n_days,
-        |  CAST(count(*) AS BIGINT) AS n_streaks,
-        |  CAST(max(len) AS BIGINT) AS max_streak
-        |FROM i GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q202_concentration" ->
-      """WITH cells AS (SELECT lang AS g, source AS c,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1, 2),
-        |t AS (SELECT g, CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY 1),
-        |s AS (SELECT g, c, n, t,
-        |    CAST(n AS DOUBLE) / CAST(t AS DOUBLE) AS sh
-        |  FROM cells JOIN t USING (g))
-        |SELECT g AS lang, CAST(sum(n) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS n_cats,
-        |  round(CAST(max(n) AS DOUBLE) / CAST(max(t) AS DOUBLE), 6)
-        |    AS top_share,
-        |  round(list_reduce(list(sh * sh ORDER BY c), (x, y) -> x + y), 6)
-        |    AS hhi
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q203_prefix_cache" -> {
-      val blocks = Seq(4, 8, 16).map { d =>
-        s"""SELECT $d AS depth,
-           |  CAST(coalesce(sum(n), 0) AS BIGINT) AS eligible_docs,
-           |  CAST(coalesce(sum(CASE WHEN n >= 2 THEN 1 ELSE 0 END), 0)
-           |    AS BIGINT) AS shared_groups,
-           |  CAST(coalesce(sum(n - 1), 0) AS BIGINT) AS dup_docs,
-           |  CAST(coalesce(sum((n - 1) * $d), 0) AS BIGINT) AS tokens_saved
-           |FROM (SELECT array_to_string(toks[1:$d], ' ') AS p,
-           |    CAST(count(*) AS BIGINT) AS n
-           |  FROM tt WHERE len(toks) >= $d GROUP BY 1)""".stripMargin
-      }
-      s"""WITH tt AS (SELECT string_split_regex(trim(lower(text)), '\\s+')
-         |    AS toks
-         |  FROM documents WHERE length(trim(text)) > 0)
-         |${blocks.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-          "\n) ORDER BY depth")}""".stripMargin
-    },
-    "q199_tpch_q10" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  c_acctbal, n_name
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= '1998-01-01' AND o_orderdate < '1998-04-01'
-        |  AND l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue_cents DESC, c_custkey LIMIT 20""".stripMargin,
-    "q200_tpch_q18" ->
-      """WITH big AS (SELECT l_orderkey,
-        |    CAST(sum(l_quantity) AS BIGINT) AS total_qty
-        |  FROM lineitem GROUP BY 1 HAVING CAST(sum(l_quantity) AS BIGINT) > 300)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-        |  CAST(round(o_totalprice * 100.0) AS BIGINT) AS totalprice_cents,
-        |  total_qty
-        |FROM orders
-        |JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY totalprice_cents DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q198_group_trends" ->
-      """WITH b AS (SELECT event_type AS g, event_id AS id,
-        |    CAST((epoch_us(ts) - epoch_us(ts) % 86400000000)
-        |      // 86400000000 AS DOUBLE) AS x,
-        |    value AS y
-        |  FROM events),
-        |a AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    list_reduce(list(x ORDER BY id), (p, q) -> p + q) AS sx,
-        |    list_reduce(list(y ORDER BY id), (p, q) -> p + q) AS sy,
-        |    list_reduce(list(x * y ORDER BY id), (p, q) -> p + q) AS sxy,
-        |    list_reduce(list(x * x ORDER BY id), (p, q) -> p + q) AS sxx,
-        |    list_reduce(list(y * y ORDER BY id), (p, q) -> p + q) AS syy
-        |  FROM b GROUP BY 1),
-        |d AS (SELECT g, n,
-        |    CAST(n AS DOUBLE) * sxx - sx * sx AS dx,
-        |    CAST(n AS DOUBLE) * syy - sy * sy AS dy,
-        |    CAST(n AS DOUBLE) * sxy - sx * sy AS num,
-        |    sx, sy FROM a)
-        |SELECT g AS event_type, n,
-        |  round(CASE WHEN dx > 0 THEN num / dx END, 6) AS slope,
-        |  round(CASE WHEN dx > 0
-        |    THEN (sy - (num / dx) * sx) / CAST(n AS DOUBLE) END, 6)
-        |    AS intercept,
-        |  round(CASE WHEN dx > 0 AND dy > 0
-        |    THEN (num * num) / (dx * dy) END, 6) AS r2
-        |FROM d ORDER BY event_type""".stripMargin,
-    "q197_burstiness" ->
-      """WITH b AS (SELECT user_id AS k, epoch_us(ts) AS m, event_id AS id
-        |  FROM events),
-        |g AS (SELECT k, m, id,
-        |    m - lag(m) OVER (PARTITION BY k ORDER BY m, id) AS gp
-        |  FROM b),
-        |gg AS (SELECT k, m, id, gp FROM g WHERE gp IS NOT NULL),
-        |a AS (SELECT k, CAST(count(*) AS BIGINT) AS n_gaps,
-        |    CAST(sum(gp) AS BIGINT) AS s,
-        |    list_reduce(list(CAST(gp AS DOUBLE) * CAST(gp AS DOUBLE)
-        |      ORDER BY m, id), (x, y) -> x + y) AS s2
-        |  FROM gg GROUP BY 1),
-        |d AS (SELECT k, n_gaps,
-        |    CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mu,
-        |    sqrt(greatest(s2 / CAST(n_gaps AS DOUBLE) -
-        |      (CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE)) *
-        |      (CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE)),
-        |      CAST(0.0 AS DOUBLE))) AS sd
-        |  FROM a)
-        |SELECT k AS user_id, n_gaps,
-        |  round(mu / CAST(1000000.0 AS DOUBLE), 6) AS mean_s,
-        |  round(CASE WHEN sd + mu > 0 THEN (sd - mu) / (sd + mu) END, 6)
-        |    AS burstiness
-        |FROM d ORDER BY user_id""".stripMargin,
-    "q196_unseen_mass" ->
-      """WITH corpus AS (SELECT text FROM documents
-        |  UNION ALL SELECT c_name AS text FROM customer),
-        |toks AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+'))
-        |    AS token
-        |  FROM corpus WHERE length(trim(text)) > 0),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM toks GROUP BY 1),
-        |s AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_tokens,
-        |    CAST(count(*) AS BIGINT) AS vocab,
-        |    CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN cnt = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM c)
-        |SELECT n_tokens, vocab, n1, n2,
-        |  round(CAST(n1 AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
-        |    AS unseen_mass,
-        |  round(CAST(vocab AS DOUBLE) +
-        |    (CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) - CAST(1.0 AS DOUBLE)))
-        |    / (CAST(2.0 AS DOUBLE) * (CAST(n2 AS DOUBLE) +
-        |      CAST(1.0 AS DOUBLE))), 6) AS chao1
-        |FROM s""".stripMargin,
-    "q195_dp_counts" ->
-      s"""WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
-         |  FROM events GROUP BY 1),
-         |h AS (SELECT user_id, n,
-         |    ((CAST(${h60Sql("user_id::VARCHAR || ':dp'")} AS DOUBLE)
-         |      * CAST(2.0 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) /
-         |      CAST(2305843009213693952 AS DOUBLE) AS u
-         |  FROM c)
-         |SELECT user_id, round(CAST(n AS DOUBLE) +
-         |  CASE WHEN u < 0.5
-         |    THEN CAST(1.0 AS DOUBLE) * ln(CAST(2.0 AS DOUBLE) * u)
-         |    ELSE -(CAST(1.0 AS DOUBLE) * ln(CAST(2.0 AS DOUBLE) *
-         |      (CAST(1.0 AS DOUBLE) - u)))
-         |  END, 6) AS noisy_count
-         |FROM h ORDER BY user_id""".stripMargin,
-    "q194_k_anonymity" ->
-      """WITH pairs AS (SELECT c_nationkey, c_mktsegment, c_acctbal,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM customer GROUP BY 1, 2, 3),
-        |g AS (SELECT c_nationkey, c_mktsegment,
-        |    CAST(sum(c) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS l
-        |  FROM pairs GROUP BY 1, 2),
-        |s AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |    CAST(count(*) AS BIGINT) AS n_groups,
-        |    CAST(sum(CASE WHEN n < 10 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS risky_groups,
-        |    CAST(sum(CASE WHEN n < 10 THEN n ELSE 0 END) AS BIGINT)
-        |      AS risky_rows,
-        |    CAST(min(l) AS BIGINT) AS min_ldiversity,
-        |    CAST(sum(CASE WHEN l < 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS low_diversity_groups
-        |  FROM g)
-        |SELECT n_rows, n_groups, risky_groups, risky_rows,
-        |  round(CAST(risky_rows AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-        |    AS risky_frac,
-        |  min_ldiversity, low_diversity_groups
-        |FROM s""".stripMargin,
-    "q193_conversion_latency" ->
-      """WITH ev AS (SELECT user_id AS u, epoch_us(ts) AS m, event_type
-        |  FROM events),
-        |f AS (SELECT u, min(m) AS f FROM ev WHERE event_type = 'signup'
-        |  GROUP BY 1),
-        |lat AS (SELECT e.u, min(e.m - f.f) AS lat
-        |  FROM ev e JOIN f ON e.u = f.u
-        |  WHERE e.event_type = 'purchase' AND e.m > f.f GROUP BY 1),
-        |r AS (SELECT lat, u,
-        |    CAST(row_number() OVER (ORDER BY lat, u) AS BIGINT) AS cum
-        |  FROM lat),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS w FROM lat),
-        |qs(q) AS (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)),
-        |  (CAST(0.99 AS DOUBLE))),
-        |pick AS (SELECT q, lat AS latency_us FROM qs, tot, r
-        |  WHERE cum >= q * CAST(w AS DOUBLE)
-        |    AND cum - 1 < q * CAST(w AS DOUBLE)),
-        |c AS (SELECT
-        |    (SELECT CAST(count(*) AS BIGINT) FROM f) AS n_started,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM lat) AS n_converted)
-        |SELECT q, latency_us, n_started, n_converted FROM pick, c
-        |ORDER BY q""".stripMargin,
-    "q192_match_distribution" ->
-      s"""WITH t(lang, ts) AS (VALUES
-         |    ('de', CAST(0.2 AS DOUBLE)), ('en', CAST(0.4 AS DOUBLE)),
-         |    ('es', CAST(0.2 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE))),
-         |n AS (SELECT lang, CAST(count(*) AS BIGINT) AS ns FROM documents
-         |  WHERE lang IN (SELECT lang FROM t) GROUP BY 1),
-         |nt AS (SELECT CAST(sum(ns) AS BIGINT) AS ntot FROM n),
-         |c AS (SELECT min(CAST(ns AS DOUBLE) /
-         |    (ts * CAST(ntot AS DOUBLE))) AS c
-         |  FROM n JOIN t USING (lang), nt),
-         |th AS (SELECT lang, CAST(floor((((c * ts) * CAST(ntot AS DOUBLE)) /
-         |    CAST(ns AS DOUBLE)) * 1000000.0) AS BIGINT) AS thr
-         |  FROM n JOIN t USING (lang), nt, c)
-         |SELECT d.lang, CAST(count(*) AS BIGINT) AS kept
-         |FROM documents d JOIN th ON d.lang = th.lang
-         |WHERE ${h60Sql("d.doc_id::VARCHAR")} % 1000000 < th.thr
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q190_negative_samples" ->
-      """WITH ids AS (SELECT DISTINCT doc_id FROM documents),
-        |idx AS (SELECT doc_id AS neg_id,
-        |    CAST(row_number() OVER (ORDER BY doc_id) - 1 AS BIGINT) AS pos
-        |  FROM ids),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM idx),
-        |qs AS (SELECT DISTINCT doc_id AS q FROM documents
-        |  WHERE doc_id % 10 = 0),
-        |excl AS (SELECT doc_id AS q, doc_id + 1 AS e FROM documents
-        |    WHERE doc_id % 10 = 0
-        |  UNION SELECT doc_id, doc_id FROM documents WHERE doc_id % 10 = 0),
-        |draws AS (SELECT q, unnest(range(0, 15)) AS slot FROM qs),
-        |hpos AS (SELECT q, slot,
-        |    CAST(('0x' || substr(md5(CAST(q AS VARCHAR) || ':' ||
-        |      CAST(slot AS VARCHAR) || ':neg'), 1, 15))::UBIGINT AS BIGINT)
-        |      % (SELECT n FROM nn) AS pos
-        |  FROM draws),
-        |cand AS (SELECT q, neg_id, CAST(min(slot) AS BIGINT) AS slot
-        |  FROM hpos JOIN idx USING (pos) GROUP BY q, neg_id),
-        |filt AS (SELECT c.q, c.neg_id, c.slot FROM cand c
-        |  WHERE NOT EXISTS (SELECT 1 FROM excl x
-        |    WHERE x.q = c.q AND x.e = c.neg_id)),
-        |rk AS (SELECT q, neg_id, slot,
-        |    CAST(row_number() OVER (PARTITION BY q
-        |      ORDER BY slot, neg_id) AS BIGINT) AS rank
-        |  FROM filt)
-        |SELECT q, neg_id, slot, rank FROM rk
-        |WHERE rank <= 5 ORDER BY q, rank""".stripMargin,
-    "q188_mann_whitney" ->
-      """WITH x AS (SELECT event_type AS g, value AS v FROM events
-        |  WHERE event_type IN ('click', 'view')),
-        |vals AS (SELECT v, CAST(count(*) AS BIGINT) AS t,
-        |    CAST(count(*) FILTER (g = 'click') AS BIGINT) AS a
-        |  FROM x GROUP BY 1),
-        |cum AS (SELECT v, t, a,
-        |    CAST(coalesce(sum(t) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS c
-        |  FROM vals),
-        |r AS (SELECT v, t, a,
-        |    CAST(a AS DOUBLE) * (CAST(c AS DOUBLE) +
-        |      (CAST(t AS DOUBLE) + CAST(1.0 AS DOUBLE)) /
-        |        CAST(2.0 AS DOUBLE)) AS ar
-        |  FROM cum),
-        |f AS (SELECT
-        |    list_reduce(list(ar ORDER BY v), (x, y) -> x + y) AS ra,
-        |    CAST(sum(t * t * t - t) AS BIGINT) AS tie,
-        |    CAST(sum(a) AS BIGINT) AS n_a,
-        |    CAST(sum(t - a) AS BIGINT) AS n_b
-        |  FROM r),
-        |g AS (SELECT n_a, n_b,
-        |    CAST(n_a AS DOUBLE) AS nad, CAST(n_b AS DOUBLE) AS nbd,
-        |    CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) AS nd,
-        |    ra, CAST(tie AS DOUBLE) AS tied
-        |  FROM f),
-        |h AS (SELECT n_a, n_b, nad, nbd, nd, tied,
-        |    ra - (nad * (nad + CAST(1.0 AS DOUBLE))) / CAST(2.0 AS DOUBLE)
-        |      AS ua
-        |  FROM g)
-        |SELECT n_a, n_b, round(ua, 6) AS u_a,
-        |  round((nad * nbd) - ua, 6) AS u_b,
-        |  round((ua - (nad * nbd) / CAST(2.0 AS DOUBLE)) /
-        |    sqrt(((nad * nbd) / CAST(12.0 AS DOUBLE)) *
-        |      ((nd + CAST(1.0 AS DOUBLE)) -
-        |        tied / (nd * (nd - CAST(1.0 AS DOUBLE))))), 6) AS z
-        |FROM h""".stripMargin,
-    "q187_typo_suggest" ->
-      """WITH d AS (SELECT CASE
-        |    WHEN p_partkey % 499 = 0
-        |      THEN substr(p_name, 1, 1) || substr(p_name, 3)
-        |    WHEN p_partkey % 503 = 0
-        |      THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
-        |    ELSE p_name END AS text FROM part),
-        |toks AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+'))
-        |    AS t
-        |  FROM d WHERE length(trim(text)) > 0),
-        |c AS (SELECT t, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY 1),
-        |rare AS (SELECT t, cnt FROM c WHERE cnt <= 2 AND length(t) >= 4),
-        |freq AS (SELECT t, cnt FROM c WHERE cnt >= 5),
-        |rv AS (SELECT t, cnt, unnest(list_distinct(list_append(
-        |    list_transform(range(length(t)), i ->
-        |      substr(t, 1, CAST(i AS INT)) || substr(t, CAST(i + 2 AS INT))),
-        |    t))) AS v FROM rare),
-        |fv AS (SELECT t, cnt, unnest(list_distinct(list_append(
-        |    list_transform(range(length(t)), i ->
-        |      substr(t, 1, CAST(i AS INT)) || substr(t, CAST(i + 2 AS INT))),
-        |    t))) AS v FROM freq),
-        |pairs AS (SELECT DISTINCT rv.t AS rt, rv.cnt AS rc,
-        |    fv.t AS ft, fv.cnt AS fc
-        |  FROM rv JOIN fv USING (v)
-        |  WHERE levenshtein(rv.t, fv.t) = 1),
-        |best AS (SELECT rt, rc, ft, fc,
-        |    row_number() OVER (PARTITION BY rt ORDER BY fc DESC, ft) AS rn
-        |  FROM pairs)
-        |SELECT rt AS token, rc AS cnt, ft AS suggestion,
-        |  fc AS suggestion_cnt
-        |FROM best WHERE rn = 1 ORDER BY token""".stripMargin,
-    "q186_seasonal_naive" ->
-      """WITH daily AS (SELECT
-        |    (epoch_us(ts) - epoch_us(ts) % 86400000000) // 86400000000
-        |      AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1),
-        |s AS (SELECT c.day AS day, c.n AS a, p.n AS f, c.n - p.n AS err
-        |  FROM daily c JOIN daily p ON c.day = p.day + 7),
-        |agg AS (SELECT CAST(count(*) AS BIGINT) AS days,
-        |    CAST(sum(abs(err)) AS BIGINT) AS sae,
-        |    CAST(sum(err) AS BIGINT) AS se,
-        |    list_reduce(list(CAST(abs(err) AS DOUBLE) / CAST(a AS DOUBLE)
-        |      ORDER BY day), (x, y) -> x + y) AS sum_ape,
-        |    list_reduce(list((CAST(2.0 AS DOUBLE) * CAST(abs(err) AS DOUBLE))
-        |      / CAST(a + f AS DOUBLE) ORDER BY day), (x, y) -> x + y)
-        |      AS sum_sape
-        |  FROM s)
-        |SELECT days,
-        |  round(CAST(sae AS DOUBLE) / CAST(days AS DOUBLE), 6) AS mae,
-        |  round(CAST(se AS DOUBLE) / CAST(days AS DOUBLE), 6) AS bias,
-        |  round(sum_ape / CAST(days AS DOUBLE), 6) AS mape,
-        |  round(sum_sape / CAST(days AS DOUBLE), 6) AS smape
-        |FROM agg""".stripMargin,
-    "q185_fk_discovery" -> {
-      val blocks = fkPairs.map { case (cl, ct, cc, pl, pt, pc) =>
-        s"""SELECT '$cl' AS child, '$pl' AS parent,
-           |  cd AS child_distinct, pd AS parent_distinct,
-           |  prows - pd AS parent_dup_rows, m AS matched,
-           |  cd - m AS orphans,
-           |  round(CAST(m AS DOUBLE) / CAST(cd AS DOUBLE), 6) AS containment
-           |FROM (SELECT
-           |  (SELECT count(DISTINCT $cc) FROM $ct WHERE $cc IS NOT NULL) AS cd,
-           |  (SELECT count(DISTINCT $pc) FROM $pt WHERE $pc IS NOT NULL) AS pd,
-           |  (SELECT count(*) FROM $pt WHERE $pc IS NOT NULL) AS prows,
-           |  (SELECT count(*) FROM (SELECT DISTINCT $cc AS v FROM $ct
-           |     WHERE $cc IS NOT NULL) x
-           |   WHERE v IN (SELECT $pc FROM $pt)) AS m)""".stripMargin
-      }
-      blocks.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-        "\n) ORDER BY child, parent")
-    },
-    "q184_bootstrap_means" ->
-      s"""WITH r AS (SELECT unnest(range(0, 16)) AS rep),
-         |b AS (SELECT r.rep, CAST(e.event_id AS VARCHAR) AS id, e.value AS x,
-         |    ('0x' || substr(md5(CAST(e.event_id AS VARCHAR) || ':' ||
-         |      CAST(r.rep AS VARCHAR) || ':bs'), 1, 15))::UBIGINT AS h
-         |  FROM events e, r),
-         |w AS (SELECT rep, id, x,
-         |    CAST(len(list_filter(
-         |      ${graft.operators.Analytics.poissonThresholds60
-                  .mkString("[", ", ", "]")},
-         |      t -> t <= h)) AS BIGINT) AS w
-         |  FROM b)
-         |SELECT rep, CAST(sum(w) AS BIGINT) AS n_eff,
-         |  round(list_reduce(list(CAST(w AS DOUBLE) * x ORDER BY id),
-         |      (a, c) -> a + c)
-         |    / CAST(CAST(sum(w) AS BIGINT) AS DOUBLE), 6) AS wmean
-         |FROM w GROUP BY rep ORDER BY rep""".stripMargin,
-    "q183_interval_coverage" ->
-      """WITH b AS (SELECT user_id AS k, epoch_us(ts) AS s,
-        |    epoch_us(ts) + CAST(greatest(CAST(1.0 AS DOUBLE), floor(value))
-        |      AS BIGINT) * 60000000 AS e
-        |  FROM events),
-        |f AS (SELECT k, s, e,
-        |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-        |      THEN 1 ELSE 0 END AS f
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY k ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |i AS (SELECT k, s, e,
-        |    sum(f) OVER (PARTITION BY k ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS iid
-        |  FROM f),
-        |isl AS (SELECT k, iid, min(s) AS st, max(e) AS en,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM i GROUP BY 1, 2)
-        |SELECT k AS user_id, CAST(sum(c) AS BIGINT) AS n_intervals,
-        |  CAST(count(*) AS BIGINT) AS n_islands,
-        |  CAST(sum(en - st) AS BIGINT) AS covered,
-        |  CAST(max(en - st) AS BIGINT) AS max_island
-        |FROM isl GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q181_id_gaps" ->
-      """WITH ids AS (SELECT DISTINCT l_orderkey AS id FROM lineitem),
-        |r AS (SELECT id, id - row_number() OVER (ORDER BY id) AS a
-        |      FROM ids),
-        |isl AS (SELECT a, min(id) AS s, max(id) AS e FROM r GROUP BY 1),
-        |g AS (SELECT lag(e) OVER (ORDER BY s) AS pe, s FROM isl)
-        |SELECT 'lineitem' AS tbl, pe + 1 AS gap_start, s - 1 AS gap_end,
-        |  s - 1 - pe AS gap_len
-        |FROM g WHERE pe IS NOT NULL ORDER BY gap_start""".stripMargin,
-    "q179_anova" ->
-      """WITH b AS (SELECT CAST(event_type AS VARCHAR) AS g, event_id AS id,
-        |    value AS v FROM events),
-        |pg AS (SELECT g, CAST(count(*) AS BIGINT) AS ng,
-        |    list_reduce(list(v ORDER BY id), (a, c) -> a + c) AS sx,
-        |    list_reduce(list(v * v ORDER BY id), (a, c) -> a + c) AS sxx
-        |  FROM b GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(ng) AS BIGINT) AS n,
-        |    list_reduce(list(sx ORDER BY g), (a, c) -> a + c) AS s
-        |  FROM pg),
-        |gm AS (SELECT s / CAST(n AS DOUBLE) AS grand FROM tot),
-        |terms AS (SELECT g,
-        |    sxx - ((sx * sx) / CAST(ng AS DOUBLE)) AS sswg,
-        |    CAST(ng AS DOUBLE) *
-        |      ((sx / CAST(ng AS DOUBLE) - grand) *
-        |       (sx / CAST(ng AS DOUBLE) - grand)) AS ssbg
-        |  FROM pg, gm),
-        |fs AS (SELECT
-        |    list_reduce(list(sswg ORDER BY g), (a, c) -> a + c) AS ssw,
-        |    list_reduce(list(ssbg ORDER BY g), (a, c) -> a + c) AS ssb
-        |  FROM terms)
-        |SELECT k, n, round(ssb, 6) AS ssb, round(ssw, 6) AS ssw,
-        |  k - 1 AS df1, n - k AS df2,
-        |  round(CASE WHEN k < 2 OR n <= k OR ssw = 0 THEN NULL
-        |    ELSE (ssb / CAST(k - 1 AS DOUBLE)) /
-        |         (ssw / CAST(n - k AS DOUBLE)) END, 6) AS f
-        |FROM fs, tot""".stripMargin,
-    "q178_kmv_quantiles" ->
-      """WITH h AS (
-        |  SELECT event_id, value,
-        |    ('0x' || substr(md5(CAST(event_id AS VARCHAR) || ':7'),
-        |      1, 15))::UBIGINT AS priority
-        |  FROM events),
-        |s AS (SELECT * FROM h ORDER BY priority ASC, event_id ASC
-        |      LIMIT 256),
-        |r AS (SELECT value, priority,
-        |    row_number() OVER (ORDER BY value ASC, priority ASC) AS rk,
-        |    count(*) OVER () AS m
-        |  FROM s),
-        |qs AS (SELECT unnest(CAST([0.1, 0.5, 0.9, 0.99] AS DOUBLE[])) AS q)
-        |SELECT q, value AS est, m AS sample_size
-        |FROM r JOIN qs ON rk = greatest(1, CAST(ceil(q * m) AS BIGINT))
-        |ORDER BY q""".stripMargin,
-    "q177_table_fingerprint" ->
-      """WITH rh AS (
-        |  SELECT o_orderpriority AS g,
-        |    ('0x' || substr(md5(
-        |      CAST(o_orderkey AS VARCHAR) || chr(1) ||
-        |      CAST(o_custkey AS VARCHAR) || chr(1) ||
-        |      o_orderstatus || chr(1) ||
-        |      CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)
-        |    ), 1, 15))::UBIGINT AS h
-        |  FROM orders),
-        |hc AS (SELECT g, h, CAST(count(*) AS BIGINT) AS c
-        |       FROM rh GROUP BY 1, 2)
-        |SELECT g AS o_orderpriority, CAST(sum(c) AS BIGINT) AS n_rows,
-        |  count(*) AS n_distinct_rows,
-        |  CAST(bit_xor(('0x' || substr(md5(
-        |      CAST(h AS VARCHAR) || ':' || CAST(c AS VARCHAR)
-        |    ), 1, 15))::UBIGINT) AS BIGINT) AS fingerprint
-        |FROM hc GROUP BY g ORDER BY g""".stripMargin,
-    "q176_chi_square" ->
-      """WITH cells AS (
-        |  SELECT CAST(o_orderpriority AS VARCHAR) AS x,
-        |    CAST(o_orderstatus AS VARCHAR) AS y,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM orders GROUP BY 1, 2),
-        |mx AS (SELECT x, CAST(sum(c) AS BIGINT) AS cx FROM cells GROUP BY 1),
-        |my AS (SELECT y, CAST(sum(c) AS BIGINT) AS cy FROM cells GROUP BY 1),
-        |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
-        |t AS (SELECT cells.x, cells.y,
-        |    (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)) / CAST(n AS DOUBLE)
-        |      AS e,
-        |    ((CAST(c AS DOUBLE) -
-        |      (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)) / CAST(n AS DOUBLE))
-        |     * (CAST(c AS DOUBLE) -
-        |      (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)) / CAST(n AS DOUBLE)))
-        |    / ((CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)) / CAST(n AS DOUBLE))
-        |      AS term
-        |  FROM cells JOIN mx USING (x) JOIN my USING (y) CROSS JOIN nn),
-        |f AS (SELECT
-        |    list_reduce(list(term ORDER BY x, y), (a, b) -> a + b) AS st,
-        |    list_reduce(list(e ORDER BY x, y), (a, b) -> a + b) AS se
-        |  FROM t),
-        |dims AS (SELECT (SELECT count(*) FROM mx) AS r,
-        |                (SELECT count(*) FROM my) AS c)
-        |SELECT n, r, c, (r - 1) * (c - 1) AS dof,
-        |  round(st + (CAST(n AS DOUBLE) - se), 6) AS chi2,
-        |  round(CASE WHEN least(r - 1, c - 1) <= 0 THEN NULL
-        |    ELSE sqrt((st + (CAST(n AS DOUBLE) - se)) /
-        |      (CAST(n AS DOUBLE) * CAST(least(r - 1, c - 1) AS DOUBLE)))
-        |    END, 6) AS cramers_v
-        |FROM f, nn, dims""".stripMargin,
-    "q175_winsorize" ->
-      """WITH r AS (
-        |  SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |                       ORDER BY value ASC, event_id ASC) AS rk,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |b AS (SELECT event_type,
-        |    min(CASE WHEN rk = greatest(1, CAST(ceil(
-        |        CAST(0.05 AS DOUBLE) * n) AS BIGINT)) THEN value END) AS lo,
-        |    min(CASE WHEN rk = greatest(1, CAST(ceil(
-        |        CAST(0.95 AS DOUBLE) * n) AS BIGINT)) THEN value END) AS hi
-        |  FROM r GROUP BY 1)
-        |SELECT e.event_type, e.event_id, e.value,
-        |  greatest(b.lo, least(b.hi, e.value)) AS winsorized
-        |FROM events e JOIN b USING (event_type)
-        |ORDER BY event_type, event_id""".stripMargin,
-    "q163_threshold_curve" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+')
-         |          AS toks FROM u)),
-         |p AS (
-         |  SELECT len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id),
-         |k AS (SELECT LEAST(CAST(floor(j * 20) AS INT), 19) AS bucket,
-         |        CAST(count(*) AS BIGINT) AS n_pairs
-         |      FROM p WHERE j >= 0.55 GROUP BY 1),
-         |spine AS (SELECT CAST(unnest(range(0, 20)) AS INT) AS bucket),
-         |f AS (SELECT spine.bucket AS bucket, coalesce(n_pairs, 0) AS n_pairs
-         |      FROM spine LEFT JOIN k USING (bucket))
-         |SELECT bucket, round(CAST(bucket AS DOUBLE) /
-         |    CAST(20.0 AS DOUBLE), 6) AS t_lo, n_pairs,
-         |  CAST(sum(n_pairs) OVER (ORDER BY bucket DESC ROWS BETWEEN
-         |    UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS n_at_or_above
-         |FROM f ORDER BY bucket""".stripMargin,
-    "q162_minmax_scale" ->
-      """WITH s AS (SELECT o_orderpriority AS g, min(o_totalprice) AS mn,
-        |    max(o_totalprice) AS mx FROM orders GROUP BY 1)
-        |SELECT o.o_orderpriority, o.o_orderkey,
-        |  round(CASE WHEN s.mx = s.mn THEN CAST(0.0 AS DOUBLE)
-        |             ELSE (o.o_totalprice - s.mn) / (s.mx - s.mn) END, 6)
-        |    AS scaled
-        |FROM orders o JOIN s ON o.o_orderpriority = s.g
-        |ORDER BY o.o_orderkey""".stripMargin,
-    "q161_quantile_normalize" ->
-      """WITH d AS (SELECT o_orderpriority AS g, o_orderkey AS id,
-        |    o_totalprice AS v FROM orders),
-        |p AS (SELECT g, id,
-        |        row_number() OVER (PARTITION BY g ORDER BY v ASC, id ASC)
-        |          AS r,
-        |        count(*) OVER (PARTITION BY g) AS ng
-        |      FROM d),
-        |pp AS (SELECT g, id,
-        |         CASE WHEN ng = 1 THEN CAST(0.0 AS DOUBLE)
-        |              ELSE CAST(r - 1 AS DOUBLE) / CAST(ng - 1 AS DOUBLE)
-        |         END AS pct
-        |       FROM p),
-        |gl AS (SELECT v, row_number() OVER (ORDER BY v ASC, g ASC, id ASC)
-        |         AS gr FROM d),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d)
-        |SELECT pp.g AS o_orderpriority, pp.id AS o_orderkey,
-        |  round(gl.v, 6) AS normalized
-        |FROM pp JOIN gl ON gl.gr =
-        |  CAST(floor((pct * CAST((SELECT n FROM n) - 1 AS DOUBLE)) +
-        |    CAST(0.5 AS DOUBLE)) AS BIGINT) + 1
-        |ORDER BY o_orderkey""".stripMargin,
-    "q160_dedup_provenance" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id,
-         |    text || ' extra token and more extra' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+')
-         |          AS toks FROM u)),
-         |e0 AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b FROM t a
-         |  JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-         |      >= 0.55),
-         |edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s),
-         |q AS (SELECT doc_id, ${qualitySql("text")} AS quality FROM u),
-         |sc AS (SELECT comp.id AS id, comp.c AS c, q.quality AS quality,
-         |         row_number() OVER (PARTITION BY comp.c
-         |           ORDER BY q.quality DESC, comp.id) AS rk
-         |       FROM comp JOIN q ON q.doc_id = comp.id),
-         |win AS (SELECT c, id AS winner, quality AS winner_score
-         |        FROM sc WHERE rk = 1)
-         |SELECT sc.id AS loser, win.winner AS winner,
-         |  round(sc.quality, 6) AS loser_score,
-         |  round(win.winner_score, 6) AS winner_score
-         |FROM sc JOIN win USING (c) WHERE sc.rk > 1
-         |ORDER BY loser""".stripMargin,
-    "q159_zipf_slope" ->
-      """WITH c AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM
-        |    (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |     FROM documents)
-        |  WHERE w <> '' GROUP BY 1),
-        |top AS (SELECT CAST(row_number() OVER (ORDER BY c DESC, w) AS BIGINT)
-        |          AS rank, c
-        |        FROM c QUALIFY rank <= 1000),
-        |pts AS (SELECT rank, ln(CAST(rank AS DOUBLE)) AS x,
-        |          ln(CAST(c AS DOUBLE)) AS y FROM top),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        list_reduce(list(x ORDER BY rank), (a, b) -> a + b) AS sx,
-        |        list_reduce(list(y ORDER BY rank), (a, b) -> a + b) AS sy,
-        |        list_reduce(list(x * y ORDER BY rank), (a, b) -> a + b)
-        |          AS sxy,
-        |        list_reduce(list(x * x ORDER BY rank), (a, b) -> a + b)
-        |          AS sxx
-        |      FROM pts)
-        |SELECT n AS n_terms,
-        |  round(((CAST(n AS DOUBLE) * sxy) - (sx * sy)) /
-        |    ((CAST(n AS DOUBLE) * sxx) - (sx * sx)), 6) AS slope,
-        |  round((sy - ((((CAST(n AS DOUBLE) * sxy) - (sx * sy)) /
-        |    ((CAST(n AS DOUBLE) * sxx) - (sx * sx))) * sx)) /
-        |    CAST(n AS DOUBLE), 6) AS intercept
-        |FROM s""".stripMargin,
-    "q158_embedding_outliers" ->
-      """WITH p AS (SELECT q.vec_id AS id,
-        |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |      CAST(c.embedding AS DOUBLE[])) AS cos,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |        CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS rnk
-        |  FROM embeddings q, embeddings c WHERE q.vec_id <> c.vec_id
-        |  QUALIFY rnk <= 5),
-        |iso AS (SELECT id, min(cos) AS kth FROM p GROUP BY 1)
-        |SELECT CAST(row_number() OVER (ORDER BY kth, id) AS INT) AS rank,
-        |  id, round(kth, 6) AS kth_cosine
-        |FROM iso QUALIFY rank <= 20 ORDER BY rank""".stripMargin,
-    "q157_dup_cluster_sizes" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id,
-         |    text || ' extra token and more extra' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+')
-         |          AS toks FROM u)),
-         |e0 AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b FROM t a
-         |  JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-         |      >= 0.55),
-         |edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s),
-         |sizes AS (SELECT c, CAST(count(*) AS BIGINT) AS size
-         |          FROM comp GROUP BY c),
-         |hist AS (SELECT size, CAST(count(*) AS BIGINT) AS n_clusters
-         |         FROM sizes GROUP BY size
-         |         UNION ALL
-         |         SELECT 1 AS size,
-         |           (SELECT count(*) FROM u) - (SELECT count(*) FROM comp)
-         |             AS n_clusters)
-         |SELECT size, CAST(sum(n_clusters) AS BIGINT) AS n_clusters
-         |FROM hist GROUP BY size ORDER BY size""".stripMargin,
-    "q156_attribution" ->
-      """WITH base AS (SELECT user_id AS u, CAST(epoch_us(ts) AS BIGINT)
-        |    AS tsu, event_id AS id, event_type AS t FROM events),
-        |conv AS (SELECT u, tsu AS cts, id AS cid FROM base
-        |         WHERE t = 'purchase'),
-        |touch AS (SELECT u, tsu AS tts, id AS tid, t AS channel FROM base
-        |          WHERE t <> 'purchase'),
-        |m AS MATERIALIZED (SELECT conv.cid, touch.channel, touch.tid
-        |     FROM conv JOIN touch ON conv.u = touch.u
-        |     WHERE touch.tts <= conv.cts
-        |       AND touch.tts > conv.cts - 600000000),
-        |cnt AS (SELECT cid, CAST(count(*) AS BIGINT) AS n FROM m GROUP BY 1),
-        |att AS (SELECT m.channel AS channel, m.cid AS cid, m.tid AS tid,
-        |          CAST(1.0 AS DOUBLE) / CAST(cnt.n AS DOUBLE) AS credit
-        |        FROM m JOIN cnt USING (cid)
-        |        UNION ALL
-        |        SELECT '(direct)', conv.cid, -1, CAST(1.0 AS DOUBLE)
-        |        FROM conv LEFT JOIN cnt ON conv.cid = cnt.cid
-        |        WHERE cnt.cid IS NULL)
-        |SELECT channel,
-        |  CAST(count(DISTINCT cid) AS BIGINT) AS touched_conversions,
-        |  round(list_reduce(list(credit ORDER BY cid, tid),
-        |    (a, b) -> a + b), 6) AS credit
-        |FROM att GROUP BY channel ORDER BY channel""".stripMargin,
-    "q154_harmonic2" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-        |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-        |adj AS MATERIALIZED (SELECT x AS m, y AS n FROM e
-        |      UNION ALL SELECT y AS m, x AS n FROM e),
-        |deg AS (SELECT n, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
-        |th AS MATERIALIZED (SELECT DISTINCT a1.n AS a, a2.n AS z
-        |      FROM adj a1 JOIN adj a2 ON a1.m = a2.m AND a1.n <> a2.n),
-        |n2 AS (SELECT a AS node, CAST(count(*) AS BIGINT) AS n2
-        |       FROM th
-        |       LEFT JOIN e e1 ON th.a = e1.x AND th.z = e1.y
-        |       LEFT JOIN e e2 ON th.a = e2.y AND th.z = e2.x
-        |       WHERE e1.x IS NULL AND e2.x IS NULL
-        |       GROUP BY 1),
-        |h AS (SELECT deg.n AS node, deg.d AS degree,
-        |        coalesce(n2.n2, 0) AS n2,
-        |        CAST(deg.d AS DOUBLE) + (CAST(0.5 AS DOUBLE) *
-        |          CAST(coalesce(n2.n2, 0) AS DOUBLE)) AS harmonic
-        |      FROM deg LEFT JOIN n2 ON deg.n = n2.node)
-        |SELECT CAST(row_number() OVER (ORDER BY harmonic DESC, node) AS INT)
-        |    AS rank,
-        |  node, degree, n2, round(harmonic, 6) AS harmonic
-        |FROM h QUALIFY rank <= 20 ORDER BY rank""".stripMargin,
-    "q155_clustering_coeff" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-        |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-        |adj AS (SELECT x AS m, y AS n FROM e
-        |        UNION ALL SELECT y AS m, x AS n FROM e),
-        |deg AS (SELECT n, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
-        |t AS (SELECT e1.x AS x, e1.y AS y, e2.y AS z
-        |      FROM e e1 JOIN e e2 ON e1.y = e2.x
-        |      JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y),
-        |nodes AS (SELECT x AS node FROM t UNION ALL SELECT y FROM t
-        |          UNION ALL SELECT z FROM t),
-        |c AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles
-        |      FROM nodes GROUP BY 1),
-        |s AS (SELECT deg.n AS node, deg.d AS degree,
-        |        coalesce(c.triangles, 0) AS triangles,
-        |        CASE WHEN deg.d < 2 THEN CAST(0.0 AS DOUBLE)
-        |             ELSE (CAST(2.0 AS DOUBLE) *
-        |                   CAST(coalesce(c.triangles, 0) AS DOUBLE)) /
-        |                  (CAST(deg.d AS DOUBLE) *
-        |                   (CAST(deg.d AS DOUBLE) - CAST(1.0 AS DOUBLE)))
-        |        END AS cc
-        |      FROM deg LEFT JOIN c ON deg.n = c.node)
-        |SELECT CAST(row_number() OVER (ORDER BY cc DESC, node) AS INT)
-        |    AS rank,
-        |  node, degree, triangles, round(cc, 6) AS cc
-        |FROM s QUALIFY rank <= 20 ORDER BY rank""".stripMargin,
-    "q153_psi" ->
-      """WITH ref AS (SELECT o_totalprice AS v FROM orders
-        |     WHERE o_orderdate < TIMESTAMP '1995-06-01'
-        |       AND o_totalprice IS NOT NULL),
-        |cur AS (SELECT o_totalprice AS v FROM orders
-        |        WHERE o_orderdate >= TIMESTAMP '1995-06-01'
-        |          AND o_totalprice IS NOT NULL),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rank FROM ref),
-        |nr AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ref),
-        |ed AS (SELECT t.j AS j, r.v AS e
-        |       FROM (SELECT unnest(range(1, 10)) AS j) t
-        |       JOIN r ON r.rank = ((SELECT n FROM nr) * t.j) // 10),
-        |es AS (SELECT list(e ORDER BY j) AS es FROM ed),
-        |ra AS (SELECT len(list_filter((SELECT es FROM es), x -> v > x))
-        |         AS bin FROM ref),
-        |rb AS (SELECT len(list_filter((SELECT es FROM es), x -> v > x))
-        |         AS bin FROM cur),
-        |ca AS (SELECT bin, CAST(count(*) AS BIGINT) AS ref_cnt
-        |       FROM ra GROUP BY 1),
-        |cb AS (SELECT bin, CAST(count(*) AS BIGINT) AS cur_cnt
-        |       FROM rb GROUP BY 1),
-        |spine AS (SELECT CAST(unnest(range(0, 10)) AS INT) AS bin),
-        |j0 AS (SELECT spine.bin AS bin, coalesce(ref_cnt, 0) AS ref_cnt,
-        |         coalesce(cur_cnt, 0) AS cur_cnt
-        |       FROM spine LEFT JOIN ca USING (bin) LEFT JOIN cb USING (bin)),
-        |t0 AS (SELECT CAST(sum(ref_cnt) AS BIGINT) AS na,
-        |         CAST(sum(cur_cnt) AS BIGINT) AS nb FROM j0),
-        |tm AS (SELECT bin, ref_cnt, cur_cnt,
-        |         (CAST(ref_cnt AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
-        |           (CAST((SELECT na FROM t0) AS DOUBLE) +
-        |            CAST(5.0 AS DOUBLE)) AS p_ref,
-        |         (CAST(cur_cnt AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
-        |           (CAST((SELECT nb FROM t0) AS DOUBLE) +
-        |            CAST(5.0 AS DOUBLE)) AS p_cur
-        |       FROM j0),
-        |tt AS (SELECT bin, ref_cnt, cur_cnt, p_ref, p_cur,
-        |         (p_ref - p_cur) * ln(p_ref / p_cur) AS term FROM tm),
-        |ps AS (SELECT list_reduce(list(term ORDER BY bin), (a, b) -> a + b)
-        |         AS psi FROM tt)
-        |SELECT bin, ref_cnt, cur_cnt, round(p_ref, 6) AS p_ref,
-        |  round(p_cur, 6) AS p_cur, round((SELECT psi FROM ps), 6) AS psi
-        |FROM tt ORDER BY bin""".stripMargin,
-    "q152_kaplan_meier" ->
-      """WITH s AS (SELECT user_id,
-        |    CAST(min(epoch_us(ts)) AS BIGINT) AS fst,
-        |    CAST(min(CASE WHEN event_type = 'error' THEN epoch_us(ts) END)
-        |      AS BIGINT) AS ferr
-        |  FROM events GROUP BY 1),
-        |g AS (SELECT CAST(max(epoch_us(ts)) AS BIGINT) AS gmx FROM events),
-        |subj AS (SELECT
-        |    coalesce(ferr - fst, (SELECT gmx FROM g) - fst) // 3600000000
-        |      AS t,
-        |    ferr IS NOT NULL AS e
-        |  FROM s),
-        |byt AS (SELECT t, CAST(sum(CASE WHEN e THEN 1 ELSE 0 END) AS BIGINT)
-        |          AS d, CAST(count(*) AS BIGINT) AS c
-        |        FROM subj GROUP BY 1),
-        |risk AS (SELECT t, d, c,
-        |           CAST(sum(c) OVER (ORDER BY t DESC ROWS BETWEEN UNBOUNDED
-        |             PRECEDING AND CURRENT ROW) AS BIGINT) AS n
-        |         FROM byt),
-        |ev AS (SELECT t, d, n,
-        |         CAST(1.0 AS DOUBLE) - (CAST(d AS DOUBLE) / CAST(n AS DOUBLE))
-        |           AS term
-        |       FROM risk WHERE d > 0)
-        |SELECT a.t AS t, min(a.n) AS n_risk, min(a.d) AS events,
-        |  round(list_reduce(list(b.term ORDER BY b.t), (x, y) -> x * y), 6)
-        |    AS survival
-        |FROM ev a JOIN ev b ON b.t <= a.t
-        |GROUP BY a.t ORDER BY t""".stripMargin,
-    "q151_mutual_information" ->
-      s"""WITH cells AS (SELECT CAST(l_returnflag AS VARCHAR) AS x,
-         |    CAST(l_linestatus AS VARCHAR) AS y, count(*) AS c
-         |  FROM lineitem GROUP BY 1, 2),
-         |$miOracleTail""".stripMargin,
-    "q148_join_cardinality" ->
-      """WITH ca AS (SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS c
-        |            FROM lineitem GROUP BY 1),
-        |p AS (SELECT k, CAST(c * c AS BIGINT) AS pr FROM ca),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_common_keys,
-        |        CAST(sum(pr) AS BIGINT) AS join_rows FROM p)
-        |SELECT n_common_keys, join_rows, k AS hot_key, pr AS hot_rows
-        |FROM p CROSS JOIN t ORDER BY pr DESC, k LIMIT 1""".stripMargin,
-    "q149_weighted_draws" ->
-      s"""WITH d AS (SELECT doc_id AS id,
-         |    CASE WHEN length(trim(text)) = 0 THEN 0
-         |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS w
-         |  FROM documents),
-         |c AS (SELECT id, w, sum(w) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED
-         |        PRECEDING AND CURRENT ROW) AS cum FROM d),
-         |wt AS (SELECT CAST(sum(w) AS BIGINT) AS wt FROM d),
-         |dr AS (SELECT CAST(i AS INT) AS draw,
-         |         CAST((('0x' || substr(md5('7:' || i::VARCHAR), 1, 15))
-         |           ::UBIGINT + 1) AS DOUBLE) /
-         |           CAST(${math.pow(2.0, 60)} AS DOUBLE) AS u
-         |       FROM (SELECT unnest(range(1, 21)) AS i))
-         |SELECT draw, id, CAST(w AS BIGINT) AS w, round(u, 6) AS u
-         |FROM c JOIN dr
-         |  ON CAST(cum AS DOUBLE) >= u * CAST((SELECT wt FROM wt) AS DOUBLE)
-         | AND CAST(cum - w AS DOUBLE) < u * CAST((SELECT wt FROM wt) AS DOUBLE)
-         |ORDER BY draw""".stripMargin,
-    "q150_twap" ->
-      """WITH d AS (SELECT user_id, ts, event_id, value,
-        |        epoch_us(lead(ts) OVER w) - epoch_us(ts) AS dt
-        |      FROM events
-        |      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |f AS (SELECT user_id, ts, event_id, value, dt,
-        |        value * CAST(dt AS DOUBLE) AS vd
-        |      FROM d WHERE dt IS NOT NULL)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
-        |  CAST(sum(dt) AS BIGINT) AS total_micros,
-        |  round(list_reduce(list(vd ORDER BY ts, event_id),
-        |      (a, b) -> a + b) /
-        |    CAST(CAST(sum(dt) AS BIGINT) AS DOUBLE), 6) AS twap
-        |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q146_lexical_diversity" ->
-      """WITH tok AS (SELECT source AS g,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents),
-        |counts AS (SELECT g, w, count(*) AS c FROM tok
-        |           WHERE w <> '' GROUP BY 1, 2),
-        |tot AS (SELECT g, CAST(sum(c) AS BIGINT) AS n,
-        |          CAST(count(*) AS BIGINT) AS v FROM counts GROUP BY 1),
-        |t AS (SELECT counts.g AS g, w,
-        |        (CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) *
-        |          ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) AS term,
-        |        n, v
-        |      FROM counts JOIN tot ON counts.g = tot.g),
-        |s AS (SELECT g, n, v,
-        |        list_reduce(list(term ORDER BY w), (a, b) -> a + b) AS sm
-        |      FROM t GROUP BY g, n, v)
-        |SELECT g AS "group", n AS n_tokens, v AS n_types,
-        |  round(CAST(v AS DOUBLE) / CAST(n AS DOUBLE), 6) AS ttr,
-        |  round(-sm, 6) AS entropy,
-        |  round(CASE WHEN v = 1 THEN CAST(0.0 AS DOUBLE)
-        |             ELSE (-sm) / ln(CAST(v AS DOUBLE)) END, 6)
-        |    AS norm_entropy
-        |FROM s ORDER BY "group"""".stripMargin,
-    "q147_trimmed_mean" ->
-      """WITH d AS (SELECT o_orderpriority AS g, o_orderkey AS id,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |r AS (SELECT g, id, cents,
-        |        row_number() OVER (PARTITION BY g
-        |          ORDER BY CAST(cents AS DOUBLE) DESC, id) AS rank,
-        |        count(*) OVER (PARTITION BY g) AS n
-        |      FROM d),
-        |k AS (SELECT g, n, cents FROM r
-        |      WHERE rank > floor(CAST(n AS DOUBLE) * CAST(0.1 AS DOUBLE))
-        |        AND rank <= n - floor(CAST(n AS DOUBLE) * CAST(0.1 AS DOUBLE)))
-        |SELECT g AS "group", CAST(min(n) AS BIGINT) AS n_total,
-        |  CAST(count(*) AS BIGINT) AS n_kept,
-        |  round(CAST(CAST(sum(cents) AS BIGINT) AS DOUBLE) /
-        |    CAST(count(*) AS DOUBLE), 6) AS mean
-        |FROM k GROUP BY g ORDER BY "group"""".stripMargin,
-    "q145_scd2" ->
-      """WITH f AS (SELECT user_id, ts, event_id, event_type,
-        |        CASE WHEN lag(event_type) OVER w IS NULL
-        |               OR lag(event_type) OVER w <> event_type
-        |             THEN 1 ELSE 0 END AS chg
-        |      FROM events
-        |      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |r AS (SELECT user_id, ts, event_type,
-        |        sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-        |      FROM f),
-        |g AS (SELECT user_id, run, min(ts) AS valid_from,
-        |        min(event_type) AS event_type
-        |      FROM r GROUP BY 1, 2),
-        |c AS (SELECT user_id, event_type, valid_from,
-        |        lead(valid_from) OVER (PARTITION BY user_id
-        |          ORDER BY valid_from, run) AS valid_to
-        |      FROM g)
-        |SELECT user_id, event_type,
-        |  CAST(valid_from AS VARCHAR) AS valid_from,
-        |  CAST(valid_to AS VARCHAR) AS valid_to,
-        |  valid_to IS NULL AS is_current
-        |FROM c ORDER BY user_id, valid_from, event_type""".stripMargin,
-    "q143_kcore" -> kCoreOracleSql(k = 120, rounds = 6),
-    "q144_link_prediction" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-        |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-        |adj AS MATERIALIZED (SELECT x AS m, y AS n FROM e
-        |      UNION ALL SELECT y AS m, x AS n FROM e),
-        |deg AS (SELECT n, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
-        |cm AS (SELECT a1.n AS a, a2.n AS b, CAST(count(*) AS BIGINT) AS common
-        |       FROM adj a1 JOIN adj a2 ON a1.m = a2.m AND a1.n < a2.n
-        |       GROUP BY 1, 2),
-        |cand AS (SELECT cm.a, cm.b, cm.common FROM cm
-        |         LEFT JOIN e ON cm.a = e.x AND cm.b = e.y
-        |         WHERE e.x IS NULL),
-        |sc AS (SELECT a, b, common,
-        |         CAST(common AS DOUBLE) /
-        |           CAST((da.d + db.d) - common AS DOUBLE) AS j
-        |       FROM cand JOIN deg da ON cand.a = da.n
-        |              JOIN deg db ON cand.b = db.n),
-        |top AS (SELECT a, b, common, j FROM sc
-        |        QUALIFY row_number() OVER (ORDER BY j DESC, a, b) <= 20)
-        |SELECT a AS item_a, b AS item_b, common, round(j, 6) AS jaccard
-        |FROM top ORDER BY item_a, item_b""".stripMargin,
-    "q142_triangles" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-        |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-        |t AS (SELECT e1.x AS x, e1.y AS y, e2.y AS z
-        |      FROM e e1 JOIN e e2 ON e1.y = e2.x
-        |      JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y),
-        |nodes AS (SELECT x AS node FROM t UNION ALL SELECT y FROM t
-        |          UNION ALL SELECT z FROM t),
-        |c AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles
-        |      FROM nodes GROUP BY 1),
-        |tot AS (SELECT CAST(sum(triangles) // 3 AS BIGINT) AS total FROM c),
-        |r AS (SELECT node, triangles,
-        |        row_number() OVER (ORDER BY triangles DESC, node) AS rank
-        |      FROM c QUALIFY rank <= 10)
-        |SELECT rank, node, triangles, (SELECT total FROM tot) AS total
-        |FROM r ORDER BY rank""".stripMargin,
-    "q141_ab_test" ->
-      """WITH u AS (SELECT user_id,
-        |    CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      >= 14 THEN 1 ELSE 0 END AS conv
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS a, conv
-        |      FROM u),
-        |s AS (SELECT CAST(sum(a) AS BIGINT) AS n1,
-        |        CAST(sum(a * conv) AS BIGINT) AS x1,
-        |        CAST(sum(1 - a) AS BIGINT) AS n2,
-        |        CAST(sum((1 - a) * conv) AS BIGINT) AS x2
-        |      FROM t)
-        |SELECT n1, x1, n2, x2,
-        |  round(CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE), 6) AS p1,
-        |  round(CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE), 6) AS p2,
-        |  round((CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE) -
-        |         CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE)) /
-        |    sqrt((((CAST(x1 AS DOUBLE) + CAST(x2 AS DOUBLE)) /
-        |           (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))) *
-        |          (CAST(1.0 AS DOUBLE) -
-        |           ((CAST(x1 AS DOUBLE) + CAST(x2 AS DOUBLE)) /
-        |            (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))))) *
-        |         ((CAST(1.0 AS DOUBLE) / CAST(n1 AS DOUBLE)) +
-        |          (CAST(1.0 AS DOUBLE) / CAST(n2 AS DOUBLE)))), 6) AS z
-        |FROM s""".stripMargin,
-    "q140_quantile_bins" ->
-      """WITH d AS (SELECT l_orderkey::VARCHAR || ':' ||
-        |    l_linenumber::VARCHAR AS rid, l_extendedprice AS v
-        |  FROM lineitem),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v, rid) AS rank FROM d),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-        |b AS (SELECT v, ((rank - 1) * 10) // (SELECT n FROM n) AS bucket
-        |      FROM r)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS cnt,
-        |  round(min(v), 6) AS lo, round(max(v), 6) AS hi
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q139_ranking_eval" -> rankingEvalOracleSql(k = 10),
-    "q180_mrr_map" ->
-      """WITH q AS (SELECT vec_id AS query_id, label,
-        |             CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |ranked AS (SELECT q.query_id, c.vec_id AS doc_id,
-        |             row_number() OVER (PARTITION BY q.query_id
-        |               ORDER BY list_cosine_similarity(
-        |                 CAST(c.embedding AS DOUBLE[]), q.qv) DESC, c.vec_id)
-        |               AS rank
-        |           FROM q, embeddings c WHERE c.vec_id <> q.query_id
-        |           QUALIFY rank <= 10),
-        |rel AS (SELECT q.query_id, c.vec_id AS doc_id
-        |        FROM q JOIN embeddings c
-        |          ON c.label = q.label AND c.vec_id <> q.query_id),
-        |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-        |         FROM rel GROUP BY 1),
-        |h AS (SELECT r.query_id, r.rank FROM ranked r
-        |      JOIN rel ON r.query_id = rel.query_id AND r.doc_id = rel.doc_id),
-        |i AS (SELECT query_id, rank,
-        |        row_number() OVER (PARTITION BY query_id ORDER BY rank)
-        |          AS hi
-        |      FROM h),
-        |d AS (SELECT query_id, CAST(count(*) AS BIGINT) AS hits,
-        |        CAST(min(rank) AS BIGINT) AS first_rank,
-        |        list_reduce(list(CAST(hi AS DOUBLE) / CAST(rank AS DOUBLE)
-        |          ORDER BY rank), (a, b) -> a + b) AS apsum
-        |      FROM i GROUP BY 1)
-        |SELECT n.query_id, n.n_rel, coalesce(d.hits, 0) AS hits,
-        |  round(coalesce(CAST(1.0 AS DOUBLE) /
-        |    CAST(d.first_rank AS DOUBLE), CAST(0.0 AS DOUBLE)), 6) AS rr,
-        |  round(coalesce(d.apsum, CAST(0.0 AS DOUBLE)) /
-        |    CAST(least(n.n_rel, 10) AS DOUBLE), 6) AS ap
-        |FROM nrel n LEFT JOIN d USING (query_id) ORDER BY query_id""".stripMargin,
-    "q138_lorenz_gini" ->
-      """WITH d AS (SELECT doc_id AS id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS w
-        |  FROM documents),
-        |r AS (SELECT id, w,
-        |        row_number() OVER (ORDER BY w, id) AS rank,
-        |        sum(w) OVER (ORDER BY w, id ROWS BETWEEN UNBOUNDED PRECEDING
-        |          AND CURRENT ROW) AS cumw
-        |      FROM d),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(w) AS BIGINT) AS wt FROM d),
-        |s AS (SELECT CAST(sum(rank * w) AS BIGINT) AS s FROM r),
-        |t AS (SELECT unnest(range(1, 11)) AS decile)
-        |SELECT t.decile AS decile,
-        |  ((SELECT n FROM n) * t.decile) // 10 AS target_rank,
-        |  round(CAST(r.cumw AS DOUBLE) /
-        |    CAST((SELECT wt FROM n) AS DOUBLE), 6) AS cum_share,
-        |  round(((CAST(2.0 AS DOUBLE) * CAST((SELECT s FROM s) AS DOUBLE)) /
-        |    (CAST((SELECT n FROM n) AS DOUBLE) *
-        |     CAST((SELECT wt FROM n) AS DOUBLE))) -
-        |    ((CAST((SELECT n FROM n) AS DOUBLE) + CAST(1.0 AS DOUBLE)) /
-        |     CAST((SELECT n FROM n) AS DOUBLE)), 6) AS gini
-        |FROM t JOIN r ON r.rank = ((SELECT n FROM n) * t.decile) // 10
-        |ORDER BY decile""".stripMargin,
-    "q137_histogram" ->
-      """WITH v AS (SELECT l_extendedprice AS x FROM lineitem
-        |           WHERE l_extendedprice IS NOT NULL),
-        |s AS (SELECT min(x) AS mn, max(x) AS mx FROM v),
-        |c AS (SELECT CASE WHEN s.mx = s.mn THEN 0 ELSE
-        |        LEAST(CAST(floor(((x - s.mn) * CAST(20.0 AS DOUBLE)) /
-        |          (s.mx - s.mn)) AS INT), 19) END AS bin
-        |      FROM v CROSS JOIN s),
-        |k AS (SELECT bin, CAST(count(*) AS BIGINT) AS cnt FROM c GROUP BY 1),
-        |spine AS (SELECT CAST(unnest(range(0, 20)) AS INT) AS bin)
-        |SELECT spine.bin AS bin,
-        |  round(s.mn + ((CAST(spine.bin AS DOUBLE) * (s.mx - s.mn)) /
-        |    CAST(20.0 AS DOUBLE)), 6) AS lo,
-        |  round(s.mn + (((CAST(spine.bin AS DOUBLE) + CAST(1.0 AS DOUBLE)) *
-        |    (s.mx - s.mn)) / CAST(20.0 AS DOUBLE)), 6) AS hi,
-        |  coalesce(cnt, 0) AS cnt
-        |FROM spine LEFT JOIN k USING (bin) CROSS JOIN s
-        |ORDER BY bin""".stripMargin,
-    "q136_profile_diff" -> {
-      val fromA = "(SELECT * FROM orders WHERE o_orderdate < " +
-        "TIMESTAMP '1995-06-01')"
-      val pa = Seq(
-        profileNumColSql("o_orderkey", fromA, "_a"),
-        profileNumColSql("o_custkey", fromA, "_a"),
-        profileStrColSql("o_orderstatus", fromA, "_a"),
-        profileNumColSql("o_totalprice", fromA, "_a")).mkString(" UNION ALL\n")
-      val pb = Seq(
-        profileNumColSql("o_orderkey", "orders", "_b"),
-        profileNumColSql("o_custkey", "orders", "_b"),
-        profileNumColSql("o_totalprice", "orders", "_b"),
-        profileRenderColSql("o_orderdate", "orders", "_b"))
-        .mkString(" UNION ALL\n")
-      val eq = Seq("n_rows", "n_nulls", "n_distinct", "min_num", "max_num",
-        "min_str", "max_str", "avg_len")
-        .map(c => s"(${c}_a IS NOT DISTINCT FROM ${c}_b)").mkString(" AND ")
-      s"""WITH pa AS (
-         |$pa),
-         |pb AS (
-         |$pb)
-         |SELECT coalesce("column_a", "column_b") AS "column",
-         |  CASE WHEN "column_b" IS NULL THEN 'removed'
-         |       WHEN "column_a" IS NULL THEN 'added'
-         |       WHEN $eq THEN 'unchanged'
-         |       ELSE 'changed' END AS status,
-         |  n_rows_a, n_rows_b, n_nulls_a, n_nulls_b,
-         |  n_distinct_a, n_distinct_b
-         |FROM pa FULL OUTER JOIN pb ON "column_a" = "column_b"
-         |ORDER BY "column"""".stripMargin
-    },
-    "q135_co_occurrence" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |n AS (SELECT CAST(count(DISTINCT bk) AS BIGINT) AS nb FROM b),
-        |i AS (SELECT it, CAST(count(*) AS BIGINT) AS ci FROM b GROUP BY 1),
-        |p AS (SELECT a.it AS item_a, b2.it AS item_b,
-        |        CAST(count(*) AS BIGINT) AS cnt
-        |      FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it
-        |      GROUP BY 1, 2),
-        |s AS (SELECT item_a, item_b, cnt,
-        |        CAST(cnt AS DOUBLE) / CAST((SELECT nb FROM n) AS DOUBLE)
-        |          AS support,
-        |        (CAST(cnt AS DOUBLE) * CAST((SELECT nb FROM n) AS DOUBLE)) /
-        |        (CAST(ia.ci AS DOUBLE) * CAST(ib.ci AS DOUBLE)) AS lift
-        |      FROM p JOIN i ia ON p.item_a = ia.it
-        |             JOIN i ib ON p.item_b = ib.it)
-        |SELECT item_a, item_b, cnt, round(support, 6) AS support,
-        |  round(lift, 6) AS lift
-        |FROM s ORDER BY cnt DESC, item_a, item_b LIMIT 20""".stripMargin,
-    "q134_benford" -> benfordOracleSql,
-    "q132_ks_drift" ->
-      """WITH s AS (SELECT o_totalprice AS v,
-        |    CASE WHEN o_orderdate < TIMESTAMP '1995-06-01' THEN 1 ELSE 0 END
-        |      AS a
-        |  FROM orders),
-        |n AS (SELECT CAST(sum(a) AS BIGINT) AS n1,
-        |        CAST(sum(1 - a) AS BIGINT) AS n2 FROM s),
-        |c AS (SELECT v, CAST(sum(a) AS BIGINT) AS c1,
-        |        CAST(sum(1 - a) AS BIGINT) AS c2 FROM s GROUP BY 1),
-        |cum AS (SELECT v,
-        |          sum(c1) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |            AND CURRENT ROW) AS k1,
-        |          sum(c2) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |            AND CURRENT ROW) AS k2
-        |        FROM c),
-        |d AS (SELECT v,
-        |        abs(CAST(k1 AS DOUBLE) / CAST((SELECT n1 FROM n) AS DOUBLE) -
-        |            CAST(k2 AS DOUBLE) / CAST((SELECT n2 FROM n) AS DOUBLE))
-        |          AS diff
-        |      FROM cum)
-        |SELECT round(diff, 6) AS d_stat, v AS at_value,
-        |  (SELECT n1 FROM n) AS n1, (SELECT n2 FROM n) AS n2
-        |FROM d ORDER BY diff DESC, v LIMIT 1""".stripMargin,
-    "q133_corr_matrix" -> corrMatrixOracleSql,
-    "q131_mmr_select" -> mmrOracleSql(k = 10, lambda = 0.7, candidates = 50),
-    "q130_source_keyness" ->
-      """WITH tok AS (SELECT source,
-        |       unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |     FROM documents),
-        |counts AS (SELECT source, w, count(*) AS c FROM tok
-        |           WHERE w <> '' GROUP BY 1, 2),
-        |gt AS (SELECT source, CAST(sum(c) AS BIGINT) AS cg
-        |       FROM counts GROUP BY 1),
-        |wt AS (SELECT w, CAST(sum(c) AS BIGINT) AS cw FROM counts GROUP BY 1),
-        |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM counts),
-        |s AS (SELECT source, w, c, cw,
-        |        CAST(c AS DOUBLE) AS a,
-        |        CAST(cw - c AS DOUBLE) AS b,
-        |        CAST(cg AS DOUBLE) AS cc,
-        |        CAST((SELECT n FROM nn) AS DOUBLE) AS nd
-        |      FROM counts JOIN gt USING (source) JOIN wt USING (w)),
-        |g AS (SELECT source, w AS term,
-        |        CAST(2.0 AS DOUBLE) *
-        |          ((a * ln(a / ((cc * (a + b)) / nd))) +
-        |           CASE WHEN cw = c THEN CAST(0.0 AS DOUBLE)
-        |                ELSE b * ln(b / (((nd - cc) * (a + b)) / nd)) END)
-        |          AS g2
-        |      FROM s WHERE (a * nd) > (cc * (a + b))),
-        |r AS (SELECT source, term, g2,
-        |        row_number() OVER (PARTITION BY source
-        |          ORDER BY g2 DESC, term) AS rank
-        |      FROM g QUALIFY rank <= 5)
-        |SELECT source, term, round(g2, 6) AS g2, rank
-        |FROM r ORDER BY source, rank""".stripMargin,
-    "q129_top_pc" ->
-      s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings),
-         |x AS (SELECT id, unnest(range(len(v))) AS d, unnest(v) AS val
-         |      FROM e),
-         |mu AS (SELECT d, list_reduce(list(val ORDER BY id), (a, b) -> a + b) /
-         |         CAST((SELECT count(*) FROM e) AS DOUBLE) AS m
-         |       FROM x GROUP BY d),
-         |c AS (SELECT id, d, val - m AS cv FROM x JOIN mu USING (d)),
-         |p AS (SELECT a.id AS id, a.d AS i, b.d AS j, a.cv * b.cv AS prod
-         |      FROM c a JOIN c b ON a.id = b.id),
-         |cov AS (SELECT i, j,
-         |          list_reduce(list(prod ORDER BY id), (a, b) -> a + b) /
-         |          CAST((SELECT count(*) FROM e) - 1 AS DOUBLE) AS cij
-         |        FROM p GROUP BY i, j),
-         |w1 AS (SELECT i AS d,
-         |         list_reduce(list(cij ORDER BY j), (a, b) -> a + b) AS w
-         |       FROM cov GROUP BY i),
-         |l1 AS (SELECT sqrt(list_reduce(list(w * w ORDER BY d),
-         |         (a, b) -> a + b)) AS l FROM w1),
-         |v1 AS (SELECT d, w / (SELECT l FROM l1) AS v FROM w1),
-         |${pcRoundSql(2)},
-         |${pcRoundSql(3)}
-         |SELECT d + 1 AS dim, round(v, 6) AS pc1,
-         |  round((SELECT l FROM l3), 6) AS eigenvalue
-         |FROM v3 ORDER BY dim""".stripMargin,
-    "q128_embed_quantize" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |x AS (SELECT vec_id, unnest(range(len(v))) AS dim, unnest(v) AS val
-        |      FROM e),
-        |s AS (SELECT dim, min(val) AS mn, max(val) AS mx FROM x GROUP BY 1),
-        |c AS (SELECT vec_id, dim, val, mn, mx - mn AS rg,
-        |        CASE WHEN mx = mn THEN 0 ELSE
-        |          LEAST(GREATEST(CAST(floor(((val - mn) *
-        |            CAST(255.0 AS DOUBLE)) / (mx - mn)) AS INT), 0), 255)
-        |        END AS code
-        |      FROM x JOIN s USING (dim)),
-        |d AS (SELECT vec_id, dim, val, code,
-        |        mn + (CAST(code AS DOUBLE) * rg) / CAST(255.0 AS DOUBLE) AS dq
-        |      FROM c),
-        |m AS (SELECT vec_id, CAST(sum(code) AS BIGINT) AS code_sum,
-        |        list_reduce(list((val - dq) * (val - dq) ORDER BY dim),
-        |          (a, b) -> a + b) AS sse
-        |      FROM d GROUP BY 1)
-        |SELECT vec_id, code_sum, round(sse / CAST(64.0 AS DOUBLE), 6) AS mse
-        |FROM m ORDER BY vec_id""".stripMargin,
-    "q127_zorder_key" ->
-      s"""WITH s AS (SELECT min(l_partkey) AS mn0, max(l_partkey) AS mx0,
-         |             min(l_suppkey) AS mn1, max(l_suppkey) AS mx1
-         |           FROM lineitem),
-         |b AS (SELECT l_orderkey, l_linenumber,
-         |        ((l_partkey - mn0) * 65536) // (mx0 - mn0 + 1) AS b0,
-         |        ((l_suppkey - mn1) * 65536) // (mx1 - mn1 + 1) AS b1
-         |      FROM lineitem CROSS JOIN s),
-         |z AS (SELECT l_orderkey, l_linenumber,
-         |        CAST(${zInterleaveSql(2, 16)} AS BIGINT) AS zkey
-         |      FROM b)
-         |SELECT l_orderkey, l_linenumber, zkey, zkey >> 24 AS zbucket
-         |FROM z ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q124_profile" ->
-      s"""${profileNumColSql("o_custkey")} UNION ALL
-         |${profileRenderColSql("o_orderdate")} UNION ALL
-         |${profileNumColSql("o_orderkey")} UNION ALL
-         |${profileStrColSql("o_orderpriority")} UNION ALL
-         |${profileStrColSql("o_orderstatus")} UNION ALL
-         |${profileNumColSql("o_totalprice")}
-         |ORDER BY "column"""".stripMargin,
-    "q125_quality_checks" ->
-      """WITH checks AS (
-        |  SELECT 'pk_orders_unique' AS check_name,
-        |    CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS violations
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'pk_lineitem_unique',
-        |    CAST(count(*) - count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT)
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'fk_orders_custkey', CAST(count(*) AS BIGINT)
-        |  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_custkey IS NULL AND o.o_custkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'fk_lineitem_orderkey', CAST(count(*) AS BIGINT)
-        |  FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  WHERE o.o_orderkey IS NULL AND l.l_orderkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'fk_lineitem_partkey', CAST(count(*) AS BIGINT)
-        |  FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
-        |  WHERE p.p_partkey IS NULL AND l.l_partkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'range_lineitem_quantity', CAST(sum(CASE WHEN coalesce(
-        |    l_quantity >= 1.0 AND l_quantity <= 50.0, false) THEN 0 ELSE 1 END)
-        |    AS BIGINT)
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'range_lineitem_discount', CAST(sum(CASE WHEN coalesce(
-        |    l_discount >= 0.0 AND l_discount <= 0.1, false) THEN 0 ELSE 1 END)
-        |    AS BIGINT)
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'range_events_value', CAST(sum(CASE WHEN coalesce(
-        |    value >= 0.0 AND value <= 400.0, false) THEN 0 ELSE 1 END)
-        |    AS BIGINT)
-        |  FROM events)
-        |SELECT check_name, violations, violations = 0 AS passed
-        |FROM checks ORDER BY check_name""".stripMargin,
-    "q126_key_skew" ->
-      """WITH c AS (SELECT l_suppkey AS key, count(*) AS cnt
-        |  FROM lineitem GROUP BY 1),
-        |s AS (SELECT count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |        max(cnt) AS max_cnt FROM c),
-        |t AS (SELECT key, cnt,
-        |        row_number() OVER (ORDER BY cnt DESC, key) AS rank
-        |      FROM c QUALIFY rank <= 10)
-        |SELECT rank, key, CAST(cnt AS BIGINT) AS cnt,
-        |  round(CAST(cnt AS DOUBLE) / CAST(n_rows AS DOUBLE), 6) AS share,
-        |  n_keys,
-        |  round(CAST(max_cnt AS DOUBLE) *
-        |    (CAST(n_keys AS DOUBLE) / CAST(n_rows AS DOUBLE)), 6) AS skew
-        |FROM t CROSS JOIN s ORDER BY rank""".stripMargin,
-    "q123_source_minhash" ->
-      s"""WITH sh AS (SELECT DISTINCT source, unnest($shingle3Sql) AS sh FROM
-         |  (SELECT source, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |   FROM documents)),
-         |l AS (SELECT source, i AS lane, sh FROM sh
-         |      CROSS JOIN (SELECT unnest(range(0, 64)) AS i)),
-         |h AS (SELECT source, lane,
-         |        ('0x' || substr(md5(lane::VARCHAR || ':' || sh), 1, 15))::UBIGINT
-         |          AS hv
-         |      FROM l),
-         |m AS (SELECT source, lane, min(hv) AS mn FROM h GROUP BY 1, 2),
-         |p AS (SELECT a.source AS source_a, b.source AS source_b,
-         |        sum(CASE WHEN a.mn = b.mn THEN 1 ELSE 0 END) AS lane_matches
-         |      FROM m a JOIN m b ON a.lane = b.lane AND a.source < b.source
-         |      GROUP BY 1, 2)
-         |SELECT source_a, source_b, CAST(lane_matches AS BIGINT) AS lane_matches,
-         |  round(CAST(lane_matches AS DOUBLE) / 64, 6) AS est_jaccard
-         |FROM p ORDER BY source_a, source_b""".stripMargin,
-    "q122_hash_split" ->
-      """WITH h AS (SELECT doc_id,
-        |  ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT % 1000000 AS b
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN b < 800000 THEN 0 WHEN b < 900000 THEN 1 ELSE 2 END AS fold
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "q121_group_weighted_quantiles" ->
-      """WITH d AS (SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS score,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS w
-        |  FROM documents),
-        |c AS (SELECT source, doc_id, score, w,
-        |        sum(w) OVER (PARTITION BY source ORDER BY score, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM d),
-        |tot AS (SELECT source, CAST(sum(w) AS DOUBLE) AS tw FROM d GROUP BY 1),
-        |qs AS (SELECT unnest(CAST([0.25, 0.5, 0.75] AS DOUBLE[])) AS q)
-        |SELECT source, q, score AS value, CAST(cum AS BIGINT) AS cum_weight
-        |FROM c JOIN tot USING (source) CROSS JOIN qs
-        |WHERE cum >= q * tw AND (cum - w) < q * tw
-        |ORDER BY source, q""".stripMargin,
-    "q120_novelty" ->
-      s"""WITH ref AS (SELECT DISTINCT unnest($shingle3Sql) AS rsh FROM
-         |  (SELECT string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |   FROM documents WHERE source = 'src0')),
-         |ds AS (SELECT doc_id, unnest($shingle3Sql) AS sh FROM
-         |  (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |   FROM documents)),
-         |agg AS (SELECT ds.doc_id, count(*) AS n_shingles,
-         |          count(ref.rsh) AS n_known
-         |        FROM ds LEFT JOIN ref ON ds.sh = ref.rsh GROUP BY 1)
-         |SELECT doc_id, CAST(n_shingles AS BIGINT) AS n_shingles,
-         |  CAST(n_known AS BIGINT) AS n_known,
-         |  round(1.0 - CAST(n_known AS DOUBLE) / n_shingles, 6) AS novelty
-         |FROM agg ORDER BY doc_id""".stripMargin,
-    "q119_weighted_quantiles" ->
-      """WITH d AS (SELECT doc_id, CAST(n_chars AS DOUBLE) AS score,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS w
-        |  FROM documents),
-        |c AS (SELECT doc_id, score, w,
-        |        sum(w) OVER (ORDER BY score, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM d),
-        |tot AS (SELECT CAST(sum(w) AS DOUBLE) AS tw FROM d),
-        |qs AS (SELECT unnest(CAST([0.1, 0.25, 0.5, 0.75, 0.9, 1.0]
-        |                          AS DOUBLE[])) AS q)
-        |SELECT q, score AS value, CAST(cum AS BIGINT) AS cum_weight
-        |FROM c CROSS JOIN tot CROSS JOIN qs
-        |WHERE cum >= q * tw AND (cum - w) < q * tw
-        |ORDER BY q""".stripMargin,
-    "q118_sql_pipeline" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN length(trim(text)) = 0 THEN 0
-         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
-         |  (SELECT len($shingle3Sql) FROM
-         |    (SELECT string_split_regex(trim(lower(text)), '\\s+') AS toks))
-         |    AS n_shingles,
-         |  md5(regexp_replace(trim(
-         |    regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')),
-         |    '\\s+', ' ', 'g')) AS fingerprint
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q116_tpch_q3" ->
-      """SELECT l_orderkey,
-        |  CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue_cents DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q117_tpch_q5" ->
-      """SELECT r_name, n_name,
-        |  CAST(sum(CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-        |  AND o_orderdate < TIMESTAMP '2000-01-01'
-        |GROUP BY r_name, n_name
-        |ORDER BY revenue_cents DESC, n_name""".stripMargin,
-    "q107_rollup" ->
-      """WITH rev AS (
-        |  SELECT n_name, year(o_orderdate) AS o_year,
-        |    CAST(round((l_extendedprice * (1.0 - l_discount)) * 100.0) AS BIGINT)
-        |      AS cents
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey)
-        |SELECT n_name, o_year, CAST(sum(cents) AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_items
-        |FROM rev GROUP BY ROLLUP (n_name, o_year)
-        |ORDER BY n_name NULLS FIRST, o_year NULLS FIRST""".stripMargin,
-    "q106_source_divergence" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents),
-        |cnt AS (SELECT source, w, count(*) AS c FROM toks
-        |        WHERE w <> '' GROUP BY 1, 2),
-        |vocab AS (SELECT DISTINCT w FROM cnt),
-        |vs AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM vocab),
-        |tot AS (SELECT source, sum(c) AS n FROM cnt GROUP BY 1),
-        |grid AS (SELECT t.source, vocab.w, coalesce(cnt.c, 0) AS c, t.n
-        |         FROM vocab CROSS JOIN tot t
-        |         LEFT JOIN cnt ON cnt.source = t.source AND cnt.w = vocab.w),
-        |pr AS (SELECT source, w,
-        |         (CAST(c AS DOUBLE) + 0.5) / (CAST(n AS DOUBLE) + 0.5 * vs.v) AS p
-        |       FROM grid CROSS JOIN vs),
-        |terms AS (SELECT a.source AS source_a, b.source AS source_b, a.w,
-        |            0.5 * (a.p * ln(a.p / ((a.p + b.p) / 2.0)))
-        |            + 0.5 * (b.p * ln(b.p / ((a.p + b.p) / 2.0))) AS t
-        |          FROM pr a JOIN pr b ON a.w = b.w AND a.source < b.source)
-        |SELECT source_a, source_b,
-        |  round(list_reduce(list(t ORDER BY w), (x, y) -> x + y), 6) AS js
-        |FROM terms GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin,
-    "q103_group_quantiles" ->
-      """WITH r AS (
-        |  SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |                       ORDER BY value ASC, event_id ASC) AS rk,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |qs AS (SELECT unnest(CAST([0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-        |                          AS DOUBLE[])) AS q)
-        |SELECT event_type, q, value
-        |FROM r JOIN qs ON rk = greatest(1, CAST(ceil(q * n) AS BIGINT))
-        |ORDER BY event_type, q""".stripMargin,
-    "q104_robust_outliers" ->
-      """WITH r AS (
-        |  SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |                       ORDER BY value ASC, event_id ASC) AS rk,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |med AS (SELECT event_type, value AS med FROM r
-        |        WHERE rk = greatest(1, CAST(ceil(0.5 * n) AS BIGINT))),
-        |d AS (SELECT r.event_type, event_id, value, med,
-        |        abs(value - med) AS dev FROM r JOIN med USING (event_type)),
-        |r2 AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |                       ORDER BY dev ASC, event_id ASC) AS rk2,
-        |        count(*) OVER (PARTITION BY event_type) AS n2 FROM d),
-        |mad AS (SELECT event_type, dev AS mad FROM r2
-        |        WHERE rk2 = greatest(1, CAST(ceil(0.5 * n2) AS BIGINT))),
-        |f AS (SELECT d.event_type, event_id, value, med, mad,
-        |        ((value - med) * 0.6745) / mad AS z
-        |      FROM d JOIN mad USING (event_type) WHERE mad <> 0)
-        |SELECT event_type, event_id, value, med, mad, round(z, 6) AS z
-        |FROM f WHERE abs(z) > 3.5 ORDER BY event_type, event_id""".stripMargin,
-    "q102_collocations" ->
-      """WITH toks AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
-        |uni AS (SELECT w, count(*) AS c
-        |        FROM (SELECT unnest(t) AS w FROM toks) WHERE w <> '' GROUP BY w),
-        |bi AS (SELECT g, count(*) AS c_ab FROM (
-        |        SELECT unnest(list_transform(range(1, len(t)),
-        |          i -> t[i] || ' ' || t[i+1])) AS g
-        |        FROM toks WHERE len(t) >= 2) GROUP BY g),
-        |tt AS (SELECT CAST(sum(c) AS DOUBLE) AS T FROM uni),
-        |pp AS (SELECT CAST(sum(c_ab) AS DOUBLE) AS P FROM bi),
-        |cand AS (SELECT c_ab, string_split(g, ' ')[1] AS term_a,
-        |           string_split(g, ' ')[2] AS term_b
-        |         FROM bi WHERE c_ab >= 5),
-        |j AS (SELECT term_a, term_b, CAST(c_ab AS BIGINT) AS pair_count,
-        |        ((CAST(c_ab AS DOUBLE) * T) * T) / ((P * ua.c) * ub.c) AS lift
-        |      FROM cand
-        |      JOIN uni ua ON cand.term_a = ua.w
-        |      JOIN uni ub ON cand.term_b = ub.w
-        |      CROSS JOIN tt CROSS JOIN pp)
-        |SELECT term_a, term_b, pair_count, round(lift, 6) AS lift
-        |FROM j ORDER BY lift DESC, term_a, term_b LIMIT 100""".stripMargin,
-    "q97_corpus_diff" ->
-      """WITH v1 AS (SELECT doc_id, source, text FROM documents),
-        |v2 AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 10 = 0 THEN text || ' revised' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 300000 AS doc_id, source,
-        |    'fresh content for doc ' || doc_id AS text
-        |  FROM documents WHERE doc_id < 50),
-        |t1 AS (SELECT doc_id, source AS g1, text AS x1,
-        |         len(string_split_regex(trim(lower(text)), '\s+')) AS n1 FROM v1),
-        |t2 AS (SELECT doc_id, source AS g2, text AS x2,
-        |         len(string_split_regex(trim(lower(text)), '\s+')) AS n2 FROM v2),
-        |j AS (SELECT coalesce(g2, g1) AS source,
-        |        CASE WHEN x1 IS NULL THEN 'added'
-        |             WHEN x2 IS NULL THEN 'removed'
-        |             WHEN x1 = x2 THEN 'unchanged' ELSE 'changed' END AS status,
-        |        n1, n2
-        |      FROM t1 FULL OUTER JOIN t2 ON t1.doc_id = t2.doc_id)
-        |SELECT source,
-        |  CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
-        |  CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-        |  CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-        |  CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged,
-        |  CAST(sum(coalesce(n2, 0) - coalesce(n1, 0)) AS BIGINT) AS token_delta
-        |FROM j GROUP BY source ORDER BY source""".stripMargin,
-    "q94_hll_distinct" ->
-      s"""WITH s AS (
-         |  SELECT source, unnest($shingle3Sql) AS sh
-         |  FROM (SELECT source, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |        FROM documents)),
-         |h AS (SELECT source, sh,
-         |        ('0x' || substr(md5(sh), 1, 15))::UBIGINT AS hv FROM s),
-         |hb AS (SELECT source, hv & 255 AS bucket, hv >> 8 AS v FROM h),
-         |r AS (SELECT source, bucket, max(${hllRhoSql("v", 52)}) AS M
-         |      FROM hb GROUP BY 1, 2),
-         |e AS (SELECT source,
-         |        list_reduce(list(power(2.0, -M) ORDER BY bucket), (a, b) -> a + b)
-         |          + (256.0 - count(*)) AS z,
-         |        256.0 - count(*) AS v0
-         |      FROM r GROUP BY 1),
-         |x AS (SELECT source,
-         |        CASE WHEN (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z <= 640.0
-         |               AND v0 > 0.0
-         |          THEN 256.0 * ln(256.0 / v0)
-         |          ELSE (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 / z END AS est
-         |      FROM e),
-         |d AS (SELECT source, count(DISTINCT sh) AS exact_distinct FROM s GROUP BY 1)
-         |SELECT d.source, CAST(exact_distinct AS BIGINT) AS exact_distinct,
-         |  round(est, 6) AS est
-         |FROM d JOIN x USING (source) ORDER BY source""".stripMargin,
-    "q95_resample_ffill" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, value, event_id
-        |  FROM events WHERE user_id < 40),
-        |b AS (SELECT user_id, us - us % 21600000000 AS b, us, value, event_id FROM e),
-        |lst AS (
-        |  SELECT user_id, b, value FROM (
-        |    SELECT user_id, b, value, row_number()
-        |      OVER (PARTITION BY user_id, b ORDER BY us DESC, event_id DESC) AS rn
-        |    FROM b) WHERE rn = 1),
-        |g AS (SELECT user_id, min(b) AS b0, max(b) AS b1 FROM b GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |           unnest(range(b0, b1 + 21600000000, 21600000000)) AS b FROM g),
-        |f AS (
-        |  SELECT grid.user_id, grid.b, lst.value IS NOT NULL AS has_event,
-        |    last_value(lst.value IGNORE NULLS)
-        |      OVER (PARTITION BY grid.user_id ORDER BY grid.b
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-        |  FROM grid LEFT JOIN lst ON grid.user_id = lst.user_id AND grid.b = lst.b)
-        |SELECT user_id, make_timestamp(b) AS bucket_ts, round(value, 6) AS value,
-        |  has_event
-        |FROM f ORDER BY user_id, bucket_ts""".stripMargin,
-    "q93_containment" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id,
-         |    array_to_string(string_split_regex(trim(lower(text)), '\\s+')[1:25], ' ')
-         |      AS text
-         |  FROM documents WHERE doc_id % 7 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |        FROM u)),
-         |p AS (
-         |  SELECT a.doc_id AS ia, b.doc_id AS ib, len(a.sh) AS na, len(b.sh) AS nb,
-         |    len(list_intersect(a.sh, b.sh)) AS inter
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id),
-         |q AS (
-         |  SELECT CASE WHEN na < nb THEN ia WHEN nb < na THEN ib
-         |           ELSE least(ia, ib) END AS id_a,
-         |    CASE WHEN na < nb THEN ib WHEN nb < na THEN ia
-         |      ELSE greatest(ia, ib) END AS id_b,
-         |    inter * 1.0 / least(na, nb) AS containment
-         |  FROM p)
-         |SELECT id_a, id_b, round(containment, 6) AS containment FROM q
-         |WHERE containment >= 0.9 ORDER BY id_a, id_b""".stripMargin,
-    "q99_priority_sample" ->
-      """WITH pr AS (
-        |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
-        |    CAST(n_chars AS DOUBLE) /
-        |      ((('0x' || substr(md5(doc_id::VARCHAR || ':11'), 1, 15))::UBIGINT
-        |        + 1)::DOUBLE / 1152921504606846976.0) AS priority
-        |  FROM documents),
-        |r AS (SELECT pr.*,
-        |        row_number() OVER (ORDER BY priority DESC, doc_id ASC) AS rn
-        |      FROM pr),
-        |t AS (SELECT CASE WHEN (SELECT max(rn) FROM r) > 50
-        |             THEN (SELECT priority FROM r WHERE rn = 51)
-        |             ELSE 0.0 END AS tau)
-        |SELECT doc_id, w, priority, greatest(w, t.tau) AS est_w
-        |FROM r, t WHERE rn <= 50 ORDER BY priority DESC, doc_id ASC""".stripMargin,
-    "q100_group_sample_k" ->
-      """WITH h AS (
-        |  SELECT source, doc_id,
-        |    ('0x' || substr(md5(doc_id::VARCHAR || ':5'), 1, 15))::UBIGINT AS hv
-        |  FROM documents),
-        |r AS (SELECT source, doc_id,
-        |        CAST(row_number() OVER (PARTITION BY source
-        |                                ORDER BY hv ASC, doc_id ASC) AS BIGINT) AS pick
-        |      FROM h)
-        |SELECT source, doc_id, pick FROM r WHERE pick <= 20
-        |ORDER BY source, pick""".stripMargin,
-    "q89_group_pct_rank" ->
-      """WITH r AS (
-        |  SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS score,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id ASC) AS rank,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT source, doc_id, score, CAST(rank AS BIGINT) AS rank,
-        |  CASE WHEN n = 1 THEN 0.0
-        |       ELSE round((rank - 1) * 1.0 / (n - 1), 6) END AS pct
-        |FROM r ORDER BY source, rank""".stripMargin,
-    "q88_cross_source_dups" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u)),
-         |p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t a JOIN t b ON a.doc_id < b.doc_id),
-         |q AS (SELECT id_a, id_b FROM p WHERE j >= 0.55),
-         |s AS (SELECT doc_id, source FROM documents)
-         |SELECT least(sa.source, sb.source) AS source_a,
-         |  greatest(sa.source, sb.source) AS source_b,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM q
-         |JOIN s sa ON q.id_a % 100000 = sa.doc_id
-         |JOIN s sb ON q.id_b % 100000 = sb.doc_id
-         |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin,
-    "q86_shuffle_order" ->
-      """WITH h AS (
-        |  SELECT doc_id, source,
-        |    ('0x' || substr(md5(doc_id::VARCHAR || ':7'), 1, 15))::UBIGINT AS hv
-        |  FROM documents)
-        |SELECT doc_id, source,
-        |  CAST(row_number() OVER (ORDER BY hv, doc_id) AS BIGINT) AS shuffle_idx
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "q85_group_top_fraction" ->
-      """WITH r AS (
-        |  SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS score,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id ASC) AS rank,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT source, doc_id, score, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= ceil(n * 0.3)
-        |ORDER BY source, rank""".stripMargin,
-    "q83_tfidf_keywords" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term <> '' GROUP BY 1, 2),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |w AS (SELECT tf.doc_id, tf.term,
-        |        tf.tf * (ln((1.0 + n.n) / (1.0 + dfreq.df)) + 1.0) AS tfidf
-        |      FROM tf JOIN dfreq USING (term) CROSS JOIN n),
-        |r AS (SELECT doc_id, term, tfidf,
-        |        row_number() OVER (PARTITION BY doc_id
-        |                           ORDER BY tfidf DESC, term ASC) AS rank
-        |      FROM w)
-        |SELECT doc_id, term, CAST(rank AS BIGINT) AS rank,
-        |  round(tfidf, 6) AS tfidf
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q84_bm25_score" ->
-      """WITH t0 AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents),
-        |st AS (SELECT count(*) AS n, avg(len(toks)) AS avgdl FROM t0),
-        |t AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t0),
-        |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t
-        |       WHERE term IN ('join', 'merge', 'filter') GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |c AS (SELECT tf.doc_id,
-        |        ln(1.0 + (st.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-        |          * tf.tf * 2.2
-        |          / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl)) AS c
-        |      FROM tf JOIN dfreq USING (term) CROSS JOIN st)
-        |SELECT doc_id, round(sum(c), 6) AS bm25
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q66_lm_perplexity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |bi0 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> {'pos': i, 'w1': t[i], 'w2': t[i+1]})) AS bg
-        |  FROM toks WHERE len(t) >= 2),
-        |bi AS (SELECT doc_id, bg.pos AS pos, bg.w1 AS w1, bg.w2 AS w2 FROM bi0),
-        |cnt AS (SELECT w1, w2, count(*) AS cnt FROM bi GROUP BY 1, 2),
-        |ctx AS (SELECT w1, CAST(sum(cnt) AS BIGINT) AS ctx_cnt FROM cnt GROUP BY 1),
-        |v AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS vs
-        |      FROM (SELECT unnest(t) AS tok FROM toks)),
-        |sc AS (SELECT b.doc_id, b.pos,
-        |    -ln((coalesce(c.cnt, 0) + 1.0) / (coalesce(x.ctx_cnt, 0) + v.vs)) AS lp
-        |  FROM bi b LEFT JOIN cnt c USING (w1, w2) LEFT JOIN ctx x USING (w1)
-        |  CROSS JOIN v)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |  round(list_reduce(list(lp ORDER BY pos), (a, b) -> a + b) / count(*), 6)
-        |    AS avg_nll
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q67_vocab_coverage" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |c AS (SELECT token, count(*) AS cnt FROM toks GROUP BY 1),
-        |r AS (SELECT token, cnt,
-        |        row_number() OVER (ORDER BY cnt DESC, token) AS rank,
-        |        CAST(sum(cnt) OVER (ORDER BY cnt DESC, token
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |        CAST(sum(cnt) OVER () AS BIGINT) AS total
-        |      FROM c)
-        |SELECT token, cnt, CAST(rank AS BIGINT) AS rank,
-        |  round(CAST(cum AS DOUBLE) / CAST(total AS DOUBLE), 6) AS cum_frac
-        |FROM r WHERE cnt >= 2 ORDER BY rank""".stripMargin,
-    "q63_strip_spans" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        |    THEN 'terms of service apply to all content herein and usage governed accordingly ' || text
-        |    ELSE text END AS text FROM documents),
-        |t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM d),
-        |tt AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-        |g AS (SELECT doc_id,
-        |        unnest(range(1, len(toks) - 6)) AS pos,
-        |        unnest(list_transform(range(1, len(toks) - 6),
-        |          i -> array_to_string(toks[i:i+7], ' '))) AS gram
-        |      FROM tt),
-        |f AS (SELECT doc_id, pos FROM g
-        |      QUALIFY min(doc_id) OVER (PARTITION BY gram)
-        |        <> max(doc_id) OVER (PARTITION BY gram)),
-        |covered AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 8)) AS cpos FROM f),
-        |affected AS (SELECT DISTINCT doc_id FROM covered),
-        |tok AS (SELECT tt.doc_id, len(tt.toks) AS tlen,
-        |          unnest(range(1, len(tt.toks) + 1)) AS pos,
-        |          unnest(tt.toks) AS token
-        |        FROM tt JOIN affected USING (doc_id)),
-        |kept AS (SELECT tok.doc_id, tok.pos, tok.token FROM tok
-        |         LEFT JOIN covered c ON c.doc_id = tok.doc_id AND c.cpos = tok.pos
-        |         WHERE c.cpos IS NULL),
-        |rb AS (SELECT doc_id, string_agg(token, ' ' ORDER BY pos) AS clean_text,
-        |          count(*) AS kept_n
-        |       FROM kept GROUP BY doc_id),
-        |base AS (SELECT DISTINCT tok.doc_id, tok.tlen FROM tok)
-        |SELECT base.doc_id, coalesce(rb.clean_text, '') AS clean_text,
-        |       base.tlen - coalesce(rb.kept_n, 0) AS removed_tokens
-        |FROM base LEFT JOIN rb ON rb.doc_id = base.doc_id
-        |ORDER BY base.doc_id""".stripMargin,
-    "q62_cdc_chunk_stats" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 5 = 0
-         |    THEN 'terms of service apply to all content herein and usage governed accordingly ' || text
-         |    ELSE text END AS text FROM documents),
-         |t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM d),
-         |tok AS (SELECT doc_id,
-         |          unnest(range(1, len(toks) + 1)) AS pos,
-         |          unnest(toks) AS token FROM t),
-         |b AS (SELECT doc_id, pos, token,
-         |        CASE WHEN ${h60Sql("token")} % 8 = 0 THEN 1 ELSE 0 END AS bnd
-         |      FROM tok),
-         |c AS (SELECT doc_id, pos, token,
-         |        coalesce(sum(bnd) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cid
-         |      FROM b),
-         |ch AS (SELECT doc_id, cid,
-         |         ${h60Sql("string_agg(token, ' ' ORDER BY pos)")}::BIGINT AS chash,
-         |         count(*) AS ntok
-         |       FROM c GROUP BY doc_id, cid),
-         |f AS (SELECT doc_id, ntok FROM ch
-         |      QUALIFY min(doc_id) OVER (PARTITION BY chash)
-         |        <> max(doc_id) OVER (PARTITION BY chash))
-         |SELECT doc_id, count(*) AS dup_chunks, CAST(sum(ntok) AS BIGINT) AS dup_tokens
-         |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q60_bpe_tokens" ->
-      s"""WITH RECURSIVE
-         |w AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |      FROM documents),
-         |w0 AS (SELECT doc_id, unnest(toks) AS word FROM w),
-         |init AS (SELECT doc_id,
-         |  list_transform(range(1, len(word) + 1), i -> word[i:i]) AS syms FROM w0),
-         |bpe AS (
-         |  SELECT doc_id, syms FROM init
-         |  UNION ALL
-         |  SELECT doc_id,
-         |    list_filter(list_transform(range(1, len(syms) + 1), i ->
-         |      CASE WHEN i < len(syms) AND ranks[i] IS NOT NULL AND ranks[i] = best
-         |             THEN syms[i] || syms[i+1]
-         |           WHEN i > 1 AND ranks[i-1] IS NOT NULL AND ranks[i-1] = best
-         |             THEN NULL
-         |           ELSE syms[i] END), x -> x IS NOT NULL) AS syms
-         |  FROM (
-         |    SELECT doc_id, syms, ranks,
-         |      list_min(list_filter(ranks, r -> r IS NOT NULL)) AS best
-         |    FROM (SELECT doc_id, syms,
-         |            list_transform(range(1, len(syms)), i -> ${bpeRankCase("syms")}) AS ranks
-         |          FROM bpe) rr) bb
-         |  WHERE best IS NOT NULL)
-         |SELECT doc_id, CAST(sum(n) AS BIGINT) AS bpe_tokens FROM (
-         |  SELECT doc_id, len(syms) AS n,
-         |    list_min(list_filter(
-         |      list_transform(range(1, len(syms)), i -> ${bpeRankCase("syms")}),
-         |      r -> r IS NOT NULL)) AS best
-         |  FROM bpe) t
-         |WHERE best IS NULL GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q58_duplicate_spans" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        |    THEN 'terms of service apply to all content herein and usage governed accordingly ' || text
-        |    ELSE text END AS text FROM documents),
-        |t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM d),
-        |tt AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-        |g AS (SELECT doc_id,
-        |        unnest(range(1, len(toks) - 6)) AS pos,
-        |        unnest(list_transform(range(1, len(toks) - 6),
-        |          i -> array_to_string(toks[i:i+7], ' '))) AS gram
-        |      FROM tt),
-        |f AS (SELECT doc_id, pos FROM g
-        |      QUALIFY min(doc_id) OVER (PARTITION BY gram)
-        |        <> max(doc_id) OVER (PARTITION BY gram)),
-        |m AS (SELECT doc_id, pos,
-        |        max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |      FROM f),
-        |i AS (SELECT doc_id, pos,
-        |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-        |          THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |      FROM m)
-        |SELECT doc_id, min(pos) - 1 AS span_start, max(pos) + 6 AS span_end,
-        |       max(pos) + 6 - (min(pos) - 1) + 1 AS span_tokens
-        |FROM i GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin,
-    "q59_dup_span_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        |    THEN 'terms of service apply to all content herein and usage governed accordingly ' || text
-        |    ELSE text END AS text FROM documents),
-        |t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM d),
-        |tt AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-        |g AS (SELECT doc_id,
-        |        unnest(range(1, len(toks) - 6)) AS pos,
-        |        unnest(list_transform(range(1, len(toks) - 6),
-        |          i -> array_to_string(toks[i:i+7], ' '))) AS gram
-        |      FROM tt),
-        |f AS (SELECT doc_id, pos FROM g
-        |      QUALIFY min(doc_id) OVER (PARTITION BY gram)
-        |        <> max(doc_id) OVER (PARTITION BY gram)),
-        |m AS (SELECT doc_id, pos,
-        |        max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |      FROM f),
-        |i AS (SELECT doc_id, pos,
-        |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-        |          THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |      FROM m),
-        |sp AS (SELECT doc_id, max(pos) + 6 - (min(pos) - 1) + 1 AS span_tokens
-        |       FROM i GROUP BY doc_id, island),
-        |agg AS (SELECT doc_id, CAST(sum(span_tokens) AS BIGINT) AS dup_tokens FROM sp GROUP BY doc_id)
-        |SELECT t.doc_id, agg.dup_tokens, len(t.toks) AS tok_len,
-        |       round(agg.dup_tokens / greatest(len(t.toks), 1), 6) AS dup_frac
-        |FROM t JOIN agg ON agg.doc_id = t.doc_id
-        |WHERE agg.dup_tokens > 0 ORDER BY t.doc_id""".stripMargin,
-    "q57_image_decode" ->
-      """SELECT CAST(p_partkey AS BIGINT) AS media_id, 'image/png' AS mime,
-        |  CAST(16 + p_partkey % 48 AS BIGINT) AS width,
-        |  CAST(16 + (p_partkey // 7) % 40 AS BIGINT) AS height,
-        |  CAST(24 AS BIGINT) AS r_width, CAST(18 AS BIGINT) AS r_height,
-        |  CAST((p_partkey * 37) % 256 AS BIGINT) AS avg_r,
-        |  CAST((p_partkey * 59) % 256 AS BIGINT) AS avg_g,
-        |  CAST((p_partkey * 83) % 256 AS BIGINT) AS avg_b
-        |FROM part WHERE p_partkey <= 150 ORDER BY media_id""".stripMargin,
-    "q40_embedding_neardup" ->
-      """WITH u AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings WHERE vec_id < 25),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_dot_product(a.v, b.v) /
-        |      (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS c
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, round(c, 6) AS cosine FROM p
-        |WHERE c >= 0.999 ORDER BY id_a, id_b""".stripMargin,
-    "q41_dedup_pipeline" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' tail tokens appended' AS text
-         |  FROM documents WHERE doc_id % 11 = 0),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM u GROUP BY text),
-         |s AS (SELECT doc_id, text FROM u WHERE doc_id IN (SELECT doc_id FROM ex)),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM s)),
-         |drops AS (
-         |  SELECT DISTINCT b.doc_id FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.55)
-         |SELECT doc_id FROM s WHERE doc_id NOT IN (SELECT doc_id FROM drops)
-         |ORDER BY doc_id""".stripMargin,
-    "q46_dedup_cc" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' extra token and more extra' AS text
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |t AS (
-         |  SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u)),
-         |e0 AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.55),
-         |edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         |r(s, d) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.s, e.b FROM r JOIN edges e ON e.a = r.d),
-         |comp AS (SELECT s AS id, least(s, min(d)) AS c FROM r GROUP BY s)
-         |SELECT doc_id FROM u
-         |WHERE doc_id NOT IN (SELECT id FROM comp WHERE c <> id)
-         |ORDER BY doc_id""".stripMargin,
-    "q48_pii_redact" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN text || ' contact user' || doc_id || '@example.com at 10.0.'
-        |        || (doc_id % 256) || '.1'
-        |      ELSE text END AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b(\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-        |    '\+?\d[\d().\s-]{6,}\d', '<PHONE>', 'g') AS redacted,
-        |  len(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-        |  len(regexp_extract_all(
-        |    regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g'),
-        |    '\b(\d{1,3}\.){3}\d{1,3}\b')) AS n_ip
-        |FROM planted ORDER BY doc_id""".stripMargin,
-    "q47_hash_sample" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE ${h60Sql("doc_id::VARCHAR")} % 1000000 <
-         |  CASE lang WHEN 'en' THEN 500000 WHEN 'de' THEN 250000 ELSE 100000 END
-         |ORDER BY doc_id""".stripMargin,
-    "q43_winnowed_fingerprints" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents),
-         |g AS (
-         |  SELECT doc_id, CASE WHEN len(toks) >= 5
-         |    THEN list_transform(range(1, len(toks) - 3), i -> array_to_string(toks[i:i+4], ' '))
-         |    ELSE [array_to_string(toks, ' ')] END AS grams FROM t),
-         |h AS (SELECT doc_id, list_transform(grams, x -> ${h60Sql("x")}::BIGINT) AS hs FROM g)
-         |SELECT doc_id, len(list_distinct(list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
-         |  j -> list_min(hs[j:j+3])))) AS n_fingerprints
-         |FROM h ORDER BY doc_id""".stripMargin,
-    "q49_singer_nested_nulls" ->
-      """SELECT c_custkey,
-        |  '{"type": "RECORD", "stream": "t", "record": {' ||
-        |  concat_ws(',',
-        |    '"c_custkey":' || to_json(c_custkey),
-        |    CASE WHEN c_custkey % 3 = 0 THEN '"name":' || to_json(c_name) END,
-        |    CASE WHEN c_custkey % 5 <> 0 THEN '"obj":' || to_json(struct_pack(
-        |      nk := c_nationkey,
-        |      seg := CASE WHEN c_custkey % 2 = 0 THEN c_mktsegment END)) END
-        |  ) || '}}' AS line
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q50_bucketed_point_lookup" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 <> 0 AND o_orderkey BETWEEN 1 AND 2000
-        |ORDER BY o_orderkey""".stripMargin,
-    "q51_csv_snapshot_upsert" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0),
-        |inc AS (
-        |  SELECT o_orderkey, o_totalprice + 1.0 AS o_totalprice FROM orders
-        |  WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM inc
-        |UNION ALL
-        |SELECT * FROM snap WHERE o_orderkey NOT IN (SELECT o_orderkey FROM inc)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q52_singer_distributed" ->
-      """SELECT event_id,
-        |  '{"type": "RECORD", "stream": "events", "record": ' ||
-        |  CAST(json_object('event_id', event_id, 'event_type', event_type,
-        |    'value', value) AS VARCHAR) || '}' AS line
-        |FROM events WHERE event_id < 1000 ORDER BY event_id""".stripMargin,
-    "q56_pack_sequences" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS tok_len,
-        |    doc_id % 8 AS stratum
-        |  FROM documents),
-        |o AS (
-        |  SELECT doc_id, stratum, tok_len,
-        |    CAST(sum(tok_len) OVER (PARTITION BY stratum ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) - tok_len AS BIGINT) AS "offset"
-        |  FROM d)
-        |SELECT doc_id, stratum, "offset", "offset" // 2048 AS pack_id
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "q55_repetition_stats" ->
-      """WITH planted AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 4 = 0
-        |    THEN text || chr(10) || text || chr(10) || 'again again again'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(text, chr(10)) AS lines,
-        |  string_split_regex(trim(lower(text)), '\s+') AS toks FROM planted),
-        |g AS (SELECT doc_id, lines, toks,
-        |  CASE WHEN len(toks) >= 2
-        |    THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-        |    ELSE [array_to_string(toks, ' ')] END AS grams FROM t)
-        |SELECT doc_id,
-        |  round((len(lines) - len(list_distinct(lines))) * 1.0 / len(lines), 6)
-        |    AS dup_line_frac,
-        |  CASE WHEN len(toks) >= 2 THEN
-        |    round((len(grams) - len(list_distinct(grams))) * 1.0 / len(grams), 6)
-        |  ELSE 0.0 END AS dup_2gram_frac,
-        |  CASE WHEN len(toks) >= 2 THEN
-        |    round(len(list_filter(range(1, len(toks)), i -> toks[i] = toks[i+1]))
-        |      * 1.0 / (len(toks) - 1), 6)
-        |  ELSE 0.0 END AS adj_repeat_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "q54_decontaminate" ->
-      s"""WITH bench AS (SELECT text FROM documents WHERE doc_id % 17 = 0),
-         |bt AS (SELECT DISTINCT sh FROM (
-         |  SELECT unnest($shingle3Sql) AS sh FROM (
-         |    SELECT string_split_regex(trim(lower(text)), '\\s+') AS toks FROM bench))),
-         |ct AS (SELECT doc_id, unnest($shingle3Sql) AS sh FROM (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |  FROM documents)),
-         |m AS (SELECT doc_id FROM ct JOIN bt USING (sh)
-         |      GROUP BY doc_id HAVING count(*) >= 5)
-         |SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM m)
-         |ORDER BY doc_id""".stripMargin,
-    "q53_lsh_margin" ->
-      s"""WITH docs AS (SELECT doc_id, text FROM documents),
-         |u25 AS (
-         |  SELECT doc_id, text FROM docs
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM docs WHERE doc_id % 10 = 0),
-         |u41 AS (
-         |  SELECT doc_id, text FROM docs
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text FROM docs WHERE doc_id % 7 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' tail tokens appended' AS text
-         |  FROM docs WHERE doc_id % 11 = 0),
-         |u46 AS (
-         |  SELECT doc_id, text FROM docs
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text || ' extra token' AS text
-         |  FROM docs WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' extra token and more extra' AS text
-         |  FROM docs WHERE doc_id % 10 = 0),
-         |u74 AS (
-         |  SELECT doc_id, text FROM docs
-         |  UNION ALL
-         |  SELECT doc_id + 100000 AS doc_id, text FROM docs WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000 AS doc_id, text || ' extra token' AS text
-         |  FROM docs WHERE doc_id % 10 = 6),
-         |t25 AS (SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u25)),
-         |t41 AS (SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u41)),
-         |t46 AS (SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u46)),
-         |t74 AS (SELECT doc_id, $shingle3Sql AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM u74)),
-         |p25 AS (SELECT len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t25 a JOIN t25 b ON a.doc_id < b.doc_id),
-         |p41 AS (SELECT len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t41 a JOIN t41 b ON a.doc_id < b.doc_id),
-         |p46 AS (SELECT len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t46 a JOIN t46 b ON a.doc_id < b.doc_id),
-         |p74 AS (SELECT len(list_intersect(a.sh, b.sh)) * 1.0 /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-         |  FROM t74 a JOIN t74 b ON a.doc_id < b.doc_id)
-         |SELECT 'q25' AS probe,
-         |  count(*) FILTER (WHERE j >= 0.55) AS oracle_pairs,
-         |  count(*) FILTER (WHERE j >= 0.5 AND j < 0.55) AS hazard_pairs,
-         |  round(min(j) FILTER (WHERE j >= 0.55), 4) AS min_jaccard FROM p25
-         |UNION ALL
-         |SELECT 'q41' AS probe,
-         |  count(*) FILTER (WHERE j >= 0.55) AS oracle_pairs,
-         |  count(*) FILTER (WHERE j >= 0.5 AND j < 0.55) AS hazard_pairs,
-         |  round(min(j) FILTER (WHERE j >= 0.55), 4) AS min_jaccard FROM p41
-         |UNION ALL
-         |SELECT 'q46' AS probe,
-         |  count(*) FILTER (WHERE j >= 0.55) AS oracle_pairs,
-         |  count(*) FILTER (WHERE j >= 0.5 AND j < 0.55) AS hazard_pairs,
-         |  round(min(j) FILTER (WHERE j >= 0.55), 4) AS min_jaccard FROM p46
-         |UNION ALL
-         |SELECT 'q74' AS probe,
-         |  count(*) FILTER (WHERE j >= 0.55) AS oracle_pairs,
-         |  count(*) FILTER (WHERE j >= 0.5 AND j < 0.55) AS hazard_pairs,
-         |  round(min(j) FILTER (WHERE j >= 0.55), 4) AS min_jaccard FROM p74
-         |ORDER BY probe""".stripMargin)
-
-  // ── oracle-SQL generation helpers ──────────────────────────────────────
-  // The rows-only queries become oracle-checked by REPLAYING the algorithm
-  // in DuckDB: deterministic constants (seeded hyperplanes) inline as SQL
-  // literals, and hash-dependent operators use the portable md5-prefix hash
-  // (Dedup.md5Hash60) that both engines compute identically.
-
-  /** DuckDB twin of Dedup.md5Hash60 (60-bit md5-prefix hash). */
-  /** Unrolled HyperBall rounds over q154's item co-occurrence graph
-    * (q337): r0 = own md5 HLL register, each round register-merges
-    * neighbors (max), per-round estimates via the q111 replay shape,
-    * harmonic = Σ_d clamp(est_d − est_{d−1}, 0)/d. */
-  private def hyperballOracleSql(rounds: Int, m: Int, topK: Int): String = {
-    val b = java.lang.Integer.numberOfTrailingZeros(m)
-    val width = 60 - b
-    val alpha = s"(0.7213 / (1.0 + 1.079 / $m.0))"
-    val m2 = s"${m.toLong * m}.0"
-    def est(i: Int): String =
-      s""",
-         |z$i AS (SELECT node,
-         |    list_reduce(list(power(2.0, -M) ORDER BY bucket),
-         |      (a, c) -> a + c) + ($m.0 - count(*)) AS z,
-         |    $m.0 - count(*) AS v0
-         |  FROM r$i GROUP BY 1),
-         |x$i AS (SELECT node,
-         |    CASE WHEN $alpha * $m2 / z <= ${2.5 * m} AND v0 > 0.0
-         |      THEN $m.0 * ln($m.0 / v0)
-         |      ELSE $alpha * $m2 / z END AS est
-         |  FROM z$i)""".stripMargin
-    val head =
-      s"""WITH bkt AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-         |  FROM lineitem),
-         |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-         |  FROM bkt a JOIN bkt b2 ON a.bk = b2.bk AND a.it < b2.it),
-         |adj AS MATERIALIZED (SELECT x AS src, y AS dst FROM e
-         |  UNION ALL SELECT y AS src, x AS dst FROM e),
-         |nd AS (SELECT DISTINCT src AS node FROM adj),
-         |h0 AS (SELECT node,
-         |    ('0x' || substr(md5(node::VARCHAR), 1, 15))::UBIGINT AS hv
-         |  FROM nd),
-         |r0 AS MATERIALIZED (SELECT node, CAST(hv & ${m - 1} AS BIGINT)
-         |      AS bucket,
-         |    max(${hllRhoSql(s"(hv >> $b)", width)}) AS M
-         |  FROM h0 GROUP BY 1, 2)""".stripMargin + est(0)
-    val body = (1 to rounds).map { d =>
-      s""",
-         |r$d AS MATERIALIZED (SELECT node, bucket, max(M) AS M FROM (
-         |    SELECT a.src AS node, r.bucket, r.M
-         |    FROM adj a JOIN r${d - 1} r ON a.dst = r.node
-         |    UNION ALL SELECT node, bucket, M FROM r${d - 1}) u
-         |  GROUP BY 1, 2)""".stripMargin + est(d)
-    }.mkString
-    val hTerms = (1 to rounds).map(d =>
-      s"(greatest(0.0, x$d.est - x${d - 1}.est) / $d.0)").mkString(" + ")
-    val joins = (1 to rounds).map(d => s"JOIN x$d USING (node)").mkString(" ")
-    head + body +
-      s"""
-         |, hh AS (SELECT x0.node, $hTerms AS h, x$rounds.est AS ball
-         |  FROM x0 $joins)
-         |SELECT CAST(row_number() OVER (ORDER BY h DESC, node ASC)
-         |    AS BIGINT) AS rank,
-         |  node, round(ball, 6) AS ball_est, round(h, 6) AS harmonic
-         |FROM hh ORDER BY h DESC, node ASC LIMIT $topK""".stripMargin
-  }
-
-  /** HyperANF twin of [[hyperballOracleSql]] (q338): per-round
-    * node-summed ball estimates (node-ordered fold) + frac of the
-    * final round's sum. */
-  private def hyperanfOracleSql(rounds: Int, m: Int): String = {
-    // identical head/body as hyperballOracleSql — rebuild them
-    val full = hyperballOracleSql(rounds, m, topK = 1)
-    val head = full.substring(0, full.indexOf("\n, hh AS"))
-    val sCtes = (0 to rounds).map { d =>
-      s""",
-         |s$d AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    list_reduce(list(est ORDER BY node), (a, c) -> a + c) AS s
-         |  FROM x$d)""".stripMargin
-    }.mkString
-    val rows = (0 to rounds).map { d =>
-      s"""SELECT CAST($d AS BIGINT) AS d, s$d.n AS n_nodes,
-         |  round(s$d.s, 6) AS n_pairs_est,
-         |  round(s$d.s / sm.s, 6) AS frac_of_max FROM s$d, sm""".stripMargin
-    }.mkString("\nUNION ALL ")
-    head + sCtes +
-      s""",
-         |sm AS (SELECT s FROM s$rounds)
-         |$rows
-         |ORDER BY d""".stripMargin
-  }
-
-  /** Unrolled Markov-attribution absorption rounds (q339): transitions
-    * from the truncated per-user paths, then K to-sorted-fold rounds per
-    * removal scenario (full + one per channel). `channels` must be the
-    * sorted channel list present in the data. */
-  private def markovOracleSql(channels: Seq[String], conv: String,
-      rounds: Int): String = {
-    val states = (channels :+ "(start)").sorted
-    val stList = states.map(s => s"('$s')").mkString(", ")
-    def scenario(tag: String, removed: Option[String]): String = {
-      val st = removed.map(c => states.filterNot(_ == c)).getOrElse(states)
-      val inList = st.map(s => s"'$s'").mkString(", ")
-      val head =
-        s""",
-           |st$tag AS (SELECT * FROM (VALUES ${st.map(s => s"('$s')")
-             .mkString(", ")}) AS s(st)),
-           |pc$tag AS (SELECT s.st, coalesce(p.pr, CAST(0.0 AS DOUBLE))
-           |      AS pc
-           |  FROM st$tag s LEFT JOIN p ON p.f = s.st AND p.t2 = '(conv)'),
-           |pt$tag AS (SELECT f, t2, pr FROM p
-           |  WHERE f IN ($inList) AND t2 IN ($inList)),
-           |a${tag}0 AS (SELECT st AS s, CAST(0.0 AS DOUBLE) AS a
-           |  FROM st$tag)""".stripMargin
-      val rs = (1 to rounds).map { t =>
-        s""",
-           |a$tag$t AS (SELECT pc.st AS s,
-           |    pc.pc + coalesce(lr.v, CAST(0.0 AS DOUBLE)) AS a
-           |  FROM pc$tag pc LEFT JOIN (
-           |    SELECT p.f AS s,
-           |      list_reduce(list((p.pr * a.a) ORDER BY p.t2),
-           |        (x, y) -> x + y) AS v
-           |    FROM pt$tag p JOIN a$tag${t - 1} a ON p.t2 = a.s
-           |    GROUP BY p.f) lr ON pc.st = lr.s)""".stripMargin
-      }.mkString
-      head + rs
-    }
-    val scen = scenario("F", None) + channels.zipWithIndex.map {
-      case (c, i) => scenario(s"C$i", Some(c)) }.mkString
-    val rows = channels.zipWithIndex.map { case (c, i) =>
-      s"""SELECT '$c' AS channel,
-         |  (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) FROM cnt
-         |   WHERE t2 = '$c') AS touches,
-         |  (SELECT a FROM aF$rounds WHERE s = '(start)') AS pf,
-         |  (SELECT a FROM aC$i$rounds WHERE s = '(start)') AS pr2"""
-        .stripMargin
-    }.mkString("\nUNION ALL ")
-    s"""WITH seqq AS (SELECT user_id AS u, ts, event_id AS o,
-       |    event_type AS t,
-       |    row_number() OVER (PARTITION BY user_id
-       |      ORDER BY ts, event_id) AS rn
-       |  FROM events),
-       |cr AS (SELECT u, min(rn) AS cr FROM seqq WHERE t = '$conv'
-       |  GROUP BY 1),
-       |tr AS (SELECT s.u, s.ts, s.o, s.t, s.rn FROM seqq s
-       |  LEFT JOIN cr ON s.u = cr.u
-       |  WHERE cr.cr IS NULL OR s.rn <= cr.cr),
-       |steps AS (SELECT coalesce(lag(t) OVER (PARTITION BY u
-       |      ORDER BY ts, o), '(start)') AS f,
-       |    CASE WHEN t = '$conv' THEN '(conv)' ELSE t END AS t2
-       |  FROM tr),
-       |term AS (SELECT t AS f, '(null)' AS t2 FROM (
-       |    SELECT t, rn, max(rn) OVER (PARTITION BY u) AS mx FROM tr) x
-       |  WHERE rn = mx AND t <> '$conv'),
-       |cnt AS (SELECT f, t2, CAST(count(*) AS BIGINT) AS n FROM
-       |  (SELECT * FROM steps UNION ALL SELECT * FROM term) uu
-       |  GROUP BY 1, 2),
-       |tot AS (SELECT f, CAST(sum(n) AS BIGINT) AS tt FROM cnt
-       |  GROUP BY 1),
-       |p AS (SELECT cnt.f, cnt.t2,
-       |    CAST(n AS DOUBLE) / CAST(tt AS DOUBLE) AS pr
-       |  FROM cnt JOIN tot USING (f))$scen,
-       |res AS ($rows),
-       |es AS (SELECT list_reduce(list((pf - pr2) ORDER BY channel),
-       |    (x, y) -> x + y) AS s FROM res)
-       |SELECT channel, touches, round(pf, 6) AS p_conv_full,
-       |  round(pr2, 6) AS p_conv_removed,
-       |  round(pf - pr2, 6) AS removal_effect,
-       |  round(CASE WHEN es.s > 0.0 THEN (pf - pr2) / es.s END, 6)
-       |    AS share
-       |FROM res, es ORDER BY channel""".stripMargin
-  }
-
-  /** Unrolled Bradley–Terry MM rounds over the events "engagement duel"
-    * stream (q327) — the pageRank-oracle pattern: t0 = 1.0, each round
-    * joins pairs to the previous θ, folds denominators opponent-sorted,
-    * and renormalizes to Σθ = n_items. */
-  private def btOracleSql(rounds: Int): String = {
-    val head =
-      """WITH e AS (SELECT user_id, ts, event_id, event_type, value,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS pt,
-        |    lag(value) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS pv
-        |  FROM events),
-        |duel AS (SELECT
-        |    CASE WHEN value > pv THEN event_type ELSE pt END AS w,
-        |    CASE WHEN value > pv THEN pt ELSE event_type END AS l
-        |  FROM e
-        |  WHERE pt IS NOT NULL AND pt <> event_type AND value <> pv),
-        |wins AS (SELECT w, l, CAST(count(*) AS BIGINT) AS c FROM duel
-        |  WHERE w <> l GROUP BY 1, 2),
-        |pairs AS (SELECT i, j, CAST(sum(c) AS BIGINT) AS n FROM (
-        |    SELECT w AS i, l AS j, c FROM wins
-        |    UNION ALL SELECT l AS i, w AS j, c FROM wins) GROUP BY 1, 2),
-        |wt AS (SELECT w AS i, CAST(sum(c) AS BIGINT) AS wins FROM wins
-        |  GROUP BY 1),
-        |it AS (SELECT p.i, CAST(coalesce(wt.wins, 0) AS BIGINT) AS wins
-        |  FROM (SELECT DISTINCT i FROM pairs) p LEFT JOIN wt USING (i)),
-        |ni AS (SELECT CAST(count(*) AS BIGINT) AS n FROM it),
-        |t0 AS (SELECT i, CAST(1.0 AS DOUBLE) AS th FROM it)""".stripMargin
-    val body = (1 to rounds).map { r =>
-      s""",
-         |d$r AS (SELECT p.i, list_reduce(
-         |    list((CAST(p.n AS DOUBLE) / (a.th + b.th)) ORDER BY p.j),
-         |    (x, y) -> x + y) AS d
-         |  FROM pairs p JOIN t${r - 1} a ON p.i = a.i
-         |  JOIN t${r - 1} b ON p.j = b.i GROUP BY p.i),
-         |r$r AS (SELECT it.i, CASE WHEN d IS NULL OR d = 0.0
-         |    THEN CAST(0.0 AS DOUBLE)
-         |    ELSE CAST(wins AS DOUBLE) / d END AS raw
-         |  FROM it LEFT JOIN d$r ON it.i = d$r.i),
-         |s$r AS (SELECT list_reduce(list(raw ORDER BY i), (x, y) -> x + y)
-         |    AS tot FROM r$r),
-         |t$r AS (SELECT i,
-         |    (raw * CAST((SELECT n FROM ni) AS DOUBLE))
-         |      / (SELECT tot FROM s$r) AS th FROM r$r)""".stripMargin
-    }.mkString
-    head + body +
-      s"""
-         |SELECT it.i AS item, wins, round(t$rounds.th, 6) AS theta
-         |FROM it JOIN t$rounds ON it.i = t$rounds.i ORDER BY item""".stripMargin
-  }
-
-  private def h60Sql(expr: String): String =
-    s"('0x' || substr(md5($expr), 1, 15))::UBIGINT"
-
-  /** DuckDB twin of TextAnalysis.qualityScore over a text expression —
-    * the q22 formula, shared by q70's keep-best ordering. */
-  private def qualitySql(t: String): String =
-    s"""round(
-       |  least(length($t) / 500.0, 1.0) * 0.25 +
-       |  (CASE WHEN length($t) > 0 THEN
-       |     length(regexp_replace($t, '[^A-Za-z]', '', 'g')) * 1.0 / length($t)
-       |   ELSE 0.0 END) * 0.25 +
-       |  (1.0 - least((CASE WHEN length($t) > 0 THEN
-       |     length(regexp_replace($t, '[^.,;:!?]', '', 'g')) * 1.0 / length($t)
-       |   ELSE 0.0 END) * 10.0, 1.0)) * 0.25 +
-       |  least((CASE WHEN len(string_split_regex(trim($t), '\\s+')) > 0 THEN
-       |     len(regexp_extract_all($t, '(?i)\\b(the|and|of|to|a|in|is|it)\\b')) * 1.0
-       |       / len(string_split_regex(trim($t), '\\s+'))
-       |   ELSE 0.0 END) * 4.0, 1.0) * 0.25, 6)""".stripMargin
-
-  /** Distinct 3-token shingles from a `toks` list column — the DuckDB twin
-    * of Dedup.shinglesOf(tokens, 3) including the <3-token fallback. */
-  /** The q101 PageRank loop unrolled in SQL (GraphX staticPageRank
-    * semantics over the bidirected customer–supplier graph): per round, a
-    * src-sorted contribution fold per node — the same order as the Scala
-    * side's sort_array fold, so ranks are bit-identical round over round
-    * ((1 − damping) embeds as the exact double the Scala side computes);
-    * final ranks round to 6. */
-  /** The q151/q223 MI replay tail: consumes a CTE `cells(x, y, c)` and
-    * produces (n, mi, h_x, h_y, nmi) with (x, y)-sorted folds — shared
-    * so the categorical and binned-numeric gates replay identical
-    * arithmetic. */
-  private lazy val miOracleTail: String =
-    """mx AS (SELECT x, CAST(sum(c) AS BIGINT) AS cx FROM cells GROUP BY 1),
-      |my AS (SELECT y, CAST(sum(c) AS BIGINT) AS cy FROM cells GROUP BY 1),
-      |n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
-      |j AS (SELECT cells.x AS x, cells.y AS y, c, cx, cy,
-      |        CAST((SELECT n FROM n) AS DOUBLE) AS nd
-      |      FROM cells JOIN mx USING (x) JOIN my USING (y)),
-      |mi AS (SELECT list_reduce(list(
-      |         (CAST(c AS DOUBLE) / nd) * ln((CAST(c AS DOUBLE) / nd) /
-      |           ((CAST(cx AS DOUBLE) / nd) * (CAST(cy AS DOUBLE) / nd)))
-      |         ORDER BY x, y), (a, b) -> a + b) AS mi FROM j),
-      |hx AS (SELECT -list_reduce(list(
-      |         (CAST(cx AS DOUBLE) / CAST((SELECT n FROM n) AS DOUBLE)) *
-      |         ln(CAST(cx AS DOUBLE) / CAST((SELECT n FROM n) AS DOUBLE))
-      |         ORDER BY x), (a, b) -> a + b) AS h FROM mx),
-      |hy AS (SELECT -list_reduce(list(
-      |         (CAST(cy AS DOUBLE) / CAST((SELECT n FROM n) AS DOUBLE)) *
-      |         ln(CAST(cy AS DOUBLE) / CAST((SELECT n FROM n) AS DOUBLE))
-      |         ORDER BY y), (a, b) -> a + b) AS h FROM my)
-      |SELECT (SELECT n FROM n) AS n, round((SELECT mi FROM mi), 6) AS mi,
-      |  round((SELECT h FROM hx), 6) AS h_x,
-      |  round((SELECT h FROM hy), 6) AS h_y,
-      |  round(CASE WHEN (SELECT h FROM hx) > 0 AND (SELECT h FROM hy) > 0
-      |    THEN (SELECT mi FROM mi) /
-      |      sqrt((SELECT h FROM hx) * (SELECT h FROM hy))
-      |    ELSE CAST(0.0 AS DOUBLE) END, 6) AS nmi""".stripMargin
-
-  /** The q72/q191 IVF-kNN replay prefix: seed selection by hash rank, one
-    * Lloyd refinement round, final assignment, within-cell cosine pairs,
-    * per-query ranks — ends at CTE `r` (query_id, neighbor_id, rank), so
-    * consumers append either a rank cut (q72) or label aggregation
-    * (q191). k-independent: the rank cut happens in the consumer. */
-  private lazy val ivfKnnOracleCtes: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cvec
-       |  FROM (SELECT vec_id, v FROM e
-       |        QUALIFY row_number()
-       |          OVER (ORDER BY ${h60Sql("vec_id::VARCHAR")}, vec_id) <= 16)),
-       |a0 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, seeds.cid, row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_dot_product(e.v, seeds.cvec) /
-       |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(seeds.cvec, seeds.cvec)))
-       |        DESC, seeds.cid) AS rn
-       |    FROM e, seeds) WHERE rn = 1),
-       |m AS (
-       |  SELECT a0.cid, t.i, CAST(avg(e.v[t.i]) AS FLOAT) AS mv
-       |  FROM a0 JOIN e USING (vec_id), range(1, 65) AS t(i) GROUP BY a0.cid, t.i),
-       |cents AS (SELECT cid, CAST(list(mv ORDER BY i) AS DOUBLE[]) AS cvec FROM m GROUP BY cid),
-       |a2 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, cents.cid, row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_dot_product(e.v, cents.cvec) /
-       |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.cvec, cents.cvec)))
-       |        DESC, cents.cid) AS rn
-       |    FROM e, cents) WHERE rn = 1),
-       |p AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    list_dot_product(ea.v, eb.v) /
-       |      (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) AS cos
-       |  FROM a2 a JOIN a2 b ON a.cid = b.cid AND a.vec_id <> b.vec_id
-       |  JOIN e ea ON ea.vec_id = a.vec_id
-       |  JOIN e eb ON eb.vec_id = b.vec_id),
-       |r AS (SELECT query_id, neighbor_id,
-       |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |      FROM p)""".stripMargin
-
-  /** The q189 HITS loop unrolled in SQL. Raw-score and normalized CTEs
-    * are referenced twice each (norm + divide / two consumers), so they
-    * are MATERIALIZED — DuckDB inlines CTEs by default and the reference
-    * count would otherwise grow geometrically with rounds. Folds ORDER BY
-    * the counterpart key exactly as the deterministic Spark path. */
-  private def hitsOracleSql(rounds: Int): String = {
-    val header =
-      s"""WITH el AS (
-         |  SELECT DISTINCT 'c' || o_custkey::VARCHAR AS src,
-         |    's' || l_suppkey::VARCHAR AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |h0 AS (SELECT DISTINCT src AS node, CAST(1.0 AS DOUBLE) AS h
-         |  FROM el),""".stripMargin
-    val roundCtes = (1 to rounds).map { k =>
-      s"""ar$k AS MATERIALIZED (SELECT e.dst AS node,
-         |    list_reduce(list(h.h ORDER BY e.src), (x, y) -> x + y) AS a
-         |  FROM el e JOIN h${k - 1} h ON e.src = h.node GROUP BY e.dst),
-         |an$k AS (SELECT sqrt(list_reduce(list(a * a ORDER BY node),
-         |    (x, y) -> x + y)) AS nrm FROM ar$k),
-         |a$k AS MATERIALIZED (SELECT node, a / nrm AS a FROM ar$k, an$k),
-         |hr$k AS MATERIALIZED (SELECT e.src AS node,
-         |    list_reduce(list(a.a ORDER BY e.dst), (x, y) -> x + y) AS h
-         |  FROM el e JOIN a$k a ON e.dst = a.node GROUP BY e.src),
-         |hn$k AS (SELECT sqrt(list_reduce(list(h * h ORDER BY node),
-         |    (x, y) -> x + y)) AS nrm FROM hr$k),
-         |h$k AS MATERIALIZED (SELECT node, h / nrm AS h FROM hr$k, hn$k),""".stripMargin
-    }.mkString("\n").stripSuffix(",")
-    s"""$header
-       |$roundCtes
-       |SELECT node, kind, score FROM (
-       |  SELECT node, 'hub' AS kind, round(h, 6) AS score FROM h$rounds
-       |  UNION ALL
-       |  SELECT node, 'auth' AS kind, round(a, 6) AS score FROM a$rounds)
-       |ORDER BY kind, node""".stripMargin
-  }
-
-  private def pageRankOracleSql(rounds: Int, damping: Double): String = {
-    val base = (1.0 - damping).toString
-    val header =
-      s"""WITH el AS (
-         |  SELECT DISTINCT 'c' || o_custkey::VARCHAR AS a,
-         |    's' || l_suppkey::VARCHAR AS b
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (SELECT a AS src, b AS dst FROM el
-         |          UNION ALL SELECT b, a FROM el),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-         |nodes AS (SELECT src AS node FROM edges
-         |          UNION SELECT dst FROM edges),
-         |r0 AS (SELECT node, 1.0 AS rank FROM nodes),""".stripMargin
-    val roundCtes = (1 to rounds).map { k =>
-      s"""c$k AS (SELECT e.dst AS node, e.src AS src, r.rank / d.deg AS c
-         |  FROM edges e JOIN r${k - 1} r ON e.src = r.node
-         |  JOIN deg d ON e.src = d.src),
-         |s$k AS (SELECT node,
-         |    list_reduce(list(c ORDER BY src), (a, b) -> a + b) AS s
-         |  FROM c$k GROUP BY node),
-         |r$k AS (SELECT n.node, $base + $damping * coalesce(s.s, 0.0) AS rank
-         |  FROM nodes n LEFT JOIN s$k s ON n.node = s.node),""".stripMargin
-    }.mkString("\n").stripSuffix(",")
-    s"""$header
-       |$roundCtes
-       |SELECT node, round(rank, 6) AS rank FROM r$rounds ORDER BY node""".stripMargin
-  }
-
-  /** The q105 label-propagation loop unrolled in SQL: per round, neighbor
-    * label counts and a (count DESC, label ASC) argmax per node — every
-    * step integer/string-exact, so parity needs no fold-order care. */
-  private def lpaOracleSql(rounds: Int): String = {
-    val header =
-      s"""WITH el AS (
-         |  SELECT DISTINCT 'c' || o_custkey::VARCHAR AS a,
-         |    's' || l_suppkey::VARCHAR AS b
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (SELECT a AS src, b AS dst FROM el
-         |          UNION ALL SELECT b, a FROM el),
-         |nodes AS (SELECT src AS node FROM edges
-         |          UNION SELECT dst FROM edges),
-         |l0 AS (SELECT node, node AS label FROM nodes),""".stripMargin
-    val roundCtes = (1 to rounds).map { k =>
-      s"""c$k AS (SELECT e.dst AS node, l.label, count(*) AS c
-         |  FROM edges e JOIN l${k - 1} l ON e.src = l.node GROUP BY 1, 2),
-         |w$k AS (SELECT node, label FROM (
-         |  SELECT node, label,
-         |    row_number() OVER (PARTITION BY node
-         |                       ORDER BY c DESC, label ASC) AS rn
-         |  FROM c$k) WHERE rn = 1),
-         |l$k AS (SELECT p.node, coalesce(w.label, p.label) AS label
-         |  FROM l${k - 1} p LEFT JOIN w$k w ON p.node = w.node),""".stripMargin
-    }.mkString("\n").stripSuffix(",")
-    s"$header\n$roundCtes\nSELECT node, label FROM l$rounds ORDER BY node"
-  }
-
-  /** The q110 TrustRank loop unrolled in SQL: the q101 round machinery
-    * with the seeded teleport vector t (1/|S∩nodes| on seeds, else 0) —
-    * same src-sorted folds, same exact-double (1 − damping) literal. */
-  private def pprOracleSql(rounds: Int, damping: Double): String = {
-    val base = (1.0 - damping).toString
-    val header =
-      s"""WITH el AS (
-         |  SELECT DISTINCT 'c' || o_custkey::VARCHAR AS a,
-         |    's' || l_suppkey::VARCHAR AS b
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (SELECT a AS src, b AS dst FROM el
-         |          UNION ALL SELECT b, a FROM el),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-         |nodes AS (SELECT src AS node FROM edges
-         |          UNION SELECT dst FROM edges),
-         |sn AS (SELECT DISTINCT 'c' || c_custkey::VARCHAR AS node
-         |       FROM customer WHERE c_nationkey = 0),
-         |sng AS (SELECT sn.node FROM sn JOIN nodes USING (node)),
-         |tv AS (SELECT CAST(1.0 AS DOUBLE) / count(*) AS t FROM sng),
-         |based AS (SELECT n.node,
-         |            CASE WHEN g.node IS NOT NULL THEN tv.t ELSE 0.0 END AS t
-         |          FROM nodes n LEFT JOIN sng g ON n.node = g.node
-         |          CROSS JOIN tv),
-         |r0 AS (SELECT node, t AS rank FROM based),""".stripMargin
-    val roundCtes = (1 to rounds).map { k =>
-      s"""c$k AS (SELECT e.dst AS node, e.src AS src, r.rank / d.deg AS c
-         |  FROM edges e JOIN r${k - 1} r ON e.src = r.node
-         |  JOIN deg d ON e.src = d.src),
-         |s$k AS (SELECT node,
-         |    list_reduce(list(c ORDER BY src), (a, b) -> a + b) AS s
-         |  FROM c$k GROUP BY node),
-         |r$k AS (SELECT b.node, $base * b.t + $damping * coalesce(s.s, 0.0) AS rank
-         |  FROM based b LEFT JOIN s$k s ON b.node = s.node),""".stripMargin
-    }.mkString("\n").stripSuffix(",")
-    s"""$header
-       |$roundCtes
-       |SELECT node, round(rank, 9) AS rank FROM r$rounds ORDER BY node""".stripMargin
-  }
-
-  /** The q96 logistic-GD training loop unrolled in SQL: per round k, a
-    * bucket-sorted z fold per doc, sigmoid residuals, a doc-sorted
-    * gradient fold per bucket, and the weight update — every fold ordered
-    * exactly as the Scala side's sort_array folds, so the doubles are
-    * bit-identical round over round. */
-  private def lrTrainOracleSql(rounds: Int, buckets: Int, lr: Double): String = {
-    val header =
-      s"""WITH lbl AS (
-         |  SELECT doc_id, CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y
-         |  FROM documents),
-         |toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |         FROM documents),
-         |bg AS (SELECT doc_id,
-         |         unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS f
-         |       FROM toks WHERE len(t) >= 2),
-         |db AS (SELECT doc_id,
-         |         CAST(('0x' || substr(md5(f), 1, 15))::UBIGINT % $buckets AS BIGINT)
-         |           AS bucket,
-         |         CAST(count(*) AS BIGINT) AS cnt
-         |       FROM bg GROUP BY 1, 2),
-         |ff AS (SELECT db.doc_id, bucket, cnt, y FROM db
-         |         JOIN lbl ON db.doc_id = lbl.doc_id
-         |       UNION ALL
-         |       SELECT doc_id, -1 AS bucket, 1 AS cnt, y FROM lbl),
-         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-         |w0 AS (SELECT DISTINCT bucket, 0.0 AS w FROM ff),""".stripMargin
-    val roundCtes = (1 to rounds).map { k =>
-      s"""z$k AS (SELECT ff.doc_id, ff.y,
-         |  list_reduce(list(ff.cnt * w.w ORDER BY ff.bucket), (a, b) -> a + b) AS z
-         |  FROM ff JOIN w${k - 1} w ON ff.bucket = w.bucket GROUP BY 1, 2),
-         |r$k AS (SELECT doc_id, 1.0 / (1.0 + exp(-z)) - y AS r FROM z$k),
-         |g$k AS (SELECT bucket, s / (SELECT n FROM nn) AS g FROM (
-         |  SELECT ff.bucket,
-         |    list_reduce(list(ff.cnt * r.r ORDER BY ff.doc_id), (a, b) -> a + b) AS s
-         |  FROM ff JOIN r$k r ON ff.doc_id = r.doc_id GROUP BY ff.bucket)),
-         |w$k AS (SELECT w.bucket, w.w - $lr * g.g AS w
-         |  FROM w${k - 1} w JOIN g$k g ON w.bucket = g.bucket),""".stripMargin
-    }.mkString("\n").stripSuffix(",")
-    s"$header\n$roundCtes\nSELECT bucket, round(w, 6) AS w FROM w$rounds ORDER BY bucket"
-  }
-
-  /** The q98 k-means training loop unrolled in SQL. Score parity with the
-    * Scala side's augmented NearestCentroid loop: 64 index-order products
-    * folded, then + (−(Σc²/2.0)) — the same op sequence, so assignments
-    * and the id-sorted means are bit-identical round over round. */
-  /** The q98 k-means round replay as a reusable WITH-chain prefix
-    * (ends at CTE `c<rounds>` = the final centroids) — shared by the
-    * training gate (q98) and the silhouette report built on the same
-    * centroids (q246). */
-  private def kmeansCtes(k: Int, rounds: Int, dims: Int): String = {
-    val d1 = dims + 1
-    val header =
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings),
-         |c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, x
-         |       FROM (SELECT vec_id, x FROM e ORDER BY vec_id LIMIT $k)),""".stripMargin
-    val roundCtes = (1 to rounds).map { r =>
-      s"""s$r AS (SELECT e.vec_id, e.x, c.cluster,
-         |  list_reduce(list_transform(range(1, $d1), i -> e.x[i] * c.x[i]),
-         |      (p, q) -> p + q)
-         |    + (-(list_reduce(list_transform(range(1, $d1), i -> c.x[i] * c.x[i]),
-         |      (p, q) -> p + q) / 2.0)) AS score
-         |  FROM e CROSS JOIN c${r - 1} c),
-         |a$r AS (SELECT vec_id, x, cluster FROM (
-         |  SELECT vec_id, x, cluster, row_number()
-         |    OVER (PARTITION BY vec_id ORDER BY score DESC, cluster ASC) AS rn
-         |  FROM s$r) WHERE rn = 1),
-         |u$r AS (SELECT a.cluster, a.vec_id, d.i AS dim, a.x[d.i] AS v
-         |        FROM a$r a CROSS JOIN (SELECT unnest(range(1, $d1)) AS i) d),
-         |m$r AS (SELECT cluster, dim,
-         |          list_reduce(list(v ORDER BY vec_id), (p, q) -> p + q) / count(*) AS v
-         |        FROM u$r GROUP BY 1, 2),
-         |c$r AS (SELECT p.cluster, coalesce(n.x, p.x) AS x
-         |        FROM c${r - 1} p LEFT JOIN (SELECT cluster, list(v ORDER BY dim) AS x
-         |                                    FROM m$r GROUP BY cluster) n
-         |          USING (cluster)),""".stripMargin
-    }.mkString("\n")
-    s"$header\n$roundCtes"
-  }
-
-  private def kmeansOracleSql(k: Int, rounds: Int, dims: Int): String = {
-    val d1 = dims + 1
-    s"""${kmeansCtes(k, rounds, dims).stripSuffix(",")}
-       |SELECT cluster, d.i AS dim, round(x[d.i], 6) AS value
-       |FROM c$rounds CROSS JOIN (SELECT unnest(range(1, $d1)) AS i) d
-       |ORDER BY cluster, dim""".stripMargin
-  }
-
-  /** q246 silhouette oracle: the same k-means chain, then per-point
-    * dist² to every centroid (dim-ascending folds), a = nearest (own)
-    * cluster, b = second-nearest, simplified silhouette (b−a)/max(a,b),
-    * per-cluster id-sorted mean folds. Tie convention (dist², cluster)
-    * matches the Scala sort_array struct order. */
-  private def silhouetteOracleSql(k: Int, rounds: Int, dims: Int): String = {
-    val d1 = dims + 1
-    s"""${kmeansCtes(k, rounds, dims)}
-       |pc AS (SELECT e.vec_id, c.cluster,
-       |    list_reduce(list_transform(range(1, $d1),
-       |      i -> (e.x[i] - c.x[i]) * (e.x[i] - c.x[i])), (p, q) -> p + q)
-       |      AS d2
-       |  FROM e CROSS JOIN c$rounds c),
-       |r AS (SELECT vec_id, cluster, d2, row_number()
-       |    OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-       |  FROM pc),
-       |ab AS (SELECT r1.vec_id, r1.cluster, sqrt(r1.d2) AS a, sqrt(r2.d2) AS b
-       |  FROM r r1 JOIN r r2 ON r1.vec_id = r2.vec_id
-       |  WHERE r1.rn = 1 AND r2.rn = 2),
-       |sil AS (SELECT vec_id, cluster, a,
-       |    CASE WHEN greatest(a, b) = 0 THEN 0.0
-       |         ELSE (b - a) / greatest(a, b) END AS s
-       |  FROM ab)
-       |SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-       |  round(list_reduce(list(a ORDER BY vec_id), (p, q) -> p + q)
-       |    / CAST(count(*) AS DOUBLE), 6) AS mean_dist,
-       |  round(list_reduce(list(s ORDER BY vec_id), (p, q) -> p + q)
-       |    / CAST(count(*) AS DOUBLE), 6) AS mean_silhouette
-       |FROM sil GROUP BY cluster ORDER BY cluster""".stripMargin
-  }
-
-  /** HLL ρ as a descending threshold CASE over `vExpr` (a 60−log2(m)-bit
-    * field) — mirrors Sketches.hllRho: exact integer comparisons, no
-    * log2 (libm log2 is off-by-ulp at exactly the power-of-two
-    * boundaries ρ cares about). */
-  private def hllRhoSql(vExpr: String, width: Int): String =
-    (1 to width).map(k => s"WHEN $vExpr >= ${1L << (width - k)} THEN $k")
-      .mkString("CASE ", " ", s" ELSE ${width + 1} END")
-
-  private val shingle3Sql: String =
-    "list_distinct(CASE WHEN len(toks) >= 3 THEN list_transform(range(1, len(toks) - 1), " +
-      "i -> array_to_string(toks[i:i+2], ' ')) ELSE [array_to_string(toks, ' ')] END)"
-
-  /** The q22 quality score (rounded to 6, the gate convention) as a bare
-    * SQL expression over `text` — shared by the evaluation-tier oracles
-    * (q173 AUC, q174 calibration) that score documents with it. */
-  private val qualitySql: String =
-    """round(
-      |  least(length(text) / 500.0, 1.0) * 0.25 +
-      |  (CASE WHEN length(text) > 0 THEN
-      |     length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
-      |   ELSE 0.0 END) * 0.25 +
-      |  (1.0 - least((CASE WHEN length(text) > 0 THEN
-      |     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)
-      |   ELSE 0.0 END) * 10.0, 1.0)) * 0.25 +
-      |  least((CASE WHEN len(string_split_regex(trim(text), '\s+')) > 0 THEN
-      |     len(regexp_extract_all(text, '(?i)\b(the|and|of|to|a|in|is|it)\b')) * 1.0
-      |       / len(string_split_regex(trim(text), '\s+'))
-      |   ELSE 0.0 END) * 4.0, 1.0) * 0.25, 6)""".stripMargin
-
-  /** The q23 language-ID prediction as a `scored` CTE + CASE chain,
-    * shared by the q172 confusion-matrix oracle. */
-  private def langPredSelectSql: String = {
-    val langs = graft.operators.TextAnalysis.markerLexicon.keys.toSeq.sorted
-    val scores = langs.map { l =>
-      val pat = "(?i)\\b(" +
-        graft.operators.TextAnalysis.markerLexicon(l).mkString("|") + ")\\b"
-      s"len(regexp_extract_all(text, '$pat')) AS s_$l"
-    }.mkString(", ")
-    val greatest = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
-    val caseChain = langs.map(l => s"WHEN s_$l = $greatest THEN '$l'")
-      .mkString("CASE ", " ", " END")
-    s"""scored AS (SELECT doc_id, lang, $scores FROM documents),
-       |pr AS (SELECT lang AS l, $caseChain AS p FROM scored)""".stripMargin
-  }
-
-  /** The 64 per-bit majority votes of simhash as one SQL sum. Only bits
-    * 0-59 can be set with the 60-bit portable hash (both engines agree the
-    * top 4 bits are 0), so 60 terms suffice. */
-  private def simhashBitsSql: String =
-    (0 until 60).map(i =>
-      s"CASE WHEN sum(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) > 0 " +
-        s"THEN ${1L << i} ELSE 0 END").mkString(" + ")
-
-  /** Sign-LSH signature over the same seeded hyperplanes as
-    * Similarity.signSignature(planes = 8, dim = 64, seed = 42), inlined as
-    * double literals (Double.toString round-trips exactly through DuckDB's
-    * strtod, and list_dot_product accumulates forward in double like the
-    * native VectorDot — the sign compare is bit-identical). */
-  private def lshSigSql: String = {
-    val planes = graft.operators.Similarity.hyperplanes(8, 64)
-    planes.zipWithIndex.map { case (w, p) =>
-      val lit = "[" + w.map(_.toString).mkString(", ") + "]::DOUBLE[]"
-      s"(CASE WHEN list_dot_product(v, $lit) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-  }
-
-  /** Multi-probe buckets: the signature XOR each single bit. */
-  private def lshProbeXorsSql: String =
-    (0 until 8).map(p => s"xor(sig, ${1L << p})").mkString(", ")
-
-  /** q134 Benford oracle: integer-exact digit extraction, the SAME nine
-    * Double literals as the operator (embedded via toString), digit-
-    * sorted χ² fold. */
-  private def benfordOracleSql: String = {
-    val expCase = (1 to 9).map(d =>
-      s"WHEN $d THEN CAST(${math.log10(1.0 + 1.0 / d)} AS DOUBLE)")
-      .mkString("CASE digit ", " ", " END")
-    s"""WITH c0 AS (SELECT CAST(substr(CAST(CAST(floor(v) AS BIGINT) AS VARCHAR),
-       |              1, 1) AS INT) AS digit
-       |            FROM (SELECT o_totalprice AS v FROM orders)
-       |            WHERE v >= 1.0),
-       |c AS (SELECT digit, CAST(count(*) AS BIGINT) AS cnt FROM c0 GROUP BY 1),
-       |spine AS (SELECT unnest(range(1, 10)) AS digit),
-       |f AS (SELECT spine.digit AS digit, coalesce(cnt, 0) AS cnt
-       |      FROM spine LEFT JOIN c USING (digit)),
-       |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM f),
-       |s AS (SELECT digit, cnt,
-       |        CAST(cnt AS DOUBLE) / CAST((SELECT n FROM n) AS DOUBLE)
-       |          AS obs_frac,
-       |        $expCase AS exp_frac
-       |      FROM f),
-       |p AS (SELECT digit, cnt, obs_frac, exp_frac,
-       |        ((CAST(cnt AS DOUBLE) -
-       |          (CAST((SELECT n FROM n) AS DOUBLE) * exp_frac)) *
-       |         (CAST(cnt AS DOUBLE) -
-       |          (CAST((SELECT n FROM n) AS DOUBLE) * exp_frac))) /
-       |        (CAST((SELECT n FROM n) AS DOUBLE) * exp_frac) AS part
-       |      FROM s),
-       |chi AS (SELECT list_reduce(list(part ORDER BY digit), (a, b) -> a + b)
-       |          AS chi2 FROM p)
-       |SELECT digit, cnt, round(obs_frac, 6) AS obs_frac,
-       |  round(exp_frac, 6) AS exp_frac,
-       |  round((SELECT chi2 FROM chi), 6) AS chi2
-       |FROM p ORDER BY digit""".stripMargin
-  }
-
-  /** q133 correlation-matrix oracle: exact long sufficient statistics
-    * over integer-unit projections, then r at the operator's exact
-    * parenthesization — one row per column pair. */
-  private def corrMatrixOracleSql: String = {
-    val cols = Seq(
-      "quantity" -> "CAST(l_quantity AS BIGINT)",
-      "discount_bp" -> "CAST(round(l_discount * 100) AS BIGINT)",
-      "price" -> "CAST(round(l_extendedprice) AS BIGINT)",
-      "tax_bp" -> "CAST(round(l_tax * 100) AS BIGINT)")
-    val proj = cols.map { case (n, e) => s"$e AS $n" }.mkString(", ")
-    val stats = (Seq("CAST(count(*) AS BIGINT) AS n") ++
-      cols.flatMap { case (n, _) =>
-        Seq(s"CAST(sum($n) AS BIGINT) AS s_$n",
-          s"CAST(sum($n * $n) AS BIGINT) AS q_$n")
-      } ++
-      cols.combinations(2).map { case Seq((na, _), (nb, _)) =>
-        s"CAST(sum($na * $nb) AS BIGINT) AS p_${na}_$nb"
-      }).mkString(",\n    ")
-    val rows = cols.combinations(2).map { case Seq((na, _), (nb, _)) =>
-      val r = s"((CAST(n AS DOUBLE) * CAST(p_${na}_$nb AS DOUBLE)) - " +
-        s"(CAST(s_$na AS DOUBLE) * CAST(s_$nb AS DOUBLE))) / " +
-        s"(sqrt((CAST(n AS DOUBLE) * CAST(q_$na AS DOUBLE)) - " +
-        s"(CAST(s_$na AS DOUBLE) * CAST(s_$na AS DOUBLE))) * " +
-        s"sqrt((CAST(n AS DOUBLE) * CAST(q_$nb AS DOUBLE)) - " +
-        s"(CAST(s_$nb AS DOUBLE) * CAST(s_$nb AS DOUBLE))))"
-      s"SELECT '$na' AS col_a, '$nb' AS col_b, round($r, 6) AS corr FROM a"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH src AS (SELECT $proj FROM lineitem),
-       |a AS (SELECT
-       |    $stats
-       |  FROM src)
-       |$rows
-       |ORDER BY col_a, col_b""".stripMargin
-  }
-
-  /** q229 Spearman oracle: per-column doubled midranks
-    * (2·cntBelow + cnt + 1, exact integers) replayed over value-grouped
-    * windows; HUGEINT sums ≡ the operator's DECIMAL(38,0) sums; the same
-    * fixed-parenthesization double formula per pair. */
-  private def spearmanOracleSql: String = {
-    val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    val rankCtes = cols.map { c =>
-      s"""g_$c AS (SELECT CAST($c AS DOUBLE) AS v,
-         |    CAST(count(*) AS BIGINT) AS c
-         |  FROM lineitem GROUP BY 1),
-         |r_$c AS (SELECT v, 2 * COALESCE(CAST(sum(c) OVER (ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
-         |      0) + c + 1 AS r
-         |  FROM g_$c)""".stripMargin
-    }.mkString(",\n")
-    val joins = cols
-      .map(c => s"JOIN r_$c ON CAST(lineitem.$c AS DOUBLE) = r_$c.v")
-      .mkString("\n  ")
-    val rankSel = cols.map(c => s"r_$c.r AS rk_$c").mkString(", ")
-    val stats = (Seq("CAST(count(*) AS BIGINT) AS n") ++
-      cols.flatMap(c => Seq(
-        s"sum(rk_$c) AS s_$c",
-        s"sum(rk_$c * rk_$c) AS q_$c")) ++
-      cols.combinations(2).map { case Seq(a, b) =>
-        s"sum(rk_$a * rk_$b) AS p_${a}_$b"
-      }).mkString(",\n    ")
-    val rows = cols.combinations(2).map { case Seq(a, b) =>
-      val r = s"((CAST(n AS DOUBLE) * CAST(p_${a}_$b AS DOUBLE)) - " +
-        s"(CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE))) / " +
-        s"(sqrt((CAST(n AS DOUBLE) * CAST(q_$a AS DOUBLE)) - " +
-        s"(CAST(s_$a AS DOUBLE) * CAST(s_$a AS DOUBLE))) * " +
-        s"sqrt((CAST(n AS DOUBLE) * CAST(q_$b AS DOUBLE)) - " +
-        s"(CAST(s_$b AS DOUBLE) * CAST(s_$b AS DOUBLE))))"
-      s"SELECT '$a' AS col_a, '$b' AS col_b, n, round($r, 6) AS spearman" +
-        " FROM s"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $rankCtes,
-       |j AS MATERIALIZED (SELECT $rankSel
-       |  FROM lineitem
-       |  $joins),
-       |s AS MATERIALIZED (SELECT
-       |    $stats
-       |  FROM j)
-       |$rows
-       |ORDER BY col_a, col_b""".stripMargin
-  }
-
-  /** q230 BFS oracle: the frontier rounds unrolled — f_h = distinct
-    * neighbors of f_{h−1} not yet visited, v_h = v_{h−1} ∪ (f_h, h);
-    * every CTE MATERIALIZED (multi-referenced, the q131 inlining
-    * lesson). Integer-exact throughout. */
-  private def bfsLevelsOracleSql(maxHops: Int): String = {
-    val rounds = (1 to maxHops).map { h =>
-      val p = h - 1
-      s"""f$h AS MATERIALIZED (SELECT DISTINCT e.dst AS node
-         |  FROM e JOIN f$p ON e.src = f$p.node
-         |  WHERE e.dst NOT IN (SELECT node FROM v$p)),
-         |v$h AS MATERIALIZED (SELECT node, dist FROM v$p
-         |  UNION ALL SELECT node, $h AS dist FROM f$h)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH el AS MATERIALIZED (SELECT DISTINCT
-       |    'c' || CAST(o_custkey AS VARCHAR) AS a,
-       |    's' || CAST(l_suppkey AS VARCHAR) AS b
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM el
-       |  UNION SELECT b AS src, a AS dst FROM el),
-       |f0 AS MATERIALIZED (SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR)
-       |    AS node FROM supplier WHERE s_suppkey % 10 = 0),
-       |v0 AS MATERIALIZED (SELECT node, 0 AS dist FROM f0),
-       |$rounds
-       |SELECT CAST(dist AS INTEGER) AS dist,
-       |  CAST(count(*) AS BIGINT) AS n_nodes,
-       |  CAST(sum(CASE WHEN node LIKE 'c%' THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_cust,
-       |  CAST(sum(CASE WHEN node LIKE 's%' THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_supp
-       |FROM v$maxHops GROUP BY 1 ORDER BY dist""".stripMargin
-  }
-
-  /** q264 lang-margin oracle: the q172 marker scorer's integer counts,
-    * top-2 margin via a descending sort of the fixed score list —
-    * everything but the final mean is integer-exact. */
-  private def langidMarginOracleSql: String = {
-    val langs = graft.operators.TextAnalysis.markerLexicon.keys.toSeq.sorted
-    val scores = langs.map { l =>
-      val pat = "(?i)\\b(" +
-        graft.operators.TextAnalysis.markerLexicon(l).mkString("|") + ")\\b"
-      s"len(regexp_extract_all(text, '$pat'))"
-    }.mkString("[", ", ", "]")
-    s"""WITH m AS (SELECT source,
-       |    CAST(list_sort($scores, 'DESC')[1]
-       |      - list_sort($scores, 'DESC')[2] AS BIGINT) AS mg
-       |  FROM documents)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(CASE WHEN mg <= 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_low_margin,
-       |  round(CAST(sum(mg) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-       |    AS mean_margin
-       |FROM m GROUP BY source ORDER BY source""".stripMargin
-  }
-
-  /** q253 slice-accuracy oracle: the q172 lang scorer carried with its
-    * source, one integer aggregate per slice, then the Wilson formulas
-    * at the EXACT parenthesization `Profiling.sliceAccuracy` computes,
-    * with z/z² as shared IEEE literals. */
-  private def sliceAccuracyOracleSql(z: Double): String = {
-    val langs = graft.operators.TextAnalysis.markerLexicon.keys.toSeq.sorted
-    val scores = langs.map { l =>
-      val pat = "(?i)\\b(" +
-        graft.operators.TextAnalysis.markerLexicon(l).mkString("|") + ")\\b"
-      s"len(regexp_extract_all(text, '$pat')) AS s_$l"
-    }.mkString(", ")
-    val greatest = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
-    val caseChain = langs.map(l => s"WHEN s_$l = $greatest THEN '$l'")
-      .mkString("CASE ", " ", " END")
-    val zS = java.lang.Double.toString(z)
-    val z2S = java.lang.Double.toString(z * z)
-    val denom = s"(1.0 + ($z2S / nd))"
-    val center = s"((ph + ($z2S / (2.0 * nd))) / $denom)"
-    val half = s"(($zS * sqrt(((ph * (1.0 - ph)) / nd) + " +
-      s"($z2S / ((4.0 * nd) * nd)))) / $denom)"
-    s"""WITH scored AS (SELECT source, lang, $scores FROM documents),
-       |pr AS (SELECT source AS slice, lang AS l, $caseChain AS p
-       |  FROM scored),
-       |a AS (SELECT slice, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(CASE WHEN l = p THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_correct
-       |  FROM pr GROUP BY slice),
-       |b AS (SELECT slice, n, n_correct, CAST(n AS DOUBLE) AS nd,
-       |    CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE) AS ph FROM a)
-       |SELECT slice, n, n_correct, round(ph, 6) AS acc,
-       |  round($center - $half, 6) AS wilson_lo,
-       |  round($center + $half, 6) AS wilson_hi
-       |FROM b ORDER BY slice""".stripMargin
-  }
-
-  /** q247 FD-audit oracle: per hypothesis, the determinant-keyed exact
-    * distinct count (+1 if a NULL dependent exists — NULL counts as a
-    * value, matching the operator) rolled up to violation counts. */
-  private def fdAuditOracleSql(hs: Seq[(String, String)]): String =
-    hs.map { case (det, dep) =>
-      s"""SELECT '$det' AS determinant, '$dep' AS dependent,
-         |  CAST(count(*) AS BIGINT) AS n_keys,
-         |  CAST(sum(CASE WHEN vals > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_violating_keys,
-         |  round(CAST(sum(CASE WHEN vals > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS violation_frac,
-         |  (sum(CASE WHEN vals > 1 THEN 1 ELSE 0 END) = 0) AS holds
-         |FROM (SELECT $det AS k,
-         |    count(DISTINCT $dep) +
-         |      max(CASE WHEN $dep IS NULL THEN 1 ELSE 0 END) AS vals
-         |  FROM orders GROUP BY 1)""".stripMargin
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY determinant, dependent")
-
-  /** q240 RBO oracle: q92's two ranker replays (BM25 term-sorted fold,
-    * embedding cosine) joined on the shared prefix; the per-depth weight
-    * table comes VERBATIM from `Ranking.rboWeights` as a literal array
-    * (the q139 shared-literal convention — no cross-engine pow/suffix-sum
-    * parity to defend), id-sorted fold, (1−p) as the same IEEE literal
-    * Spark computes. */
-  private def rboOracleSql(p: Double, k: Int): String = {
-    val w = operators.Ranking.rboWeights(p, k)
-    val arr = w.map(java.lang.Double.toString).mkString("[", ", ", "]")
-    val oneMinusP = java.lang.Double.toString(1.0 - p)
-    s"""WITH t0 AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-       |  FROM documents),
-       |st AS (SELECT count(*) AS n, avg(len(toks)) AS avgdl FROM t0),
-       |t AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t0),
-       |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t
-       |       WHERE term IN ('join', 'merge', 'filter') GROUP BY 1, 2, 3),
-       |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |c AS (SELECT tf.doc_id, tf.term,
-       |        ln(1.0 + (st.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-       |          * tf.tf * 2.2
-       |          / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl)) AS c
-       |      FROM tf JOIN dfreq USING (term) CROSS JOIN st),
-       |bm AS (SELECT doc_id,
-       |         list_reduce(list(c ORDER BY term), (a, b) -> a + b) AS bm
-       |       FROM c GROUP BY doc_id),
-       |lex AS (SELECT doc_id, CAST(row_number()
-       |          OVER (ORDER BY bm DESC, doc_id) AS INTEGER) AS rank_lex
-       |        FROM bm QUALIFY rank_lex <= $k),
-       |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE vec_id = 0),
-       |sem0 AS (SELECT vec_id AS doc_id,
-       |           list_cosine_similarity(CAST(embedding AS DOUBLE[]), qv.v)
-       |             AS cs
-       |         FROM embeddings, qv),
-       |sem AS (SELECT doc_id, CAST(row_number()
-       |          OVER (ORDER BY cs DESC, doc_id) AS INTEGER) AS rank_sem
-       |        FROM sem0 QUALIFY rank_sem <= $k),
-       |wt AS (SELECT $arr AS warr),
-       |j AS (SELECT lex.doc_id AS id,
-       |        greatest(rank_lex, rank_sem) AS m
-       |      FROM lex JOIN sem ON lex.doc_id = sem.doc_id)
-       |SELECT CAST(count(*) AS BIGINT) AS n_shared,
-       |  round($oneMinusP * list_reduce(
-       |    list(wt.warr[j.m + 1] ORDER BY j.id), (a, b) -> a + b), 6) AS rbo
-       |FROM j CROSS JOIN wt""".stripMargin
-  }
-
-  /** q238 bounded-shortest-path oracle: Bellman–Ford relaxations unrolled
-    * — d_k = per-node min over (d_{k−1} ∪ edges⋈d_{k−1} min-plus);
-    * parallel edges pre-collapsed to their min weight; every CTE
-    * MATERIALIZED (multi-referenced, the q131 inlining lesson).
-    * Integer-exact throughout. */
-  private def shortestPathsOracleSql(rounds: Int): String = {
-    val steps = (1 to rounds).map { k =>
-      val p = k - 1
-      s"""d$k AS MATERIALIZED (SELECT node, CAST(min(dist) AS BIGINT) AS dist
-         |  FROM (SELECT node, dist FROM d$p
-         |    UNION ALL
-         |    SELECT e.dst AS node, d$p.dist + e.w AS dist
-         |    FROM e JOIN d$p ON e.src = d$p.node)
-         |  GROUP BY node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH el AS MATERIALIZED (SELECT
-       |    'c' || CAST(o_custkey AS VARCHAR) AS a,
-       |    's' || CAST(l_suppkey AS VARCHAR) AS b,
-       |    CAST(date_diff('day', CAST(o_orderdate AS DATE),
-       |      CAST(l_shipdate AS DATE)) AS BIGINT) AS w
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |e AS MATERIALIZED (SELECT src, dst, CAST(min(w) AS BIGINT) AS w
-       |  FROM (SELECT a AS src, b AS dst, w FROM el
-       |    UNION ALL SELECT b AS src, a AS dst, w FROM el)
-       |  GROUP BY 1, 2),
-       |d0 AS MATERIALIZED (SELECT DISTINCT
-       |    's' || CAST(s_suppkey AS VARCHAR) AS node, CAST(0 AS BIGINT)
-       |      AS dist
-       |  FROM supplier WHERE s_suppkey % 10 = 0),
-       |$steps
-       |SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes
-       |FROM d$rounds GROUP BY 1 ORDER BY dist""".stripMargin
-  }
-
-  /** q143 k-core oracle: the peeling rounds unrolled — per round, edges
-    * restricted to the previous alive set and a degree-≥-k filter; every
-    * CTE MATERIALIZED (multi-referenced, the q131 inlining lesson). */
-  private def kCoreOracleSql(k: Int, rounds: Int): String = {
-    val roundCtes = (1 to rounds).map { t =>
-      val p = t - 1
-      s"""ae$t AS MATERIALIZED (SELECT x, y FROM e
-         |      WHERE x IN (SELECT n FROM a$p) AND y IN (SELECT n FROM a$p)),
-         |a$t AS MATERIALIZED (SELECT n FROM (
-         |        SELECT n, count(*) AS d FROM
-         |          (SELECT x AS n FROM ae$t UNION ALL SELECT y AS n FROM ae$t)
-         |        GROUP BY 1)
-         |      WHERE d >= $k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-       |           FROM lineitem),
-       |e AS MATERIALIZED (SELECT DISTINCT a.it AS x, b2.it AS y
-       |     FROM b a JOIN b b2 ON a.bk = b2.bk AND a.it < b2.it),
-       |a0 AS MATERIALIZED (SELECT DISTINCT n FROM
-       |     (SELECT x AS n FROM e UNION ALL SELECT y AS n FROM e)),
-       |$roundCtes,
-       |fe AS (SELECT x, y FROM e
-       |       WHERE x IN (SELECT n FROM a$rounds)
-       |         AND y IN (SELECT n FROM a$rounds))
-       |SELECT n AS node, CAST(count(*) AS BIGINT) AS degree
-       |FROM (SELECT x AS n FROM fe UNION ALL SELECT y AS n FROM fe)
-       |GROUP BY 1 ORDER BY node""".stripMargin
-  }
-
-  /** q139 ranking-eval oracle: the q27 cosine-ranking replay + the
-    * metric formulas with the OPERATOR'S OWN gain/ideal literals
-    * (driver-computed, embedded via toString — no cross-engine log
-    * parity to defend). */
-  private def rankingEvalOracleSql(k: Int): String = {
-    val gains = (1 to k).map(r => 1.0 / (math.log(r + 1.0) / math.log(2.0)))
-    val cums = gains.scanLeft(0.0)(_ + _).tail
-    val gainCase = gains.zipWithIndex
-      .map { case (g, i) => s"WHEN ${i + 1} THEN CAST($g AS DOUBLE)" }
-      .mkString("CASE rank ", " ", " END")
-    val idcgCase = cums.zipWithIndex
-      .map { case (c, i) => s"WHEN ${i + 1} THEN CAST($c AS DOUBLE)" }
-      .mkString(s"CASE LEAST(n_rel, $k) ", " ", " END")
-    s"""WITH q AS (SELECT vec_id AS query_id, label,
-       |             CAST(embedding AS DOUBLE[]) AS qv
-       |           FROM embeddings WHERE vec_id < 10),
-       |ranked AS (SELECT q.query_id, c.vec_id AS doc_id,
-       |             row_number() OVER (PARTITION BY q.query_id
-       |               ORDER BY list_cosine_similarity(
-       |                 CAST(c.embedding AS DOUBLE[]), q.qv) DESC, c.vec_id)
-       |               AS rank
-       |           FROM q, embeddings c WHERE c.vec_id <> q.query_id
-       |           QUALIFY rank <= $k),
-       |rel AS (SELECT q.query_id, c.vec_id AS doc_id
-       |        FROM q JOIN embeddings c
-       |          ON c.label = q.label AND c.vec_id <> q.query_id),
-       |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-       |         FROM rel GROUP BY 1),
-       |h AS (SELECT r.query_id, r.rank FROM ranked r
-       |      JOIN rel ON r.query_id = rel.query_id AND r.doc_id = rel.doc_id),
-       |d AS (SELECT query_id, CAST(count(*) AS BIGINT) AS hits,
-       |        list_reduce(list($gainCase ORDER BY rank), (a, b) -> a + b)
-       |          AS dcg
-       |      FROM h GROUP BY 1)
-       |SELECT n.query_id, n.n_rel, coalesce(d.hits, 0) AS hits,
-       |  round(CAST(coalesce(d.hits, 0) AS DOUBLE) /
-       |    CAST(n.n_rel AS DOUBLE), 6) AS recall,
-       |  round(coalesce(d.dcg, CAST(0.0 AS DOUBLE)) / ($idcgCase), 6) AS ndcg
-       |FROM nrel n LEFT JOIN d USING (query_id) ORDER BY query_id""".stripMargin
-  }
-
-  /** q131 MMR oracle: candidate pruning (rel desc, id), all pairwise
-    * cosines, then `k` unrolled greedy rounds — round 1's score is λ·rel
-    * (subtracting (1−λ)·0.0 is the identity in IEEE, matching the
-    * driver); later rounds join the selected set for the max-cosine
-    * penalty. λ and (1−λ) embed as exact Double.toString literals. */
-  private def mmrOracleSql(k: Int, lambda: Double, candidates: Int): String = {
-    val lam = lambda.toString
-    val oml = (1.0 - lambda).toString
-    val rounds = (2 to k).map { t =>
-      val p = t - 1
-      s"""m$t AS (SELECT c.id, c.rel, max(pc.cs) AS ms
-         |       FROM cand c JOIN pc ON pc.ia = c.id
-         |       JOIN sel$p s ON pc.ib = s.id
-         |       WHERE c.id NOT IN (SELECT id FROM sel$p)
-         |       GROUP BY c.id, c.rel),
-         |s$t AS (SELECT id, rel, score FROM (
-         |         SELECT id, rel,
-         |           (CAST($lam AS DOUBLE) * rel) -
-         |           (CAST($oml AS DOUBLE) * ms) AS score
-         |         FROM m$t)
-         |       QUALIFY row_number() OVER (ORDER BY score DESC, id) = 1),
-         |sel$t AS MATERIALIZED (SELECT id, rel, score, rank FROM sel$p UNION ALL
-         |          SELECT id, rel, score, $t AS rank FROM s$t)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |            WHERE vec_id = 0),
-       |cand0 AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v,
-       |            list_cosine_similarity(CAST(embedding AS DOUBLE[]), qv.v)
-       |              AS rel
-       |          FROM embeddings, qv WHERE vec_id <> 0),
-       |cand AS MATERIALIZED (SELECT id, v, rel FROM cand0
-       |         QUALIFY row_number() OVER (ORDER BY rel DESC, id)
-       |           <= $candidates),
-       |pc AS MATERIALIZED (SELECT a.id AS ia, b.id AS ib,
-       |         list_cosine_similarity(a.v, b.v) AS cs
-       |       FROM cand a JOIN cand b ON a.id <> b.id),
-       |s1 AS (SELECT id, rel, CAST($lam AS DOUBLE) * rel AS score FROM cand
-       |       QUALIFY row_number()
-       |         OVER (ORDER BY CAST($lam AS DOUBLE) * rel DESC, id) = 1),
-       |sel1 AS MATERIALIZED (SELECT id, rel, score, 1 AS rank FROM s1),
-       |$rounds
-       |SELECT rank, id, round(rel, 6) AS rel, round(score, 6) AS mmr
-       |FROM sel$k ORDER BY rank""".stripMargin
-  }
-
-  /** q129 power-iteration round t: matvec against v(t−1) with a j-sorted
-    * fold, L2 norm with an i-sorted fold, normalize — each op mirrors the
-    * driver loop's fixed index order. */
-  private def pcRoundSql(t: Int): String = {
-    val prev = t - 1
-    s"""w$t AS (SELECT cov.i AS d,
-       |         list_reduce(list(cij * v ORDER BY j), (a, b) -> a + b) AS w
-       |       FROM cov JOIN v$prev ON cov.j = v$prev.d GROUP BY cov.i),
-       |l$t AS (SELECT sqrt(list_reduce(list(w * w ORDER BY d),
-       |         (a, b) -> a + b)) AS l FROM w$t),
-       |v$t AS (SELECT d, w / (SELECT l FROM l$t) AS v FROM w$t)""".stripMargin
-  }
-
-  /** q127 Morton interleave as a SQL sum: column i's bucket bit b lands
-    * at position n·b + i (bit sets are disjoint, so + ≡ |). */
-  private def zInterleaveSql(n: Int, bits: Int): String =
-    (0 until bits).flatMap(b => (0 until n).map(i =>
-      s"(((b$i >> $b) & 1) << ${n * b + i})")).mkString(" + ")
-
-  // ── q124 profile oracle: one SELECT per column, UNION ALL'd.
-  //    Shared columns every branch must emit (names drive the driver's
-  //    sorted-column hash): column, n_rows, n_nulls, n_distinct,
-  //    min_num, max_num, min_str, max_str, avg_len.
-  private def profileNumColSql(c: String, from: String = "orders",
-      suf: String = ""): String =
-    s"""SELECT '$c' AS "column$suf", count(*) AS n_rows$suf,
-       |  count(*) - count($c) AS n_nulls$suf,
-       |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct$suf,
-       |  round(CAST(min($c) AS DOUBLE), 6) AS min_num$suf,
-       |  round(CAST(max($c) AS DOUBLE), 6) AS max_num$suf,
-       |  CAST(NULL AS VARCHAR) AS min_str$suf, CAST(NULL AS VARCHAR) AS max_str$suf,
-       |  CAST(NULL AS DOUBLE) AS avg_len$suf
-       |FROM $from""".stripMargin
-
-  private def profileStrColSql(c: String, from: String = "orders",
-      suf: String = ""): String =
-    s"""SELECT '$c' AS "column$suf", count(*) AS n_rows$suf,
-       |  count(*) - count($c) AS n_nulls$suf,
-       |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct$suf,
-       |  CAST(NULL AS DOUBLE) AS min_num$suf, CAST(NULL AS DOUBLE) AS max_num$suf,
-       |  CAST(min($c) AS VARCHAR) AS min_str$suf, CAST(max($c) AS VARCHAR) AS max_str$suf,
-       |  round(CAST(CAST(sum(length($c)) AS BIGINT) AS DOUBLE) /
-       |    CAST(count($c) AS DOUBLE), 6) AS avg_len$suf
-       |FROM $from""".stripMargin
-
-  /** Non-numeric, non-string columns (timestamps): min/max render to
-    * string, no avg_len. */
-  private def profileRenderColSql(c: String, from: String = "orders",
-      suf: String = ""): String =
-    s"""SELECT '$c' AS "column$suf", count(*) AS n_rows$suf,
-       |  count(*) - count($c) AS n_nulls$suf,
-       |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct$suf,
-       |  CAST(NULL AS DOUBLE) AS min_num$suf, CAST(NULL AS DOUBLE) AS max_num$suf,
-       |  CAST(min($c) AS VARCHAR) AS min_str$suf, CAST(max($c) AS VARCHAR) AS max_str$suf,
-       |  CAST(NULL AS DOUBLE) AS avg_len$suf
-       |FROM $from""".stripMargin
+  def oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -116,7 +116,7 @@ object Stress {
     // real-BPE counting is a pure fused scan — should track textAnalysis
     time(s"bpeTokenCount ${factor}x") {
       println("[stress]   rows=" + Bench.force(docs.select(col("doc_id"),
-        TextAnalysis.bpeTokenCount(col("text"), SparkEntry.bpeMerges).as("n"))))
+        TextAnalysis.bpeTokenCount(col("text"), graft.queries.TextQueries.bpeMerges).as("n"))))
     }
     // production vocab size: ~50k merges (synthetic but BPE-shaped — full
     // 2-char pair coverage, then 3-char and 4-char chains — loaded through
@@ -230,7 +230,7 @@ object Stress {
       fs.delete(root, true)
     }
 
-    // same ts normalization as SparkEntry.T: long nanos (legacy config) OR
+    // same ts normalization as queries.Shared.T: long nanos (legacy config) OR
     // TIMESTAMP_NTZ (regenerated micros parquet) → TimestampType
     val eventsRaw = spark.read.parquet(s"$sfDir/events.parquet")
     val events0 = eventsRaw.schema("ts").dataType match {

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.functions.PyStr
+import java.io.IOException
+import java.util.ConcurrentModificationException
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -61,19 +63,41 @@ class SnapshotStore(spark: SparkSession, dir: String) {
   private def markedFormat(name: String): Option[String] =
     markerFiles(name).sortBy(_._1).lastOption.map(_._2)
 
+  /** Renames `src` to `dst` if `dst` does not exist; false if it did, or
+    * if the rename failed. A `dst` directory that appears between the
+    * check and the rename would make the local file system move `src`
+    * UNDER it (a hidden dir inside a live snapshot); that move is undone. */
+  private def moveTo(src: Path, dst: Path): Boolean = {
+    if (fs.exists(dst) || !fs.rename(src, dst)) return false
+    val nested = new Path(dst, src.getName)
+    if (!fs.exists(nested)) return true
+    if (!fs.rename(nested, src)) throw new IOException(s"could not move $nested back to $src")
+    false
+  }
+
+  /** Recover from a torn write: a lock with no live snapshot beside it is
+    * the complete previous snapshot, parked by a writer that crashed (or
+    * has not yet swapped) — move it back. True if `p` now exists. */
+  private def restore(p: Path): Boolean = {
+    if (!fs.exists(p) && fs.exists(lockPath(p)) && !moveTo(lockPath(p), p) && !fs.exists(p))
+      throw new IOException(s"could not restore ${lockPath(p)} to $p")
+    fs.exists(p)
+  }
+
+  /** Deletes the lock beside a live snapshot: a finished swap's previous
+    * generation. A lock with no live snapshot is never deleted — it is the
+    * only complete copy while a swap is under way. */
+  private def dropFinishedLock(p: Path): Unit =
+    if (fs.exists(p) && fs.exists(lockPath(p))) fs.delete(lockPath(p), true)
+
   def read(name: String): Option[DataFrame] = {
-    def recover(p: Path): Boolean = {
-      // Recover from a torn write: if only the lock survives, restore it.
-      if (!fs.exists(p) && fs.exists(lockPath(p))) fs.rename(lockPath(p), p)
-      fs.exists(p)
-    }
     def readCsv(): Option[DataFrame] =
-      if (recover(csvPath(name)))
+      if (restore(csvPath(name)))
         Some(spark.read.option("header", "true").option("inferSchema", "true")
           .csv(csvPath(name).toString))
       else None
     def readParquet(): Option[DataFrame] =
-      if (recover(path(name))) Some(spark.read.parquet(path(name).toString))
+      if (restore(path(name))) Some(spark.read.parquet(path(name).toString))
       else None
     markedFormat(name) match {
       case Some("csv")     => readCsv().orElse(readParquet())
@@ -89,7 +113,15 @@ class SnapshotStore(spark: SparkSession, dir: String) {
     * `useCsv` writes a `.snapshot.csv` dataset instead (reference
     * `use_csv=True`, etl_utils.py:186-189) — same commit protocol; note
     * CSV round-trips types through header+inference, like the reference's
-    * pandas read_csv. */
+    * pandas read_csv.
+    *
+    * Two writers racing on one snapshot: every rename is checked, and a
+    * writer whose swap finds the current path taken (another writer, or a
+    * reader's restore, swapped in between its two renames) deletes its
+    * staged rows and throws `ConcurrentModificationException`; the other
+    * writer's snapshot stays live. A check-then-delete window remains in
+    * [[dropFinishedLock]]: it matters only if a third party crashes
+    * between its two renames inside that window. */
   def write(name: String, df: DataFrame, partitions: Option[Int] = None,
       useCsv: Boolean = false): Unit = {
     fs.mkdirs(new Path(dir))
@@ -103,9 +135,16 @@ class SnapshotStore(spark: SparkSession, dir: String) {
         .parquet(tmp.toString)
     val cur = if (useCsv) csvPath(name) else path(name)
     val lock = lockPath(cur)
-    if (fs.exists(lock)) fs.delete(lock, true)
-    if (fs.exists(cur)) fs.rename(cur, lock)
-    fs.rename(tmp, cur)
+    try {
+      restore(cur)
+      dropFinishedLock(cur)
+      if (fs.exists(cur) && !moveTo(cur, lock))
+        throw new ConcurrentModificationException(
+          s"snapshot $name: could not park $cur at $lock; a concurrent write holds it")
+      if (!moveTo(tmp, cur))
+        throw new ConcurrentModificationException(
+          s"snapshot $name: a concurrent write replaced $cur; this write was not committed")
+    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
     afterDataCommit()
     // commit the format: readers resolve the highest-numbered marker, so a
     // crash anywhere past this line can no longer resurrect the other
@@ -116,7 +155,7 @@ class SnapshotStore(spark: SparkSession, dir: String) {
     val nextSeq = markers.map(_._1).maxOption.getOrElse(0L) + 1L
     fs.create(new Path(dir, s"$name.snapshot.format-$nextSeq.$fmt"), false).close()
     afterFormatCommit()
-    if (fs.exists(lock)) fs.delete(lock, true)
+    dropFinishedLock(cur)
     // post-commit GC (idempotent; a crash here is repaired by the next
     // write): stale other-format dataset + its lock, superseded markers
     val other = if (useCsv) path(name) else csvPath(name)

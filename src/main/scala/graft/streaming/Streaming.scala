@@ -217,59 +217,23 @@ object Streaming {
     * through (the streaming heavy-hitter tracker: probe the store with
     * [[graft.operators.Sketches.cmsEstimate]] at any time).
     *
-    * Durability: each merge writes a fresh `v<batchId>` parquet dir, then
-    * repoints the `LATEST` marker via temp-file + ATOMIC_MOVE — readers
-    * never observe a half-written sketch, and a crash between the write
-    * and the repoint leaves the previous version live. Replay guard as in
-    * [[streamingSinger]]: a batch EQUAL to the recorded id is the
-    * checkpoint-recovery redelivery and is skipped (double-counting a
-    * batch would overestimate — the one CMS failure mode with no
-    * self-correction); a fresh query restarting ids at 0 is never
-    * silently dropped. Old versions are pruned best-effort after the
-    * repoint. */
+    * Committed through [[versionedIngest]], whose replay guard matters
+    * most here: double-counting a batch would overestimate — the one CMS
+    * failure mode with no self-correction; a fresh query restarting ids
+    * at 0 is never silently dropped. */
   def streamingCmsIngest(
       stream: DataFrame,
       textCol: String,
       depth: Int,
       width: Int,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val spark = batch.sparkSession
-        Files.createDirectories(Paths.get(dir))
-        val (prior, lastId) = readVersioned(spark, dir)
-        if (batchId != lastId && !batch.isEmpty) {
-          val bs = graft.operators.Sketches.cmsSketch(
-            graft.operators.Sketches.termCounts(batch, textCol),
-            "term", "cnt", depth, width)
-          val merged = prior match {
-            case Some(p) => p.unionByName(bs)
-              .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-            case None => bs
-          }
-          val vdir = s"$dir/v$batchId"
-          merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-          val tmp = Paths.get(s"$dir/.latest.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(tmp, batchId.toString.getBytes("UTF-8"))
-          Files.move(tmp, Paths.get(s"$dir/LATEST"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          // best-effort prune of superseded versions
-          val d = new java.io.File(dir)
-          Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-            if (f.isDirectory && f.getName.startsWith("v") &&
-                f.getName != s"v$batchId")
-              scala.util.Try {
-                val walk = Files.walk(f.toPath)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .forEach(p => { Files.deleteIfExists(p); () })
-                finally walk.close()
-              }: Unit
-          }
-          ()
-        }
-      }
+    versionedIngest(stream, dir) { batch =>
+      graft.operators.Sketches.cmsSketch(
+        graft.operators.Sketches.termCounts(batch, textCol),
+        "term", "cnt", depth, width)
+    } { (prior, bs) =>
+      prior.unionByName(bs).groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
+    }
 
   /** Micro-batch incremental bottom-k (KMV) sample: every batch's rows
     * enter the min-k lattice — keep the k smallest md5-priorities ever
@@ -291,43 +255,14 @@ object Streaming {
       k: Int,
       seed: Long,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val spark = batch.sparkSession
-        Files.createDirectories(Paths.get(dir))
-        val (prior, lastId) = readVersioned(spark, dir)
-        if (batchId != lastId && !batch.isEmpty) {
-          val bs = graft.operators.Sketches.kmvSample(
-            batch.select(col(idCol).as("id"),
-              col(valueCol).cast("double").as("value")),
-            "id", "value", k, seed)
-          val merged = prior match {
-            case Some(p) => graft.operators.Sketches.kmvMergeSamples(
-              Seq(p, bs), "id", k)
-            case None => bs
-          }
-          val vdir = s"$dir/v$batchId"
-          merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-          val tmp = Paths.get(s"$dir/.latest.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(tmp, batchId.toString.getBytes("UTF-8"))
-          Files.move(tmp, Paths.get(s"$dir/LATEST"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          val d = new java.io.File(dir)
-          Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-            if (f.isDirectory && f.getName.startsWith("v") &&
-                f.getName != s"v$batchId")
-              scala.util.Try {
-                val walk = Files.walk(f.toPath)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .forEach(p => { Files.deleteIfExists(p); () })
-                finally walk.close()
-              }: Unit
-          }
-          ()
-        }
-      }
+    versionedIngest(stream, dir) { batch =>
+      graft.operators.Sketches.kmvSample(
+        batch.select(col(idCol).as("id"),
+          col(valueCol).cast("double").as("value")),
+        "id", "value", k, seed)
+    } { (prior, bs) =>
+      graft.operators.Sketches.kmvMergeSamples(Seq(prior, bs), "id", k)
+    }
 
   /** Micro-batch incremental preference-pair counts: each batch's
     * (winner, loser) duel counts merge into a persisted
@@ -344,44 +279,15 @@ object Streaming {
       winnerCol: String,
       loserCol: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val spark = batch.sparkSession
-        Files.createDirectories(Paths.get(dir))
-        val (prior, lastId) = readVersioned(spark, dir)
-        if (batchId != lastId && !batch.isEmpty) {
-          val bs = batch
-            .select(col(winnerCol).cast("string").as("w"),
-              col(loserCol).cast("string").as("l"))
-            .filter(col("w") =!= col("l"))
-            .groupBy("w", "l").agg(count(lit(1)).as("c"))
-          val merged = prior match {
-            case Some(p) => p.unionByName(bs)
-              .groupBy("w", "l").agg(sum("c").as("c"))
-            case None => bs
-          }
-          val vdir = s"$dir/v$batchId"
-          merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-          val tmp = Paths.get(s"$dir/.latest.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(tmp, batchId.toString.getBytes("UTF-8"))
-          Files.move(tmp, Paths.get(s"$dir/LATEST"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          val d = new java.io.File(dir)
-          Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-            if (f.isDirectory && f.getName.startsWith("v") &&
-                f.getName != s"v$batchId")
-              scala.util.Try {
-                val walk = Files.walk(f.toPath)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .forEach(p => { Files.deleteIfExists(p); () })
-                finally walk.close()
-              }: Unit
-          }
-          ()
-        }
-      }
+    versionedIngest(stream, dir) { batch =>
+      batch
+        .select(col(winnerCol).cast("string").as("w"),
+          col(loserCol).cast("string").as("l"))
+        .filter(col("w") =!= col("l"))
+        .groupBy("w", "l").agg(count(lit(1)).as("c"))
+    } { (prior, bs) =>
+      prior.unionByName(bs).groupBy("w", "l").agg(sum("c").as("c"))
+    }
 
   /** Micro-batch incremental table profile: each batch's MERGEABLE
     * per-column stats ([[graft.operators.Profiling.profileStats]] —
@@ -396,40 +302,11 @@ object Streaming {
       stream: DataFrame,
       cols: Seq[String],
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val spark = batch.sparkSession
-        Files.createDirectories(Paths.get(dir))
-        val (prior, lastId) = readVersioned(spark, dir)
-        if (batchId != lastId && !batch.isEmpty) {
-          val bs = graft.operators.Profiling.profileStats(batch, cols)
-          val merged = prior match {
-            case Some(p) =>
-              graft.operators.Profiling.mergeProfileStats(Seq(p, bs))
-            case None => bs
-          }
-          val vdir = s"$dir/v$batchId"
-          merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-          val tmp = Paths.get(s"$dir/.latest.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(tmp, batchId.toString.getBytes("UTF-8"))
-          Files.move(tmp, Paths.get(s"$dir/LATEST"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          val d = new java.io.File(dir)
-          Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-            if (f.isDirectory && f.getName.startsWith("v") &&
-                f.getName != s"v$batchId")
-              scala.util.Try {
-                val walk = Files.walk(f.toPath)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .forEach(p => { Files.deleteIfExists(p); () })
-                finally walk.close()
-              }: Unit
-          }
-          ()
-        }
-      }
+    versionedIngest(stream, dir) { batch =>
+      graft.operators.Profiling.profileStats(batch, cols)
+    } { (prior, bs) =>
+      graft.operators.Profiling.mergeProfileStats(Seq(prior, bs))
+    }
 
   /** Micro-batch HyperLogLog ingest: batch registers MERGE into the
     * persisted register frame by cell-wise MAX — unlike the CMS counter
@@ -443,6 +320,23 @@ object Streaming {
       valueCol: String,
       m: Int,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
+    versionedIngest(stream, dir) { batch =>
+      graft.operators.Sketches.hllRegisters(batch, Seq.empty, valueCol, m)
+    } { (prior, bs) =>
+      prior.unionByName(bs).groupBy("bucket").agg(max("M").as("M"))
+    }
+
+  /** The versioned-state commit behind the sketch ingests. Per micro-batch:
+    * `summarize` the batch, `merge` it into the persisted state, write the
+    * result to a fresh `v<batchId>` parquet dir, repoint `LATEST` via
+    * temp-file + ATOMIC_MOVE (readers never observe a half-written state;
+    * a crash before the repoint leaves the previous version live), then
+    * prune superseded versions best-effort. Replay guard as in
+    * [[streamingSinger]]: a batch id EQUAL to the committed one is the
+    * checkpoint-recovery redelivery and is skipped. */
+  private def versionedIngest(stream: DataFrame, dir: String)(
+      summarize: DataFrame => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -451,13 +345,8 @@ object Streaming {
         Files.createDirectories(Paths.get(dir))
         val (prior, lastId) = readVersioned(spark, dir)
         if (batchId != lastId && !batch.isEmpty) {
-          val bs = graft.operators.Sketches.hllRegisters(batch, Seq.empty,
-            valueCol, m)
-          val merged = prior match {
-            case Some(p) => p.unionByName(bs)
-              .groupBy("bucket").agg(max("M").as("M"))
-            case None => bs
-          }
+          val bs = summarize(batch)
+          val merged = prior.fold(bs)(merge(_, bs))
           val vdir = s"$dir/v$batchId"
           merged.coalesce(1).write.mode("overwrite").parquet(vdir)
           val tmp = Paths.get(s"$dir/.latest.tmp-${java.util.UUID.randomUUID()}")

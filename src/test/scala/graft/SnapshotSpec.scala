@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Snapshot, SnapshotStore}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
 
 class SnapshotSpec extends SparkSpec {
@@ -329,5 +330,75 @@ class SnapshotSpec extends SparkSpec {
     val full = Snapshot.scd2Intervals(log, "k", "ts", "tie", "value")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
     assert(applied === full)
+  }
+
+  test("two writers racing on one snapshot: the loser fails loudly, no rows go missing") {
+    import java.util.concurrent.TimeUnit.SECONDS
+    import scala.util.Try
+    val dir = tmpDir("snap_race_")
+    new SnapshotStore(spark, dir).write("t", Seq((0, "base")).toDF("id", "v"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    // writer A pauses right after parking the current snapshot at the lock
+    // path; writer B runs its whole write inside that window
+    conf.set("fs.file.impl", classOf[ParkPausingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val (ra, rb) =
+      try {
+        val (a, b) = (new SnapshotStore(spark, dir), new SnapshotStore(spark, dir))
+        val rowsA = Seq((1, "a")).toDF("id", "v")
+        val rowsB = Seq((2, "b")).toDF("id", "v")
+        ParkPausingFs.arm()
+        val fa = pool.submit(() => {
+          ParkPausingFs.pausing.set(Thread.currentThread())
+          Try(a.write("t", rowsA))
+        })
+        assert(ParkPausingFs.parked.await(120, SECONDS), "writer A never parked the snapshot")
+        val rb = Try(b.write("t", rowsB))
+        ParkPausingFs.resume.countDown()
+        (fa.get(120, SECONDS), rb)
+      } finally {
+        ParkPausingFs.resume.countDown()
+        pool.shutdown()
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(Seq(ra, rb).count(_.isFailure) === 1, s"exactly one writer must fail: A=$ra, B=$rb")
+    val store = new SnapshotStore(spark, dir)
+    val live = store.read("t").get.as[(Int, String)].collect().toSeq
+    assert(live === (if (ra.isSuccess) Seq((1, "a")) else Seq((2, "b"))))
+    val hidden = new java.io.File(dir, "t.snapshot.parquet").list().filter(_.startsWith("."))
+      .filterNot(_.endsWith(".crc"))
+    assert(hidden.isEmpty, s"a writer's rows hide inside the live snapshot: ${hidden.mkString(", ")}")
+    val leftover = new java.io.File(dir).list().filter(n => n.contains("tmp-") || n.contains("partial_written"))
+    assert(leftover.isEmpty, s"left behind: ${leftover.mkString(", ")}")
+    // the store stays writable
+    store.write("t", Seq((3, "c")).toDF("id", "v"))
+    assert(store.read("t").get.as[(Int, String)].collect().toSeq === Seq((3, "c")))
+  }
+}
+
+/** The local file system, pausing the armed thread once, right after it
+  * renames a snapshot to its lock path, until the test resumes it. */
+class ParkPausingFs extends LocalFileSystem {
+  override def rename(src: Path, dst: Path): Boolean = {
+    val ok = super.rename(src, dst)
+    if (ok && dst.getName.endsWith(".hg.partial_written.lock") &&
+        ParkPausingFs.pausing.compareAndSet(Thread.currentThread(), null)) {
+      ParkPausingFs.parked.countDown()
+      ParkPausingFs.resume.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    ok
+  }
+}
+
+object ParkPausingFs {
+  import java.util.concurrent.CountDownLatch
+  val pausing = new java.util.concurrent.atomic.AtomicReference[Thread]()
+  @volatile var parked = new CountDownLatch(1)
+  @volatile var resume = new CountDownLatch(1)
+  def arm(): Unit = {
+    parked = new CountDownLatch(1)
+    resume = new CountDownLatch(1)
   }
 }
