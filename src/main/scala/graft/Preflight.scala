@@ -1,10 +1,17 @@
 package graft
 
-/** Analysis-only preflight over every declared query: constructs each
-  * `SparkEntry.queries` thunk against a sf dir and forces schema resolution
-  * (Catalyst analysis, no execution). Turns the round-7 failure class —
-  * environment/testdata drift producing an AnalysisException that Verify
-  * swallowed into a silently-missing gate row — into a sub-minute red.
+/** Preflight over every declared query: runs each `SparkEntry.queries`
+  * build against a sf dir and resolves the result's schema. Turns the
+  * round-7 failure class — environment/testdata drift producing an
+  * AnalysisException that Verify swallowed into a silently-missing gate
+  * row — into a red line per query, without writing any gate output.
+  *
+  * It is not analysis-only: a build runs whatever jobs it needs to
+  * construct its frame (q08 primes its store with
+  * `Snapshot.dropRedundant(...).count()`, the index gates `add` their
+  * history, the graph gates run their driver rounds), so it costs most of
+  * a Verify's build time: about 4 min at sf0.01 on a 4-vCPU host
+  * (local[4]). Only the final frame is analysed and not run.
   *
   * Usage: runMain graft.Preflight <sfDir>    (exit 1 on any failure)
   */
@@ -16,7 +23,7 @@ object Preflight {
     var failed = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).schema // forces analysis; no job runs
+        fn(spark, sfDir).schema // the build may run jobs; the result is only analysed
         println(s"[preflight] OK   $name")
       } catch { case e: Throwable =>
         failed += 1

@@ -125,18 +125,15 @@ object Analytics {
       .groupBy("day").agg(count(lit(1)).as("n"))
       .withColumn("dow", dow)
       .localCheckpoint(false)
-    def foldDay(c: Column): Column =
-      aggregate(sort_array(collect_list(struct(col("day"), c.as("__t")))),
-        lit(0.0), (acc, x) => acc + x.getField("__t"))
     val dowMeans = daily.groupBy("dow")
-      .agg((foldDay(col("n").cast("double")) /
+      .agg((Ops.orderedSum(col("n").cast("double"), col("day")) /
         count(lit(1)).cast("double")).as("expected"))
     val resid = daily.join(broadcast(dowMeans), Seq("dow"))
       .withColumn("__r", col("n").cast("double") - col("expected"))
       .localCheckpoint(false)
     val stats = resid.agg(count(lit(1)).as("__c"),
-      foldDay(col("__r")).as("__s"),
-      foldDay(col("__r") * col("__r")).as("__s2"))
+      Ops.orderedSum(col("__r"), col("day")).as("__s"),
+      Ops.orderedSum(col("__r") * col("__r"), col("day")).as("__s2"))
     val cD = col("__c").cast("double")
     val mu = col("__s") / cD
     val sd = sqrt(greatest(col("__s2") / cD - mu * mu, lit(0.0)))
@@ -779,13 +776,8 @@ object Analytics {
         .select(col("to_type").as("t"), col("from_type"),
           ((col("pi") * col("n").cast("double")) / col("tot").cast("double"))
             .as("__c"))
-      val inflow =
-        if (deterministic)
-          flowing.groupBy("t").agg(
-            aggregate(sort_array(collect_list(struct(col("from_type"),
-              col("__c")))), lit(0.0),
-              (acc, x) => acc + x.getField("__c")).as("__in"))
-        else flowing.groupBy("t").agg(sum("__c").as("__in"))
+      val inflow = flowing.groupBy("t").agg(
+        Ops.foldSum(deterministic, col("__c"), col("from_type")).as("__in"))
       val selfMass = pi.join(outTypes, Seq("t"), "left_anti")
         .select(col("t"), col("pi").as("__s"))
       pi = types
@@ -1084,28 +1076,13 @@ object Analytics {
     val v = col(valueCol).cast("double")
     val base = df.select(col(groupCol).cast("string").as("__g"),
       col(idCol).as("__id"), v.as("__v"))
-    val perGroup =
-      if (deterministic)
-        base.groupBy("__g").agg(count(lit(1)).as("__n"),
-          aggregate(sort_array(collect_list(struct(col("__id"),
-            col("__v")))), lit(0.0),
-            (acc, x) => acc + x.getField("__v")).as("__sx"),
-          aggregate(sort_array(collect_list(struct(col("__id"),
-            (col("__v") * col("__v")).as("__v2")))), lit(0.0),
-            (acc, x) => acc + x.getField("__v2")).as("__sxx"))
-      else
-        base.groupBy("__g").agg(count(lit(1)).as("__n"),
-          sum(col("__v")).as("__sx"),
-          sum(col("__v") * col("__v")).as("__sxx"))
-    val g = perGroup.localCheckpoint(false)
-    def foldG(termCol: Column, name: String): Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__g"),
-          termCol.as("__t")))), lit(0.0),
-          (acc, x) => acc + x.getField("__t")).as(name)
-      else sum(termCol).as(name)
+    val g = base.groupBy("__g").agg(count(lit(1)).as("__n"),
+        Ops.foldSum(deterministic, col("__v"), col("__id")).as("__sx"),
+        Ops.foldSum(deterministic, col("__v") * col("__v"), col("__id"))
+          .as("__sxx"))
+      .localCheckpoint(false)
     val totals = g.agg(count(lit(1)).as("k"), sum("__n").as("n"),
-      foldG(col("__sx"), "__s")).first()
+      Ops.foldSum(deterministic, col("__sx"), col("__g")).as("__s")).first()
     val k = totals.getLong(0)
     val n = totals.getLong(1)
     val grand = totals.getDouble(2) / n.toDouble
@@ -1113,7 +1090,8 @@ object Analytics {
     val meanG = col("__sx") / nD
     val sswG = col("__sxx") - ((col("__sx") * col("__sx")) / nD)
     val ssbG = nD * ((meanG - lit(grand)) * (meanG - lit(grand)))
-    val sums = g.agg(foldG(sswG, "ssw"), foldG(ssbG, "ssb")).first()
+    val sums = g.agg(Ops.foldSum(deterministic, sswG, col("__g")).as("ssw"),
+      Ops.foldSum(deterministic, ssbG, col("__g")).as("ssb")).first()
     val ssw = sums.getDouble(0)
     val ssb = sums.getDouble(1)
     val f: Option[Double] =
@@ -1257,19 +1235,11 @@ object Analytics {
       .filter(col("__dt").isNotNull)
       .select(col(keyCol), col(tsCol), col(tieCol), col("__v"), col("__dt"),
         (col("__v") * col("__dt").cast("double")).as("__vd"))
-    val agg =
-      if (deterministic)
-        withDt.groupBy(keyCol).agg(
-          count(lit(1)).as("n_intervals"),
-          sum("__dt").as("total_micros"),
-          aggregate(sort_array(collect_list(
-            struct(col(tsCol), col(tieCol), col("__vd")))),
-            lit(0.0), (acc, x) => acc + x.getField("__vd")).as("__s"))
-      else
-        withDt.groupBy(keyCol).agg(
-          count(lit(1)).as("n_intervals"),
-          sum("__dt").as("total_micros"),
-          sum("__vd").as("__s"))
+    val agg = withDt.groupBy(keyCol).agg(
+      count(lit(1)).as("n_intervals"),
+      sum("__dt").as("total_micros"),
+      Ops.foldSum(deterministic, col("__vd"), col(tsCol), col(tieCol))
+        .as("__s"))
     agg.select(col(keyCol), col("n_intervals"), col("total_micros"),
       (col("__s") / col("total_micros").cast("double")).as("twap"))
   }
@@ -1362,11 +1332,9 @@ object Analytics {
         (((dtD * n1D) * n2D) * (ntD - dtD)) /
           ((ntD * ntD) * (ntD - lit(1.0))))
         .otherwise(lit(0.0)).as("__v"))
-    def tFold(c: Column, name: String): Column =
-      aggregate(sort_array(collect_list(struct(col("__t"), c.as("__x")))),
-        lit(0.0), (acc, x) => acc + x.getField("__x")).as(name)
     terms.agg(count(lit(1)).as("n_times"), sum("__d1").as("o1"),
-        tFold(col("__e1"), "e1"), tFold(col("__v"), "v"))
+        Ops.orderedSum(col("__e1"), col("__t")).as("e1"),
+        Ops.orderedSum(col("__v"), col("__t")).as("v"))
       .select(col("n_times"), col("o1"), col("e1"), col("v"),
         when(col("v") > 0.0,
           ((col("o1").cast("double") - col("e1")) *
@@ -1420,18 +1388,11 @@ object Analytics {
       .select(col("channel"), col("__cid"), col("__tid"),
         (lit(1.0) / col("__n").cast("double")).as("__credit"))
       .unionByName(direct)
-    val agg =
-      if (deterministic)
-        attributed.groupBy("channel").agg(
-          countDistinct(col("__cid")).as("touched_conversions"),
-          aggregate(sort_array(collect_list(
-            struct(col("__cid"), col("__tid"), col("__credit")))),
-            lit(0.0), (acc, x) => acc + x.getField("__credit")).as("credit"))
-      else
-        attributed.groupBy("channel").agg(
-          countDistinct(col("__cid")).as("touched_conversions"),
-          sum("__credit").as("credit"))
-    agg.orderBy("channel")
+    attributed.groupBy("channel").agg(
+        countDistinct(col("__cid")).as("touched_conversions"),
+        Ops.foldSum(deterministic, col("__credit"), col("__cid"), col("__tid"))
+          .as("credit"))
+      .orderBy("channel")
   }
 
   /** Cross-source quantile normalization: replace each row's value with
@@ -1543,23 +1504,11 @@ object Analytics {
     val dow = (pmod(day + lit(3L), lit(7L)) + lit(1L)).cast("int")
     val base = df.select(dow.as("__dow"), col(idCol).as("__id"),
       col(valueCol).cast("double").as("__v"))
-    val perDow =
-      if (deterministic)
-        base.groupBy("__dow").agg(count(lit(1)).as("n"),
-          aggregate(sort_array(collect_list(struct(col("__id"),
-            col("__v")))), lit(0.0),
-            (acc, x) => acc + x.getField("__v")).as("__s"))
-      else
-        base.groupBy("__dow").agg(count(lit(1)).as("n"),
-          sum("__v").as("__s"))
-    val g = perDow.localCheckpoint(false)
-    def foldD(termCol: Column): Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__dow"),
-          termCol.as("__t")))), lit(0.0),
-          (acc, x) => acc + x.getField("__t"))
-      else sum(termCol)
-    val tot = g.agg(foldD(col("__s")).as("s"), sum("n").as("n")).first()
+    val g = base.groupBy("__dow").agg(count(lit(1)).as("n"),
+        Ops.foldSum(deterministic, col("__v"), col("__id")).as("__s"))
+      .localCheckpoint(false)
+    val tot = g.agg(Ops.foldSum(deterministic, col("__s"), col("__dow")).as("s"),
+      sum("n").as("n")).first()
     val grand = tot.getDouble(0) / tot.getLong(1).toDouble
     g.select(col("__dow").as("dow"), col("n"),
         (col("__s") / col("n").cast("double")).as("mean"),
@@ -1601,16 +1550,9 @@ object Analytics {
       .map(t => (lit(t) <= h).cast("long")).reduce(_ + _)
     val terms = base.select(col("__rep"), col("__id"), w.as("__w"),
       (w.cast("double") * col("__x")).as("__wx"))
-    val agg =
-      if (deterministic)
-        terms.groupBy("__rep").agg(sum("__w").as("n_eff"),
-          aggregate(sort_array(collect_list(struct(col("__id"),
-            col("__wx")))), lit(0.0),
-            (acc, x) => acc + x.getField("__wx")).as("__s"))
-      else
-        terms.groupBy("__rep").agg(sum("__w").as("n_eff"),
-          sum("__wx").as("__s"))
-    agg.select(col("__rep").as("rep"), col("n_eff"),
+    terms.groupBy("__rep").agg(sum("__w").as("n_eff"),
+        Ops.foldSum(deterministic, col("__wx"), col("__id")).as("__s"))
+      .select(col("__rep").as("rep"), col("n_eff"),
       when(col("n_eff") > 0L,
         col("__s") / col("n_eff").cast("double")).as("wmean"))
   }
@@ -1658,15 +1600,13 @@ object Analytics {
     val scored = daily.join(prev, Seq("__day"))
       .select(col("__day"), col("__n").as("__a"), col("__f"))
       .withColumn("__err", col("__a") - col("__f"))
-    def foldDay(c: Column): Column =
-      aggregate(sort_array(collect_list(struct(col("__day"), c.as("__t")))),
-        lit(0.0), (acc, x) => acc + x.getField("__t"))
     val ape = abs(col("__err")).cast("double") / col("__a").cast("double")
     val sape = (lit(2.0) * abs(col("__err")).cast("double")) /
       (col("__a") + col("__f")).cast("double")
     scored.agg(count(lit(1)).as("days"),
         sum(abs(col("__err"))).as("__sae"), sum(col("__err")).as("__se"),
-        foldDay(ape).as("__sumApe"), foldDay(sape).as("__sumSape"))
+        Ops.orderedSum(ape, col("__day")).as("__sumApe"),
+        Ops.orderedSum(sape, col("__day")).as("__sumSape"))
       .select(col("days"),
         when(col("days") > 0L, col("__sae").cast("double") /
           col("days").cast("double")).as("mae"),
@@ -1728,18 +1668,10 @@ object Analytics {
     val rank = (offCol + coalesce(cLocal, lit(0L))).cast("double") +
       ((col("__t").cast("double") + lit(1.0)) / lit(2.0))
     val terms = vals.withColumn("__ar", col("__a").cast("double") * rank)
-    val folded =
-      if (deterministic)
-        terms.agg(
-          aggregate(sort_array(collect_list(struct(col("__v"),
-            col("__ar").as("__x")))), lit(0.0),
-            (acc, x) => acc + x.getField("__x")).as("__ra"),
-          sum(col("__t") * col("__t") * col("__t") - col("__t")).as("__tie"),
-          sum("__a").as("n_a"), sum(col("__t") - col("__a")).as("n_b"))
-      else
-        terms.agg(sum("__ar").as("__ra"),
-          sum(col("__t") * col("__t") * col("__t") - col("__t")).as("__tie"),
-          sum("__a").as("n_a"), sum(col("__t") - col("__a")).as("n_b"))
+    val folded = terms.agg(
+      Ops.foldSum(deterministic, col("__ar"), col("__v")).as("__ra"),
+      sum(col("__t") * col("__t") * col("__t") - col("__t")).as("__tie"),
+      sum("__a").as("n_a"), sum(col("__t") - col("__a")).as("n_b"))
     val naD = col("n_a").cast("double")
     val nbD = col("n_b").cast("double")
     val nD = naD + nbD
@@ -1856,16 +1788,9 @@ object Analytics {
       .select(col("__k"), col("__m"), col("__id"),
         (col("__m") - col("__prev")).as("__g"))
     val g2 = col("__g").cast("double") * col("__g").cast("double")
-    val agg =
-      if (deterministic)
-        gaps.groupBy("__k").agg(count(lit(1)).as("n_gaps"),
-          sum("__g").as("__s"),
-          aggregate(sort_array(collect_list(struct(col("__m"), col("__id"),
-            g2.as("__t")))), lit(0.0),
-            (acc, x) => acc + x.getField("__t")).as("__s2"))
-      else
-        gaps.groupBy("__k").agg(count(lit(1)).as("n_gaps"),
-          sum("__g").as("__s"), sum(g2).as("__s2"))
+    val agg = gaps.groupBy("__k").agg(count(lit(1)).as("n_gaps"),
+      sum("__g").as("__s"),
+      Ops.foldSum(deterministic, g2, col("__m"), col("__id")).as("__s2"))
     val nD = col("n_gaps").cast("double")
     val mu = col("__s").cast("double") / nD
     val sd = sqrt(greatest(col("__s2") / nD - mu * mu, lit(0.0)))
@@ -1890,17 +1815,13 @@ object Analytics {
       deterministic: Boolean = false): DataFrame = {
     val base = df.select(col(groupCol).as("__grp"), col(idCol).as("__id"),
       col(xCol).cast("double").as("__x"), col(yCol).cast("double").as("__y"))
-    def fold(termCol: Column): Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__id"),
-          termCol.as("__t")))), lit(0.0),
-          (acc, x) => acc + x.getField("__t"))
-      else sum(termCol)
+    val (x, y, id) = (col("__x"), col("__y"), col("__id"))
     val agg = base.groupBy("__grp").agg(count(lit(1)).as("n"),
-      fold(col("__x")).as("__sx"), fold(col("__y")).as("__sy"),
-      fold(col("__x") * col("__y")).as("__sxy"),
-      fold(col("__x") * col("__x")).as("__sxx"),
-      fold(col("__y") * col("__y")).as("__syy"))
+      Ops.foldSum(deterministic, x, id).as("__sx"),
+      Ops.foldSum(deterministic, y, id).as("__sy"),
+      Ops.foldSum(deterministic, x * y, id).as("__sxy"),
+      Ops.foldSum(deterministic, x * x, id).as("__sxx"),
+      Ops.foldSum(deterministic, y * y, id).as("__syy"))
     val nD = col("n").cast("double")
     val dx = nD * col("__sxx") - col("__sx") * col("__sx")
     val dy = nD * col("__syy") - col("__sy") * col("__sy")
@@ -1963,22 +1884,12 @@ object Analytics {
         sum("__n").over(org.apache.spark.sql.expressions.Window
           .partitionBy("__grp")))
     val term = share * share
-    val agg =
-      if (deterministic)
-        withTot.groupBy("__grp").agg(sum("__n").as("n"),
-          count(lit(1)).as("n_cats"),
-          (max(col("__n")).cast("double") / max(col("__t")).cast("double"))
-            .as("top_share"),
-          aggregate(sort_array(collect_list(struct(col("__c"),
-            term.as("__h")))), lit(0.0),
-            (acc, x) => acc + x.getField("__h")).as("hhi"))
-      else
-        withTot.groupBy("__grp").agg(sum("__n").as("n"),
-          count(lit(1)).as("n_cats"),
-          (max(col("__n")).cast("double") / max(col("__t")).cast("double"))
-            .as("top_share"),
-          sum(term).as("hhi"))
-    agg.select(col("__grp").as(groupCol), col("n"), col("n_cats"),
+    withTot.groupBy("__grp").agg(sum("__n").as("n"),
+        count(lit(1)).as("n_cats"),
+        (max(col("__n")).cast("double") / max(col("__t")).cast("double"))
+          .as("top_share"),
+        Ops.foldSum(deterministic, term, col("__c")).as("hhi"))
+      .select(col("__grp").as(groupCol), col("n"), col("n_cats"),
       col("top_share"), col("hhi"))
   }
 
@@ -2231,11 +2142,8 @@ object Analytics {
       .localCheckpoint(false)
     val apTerm = ((col("__dp").cast("double") * col("precision")) /
       lit(nPos.toDouble)).as("__t")
-    val ap = (if (deterministic)
-      curve.agg(aggregate(
-        sort_array(collect_list(struct(col("threshold"), apTerm))),
-        lit(0.0), (a, x) => a + x.getField("__t")))
-    else curve.agg(sum(apTerm))).first().getDouble(0)
+    val ap = curve.agg(Ops.foldSum(deterministic, apTerm, col("threshold")))
+      .first().getDouble(0)
     curve.select(col("threshold"), col("tp"), col("fp"), col("precision"),
       col("recall")).withColumn("ap", lit(ap))
   }
@@ -2350,15 +2258,10 @@ object Analytics {
       .withColumn("bin",
         least(floor(col("__s") * lit(bins.toDouble)).cast("long"),
           lit(bins - 1L)))
-    val scoreSum =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__id"), col("__s")))),
-          lit(0.0), (acc, x) => acc + x.getField("__s"))
-      else sum(col("__s"))
     val perBin = binned.groupBy("bin")
       .agg(count(lit(1)).as("n"),
         sum(when(col("__lbl"), 1L).otherwise(0L)).as("pos"),
-        scoreSum.as("__ssum"))
+        Ops.foldSum(deterministic, col("__s"), col("__id")).as("__ssum"))
       .localCheckpoint(false)
     val nTot = perBin.agg(sum("n")).first().getLong(0)
     require(nTot > 0, "no rows")
@@ -2370,8 +2273,7 @@ object Analytics {
       .select(col("bin"),
         ((col("n").cast("double") / lit(nTot.toDouble)) * col("gap"))
           .as("__t"))
-      .agg(aggregate(sort_array(collect_list(struct(col("bin"), col("__t")))),
-        lit(0.0), (acc2, x) => acc2 + x.getField("__t")))
+      .agg(Ops.orderedSum(col("__t"), col("bin")))
       .first().getDouble(0)
     curve.withColumn("ece", lit(ece))
   }
@@ -2726,12 +2628,9 @@ object Analytics {
         .otherwise((lit(sy) - col("__sy")).cast("double") /
           (lit(sx) - col("__sx")).cast("double")).as("__r"))
       .localCheckpoint(false)
-    def orderedSum(termCol: Column, name: String): Column =
-      aggregate(sort_array(collect_list(struct(col("__b"), termCol.as("__t")))),
-        lit(0.0), (acc, x) => acc + x.getField("__t")).as(name)
     val s1 = loo.agg(count(lit(1)).as("h"),
       sum(when(col("__r").isNull, 1L).otherwise(0L)).as("bad"),
-      orderedSum(col("__r"), "sr")).first()
+      Ops.orderedSum(col("__r"), col("__b")).as("sr")).first()
     val h = s1.getLong(0)
     if (h < 2 || s1.getLong(1) > 0L)
       return Seq((nRows, h)).toDF("n_rows", "h")
@@ -2740,9 +2639,9 @@ object Analytics {
           lit(null).cast("double").as("ci_lo"),
           lit(null).cast("double").as("ci_hi"))
     val rbar = s1.getDouble(2) / h.toDouble
-    val ssq = loo.agg(orderedSum(
-      (col("__r") - lit(rbar)) * (col("__r") - lit(rbar)), "ss")).first()
-      .getDouble(0)
+    val ssq = loo.agg(Ops.orderedSum(
+      (col("__r") - lit(rbar)) * (col("__r") - lit(rbar)), col("__b")))
+      .first().getDouble(0)
     val variance = (lit((h - 1).toDouble) / lit(h.toDouble)) * lit(ssq)
     Seq((nRows, h)).toDF("n_rows", "h")
       .select(col("n_rows"), col("h"), lit(ratio).as("ratio"),
@@ -2890,17 +2789,10 @@ object Analytics {
     val term = (col("__nt").cast("double") *
       (((col("__st").cast("double") / col("__nt").cast("double")) / lit(md)) -
        ((col("__sc").cast("double") / col("__nc").cast("double")) / lit(md))))
-    val folded =
-      if (deterministic)
-        matched.agg(count(lit(1)).as("n_strata"),
-          coalesce(sum("__nt"), lit(0L)).as("n_treated"),
-          coalesce(aggregate(
-            sort_array(collect_list(struct(col("__k"), term.as("__x")))),
-            lit(0.0), (a, x) => a + x.getField("__x")), lit(0.0)).as("__num"))
-      else
-        matched.agg(count(lit(1)).as("n_strata"),
-          coalesce(sum("__nt"), lit(0L)).as("n_treated"),
-          coalesce(sum(term), lit(0.0)).as("__num"))
+    val folded = matched.agg(count(lit(1)).as("n_strata"),
+      coalesce(sum("__nt"), lit(0L)).as("n_treated"),
+      coalesce(Ops.foldSum(deterministic, term, col("__k")), lit(0.0))
+        .as("__num"))
     folded.select(col("n_strata").as("n_strata_matched"),
       col("n_treated").as("n_treated_matched"),
       lit(unmatchedT).as("n_treated_unmatched"),

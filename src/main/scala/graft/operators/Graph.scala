@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -313,12 +313,8 @@ object Graph {
         .join(maybeBroadcast(ranks.withColumnRenamed("node", "src"), nNodes), "src")
         .select(col("dst").as("node"), col("src"),
           (col("rank") / col("deg")).as("c"))
-      val summed =
-        if (deterministic)
-          contribs.groupBy("node").agg(
-            aggregate(sort_array(collect_list(struct(col("src"), col("c")))),
-              lit(0.0), (acc, x) => acc + x.getField("c")).as("s"))
-        else contribs.groupBy("node").agg(sum(col("c")).as("s"))
+      val summed = contribs.groupBy("node")
+        .agg(Ops.foldSum(deterministic, col("c"), col("src")).as("s"))
       // summed is node-sized but Catalyst's aggregate estimate blocks the
       // auto-broadcast; gate on the driver-known node count (an upper
       // bound on |summed|) so the rank refresh joins broadcast-side
@@ -372,12 +368,8 @@ object Graph {
         .join(maybeBroadcast(ranks.withColumnRenamed("node", "src"), nNodes), "src")
         .select(col("dst").as("node"), col("src"),
           (col("rank") / col("deg")).as("c"))
-      val summed =
-        if (deterministic)
-          contribs.groupBy("node").agg(
-            aggregate(sort_array(collect_list(struct(col("src"), col("c")))),
-              lit(0.0), (acc, x) => acc + x.getField("c")).as("s"))
-        else contribs.groupBy("node").agg(sum(col("c")).as("s"))
+      val summed = contribs.groupBy("node")
+        .agg(Ops.foldSum(deterministic, col("c"), col("src")).as("s"))
       // same node-count broadcast gate as pageRank's rank refresh
       ranks = based.join(maybeBroadcast(summed, nNodes), Seq("node"), "left")
         .select(col("node"),
@@ -910,14 +902,8 @@ object Graph {
       deterministic: Boolean = false): DataFrame = {
     val sums = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
     hyperBallRounds(edges, srcCol, dstCol, rounds, m) { (d, est) =>
-      val agg =
-        if (deterministic)
-          est.agg(count(lit(1)).as("n"),
-            aggregate(sort_array(collect_list(struct(col("node"),
-              col("est").as("__e")))), lit(0.0),
-              (a, x) => a + x.getField("__e")).as("s"))
-        else est.agg(count(lit(1)).as("n"), sum("est").as("s"))
-      val r = agg.first()
+      val r = est.agg(count(lit(1)).as("n"),
+        Ops.foldSum(deterministic, col("est"), col("node")).as("s")).first()
       sums += ((d, r.getLong(0), r.getDouble(1)))
     }
     val nMax = sums.last._3
@@ -986,12 +972,6 @@ object Graph {
     // pays an exchange + sort of the persisted edge frame
     val nSrc = e.select("src").distinct().count()
     val nDst = e.select("dst").distinct().count()
-    def fold(keyCol: String, termCol: Column): Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col(keyCol),
-          termCol.as("__t")))), lit(0.0),
-          (acc, x) => acc + x.getField("__t"))
-      else sum(termCol)
     def l2normalize(df: DataFrame, score: String): DataFrame = {
       // lazy checkpoint BEFORE fan-out: the raw frame is read twice (norm
       // + divide) and the normalized result twice more (next phase +
@@ -999,8 +979,8 @@ object Graph {
       // work and the run goes exponential in rounds (measured: 103 s for
       // 3 rounds at sf0.1 unchecked vs ~2 s checkpointed)
       val dfc = df.localCheckpoint(false)
-      val n = dfc.agg(sqrt(fold("node", col(score) * col(score)))
-        .as("__norm"))
+      val n = dfc.agg(sqrt(Ops.foldSum(deterministic,
+        col(score) * col(score), col("node"))).as("__norm"))
       dfc.crossJoin(broadcast(n))
         .select(col("node"), (col(score) / col("__norm")).as(score))
     }
@@ -1010,11 +990,13 @@ object Graph {
     for (r <- 1 to rounds) {
       val araw = e.join(
           maybeBroadcast(hub.withColumnRenamed("node", "src"), nSrc), "src")
-        .groupBy(col("dst").as("node")).agg(fold("src", col("h")).as("a"))
+        .groupBy(col("dst").as("node"))
+        .agg(Ops.foldSum(deterministic, col("h"), col("src")).as("a"))
       auth = l2normalize(araw, "a")
       val hraw = e.join(
           maybeBroadcast(auth.withColumnRenamed("node", "dst"), nDst), "dst")
-        .groupBy(col("src").as("node")).agg(fold("dst", col("a")).as("h"))
+        .groupBy(col("src").as("node"))
+        .agg(Ops.foldSum(deterministic, col("a"), col("dst")).as("h"))
       hub = l2normalize(hraw, "h")
       if (r % checkpointInterval == 0 && r < rounds) {
         hub = hub.localCheckpoint(true)

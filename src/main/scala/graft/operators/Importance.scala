@@ -192,12 +192,8 @@ object Importance {
     val terms = a.join(b, Seq("__w"))
       .filter(col("source_a") < col("source_b"))
       .select(col("source_a"), col("source_b"), col("__w"), term.as("__t"))
-    if (deterministic)
-      terms.groupBy("source_a", "source_b").agg(
-        aggregate(sort_array(collect_list(struct(col("__w"), col("__t")))),
-          lit(0.0), (acc, x) => acc + x.getField("__t")).as("js"))
-    else
-      terms.groupBy("source_a", "source_b").agg(sum(col("__t")).as("js"))
+    terms.groupBy("source_a", "source_b")
+      .agg(Ops.foldSum(deterministic, col("__t"), col("__w")).as("js"))
   }
 
   /** Distinctive vocabulary per source: Dunning log-likelihood keyness

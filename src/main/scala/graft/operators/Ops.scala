@@ -30,6 +30,26 @@ object Ops {
     if (threshold > 0 && size <= threshold) broadcast(df) else df
   }
 
+  /** Σ `term` over the group, folded in ascending (`order`…, `term`)
+    * order: the same bits however the rows are partitioned, and the fold
+    * an ordered SQL sum replays. Like `sum`, a null term is skipped and a
+    * group with no non-null term sums to NULL. The sorted list holds the
+    * whole group in one aggregation buffer, so every caller's bound is
+    * audited in BoundednessSpec. */
+  def orderedSum(term: Column, order: Column*): Column = {
+    val fields = order.zipWithIndex.map { case (c, i) => c.as(s"__o$i") } :+
+      term.as("__t")
+    aggregate(sort_array(collect_list(when(term.isNotNull, struct(fields: _*)))),
+      lit(null).cast("double"),
+      (acc, x) => coalesce(acc, lit(0.0)) + x.getField("__t"))
+  }
+
+  /** The one deterministic/production split of a Σ: [[orderedSum]] on the
+    * gate path (bit-exact oracle replay), a plain map-side-combined `sum`
+    * in production. */
+  def foldSum(deterministic: Boolean, term: Column, order: Column*): Column =
+    if (deterministic) orderedSum(term, order: _*) else sum(term)
+
   /** list → column subset; map → select(keys ∩ columns) + rename.
     * Reference rename (pandas_utils.py:74-113). */
   def rename(df: DataFrame, targets: Seq[String]): DataFrame = {

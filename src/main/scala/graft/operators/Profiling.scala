@@ -266,8 +266,7 @@ object Profiling {
       (((cD - (nD * e)) * (cD - (nD * e))) / (nD * e)).as("__part"))
       .localCheckpoint(false)
     val chi = scored.agg(
-      aggregate(sort_array(collect_list(struct(col("digit"), col("__part")))),
-        lit(0.0), (acc, x) => acc + x.getField("__part")).as("chi2"))
+      Ops.orderedSum(col("__part"), col("digit")).as("chi2"))
     scored.crossJoin(broadcast(chi))
       .select(col("digit"), col("cnt"), col("obs_frac"), col("exp_frac"),
         col("chi2"))
@@ -540,14 +539,6 @@ object Profiling {
     val n = cells.agg(sum("__c")).first().getLong(0)
     require(n > 0, "no rows")
     val nD = lit(n.toDouble)
-    def foldTerms(terms: DataFrame, keyCols: Seq[String],
-        termCol: String): DataFrame =
-      if (deterministic)
-        terms.agg(aggregate(
-          sort_array(collect_list(struct(
-            keyCols.map(col) :+ col(termCol).as("__t"): _*))),
-          lit(0.0), (acc, x) => acc + x.getField("__t")).as("s"))
-      else terms.agg(sum(col(termCol)).as("s"))
     val pxy = col("__c").cast("double") / nD
     val px = col("__cx").cast("double") / nD
     val py = col("__cy").cast("double") / nD
@@ -556,12 +547,11 @@ object Profiling {
       .join(Ops.broadcastIfSmall(my), Seq("__y"))
       .select(col("__x"), col("__y"),
         (pxy * log(pxy / (px * py))).as("__t"))
-    val mi = foldTerms(miTerms, Seq("__x", "__y"), "__t").first().getDouble(0)
-    val hx = -foldTerms(
-      mx.select(col("__x"), (px * log(px)).as("__t")), Seq("__x"), "__t")
+    val mi = miTerms.agg(Ops.foldSum(deterministic, col("__t"), col("__x"),
+      col("__y"))).first().getDouble(0)
+    val hx = -mx.agg(Ops.foldSum(deterministic, px * log(px), col("__x")))
       .first().getDouble(0)
-    val hy = -foldTerms(
-      my.select(col("__y"), (py * log(py)).as("__t")), Seq("__y"), "__t")
+    val hy = -my.agg(Ops.foldSum(deterministic, py * log(py), col("__y")))
       .first().getDouble(0)
     val nmi = if (hx > 0.0 && hy > 0.0)
       mi / math.sqrt(hx * hy) else 0.0
@@ -640,8 +630,7 @@ object Profiling {
         ((pa - pb) * log(pa / pb)).as("__term"))
       .localCheckpoint(false)
     val psiRow = scored.agg(
-      aggregate(sort_array(collect_list(struct(col("bin"), col("__term")))),
-        lit(0.0), (acc, x) => acc + x.getField("__term")).as("psi"))
+      Ops.orderedSum(col("__term"), col("bin")).as("psi"))
     scored.crossJoin(broadcast(psiRow))
       .select(col("bin"), col("ref_cnt"), col("cur_cnt"),
         col("p_ref"), col("p_cur"), col("psi"))
@@ -766,9 +755,7 @@ object Profiling {
     val peNum = ma.join(mb, col("__a") === col("__b"))
       .select(col("__a").as("__k"),
         (col("__ca").cast("double") * col("__cb").cast("double")).as("__t"))
-      .agg(coalesce(aggregate(
-        sort_array(collect_list(struct(col("__k"), col("__t")))),
-        lit(0.0), (acc, x) => acc + x.getField("__t")), lit(0.0)))
+      .agg(coalesce(Ops.orderedSum(col("__t"), col("__k")), lit(0.0)))
       .first().getDouble(0)
     val nD = n.toDouble
     val po = diag.toDouble / nD
@@ -821,8 +808,7 @@ object Profiling {
       .select(col("__r"),
         ((col("__m").cast("double") / lit(nTot.toDouble)) *
           (col("__m").cast("double") / lit(nTot.toDouble))).as("__t"))
-      .agg(aggregate(sort_array(collect_list(struct(col("__r"), col("__t")))),
-        lit(0.0), (acc, x) => acc + x.getField("__t")))
+      .agg(Ops.orderedSum(col("__t"), col("__r")))
       .first().getDouble(0)
     val kappa: java.lang.Double =
       if (pe == 1.0) null else (pBar - pe) / (1.0 - pe)
@@ -937,17 +923,10 @@ object Profiling {
       .select(col("__x"), col("__y"), e.as("__e"),
         (((col("__c").cast("double") - e) *
           (col("__c").cast("double") - e)) / e).as("__t"))
-    def fold(termCol: String): Double = {
-      val agg0 =
-        if (deterministic)
-          terms.agg(aggregate(
-            sort_array(collect_list(struct(col("__x"), col("__y"),
-              col(termCol).as("__v")))),
-            lit(0.0), (acc, x) => acc + x.getField("__v")))
-        else terms.agg(sum(col(termCol)))
-      agg0.first().getDouble(0)
-    }
-    val chi2 = fold("__t") + (nD - fold("__e"))
+    val sums = terms.agg(
+      Ops.foldSum(deterministic, col("__t"), col("__x"), col("__y")),
+      Ops.foldSum(deterministic, col("__e"), col("__x"), col("__y"))).first()
+    val chi2 = sums.getDouble(0) + (nD - sums.getDouble(1))
     val minDim = math.min(r - 1, c - 1)
     val v: Option[Double] =
       if (minDim <= 0) None

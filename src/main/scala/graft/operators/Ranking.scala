@@ -105,10 +105,7 @@ object Ranking {
           (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("__avgdl"))))
     // order-deterministic per-doc sum: fold term-sorted contributions
     contrib.groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("term"), col("__c")))).as("__cs"))
-      .select(col(idCol),
-        aggregate(col("__cs"), lit(0.0), (acc, x) => acc + x.getField("__c"))
-          .as("bm25"))
+      .agg(Ops.orderedSum(col("__c"), col("term")).as("bm25"))
   }
 
   /** Rank the top `n` rows of `scored` by (`scoreCol` desc, id asc) as
@@ -230,10 +227,8 @@ object Ranking {
     val perQ = terms.groupBy("query_id").agg(
       count(lit(1)).as("__hits"),
       min(col("rank")).cast("long").as("__first"),
-      aggregate(sort_array(collect_list(struct(col("rank"),
-        (col("__i").cast("double") / col("rank").cast("double"))
-          .as("__t")))),
-        lit(0.0), (acc, x) => acc + x.getField("__t")).as("__apsum"))
+      Ops.orderedSum(col("__i").cast("double") / col("rank").cast("double"),
+        col("rank")).as("__apsum"))
     val nrel = relevant.groupBy("query_id").agg(count(lit(1)).as("n_rel"))
     nrel.join(perQ, Seq("query_id"), "left")
       .select(col("query_id"), col("n_rel"),
@@ -361,10 +356,9 @@ object Ranking {
         element_at(typedLit(w),
           (greatest(col("__ra"), col("__rb")) + lit(1)).cast("int"))
           .as("__w"))
-    joined.agg(count(lit(1)).as("n_shared"),
-      (lit(1.0 - p) * aggregate(
-        sort_array(collect_list(struct(col("__id"), col("__w")))),
-        lit(0.0), (acc, x) => acc + x.getField("__w"))).as("rbo"))
+    // no shared id: an empty Σ, and disjoint rankings score 0, not NULL
+    joined.agg(count(lit(1)).as("n_shared"), (lit(1.0 - p) *
+      coalesce(Ops.orderedSum(col("__w"), col("__id")), lit(0.0))).as("rbo"))
   }
 
   /** Sparse TF-IDF cosine similarity join: all document pairs whose
@@ -423,12 +417,8 @@ object Ranking {
         log(lit(nDocs.toDouble) / col("__df").cast("double")))
       .select(col("__id"), col("__term"), col("__w"), col("__df"))
       .localCheckpoint(false)
-    val norms = (if (deterministic)
-        w.groupBy("__id").agg(aggregate(
-          sort_array(collect_list(struct(col("__term"),
-            (col("__w") * col("__w")).as("__w2")))),
-          lit(0.0), (acc, x) => acc + x.getField("__w2")).as("__sq"))
-      else w.groupBy("__id").agg(sum(col("__w") * col("__w")).as("__sq")))
+    val norms = w.groupBy("__id").agg(Ops.foldSum(deterministic,
+        col("__w") * col("__w"), col("__term")).as("__sq"))
       .select(col("__id"), sqrt(col("__sq")).as("__norm"))
     val shared = w.filter(col("__df") >= 2L)
     val prods = shared
@@ -438,14 +428,9 @@ object Ranking {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("__term"),
         (col("__wa") * col("__wb")).as("__p"))
-    val dots = (if (deterministic)
-        prods.groupBy("id_a", "id_b").agg(
-          aggregate(sort_array(collect_list(struct(col("__term"), col("__p")))),
-            lit(0.0), (acc, x) => acc + x.getField("__p")).as("__dot"),
-          count(lit(1)).as("n_shared"))
-      else prods.groupBy("id_a", "id_b").agg(sum(col("__p")).as("__dot"),
-        count(lit(1)).as("n_shared")))
-    dots
+    prods.groupBy("id_a", "id_b")
+      .agg(Ops.foldSum(deterministic, col("__p"), col("__term")).as("__dot"),
+        count(lit(1)).as("n_shared"))
       .join(Ops.broadcastIfSmall(
         norms.select(col("__id").as("id_a"), col("__norm").as("__na"))), Seq("id_a"))
       .join(Ops.broadcastIfSmall(

@@ -493,15 +493,10 @@ object Similarity {
         posexplode(col(vecCol)).as(Seq("__d0", "__v")))
       .select(col("__id"), (col("__d0") + 1).as("dim"),
         col("__v").cast(DoubleType).as("__v"))
-    def fold(termCol: Column): Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__id"),
-          termCol.as("__t")))), lit(0.0),
-          (acc, x) => acc + x.getField("__t"))
-      else sum(termCol)
     val agg = base.groupBy("dim").agg(count(lit(1)).as("n"),
-      fold(col("__v")).as("__s"),
-      fold(col("__v") * col("__v")).as("__s2"))
+      Ops.foldSum(deterministic, col("__v"), col("__id")).as("__s"),
+      Ops.foldSum(deterministic, col("__v") * col("__v"), col("__id"))
+        .as("__s2"))
     val nD = col("n").cast(DoubleType)
     val mean = col("__s") / nD
     agg.select(col("dim"), col("n"), mean.as("mean"),
@@ -544,17 +539,10 @@ object Similarity {
         vector_dot(cut(col("__vb")), cut(col("__vb"))) > 0.0
       val err = abs(cosAt(None) - cosAt(Some(d)))
       val base = pairs.filter(ok).select(col("__ida"), err.as("__e"))
-      val agg =
-        if (deterministic)
-          base.agg(count(lit(1)).as("n_pairs"),
-            aggregate(sort_array(collect_list(struct(col("__ida"),
-              col("__e").as("__t")))), lit(0.0),
-              (acc, x) => acc + x.getField("__t")).as("__s"),
-            max("__e").as("max_abs_err"))
-        else
-          base.agg(count(lit(1)).as("n_pairs"), sum("__e").as("__s"),
-            max("__e").as("max_abs_err"))
-      agg.select(lit(d).as("dim"), col("n_pairs"),
+      base.agg(count(lit(1)).as("n_pairs"),
+          Ops.foldSum(deterministic, col("__e"), col("__ida")).as("__s"),
+          max("__e").as("max_abs_err"))
+        .select(lit(d).as("dim"), col("n_pairs"),
         (col("__s") / col("n_pairs").cast(DoubleType)).as("mean_abs_err"),
         col("max_abs_err"))
     }.reduce(_ unionByName _)

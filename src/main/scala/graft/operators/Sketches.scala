@@ -158,14 +158,13 @@ object Sketches {
       m: Int): DataFrame = {
     log2i(m) // validates m
     val alpha = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(m.toDouble))
-    val z = aggregate(col("__ps"), lit(0.0), (acc, x) => acc + x.getField("p")) +
-      (lit(m.toDouble) - col("__cnt"))
+    val z = col("__z") + (lit(m.toDouble) - col("__cnt"))
     val rawE = alpha * lit((m.toLong * m).toDouble) / z
     val v0 = lit(m.toDouble) - col("__cnt")
     regs
       .groupBy(groupCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("bucket"),
-          pow(lit(2.0), -col("M").cast("double")).as("p")))).as("__ps"),
+      .agg(Ops.orderedSum(pow(lit(2.0), -col("M").cast("double")), col("bucket"))
+          .as("__z"),
         count(lit(1)).as("__cnt"))
       .select((groupCols.map(col) :+
         when(rawE <= lit(2.5 * m) && v0 > lit(0.0),

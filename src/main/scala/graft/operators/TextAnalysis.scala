@@ -808,14 +808,9 @@ object TextAnalysis {
     val terms = counts.join(Ops.broadcastIfSmall(totals), Seq("__g"))
       .select(col("__g"), col("__w"), term.as("__t"),
         col("__n"), col("__v"))
-    val summed =
-      if (deterministic)
-        terms.groupBy("__g", "__n", "__v").agg(
-          aggregate(sort_array(collect_list(struct(col("__w"), col("__t")))),
-            lit(0.0), (acc, x) => acc + x.getField("__t")).as("__s"))
-      else
-        terms.groupBy("__g", "__n", "__v").agg(sum("__t").as("__s"))
-    summed.select(col("__g").as("group"),
+    terms.groupBy("__g", "__n", "__v")
+      .agg(Ops.foldSum(deterministic, col("__t"), col("__w")).as("__s"))
+      .select(col("__g").as("group"),
       col("__n").as("n_tokens"), col("__v").as("n_types"),
       (col("__v").cast("double") / col("__n").cast("double")).as("ttr"),
       (-col("__s")).as("entropy"),
@@ -852,15 +847,12 @@ object TextAnalysis {
         log(col("__rank").cast("double")).as("__x"),
         log(col("__c").cast("double")).as("__y"))
       .localCheckpoint(false)
-    def sumOf(e: Column, name: String): Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__rank"), e.as("__v")))),
-          lit(0.0), (acc, x) => acc + x.getField("__v")).as(name)
-      else sum(e).as(name)
+    val (x, y, rank) = (col("__x"), col("__y"), col("__rank"))
     val sums = top.agg(count(lit(1)).as("__n"),
-      sumOf(col("__x"), "__sx"), sumOf(col("__y"), "__sy"),
-      sumOf(col("__x") * col("__y"), "__sxy"),
-      sumOf(col("__x") * col("__x"), "__sxx"))
+      Ops.foldSum(deterministic, x, rank).as("__sx"),
+      Ops.foldSum(deterministic, y, rank).as("__sy"),
+      Ops.foldSum(deterministic, x * y, rank).as("__sxy"),
+      Ops.foldSum(deterministic, x * x, rank).as("__sxx"))
     val nD = col("__n").cast("double")
     val slope = ((nD * col("__sxy")) - (col("__sx") * col("__sy"))) /
       ((nD * col("__sxx")) - (col("__sx") * col("__sx")))

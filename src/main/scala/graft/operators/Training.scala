@@ -80,16 +80,8 @@ object Training {
         .select(col(idCol).as("__id"), withBias, col("__r"))
         .select(col("__e.bucket").as("bucket"), col("__id"),
           (col("__e.cnt").cast("double") * col("__r")).as("__c"))
-      val grad =
-        if (deterministic)
-          joined.groupBy("bucket")
-            .agg(sort_array(collect_list(struct(col("__id"), col("__c"))))
-              .as("__gs"))
-            .select(col("bucket"),
-              (aggregate(col("__gs"), lit(0.0),
-                (acc, x) => acc + x.getField("__c")) / lit(n)).as("__g"))
-        else
-          joined.groupBy("bucket").agg((sum(col("__c")) / lit(n)).as("__g"))
+      val grad = joined.groupBy("bucket").agg(
+        (Ops.foldSum(deterministic, col("__c"), col("__id")) / lit(n)).as("__g"))
       val g = grad.collect().map(r => r.getLong(0) -> r.getDouble(1))
       weights = g.foldLeft(weights) { case (w, (b, gb)) =>
         w + (b -> (w.getOrElse(b, 0.0) - learningRate * gb))
@@ -157,13 +149,10 @@ object Training {
       val uns = assigned.select(col("__c"), col("__id"),
         posexplode(col("__x")).as(Seq("__d", "__v")))
       val means =
+        // production takes `avg`, not a Σ, so this split is not a foldSum
         if (deterministic)
-          uns.groupBy("__c", "__d")
-            .agg(sort_array(collect_list(struct(col("__id"), col("__v"))))
-              .as("__vs"), count(lit(1)).as("__n"))
-            .select(col("__c"), col("__d"),
-              (aggregate(col("__vs"), lit(0.0),
-                (acc, x) => acc + x.getField("__v")) / col("__n")).as("__m"))
+          uns.groupBy("__c", "__d").agg(
+            (Ops.orderedSum(col("__v"), col("__id")) / count(lit(1))).as("__m"))
         else
           uns.groupBy("__c", "__d").agg(avg(col("__v")).as("__m"))
       val next = cens.map(_.clone())
@@ -209,16 +198,8 @@ object Training {
     require(dims <= 512,
       s"d=$dims: the d^2 covariance collect is driver-small only to d=512")
     val uns = e.select(col("__id"), posexplode(col("__x")).as(Seq("__d", "__v")))
-    val meanAgg =
-      if (deterministic)
-        uns.groupBy("__d")
-          .agg(sort_array(collect_list(struct(col("__id"), col("__v"))))
-            .as("__vs"))
-          .select(col("__d"),
-            (aggregate(col("__vs"), lit(0.0),
-              (acc, x) => acc + x.getField("__v")) / lit(n.toDouble)).as("__m"))
-      else
-        uns.groupBy("__d").agg((sum("__v") / lit(n.toDouble)).as("__m"))
+    val meanAgg = uns.groupBy("__d").agg((Ops.foldSum(deterministic,
+      col("__v"), col("__id")) / lit(n.toDouble)).as("__m"))
     val mu = meanAgg.collect().map(r => (r.getInt(0), r.getDouble(1)))
       .sortBy(_._1).map(_._2)
     val muLit = typedLit(mu.toSeq)
@@ -233,18 +214,8 @@ object Training {
         posexplode(col("__c")).as(Seq("__j", "__cj")))
       .select(col("__id"), col("__i"), col("__j"),
         (col("__ci") * col("__cj")).as("__p"))
-    val covAgg =
-      if (deterministic)
-        prods.groupBy("__i", "__j")
-          .agg(sort_array(collect_list(struct(col("__id"), col("__p"))))
-            .as("__ps"))
-          .select(col("__i"), col("__j"),
-            (aggregate(col("__ps"), lit(0.0),
-              (acc, x) => acc + x.getField("__p")) / lit((n - 1).toDouble))
-              .as("__cv"))
-      else
-        prods.groupBy("__i", "__j")
-          .agg((sum("__p") / lit((n - 1).toDouble)).as("__cv"))
+    val covAgg = prods.groupBy("__i", "__j").agg((Ops.foldSum(deterministic,
+      col("__p"), col("__id")) / lit((n - 1).toDouble)).as("__cv"))
     val cm = Array.ofDim[Double](dims, dims)
     covAgg.collect().foreach(r => cm(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
     // power iteration on the driver — d×d, fixed index order (ascending
@@ -326,12 +297,8 @@ object Training {
     val terms = e.join(cells, Seq("__dim"))
       .select(col("__id"), col("__c"), col("__dim"),
         ((col("__v") - col("__cv")) * (col("__v") - col("__cv"))).as("__t"))
-    val d2 =
-      if (deterministic)
-        terms.groupBy("__id", "__c").agg(aggregate(
-          sort_array(collect_list(struct(col("__dim"), col("__t")))),
-          lit(0.0), (acc, x) => acc + x.getField("__t")).as("__d2"))
-      else terms.groupBy("__id", "__c").agg(sum("__t").as("__d2"))
+    val d2 = terms.groupBy("__id", "__c").agg(
+      Ops.foldSum(deterministic, col("__t"), col("__dim")).as("__d2"))
     val perId = d2.groupBy("__id")
       .agg(sort_array(collect_list(struct(col("__d2"), col("__c"))))
         .as("__arr"))
@@ -343,15 +310,11 @@ object Training {
         when(greatest(col("__a"), col("__b")) === 0.0, lit(0.0))
           .otherwise((col("__b") - col("__a")) /
             greatest(col("__a"), col("__b"))))
-    def meanOf(c: String): org.apache.spark.sql.Column =
-      if (deterministic)
-        aggregate(sort_array(collect_list(struct(col("__id"), col(c)))),
-          lit(0.0), (acc, x) => acc + x.getField(c)) /
-          count(lit(1)).cast("double")
-      else sum(col(c)) / count(lit(1)).cast("double")
-    perId.groupBy("cluster")
-      .agg(count(lit(1)).as("n"), meanOf("__a").as("mean_dist"),
-        meanOf("__s").as("mean_silhouette"))
+    val nD = count(lit(1)).cast("double")
+    perId.groupBy("cluster").agg(count(lit(1)).as("n"),
+      (Ops.foldSum(deterministic, col("__a"), col("__id")) / nD).as("mean_dist"),
+      (Ops.foldSum(deterministic, col("__s"), col("__id")) / nD)
+        .as("mean_silhouette"))
   }
 
   /** Isotonic calibration (pool-adjacent-violators) of a score against a
@@ -590,17 +553,6 @@ object Training {
       .localCheckpoint(true)
     val nItems = items.count()
     require(nItems >= 2, s"need >= 2 items with matches, got $nItems")
-    def fold(df2: DataFrame, keyCols: Seq[String],
-        ord: org.apache.spark.sql.Column, term: org.apache.spark.sql.Column,
-        name: String): DataFrame = {
-      val agg =
-        if (deterministic)
-          aggregate(sort_array(collect_list(struct(ord, term.as("__x")))),
-            lit(0.0), (a, x) => a + x.getField("__x"))
-        else sum(term)
-      if (keyCols.isEmpty) df2.agg(agg.as(name))
-      else df2.groupBy(keyCols.map(col): _*).agg(agg.as(name))
-    }
     var theta = items.select(col("__i"), lit(1.0).as("__th"))
       .localCheckpoint(true)
     (1 to rounds).foreach { _ =>
@@ -612,14 +564,15 @@ object Training {
         .select(col("__i"), col("__j"),
           (col("__n").cast("double") / (col("__th") + col("__thj")))
             .as("__t"))
-      val d = fold(termed, Seq("__i"), col("__j"), col("__t"), "__d")
+      val d = termed.groupBy("__i")
+        .agg(Ops.foldSum(deterministic, col("__t"), col("__j")).as("__d"))
       val raw = items.join(d, Seq("__i"), "left")
         .select(col("__i"),
           when(col("__d").isNull || col("__d") === 0.0, lit(0.0))
             .otherwise(col("__wins").cast("double") / col("__d"))
             .as("__raw"))
         .localCheckpoint(true)
-      val tot = fold(raw, Nil, col("__i"), col("__raw"), "__s")
+      val tot = raw.agg(Ops.foldSum(deterministic, col("__raw"), col("__i")))
         .first().getDouble(0)
       theta = raw.select(col("__i"),
         ((col("__raw") * lit(nItems.toDouble)) / lit(tot)).as("__th"))

@@ -13,15 +13,18 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * This spec makes that failure class a RED DIFF: it greps the production
   * source for collect sites, resolves each to its enclosing `def`, and
-  * asserts the observed set exactly matches this registry. Adding a
+  * asserts the observed set exactly matches this registry. A call of the
+  * ordered-Σ primitive (`Ops.orderedSum` / `Ops.foldSum`) counts as a
+  * collect site of the def that encloses the call. Adding a
   * collect site without registering its bound here (and convincing a
   * reviewer the bound is real) fails the build. See COVERAGE.md
   * "Aggregation-buffer boundedness rule".
   *
   * Bound classes:
   *  - det-gate:  fold only under `deterministic = true` (gate/oracle
-  *               path); production takes a plain `sum` — verified by the
-  *               sibling branch in the same `if (deterministic)`.
+  *               path); production takes a plain `sum` — by construction
+  *               where the site calls `Ops.foldSum`, otherwise verified by
+  *               the sibling branch in the same `if (deterministic)`.
   *  - group:     list is bounded by a small, data-independent or
   *               contract-bounded group cardinality (bins, dims, k,
   *               registers, query terms, top-k ranks, …).
@@ -34,18 +37,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BoundednessSpec extends AnyFunSuite {
 
-  /** file#enclosingDef -> (site count, one-line bound rationale). */
-  private val registry: Map[String, (Int, String)] = Map(
+  /** file#enclosingDef -> (site count, one-line bound rationale). One def
+    * may carry several entries (one per fold it holds); their counts add. */
+  private val registry: Seq[(String, (Int, String))] = Seq(
     "Analytics.scala#anovaOneWay" -> (2, "det-gate: per-group folds; production plain sums"),
     "Analytics.scala#basketArrays" -> (1, "per-row: distinct items of ONE basket (co-occurrence q135 in-row pair source)"),
     "Analytics.scala#calibrationCurve" -> (2, "det-gate + group: bin-sized frame (bins <= `bins` param)"),
     "Analytics.scala#concentrationIndex" -> (1, "group: per-group category shares — category-cardinality frame, not rows"),
     "Analytics.scala#dayOfWeekIndex" -> (1, "group: 7 day-of-week cells per group"),
     "Analytics.scala#ewmaPerKey" -> (1, "group: one key's ordered series — documented per-key-series contract (recurrence is inherently sequential); window upstream for unbounded keys"),
-    "Analytics.scala#fold" -> (1, "det-gate: groupTrends OLS sums; production plain sums"),
-    "Analytics.scala#foldD" -> (1, "group: dayOfWeekIndex day-cardinality fold"),
-    "Analytics.scala#foldDay" -> (2, "group: seasonalAnomalies / seasonalNaiveBacktest day-cardinality folds"),
-    "Analytics.scala#foldG" -> (1, "det-gate: anovaOneWay grand fold over group-sized frame"),
+    "Analytics.scala#groupTrends" -> (5, "det-gate: groupTrends OLS sums; production plain sums"),
+    "Analytics.scala#dayOfWeekIndex" -> (1, "group: dayOfWeekIndex day-cardinality fold"),
+    "Analytics.scala#seasonalAnomalies" -> (3, "group: seasonalAnomalies / seasonalNaiveBacktest day-cardinality folds"),
+    "Analytics.scala#seasonalNaiveBacktest" -> (2, "group: seasonalAnomalies / seasonalNaiveBacktest day-cardinality folds"),
+    "Analytics.scala#anovaOneWay" -> (3, "det-gate: anovaOneWay grand fold over group-sized frame"),
     "Analytics.scala#interArrivalStats" -> (1, "det-gate: per-key gap folds; production plain sums"),
     "Analytics.scala#kaplanMeier" -> (1, "group: product over the distinct-EVENT-TIMES frame (curve granularity contract), not raw rows"),
     "Analytics.scala#linearAttribution" -> (1, "det-gate: per-channel fold; production plain sums"),
@@ -55,10 +60,10 @@ class BoundednessSpec extends AnyFunSuite {
     "Analytics.scala#stationaryDistribution" -> (1, "det-gate + group: inflow fold over the TYPE-cardinality matrix (per-to from-list <= n_types); production plain sums"),
     "Analytics.scala#topSessionPaths" -> (1, "group: one gap-delimited session's events, path truncated to maxLen (sessionize contract)"),
     "Analytics.scala#volumeAnomalies" -> (1, "group: rolling window of windowDays per-day counts"),
-    "Analytics.scala#orderedSum" -> (1, "group: jackknifeRatio H-row bucket frame (require-capped buckets <= 4096)"),
+    "Analytics.scala#jackknifeRatio" -> (2, "group: jackknifeRatio H-row bucket frame (require-capped buckets <= 4096)"),
     "Analytics.scala#prCurve" -> (1, "det-gate: AP fold over the score-cardinality frame (gates bin scores); production plain sum"),
-    "Analytics.scala#tFold" -> (1, "group: logRankTest E1/V folds over the duration-cardinality frame (kaplanMeier granularity contract: bucketed durations)"),
-    "Training.scala#fold" -> (1, "det-gate + group: bradleyTerry per-item opponent fold / item normalizer over item-cardinality frames; production plain sums"),
+    "Analytics.scala#logRankTest" -> (2, "group: logRankTest E1/V folds over the duration-cardinality frame (kaplanMeier granularity contract: bucketed durations)"),
+    "Training.scala#bradleyTerryFromCounts" -> (2, "det-gate + group: bradleyTerry per-item opponent fold / item normalizer over item-cardinality frames; production plain sums"),
     "Analytics.scala#exactMatchedATT" -> (1, "det-gate: stratum-weighted ATT fold over the strata-cardinality frame; production plain sum"),
     "Graph.scala#neighborhoodFunction" -> (1, "det-gate: HyperANF per-round sum-of-estimates fold over the node-cardinality frame; production plain sum"),
     "Profiling.scala#fleissKappa" -> (1, "group: P_e fold over the rating-category-cardinality frame (cohensKappa convention)"),
@@ -68,29 +73,31 @@ class BoundednessSpec extends AnyFunSuite {
     "Dedup.scala#stripDuplicateLines" -> (1, "per-row: one doc's own lines reassembled after dup-line removal"),
     "Dedup.scala#stripFromFlagged" -> (1, "per-row: one doc's own flagged spans/tokens reassembled"),
     "Explode.scala#compressRowsToCol" -> (1, "per-row: inverse-of-explode — one parent's child records (reference compress_rows_to_col semantics)"),
-    "Graph.scala#fold" -> (1, "det-gate: HITS per-node contribution fold (in-degree bounded); production plain sums"),
+    "Graph.scala#l2normalize" -> (3, "det-gate: HITS per-node contribution fold (in-degree bounded); production plain sums"),
     "Graph.scala#pageRankGated" -> (1, "det-gate: per-node in-degree-bounded contribution fold; production plain sums"),
     "Graph.scala#personalizedPageRank" -> (1, "det-gate: same shape as pageRank"),
     "Importance.scala#prob" -> (1, "det-gate: sourceDivergence vocabulary-sized word-sorted fold; production plain sums"),
+    "Ops.scala#orderedSum" -> (1, "primitive: the ordered Σ fold itself — each call is a site of its caller, bounded there"),
+    "Ops.scala#foldSum" -> (1, "det-gate by construction: orderedSum only when deterministic, plain sum otherwise"),
     "Mapping.scala#joinPick" -> (1, "group: is_list mapping-lookup pre-aggregation — lookup table is mapping-sized (reference pick-join semantics)"),
     "Profiling.scala#benfordCheck" -> (1, "group: 9 first-digit cells"),
     "Profiling.scala#binCounts" -> (1, "group: psi reference-decile bins"),
     "Profiling.scala#cohensKappa" -> (1, "group: rater-category contingency cells"),
-    "Profiling.scala#fold" -> (1, "group: chiSquareIndependence contingency cells"),
-    "Profiling.scala#foldTerms" -> (1, "group: mutualInformation contingency cells"),
+    "Profiling.scala#chiSquareIndependence" -> (2, "group: chiSquareIndependence contingency cells"),
+    "Profiling.scala#mutualInformation" -> (3, "group: mutualInformation contingency cells"),
     "Ranking.scala#bm25" -> (1, "group: per-doc QUERY-term contributions only (explode filtered to the literal query-term set)"),
     "Ranking.scala#evalMrrMap" -> (1, "group: per-query ranks <= k (TakeOrdered upstream)"),
     "Ranking.scala#evalRanking" -> (1, "group: per-query ranks <= k"),
     "Ranking.scala#rankBiasedOverlap" -> (1, "group: <= k depth rows per ranking pair"),
     "Ranking.scala#tfidfCosinePairs" -> (2, "group: per-doc df-PRUNED term vector (maxDf excludes hub terms)"),
     "Similarity.scala#cut" -> (1, "det-gate: truncationQuality per-pair error fold; production plain sums"),
-    "Similarity.scala#fold" -> (1, "det-gate: dimensionStats dim fold; production plain sums"),
+    "Similarity.scala#dimensionStats" -> (2, "det-gate: dimensionStats dim fold; production plain sums"),
     "Sketches.scala#hllEstimateFromRegisters" -> (1, "group: m=2^p registers per group (sketch contract)"),
     "TextAnalysis.scala#lexicalDiversity" -> (1, "det-gate: per-source folds; production plain sums"),
     "TextAnalysis.scala#perplexity" -> (1, "per-row: one doc's own bigram log-probs (doc-length bounded)"),
-    "TextAnalysis.scala#sumOf" -> (1, "det-gate: zipfSlope vocabulary-HEAD fold (rank-bounded <= maxRank)"),
+    "TextAnalysis.scala#zipfSlope" -> (4, "det-gate: zipfSlope vocabulary-HEAD fold (rank-bounded <= maxRank)"),
     "Training.scala#clusteringQualityReport" -> (2, "group: k-bounded per-cluster/centroid folds (centroid-form silhouette)"),
-    "Training.scala#meanOf" -> (1, "det-gate: clusteringQualityReport report fold over k-sized frame"),
+    "Training.scala#clusteringQualityReport" -> (2, "det-gate: clusteringQualityReport report fold over k-sized frame"),
     "Training.scala#topPrincipalComponent" -> (2, "group: d×d covariance grid cells (dims², not rows)"),
     "Training.scala#trainKMeans" -> (1, "det-gate: per-(centroid,dim) folds; production plain sums"),
     "Training.scala#trainLogistic" -> (1, "det-gate: per-bucket gradient folds (B+1 buckets); production plain sums"),
@@ -106,6 +113,8 @@ class BoundednessSpec extends AnyFunSuite {
     val root = new File("src/main/scala/graft")
     assert(root.isDirectory, s"expected to run from the repo root, cwd=${new File(".").getAbsolutePath}")
     val defRe = """\bdef (\w+)""".r
+    // each call of the ordered-Σ primitive is a collect site of its caller
+    val primitiveCallRe = """(?<!def )\b(?:orderedSum|foldSum)\(""".r
     val observed = scala.collection.mutable.Map.empty[String, Int]
     scalaFiles(root).foreach { f =>
       val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
@@ -115,22 +124,26 @@ class BoundednessSpec extends AnyFunSuite {
         defRe.findFirstMatchIn(l).foreach(m => lastDef = m.group(1))
         val s = l.trim
         val isComment = s.startsWith("*") || s.startsWith("//") || s.startsWith("/**")
-        if (!isComment && (l.contains("collect_list") || l.contains("collect_set"))) {
+        if (!isComment) {
           val k = f.getName + "#" + lastDef
-          observed(k) = observed.getOrElse(k, 0) + 1
+          val sites =
+            (if (l.contains("collect_list") || l.contains("collect_set")) 1 else 0) +
+              primitiveCallRe.findAllIn(l).size
+          if (sites > 0) observed(k) = observed.getOrElse(k, 0) + sites
         }
       }
     }
     val obs = observed.toMap
-    val unregistered = obs.keySet -- registry.keySet
-    val vanished = registry.keySet -- obs.keySet
-    val drifted = (obs.keySet & registry.keySet)
-      .filter(k => obs(k) != registry(k)._1)
+    val expected = registry.groupMapReduce(_._1)(_._2._1)(_ + _)
+    val unregistered = obs.keySet -- expected.keySet
+    val vanished = expected.keySet -- obs.keySet
+    val drifted = (obs.keySet & expected.keySet)
+      .filter(k => obs(k) != expected(k))
     assert(unregistered.isEmpty,
       s"UNREGISTERED collect sites (add a bound to BoundednessSpec + COVERAGE.md): ${unregistered.toSeq.sorted.mkString(", ")}")
     assert(vanished.isEmpty,
       s"registry entries with no matching site (stale — remove): ${vanished.toSeq.sorted.mkString(", ")}")
     assert(drifted.isEmpty,
-      s"site counts drifted (re-audit the bound): ${drifted.toSeq.sorted.map(k => s"$k obs=${obs(k)} reg=${registry(k)._1}").mkString(", ")}")
+      s"site counts drifted (re-audit the bound): ${drifted.toSeq.sorted.map(k => s"$k obs=${obs(k)} reg=${expected(k)}").mkString(", ")}")
   }
 }

@@ -84,7 +84,7 @@ class DetProdEquivalenceSpec extends SparkSpec {
       "hits", "trainLogistic", "trainKMeans", "topPrincipalComponent",
       "clusteringQualityReport", "stationaryDistribution", "prCurve",
       "bradleyTerry", "bradleyTerryFromCounts", "exactMatchedATT",
-      "neighborhoodFunction")
+      "neighborhoodFunction", "foldSum")
     val defRe = """\bdef (\w+)""".r
     val root = new java.io.File("src/main/scala/graft")
     def files(d: java.io.File): Seq[java.io.File] =
@@ -106,6 +106,24 @@ class DetProdEquivalenceSpec extends SparkSpec {
       s"deterministic signatures without an equivalence test: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
+  test("equiv: foldSum") {
+    val (d, p) = both(b => events.groupBy("event_type")
+      .agg(Ops.foldSum(b, col("value"), col("event_id")).as("s")))
+    assertEquiv("foldSum", d, p)
+  }
+  test("det and prod agree on a null term (dayOfWeekIndex)") {
+    // sf0.001 has no null value, so the other equivalence tests never
+    // feed one: a null term must be skipped on both paths, as `sum` does
+    import spark.implicits._
+    val ev = Seq((1L, "2024-01-01 10:00:00", Some(2.0)),
+        (2L, "2024-01-01 11:00:00", None),
+        (3L, "2024-01-08 09:00:00", Some(4.0)),
+        (4L, "2024-01-02 09:00:00", Some(5.0)))
+      .toDF("event_id", "ts", "value")
+    val (d, p) = both(b => Analytics.dayOfWeekIndex(ev, "ts", "event_id",
+      "value", b))
+    assertEquiv("dayOfWeekIndex with a null value", d, p)
+  }
   test("equiv: dimensionStats") {
     val (d, p) = both(b => Similarity.dimensionStats(embs, "vec_id", "embedding", b))
     assertEquiv("dimensionStats", d, p)

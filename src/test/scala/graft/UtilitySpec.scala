@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.DateUtils
-import graft.operators.Explode
+import graft.operators.{Explode, Ops}
 import graft.schema.CatalogReader
 import graft.singer.SingerWriter
 import graft.sources.GsReader
@@ -10,6 +10,41 @@ import org.apache.spark.sql.types._
 
 class UtilitySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Terms whose float sum depends on the order they are added in: group
+    * `i % 3` of 300 rows spanning 17 decades, one null term in every 50
+    * rows, and group 3 holding only a null term. */
+  private def foldInput = (0 until 300).map { i =>
+      val v = if (i % 50 == 7) None else Some(math.pow(10.0, i % 17) / (i + 3))
+      (i % 3, i.toLong, v)
+    } :+ ((3, 300L, Option.empty[Double]))
+
+  test("Ops.orderedSum: the same bits in 1 and 7 shuffled partitions, nulls skipped") {
+    val rows = foldInput
+    val df = rows.toDF("g", "id", "v")
+    def folded(parts: Int): Map[Int, java.lang.Double] =
+      df.orderBy(rand(7)).repartition(parts)
+        .groupBy("g").agg(Ops.orderedSum(col("v"), col("id")))
+        .collect().map(r => r.getInt(0) -> r.getAs[java.lang.Double](1)).toMap
+    val (one, seven) = (folded(1), folded(7))
+    assert(one === seven)
+    (0 until 3).foreach { g =>
+      val expected = rows.filter(_._1 == g).sortBy(_._2).flatMap(_._3)
+        .foldLeft(0.0)(_ + _)
+      assert(java.lang.Double.doubleToRawLongBits(one(g)) ===
+        java.lang.Double.doubleToRawLongBits(expected), s"group $g")
+    }
+    assert(one(3) === null, "a group with no non-null term sums to NULL, as sum does")
+  }
+
+  test("Ops.foldSum: production is a plain sum, the gate path the ordered fold") {
+    val df = foldInput.toDF("g", "id", "v")
+    def plan(deterministic: Boolean): String = df.groupBy("g")
+      .agg(Ops.foldSum(deterministic, col("v"), col("id")))
+      .queryExecution.executedPlan.toString
+    assert(!plan(false).contains("collect_list"), plan(false))
+    assert(plan(true).contains("collect_list"), plan(true))
+  }
 
   test("localizeDatetime coerces bad strings to null (pandas errors='coerce')") {
     val df = Seq("2024-05-23 20:01:07", "not a date", null).toDF("ts")
