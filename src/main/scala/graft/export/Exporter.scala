@@ -122,7 +122,7 @@ object Exporter {
   /** NOTE on singer defaults: `allowObjects` defaults to true here (nested
     * values stay real JSON — graft's historical behavior), and per the
     * reference's allow-objects semantics that also DROPS all-null columns
-    * (one extra aggregate pass over the full dataset, on the distributed
+    * (one extra pass over the full dataset, on the distributed
     * path too) unless nulls are kept. At large scale pass
     * `keepNullFields=true` to skip that pass and retain all-null columns,
     * or `allowObjects=false` for the reference's stringify default. */

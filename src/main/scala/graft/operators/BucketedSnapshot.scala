@@ -250,11 +250,12 @@ class BucketedSnapshotStore(
   }
 
   /** Data schema of one generation, resolved from a SINGLE bucket
-    * subdirectory (one LIST of the generation dir + one footer read —
-    * NOT a full partition discovery over up to `numBuckets` directories,
-    * which would cost seconds of object-store LISTs per point lookup at
-    * the design scale). Generations are immutable once a manifest names
-    * them, so the cache can never go stale. */
+    * subdirectory (one LIST of the generation dir + one footer read on the
+    * driver, no job — NOT a full partition discovery over up to
+    * `numBuckets` directories, which would cost seconds of object-store
+    * LISTs per point lookup at the design scale). Generations are
+    * immutable once a manifest names them, so the cache can never go
+    * stale. */
   private val genSchemaCache =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
@@ -265,7 +266,8 @@ class BucketedSnapshotStore(
         .filter(_.getName.startsWith(s"$BucketCol=")).sortBy(_.getName)
         .headOption.getOrElse(
           throw new IllegalStateException(s"generation $genPath has no bucket dirs"))
-      spark.read.parquet(bucketDir.toString).schema
+      SnapshotStore.footerSchema(fs, bucketDir)
+        .getOrElse(spark.read.parquet(bucketDir.toString).schema)
     })
 
   /** `hash()` is type-sensitive (`hash(5L) != hash(5)`), so a pk column

@@ -1,5 +1,9 @@
 package graft.operators
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -28,6 +32,20 @@ object Ops {
       case None => df.queryExecution.optimizedPlan.stats.sizeInBytes
     }
     if (threshold > 0 && size <= threshold) broadcast(df) else df
+  }
+
+  /** Runs `a` and `b` at once and returns both outcomes. The two threads
+    * are created for the call, not drawn from a shared pool, so each
+    * inherits the caller's Spark local properties (job group, tags), which
+    * a thread copies when it starts. */
+  def concurrently[A, B](a: => A, b: => B): (Try[A], Try[B]) = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val fa = Future(Try(a))
+      val fb = Future(Try(b))
+      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    } finally pool.shutdown()
   }
 
   /** Σ `term` over the group, folded in ascending (`order`…, `term`)

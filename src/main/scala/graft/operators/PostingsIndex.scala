@@ -1,9 +1,5 @@
 package graft.operators
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-import scala.util.Try
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,7 +81,7 @@ final class PostingsIndex(
       s"payload rows must be given iff the index has a payload table ($payload)")
     payload.zip(payloadRows) match {
       case Some((t, rows)) =>
-        val (commitPayload, commitPostings) = PostingsIndex.concurrently(
+        val (commitPayload, commitPostings) = Ops.concurrently(
           store.stage(t, rows, idKey, assumeUniqueKeys = true),
           store.stage(postings, postingRows, postingsPk, assumeUniqueKeys = true))
         commitPayload.get.apply()
@@ -116,7 +112,7 @@ final class PostingsIndex(
     * changed-id re-adds have distinct full pks and survive — they stay
     * harmless candidates. */
   def compact(): Unit = {
-    val (p, v) = PostingsIndex.concurrently(store.compact(postings, postingsPk),
+    val (p, v) = Ops.concurrently(store.compact(postings, postingsPk),
       payload.foreach(store.compact(_, idKey)))
     p.get
     v.get
@@ -141,20 +137,4 @@ final class PostingsIndex(
       _.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("members"))
         .filter(col("members") > maxKeySize))
       .getOrElse(spark.range(0).select((keyCols :+ "members").map(c => col("id").as(c)): _*))
-}
-
-private object PostingsIndex {
-  /** Runs `a` and `b` at once and returns both outcomes. The two threads
-    * are created for the call, not drawn from a shared pool, so each
-    * inherits the caller's Spark local properties (job group, tags), which
-    * a thread copies when it starts. */
-  def concurrently[A, B](a: => A, b: => B): (Try[A], Try[B]) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fa = Future(Try(a))
-      val fb = Future(Try(b))
-      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-    } finally pool.shutdown()
-  }
 }

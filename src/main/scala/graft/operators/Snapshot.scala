@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.PyStr
 import java.io.IOException
 import java.util.ConcurrentModificationException
+import scala.util.{Failure, Success}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -96,8 +97,11 @@ class SnapshotStore(spark: SparkSession, dir: String) {
         Some(spark.read.option("header", "true").option("inferSchema", "true")
           .csv(csvPath(name).toString))
       else None
+    // the committed footer's schema spares the reader its inference job
     def readParquet(): Option[DataFrame] =
-      if (restore(path(name))) Some(spark.read.parquet(path(name).toString))
+      if (restore(path(name)))
+        Some(SnapshotStore.footerSchema(fs, path(name)).fold(spark.read)(spark.read.schema)
+          .parquet(path(name).toString))
       else None
     markedFormat(name) match {
       case Some("csv")     => readCsv().orElse(readParquet())
@@ -123,16 +127,30 @@ class SnapshotStore(spark: SparkSession, dir: String) {
     * [[dropFinishedLock]]: it matters only if a third party crashes
     * between its two renames inside that window. */
   def write(name: String, df: DataFrame, partitions: Option[Int] = None,
-      useCsv: Boolean = false): Unit = {
+      useCsv: Boolean = false): Unit =
+    stage(name, df, partitions, useCsv).commit()
+
+  /** The write half of [[write]]: stages `df` under a fresh `.tmp-<uuid>`
+    * path and changes nothing a reader sees. The returned stage's `commit`
+    * is the rest of [[write]] (park, swap, format marker, GC); `discard`
+    * deletes the staged rows. A stage ends in exactly one of the two. */
+  private[operators] def stage(name: String, df: DataFrame, partitions: Option[Int] = None,
+      useCsv: Boolean = false): SnapshotStore.Stage = {
     fs.mkdirs(new Path(dir))
     val tmp = new Path(dir, s".${name}.snapshot.tmp-${java.util.UUID.randomUUID()}")
     val target = partitions.map(df.repartition(_)).getOrElse(df)
-    if (useCsv)
-      target.write.mode("overwrite").option("header", "true").csv(tmp.toString)
-    else
-      target.write.mode("overwrite")
-        .option("compression", "zstd") // reference uses zstd for all parquet
-        .parquet(tmp.toString)
+    try {
+      if (useCsv)
+        target.write.mode("overwrite").option("header", "true").csv(tmp.toString)
+      else
+        target.write.mode("overwrite")
+          .option("compression", "zstd") // reference uses zstd for all parquet
+          .parquet(tmp.toString)
+    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    SnapshotStore.Stage(() => commit(name, tmp, useCsv), () => fs.delete(tmp, true): Unit)
+  }
+
+  private def commit(name: String, tmp: Path, useCsv: Boolean): Unit = {
     val cur = if (useCsv) csvPath(name) else path(name)
     val lock = lockPath(cur)
     try {
@@ -167,6 +185,40 @@ class SnapshotStore(spark: SparkSession, dir: String) {
   /** Crash-injection seams for specs — no-ops in production. */
   protected def afterDataCommit(): Unit = ()
   protected def afterFormatCommit(): Unit = ()
+  /** Runs on [[Snapshot.dropRedundant]]'s delta side once the delta is
+    * materialized, while the hash snapshot is still only staged. */
+  protected[graft] def afterDeltaCheckpoint(): Unit = ()
+}
+
+object SnapshotStore {
+  /** A staged write (see [[SnapshotStore.stage]]). */
+  private[operators] final case class Stage(commit: () => Unit, discard: () => Unit)
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema of the parquet dataset at `p`, read on the driver with no
+    * job: the Spark schema in the footer of its first data file by path,
+    * the file Spark's own inference reads. Every file of a committed
+    * snapshot or generation comes from one write, so the footer always
+    * agrees with the files beside it. None when `p` holds no data file or
+    * the footer carries no Spark schema (a non-Spark writer); the caller
+    * then infers. */
+  private[operators] def footerSchema(fs: FileSystem, p: Path): Option[StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val first = fs.listStatus(p).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getPath).sortBy(_.toString).headOption
+    first.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, fs.getConf))
+      val json = try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        finally reader.close()
+      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption.collect {
+        case s: StructType => s
+      })
+    }
+  }
 }
 
 /** Incremental-state operators: snapshot upsert, row-hash CDC, id backfill.
@@ -309,11 +361,11 @@ object Snapshot {
     val df = if (pk.nonEmpty) df0.dropDuplicates(pk) else df0
     val hashed = df.withColumn("hash", rowHash(df, df.columns.toSeq))
     val hashName = s"$name.hash"
-    val prior = store.read(hashName)
+    val hashCols = (pk :+ "hash").map(col)
+    val prior = store.read(hashName).map(_.select(hashCols: _*))
     val fresh = prior match {
       case None => hashed
-      case Some(ph) =>
-        hashed.join(ph.select((pk :+ "hash").map(col): _*), (pk :+ "hash"), "left_anti")
+      case Some(ph) => hashed.join(ph, pk :+ "hash", "left_anti")
     }
     // the flag needs a pk to associate state with — the reference only
     // applies it when pk is non-empty (`updated_flag and pk`,
@@ -338,12 +390,25 @@ object Snapshot {
     // previous cache() — which pinned storage for the session — checkpoint
     // blocks are reclaimed by the ContextCleaner once the caller drops the
     // frame. The delta is changed-rows-only: batch-sized, not corpus-sized.
-    val out = flagged.localCheckpoint(true)
-    // refresh hash snapshot with this batch's hashes (upsert by pk);
-    // write() stages to tmp, so `prior`'s files stay intact during the job
-    val newHashes = hashed.select((pk :+ "hash").map(col): _*)
-    store.write(hashName, upsert(prior.map(_.select((pk :+ "hash").map(col): _*)), newHashes, pk))
-    out.drop("hash")
+    //
+    // The refreshed hash snapshot (this batch's hashes upserted by pk) is
+    // staged at the same time: staging writes a tmp dir, so `prior`'s files
+    // stay intact for the checkpoint, and the commit runs only once both
+    // sides succeeded — the ordering above holds by construction. If
+    // either side fails, nothing is committed and the staged rows go.
+    val (delta, staged) = Ops.concurrently(
+      { val out = flagged.localCheckpoint(true); store.afterDeltaCheckpoint(); out },
+      store.stage(hashName, upsert(prior, hashed.select(hashCols: _*), pk)))
+    (delta, staged) match {
+      case (Success(out), Success(stage)) =>
+        stage.commit()
+        out.drop("hash")
+      case _ =>
+        staged.foreach(_.discard())
+        val errors = Seq(delta, staged).collect { case Failure(e) => e }
+        errors.tail.foreach(errors.head.addSuppressed)
+        throw errors.head
+    }
   }
 
   /** MD5 row hash with reference-parity string assembly (sorted column

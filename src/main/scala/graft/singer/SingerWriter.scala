@@ -1,7 +1,7 @@
 package graft.singer
 
 import graft.schema.SingerSchema
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -103,15 +103,32 @@ object SingerWriter {
   }
 
   /** Drop columns that are entirely null — the reference's `allow_objects`
-    * export mode (singer.py:498-499). One cheap aggregate pass (count per
-    * column), then a projection. */
+    * export mode (singer.py:498-499). One job with no exchange: each
+    * partition folds to the set of columns it holds a non-null in (and
+    * stops reading once it has seen all of them), the driver ORs the
+    * sets, then a projection. */
   def dropAllNullColumns(df: DataFrame): DataFrame = {
-    val counts = df.select(df.columns.toIndexedSeq.map(c =>
-      count(col(s"`$c`")).as(c)): _*).first()
-    val keep = df.columns.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i) > 0 => c
+    import df.sparkSession.implicits._
+    val n = df.columns.length
+    val seen = df.select(df.columns.toIndexedSeq.map(c => col(s"`$c`").isNotNull): _*)
+      .mapPartitions(rows => nonNullColumns(n, rows)).collect()
+    val keep = df.columns.indices.filter(i => seen.exists(_(i))).map(df.columns(_))
+    df.select(keep.map(c => col(s"`$c`")): _*)
+  }
+
+  /** One partition's non-null flag per column (see [[dropAllNullColumns]]). */
+  private def nonNullColumns(n: Int, rows: Iterator[Row]): Iterator[Array[Boolean]] = {
+    val seen = new Array[Boolean](n)
+    var missing = n
+    while (missing > 0 && rows.hasNext) {
+      val r = rows.next()
+      var i = 0
+      while (i < n) {
+        if (!seen(i) && r.getBoolean(i)) { seen(i) = true; missing -= 1 }
+        i += 1
+      }
     }
-    df.select(keep.toIndexedSeq.map(c => col(s"`$c`")): _*)
+    Iterator.single(seen)
   }
 
   def schemaMessage(
@@ -225,34 +242,63 @@ object SingerWriter {
       keepNullFields: Boolean = false,
       mergeSchemaWith: Option[StructType] = None,
       recursiveTyping: Boolean = true,
-      nullMode: Option[NullMode] = None): Unit = {
+      nullMode: Option[NullMode] = None): Unit =
+    writeFile(df, stream, path, keyProperties, bookmarkProperties, schemaOverride, emitState,
+      allowObjects, keepNullFields, mergeSchemaWith, recursiveTyping, nullMode,
+      skipEmpty = false): Unit
+
+  /** [[write]] with its defaults, except that an empty `df` writes nothing
+    * at all. True if it wrote. The file is opened only once the first
+    * record is in hand, so no emptiness probe (one job) runs first. */
+  private[graft] def writeNonEmpty(df: DataFrame, stream: String, path: String,
+      keyProperties: Seq[String], nullMode: NullMode): Boolean =
+    writeFile(df, stream, path, keyProperties, Nil, None, emitState = true,
+      allowObjects = true, keepNullFields = false, None, recursiveTyping = true, Some(nullMode),
+      skipEmpty = true)
+
+  private def writeFile(
+      df: DataFrame,
+      stream: String,
+      path: String,
+      keyProperties: Seq[String],
+      bookmarkProperties: Seq[String],
+      schemaOverride: Option[StructType],
+      emitState: Boolean,
+      allowObjects: Boolean,
+      keepNullFields: Boolean,
+      mergeSchemaWith: Option[StructType],
+      recursiveTyping: Boolean,
+      nullMode: Option[NullMode],
+      skipEmpty: Boolean): Boolean = {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.{Files, Paths, StandardOpenOption => O}
+    val mode = resolveNullMode(keepNullFields, nullMode)
+    val prepared =
+      if (allowObjects) df
+      else stringifyComplexColumns(df, mode != NullMode.DropAll)
+    val base = schemaOverride.getOrElse(prepared.schema)
+    val headerSchema = mergeSchemaWith match {
+      case Some(cat) => mergeSchemas(base, cat)
+      case None      => base
+    }
+    val lines = prepared.select(
+      recordLine(prepared, stream, nullMode = Some(mode)).as("line"))
+    // toLocalIterator: one partition in driver memory at a time
+    val it = lines.toLocalIterator()
+    if (skipEmpty && !it.hasNext) return false
     val p = Paths.get(path)
     Option(p.getParent).foreach(Files.createDirectories(_))
     val appending = Files.exists(p)
     val out = Files.newBufferedWriter(p, UTF_8,
       (if (appending) Seq(O.APPEND, O.WRITE) else Seq(O.CREATE, O.TRUNCATE_EXISTING, O.WRITE)): _*)
     try {
-      val mode = resolveNullMode(keepNullFields, nullMode)
-      val prepared =
-        if (allowObjects) df
-        else stringifyComplexColumns(df, mode != NullMode.DropAll)
-      val base = schemaOverride.getOrElse(prepared.schema)
-      val headerSchema = mergeSchemaWith match {
-        case Some(cat) => mergeSchemas(base, cat)
-        case None      => base
-      }
       out.write(schemaMessage(stream, headerSchema, keyProperties, bookmarkProperties,
         recursiveTyping))
       out.write("\n")
-      val lines = prepared.select(
-        recordLine(prepared, stream, nullMode = Some(mode)).as("line"))
-      // toLocalIterator: one partition in driver memory at a time
-      val it = lines.toLocalIterator()
       while (it.hasNext) { out.write(it.next().getString(0)); out.write("\n") }
       if (emitState) { out.write(stateMessage()); out.write("\n") }
     } finally out.close()
+    true
   }
 
   /** Distributed Singer export for scale: RECORD part files written by

@@ -197,9 +197,12 @@ object Streaming {
               new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim.toLong
             ).getOrElse(-1L)
           else -1L
-        if (batchId != lastDone && !batch.isEmpty) {
-          graft.singer.SingerWriter.write(batch, streamName, path, keyProperties,
-            nullMode = Some(nullMode))
+        // an empty batch writes nothing (no emptiness probe: the writer
+        // opens the file only once a record is in hand) and leaves the
+        // marker as it was
+        if (batchId != lastDone &&
+            graft.singer.SingerWriter.writeNonEmpty(batch, streamName, path, keyProperties,
+              nullMode)) {
           val tmp = java.nio.file.Paths.get(
             path + s".batchid.tmp-${java.util.UUID.randomUUID()}")
           java.nio.file.Files.write(tmp, batchId.toString.getBytes("UTF-8"))

@@ -70,6 +70,82 @@ class SnapshotSpec extends SparkSpec {
     assert(third.toSeq === Seq((1, true), (3, false)))
   }
 
+  test("dropRedundant: a delta-side failure commits no hash snapshot and leaves no staged dir") {
+    val dir = tmpDir("cdc_fail_")
+    val store = new SnapshotStore(spark, dir)
+    Snapshot.dropRedundant(store, "s", Seq((1, "x"), (2, "y")).toDF("id", "v"), Seq("id"))
+    def hashes() = store.read("s.hash").get.orderBy("id").as[(Int, String)].collect().toSeq
+    val before = hashes()
+    // the failure lands once the delta is materialized, while the refreshed
+    // hash snapshot is at most staged
+    val failing = new SnapshotStore(spark, dir) {
+      override protected[graft] def afterDeltaCheckpoint(): Unit =
+        throw new IllegalStateException("injected delta failure")
+    }
+    val v2 = Seq((1, "x2"), (3, "z")).toDF("id", "v")
+    val e = intercept[IllegalStateException] {
+      Snapshot.dropRedundant(failing, "s", v2, Seq("id"))
+    }
+    assert(e.getMessage === "injected delta failure")
+    assert(hashes() === before, "a failed dropRedundant replaced the hash snapshot")
+    val staged = new java.io.File(dir).list().filter(_.contains(".snapshot.tmp-"))
+    assert(staged.isEmpty, s"staged rows left behind: ${staged.mkString(", ")}")
+    // nothing was recorded, so the retry still sees both rows as changes
+    assert(Snapshot.dropRedundant(store, "s", v2, Seq("id")).count() === 2)
+  }
+
+  test("read takes the committed footer's schema, equal to inference, with no job") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("s", StructType(Seq(StructField("a", LongType),
+        StructField("b", ArrayType(StringType))))),
+      StructField("arr", ArrayType(IntegerType, containsNull = false)),
+      StructField("m", MapType(StringType, DoubleType)),
+      StructField("dec", DecimalType(12, 3)),
+      StructField("d", DateType),
+      StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
+      StructField("bin", BinaryType)))
+    val kinds = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1, Row(5L, Seq("x", null)), Seq(1, 2), Map("k" -> 1.5),
+        new java.math.BigDecimal("1.250"), java.sql.Date.valueOf("2024-03-01"),
+        java.sql.Timestamp.valueOf("2024-03-01 10:11:12.345678"),
+        java.time.LocalDateTime.of(2024, 3, 1, 10, 11, 12), Array[Byte](1, 2)),
+      Row(2, null, Seq(), null, null, null, null, null, null)), schema)
+    val dir = tmpDir("snap_footer_")
+    val store = new SnapshotStore(spark, dir)
+    def check(what: String, want: DataFrame): Unit = {
+      var got: StructType = null
+      assert(jobsRun { got = store.read("t").get.schema } === 0, s"$what: read ran a job")
+      assert(got === spark.read.parquet(store.path("t").toString).schema, what)
+      assert(store.read("t").get.orderBy("id").collect().toSeq ===
+        want.orderBy("id").collect().toSeq, what)
+    }
+    store.write("t", kinds)
+    check("every column kind", kinds)
+    // a schema-changing rewrite: columns dropped, retyped and added
+    val changed = kinds.select($"id".cast(LongType).as("id"), $"m",
+      $"ts".cast(StringType).as("ts"), lit(7.5).as("extra"))
+    store.write("t", changed)
+    check("schema-changing rewrite", changed)
+    // a torn write: the complete snapshot parked at the lock path, no live
+    // snapshot beside it; read restores it
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = store.path("t")
+    assert(fs.rename(live, new Path(live.getParent, s"${live.getName}.hg.partial_written.lock")))
+    var restored: StructType = null
+    assert(jobsRun { restored = store.read("t").get.schema } === 0, "restore read ran a job")
+    assert(restored === spark.read.parquet(live.toString).schema)
+    check("torn-write restore", changed)
+    // csv -> parquet switch
+    store.write("t", kinds.select($"id", $"dec"), useCsv = true)
+    store.write("t", kinds)
+    check("csv -> parquet switch", kinds)
+  }
+
   test("row hash matches the reference's canonical form") {
     // reference get_row_hash: md5 of sorted-column non-null str(v) concat
     val df = Seq((1, "a", true, 1.5), (2, null.asInstanceOf[String], false, 2.0))

@@ -346,6 +346,38 @@ class StreamingSpec extends SparkSpec {
     assert(types().count(_ == "SCHEMA") === 3)
   }
 
+  test("streamingSinger: an empty micro-batch appends no bytes and leaves the marker") {
+    implicit val sqlCtx = spark.sqlContext
+    import java.nio.file.{Files, Paths}
+    val dir = tmpDir("stream_singer_empty_")
+    def run(mem: MemoryStream[(Int, String)], out: String, ckpt: String): Long = {
+      val q = Streaming.streamingSinger(mem.toDF.toDF("id", "v").filter($"id" > 0), "t", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q.lastProgress.numInputRows
+    }
+    val mem = MemoryStream[(Int, String)]
+    val out = s"$dir/data.singer"
+    val ckpt = tmpDir("ckpt_ss_empty_")
+    mem.addData((1, "a"))
+    run(mem, out, ckpt)
+    val bytes = Files.readAllBytes(Paths.get(out))
+    def marker(p: String) = new String(Files.readAllBytes(Paths.get(p + ".batchid")), "UTF-8")
+    assert(marker(out) === "0")
+    // batch 1 reads one row and the filter leaves none
+    mem.addData((-1, "filtered"))
+    assert(run(mem, out, ckpt) === 1)
+    assert(Files.readAllBytes(Paths.get(out)).sameElements(bytes), "an empty batch appended")
+    assert(marker(out) === "0")
+    // an empty first batch creates neither the file nor the marker
+    val other = MemoryStream[(Int, String)]
+    other.addData((-2, "filtered"))
+    val fresh = s"$dir/fresh.singer"
+    assert(run(other, fresh, tmpDir("ckpt_ss_empty_fresh_")) === 1)
+    assert(!Files.exists(Paths.get(fresh)) && !Files.exists(Paths.get(fresh + ".batchid")))
+  }
+
   test("streamingSinger survives a torn .batchid marker (at-least-once, never wedged)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Int, String)]
