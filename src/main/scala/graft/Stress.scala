@@ -155,20 +155,35 @@ object Stress {
       .select((lit(ccN) + col("c") * 10 + col("i")).as("id_a"),
         (lit(ccN) + col("c") * 10 + col("j")).as("id_b"))
     val ccEdges = ccChain.unionByName(ccCliques)
-    // default path: the 200k+45k edge set is under the driver gate —
-    // union-find closes it in milliseconds after one canonicalize+collect
-    time(s"connectedComponents chain(${ccN}) + 1000 cliques(10) [driver gate]") {
-      println("[stress]   components=" + Dedup.connectedComponents(ccEdges, maxIter = 40)
-        .select("component").distinct().count() + " (expect 1001)")
+    // the same graph with string ids: they take the same driver gate, and
+    // above it the same RDD loop on order-preserving long codes
+    val ccStringEdges = ccEdges.select(col("id_a").cast("string").as("id_a"),
+      col("id_b").cast("string").as("id_b"))
+    // each row prints the path that ran: the driver path unions the
+    // union-find labels with the residual nodes, the distributed loop ends
+    // in a join
+    def ccRow(out: DataFrame): Unit = {
+      val path = out.queryExecution.analyzed match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.Union => "driver"
+        case _ => "distributed"
+      }
+      println("[stress]   components=" + out.select("component").distinct().count() +
+        s" (expect 1001) path=$path")
     }
-    // forced distributed: the above-the-gate regime (a 10k·factor chain
-    // needs ~log2(n) alternation rounds — the default maxIter=20 is
-    // reached near factor 100, so give explicit headroom; maxIter caps
-    // cost, not correctness margin)
-    time(s"connectedComponents chain(${ccN}) + 1000 cliques(10) [forced distributed]") {
-      println("[stress]   components=" + Dedup.connectedComponents(ccEdges, maxIter = 40,
-          maxDriverEdges = 0L)
-        .select("component").distinct().count() + " (expect 1001)")
+    for ((ids, edges) <- Seq("" -> ccEdges, ", string ids" -> ccStringEdges)) {
+      // default path: the 200k+45k edge set is under the driver gate —
+      // union-find closes it in milliseconds after one canonicalize+collect
+      time(s"connectedComponents chain(${ccN}) + 1000 cliques(10)$ids [driver gate]") {
+        ccRow(Dedup.connectedComponents(edges, maxIter = 40))
+      }
+      // forced distributed: the above-the-gate regime (a 10k·factor chain
+      // needs ~log2(n) alternation rounds — the default maxIter=20 is
+      // reached near factor 100, so give explicit headroom; maxIter caps
+      // cost, not correctness margin)
+      time(s"connectedComponents chain(${ccN}) + 1000 cliques(10)$ids [forced distributed]") {
+        ccRow(Dedup.connectedComponentsGated(edges, "id_a", "id_b", maxIter = 40,
+          maxDriverEdges = 0L))
+      }
     }
 
     val orders0 = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -484,7 +499,7 @@ object Stress {
     def graphRow(name: String, dedupEdges: => DataFrame)(run: => DataFrame): Unit =
       if (selected(name)) {
         println(s"[stress] $name: edges=${dedupEdges.count()} " +
-          s"gate=${Dedup.adaptiveMaxDriverEdges()}")
+          s"gate=${DriverGraph.maxEdges()}")
         time(name) {
           val out = run
           val path = out.queryExecution.analyzed match {

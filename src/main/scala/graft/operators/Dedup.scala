@@ -1235,25 +1235,20 @@ object Dedup {
     * SIZE-GATED EXECUTION (like Spark's broadcast-join threshold): the
     * edge set an LSH near-dup stage emits is almost always tiny relative
     * to the corpus — capped band buckets bound it explicitly — so when the
-    * canonical distinct edge count is ≤ `maxDriverEdges` the closure is
-    * computed with a driver-side union-find in milliseconds: a distributed
-    * star-contraction round costs ~1 s of fixed scheduling at ANY size,
-    * and a 1M-edge graph can need 15+ of them.
+    * canonical distinct edge count fits [[DriverGraph.maxEdges]] (the
+    * driver budget the graph rounds share) and the ids are integral or
+    * default-collation strings, the closure is a driver-side union-find
+    * over the collected [[DriverGraph.LocalGraph]], in milliseconds: a
+    * distributed star-contraction round costs ~1 s of fixed scheduling at
+    * ANY size, and a 1M-edge graph can need 15+ of them.
     *
-    * The default gate (`maxDriverEdges = -1`) is MEMORY-ADAPTIVE:
-    * heap/3200 clamped to [65k, 16M] edges — i.e. a 1/16-of-heap budget at
-    * the measured ~200 B/edge worst case (boxed collect + node tables, see
-    * [[ccStarsDriver]]'s memory math). An 8 GiB driver gates at ~2.7M
-    * edges; a 512 MiB one at ~168k (≈ 34 MB peak — no OOM risk); the cap
-    * bounds union-find wall time on huge drivers. Pass an explicit
-    * positive value to pin the gate.
-    * Above the gate — or with `maxDriverEdges = 0` —
-    * integral ids take the distributed RDD loop (the one place in this
-    * library where RDDs beat DataFrames: an iterative fixpoint re-enters
-    * Catalyst analysis + AQE planning every round; the RDD rounds are
-    * plain shuffles anchored at the previous round's persisted blocks,
-    * exactly GraphX's regime). Non-integral ids (e.g. string keys) fall
-    * back to an equivalent DataFrame window loop.
+    * Above the gate, or for an id type the driver has no order for, the
+    * closure is the distributed RDD loop (the one place in this library
+    * where RDDs beat DataFrames: an iterative fixpoint re-enters Catalyst
+    * analysis + AQE planning every round; the RDD rounds are plain
+    * shuffles anchored at the previous round's persisted blocks, exactly
+    * GraphX's regime). Non-integral ids run it on dense, order-preserving
+    * long codes, decoded by a join.
     *
     * The convergence probe compares edge counts and only runs the exact
     * set-difference check when counts match (i.e. on the final round).
@@ -1266,8 +1261,14 @@ object Dedup {
       pairs: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIter: Int = 20,
-      maxDriverEdges: Long = -1L): DataFrame = {
+      maxIter: Int = 20): DataFrame =
+    connectedComponentsGated(pairs, idA, idB, maxIter, DriverGraph.maxEdges())
+
+  /** [[connectedComponents]] with an explicit driver gate;
+    * `maxDriverEdges = 0` pins the distributed loop for any graph with an
+    * edge. */
+  private[graft] def connectedComponentsGated(pairs: DataFrame, idA: String,
+      idB: String, maxIter: Int, maxDriverEdges: Long): DataFrame = {
     // lazy checkpoint: the pair frame is read up to THREE times (the
     // canonical distinct, then twice more in the residual/allNodes union
     // of both id columns) — without a plan break every read re-runs the
@@ -1281,73 +1282,71 @@ object Dedup {
     val allNodes = raw.select(col("a").as("id"))
       .union(raw.select(col("b").as("id"))).distinct()
     val idType = allNodes.schema("id").dataType
-    val integral = idType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val gate = if (maxDriverEdges < 0) adaptiveMaxDriverEdges() else maxDriverEdges
-    // converged stars: every non-min node points at its component min (min
-    // over dsts is belt-and-braces for the maxIter-partial case); minima
-    // and isolated/self-paired nodes label themselves. Needed for the
-    // DISTRIBUTED paths, whose star frames are multisets over non-min
-    // nodes only.
-    def joined(stars: DataFrame): DataFrame = {
-      val nonMin = stars.groupBy(col("src").as("id")).agg(min("dst").as("__comp"))
-      allNodes.join(nonMin, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__comp"), col("id")).as("component"))
-    }
-    if (!integral) return joined(ccStarsDf(raw, maxIter))
-    // integral ids: canonicalize + count once, then route by size. The
-    // canonical distinct runs as a Tungsten hash aggregate (codegen,
-    // UnsafeRow) — the previous RDD .distinct() paid boxed Tuple2
-    // hashing + Java serialization for the same shuffle (2× slower
-    // measured on the 1M-edge probe). Nulls cannot reach greatest/least:
-    // the null-rejecting a ≠ b filter runs first.
-    val spark = raw.sparkSession
+    val integral = DriverGraph.integral(idType)
+    val edgeType = if (integral) LongType else idType
+    // canonicalize + count once, then route by size. The canonical
+    // distinct runs as a Tungsten hash aggregate (codegen, UnsafeRow).
+    // Nulls cannot reach greatest/least: the null-rejecting a ≠ b filter
+    // runs first.
     val canonical = raw.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).cast(LongType).as("src"),
-        least(col("a"), col("b")).cast(LongType).as("dst"))
+      .select(greatest(col("a"), col("b")).cast(edgeType).as("src"),
+        least(col("a"), col("b")).cast(edgeType).as("dst"))
       .distinct()
       // lazy checkpoint, materialized by the count: pins the distinct
       // result as raw UnsafeRow blocks (no columnar re-encode) for the
       // collect/round consumers and truncates lineage
       .localCheckpoint(false)
     val edgeCount = canonical.count()
-    def edgeRdd = canonical.queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
-    try {
-      if (edgeCount <= gate) {
-        // the driver union-find emits a COMPLETE unique (node →
-        // component-min) mapping over every edge-touched node — label
-        // directly, skipping the corpus-width allNodes distinct, the
-        // groupBy and the join the distributed multiset contract needs
-        // (measured: 8.4 s → ~3 s on the 1M-edge probe). The residual
-        // (nodes seen only in self-pairs or alongside a null partner)
-        // streams through an anti-join and is tiny by construction —
-        // every a ≠ b pair lands its nodes in the UF. The stars id frame
-        // is size-GATED, not unconditionally hinted: the adaptive gate
-        // admits up to 16M edges (~32M nodes) on big-heap drivers, which
-        // can exceed what every executor should hold resident.
-        val stars = ccStarsDriver(spark, edgeRdd.collect(), idType)
-        val labeled = stars.select(col("src").as("id"), col("dst").as("component"))
+    try DriverGraph.collect(canonical, StructField("id", idType), edgeCount,
+        maxDriverEdges) match {
+      case Some(g) =>
+        // the union-find labels every edge-touched node exactly once —
+        // component minima included — so it labels directly, skipping the
+        // corpus-width allNodes distinct, the groupBy and the join the
+        // distributed multiset contract needs. The residual (nodes seen
+        // only in self-pairs or alongside a null partner) streams through
+        // an anti-join and is tiny by construction. The id side is
+        // size-GATED, not unconditionally hinted: the gate admits up to
+        // 16M edges (~32M nodes).
+        val labeled = g.components()
         val residual = raw.select(col("a").as("id"))
           .union(raw.select(col("b").as("id")))
-          .join(Ops.broadcastIfSmall(stars.select(col("src").as("id"))), Seq("id"), "left_anti")
+          .join(Ops.broadcastIfSmall(labeled.select("id")), Seq("id"), "left_anti")
           .distinct()
           .select(col("id"), col("id").as("component"))
         labeled.unionByName(residual)
-      } else {
-        val rdd = edgeRdd
-        joined(ccStarsRdd(spark, rdd, edgeCount,
-          math.max(rdd.getNumPartitions, 2), maxIter, idType))
-      }
+      case None =>
+        // converged stars: every non-min node points at its component min
+        // (min over dsts is belt-and-braces for the maxIter-partial case);
+        // minima and isolated/self-paired nodes label themselves
+        val codes = if (integral) None else Some(idCodes(canonical))
+        val edges = codes.fold(canonical)(recode(canonical, _, "id", "code"))
+          .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
+        val stars = ccStarsRdd(raw.sparkSession, edges, edgeCount,
+          math.max(edges.getNumPartitions, 2), maxIter, if (integral) idType else LongType)
+        val nonMin = codes.fold(stars)(recode(stars, _, "code", "id"))
+          .groupBy(col("src").as("id")).agg(min("dst").as("__comp"))
+        allNodes.join(nonMin, Seq("id"), "left")
+          .select(col("id"), coalesce(col("__comp"), col("id")).as("component"))
     } finally canonical.unpersist(blocking = false) // checkpoint blocks fall to the ContextCleaner
   }
 
-  /** Memory-adaptive driver-UF gate: 1/16 of the driver heap at the
-    * ~200 B/edge worst case (see [[ccStarsDriver]]), clamped to [65k, 16M]
-    * edges. Resolved at call time so `-Xmx` changes take effect. */
-  private[graft] def adaptiveMaxDriverEdges(): Long =
-    math.min(16000000L, math.max(65536L, Runtime.getRuntime.maxMemory() / 3200L))
+  /** Dense long codes for the endpoints of a (src, dst) edge frame, in
+    * Spark's order for the id type, so the smallest code is the smallest
+    * id: (id, code), materialized. */
+  private def idCodes(edges: DataFrame): DataFrame = {
+    val ids = edges.select(col("src").as("id")).union(edges.select(col("dst").as("id")))
+      .distinct().orderBy("id")
+    edges.sparkSession.createDataFrame(
+      ids.rdd.zipWithIndex().map { case (r, i) => org.apache.spark.sql.Row(r.get(0), i) },
+      ids.schema.add("code", LongType, nullable = false)).localCheckpoint(true)
+  }
+
+  /** `edges`' src and dst mapped through `codes`' `from` -> `to` columns. */
+  private def recode(edges: DataFrame, codes: DataFrame, from: String, to: String): DataFrame =
+    edges.join(codes.select(col(from).as("src"), col(to).as("__s")), "src")
+      .join(codes.select(col(from).as("dst"), col(to).as("__d")), "dst")
+      .select(col("__s").as("src"), col("__d").as("dst"))
 
   private def ccWarnMaxIter(maxIter: Int): Unit =
     org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1356,93 +1355,7 @@ object Dedup {
         "raise maxIter (rounds are logarithmic, so this indicates a " +
         "pathological graph or maxIter set very low)")
 
-  /** Driver union-find over PRIMITIVE arrays: node ids dedupe through an
-    * open-addressed long table into dense indices, the union-find runs on
-    * int arrays (path-halving + union-by-rank), and component labels come
-    * from a min-id-per-root pass, so the root convention of the
-    * distributed loops (label = component minimum) is preserved. Honest
-    * memory math at the 1M-edge default gate (≤ 2M nodes): the collected
-    * boxed tuple array ~48 MB (transient), the id table + parent/rank +
-    * label arrays ~80 MB primitive — comfortable on a default driver, and
-    * milliseconds of CPU vs 10+ distributed rounds at ~1 s of scheduling
-    * each. The output frame streams off a BROADCAST of two primitive
-    * arrays — no driver-side Row materialization. Unlike the distributed
-    * loops' star multisets, the returned (src, dst) frame is a COMPLETE
-    * UNIQUE labeling: every edge-touched node exactly once — component
-    * minima included, mapped to themselves — so callers can use it as
-    * (id, component) directly. */
-  private def ccStarsDriver(spark: SparkSession, edges: Array[(Long, Long)],
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val maxNodes = math.max(2, edges.length * 2)
-    var cap = 4
-    while (cap < maxNodes * 2) cap <<= 1 // load factor ≤ 0.5
-    val tableIds = new Array[Long](cap)
-    val tableIdx = new Array[Int](cap)
-    java.util.Arrays.fill(tableIdx, -1)
-    val nodeIds = new Array[Long](maxNodes)
-    val parent = new Array[Int](maxNodes)
-    val rank = new Array[Byte](maxNodes)
-    var nNodes = 0
-    def indexOf(id: Long): Int = {
-      var h = (java.lang.Long.hashCode(id * -7046029254386353131L)) & (cap - 1)
-      while (true) {
-        val j = tableIdx(h)
-        if (j < 0) {
-          tableIds(h) = id
-          tableIdx(h) = nNodes
-          nodeIds(nNodes) = id
-          parent(nNodes) = nNodes
-          nNodes += 1
-          return nNodes - 1
-        } else if (tableIds(h) == id) return j
-        h = (h + 1) & (cap - 1)
-      }
-      -1 // unreachable
-    }
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) {
-        parent(x) = parent(parent(x)) // path-halving
-        x = parent(x)
-      }
-      x
-    }
-    var i = 0
-    while (i < edges.length) {
-      val (a, b) = edges(i)
-      val ra = find(indexOf(a)); val rb = find(indexOf(b))
-      if (ra != rb) {
-        if (rank(ra) < rank(rb)) parent(ra) = rb
-        else if (rank(ra) > rank(rb)) parent(rb) = ra
-        else { parent(rb) = ra; rank(ra) = (rank(ra) + 1).toByte }
-      }
-      i += 1
-    }
-    // label = min node id per root (the distributed loops' convention)
-    val minOf = new Array[Long](nNodes)
-    java.util.Arrays.fill(minOf, Long.MaxValue)
-    i = 0
-    while (i < nNodes) {
-      val r = find(i)
-      if (nodeIds(i) < minOf(r)) minOf(r) = nodeIds(i)
-      i += 1
-    }
-    val labels = new Array[Long](nNodes)
-    i = 0
-    while (i < nNodes) { labels(i) = minOf(find(i)); i += 1 }
-    val ids = java.util.Arrays.copyOf(nodeIds, nNodes)
-    val bc = spark.sparkContext.broadcast((ids, labels))
-    val n = nNodes
-    val schema = StructType(Seq(
-      StructField("src", LongType), StructField("dst", LongType)))
-    val rdd = spark.sparkContext
-      .parallelize(0 until n, math.max(1, n / 250000))
-      .map(j => org.apache.spark.sql.Row(bc.value._1(j), bc.value._2(j)))
-    spark.createDataFrame(rdd, schema)
-      .select(col("src").cast(idType).as("src"), col("dst").cast(idType).as("dst"))
-  }
-
-  /** RDD star-contraction loop for integral ids above the driver gate,
+  /** RDD star-contraction loop over long ids above the driver gate,
     * returning the converged star edge set as a (src, dst) DataFrame cast
     * back to `idType`.
     *
@@ -1543,46 +1456,6 @@ object Dedup {
       .localCheckpoint(true)
     edges.unpersist(blocking = false)
     out
-  }
-
-  /** DataFrame star-contraction loop (any orderable id type). Each phase's
-    * neighborhood minimum is a window `min().over(partitionBy)` — one
-    * shuffle per phase instead of a groupBy plus both sides of a join; one
-    * eager localCheckpoint per round truncates lineage (iterative plans
-    * otherwise grow per round and re-analysis dominates). */
-  private def ccStarsDf(raw: DataFrame, maxIter: Int): DataFrame = {
-    var edges = raw.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("src"), least(col("a"), col("b")).as("dst"))
-      .distinct().localCheckpoint(true)
-    var edgeCount = edges.count()
-    var iter = 0
-    var converged = edgeCount == 0L
-    def starRound(edges: DataFrame): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      val ls = sym
-        .withColumn("m", least(min("dst").over(Window.partitionBy("src")), col("src")))
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst")) // v > u ≥ m → canonical
-        .filter(col("src") =!= col("dst"))
-      ls.withColumn("m", min("dst").over(Window.partitionBy("src")))
-        .select(
-          when(col("dst") =!= col("m"), col("dst")).otherwise(col("src")).as("src"),
-          col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-    }
-    while (iter < maxIter && !converged) {
-      val next = starRound(edges).localCheckpoint(true)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount &&
-        next.except(edges).limit(1).count() == 0L
-      edges = next
-      edgeCount = nextCount
-      iter += 1
-    }
-    if (!converged) ccWarnMaxIter(maxIter)
-    edges
   }
 
   /** Cluster-aware dedup: keep exactly one row (the minimum id) per

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Iterative graph centrality for corpus curation.
   *
@@ -93,70 +92,11 @@ object Graph {
   }
 
   // ── size-gated driver rounds ──────────────────────────────────────────
-  // On a small graph every distributed round is fixed job overhead, not
-  // data. pageRank, labelPropagation and
-  // triangleCounts share connectedComponents' driver budget
-  // (Dedup.adaptiveMaxDriverEdges: heap/3200 edges, clamped to [65k, 16M]):
-  // at or under it they collect the deduplicated edge frame once, run the
-  // rounds on primitive arrays, and return a local frame with the
-  // distributed path's columns and types.
-
-  /** A collected edge frame. Node ids map to dense indices in Spark's
-    * ascending order for the id type (UTF-8 byte order for strings), so
-    * "sorted by id" is "sorted by index" in every kernel. A null endpoint
-    * is index -1: the distributed equi-joins never match it, and the
-    * kernels skip it the same way. */
-  private final class LocalGraph(val spark: SparkSession, val node: StructField,
-      val ids: Array[Any], val hasNull: Boolean,
-      val src: Array[Int], val dst: Array[Int]) {
-    def nNodes: Int = ids.length
-
-    /** In-edges grouped by destination, sources ascending, over edges
-      * with both endpoints non-null: (offsets, sources). */
-    def inEdges: (Array[Int], Array[Int]) = {
-      val keys = src.indices.iterator.filter(i => src(i) >= 0 && dst(i) >= 0)
-        .map(i => (dst(i).toLong << 32) | src(i)).toArray
-      java.util.Arrays.sort(keys)
-      val off = new Array[Int](nNodes + 1)
-      keys.foreach(k => off((k >>> 32).toInt + 1) += 1)
-      for (v <- 0 until nNodes) off(v + 1) += off(v)
-      (off, keys.map(_.toInt))
-    }
-
-    def frame(schema: StructType, rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** Collects `e` (two id columns, already deduplicated and counted at
-    * `nEdges`) when the count fits `maxDriverEdges` and the id type has a
-    * driver ordering here (integral types; strings under the default
-    * UTF8_BINARY collation), freeing `e`'s cache; otherwise None and the
-    * caller runs its distributed rounds. Both columns are read as `node`'s
-    * type (the distributed path's widened union type). */
-  private def driverGraph(e: DataFrame, node: StructField, nEdges: Long,
-      maxDriverEdges: Long): Option[LocalGraph] = {
-    // keys compare and hash as Spark does: UTF8String is byte-ordered
-    val (key, unkey): (Any => AnyRef, AnyRef => Any) = node.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        (_.asInstanceOf[AnyRef], identity)
-      case s: StringType if s.collationId == StringType.collationId =>
-        (v => UTF8String.fromString(v.asInstanceOf[String]), _.toString)
-      case _ => return None
-    }
-    if (nEdges > maxDriverEdges) return None
-    val rows = e.select(e.columns.toSeq.map(c => col(c).cast(node.dataType)): _*)
-      .collect()
-    e.unpersist(false)
-    val keys = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
-      .filter(_ != null).map(key).toArray.distinct
-    java.util.Arrays.sort(keys)
-    val pos = new java.util.HashMap[AnyRef, Integer](keys.length * 2)
-    keys.indices.foreach(i => pos.put(keys(i), i))
-    def index(v: Any): Int = if (v == null) -1 else pos.get(key(v)).intValue
-    Some(new LocalGraph(e.sparkSession, node, keys.map(unkey),
-      rows.exists(r => r.isNullAt(0) || r.isNullAt(1)),
-      rows.map(r => index(r.get(0))), rows.map(r => index(r.get(1)))))
-  }
+  // pageRank, labelPropagation and triangleCounts take the driver path of
+  // DriverGraph (shared with connected components): at or under its edge
+  // budget they collect the deduplicated edge frame once, run the rounds
+  // on primitive arrays, and return a local frame with the distributed
+  // path's columns and types.
 
   /** The `node` column of the distributed output: both endpoint columns
     * unioned, so mixed id types widen as they do there (analysis only). */
@@ -168,7 +108,7 @@ object Graph {
     * in src order — the `deterministic = true` fold, bit for bit. An edge
     * to a null dst still counts in its source's out-degree (its mass
     * leaks, as through the distributed joins). */
-  private def driverPageRank(g: LocalGraph, rounds: Int,
+  private def driverPageRank(g: DriverGraph.LocalGraph, rounds: Int,
       damping: Double): DataFrame = {
     val n = g.nNodes
     val deg = new Array[Int](n)
@@ -186,13 +126,13 @@ object Graph {
     }
     val nullRank = if (rounds == 0) 1.0 else (1.0 - damping) + damping * 0.0
     g.frame(StructType(Seq(g.node, StructField("rank", DoubleType, false))),
-      (0 until n).map(v => Row(g.ids(v), rank(v))) ++
+      (0 until n).map(v => Row(g.id(v), rank(v))) ++
         (if (g.hasNull) Seq(Row(null, nullRank)) else Nil))
   }
 
   /** [[labelPropagation]] rounds on the driver: labels are node indices,
     * so the smallest-label tie-break is the smallest index. */
-  private def driverLabelPropagation(g: LocalGraph, rounds: Int): DataFrame = {
+  private def driverLabelPropagation(g: DriverGraph.LocalGraph, rounds: Int): DataFrame = {
     val n = g.nNodes
     val (off, in) = g.inEdges
     val cnt = new Array[Int](n)
@@ -215,7 +155,7 @@ object Graph {
       label = next
     }
     g.frame(StructType(Seq(g.node, g.node.copy(name = "label"))),
-      (0 until n).map(v => Row(g.ids(v), g.ids(label(v)))) ++
+      (0 until n).map(v => Row(g.id(v), g.id(label(v)))) ++
         (if (g.hasNull) Seq(Row(null, null)) else Nil))
   }
 
@@ -223,7 +163,7 @@ object Graph {
     * (x < y, deduplicated, no nulls): the same degree-ordered
     * compact-forward enumeration, every triangle found once at its
     * lowest-(degree, id) corner. */
-  private def driverTriangleCounts(g: LocalGraph, topK: Int): DataFrame = {
+  private def driverTriangleCounts(g: DriverGraph.LocalGraph, topK: Int): DataFrame = {
     val n = g.nNodes
     val deg = new Array[Int](n)
     g.src.foreach(deg(_) += 1)
@@ -255,7 +195,7 @@ object Graph {
     g.frame(StructType(Seq(StructField("rank", IntegerType, false), g.node,
         StructField("triangles", LongType, false),
         StructField("total", LongType, true))),
-      top.zipWithIndex.map { case (v, i) => Row(i + 1, g.ids(v), tri(v), total) })
+      top.zipWithIndex.map { case (v, i) => Row(i + 1, g.id(v), tri(v), total) })
   }
 
   /** Size-gated broadcast of a per-node state frame: post-checkpoint
@@ -284,7 +224,7 @@ object Graph {
     * Returns (node, rank).
     *
     * A graph whose deduplicated edge count fits the driver budget
-    * ([[Dedup.adaptiveMaxDriverEdges]], shared with connected components)
+    * ([[DriverGraph.maxEdges]], shared with connected components)
     * runs its rounds on the driver with the src-sorted fold, whatever
     * `deterministic` says: the same bits as the deterministic path. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -292,7 +232,7 @@ object Graph {
       deterministic: Boolean = false,
       checkpointInterval: Int = 8): DataFrame =
     pageRankGated(edges, srcCol, dstCol, rounds, damping, deterministic,
-      checkpointInterval, Dedup.adaptiveMaxDriverEdges())
+      checkpointInterval, DriverGraph.maxEdges())
 
   /** [[pageRank]] with an explicit driver gate; `maxDriverEdges = 0` pins
     * the distributed rounds for any non-empty graph. */
@@ -304,7 +244,7 @@ object Graph {
       s"damping must be in [0,1], got $damping")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
-    val local = driverGraph(e, nodeField(e), nEdges, maxDriverEdges)
+    val local = DriverGraph.collect(e, nodeField(e), nEdges, maxDriverEdges)
     if (local.nonEmpty) return driverPageRank(local.get, rounds, damping)
     val (eDeg, nodes, nNodes) = prepGraph(e)
     var ranks = nodes.withColumn("rank", lit(1.0))
@@ -403,7 +343,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, checkpointInterval: Int = 8): DataFrame =
     labelPropagationGated(edges, srcCol, dstCol, rounds, checkpointInterval,
-      Dedup.adaptiveMaxDriverEdges())
+      DriverGraph.maxEdges())
 
   /** [[labelPropagation]] with an explicit driver gate; `maxDriverEdges =
     * 0` pins the distributed rounds for any non-empty graph. */
@@ -415,7 +355,7 @@ object Graph {
     // same up-front materialization rationale as pageRank: nodes and the
     // round joins all read `e`
     val (e0, nEdges) = dedupEdges(edges, srcCol, dstCol)
-    val local = driverGraph(e0, nodeField(e0), nEdges, maxDriverEdges)
+    val local = DriverGraph.collect(e0, nodeField(e0), nEdges, maxDriverEdges)
     if (local.nonEmpty) return driverLabelPropagation(local.get, rounds)
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
@@ -547,7 +487,7 @@ object Graph {
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
       topK: Int = 10): DataFrame =
     triangleCountsGated(edges, srcCol, dstCol, topK,
-      Dedup.adaptiveMaxDriverEdges())
+      DriverGraph.maxEdges())
 
   /** [[triangleCounts]] with an explicit driver gate on the canonical edge
     * count; `maxDriverEdges = 0` pins the distributed enumeration for any
@@ -557,7 +497,7 @@ object Graph {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val e = canonicalEdges(edges, srcCol, dstCol)
     val nEdges = rowCount(e)
-    val local = driverGraph(e, e.schema("x").copy(name = "node"), nEdges,
+    val local = DriverGraph.collect(e, e.schema("x").copy(name = "node"), nEdges,
       maxDriverEdges)
     if (local.nonEmpty) return driverTriangleCounts(local.get, topK)
     val counts = nodeTriangles(e, nEdges)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PyStr
+import graft.sources.ParquetMeta
 import java.io.IOException
 import java.util.ConcurrentModificationException
 import scala.util.{Failure, Success}
@@ -106,8 +107,8 @@ class SnapshotStore(spark: SparkSession, dir: String) {
     markedFormat(name) match {
       case Some("csv")     => readCsv().orElse(readParquet())
       case Some("parquet") => readParquet().orElse(readCsv())
-      // No marker: parquet wins when both formats exist (mirrors
-      // GsReader.readSnapshot's probe order and etl_utils.py:152-178).
+      // No marker: parquet wins when both formats exist (the probe order
+      // of etl_utils.py:152-178).
       case _ => readParquet().orElse(readCsv())
     }
   }
@@ -204,20 +205,14 @@ object SnapshotStore {
     * the footer carries no Spark schema (a non-Spark writer); the caller
     * then infers. */
   private[operators] def footerSchema(fs: FileSystem, p: Path): Option[StructType] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val first = fs.listStatus(p).filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.map(_.getPath).sortBy(_.toString).headOption
-    first.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, fs.getConf))
-      val json = try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-        finally reader.close()
-      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption.collect {
+    first.flatMap(f => ParquetMeta.footerKeyValues(f, fs.getConf).get(SparkSchemaKey))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption.collect {
         case s: StructType => s
       })
-    }
   }
 }
 

@@ -1,7 +1,11 @@
 package graft.sources
 
+import graft.operators.SnapshotStore
 import graft.schema.{CatalogReader, SingerSchema}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -128,30 +132,24 @@ class GsReader(
       .orElse(catalog.get(stream).map(_.keyProperties).filter(_.nonEmpty))
       .getOrElse(Nil)
 
-  /** Load `<snapshotDir>/<stream>.snapshot.parquet` (or `.csv`), else None
-    * (reference etl_utils.py:152-178). */
-  def readSnapshot(stream: String): Option[DataFrame] = snapshotDir.flatMap { dir =>
-    val pq = new Path(s"$dir/$stream.snapshot.parquet")
-    val csv = new Path(s"$dir/$stream.snapshot.csv")
-    val sfs = pq.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (sfs.exists(pq)) Some(spark.read.parquet(pq.toString))
-    else if (sfs.exists(csv))
-      Some(spark.read.option("header", "true").option("inferSchema", "true").csv(csv.toString))
-    else None
-  }
+  /** Load the `<stream>` snapshot of `snapshotDir` (`.snapshot.parquet` or
+    * `.snapshot.csv`), else None (reference etl_utils.py:152-178). Reads
+    * through [[graft.operators.SnapshotStore.read]]: the committed format
+    * wins over a stale dataset of the other one, a torn write's parked
+    * snapshot is restored, and a parquet schema comes from the footer. */
+  def readSnapshot(stream: String): Option[DataFrame] =
+    snapshotDir.flatMap(new SnapshotStore(spark, _).read(stream))
 }
 
 /** Driver-side parquet footer reading (no data scan). */
 object ParquetMeta {
-  def keyValueMetadata(spark: SparkSession, path: String): Map[String, String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val file = HadoopInputFile.fromPath(new Path(path), conf)
-    val reader = ParquetFileReader.open(file)
-    try {
-      val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
-      Option(kv).map(_.asScala.toMap).getOrElse(Map.empty)
-    } finally reader.close()
+  def keyValueMetadata(spark: SparkSession, path: String): Map[String, String] =
+    footerKeyValues(new Path(path), spark.sparkContext.hadoopConfiguration)
+
+  /** The key-value metadata in the footer of the parquet file `file`. */
+  private[graft] def footerKeyValues(file: Path, conf: Configuration): Map[String, String] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try Option(reader.getFileMetaData.getKeyValueMetaData).map(_.asScala.toMap).getOrElse(Map.empty)
+    finally reader.close()
   }
 }

@@ -1,19 +1,24 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Dedup, Graph}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
-/** The size-gated driver rounds of pageRank, labelPropagation and
-  * triangleCounts against their distributed rounds, on seeded random
-  * graphs: same rows (doubles bit for bit against the deterministic
-  * fold) and the same schema. `maxDriverEdges` pins each
+/** The size-gated driver rounds of pageRank, labelPropagation,
+  * triangleCounts and connectedComponents against their distributed
+  * rounds, on seeded random graphs: same rows (doubles bit for bit against
+  * the deterministic fold) and the same schema. `maxDriverEdges` pins each
   * path: `Long.MaxValue` the driver, 0 the distributed rounds. */
 class GraphDriverSpec extends SparkSpec {
   import spark.implicits._
 
   private val Driver = Long.MaxValue
   private val Distributed = 0L
+  /** Jobs of a connectedComponents build and count under the gate: the
+    * canonical count, the collect, and the count's own jobs. The
+    * distributed loop runs well over this (string ids add the code
+    * assignment and its joins), so the budget also pins the driver path. */
+  private val CcJobBudget = 10
 
   /** Non-ASCII ids whose UTF-8 (Spark) and UTF-16 (`String.compareTo`)
     * orders differ: U+FF21 sorts before U+1F600 in UTF-8, after its
@@ -148,5 +153,51 @@ class GraphDriverSpec extends SparkSpec {
     assert(isLocal(Graph.triangleCounts(e, "s", "t")))
     val dbl = Seq((1.0, 2.0), (2.0, 3.0), (3.0, 1.0)).toDF("s", "t")
     assert(!isLocal(Graph.labelPropagationGated(dbl, "s", "t", 1, 8, Driver)))
+  }
+
+  private def componentsBoth(name: String, pairs: DataFrame): Map[Any, Any] = {
+    def run(gate: Long) = Dedup.connectedComponentsGated(pairs, "id_a", "id_b", 20, gate)
+    val (viaDriver, viaDistributed) = (run(Driver), run(Distributed))
+    assert(viaDriver.schema.map(f => f.name -> f.dataType) ===
+      viaDistributed.schema.map(f => f.name -> f.dataType), s"$name: schemas differ")
+    assert(rows(viaDriver) === rows(viaDistributed), s"$name: rows differ")
+    viaDriver.collect().map(r => r.get(0) -> r.get(1)).toMap
+  }
+
+  test("connectedComponents: driver union-find and distributed loop agree") {
+    for (seed <- 1 to 3) {
+      // sparse enough for several components, with self-pairs
+      val longs = componentsBoth(s"long ids seed $seed",
+        longGraph(seed, nodes = 60, edges = 40).toDF("id_a", "id_b"))
+      assert(longs.forall { case (id: Long, c: Long) => c <= id; case _ => false })
+      componentsBoth(s"string ids seed $seed", stringGraph(seed, edges = 8).toDF("id_a", "id_b"))
+      val r = new scala.util.Random(seed)
+      val mixed = Seq.fill(50)((r.nextInt(70), r.nextInt(70).toLong)).toDF("id_a", "id_b")
+      assert(componentsBoth(s"int/long seed $seed", mixed).keys.forall(_.isInstanceOf[Long]))
+    }
+    // a node seen only in a self-pair or beside a null labels itself
+    val longNulls = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 3L), (5L, 5L),
+      (7L, null), (null, 2L), (null, null), (9L, 8L)).toDF("id_a", "id_b")
+    assert(componentsBoth("long self-pairs and null partners", longNulls) ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 7L, (null, null), 8L -> 8L, 9L -> 8L))
+    val stringNulls = Seq[(String, String)](("b", "a"), ("c", null), (null, "a"), ("x", "x"))
+      .toDF("id_a", "id_b")
+    assert(componentsBoth("string self-pairs and null partners", stringNulls) ===
+      Map("a" -> "a", "b" -> "a", "c" -> "c", (null, null), "x" -> "x"))
+    // the component label is the smallest id in Spark's (UTF-8) order
+    // (String.compareTo would pick the emoji)
+    val utf8 = Seq((grin, fullwidthA)).toDF("id_a", "id_b")
+    assert(componentsBoth("UTF-8 order", utf8).values.toSet === Set(fullwidthA))
+  }
+
+  test("connectedComponents under the gate runs within its job budget") {
+    for ((name, pairs) <- Seq(
+        "long ids" -> longGraph(9, nodes = 60, edges = 40).toDF("id_a", "id_b"),
+        "string ids" -> stringGraph(9, edges = 8).toDF("id_a", "id_b"))) {
+      var n = 0L
+      val jobs = jobsRun { n = Dedup.connectedComponents(pairs).count() }
+      assert(n > 0L, name)
+      assert(jobs <= CcJobBudget, s"$name: $jobs jobs")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Analytics, Dedup, Profiling, Similarity, TextAnalysis}
+import graft.operators.{Analytics, Dedup, DriverGraph, Profiling, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 class ScaleOpsSpec extends SparkSpec {
@@ -726,7 +726,8 @@ class ScaleOpsSpec extends SparkSpec {
     // maxDriverEdges=0 forces the DISTRIBUTED loop (the round budget is
     // what's under test; the driver union-find gate would bypass it)
     val pairs = (0L until 99L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(pairs, maxIter = 7, maxDriverEdges = 0L)
+    val comp = Dedup.connectedComponentsGated(pairs, "id_a", "id_b", maxIter = 7,
+      maxDriverEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size === 100)
     assert(comp.values.forall(_ === 0L),
@@ -740,7 +741,7 @@ class ScaleOpsSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val viaDriver = Dedup.connectedComponents(pairs) // 400 edges ≪ gate
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaDistributed = Dedup.connectedComponents(pairs, maxDriverEdges = 0L)
+    val viaDistributed = Dedup.connectedComponentsGated(pairs, "id_a", "id_b", 20, 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDriver === viaDistributed)
     // labels are component minima on both paths
@@ -749,7 +750,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("adaptive driver-UF gate scales with heap and respects its clamps") {
     // formula: heap/3200 (1/16 of heap at ~200 B/edge) clamped to [65k, 16M]
-    val g = Dedup.adaptiveMaxDriverEdges()
+    val g = DriverGraph.maxEdges()
     assert(g === math.min(16000000L,
       math.max(65536L, Runtime.getRuntime.maxMemory() / 3200L)))
     // the 8 GiB test/bench JVM must gate ABOVE the 100×-stress probe's

@@ -276,6 +276,42 @@ class SnapshotSpec extends SparkSpec {
     assert(!fs.exists(new Path(dirB, "s.snapshot.parquet")))
   }
 
+  test("GsReader.readSnapshot restores a torn write's parked snapshot") {
+    val dir = tmpDir("gsr_lock_")
+    val store = new SnapshotStore(spark, dir)
+    store.write("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    // only the lock is left: the complete snapshot a crashed writer parked
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = store.path("t")
+    assert(fs.rename(live, new Path(live.getParent, s"${live.getName}.hg.partial_written.lock")))
+    val reader = new graft.sources.GsReader(spark, tmpDir("gsr_in_"), snapshotDir = Some(dir))
+    val got = reader.readSnapshot("t").map(_.orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq)
+    assert(got === Some(Seq((1, "a"), (2, "b"))))
+  }
+
+  test("GsReader.readSnapshot follows the committed format over a stale parquet dir") {
+    val dir = tmpDir("gsr_switch_")
+    val store = new SnapshotStore(spark, dir)
+    store.write("s", Seq((1, "csv1")).toDF("id", "v"), useCsv = true)
+    store.write("s", Seq((2, "pq")).toDF("id", "v"))
+    // the last csv write commits its format marker, then crashes before
+    // deleting the parquet dataset it superseded
+    val crash = new SnapshotStore(spark, dir) {
+      override protected def afterFormatCommit(): Unit =
+        throw new RuntimeException("injected crash post-marker")
+    }
+    intercept[RuntimeException] {
+      crash.write("s", Seq((3, "csv2"), (4, "csv2")).toDF("id", "v"), useCsv = true)
+    }
+    assert(store.path("s").getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(store.path("s")), "stale parquet still on disk")
+    val reader = new graft.sources.GsReader(spark, tmpDir("gsr_in_"), snapshotDir = Some(dir))
+    val got = reader.readSnapshot("s").get.orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(got === Seq((3, "csv2"), (4, "csv2")))
+  }
+
   test("mergeIdFromSnapshot backfills remote ids, keep-last per InputId") {
     val df = Seq(("r1", "e1"), ("r2", "e2"), ("r3", "e9")).toDF("row", "externalId")
     val ids = Seq(("e1", 101L), ("e1", 111L), ("e2", 102L)).toDF("InputId", "RemoteId")
