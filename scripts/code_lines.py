@@ -3,10 +3,11 @@
 comment. A line whose trimmed text starts with `//`, `*` or `/*` counts as
 a comment (Scaladoc bodies included); everything else is code.
 
-Usage: python3 scripts/code_lines.py <file>...
-Prints one `<count>  <file>` line per file, then the total when more than
-one file is given. A file that does not exist counts 0 (so a file added or
-removed by a change can be counted on both sides of it).
+Usage: python3 scripts/code_lines.py <file or dir>...
+A directory stands for every `*.scala` file under it, recursively. Prints
+one `<count>  <file>` line per file, then the total when more than one file
+is counted. A file that does not exist counts 0 (so a file added or removed
+by a change can be counted on both sides of it).
 """
 import os
 import sys
@@ -24,9 +25,17 @@ def code_lines(path):
     return n
 
 
-def main(paths):
-    if not paths:
+def expand(path):
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(path)
+                  for f in fs if f.endswith(".scala"))
+
+
+def main(args):
+    if not args:
         sys.exit(__doc__)
+    paths = [p for a in args for p in expand(a)]
     total = 0
     for p in paths:
         n = code_lines(p)

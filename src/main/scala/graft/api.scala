@@ -91,7 +91,7 @@ object api {
     // so the facade serializes identically to Exporter.toSinger
     def toSinger(stream: String, path: String, keyProperties: Seq[String] = Nil): Unit =
       graft.singer.SingerWriter.write(df, stream, path, keyProperties,
-        nullMode = Some(graft.singer.SingerWriter.NullMode.DropTopLevel))
+        nullMode = graft.singer.SingerWriter.NullMode.DropTopLevel)
 
     def toExport(stream: String, outputDir: String, format: String = "singer",
         keyProperties: Seq[String] = Nil): Unit =

@@ -50,51 +50,6 @@ object Exporter {
     * `allowObjects=false` (the reference default) JSON-stringifies complex
     * columns; all-null columns are dropped in allow-objects mode unless
     * nulls are being kept (singer.py:496-499). */
-  /** Resolved serialization plan for a Singer export:
-    * (frame, schemaOverride, mergeSchemaWith, allowObjects, nullMode).
-    *
-    * Null-mode resolution mirrors to_singer (singer.py:520-537):
-    * keep_nulls wins; else trim_nested_nulls does a deep drop; else the
-    * reference DEFAULT drops top-level null scalars only. */
-  private def resolveSinger(
-      df: DataFrame,
-      stream: String,
-      allowObjects: Boolean,
-      schema: Option[StructType],
-      unifiedModel: Option[StructType],
-      keepNullFields: Boolean,
-      trimNestedNulls: Boolean,
-      catalogStream: Option[String],
-      catalog: Map[String, CatalogReader.StreamCatalog],
-      env: Map[String, String])
-      : (DataFrame, Option[StructType], Option[StructType], Boolean, SingerWriter.NullMode) = {
-    val useCatalogSchema = env.get("USE_CATALOG_SCHEMA").exists(_.equalsIgnoreCase("true"))
-    // INCLUDE_ALL_UNIFIED_FIELDS only applies when a unified model is in
-    // play (singer.py:495): keeps all-null columns and explicit nulls
-    val includeAllUnified =
-      env.get("INCLUDE_ALL_UNIFIED_FIELDS").exists(_.equalsIgnoreCase("true")) &&
-        unifiedModel.isDefined
-    val dropNullCols = allowObjects && !(useCatalogSchema || includeAllUnified || keepNullFields)
-    val frame0 = if (dropNullCols) SingerWriter.dropAllNullColumns(df) else df
-    val (frame, schemaOverride, mergeWith, allowObj) =
-      if (useCatalogSchema || catalogStream.isDefined) {
-        val streamName = catalogStream.getOrElse(stream)
-        val cat = catalog.getOrElse(streamName, throw new IllegalArgumentException(
-          s"No schema found in catalog for stream $streamName"))
-        val parsed = Explode.parseDfCols(frame0, cat)
-        if (useCatalogSchema) (parsed, None, Some(cat.schema), true)
-        else (parsed, Some(cat.schema), None, true)
-      }
-      else if (unifiedModel.isDefined) (frame0, unifiedModel, None, allowObjects)
-      else (frame0, schema, None, allowObjects)
-    val keepNulls = useCatalogSchema || includeAllUnified || keepNullFields
-    val nullMode =
-      if (keepNulls) SingerWriter.NullMode.KeepAll
-      else if (trimNestedNulls) SingerWriter.NullMode.DropAll
-      else SingerWriter.NullMode.DropTopLevel
-    (frame, schemaOverride, mergeWith, allowObj, nullMode)
-  }
-
   def toSinger(
       df: DataFrame,
       stream: String,
@@ -109,14 +64,62 @@ object Exporter {
       catalogStream: Option[String] = None,
       catalog: Map[String, CatalogReader.StreamCatalog] = Map.empty,
       recursiveTyping: Boolean = true,
-      env: Map[String, String] = sys.env): Unit = {
-    val (frame, schemaOverride, mergeWith, allowObj, nullMode) = resolveSinger(
-      df, stream, allowObjects, schema, unifiedModel, keepNullFields,
-      trimNestedNulls, catalogStream, catalog, env)
-    SingerWriter.write(frame, stream, s"$outputDir/$filename", keys,
-      schemaOverride = schemaOverride, mergeSchemaWith = mergeWith,
-      allowObjects = allowObj, nullMode = Some(nullMode),
-      recursiveTyping = recursiveTyping)
+      env: Map[String, String] = sys.env): Unit =
+    singer(df, stream, s"$outputDir/$filename", singleFile = true, keys, allowObjects, schema,
+      unifiedModel, keepNullFields, trimNestedNulls, catalogStream, catalog, recursiveTyping, env)
+
+  /** The one Singer path behind [[toSinger]] and [[export]]: resolves the
+    * frame, header schema and null mode, then writes one file at `target`
+    * or, unless `singleFile`, a distributed export into the dir `target`.
+    *
+    * The null mode mirrors to_singer (singer.py:520-537): keep_nulls wins;
+    * else trim_nested_nulls does a deep drop; else the reference DEFAULT
+    * drops top-level null scalars only. */
+  private def singer(
+      df: DataFrame,
+      stream: String,
+      target: String,
+      singleFile: Boolean,
+      keys: Seq[String],
+      allowObjects: Boolean,
+      schema: Option[StructType],
+      unifiedModel: Option[StructType],
+      keepNullFields: Boolean,
+      trimNestedNulls: Boolean,
+      catalogStream: Option[String],
+      catalog: Map[String, CatalogReader.StreamCatalog],
+      recursiveTyping: Boolean,
+      env: Map[String, String]): Unit = {
+    val useCatalogSchema = env.get("USE_CATALOG_SCHEMA").exists(_.equalsIgnoreCase("true"))
+    // INCLUDE_ALL_UNIFIED_FIELDS only applies when a unified model is in
+    // play (singer.py:495): keeps all-null columns and explicit nulls
+    val includeAllUnified =
+      env.get("INCLUDE_ALL_UNIFIED_FIELDS").exists(_.equalsIgnoreCase("true")) &&
+        unifiedModel.isDefined
+    val keepNulls = useCatalogSchema || includeAllUnified || keepNullFields
+    val nullMode =
+      if (keepNulls) SingerWriter.NullMode.KeepAll
+      else if (trimNestedNulls) SingerWriter.NullMode.DropAll
+      else SingerWriter.NullMode.DropTopLevel
+    val frame0 = if (allowObjects && !keepNulls) SingerWriter.dropAllNullColumns(df) else df
+    val (frame, schemaOverride, mergeWith, allowObj) =
+      if (useCatalogSchema || catalogStream.isDefined) {
+        val streamName = catalogStream.getOrElse(stream)
+        val cat = catalog.getOrElse(streamName, throw new IllegalArgumentException(
+          s"No schema found in catalog for stream $streamName"))
+        val parsed = Explode.parseDfCols(frame0, cat)
+        if (useCatalogSchema) (parsed, None, Some(cat.schema), true)
+        else (parsed, Some(cat.schema), None, true)
+      }
+      else if (unifiedModel.isDefined) (frame0, unifiedModel, None, allowObjects)
+      else (frame0, schema, None, allowObjects)
+    if (singleFile)
+      SingerWriter.write(frame, stream, target, keys, schemaOverride = schemaOverride,
+        allowObjects = allowObj, mergeSchemaWith = mergeWith,
+        recursiveTyping = recursiveTyping, nullMode = nullMode)
+    else
+      SingerWriter.writeDistributed(frame, stream, target, keys, schemaOverride, allowObj,
+        mergeWith, recursiveTyping, nullMode)
   }
 
   /** NOTE on singer defaults: `allowObjects` defaults to true here (nested
@@ -147,21 +150,9 @@ object Exporter {
     val base = s"$outputDir/$name"
     format.toLowerCase match {
       case "singer" =>
-        if (singleFile) toSinger(df, name, outputDir, keyProperties,
-          filename = s"$name.singer", allowObjects = allowObjects,
-          schema = schema, unifiedModel = unifiedModel,
-          keepNullFields = keepNullFields, trimNestedNulls = trimNestedNulls,
-          catalogStream = catalogStream, catalog = catalog, env = env)
-        else {
-          // same resolution chain as the single-file path — distributed
-          // output must not silently ignore schema/serialization options
-          val (frame, schemaOverride, mergeWith, allowObj, nullMode) = resolveSinger(
-            df, name, allowObjects, schema, unifiedModel, keepNullFields,
-            trimNestedNulls, catalogStream, catalog, env)
-          SingerWriter.writeDistributed(frame, name, base, keyProperties,
-            schemaOverride = schemaOverride, mergeSchemaWith = mergeWith,
-            allowObjects = allowObj, nullMode = Some(nullMode))
-        }
+        singer(df, name, if (singleFile) s"$base.singer" else base, singleFile, keyProperties,
+          allowObjects, schema, unifiedModel, keepNullFields, trimNestedNulls, catalogStream,
+          catalog, recursiveTyping = true, env)
       case "parquet" =>
         df.write.mode("overwrite").option("compression", "zstd").parquet(base)
       case "csv" =>

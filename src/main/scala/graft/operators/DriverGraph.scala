@@ -32,8 +32,11 @@ object DriverGraph {
     * their sorted copy, the int endpoints and their remap, and the two
     * index arrays); the cap bounds driver wall time on huge heaps.
     * Resolved at call time so `-Xmx` changes take effect. */
-  def maxEdges(): Long =
-    math.min(16000000L, math.max(65536L, Runtime.getRuntime.maxMemory() / 3200L))
+  def maxEdges(): Long = maxEdgesFor(Runtime.getRuntime.maxMemory())
+
+  /** [[maxEdges]] for a heap of `heapBytes`. */
+  private[graft] def maxEdgesFor(heapBytes: Long): Long =
+    math.min(16000000L, math.max(65536L, heapBytes / 3200L))
 
   private[operators] def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true

@@ -307,7 +307,7 @@ private[graft] object CoreQueries {
             when(col("c_custkey") % 2 === 0, col("c_mktsegment")).as("seg"))).as("obj"))
       base.select(col("c_custkey"),
           graft.singer.SingerWriter.recordLine(base, "t",
-            nullMode = Some(graft.singer.SingerWriter.NullMode.DropTopLevel)).as("line"))
+            nullMode = graft.singer.SingerWriter.NullMode.DropTopLevel).as("line"))
         .orderBy("c_custkey")
     }, oracle = Some(
       """SELECT c_custkey,

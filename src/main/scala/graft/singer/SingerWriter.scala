@@ -34,7 +34,7 @@ object SingerWriter {
     * reachable behaviors in `to_singer` (singer.py:520-537):
     *  - [[NullMode.DropAll]] — `trim_nested_nulls=True`: nulls removed at
     *    every depth (`remove_nulls_deep`); Spark `ignoreNullFields=true`.
-    *    Graft's legacy boolean default maps here.
+    *    The writer's default.
     *  - [[NullMode.KeepAll]] — `keep_null_fields=True`: nulls serialized
     *    explicitly at every depth.
     *  - [[NullMode.DropTopLevel]] — the reference DEFAULT
@@ -44,7 +44,9 @@ object SingerWriter {
     *    is all-or-nothing, so this mode builds the record from per-field
     *    `"key":<json>` fragments gated on `isNotNull` and joined with
     *    `concat_ws` (which skips null fragments) — still pure codegen'd
-    *    expressions, no UDF. */
+    *    expressions, no UDF.
+    * This is the writer's only null option; `Exporter.toSinger` maps the
+    * reference's `keep_null_fields` / `trim_nested_nulls` onto it. */
   sealed abstract class NullMode
   object NullMode {
     case object DropAll extends NullMode
@@ -52,19 +54,16 @@ object SingerWriter {
     case object DropTopLevel extends NullMode
   }
 
-  private def resolveNullMode(keepNullFields: Boolean, nullMode: Option[NullMode]): NullMode =
-    nullMode.getOrElse(if (keepNullFields) NullMode.KeepAll else NullMode.DropAll)
-
   private val TsFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
   private val DateFormat = "yyyy-MM-dd"
 
-  private def jsonOptions(keepNullFields: Boolean = false): Map[String, String] = Map(
+  private def jsonOptions(keepNulls: Boolean): Map[String, String] = Map(
     "timestampFormat" -> TsFormat,
     "timestampNTZFormat" -> TsFormat,
     "dateFormat" -> DateFormat,
     "timeZone" -> "UTC",
     // keep_nulls mode serializes null scalars explicitly (singer.py:536-540)
-    "ignoreNullFields" -> (!keepNullFields).toString)
+    "ignoreNullFields" -> (!keepNulls).toString)
 
   private def esc(s: String): String = {
     val b = new StringBuilder
@@ -88,14 +87,14 @@ object SingerWriter {
     * (gen_singer_header's else branch, singer.py:176-178). Spacing differs
     * from json.dumps (`{"a":1}` vs `{"a": 1}`); values are identical.
     *
-    * `keepNullFields` controls nulls INSIDE the stringified cells — a
-    * keep-nulls export must not silently drop nested keys here (the
-    * round-2 hardcoded drop-nulls bug). */
-  def stringifyComplexColumns(df: DataFrame, keepNullFields: Boolean = false): DataFrame = {
+    * Nulls INSIDE the stringified cells are kept unless `nullMode` is
+    * [[NullMode.DropAll]] — a keep-nulls export must not silently drop
+    * nested keys here (the round-2 hardcoded drop-nulls bug). */
+  def stringifyComplexColumns(df: DataFrame, nullMode: NullMode = NullMode.DropAll): DataFrame = {
     val cols = df.schema.fields.toIndexedSeq.map { f =>
       f.dataType match {
         case _: StructType | _: ArrayType | _: MapType =>
-          to_json(col(s"`${f.name}`"), jsonOptions(keepNullFields)).as(f.name)
+          to_json(col(s"`${f.name}`"), jsonOptions(nullMode != NullMode.DropAll)).as(f.name)
         case _ => col(s"`${f.name}`")
       }
     }
@@ -159,8 +158,7 @@ object SingerWriter {
       stream: String,
       version: Option[Long] = None,
       timeExtracted: Option[java.time.Instant] = None,
-      keepNullFields: Boolean = false,
-      nullMode: Option[NullMode] = None): Column = {
+      nullMode: NullMode = NullMode.DropAll): Column = {
     // NaN (like NaT/NA) is a null scalar to the reference (_is_null_scalar,
     // singer.py:90-91): keep_nulls REPLACES it with None, the drop modes
     // drop the key. Nullifying NaN here once makes every mode below agree —
@@ -174,7 +172,7 @@ object SingerWriter {
       }
       f.name -> c
     }
-    val payload = resolveNullMode(keepNullFields, nullMode) match {
+    val payload = nullMode match {
       case NullMode.DropTopLevel =>
         // reference-default semantics: per-field "key":<json> fragments.
         // Each value renders via to_json over a one-field struct with
@@ -182,7 +180,7 @@ object SingerWriter {
         // (5 chars) and trailing `}` are sliced off. A null top-level cell
         // nulls its fragment, and concat_ws skips it entirely.
         val frags = promoted.map { case (name, c) =>
-          val j = to_json(struct(c.as("x")), jsonOptions(keepNullFields = true))
+          val j = to_json(struct(c.as("x")), jsonOptions(keepNulls = true))
           when(c.isNotNull,
             concat(lit("\"" + esc(name) + "\":"), j.substr(lit(6), length(j) - 6)))
         }
@@ -215,6 +213,28 @@ object SingerWriter {
     StructType((overridden ++ extras).toIndexedSeq)
   }
 
+  /** The RECORD lines a writer emits (one string column) and its SCHEMA
+    * message. `allowObjects=false` serializes complex columns as JSON
+    * strings via [[stringifyComplexColumns]]; the header describes
+    * `schemaOverride` (else the serialized frame's schema) with
+    * `mergeSchemaWith`'s catalog properties merged over it. */
+  private def prepare(
+      df: DataFrame,
+      stream: String,
+      keyProperties: Seq[String],
+      bookmarkProperties: Seq[String],
+      schemaOverride: Option[StructType],
+      allowObjects: Boolean,
+      mergeSchemaWith: Option[StructType],
+      recursiveTyping: Boolean,
+      nullMode: NullMode): (DataFrame, String) = {
+    val frame = if (allowObjects) df else stringifyComplexColumns(df, nullMode)
+    val base = schemaOverride.getOrElse(frame.schema)
+    val header = mergeSchemaWith.fold(base)(mergeSchemas(base, _))
+    (frame.select(recordLine(frame, stream, nullMode = nullMode).as("value")),
+      schemaMessage(stream, header, keyProperties, bookmarkProperties, recursiveTyping))
+  }
+
   /** Single-file Singer export (reference contract: singer.py:452-549).
     * Appends if the file already exists (singer.py:518); the SCHEMA message
     * is emitted on EVERY call including append mode, like the reference's
@@ -228,8 +248,8 @@ object SingerWriter {
     * `mergeSchemaWith` overlays catalog property types on the inferred
     * header while keeping extra columns (USE_CATALOG_SCHEMA mode); when
     * `schemaOverride` is also given, the merge bases on the override, not
-    * the inferred schema. `nullMode` (see [[NullMode]]) supersedes the
-    * legacy `keepNullFields` boolean when set. */
+    * the inferred schema. Nulls are written per `nullMode` (see
+    * [[NullMode]]). */
   def write(
       df: DataFrame,
       stream: String,
@@ -239,66 +259,41 @@ object SingerWriter {
       schemaOverride: Option[StructType] = None,
       emitState: Boolean = true,
       allowObjects: Boolean = true,
-      keepNullFields: Boolean = false,
       mergeSchemaWith: Option[StructType] = None,
       recursiveTyping: Boolean = true,
-      nullMode: Option[NullMode] = None): Unit =
-    writeFile(df, stream, path, keyProperties, bookmarkProperties, schemaOverride, emitState,
-      allowObjects, keepNullFields, mergeSchemaWith, recursiveTyping, nullMode,
-      skipEmpty = false): Unit
+      nullMode: NullMode = NullMode.DropAll): Unit = {
+    val (lines, header) = prepare(df, stream, keyProperties, bookmarkProperties, schemaOverride,
+      allowObjects, mergeSchemaWith, recursiveTyping, nullMode)
+    appendFile(path, header, lines.toLocalIterator(), emitState)
+  }
 
   /** [[write]] with its defaults, except that an empty `df` writes nothing
     * at all. True if it wrote. The file is opened only once the first
     * record is in hand, so no emptiness probe (one job) runs first. */
   private[graft] def writeNonEmpty(df: DataFrame, stream: String, path: String,
-      keyProperties: Seq[String], nullMode: NullMode): Boolean =
-    writeFile(df, stream, path, keyProperties, Nil, None, emitState = true,
-      allowObjects = true, keepNullFields = false, None, recursiveTyping = true, Some(nullMode),
-      skipEmpty = true)
+      keyProperties: Seq[String], nullMode: NullMode): Boolean = {
+    val (lines, header) = prepare(df, stream, keyProperties, Nil, None, allowObjects = true,
+      None, recursiveTyping = true, nullMode)
+    val it = lines.toLocalIterator()
+    it.hasNext && { appendFile(path, header, it, emitState = true); true }
+  }
 
-  private def writeFile(
-      df: DataFrame,
-      stream: String,
-      path: String,
-      keyProperties: Seq[String],
-      bookmarkProperties: Seq[String],
-      schemaOverride: Option[StructType],
-      emitState: Boolean,
-      allowObjects: Boolean,
-      keepNullFields: Boolean,
-      mergeSchemaWith: Option[StructType],
-      recursiveTyping: Boolean,
-      nullMode: Option[NullMode],
-      skipEmpty: Boolean): Boolean = {
+  /** The file body: the SCHEMA header, the RECORD lines and (if
+    * `emitState`) the STATE footer, appended to `path` (created with its
+    * parent dirs if missing). `lines` comes from `toLocalIterator`: one
+    * partition in driver memory at a time. */
+  private def appendFile(path: String, header: String, lines: java.util.Iterator[Row],
+      emitState: Boolean): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.{Files, Paths, StandardOpenOption => O}
-    val mode = resolveNullMode(keepNullFields, nullMode)
-    val prepared =
-      if (allowObjects) df
-      else stringifyComplexColumns(df, mode != NullMode.DropAll)
-    val base = schemaOverride.getOrElse(prepared.schema)
-    val headerSchema = mergeSchemaWith match {
-      case Some(cat) => mergeSchemas(base, cat)
-      case None      => base
-    }
-    val lines = prepared.select(
-      recordLine(prepared, stream, nullMode = Some(mode)).as("line"))
-    // toLocalIterator: one partition in driver memory at a time
-    val it = lines.toLocalIterator()
-    if (skipEmpty && !it.hasNext) return false
     val p = Paths.get(path)
     Option(p.getParent).foreach(Files.createDirectories(_))
-    val appending = Files.exists(p)
-    val out = Files.newBufferedWriter(p, UTF_8,
-      (if (appending) Seq(O.APPEND, O.WRITE) else Seq(O.CREATE, O.TRUNCATE_EXISTING, O.WRITE)): _*)
+    val out = Files.newBufferedWriter(p, UTF_8, O.CREATE, O.APPEND, O.WRITE)
     try {
-      out.write(schemaMessage(stream, headerSchema, keyProperties, bookmarkProperties,
-        recursiveTyping))
-      out.write("\n")
-      while (it.hasNext) { out.write(it.next().getString(0)); out.write("\n") }
+      out.write(header); out.write("\n")
+      while (lines.hasNext) { out.write(lines.next().getString(0)); out.write("\n") }
       if (emitState) { out.write(stateMessage()); out.write("\n") }
     } finally out.close()
-    true
   }
 
   /** Distributed Singer export for scale: RECORD part files written by
@@ -312,22 +307,13 @@ object SingerWriter {
       keyProperties: Seq[String] = Nil,
       schemaOverride: Option[StructType] = None,
       allowObjects: Boolean = true,
-      keepNullFields: Boolean = false,
       mergeSchemaWith: Option[StructType] = None,
       recursiveTyping: Boolean = true,
-      nullMode: Option[NullMode] = None): Unit = {
+      nullMode: NullMode = NullMode.DropAll): Unit = {
     import org.apache.hadoop.fs.Path
-    val mode = resolveNullMode(keepNullFields, nullMode)
-    val prepared =
-      if (allowObjects) df
-      else stringifyComplexColumns(df, mode != NullMode.DropAll)
-    val schemaBase = schemaOverride.getOrElse(prepared.schema)
-    val headerSchema = mergeSchemaWith match {
-      case Some(cat) => mergeSchemas(schemaBase, cat)
-      case None      => schemaBase
-    }
-    prepared.select(recordLine(prepared, stream, nullMode = Some(mode)).as("value"))
-      .write.mode("overwrite").text(s"$dir/records")
+    val (lines, header) = prepare(df, stream, keyProperties, Nil, schemaOverride, allowObjects,
+      mergeSchemaWith, recursiveTyping, nullMode)
+    lines.write.mode("overwrite").text(s"$dir/records")
     // sidecars through the same Hadoop filesystem as the record parts —
     // java.nio would silently write to a local path for hdfs://, s3a://, …
     val base = new Path(dir)
@@ -338,8 +324,7 @@ object SingerWriter {
       try out.write((content + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    put("_schema.singer",
-      schemaMessage(stream, headerSchema, keyProperties, recursiveTyping = recursiveTyping))
+    put("_schema.singer", header)
     put("_state.singer", stateMessage())
   }
 }

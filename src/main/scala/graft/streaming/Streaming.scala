@@ -1,7 +1,11 @@
 package graft.streaming
 
 import graft.operators.{Snapshot, SnapshotStore}
+import graft.singer.SingerWriter
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -185,8 +189,8 @@ object Streaming {
       keyProperties: Seq[String] = Nil,
       // reference-default nulls, matching Exporter.toSinger — a record
       // must serialize identically whether it arrived by batch or stream
-      nullMode: graft.singer.SingerWriter.NullMode =
-        graft.singer.SingerWriter.NullMode.DropTopLevel): DataStreamWriter[org.apache.spark.sql.Row] =
+      nullMode: SingerWriter.NullMode = SingerWriter.NullMode.DropTopLevel)
+      : DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -201,8 +205,7 @@ object Streaming {
         // opens the file only once a record is in hand) and leaves the
         // marker as it was
         if (batchId != lastDone &&
-            graft.singer.SingerWriter.writeNonEmpty(batch, streamName, path, keyProperties,
-              nullMode)) {
+            SingerWriter.writeNonEmpty(batch, streamName, path, keyProperties, nullMode)) {
           val tmp = java.nio.file.Paths.get(
             path + s".batchid.tmp-${java.util.UUID.randomUUID()}")
           java.nio.file.Files.write(tmp, batchId.toString.getBytes("UTF-8"))
@@ -249,7 +252,7 @@ object Streaming {
     * re-offers the same priorities and changes nothing — but the replay
     * guard still skips duplicate batchIds (one write, not a no-op
     * rewrite). State is ≤ k rows forever; the merge is a ≤ (k + batch)
-    * sort-limit. Same versioned-dir + ATOMIC_MOVE pointer layout as the
+    * sort-limit. Same versioned-dir + atomic-pointer layout as the
     * other ingests. */
   def streamingKmvIngest(
       stream: DataFrame,
@@ -275,8 +278,8 @@ object Streaming {
     * are a plain mergeable sum). Counter merges are NOT idempotent, so
     * the CMS replay guard applies: a redelivered batchId is skipped.
     * Self-pairs are dropped at ingest (they carry no information and
-    * would only bloat the state). Same versioned-dir + ATOMIC_MOVE
-    * pointer layout as the other ingests. */
+    * would only bloat the state). Same versioned-dir + atomic-pointer
+    * layout as the other ingests. */
   def streamingPreferenceIngest(
       stream: DataFrame,
       winnerCol: String,
@@ -300,7 +303,7 @@ object Streaming {
     * are deliberately absent (not mergeable exactly; pair with
     * [[streamingHllIngest]]). Counter merges are NOT idempotent, so the
     * CMS replay guard applies: a redelivered batchId is skipped. Same
-    * versioned-dir + ATOMIC_MOVE pointer layout as the other ingests. */
+    * versioned-dir + atomic-pointer layout as the other ingests. */
   def streamingProfileIngest(
       stream: DataFrame,
       cols: Seq[String],
@@ -317,7 +320,7 @@ object Streaming {
     * the sketch; the replay guard here only saves wasted work. State stays
     * ≤ m rows per group forever; estimate any time with
     * [[graft.operators.Sketches.hllEstimateFromRegisters]]. Same
-    * versioned-dir + ATOMIC_MOVE pointer layout as the CMS ingest. */
+    * versioned-dir + atomic-pointer layout as the CMS ingest. */
   def streamingHllIngest(
       stream: DataFrame,
       valueCol: String,
@@ -331,45 +334,42 @@ object Streaming {
 
   /** The versioned-state commit behind the sketch ingests. Per micro-batch:
     * `summarize` the batch, `merge` it into the persisted state, write the
-    * result to a fresh `v<batchId>` parquet dir, repoint `LATEST` via
-    * temp-file + ATOMIC_MOVE (readers never observe a half-written state;
-    * a crash before the repoint leaves the previous version live), then
+    * result to a fresh `v<batchId>` parquet dir, repoint `LATEST` by an
+    * atomic create, temp file + rename (readers never observe a
+    * half-written state; a crash before the repoint leaves the previous
+    * version live), then
     * prune superseded versions best-effort. Replay guard as in
     * [[streamingSinger]]: a batch id EQUAL to the committed one is the
-    * checkpoint-recovery redelivery and is skipped. */
+    * checkpoint-recovery redelivery and is skipped. The pointer, the
+    * listing and the prune go through `dir`'s Hadoop file system (Spark's
+    * checkpoint file manager, whose atomic create is its offset log's),
+    * the same one Spark writes `v<batchId>` through. */
   private def versionedIngest(stream: DataFrame, dir: String)(
       summarize: DataFrame => DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val spark = batch.sparkSession
-        Files.createDirectories(Paths.get(dir))
-        val (prior, lastId) = readVersioned(spark, dir)
+        val fm = fileManager(batch.sparkSession, dir)
+        val (prior, lastId) = readVersioned(batch.sparkSession, dir)
         if (batchId != lastId && !batch.isEmpty) {
           val bs = summarize(batch)
           val merged = prior.fold(bs)(merge(_, bs))
-          val vdir = s"$dir/v$batchId"
-          merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-          val tmp = Paths.get(s"$dir/.latest.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(tmp, batchId.toString.getBytes("UTF-8"))
-          Files.move(tmp, Paths.get(s"$dir/LATEST"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          val d = new java.io.File(dir)
-          Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-            if (f.isDirectory && f.getName.startsWith("v") &&
-                f.getName != s"v$batchId")
-              scala.util.Try {
-                val walk = Files.walk(f.toPath)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .forEach(p => { Files.deleteIfExists(p); () })
-                finally walk.close()
-              }: Unit
+          merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/v$batchId")
+          val out = fm.createAtomic(new Path(dir, "LATEST"), overwriteIfPossible = true)
+          try out.write(batchId.toString.getBytes(UTF_8))
+          catch { case e: Throwable => out.cancel(); throw e }
+          out.close()
+          fm.list(new Path(dir)).foreach { f =>
+            val name = f.getPath.getName
+            if (f.isDirectory && name.startsWith("v") && name != s"v$batchId")
+              scala.util.Try(fm.delete(f.getPath)): Unit
           }
-          ()
         }
       }
+
+  private def fileManager(spark: SparkSession, dir: String): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir), spark.sparkContext.hadoopConfiguration)
 
   /** The persisted sketch behind [[streamingCmsIngest]] (None before the
     * first committed batch), plus the committed batch id. Reads through
@@ -377,11 +377,12 @@ object Streaming {
     * (the ingest then treats the next batch as the first — consistent
     * with the at-least-once contract). */
   def readVersioned(spark: SparkSession, dir: String): (Option[DataFrame], Long) = {
-    import java.nio.file.{Files, Paths}
-    val marker = Paths.get(s"$dir/LATEST")
-    if (!Files.exists(marker)) (None, -1L)
+    val fm = fileManager(spark, dir)
+    val marker = new Path(dir, "LATEST")
+    if (!fm.exists(marker)) (None, -1L)
     else scala.util.Try {
-      val id = new String(Files.readAllBytes(marker), "UTF-8").trim.toLong
+      val in = fm.open(marker)
+      val id = try new String(in.readAllBytes(), UTF_8).trim.toLong finally in.close()
       (Some(spark.read.parquet(s"$dir/v$id")), id)
     }.getOrElse((None, -1L))
   }

@@ -749,13 +749,19 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("adaptive driver-UF gate scales with heap and respects its clamps") {
-    // formula: heap/3200 (1/16 of heap at ~200 B/edge) clamped to [65k, 16M]
-    val g = DriverGraph.maxEdges()
-    assert(g === math.min(16000000L,
+    // formula: heap/3200 (1/16 of heap at ~200 B/edge) clamped to [65k, 16M],
+    // at the running heap whatever its size
+    assert(DriverGraph.maxEdges() === math.min(16000000L,
       math.max(65536L, Runtime.getRuntime.maxMemory() / 3200L)))
-    // the 8 GiB test/bench JVM must gate ABOVE the 100×-stress probe's
+    assert(DriverGraph.maxEdges() === DriverGraph.maxEdgesFor(Runtime.getRuntime.maxMemory()))
+    // an 8 GiB test/bench JVM must gate ABOVE the 100×-stress probe's
     // 1,045k edges (the round-5 cliff: just over the old fixed 1M gate)
+    val g = DriverGraph.maxEdgesFor(8L << 30)
+    assert(g === (8L << 30) / 3200L)
     assert(g > 1100000L, s"gate $g would route a ~1M-edge probe distributed")
+    // both clamps: a 64 MiB heap gets the floor, a 1 TiB heap the cap
+    assert(DriverGraph.maxEdgesFor(64L << 20) === 65536L)
+    assert(DriverGraph.maxEdgesFor(1L << 40) === 16000000L)
   }
 
   test("connectedComponents handles self-pairs and shuffled edge directions") {

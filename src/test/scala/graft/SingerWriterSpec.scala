@@ -77,7 +77,7 @@ class SingerWriterSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, Double.NaN, 2.5), (2L, 1.0, Double.NaN)).toDF("id", "a", "b")
     // default / DropTopLevel: the NaN key vanishes, like None
-    for (mode <- Seq(None, Some(SingerWriter.NullMode.DropTopLevel): Option[SingerWriter.NullMode])) {
+    for (mode <- Seq(SingerWriter.NullMode.DropAll, SingerWriter.NullMode.DropTopLevel)) {
       val lines = df.orderBy("id")
         .select(SingerWriter.recordLine(df, "t", nullMode = mode))
         .collect().map(_.getString(0))
@@ -88,7 +88,7 @@ class SingerWriterSpec extends SparkSpec {
     }
     // keep_nulls: the reference REPLACES NaN with None -> explicit JSON null
     val keep = df.orderBy("id")
-      .select(SingerWriter.recordLine(df, "t", keepNullFields = true))
+      .select(SingerWriter.recordLine(df, "t", nullMode = SingerWriter.NullMode.KeepAll))
       .collect().map(_.getString(0))
     val k1 = mapper.readTree(keep(0)).get("record")
     assert(k1.has("a") && k1.get("a").isNull, keep(0))

@@ -471,6 +471,29 @@ class StreamingSpec extends SparkSpec {
     assert(sketch.isEmpty && id === -1L)
   }
 
+  test("sketch ingest keeps its state on the Hadoop file system of a file: URI dir") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val local = tmpDir("stream_cms_uri_")
+    val dir = new java.io.File(local).toURI.toString.stripSuffix("/") // file:/tmp/…
+    val ckpt = tmpDir("ckpt_cms_uri_")
+    for (text <- Seq("a b", "b c", "c d")) {
+      mem.addData(text)
+      Streaming.runAvailableNow(
+        Streaming.streamingCmsIngest(mem.toDF.toDF("text"), "text", 4, 512, dir), ckpt)
+    }
+    // the pointer and the pruner see the dir Spark wrote: one version is left
+    val versions = new java.io.File(local).list().filter(_.matches("v\\d+")).toSeq
+    val (sketch, id) = Streaming.readVersioned(spark, dir)
+    assert(versions === Seq(s"v$id"), versions)
+    // and nothing landed in a relative `file:` dir under the working dir
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+    val est = graft.operators.Sketches.cmsEstimate(
+        sketch.get, Seq("b", "d").toDF("term"), "term", 4, 512)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(est === Map("b" -> 2L, "d" -> 1L))
+  }
+
   test("streamingKmvIngest: merged bottom-k equals the one-shot sample of all batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Double)]
