@@ -541,6 +541,16 @@ object Stress {
         Graph.bidirect(graphEdges, "a", "b").distinct()) {
       Graph.pageRank(Graph.bidirect(graphEdges, "a", "b"), "src", "dst", rounds = 3)
     }
+    // q110's seeds: the nation-0 customers of every copy
+    graphRow(s"personalizedPageRank ${factor}x disjoint graphs (3 rounds, production)",
+        Graph.bidirect(graphEdges, "a", "b").distinct()) {
+      val seeds = spark.read.parquet(s"$sfDir/customer.parquet")
+        .filter(col("c_nationkey") === 0)
+        .crossJoin(spark.range(factor).toDF("__rep"))
+        .select(concat(lit("c"), col("c_custkey"), lit("_"), col("__rep")).as("n"))
+      Graph.personalizedPageRank(Graph.bidirect(graphEdges, "a", "b"), "src", "dst",
+        seeds, "n", rounds = 3)
+    }
     graphRow(s"labelPropagation ${factor}x disjoint graphs (4 rounds)",
         Graph.bidirect(graphEdges, "a", "b").distinct()) {
       Graph.labelPropagation(Graph.bidirect(graphEdges, "a", "b"), "src", "dst", rounds = 4)

@@ -13,10 +13,10 @@ import scala.collection.mutable.ArrayBuilder
   *
   * On a small graph every distributed round is fixed job overhead, not
   * data. `Dedup.connectedComponents` and Graph's pageRank,
-  * labelPropagation and triangleCounts share one budget ([[maxEdges]]):
-  * at or under it they [[collect]] their deduplicated edge frame once, run
-  * on primitive arrays, and return a frame with the distributed path's
-  * columns and types. This object owns the gate, the collector and the id
+  * personalizedPageRank, labelPropagation and triangleCounts share one
+  * budget ([[maxEdges]]): at or under it they [[collect]] their
+  * deduplicated edge frame once, run on primitive arrays, and return a
+  * frame with the distributed path's columns and types. This object owns the gate, the collector and the id
   * order; the callers own their kernels.
   *
   * The id order: node ids map to dense indices in Spark's ascending order
@@ -64,6 +64,22 @@ object DriverGraph {
       packed.foreach(k => off((k >>> 32).toInt + 1) += 1)
       for (v <- 0 until nNodes) off(v + 1) += off(v)
       (off, packed.map(_.toInt))
+    }
+
+    /** The indices of the non-null ids in `ids`' one column that are
+      * nodes here, distinct and ascending: absent ids drop, as through an
+      * equi-join. The column is read as [[collect]] reads an endpoint, so
+      * its type must be `node`'s, or integral when `node`'s is. */
+    def indicesOf(ids: DataFrame): Array[Int] = {
+      val read = if (integral(node.dataType)) LongType else node.dataType
+      val found = ids.toDF("id").select(col("id").cast(read)).distinct().collect()
+        .filter(!_.isNullAt(0)).map(r => keys match {
+          case k: Array[Long] => java.util.Arrays.binarySearch(k, r.getLong(0))
+          case k: Array[UTF8String] => java.util.Arrays.binarySearch(
+            k.asInstanceOf[Array[AnyRef]], UTF8String.fromString(r.getString(0)))
+        }).filter(_ >= 0)
+      java.util.Arrays.sort(found)
+      found
     }
 
     def frame(schema: StructType, rows: Seq[Row]): DataFrame =

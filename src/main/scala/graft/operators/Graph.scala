@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -62,14 +63,31 @@ object Graph {
     * whose count aggregate runs its own exchange. */
   private def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
+  /** The node gate: a per-node state frame of at most this many rows is
+    * broadcast into the round joins (see [[maybeBroadcast]]). */
+  private def fitsNodeGate(nNodes: Long): Boolean = nNodes <= (1L << 22)
+
+  /** The edge gate: an edge-derived frame of at most this many rows is
+    * broadcast (see [[maybeBroadcastEdges]]). */
+  private def fitsEdgeGate(nEdges: Long): Boolean = nEdges <= (1L << 21)
+
+  /** Both endpoint columns of a [[dedupEdges]] frame as one `node` column
+    * (a union, so mixed id types widen). */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+
+  /** The distinct nodes of a [[dedupEdges]] frame, checkpointed, and
+    * their count. */
+  private def nodeSet(e: DataFrame): (DataFrame, Long) = {
+    val nodes = endpoints(e).distinct().localCheckpoint(true)
+    (nodes, nodes.count())
+  }
+
   /** Shared prep over a [[dedupEdges]] frame: the degree-joined edge frame
     * (src-partitioned by the join, persisted for the rounds), and the
     * checkpointed node frame. */
   private def prepGraph(e: DataFrame): (DataFrame, DataFrame, Long) = {
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val nNodes = nodes.count()
+    val (nodes, nNodes) = nodeSet(e)
     // the degree frame is node-sized: broadcast-gate it on the DRIVER-known
     // node count instead of letting Catalyst guess (the aggregate's size
     // estimate routinely exceeds the auto-broadcast threshold, turning this
@@ -85,46 +103,46 @@ object Graph {
     // (the join and the aggregate each pick their own partitioning).
     val eDegRaw = e.join(maybeBroadcast(
         e.groupBy("src").agg(count(lit(1)).as("deg")), nNodes), "src")
-    val eDeg = (if (nNodes <= (1L << 22)) eDegRaw.repartition(col("dst"))
+    val eDeg = (if (fitsNodeGate(nNodes)) eDegRaw.repartition(col("dst"))
                 else eDegRaw)
       .persist(StorageLevel.MEMORY_AND_DISK)
     (eDeg, nodes, nNodes)
   }
 
   // ── size-gated driver rounds ──────────────────────────────────────────
-  // pageRank, labelPropagation and triangleCounts take the driver path of
-  // DriverGraph (shared with connected components): at or under its edge
-  // budget they collect the deduplicated edge frame once, run the rounds
-  // on primitive arrays, and return a local frame with the distributed
-  // path's columns and types.
+  // pageRank, personalizedPageRank, labelPropagation and triangleCounts
+  // take the driver path of DriverGraph (shared with connected
+  // components): at or under its edge budget they collect the deduplicated
+  // edge frame once, run the rounds on primitive arrays, and return a
+  // local frame with the distributed path's columns and types.
 
   /** The `node` column of the distributed output: both endpoint columns
     * unioned, so mixed id types widen as they do there (analysis only). */
-  private def nodeField(e: DataFrame): StructField =
-    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .schema("node")
+  private def nodeField(e: DataFrame): StructField = endpoints(e).schema("node")
 
-  /** [[pageRank]] rounds on the driver: each node folds its contributions
-    * in src order — the `deterministic = true` fold, bit for bit. An edge
-    * to a null dst still counts in its source's out-degree (its mass
-    * leaks, as through the distributed joins). */
+  /** [[rankRounds]] on the driver: rank starts at the teleport `t` and
+    * each round sets `(1 − damping)·t(v) + damping·acc`, each node folding
+    * its contributions in src order — the `deterministic = true` fold, bit
+    * for bit. An edge to a null dst still counts in its source's
+    * out-degree (its mass leaks, as through the distributed joins); the
+    * null node, if any, has teleport `tNull` and no in-edges. */
   private def driverPageRank(g: DriverGraph.LocalGraph, rounds: Int,
-      damping: Double): DataFrame = {
+      damping: Double, t: Array[Double], tNull: Double): DataFrame = {
     val n = g.nNodes
     val deg = new Array[Int](n)
     g.src.foreach(s => if (s >= 0) deg(s) += 1)
     val (off, in) = g.inEdges
-    var rank = Array.fill(n)(1.0)
+    var rank = t
     for (_ <- 1 to rounds) {
       val next = new Array[Double](n)
       for (v <- 0 until n) {
         var acc = 0.0
         for (k <- off(v) until off(v + 1)) acc += rank(in(k)) / deg(in(k))
-        next(v) = (1.0 - damping) + damping * acc
+        next(v) = (1.0 - damping) * t(v) + damping * acc
       }
       rank = next
     }
-    val nullRank = if (rounds == 0) 1.0 else (1.0 - damping) + damping * 0.0
+    val nullRank = if (rounds == 0) tNull else (1.0 - damping) * tNull + damping * 0.0
     g.frame(StructType(Seq(g.node, StructField("rank", DoubleType, false))),
       (0 until n).map(v => Row(g.id(v), rank(v))) ++
         (if (g.hasNull) Seq(Row(null, nullRank)) else Nil))
@@ -204,7 +222,7 @@ object Graph {
     * join shuffle-free while the state fits an executor; huge graphs fall
     * back to the shuffled join. */
   private def maybeBroadcast(state: DataFrame, nNodes: Long): DataFrame =
-    if (nNodes <= (1L << 22)) broadcast(state) else state
+    if (fitsNodeGate(nNodes)) broadcast(state) else state
 
   /** Size-gated broadcast of an EDGE-derived frame on the driver-known
     * edge count — a tighter cap than the node gate (the build side of a
@@ -213,7 +231,7 @@ object Graph {
     * replaces an exchange (+sort) of the Σ deg² wedge mass; above it the
     * caller keeps the exchange-reusing sort-merge shape. */
   private def maybeBroadcastEdges(df: DataFrame, nEdges: Long): DataFrame =
-    if (nEdges <= (1L << 21)) broadcast(df) else df
+    if (fitsEdgeGate(nEdges)) broadcast(df) else df
 
   /** PageRank, GraphX `staticPageRank` semantics: every node starts at
     * 1.0 and each round sets
@@ -239,15 +257,34 @@ object Graph {
   private[graft] def pageRankGated(edges: DataFrame, srcCol: String,
       dstCol: String, rounds: Int, damping: Double, deterministic: Boolean,
       checkpointInterval: Int, maxDriverEdges: Long): DataFrame = {
+    requireRankArgs(rounds, damping, checkpointInterval)
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    DriverGraph.collect(e, nodeField(e), nEdges, maxDriverEdges) match {
+      case Some(g) => driverPageRank(g, rounds, damping, Array.fill(g.nNodes)(1.0), 1.0)
+      case None => rankRounds(e, rounds, damping, deterministic,
+        checkpointInterval)(_.withColumn("__t", lit(1.0)))
+    }
+  }
+
+  private def requireRankArgs(rounds: Int, damping: Double,
+      checkpointInterval: Int): Unit = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0,1], got $damping")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
-    val local = DriverGraph.collect(e, nodeField(e), nEdges, maxDriverEdges)
-    if (local.nonEmpty) return driverPageRank(local.get, rounds, damping)
+  }
+
+  /** The distributed rank rounds of [[pageRank]] and
+    * [[personalizedPageRank]] over a [[dedupEdges]] frame `e`, freed on
+    * return: `teleport(nodes)` gives each node its teleport `__t`, rank
+    * starts at `__t`, and each round sets
+    * `(1 − damping)·__t + damping·Σ_{in-edges} rank_src / outdeg_src`. */
+  private def rankRounds(e: DataFrame, rounds: Int, damping: Double,
+      deterministic: Boolean, checkpointInterval: Int)(
+      teleport: DataFrame => DataFrame): DataFrame = {
     val (eDeg, nodes, nNodes) = prepGraph(e)
-    var ranks = nodes.withColumn("rank", lit(1.0))
+    val based = teleport(nodes)
+    var ranks = based.select(col("node"), col("__t").as("rank"))
     for (r <- 1 to rounds) {
       val contribs = eDeg
         .join(maybeBroadcast(ranks.withColumnRenamed("node", "src"), nNodes), "src")
@@ -258,9 +295,9 @@ object Graph {
       // summed is node-sized but Catalyst's aggregate estimate blocks the
       // auto-broadcast; gate on the driver-known node count (an upper
       // bound on |summed|) so the rank refresh joins broadcast-side
-      ranks = nodes.join(maybeBroadcast(summed, nNodes), Seq("node"), "left")
+      ranks = based.join(maybeBroadcast(summed, nNodes), Seq("node"), "left")
         .select(col("node"),
-          (lit(1.0 - damping) +
+          (lit(1.0 - damping) * col("__t") +
             lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
       // Checkpoint every `checkpointInterval` rounds, not every round:
       // an eager checkpoint is a full job, and short runs are faster as
@@ -283,45 +320,54 @@ object Graph {
     * t. Rank measures proximity to TRUSTED nodes: "score every domain by
     * its link distance from a hand-audited whitelist", the classic
     * seeded-quality prior for crawl corpora. Nodes unreachable from any
-    * seed stay at exactly 0. Same scale shape, determinism convention,
-    * and interval checkpointing as [[pageRank]]. Returns (node, rank). */
+    * seed stay at exactly 0; seeds absent from the graph drop. Same scale
+    * shape, determinism convention, interval checkpointing and driver
+    * gate as [[pageRank]] (a seed column of another id kind than the
+    * nodes stays distributed). Returns (node, rank). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, rounds: Int, damping: Double = 0.85,
-      deterministic: Boolean = false, checkpointInterval: Int = 8): DataFrame = {
-    require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    require(damping >= 0.0 && damping <= 1.0,
-      s"damping must be in [0,1], got $damping")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val (e, _) = dedupEdges(edges, srcCol, dstCol)
-    val (eDeg, nodes, nNodes) = prepGraph(e)
-    val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"))
-    val nSeeds = seedNodes.count()
-    require(nSeeds > 0, "no seed nodes present in the graph")
-    val t = 1.0 / nSeeds
-    val based = nodes.join(seedNodes.withColumn("__t", lit(t)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__t"), lit(0.0)).as("__t"))
-      .localCheckpoint(true)
-    var ranks = based.select(col("node"), col("__t").as("rank"))
-    for (r <- 1 to rounds) {
-      val contribs = eDeg
-        .join(maybeBroadcast(ranks.withColumnRenamed("node", "src"), nNodes), "src")
-        .select(col("dst").as("node"), col("src"),
-          (col("rank") / col("deg")).as("c"))
-      val summed = contribs.groupBy("node")
-        .agg(Ops.foldSum(deterministic, col("c"), col("src")).as("s"))
-      // same node-count broadcast gate as pageRank's rank refresh
-      ranks = based.join(maybeBroadcast(summed, nNodes), Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("__t") +
-            lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
-      if (r % checkpointInterval == 0 && r < rounds)
-        ranks = ranks.localCheckpoint(true)
+      deterministic: Boolean = false, checkpointInterval: Int = 8): DataFrame =
+    personalizedPageRankGated(edges, srcCol, dstCol, seeds, seedCol, rounds,
+      damping, deterministic, checkpointInterval, DriverGraph.maxEdges())
+
+  /** [[personalizedPageRank]] with an explicit driver gate;
+    * `maxDriverEdges = 0` pins the distributed rounds for any non-empty
+    * graph. */
+  private[graft] def personalizedPageRankGated(edges: DataFrame,
+      srcCol: String, dstCol: String, seeds: DataFrame, seedCol: String,
+      rounds: Int, damping: Double, deterministic: Boolean,
+      checkpointInterval: Int, maxDriverEdges: Long): DataFrame = {
+    requireRankArgs(rounds, damping, checkpointInterval)
+    val noSeeds = "no seed nodes present in the graph"
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    val node = nodeField(e)
+    val seedIds = seeds.select(col(seedCol))
+    // seeds of another id kind meet the nodes through the join's type
+    // coercion, which the driver lookup does not replay
+    val seedType = seedIds.schema.head.dataType
+    val local =
+      if (seedType == node.dataType ||
+          DriverGraph.integral(seedType) && DriverGraph.integral(node.dataType))
+        DriverGraph.collect(e, node, nEdges, maxDriverEdges)
+      else None
+    local match {
+      case Some(g) =>
+        val s = g.indicesOf(seedIds)
+        require(s.nonEmpty, noSeeds)
+        val t = new Array[Double](g.nNodes)
+        s.foreach(t(_) = 1.0 / s.length)
+        driverPageRank(g, rounds, damping, t, 0.0)
+      case None => rankRounds(e, rounds, damping, deterministic,
+          checkpointInterval) { nodes =>
+        val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
+          .join(nodes, Seq("node"))
+        val nSeeds = seedNodes.count()
+        require(nSeeds > 0, noSeeds)
+        nodes.join(seedNodes.withColumn("__t", lit(1.0 / nSeeds)), Seq("node"), "left")
+          .select(col("node"), coalesce(col("__t"), lit(0.0)).as("__t"))
+          .localCheckpoint(true)
+      }
     }
-    if (rounds > 0) ranks = ranks.localCheckpoint(true)
-    eDeg.unpersist(false)
-    e.unpersist(false)
-    ranks
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -357,15 +403,12 @@ object Graph {
     val (e0, nEdges) = dedupEdges(edges, srcCol, dstCol)
     val local = DriverGraph.collect(e0, nodeField(e0), nEdges, maxDriverEdges)
     if (local.nonEmpty) return driverLabelPropagation(local.get, rounds)
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val nNodes = nodes.count()
+    val (nodes, nNodes) = nodeSet(e0)
     // dst-partitioned in the broadcast-label regime so each round's
     // (dst, label) count aggregate reuses the persisted partitioning —
     // the prepGraph rationale; src-partitioned otherwise (the shuffled
     // label join then reuses it instead)
-    val e = (if (nNodes <= (1L << 22)) e0.repartition(col("dst"))
+    val e = (if (fitsNodeGate(nNodes)) e0.repartition(col("dst"))
              else e0.repartition(col("src")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
@@ -414,12 +457,50 @@ object Graph {
       .distinct()
       .localCheckpoint(false)
 
-  /** Undirected degree per node over a canonical edge frame,
-    * broadcast-gated. */
+  /** Undirected degree (n, d) per node over a canonical edge frame. */
+  private def degreeCounts(e: DataFrame): DataFrame =
+    e.select(col("x").as("n")).unionAll(e.select(col("y").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("d"))
+
+  /** [[degreeCounts]], broadcast-gated. */
   private def nodeDegrees(e: DataFrame): DataFrame =
-    Ops.broadcastIfSmall(
-      e.select(col("x").as("n")).unionAll(e.select(col("y").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d")))
+    Ops.broadcastIfSmall(degreeCounts(e))
+
+  /** The wedge family's adjacency over a canonical edge frame: both
+    * directions as (m, n), keeping the middles `m` of degree (from
+    * [[nodeDegrees]] `deg`) at most `maxMiddleDegree`; 0 keeps all. */
+  private def middles(e: DataFrame, deg: DataFrame,
+      maxMiddleDegree: Int): DataFrame = {
+    val adj = e.select(col("x").as("m"), col("y").as("n"))
+      .unionAll(e.select(col("y").as("m"), col("x").as("n")))
+    if (maxMiddleDegree == 0) adj
+    else adj.join(deg.select(col("n").as("m"), col("d").as("__dm")), Seq("m"))
+      .filter(col("__dm") <= maxMiddleDegree).drop("__dm")
+  }
+
+  /** `agg` over the wedge pairs (a, b) of a canonical edge frame `e`,
+    * minus the pairs that are edges. Under the edge gate (on `e`'s count) the
+    * edges drop map-side BEFORE `agg`'s exchange (a probe of the
+    * broadcast): the wedge mass entering it shrinks by the direct-edge
+    * fraction and the anti-join sorts no pair set. Above the gate `agg`
+    * runs first, and the sort-merge anti-join reuses its (a, b)
+    * partitioning (anti-join-first would add a full sort of the wedge
+    * mass there). */
+  private def withoutEdges(pairs: DataFrame, e: DataFrame)(
+      agg: DataFrame => DataFrame): DataFrame = {
+    val eAB = e.select(col("x").as("a"), col("y").as("b"))
+    if (fitsEdgeGate(rowCount(e))) agg(pairs.join(broadcast(eAB), Seq("a", "b"), "left_anti"))
+    else agg(pairs).join(eAB, Seq("a", "b"), "left_anti")
+  }
+
+  /** The top `k` rows of `df` by `order`, numbered 1..k in a `rank`
+    * column. The numbering window has no partition spec (Spark logs "No
+    * Partition Defined for Window operation"), but it ranks at most `k`
+    * rows after the limit, so its single partition is inherent: the
+    * warnings of q154, q155, q295 and q337 come from here. */
+  private def topRanked(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*)))
 
   /** Per-node triangle participation (node, triangles) over a canonical
     * edge frame — the degree-ordered compact-forward enumeration
@@ -503,11 +584,7 @@ object Graph {
     val counts = nodeTriangles(e, nEdges)
     val total = counts.agg(
       (coalesce(sum("triangles"), lit(0L)) / lit(3)).cast("long").as("total"))
-    counts
-      .orderBy(col("triangles").desc, col("node").asc).limit(topK)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("triangles").desc, col("node").asc)))
+    topRanked(counts, topK, col("triangles").desc, col("node").asc)
       .crossJoin(broadcast(total))
       .select(col("rank"), col("node"), col("triangles"), col("total"))
       .orderBy("rank")
@@ -530,15 +607,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int = 6): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k/rounds must be >= 1, got $k/$rounds")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter(col("x") < col("y"))
-      .distinct()
-      .localCheckpoint(false)
-    def degrees(ae: DataFrame): DataFrame =
-      ae.select(col("x").as("n")).unionAll(ae.select(col("y").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
+    val e = canonicalEdges(edges, srcCol, dstCol)
     var alive = e.select(col("x").as("n"))
       .unionAll(e.select(col("y").as("n"))).distinct()
       .localCheckpoint(true)
@@ -552,14 +621,14 @@ object Graph {
       val ae = e
         .join(gated(alive.select(col("n").as("x"))), Seq("x"), "left_semi")
         .join(gated(alive.select(col("n").as("y"))), Seq("y"), "left_semi")
-      alive = degrees(ae).filter(col("d") >= k).select("n")
+      alive = degreeCounts(ae).filter(col("d") >= k).select("n")
         .localCheckpoint(true)
       nAlive = alive.count()
     }
     val core = e
       .join(gated(alive.select(col("n").as("x"))), Seq("x"), "left_semi")
       .join(gated(alive.select(col("n").as("y"))), Seq("y"), "left_semi")
-    degrees(core).select(col("n").as("node"), col("d").as("degree"))
+    degreeCounts(core).select(col("n").as("node"), col("d").as("degree"))
       .orderBy("node")
   }
 
@@ -585,37 +654,15 @@ object Graph {
       topK: Int = 20, maxMiddleDegree: Int = 0): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(maxMiddleDegree >= 0, "maxMiddleDegree must be >= 0 (0 = exact)")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter(col("x") < col("y"))
-      .distinct()
-      .localCheckpoint(false)
-    val adj = e.select(col("x").as("m"), col("y").as("n"))
-      .unionAll(e.select(col("y").as("m"), col("x").as("n")))
-    val deg = Ops.broadcastIfSmall(
-      adj.groupBy(col("n")).agg(count(lit(1)).as("d")))
-    val mids =
-      if (maxMiddleDegree == 0) adj
-      else adj.join(deg.select(col("n").as("m"), col("d").as("__dm")), Seq("m"))
-        .filter(col("__dm") <= maxMiddleDegree).drop("__dm")
+    val e = canonicalEdges(edges, srcCol, dstCol)
+    val deg = nodeDegrees(e)
+    val mids = middles(e, deg, maxMiddleDegree)
     val wedgePairs = mids.select(col("m"), col("n").as("a"))
       .join(mids.select(col("m"), col("n").as("b")), Seq("m"))
       .filter(col("a") < col("b"))
-    val eAB = e.select(col("x").as("a"), col("y").as("b"))
-    // same pre-aggregation anti-join trade as harmonicCentrality2: with a
-    // broadcastable edge frame, connected pairs (which never become
-    // candidates) drop map-side BEFORE the (a,b) count exchange; above
-    // the gate keep count-then-anti, which reuses the groupBy partitioning
-    val candidates = e.count() match {
-      case nE if nE <= (1L << 21) =>
-        wedgePairs.join(broadcast(eAB), Seq("a", "b"), "left_anti")
-          .groupBy("a", "b").agg(count(lit(1)).as("common"))
-      case _ =>
-        wedgePairs.groupBy("a", "b").agg(count(lit(1)).as("common"))
-          .join(eAB, Seq("a", "b"), "left_anti")
-    }
-    candidates
+    // connected pairs never become candidates
+    withoutEdges(wedgePairs, e)(
+        _.groupBy("a", "b").agg(count(lit(1)).as("common")))
       .join(deg.select(col("n").as("a"), col("d").as("__da")), Seq("a"))
       .join(deg.select(col("n").as("b"), col("d").as("__db")), Seq("b"))
       .select(col("a"), col("b"), col("common"),
@@ -638,7 +685,7 @@ object Graph {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val e = canonicalEdges(edges, srcCol, dstCol)
     val deg = nodeDegrees(e)
-    val tri = nodeTriangles(e, e.count())
+    val tri = nodeTriangles(e, rowCount(e))
     val scored = deg.select(col("n").as("node"), col("d"))
       .join(tri, Seq("node"), "left")
       .withColumn("triangles", coalesce(col("triangles"), lit(0L)))
@@ -646,10 +693,7 @@ object Graph {
         when(col("d") < 2L, lit(0.0))
           .otherwise((lit(2.0) * col("triangles").cast("double")) /
             (col("d").cast("double") * (col("d").cast("double") - lit(1.0)))))
-    scored.orderBy(col("cc").desc, col("node").asc).limit(topK)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("cc").desc, col("node").asc)))
+    topRanked(scored, topK, col("cc").desc, col("node").asc)
       .select(col("rank"), col("node"), col("d").as("degree"),
         col("triangles"), col("cc"))
       .orderBy("rank")
@@ -675,48 +719,26 @@ object Graph {
     require(maxMiddleDegree >= 0, "maxMiddleDegree must be >= 0 (0 = exact)")
     val e = canonicalEdges(edges, srcCol, dstCol)
     val deg = nodeDegrees(e)
-    val adj = e.select(col("x").as("m"), col("y").as("n"))
-      .unionAll(e.select(col("y").as("m"), col("x").as("n")))
-    val mids =
-      if (maxMiddleDegree == 0) adj
-      else adj.join(deg.select(col("n").as("m"), col("d").as("__dm")), Seq("m"))
-        .filter(col("__dm") <= maxMiddleDegree).drop("__dm")
-    // the two-hop pair set is SYMMETRIC (a and z both range over the
-    // middle's neighbors), so enumerate each unordered pair ONCE (a < z):
+    val mids = middles(e, deg, maxMiddleDegree)
+    // the two-hop pair set is SYMMETRIC (a and b both range over the
+    // middle's neighbors), so enumerate each unordered pair ONCE (a < b):
     // half the wedge rows through the distinct, ONE anti-join against the
     // canonical (x < y) edge frame instead of two, and each surviving
     // pair credits both endpoints via a 2-way explode — same n2 counts,
     // half the dominant shuffle
     val twoHopRaw = mids.select(col("m"), col("n").as("a"))
-      .join(mids.select(col("m"), col("n").as("z")), Seq("m"))
-      .filter(col("a") < col("z"))
-      .select(col("a"), col("z"))
-    val eAZ = e.select(col("x").as("a"), col("y").as("z"))
-    // when the edge frame fits the broadcast gate, drop direct-edge pairs
-    // BEFORE the distinct (a map-side probe of the broadcast): the wedge
-    // mass entering the distinct exchange shrinks by the direct-edge
-    // fraction and the anti-join costs no sort of the pair set. Above the
-    // gate keep the old order — distinct first, whose (a,z) partitioning
-    // the sort-merge anti-join then reuses (anti-join-first would add an
-    // extra full sort of the undeduped wedge mass there).
-    val twoHopNew = e.count() match {
-      case nE if nE <= (1L << 21) =>
-        twoHopRaw.join(broadcast(eAZ), Seq("a", "z"), "left_anti").distinct()
-      case _ =>
-        twoHopRaw.distinct().join(eAZ, Seq("a", "z"), "left_anti")
-    }
-    val n2 = twoHopNew
-      .select(explode(array(col("a"), col("z"))).as("node"))
+      .join(mids.select(col("m"), col("n").as("b")), Seq("m"))
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b"))
+    val n2 = withoutEdges(twoHopRaw, e)(_.distinct())
+      .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n2"))
-    deg.select(col("n").as("node"), col("d"))
+    val scored = deg.select(col("n").as("node"), col("d"))
       .join(n2, Seq("node"), "left")
       .withColumn("n2", coalesce(col("n2"), lit(0L)))
       .withColumn("harmonic",
         col("d").cast("double") + (lit(0.5) * col("n2").cast("double")))
-      .orderBy(col("harmonic").desc, col("node").asc).limit(topK)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("harmonic").desc, col("node").asc)))
+    topRanked(scored, topK, col("harmonic").desc, col("node").asc)
       .select(col("rank"), col("node"), col("d").as("degree"), col("n2"),
         col("harmonic"))
       .orderBy("rank")
@@ -756,10 +778,7 @@ object Graph {
               lit(d.toDouble))).as("h"),
             col("est").as("__prev"))).localCheckpoint(true)
     }
-    state.orderBy(col("h").desc, col("node").asc).limit(topK)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("h").desc, col("node").asc)))
+    topRanked(state, topK, col("h").desc, col("node").asc)
       .select(col("rank"), col("node"), col("__prev").as("ball_est"),
         col("h").as("harmonic"))
       .orderBy("rank")
@@ -903,9 +922,7 @@ object Graph {
       checkpointInterval: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    val (e, _) = dedupEdges(edges, srcCol, dstCol)
     // hub/auth state frames are node-sized and checkpointed (no Catalyst
     // stats), so gate each round's edge join on the DRIVER-known side
     // cardinalities (the maybeBroadcast idiom) — otherwise every phase
@@ -972,9 +989,7 @@ object Graph {
   def bfsLevels(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    val (e, _) = dedupEdges(edges, srcCol, dstCol)
     var frontier = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("dist", lit(0)).localCheckpoint(true)
     // frontier/visited frames are node-sized and checkpointed (no Catalyst
@@ -1033,49 +1048,11 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(tsCol).cast("long").as("t"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    var reach = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("reach_t", lit(seedT)).localCheckpoint(true)
-    // frontier/state frames are node-sized and checkpointed (no Catalyst
-    // stats): gate every round join on DRIVER-known counts (maybeBroadcast
-    // idiom); the improved count doubles as the convergence test, and the
-    // merged state is eagerly checkpointed so its recount reads cached
-    // blocks only
-    var nReach = reach.count()
-    var frontier = reach
-    var nFrontier = nReach
-    var r = 1
-    var done = rounds == 0
-    while (!done) {
-      val candidates = e
-        .join(maybeBroadcast(frontier.select(col("node").as("src"),
-          col("reach_t").as("__t")), nFrontier), "src")
-        .filter(col("t") >= col("__t"))
+    relax(e, seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("reach_t", lit(seedT)), "reach_t", rounds) {
+      _.filter(col("t") >= col("__v"))
         .groupBy(col("dst").as("node")).agg(min("t").as("reach_t"))
-      val improved = candidates
-        .join(maybeBroadcast(
-          reach.select(col("node"), col("reach_t").as("__cur")), nReach),
-          Seq("node"), "left")
-        .filter(col("__cur").isNull || col("reach_t") < col("__cur"))
-        .select("node", "reach_t")
-        .localCheckpoint(true)
-      val nImproved = improved.count()
-      val exhausted = nImproved == 0L
-      if (exhausted || r == rounds) done = true
-      if (!exhausted) {
-        reach = reach.join(maybeBroadcast(improved.select("node"), nImproved),
-            Seq("node"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint(true)
-        nReach = reach.count()
-        frontier = improved
-        nFrontier = nImproved
-      }
-      r += 1
     }
-    e.unpersist(false)
-    reach
   }
 
   /** Bounded-round weighted shortest distances (Bellman–Ford over the
@@ -1108,45 +1085,63 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
       .groupBy("src", "dst").agg(min("w").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    // same driver-known broadcast gating as [[temporalReachability]]
-    var nDist = dist.count()
-    var frontier = dist
-    var nFrontier = nDist
+    relax(e, seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("dist", lit(0L)), "dist", rounds) {
+      _.select(col("dst").as("node"), (col("__v") + col("w")).as("dist"))
+        .groupBy("node").agg(min("dist").as("dist"))
+    }
+  }
+
+  /** The delta-frontier relaxation of [[temporalReachability]] and
+    * [[boundedShortestPaths]]: the edge frame `e` (src, dst, …) persists
+    * for the run, the state (node, `v`) starts at `start`, and each round
+    * joins the edges to the frontier's (src, `__v`) and hands the result
+    * to `candidates`, which gives the per-node candidate (node, `v`). A
+    * candidate below the node's current `v` (or for a node without one)
+    * improves it: the improved nodes merge into the state by anti-join
+    * and are the next frontier. Runs at most `rounds` rounds and stops
+    * early when none improves.
+    *
+    * The frontier and state frames are node-sized and checkpointed (no
+    * Catalyst stats): every round join is gated on DRIVER-known counts
+    * (the [[maybeBroadcast]] idiom); the improved count doubles as the
+    * convergence test, and the merged state is eagerly checkpointed so
+    * its recount reads cached blocks only. */
+  private def relax(e0: DataFrame, start: DataFrame, v: String, rounds: Int)(
+      candidates: DataFrame => DataFrame): DataFrame = {
+    val e = e0.persist(StorageLevel.MEMORY_AND_DISK)
+    rowCount(e)
+    var state = start.localCheckpoint(true)
+    var nState = state.count()
+    var frontier = state
+    var nFrontier = nState
     var r = 1
     var done = rounds == 0
     while (!done) {
-      val candidates = e
-        .join(maybeBroadcast(frontier.select(col("node").as("src"),
-          col("dist").as("__d")), nFrontier), "src")
-        .select(col("dst").as("node"), (col("__d") + col("w")).as("dist"))
-        .groupBy("node").agg(min("dist").as("dist"))
-      val improved = candidates
+      val improved = candidates(e.join(maybeBroadcast(frontier.select(
+            col("node").as("src"), col(v).as("__v")), nFrontier), "src"))
         .join(maybeBroadcast(
-          dist.select(col("node"), col("dist").as("__cur")), nDist),
+          state.select(col("node"), col(v).as("__cur")), nState),
           Seq("node"), "left")
-        .filter(col("__cur").isNull || col("dist") < col("__cur"))
-        .select("node", "dist")
+        .filter(col("__cur").isNull || col(v) < col("__cur"))
+        .select("node", v)
         .localCheckpoint(true)
       val nImproved = improved.count()
       val exhausted = nImproved == 0L
       if (exhausted || r == rounds) done = true
       if (!exhausted) {
-        dist = dist.join(maybeBroadcast(improved.select("node"), nImproved),
+        state = state.join(maybeBroadcast(improved.select("node"), nImproved),
             Seq("node"), "left_anti")
           .unionByName(improved)
           .localCheckpoint(true)
-        nDist = dist.count()
+        nState = state.count()
         frontier = improved
         nFrontier = nImproved
       }
       r += 1
     }
     e.unpersist(false)
-    dist
+    state
   }
 
   /** Modularity of a node partition (Newman Q): "is this community

@@ -27,7 +27,9 @@ private[graft] object GraphQueries {
         .select(col("node"), round(col("rank"), 9).as("rank"))
         .orderBy("node")
     }, bench = Some((s, dir) => {
-      // q110 benches the PRODUCTION path (plain sums, like q101)
+      // q110 benches the PRODUCTION path (plain sums, like q101) only above
+      // the driver gate; under it the driver's src-sorted fold runs for
+      // either flag
       val el = T(s, dir, "orders")
         .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(concat(lit("c"), col("o_custkey")).as("a"),
@@ -555,8 +557,10 @@ private[graft] object GraphQueries {
         .select(col("node"), round(col("rank"), 6).as("rank"))
         .orderBy("node")
     }, bench = Some((s, dir) => {
-      // q101 benches the PRODUCTION path: plain map-side-combined sums
-      // (the src-sorted fold exists so the SQL oracle can replay rounds)
+      // q101 benches the PRODUCTION path above the driver gate: plain
+      // map-side-combined sums (the src-sorted fold exists so the SQL
+      // oracle can replay rounds); under the gate the driver's src-sorted
+      // fold runs for either flag
       val el = T(s, dir, "orders")
         .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(concat(lit("c"), col("o_custkey")).as("a"),

@@ -74,8 +74,7 @@ class BoundednessSpec extends AnyFunSuite {
     "Dedup.scala#stripFromFlagged" -> (1, "per-row: one doc's own flagged spans/tokens reassembled"),
     "Explode.scala#compressRowsToCol" -> (1, "per-row: inverse-of-explode — one parent's child records (reference compress_rows_to_col semantics)"),
     "Graph.scala#l2normalize" -> (3, "det-gate: HITS per-node contribution fold (in-degree bounded); production plain sums"),
-    "Graph.scala#pageRankGated" -> (1, "det-gate: per-node in-degree-bounded contribution fold; production plain sums"),
-    "Graph.scala#personalizedPageRank" -> (1, "det-gate: same shape as pageRank"),
+    "Graph.scala#rankRounds" -> (1, "det-gate: pageRank/personalizedPageRank per-node in-degree-bounded contribution fold; production plain sums"),
     "Importance.scala#prob" -> (1, "det-gate: sourceDivergence vocabulary-sized word-sorted fold; production plain sums"),
     "Ops.scala#orderedSum" -> (1, "primitive: the ordered Σ fold itself — each call is a site of its caller, bounded there"),
     "Ops.scala#foldSum" -> (1, "det-gate by construction: orderedSum only when deterministic, plain sum otherwise"),

@@ -80,7 +80,11 @@ class DetProdEquivalenceSpec extends SparkSpec {
       "groupTrends", "concentrationIndex", "calibrationCurve",
       "sourceDivergence", "lexicalDiversity", "zipfSlope",
       "tfidfCosinePairs", "mutualInformation", "chiSquareIndependence",
-      "numericMI", "pageRank", "pageRankGated", "personalizedPageRank", "degreePowerLaw",
+      "numericMI", "pageRank", "pageRankGated", "personalizedPageRank",
+      "personalizedPageRankGated", "degreePowerLaw",
+      // pageRank's and personalizedPageRank's distributed loop (both
+      // equivalence tests pin it)
+      "rankRounds",
       "hits", "trainLogistic", "trainKMeans", "topPrincipalComponent",
       "clusteringQualityReport", "stationaryDistribution", "prCurve",
       "bradleyTerry", "bradleyTerryFromCounts", "exactMatchedATT",
@@ -236,9 +240,11 @@ class DetProdEquivalenceSpec extends SparkSpec {
     assertEquiv("pageRank", d, p)
   }
   test("equiv: personalizedPageRank") {
+    // the distributed rounds, as for pageRank
     val s = seedsDf
-    val (d, p) = both(b => Graph.personalizedPageRank(bipartite, "a", "b", s,
-      "node", rounds = 3, damping = 0.85, deterministic = b))
+    val (d, p) = both(b => Graph.personalizedPageRankGated(bipartite, "a", "b",
+      s, "node", rounds = 3, damping = 0.85, deterministic = b,
+      checkpointInterval = 8, maxDriverEdges = 0L))
     assertEquiv("personalizedPageRank", d, p)
   }
   test("equiv: degreePowerLaw") {

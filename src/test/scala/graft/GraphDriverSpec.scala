@@ -4,10 +4,10 @@ import graft.operators.{Dedup, Graph}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
-/** The size-gated driver rounds of pageRank, labelPropagation,
-  * triangleCounts and connectedComponents against their distributed
-  * rounds, on seeded random graphs: same rows (doubles bit for bit against
-  * the deterministic fold) and the same schema. `maxDriverEdges` pins each
+/** The size-gated driver rounds of pageRank, personalizedPageRank,
+  * labelPropagation, triangleCounts and connectedComponents against their
+  * distributed rounds, on seeded random graphs: same rows (doubles bit for
+  * bit against the deterministic fold) and the same schema. `maxDriverEdges` pins each
   * path: `Long.MaxValue` the driver, 0 the distributed rounds. */
 class GraphDriverSpec extends SparkSpec {
   import spark.implicits._
@@ -79,6 +79,19 @@ class GraphDriverSpec extends SparkSpec {
     assert(rows(run(det = false, Driver)) === rows(viaDriver))
   }
 
+  /** [[pageRankBoth]] for personalizedPageRank, seeded from `seeds`' `n`. */
+  private def pprBoth(e: DataFrame, s: String, d: String, seeds: DataFrame,
+      rounds: Int): Unit = {
+    def run(det: Boolean, gate: Long) = Graph.personalizedPageRankGated(e, s, d,
+      seeds, "n", rounds, 0.85, det, checkpointInterval = 8, maxDriverEdges = gate)
+    val viaDriver = run(det = true, Driver)
+    assertSame(s"personalizedPageRank r=$rounds det", viaDriver,
+      run(det = true, Distributed))
+    assertSame(s"personalizedPageRank r=$rounds prod", run(det = false, Driver),
+      run(det = false, Distributed), tol = 1e-9)
+    assert(rows(run(det = false, Driver)) === rows(viaDriver))
+  }
+
   private def labelPropagationBoth(e: DataFrame, s: String, d: String, rounds: Int): Unit =
     assertSame(s"labelPropagation r=$rounds",
       Graph.labelPropagationGated(e, s, d, rounds, 8, Driver),
@@ -126,6 +139,31 @@ class GraphDriverSpec extends SparkSpec {
     trianglesBoth(tri, "s", "t", 3)
   }
 
+  test("personalizedPageRank: driver and distributed rounds agree") {
+    for (seed <- 1 to 3) {
+      val e = longGraph(seed, nodes = 40, edges = 150).toDF("s", "t")
+      // a seed absent from the graph and a null seed drop on both paths
+      val seeds = Seq[java.lang.Long](1L, 2L, 17L, 999999L, null).toDF("n")
+      for (rounds <- Seq(0, 1, 3)) pprBoth(e, "s", "t", seeds, rounds)
+      pprBoth(Graph.bidirect(e, "s", "t"), "src", "dst", seeds, 3)
+      // int seeds meet long ids as the join's widening does
+      pprBoth(e, "s", "t", Seq(1, 2, 17).toDF("n"), 1)
+      val strings = stringGraph(seed, edges = 120).toDF("s", "t")
+      val stringSeeds = Seq(fullwidthA, grin, "a", "sink", "absent").toDF("n")
+      for (rounds <- Seq(0, 1, 3)) pprBoth(strings, "s", "t", stringSeeds, rounds)
+    }
+    val e = longGraph(4, nodes = 40, edges = 150).toDF("s", "t")
+    for (gate <- Seq(Driver, Distributed))
+      intercept[IllegalArgumentException](Graph.personalizedPageRankGated(e, "s", "t",
+        Seq(999999L).toDF("n"), "n", 2, 0.85, true, 8, gate))
+    // seeds of another id kind stay distributed, with the join's coercion
+    def run(seeds: DataFrame) = Graph.personalizedPageRankGated(e, "s", "t",
+      seeds, "n", 2, 0.85, true, 8, Driver)
+    val viaDoubles = run(Seq(1.0, 2.0).toDF("n"))
+    assert(!isLocal(viaDoubles))
+    assert(rows(viaDoubles) === rows(run(Seq(1L, 2L).toDF("n"))))
+  }
+
   test("triangle-free graph and topK above the triangle nodes") {
     val star = (1L to 30L).map(i => (0L, i)).toDF("s", "t")
     trianglesBoth(star, "s", "t", 10)
@@ -142,6 +180,7 @@ class GraphDriverSpec extends SparkSpec {
     val e = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 3L), (3L, 1L),
       (1L, null), (null, 2L), (3L, 4L)).toDF("s", "t")
     pageRankBoth(e, "s", "t", 2)
+    pprBoth(e, "s", "t", Seq(1L, 4L).toDF("n"), 2)
     labelPropagationBoth(e, "s", "t", 2)
     trianglesBoth(e, "s", "t", 10)
   }
@@ -149,6 +188,8 @@ class GraphDriverSpec extends SparkSpec {
   test("small graphs take the driver path by default; other id types stay distributed") {
     val e = longGraph(5, nodes = 20, edges = 60).toDF("s", "t")
     assert(isLocal(Graph.pageRank(e, "s", "t", rounds = 2)))
+    assert(isLocal(Graph.personalizedPageRank(e, "s", "t", Seq(1L).toDF("n"), "n",
+      rounds = 2)))
     assert(isLocal(Graph.labelPropagation(e, "s", "t", rounds = 2)))
     assert(isLocal(Graph.triangleCounts(e, "s", "t")))
     val dbl = Seq((1.0, 2.0), (2.0, 3.0), (3.0, 1.0)).toDF("s", "t")

@@ -115,11 +115,13 @@ class GraphSpec extends SparkSpec {
   }
 
   test("personalizedPageRank deterministic mode is partition-invariant") {
+    // the distributed rounds, as in the pageRank test above
     val edges = (1 to 400).map(i => (s"n${i % 31}", s"n${(i * 7) % 37}"))
     val seeds = Seq("n1", "n2", "n3").toDF("n")
-    def run(parts: Int) = Graph.personalizedPageRank(
+    def run(parts: Int) = Graph.personalizedPageRankGated(
         Graph.bidirect(edges.toDF("s", "t").repartition(parts), "s", "t"),
-        "src", "dst", seeds, "n", rounds = 3, deterministic = true)
+        "src", "dst", seeds, "n", rounds = 3, damping = 0.85,
+        deterministic = true, checkpointInterval = 8, maxDriverEdges = 0L)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val a = run(2)
     assert(run(11) === a)
@@ -417,6 +419,64 @@ class GraphSpec extends SparkSpec {
         Seq(1L).toDF("node"), "node", seedT = 0L, rounds = 1)
       .as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 0L, 2L -> 5L))
+  }
+
+  test("the wedge family counts its canonical edges in one pass") {
+    // jobs of each build: the canonical edge count is two (the distinct's
+    // exchange, run when its lazy checkpoint is planned, and the count); a
+    // Dataset.count runs one more, its own aggregate's exchange.
+    // clusteringCoefficients also plans the triangle frames, whose lazy
+    // checkpoints run their exchanges (five jobs)
+    val r = new scala.util.Random(7)
+    val e = Seq.fill(200)((r.nextInt(40).toLong, r.nextInt(40).toLong)).toDF("s", "t")
+    for ((name, budget, build) <- Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+        ("clusteringCoefficients", 7, () => Graph.clusteringCoefficients(e, "s", "t")),
+        ("linkPrediction", 2, () => Graph.linkPrediction(e, "s", "t")),
+        ("harmonicCentrality2", 2, () => Graph.harmonicCentrality2(e, "s", "t")))) {
+      val jobs = jobsRun(build())
+      assert(jobs <= budget, s"$name: $jobs jobs")
+    }
+  }
+
+  /** Synchronous Bellman–Ford on the driver: `rounds` rounds from
+    * `start`; each round every edge (src, dst, x) whose src has a value
+    * offers dst `step(value, x)` (None: the edge is closed), and a node
+    * keeps the least of its value and its offers. */
+  private def refRelax(edges: Seq[(Long, Long, Long)], start: Map[Long, Long],
+      rounds: Int)(step: (Long, Long) => Option[Long]): Map[Long, Long] = {
+    var cur = start
+    for (_ <- 1 to rounds) {
+      val offers = edges.flatMap { case (u, v, x) => cur.get(u).flatMap(step(_, x)).map(v -> _) }
+      cur = offers.foldLeft(cur) { case (m, (v, c)) =>
+        if (m.get(v).forall(c < _)) m.updated(v, c) else m }
+    }
+    cur
+  }
+
+  test("boundedShortestPaths and temporalReachability match a driver Bellman–Ford") {
+    for (seed <- 1 to 3) {
+      val r = new scala.util.Random(seed)
+      val base = Seq.fill(60)((r.nextInt(25).toLong, r.nextInt(25).toLong, r.nextInt(10).toLong))
+      // parallel edges with other weights/timestamps, and exact duplicates
+      val edges = base ++ base.take(15).map { case (u, v, _) => (u, v, r.nextInt(10).toLong) } ++
+        base.take(5)
+      val el = edges.toDF("s", "t", "x")
+      // seed 99 is not in the graph: it still reports its start value
+      val seedIds = Seq(0L, 1L, 99L)
+      val seeds = seedIds.toDF("node")
+      def asMap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+      for (rounds <- Seq(0, 1, 2, 6)) {
+        assert(asMap(Graph.boundedShortestPaths(el, "s", "t", "x", seeds, "node", rounds)) ===
+          refRelax(edges, seedIds.map(_ -> 0L).toMap, rounds)((d, w) => Some(d + w)),
+          s"boundedShortestPaths seed $seed rounds $rounds")
+        assert(asMap(Graph.temporalReachability(el, "s", "t", "x", seeds, "node", 2L,
+            rounds)) ===
+          refRelax(edges, seedIds.map(_ -> 2L).toMap, rounds)((at, ts) =>
+            if (ts >= at) Some(ts) else None),
+          s"temporalReachability seed $seed rounds $rounds")
+      }
+    }
   }
 
   test("modularity: barbell hand golden; dups/direction/self-loops collapse") {
